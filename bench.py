@@ -233,7 +233,7 @@ def p95(xs):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--stream-only", action="store_true")
     ap.add_argument(
         "--latency-only",
@@ -366,10 +366,14 @@ def main():
                     "loadavg": lat_load,
                 }
             )
-        best = min(latency_runs, key=lambda s: s["p95_steady_ms"])
-        batch_p95_ms = best["p95_ms"]
-        batch_p95_steady_ms = best["p95_steady_ms"]
-        batch_med_ms = best["med_ms"]
+        # a run with no batch past the warm-in has no steady p95: it stays
+        # in latency_runs but cannot be the headline
+        steady_runs = [s for s in latency_runs if s["p95_steady_ms"] is not None]
+        if steady_runs:
+            best = min(steady_runs, key=lambda s: s["p95_steady_ms"])
+            batch_p95_ms = best["p95_ms"]
+            batch_p95_steady_ms = best["p95_steady_ms"]
+            batch_med_ms = best["med_ms"]
 
     # min-of-reps (same estimator as the per-query section): co-tenant
     # load can inflate a wall, nothing can deflate one below true cost;

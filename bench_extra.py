@@ -43,7 +43,7 @@ def _noop(df):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", type=float, default=float(os.environ.get("SPARK_GRAFT_BIG_SF", "0.3")))
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--skip-graph-dist", action="store_true")
     ap.add_argument("--skip-dedup-big", action="store_true")

@@ -79,7 +79,6 @@ def build_ingest_stream(
     once: bool = False,
     fail_at_batch: int | None = None,
     commit_mode: str = "rename",
-    precompact: bool | None = None,
 ) -> tuple[StreamingQuery, ExactlyOnceParquetSink]:
     """Wire the full pipeline and start it.
 
@@ -104,19 +103,12 @@ def build_ingest_stream(
         F.max("ts").alias("max_event_ts"),
         F.approx_count_distinct("conv_id").alias("approx_convs"),
     )
-    # intra-batch per-conversation pre-compaction ahead of the state
-    # exchange (skew lever, see state_merge.pack_transcripts); default
-    # off — the A/B knob is SPARK_GRAFT_PRECOMPACT=1
-    if precompact is None:
-        precompact = os.environ.get("SPARK_GRAFT_PRECOMPACT", "0") == "1"
     # pin the stateful API to the checkpoint (restart-safe across
     # protobuf availability changes — see state_merge.pin_state_engine)
     from .state_merge import pin_state_engine
 
     engine = pin_state_engine(checkpoint_dir)
-    deltas = conversation_graph_deltas(
-        transcripts, watermark=watermark, precompact=precompact, engine=engine
-    )
+    deltas = conversation_graph_deltas(transcripts, watermark=watermark, engine=engine)
     sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"), commit_mode=commit_mode)
 
     if fail_at_batch is not None:

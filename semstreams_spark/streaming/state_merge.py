@@ -1,57 +1,64 @@
-"""Per-conversation stateful graph merge — the streaming heart.
+"""Stateful conversation merge — the streaming heart.
 
-``applyInPandasWithState`` keyed by ``conv_id`` holding per-conversation
-graph deltas (north-star A1/J3): the streaming re-expression of the
-reference's entity upsert path
-(``processor/graph/messagemanager/processor.go:183-298``) where state
-lived in NATS JetStream KV; here it lives in Spark's (RocksDB) state
-store.
+``applyInPandasWithState`` holding per-conversation graph frontiers
+(north-star A1/J3): the streaming re-expression of the reference's
+entity upsert path (``processor/graph/messagemanager/processor.go:183-298``)
+where state lived in NATS JetStream KV; here it lives in Spark's
+(RocksDB) state store.
 
-Design for throughput (learned the hard way): the per-group Python
-function does the MINIMUM stateful work — re-delivery dedup, prior-turn
-linkage, version counters, session tracking — and emits one row per
-*accepted turn*. The 5-7x triple fan-out happens DOWNSTREAM in pure
-Catalyst expressions (whole-stage codegen), not in Python. Doing the
-extraction per group costs ~3ms x n_conversations per batch; doing it
-JVM-side costs microseconds per row.
+Keying. The operator is grouped by ``bucket = pmod(xxhash64(conv_id),
+N_BUCKETS)``, not by ``conv_id``: Spark's per-group machinery (state
+load/store, Arrow slicing, one Python call) costs milliseconds per key
+while the merge itself is microseconds per conversation, so one call
+serves every conversation of a bucket. ``merge_turns`` is one vectorized
+kernel over all of them: a lexsort on ``(conv, ts, turn_idx)``, then
+per-segment shift and forward-fill for the prior-turn and requesting-turn
+links and per-conversation version offsets. The Python function does the
+MINIMUM stateful work — re-delivery dedup, prior-turn linkage, version
+counters, session tracking — and emits one row per *accepted turn*; the
+5-7x triple fan-out happens DOWNSTREAM in pure Catalyst expressions.
 
-Per-conversation state (bounded — SURVEY §7.2):
-- ``seen_turns``: turn_idx array already accepted (binary-packed int32;
-  dedup of re-deliveries; evicted with the conversation on timeout)
-- ``last_turn``: (turn_idx, ts) of the latest accepted turn — powers the
-  turn→prior-turn stateful join without a shuffle join
-- ``version``: monotonically incremented per accepted update
-  (reference CAS version bump, ``datamanager/manager.go:693-743``)
-- ``props_json``: conversation-level LWW properties
+State layout. A bucket's state is one Arrow IPC blob (``_FRONTIER``)
+with one row per live conversation, O(conversations) not O(turns):
+- ``version``: monotonically incremented per accepted turn (reference CAS
+  version bump, ``datamanager/manager.go:693-743``); ``n_turns`` counts them
+- ``last_idx``/``last_ts``: the latest accepted turn — the turn→prior-turn
+  join without a shuffle join
+- ``last_req_idx``: the latest accepted non-tool turn (J4), null if none
+- ``contig`` + ``exceptions``: the accepted ``turn_idx`` set as "every
+  turn 0..contig" plus the out-of-order rest (re-delivery dedup; the
+  exception list is empty for in-order streams)
+- ``timer_ms``: the conversation's event-time timeout
 
-Late rows older than already-merged state do NOT overwrite (LWW compares
-``(ts, seq)``, not arrival order). Conversations idle past the timeout
-emit a ``session_end`` summary row and their state is evicted (W6).
+Timer rule. A conversation's timer is ``max(watermark, last_ts) + 1h``,
+re-armed whenever it receives rows (duplicates included); it fires on
+Spark's strict ``timer < watermark`` rule, emitting one ``session_end``
+summary row and evicting the conversation (W6). The bucket's own Spark
+timeout is the minimum over its conversations. A call with data also
+expires the bucket's idle conversations whose timer has passed, since
+Spark would have timed them out in that batch under per-conversation
+keying.
 
-Determinism contract: within a micro-batch, turns are processed in
-``(ts, turn_idx)`` order; across batches LWW ordering makes the final
-merged state independent of batch boundaries.
+Determinism contract: within a micro-batch, each conversation's turns
+are processed in ``(ts, turn_idx)`` order (the first copy of a duplicated
+``turn_idx`` in that order wins); across batches LWW ordering makes the
+final merged state independent of batch boundaries.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pandas.arrays import IntegerArray
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 from ..extract.triples import MENTION_RE
 
@@ -67,249 +74,277 @@ DELTA_SCHEMA = (
     "prev_turn_idx int, prev_ts timestamp, req_turn_idx int, version long"
 )
 
-STATE_SCHEMA = StructType(
+# Fixed for the life of a checkpoint (it decides which state row holds a
+# conversation). Of 32/64/128/256, 64 was fastest on the perfbench bulk
+# ingest (local[2]): more buckets pay Spark's per-call cost more often,
+# fewer rewrite larger state blobs each trigger.
+N_BUCKETS = 64
+
+SESSION_TIMEOUT_MS = 3_600_000
+
+STATE_SCHEMA = StructType([StructField("frontier", BinaryType())])
+
+_FRONTIER = pa.schema(
     [
-        StructField("version", LongType()),
-        StructField("last_turn_idx", IntegerType()),
-        StructField("last_turn_ts", LongType()),  # µs epoch
-        StructField("n_turns", LongType()),
-        StructField("seen_turns", BinaryType()),  # packed int32 array
-        StructField("conv_props_json", StringType()),
-        StructField("last_req_idx", IntegerType()),  # last non-tool turn (J4)
+        ("conv_id", pa.string()),
+        ("version", pa.int64()),
+        ("last_idx", pa.int32()),
+        ("last_ts", pa.int64()),  # µs epoch
+        ("n_turns", pa.int64()),
+        ("last_req_idx", pa.int32()),
+        ("contig", pa.int32()),
+        ("exceptions", pa.list_(pa.int32())),
+        ("timer_ms", pa.int64()),
     ]
 )
 
-_EMPTY = np.array([], dtype=np.int32)
+
+class Frontier(NamedTuple):
+    """Per-conversation merge state, one array element per conversation.
+    Exceptions are (owner row, turn_idx) pairs sorted by owner."""
+
+    conv_id: np.ndarray  # object
+    version: np.ndarray  # int64
+    last_idx: np.ndarray  # int32
+    last_ts: np.ndarray  # int64, µs epoch
+    n_turns: np.ndarray  # int64
+    last_req: np.ndarray  # int32, valid where has_req
+    has_req: np.ndarray  # bool
+    contig: np.ndarray  # int32: turns 0..contig all accepted (-1: none)
+    exc_owner: np.ndarray  # int64
+    exc_val: np.ndarray  # int32
+    timer_ms: np.ndarray  # int64
 
 
-def _session_end_frame(conv_id, version, last_idx, last_ts, n_turns) -> pd.DataFrame:
-    """The session_end summary row emitted on conversation timeout (W6) —
-    shared by both stateful operators."""
-    return pd.DataFrame(
-        {
-            "kind": ["session_end"],
-            "conv_id": [conv_id],
-            "turn_idx": pd.array([last_idx], dtype="Int32"),
-            "role": [None],
-            "text": [str(n_turns)],  # summary payload
-            "tool": [None],
-            "ts": [pd.Timestamp(last_ts, unit="us")],
-            "prev_turn_idx": pd.array([None], dtype="Int32"),
-            "prev_ts": [pd.NaT],
-            "req_turn_idx": pd.array([None], dtype="Int32"),
-            "version": pd.array([version], dtype="Int64"),
-        }
-    )
-
-
-def _chunk_arrays(pdf: pd.DataFrame):
-    """One Arrow chunk (flat transcript rows OR pack_transcripts packs)
-    → flat (idx, ts_us, roles, texts, tools) numpy arrays. Packed list
-    columns arrive as object cells of numpy arrays, so unpacking is
-    np.concatenate — vectorized, not per-row Python."""
-    if "idx" in pdf.columns:
-        idx = np.concatenate(list(pdf["idx"])).astype(np.int32)
-        ts_us = np.concatenate(list(pdf["ev_us"])).astype(np.int64)
-        roles = np.concatenate(list(pdf["role"]))
-        texts = np.concatenate(list(pdf["text"]))
-        tools = np.concatenate(list(pdf["tool"]))
-    else:
-        idx = pdf["turn_idx"].to_numpy(dtype=np.int32, copy=False)
-        ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
-        roles = pdf["role"].to_numpy(copy=False)
-        texts = pdf["text"].to_numpy(copy=False)
-        tools = pdf["tool"].to_numpy(copy=False)
-    return idx, ts_us, roles, texts, tools
-
-
-def _merge_chunk(conv_id, pdf, new_seen, version, last_idx, last_ts, last_req_idx):
-    """Pure per-chunk accept/dedup/linkage core — the SHARED engine of
-    both stateful operators (applyInPandasWithState in this module,
-    transformWithStateInPandas in state_merge_tws): parity is by
-    construction, not by duplicated code. Returns
-    (out_frame_or_None, version, last_idx, last_ts, last_req_idx,
-    accepted_idx_or_None); mutates nothing (new_seen is read-only here).
-    """
-    idx, ts_us, roles_raw, texts_raw, tools_raw = _chunk_arrays(pdf)
-    order = np.lexsort((idx, ts_us))  # (ts, turn_idx) stable order
-    idx, ts_us = idx[order], ts_us[order]
-    mask = ~np.isin(idx, np.concatenate(new_seen))
-    # intra-chunk redelivery guard: two copies of the same turn_idx in
-    # ONE Arrow chunk must accept once (first in (ts, turn_idx) order
-    # wins) — np.isin only rejects turns seen in PRIOR chunks/batches
-    _, first_i = np.unique(idx, return_index=True)
-    first_occ = np.zeros(len(idx), dtype=bool)
-    first_occ[first_i] = True
-    mask &= first_occ
-    k = int(mask.sum())
-    if k == 0:
-        return None, version, last_idx, last_ts, last_req_idx, None
-    sel = order[mask]
-    idx_a, ts_a = idx[mask], ts_us[mask]
-
-    # all-numpy column builds (masked IntegerArray instead of object
-    # arrays / Series.ffill): per-key fixed cost is the hot number here —
-    # a typical micro-batch chunk is 1-2 rows, so construction overhead,
-    # not data volume, is what the state stage's wall is made of
-    # (measured 2.4 ms/key -> ~1.3 ms/key, BASELINE §G)
-    prev_idx = np.empty(k, dtype=np.int32)
-    prev_idx[0] = -1 if last_idx is None else last_idx
-    prev_idx[1:] = idx_a[:-1]
-    prev_mask = np.zeros(k, dtype=bool)
-    prev_mask[0] = last_idx is None
-    prev_ts = np.empty(k, dtype="datetime64[us]")
-    prev_ts[0] = np.datetime64(last_ts, "us") if last_ts is not None else np.datetime64("NaT")
-    prev_ts[1:] = ts_a[:-1].astype("datetime64[us]")
-
-    # J4 streaming: requesting turn = most recent preceding non-tool
-    # turn (vectorized forward-fill via positional maximum.accumulate,
-    # seeded from state; validity carried in a mask, never a value
-    # sentinel)
-    roles = roles_raw[sel]
-    nontool = roles != "tool"
-    shifted = np.empty(k, dtype=np.int32)
-    shifted[0] = 0 if last_req_idx is None else last_req_idx
-    shifted[1:] = idx_a[:-1]
-    shifted_valid = np.empty(k, dtype=bool)
-    shifted_valid[0] = last_req_idx is not None
-    shifted_valid[1:] = nontool[:-1]
-    pos = np.where(shifted_valid, np.arange(k), -1)
-    ff = np.maximum.accumulate(pos)
-    req_vals = shifted[np.maximum(ff, 0)]
-    req_mask = ff < 0
-    if nontool.any():
-        last_req_idx = int(idx_a[nontool][-1])
-
-    out = pd.DataFrame(
-        {
-            "kind": "turn",
-            "conv_id": conv_id,
-            "turn_idx": idx_a,
-            "role": roles,
-            "text": texts_raw[sel],
-            "tool": tools_raw[sel],
-            "ts": ts_a.astype("datetime64[us]"),
-            "prev_turn_idx": IntegerArray(prev_idx, prev_mask),
-            "prev_ts": prev_ts,
-            "req_turn_idx": IntegerArray(req_vals, req_mask),
-            "version": np.arange(version + 1, version + k + 1, dtype=np.int64),
-        },
-        copy=False,
-    )
-    return out, version + k, int(idx_a[-1]), int(ts_a[-1]), last_req_idx, idx_a
-
-
-def _accept_turns(
-    key: tuple[str],
-    pdf_iter: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (conv_id,) = key
-
-    if state.hasTimedOut:
-        version, last_idx, last_ts, n_turns, _, _, _ = state.get
-        state.remove()
-        yield _session_end_frame(conv_id, version, last_idx, last_ts, n_turns)
-        return
-
-    if state.exists:
-        version, last_idx, last_ts, n_turns, seen_blob, props_json, last_req_idx = state.get
-        seen = np.frombuffer(seen_blob, dtype=np.int32) if seen_blob else _EMPTY
-    else:
-        version, last_idx, last_ts, n_turns = 0, None, None, 0
-        seen, props_json = _EMPTY, "{}"
-        last_req_idx = None
-
-    new_seen = [seen]
-    outputs = []
-    for pdf in pdf_iter:
-        if not len(pdf):
-            continue
-        out, version, last_idx, last_ts, last_req_idx, idx_a = _merge_chunk(
-            conv_id, pdf, new_seen, version, last_idx, last_ts, last_req_idx
-        )
-        if out is None:
-            continue
-        outputs.append(out)
-        n_turns += len(idx_a)
-        new_seen.append(idx_a)
-
-    if len(new_seen) > 1 or not state.exists:
-        props = json.loads(props_json)
-        if last_ts is not None:
-            cur = props.get("conv.last_activity")
-            cand = [last_ts, last_idx]
-            if cur is None or cand > cur:
-                props["conv.last_activity"] = cand
-        state.update(
-            (
-                version,
-                last_idx,
-                last_ts,
-                n_turns,
-                np.concatenate(new_seen).tobytes(),
-                json.dumps(props),
-                last_req_idx,
-            )
-        )
-    # evict idle conversations 1h past max(watermark, last event time) —
-    # the watermark can still be 0 in the first micro-batch, so anchor on
-    # the group's own event time too or the timer would never be armed
-    anchor_ms = max(state.getCurrentWatermarkMs(), (last_ts or 0) // 1000)
-    state.setTimeoutTimestamp(anchor_ms + 3_600_000)
-
-    yield from outputs
-
-
-PACKED_SCHEMA = (
-    "conv_id string, ts timestamp, idx array<int>, role array<string>, "
-    "text array<string>, tool array<string>, ev_us array<long>"
+EMPTY_FRONTIER = Frontier(
+    np.empty(0, object),
+    *(np.empty(0, t) for t in (np.int64, np.int32, np.int64, np.int64, np.int32, bool, np.int32)),
+    np.empty(0, np.int64),
+    np.empty(0, np.int32),
+    np.empty(0, np.int64),
 )
 
 
-def pack_transcripts(transcripts: DataFrame) -> DataFrame:
-    """Intra-batch per-conversation pre-compaction (round-5 worklist #3,
-    the lever documented by the r4 skew measurement): a narrow
-    ``mapInPandas`` over the SCAN partitions packs each partition's rows
-    per conv_id into ONE struct-of-arrays row, so a hot conversation
-    ships O(#source partitions) compacted rows — not O(its turn count) —
-    through the conv_id state exchange. Pack event time = max turn ts,
-    so watermark advancement (driven by batch max) is unchanged; the
-    state fn unpacks and re-sorts, so LWW/dedup semantics are
-    batch-boundary- and pack-boundary-invariant (parity-tested).
+def encode_frontier(fr: Frontier) -> bytes:
+    """The bucket's state blob: one Arrow IPC batch of ``_FRONTIER``."""
+    offsets = np.zeros(len(fr.conv_id) + 1, np.int32)
+    np.cumsum(np.bincount(fr.exc_owner, minlength=len(fr.conv_id)), out=offsets[1:])
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(fr.conv_id, pa.string()),
+            *(pa.array(a) for a in (fr.version, fr.last_idx, fr.last_ts, fr.n_turns)),
+            pa.array(fr.last_req, mask=~fr.has_req),
+            pa.array(fr.contig),
+            pa.ListArray.from_arrays(pa.array(offsets), pa.array(fr.exc_val)),
+            pa.array(fr.timer_ms),
+        ],
+        schema=_FRONTIER,
+    )
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, _FRONTIER) as w:
+        w.write_batch(batch)
+    return sink.getvalue().to_pybytes()
 
-    All numpy: argsort by conv_id, np.unique group bounds, reduceat for
-    the per-group max ts, np.split for the arrays — no per-row Python.
-    """
 
-    def _pack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not len(pdf):
-                continue
-            conv = pdf["conv_id"].to_numpy()
-            order = np.argsort(conv, kind="stable")
-            conv_s = conv[order]
-            idx = pdf["turn_idx"].to_numpy(dtype=np.int32, copy=False)[order]
-            ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)[order]
-            role = pdf["role"].to_numpy()[order]
-            text = pdf["text"].to_numpy()[order]
-            tool = pdf["tool"].to_numpy()[order]
-            uniq, starts = np.unique(conv_s, return_index=True)
-            bounds = starts[1:]
-            max_ts = np.maximum.reduceat(ts_us, starts)
-            yield pd.DataFrame(
-                {
-                    "conv_id": uniq,
-                    "ts": max_ts.astype("datetime64[us]"),
-                    "idx": np.split(idx, bounds),
-                    "role": np.split(role, bounds),
-                    "text": np.split(text, bounds),
-                    "tool": np.split(tool, bounds),
-                    "ev_us": np.split(ts_us, bounds),
-                }
-            )
+def decode_frontier(blob: bytes) -> Frontier:
+    """Inverse of ``encode_frontier``; the arrays may be read-only views."""
+    b = pa.ipc.open_stream(blob).read_next_batch()
+    req, exc = b.column("last_req_idx"), b.column("exceptions")
+    return Frontier(
+        b.column("conv_id").to_numpy(zero_copy_only=False),
+        *(b.column(c).to_numpy() for c in ("version", "last_idx", "last_ts", "n_turns")),
+        req.fill_null(0).to_numpy(),
+        req.is_valid().to_numpy(zero_copy_only=False),
+        b.column("contig").to_numpy(),
+        pc.list_parent_indices(exc).to_numpy().astype(np.int64),
+        pc.list_flatten(exc).to_numpy(),
+        b.column("timer_ms").to_numpy(),
+    )
 
-    return transcripts.mapInPandas(_pack, PACKED_SCHEMA)
+
+def _subset(fr: Frontier, keep: np.ndarray) -> Frontier:
+    """The conversations where keep is set, exceptions re-pointed."""
+    row = np.cumsum(keep) - 1
+    ek = keep[fr.exc_owner]
+    return Frontier(
+        *(a[keep] for a in fr[:8]), row[fr.exc_owner[ek]], fr.exc_val[ek], fr.timer_ms[keep]
+    )
+
+
+def fold_seen(contig, owner, val):
+    """Merge accepted turns (owner row, turn_idx) — distinct, and outside
+    each owner's accepted set — into (contig, exceptions): each owner's run
+    0..contig extends while its next turn_idx is present; the rest stays
+    an exception. Returns (contig, exc_owner, exc_val), owner-sorted."""
+    o = np.lexsort((val, owner))
+    owner, val = owner[o], val[o]
+    base = contig[owner].astype(np.int64)
+    cand = np.flatnonzero(val > base)
+    oc = owner[cand]
+    pos = np.arange(len(cand))
+    first = np.ones(len(cand), bool)
+    first[1:] = oc[1:] != oc[:-1]
+    rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+    # candidates ascend strictly, so val - rank is non-decreasing and the
+    # ones still on the run (val - rank == contig) are a prefix
+    on_run = val[cand] - rank == base[cand]
+    keep = np.ones(len(owner), bool)
+    keep[cand[on_run]] = False
+    contig = (contig + np.bincount(oc[on_run], minlength=len(contig))).astype(np.int32)
+    return contig, owner[keep], val[keep]
+
+
+def _shift(a: np.ndarray) -> np.ndarray:
+    out = np.empty_like(a)
+    out[1:] = a[:-1]
+    out[:1] = 0
+    return out
+
+
+def merge_turns(fr: Frontier, pdf: pd.DataFrame, wm_ms: int):
+    """Accept one batch of transcript rows (any number of conversations)
+    into the frontier and re-arm the timers of the conversations that
+    received rows. Returns (accepted-turn frame or None, new frontier)."""
+    n_old = len(fr.conv_id)
+    codes, uniq = pd.factorize(np.concatenate([fr.conv_id, pdf["conv_id"].to_numpy(dtype=object)]))
+    n = len(uniq)
+    c = codes[n_old:]
+    idx = pdf["turn_idx"].to_numpy(dtype=np.int32)
+    ts_us = pdf["ts"].to_numpy(dtype="datetime64[us]").astype(np.int64)
+    touched = np.zeros(n, bool)
+    touched[c] = True
+
+    def grow(a, fill):
+        return np.concatenate([a, np.full(n - n_old, fill, a.dtype)])
+
+    version, last_idx, last_ts = grow(fr.version, 0), grow(fr.last_idx, 0), grow(fr.last_ts, 0)
+    n_turns, last_req, has_req = grow(fr.n_turns, 0), grow(fr.last_req, 0), grow(fr.has_req, False)
+    contig, timer_ms = grow(fr.contig, -1), grow(fr.timer_ms, 0)
+
+    order = np.lexsort((idx, ts_us, c))
+    c, idx, ts_us = c[order], idx[order], ts_us[order]
+    pair = (c.astype(np.int64) << 32) | (idx.astype(np.int64) & 0xFFFFFFFF)
+    seen = (idx >= 0) & (idx <= contig[c])
+    seen |= np.isin(pair, (fr.exc_owner << 32) | (fr.exc_val.astype(np.int64) & 0xFFFFFFFF))
+    # intra-batch redelivery guard: of two copies of one (conv, turn_idx)
+    # the first in (ts, turn_idx) order is accepted (np.unique's index is
+    # the first occurrence)
+    acc = np.zeros(len(pair), bool)
+    acc[np.unique(pair, return_index=True)[1]] = True
+    acc &= ~seen
+    sel = order[acc]
+    c, idx, ts_us = c[acc], idx[acc], ts_us[acc]
+    k = len(c)
+
+    out = None
+    if k:
+        pos = np.arange(k)
+        start = np.ones(k, bool)
+        start[1:] = c[1:] != c[:-1]
+        end = np.ones(k, bool)
+        end[:-1] = start[1:]
+        seg0 = np.maximum.accumulate(np.where(start, pos, 0))
+        prev_idx = np.where(start, last_idx[c], _shift(idx))
+        prev_null = start & (c >= n_old)  # a conversation's first turn
+        prev_ts = np.where(start, last_ts[c], _shift(ts_us)).astype("datetime64[us]")
+        prev_ts[prev_null] = np.datetime64("NaT")
+        # J4 streaming: requesting turn = most recent preceding non-tool
+        # turn of the same conversation (forward-fill via positional
+        # maximum.accumulate, seeded from state; validity carried in a
+        # mask, never a value sentinel)
+        roles = pdf["role"].to_numpy(dtype=object)[sel]
+        nontool = roles != "tool"
+        shifted = np.where(start, last_req[c], _shift(idx))
+        valid = np.where(start, has_req[c], _shift(nontool))
+        ff = np.maximum.accumulate(np.where(valid, pos, -1))
+        out = pd.DataFrame(
+            {
+                "kind": "turn",
+                "conv_id": uniq[c],
+                "turn_idx": idx,
+                "role": roles,
+                "text": pdf["text"].to_numpy(dtype=object)[sel],
+                "tool": pdf["tool"].to_numpy(dtype=object)[sel],
+                "ts": ts_us.astype("datetime64[us]"),
+                "prev_turn_idx": IntegerArray(prev_idx, prev_null),
+                "prev_ts": prev_ts,
+                "req_turn_idx": IntegerArray(shifted[np.maximum(ff, 0)], ff < seg0),
+                "version": version[c] + (pos - seg0 + 1),
+            },
+            copy=False,
+        )
+        cnt = np.bincount(c, minlength=n)
+        version += cnt
+        n_turns += cnt
+        last_idx[c[end]] = idx[end]
+        last_ts[c[end]] = ts_us[end]
+        cn, in_ = c[nontool], idx[nontool]
+        last_nt = np.ones(len(cn), bool)
+        last_nt[:-1] = cn[1:] != cn[:-1]
+        last_req[cn[last_nt]] = in_[last_nt]
+        has_req[cn[last_nt]] = True
+
+    contig, exc_owner, exc_val = fold_seen(
+        contig, np.concatenate([fr.exc_owner, c.astype(np.int64)]), np.concatenate([fr.exc_val, idx])
+    )
+    timer_ms[touched] = np.maximum(wm_ms, last_ts[touched] // 1000) + SESSION_TIMEOUT_MS
+    new = Frontier(
+        uniq, version, last_idx, last_ts, n_turns, last_req, has_req,
+        contig, exc_owner, exc_val, timer_ms,
+    )
+    return out, new
+
+
+def expire(fr: Frontier, mask: np.ndarray):
+    """Evict the conversations where mask is set. Returns (their
+    session_end summary rows or None, the remaining frontier)."""
+    if not mask.any():
+        return None, fr
+    m = np.flatnonzero(mask)
+    null = np.ones(len(m), bool)
+    ends = pd.DataFrame(
+        {
+            "kind": "session_end",
+            "conv_id": fr.conv_id[m],
+            "turn_idx": fr.last_idx[m],
+            "role": None,
+            "text": fr.n_turns[m].astype(str).astype(object),  # summary payload
+            "tool": None,
+            "ts": fr.last_ts[m].astype("datetime64[us]"),
+            "prev_turn_idx": IntegerArray(np.zeros(len(m), np.int32), null),
+            "prev_ts": np.full(len(m), np.datetime64("NaT"), "datetime64[us]"),
+            "req_turn_idx": IntegerArray(np.zeros(len(m), np.int32), null.copy()),
+            "version": fr.version[m],
+        }
+    )
+    return ends, _subset(fr, ~mask)
+
+
+def _accept_turns(
+    key: tuple[int],
+    pdf_iter: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """One bucket's call: merge its rows (a data call), then evict every
+    conversation whose timer passed."""
+    fr = decode_frontier(state.get[0]) if state.exists else EMPTY_FRONTIER
+    wm = state.getCurrentWatermarkMs()
+    outputs = []
+    if not state.hasTimedOut:
+        chunks = [pdf for pdf in pdf_iter if len(pdf)]
+        if chunks:
+            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+            out, fr = merge_turns(fr, pdf, wm)
+            outputs.append(out)
+    # a conversation that just received rows has a timer past wm
+    ends, fr = expire(fr, fr.timer_ms < wm)
+    outputs.append(ends)
+    if len(fr.conv_id):
+        state.update((encode_frontier(fr),))
+        state.setTimeoutTimestamp(int(fr.timer_ms.min()))
+    else:
+        state.remove()
+    yield from (o for o in outputs if o is not None)
 
 
 def resolve_state_engine(requested: str | None = None) -> str:
@@ -338,22 +373,27 @@ def resolve_state_engine(requested: str | None = None) -> str:
     return "tws" if tws_supported() else "legacy"
 
 
+# the checkpoint marker names the state layout, not just the API: the
+# applyInPandasWithState engine keys its state by hash bucket
+_MARKER = {"legacy": "legacy-bucketed", "tws": "tws"}
+
+
 def pin_state_engine(checkpoint_dir: str | None, requested: str | None = None) -> str:
     """Resolve the stateful API and PIN it next to the checkpoint.
 
-    A restart of an existing query must keep the engine recorded at first
-    start: if protobuf appears later (image upgrade), auto-selection
-    would silently switch applyInPandasWithState →
+    A restart of an existing query must keep the engine and state layout
+    recorded at first start: if protobuf appears later (image upgrade),
+    auto-selection would silently switch applyInPandasWithState →
     transformWithStateInPandas and Spark rejects checkpoint recovery on a
     stateful-operator mismatch (r5 ADVICE). So:
 
-    - fresh checkpoint → resolve (env/auto), write ``_state_engine``;
+    - fresh checkpoint → resolve (env/auto), write ``_state_engine``
+      (``legacy-bucketed`` or ``tws``);
     - marker present → reuse it; an EXPLICIT conflicting request raises
       (manual intervention, not silent corruption);
-    - pre-pinning checkpoint without a marker (offsets/ exists) → default
-      to "legacy" under auto (the engine every pre-marker checkpoint in
-      this repo ran), honoring an explicit request as the operator's
-      statement of what the checkpoint contains.
+    - a checkpoint of the per-conversation applyInPandasWithState layout —
+      marker ``legacy``, or no marker but ``offsets/`` (written before
+      markers existed) — raises: its state cannot be read as buckets.
     """
     import os
 
@@ -361,25 +401,33 @@ def pin_state_engine(checkpoint_dir: str | None, requested: str | None = None) -
     if checkpoint_dir is None:
         return resolve_state_engine(requested)
     marker = os.path.join(checkpoint_dir, "_state_engine")
+    pinned = None
     if os.path.exists(marker):
         with open(marker) as fh:
             pinned = fh.read().strip()
-        if req in ("tws", "legacy") and req != pinned:
+    elif os.path.isdir(os.path.join(checkpoint_dir, "offsets")):
+        pinned = "legacy"
+    if pinned == "legacy":
+        raise RuntimeError(
+            f"checkpoint {checkpoint_dir} holds per-conversation merge state, "
+            "which this version keys by hash bucket — restart from a fresh "
+            "checkpoint"
+        )
+    if pinned is not None:
+        engine = {v: k for k, v in _MARKER.items()}.get(pinned, pinned)
+        if req in _MARKER and req != engine:
             raise RuntimeError(
                 f"checkpoint {checkpoint_dir} was started with state engine "
                 f"{pinned!r} but {req!r} was requested — restart from a fresh "
                 "checkpoint to switch engines"
             )
-        # re-validate availability (raises if tws pinned but protobuf gone)
-        return resolve_state_engine(pinned)
-    if os.path.isdir(os.path.join(checkpoint_dir, "offsets")) and req == "auto":
-        engine = "legacy"
-    else:
-        engine = resolve_state_engine(requested)
+        # re-validate (raises if tws pinned but protobuf gone, or unknown)
+        return resolve_state_engine(engine)
+    engine = resolve_state_engine(requested)
     os.makedirs(checkpoint_dir, exist_ok=True)
     tmp = marker + ".tmp"
     with open(tmp, "w") as fh:
-        fh.write(engine)
+        fh.write(_MARKER[engine])
     os.replace(tmp, marker)
     return engine
 
@@ -387,22 +435,20 @@ def pin_state_engine(checkpoint_dir: str | None, requested: str | None = None) -
 def accepted_turns(
     transcripts: DataFrame,
     watermark: str = "10 minutes",
-    precompact: bool = False,
     engine: str | None = None,
 ) -> DataFrame:
     """Streaming transform: transcript stream → accepted-turn stream
-    (deduped, prior-turn-linked, versioned). precompact routes through
-    pack_transcripts ahead of the state exchange; engine selects the
-    stateful API (resolve_state_engine — TWS by default where supported,
-    both backed by the same _merge_chunk core)."""
-    stream = pack_transcripts(transcripts) if precompact else transcripts
+    (deduped, prior-turn-linked, versioned). engine selects the stateful
+    API (resolve_state_engine — TWS by default where supported, both
+    backed by the same merge_turns kernel)."""
     if resolve_state_engine(engine) == "tws":
         from .state_merge_tws import accepted_turns_tws
 
-        return accepted_turns_tws(stream, watermark=watermark)
+        return accepted_turns_tws(transcripts, watermark=watermark)
     return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("conv_id")
+        transcripts.withWatermark("ts", watermark)
+        .withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(N_BUCKETS)))
+        .groupBy("bucket")
         .applyInPandasWithState(
             _accept_turns,
             outputStructType=ACCEPTED_SCHEMA,
@@ -456,19 +502,16 @@ def _turn_triples_array():
 def conversation_graph_deltas(
     transcripts: DataFrame,
     watermark: str = "10 minutes",
-    precompact: bool = False,
     engine: str | None = None,
 ) -> DataFrame:
     """Full streaming transform: transcript stream → graph-delta stream.
 
     Stateful accept (Python, minimal) → triple fan-out (pure Catalyst,
-    whole-stage codegen). State is per conv_id in the RocksDB state store;
-    note AQE does not re-plan stateful exchanges — the shuffle-partition
+    whole-stage codegen). State is per conv_id hash bucket in the RocksDB
+    state store; note AQE does not re-plan stateful exchanges — the shuffle-partition
     count fixed at first checkpoint is the scale lever.
     """
-    acc = accepted_turns(
-        transcripts, watermark=watermark, precompact=precompact, engine=engine
-    )
+    acc = accepted_turns(transcripts, watermark=watermark, engine=engine)
     subj = F.when(
         F.col("kind") == "session_end",
         F.concat(F.lit("test.local.graph.kb.conversation."), F.col("conv_id")),

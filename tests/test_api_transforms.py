@@ -505,15 +505,24 @@ def test_pin_state_engine_marker(tmp_path):
     ck = str(tmp_path / "ck")
     eng = pin_state_engine(ck)
     assert eng == "legacy"  # this image has no protobuf
-    assert (tmp_path / "ck" / "_state_engine").read_text() == "legacy"
+    # the marker names the state layout: state keyed by hash bucket
+    assert (tmp_path / "ck" / "_state_engine").read_text() == "legacy-bucketed"
     assert pin_state_engine(ck) == "legacy"  # restart reuses the pin
+    assert pin_state_engine(ck, "legacy") == "legacy"
     with pytest.raises(RuntimeError):
         pin_state_engine(ck, "tws")  # explicit conflicting request is loud
-    # pre-marker checkpoint (offsets/ exists): auto defaults to legacy
-    ck2 = str(tmp_path / "ck2")
-    os.makedirs(os.path.join(ck2, "offsets"))
-    assert pin_state_engine(ck2) == "legacy"
-    assert (tmp_path / "ck2" / "_state_engine").read_text() == "legacy"
+    # checkpoints of the per-conversation layout fail at start with a
+    # clear message: a "legacy" marker, and a pre-marker checkpoint
+    ck2 = tmp_path / "ck2"
+    ck2.mkdir()
+    (ck2 / "_state_engine").write_text("legacy")
+    ck3 = str(tmp_path / "ck3")
+    os.makedirs(os.path.join(ck3, "offsets"))
+    for old in (str(ck2), ck3):
+        with pytest.raises(RuntimeError, match="restart from a fresh checkpoint"):
+            pin_state_engine(old)
+    assert (ck2 / "_state_engine").read_text() == "legacy"  # left as found
+    assert not os.path.exists(os.path.join(ck3, "_state_engine"))
 
 
 def test_rule_sql_compiles_subject_pattern(spark):

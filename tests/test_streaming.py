@@ -72,31 +72,6 @@ def test_stream_matches_batch_extraction(spark, tmp_path):
     assert got == want
 
 
-def test_precompact_parity(spark, tmp_path):
-    """Round-5 worklist #3: the pre-compacted pipeline (pack_transcripts
-    ahead of the state exchange) must be row-for-row identical to the
-    flat pipeline on the same input — including re-delivery dedup,
-    prior-turn linkage, versions, and tool correlation — across
-    multi-file micro-batches where a conversation spans packs."""
-    indir = str(tmp_path / "in")
-    rows = (
-        _mk_rows("c1", 8, T0)
-        + _mk_rows("c2", 5, T0, "ent_b")
-        + [("c1", 3, "tool", "msg 3 @entity:ent_a", "search", T0 + dt.timedelta(seconds=60))]
-    )
-    _write_file(indir, "f1.parquet", rows[:7])
-    _write_file(indir, "f2.parquet", rows[5:])  # re-delivers turns 5,6 of c1
-    _write_file(indir, "f3.parquet", _mk_rows("c3", 4, T0 + dt.timedelta(minutes=2)))
-
-    outs = {}
-    for label, flag in (("flat", False), ("packed", True)):
-        outdir, ckpt = str(tmp_path / f"out_{label}"), str(tmp_path / f"ckpt_{label}")
-        sink = _run(spark, indir, outdir, ckpt, watermark="2 days", mfpt=1, precompact=flag)
-        outs[label] = sorted(map(tuple, sink.read(spark).collect()))
-    assert outs["flat"] == outs["packed"]
-    assert len(outs["flat"]) > 0
-
-
 def test_prior_turn_linkage(spark, tmp_path):
     indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     _write_file(indir, "f1.parquet", _mk_rows("c1", 4, T0))
@@ -721,10 +696,12 @@ def test_tws_processor_logic_with_mock_handle():
     """Round-5 verdict #3: exercise ConvMergeProcessor's TWS logic layer
     (state round-trip, timer replace, expired-timer session_end) WITHOUT
     the protobuf runtime, against a dict-backed StatefulProcessorHandle —
-    output parity with the legacy _accept_turns on the same chunks."""
+    output parity with the bucketed legacy _accept_turns on the same
+    chunks, driven through a GroupState stand-in keyed by bucket."""
     import numpy as np
+    from merge_reference import FakeGroupState
 
-    from semstreams_spark.streaming.state_merge import _accept_turns
+    from semstreams_spark.streaming.state_merge import _accept_turns, decode_frontier
     from semstreams_spark.streaming.state_merge_tws import ConvMergeProcessor
 
     class FakeValueState:
@@ -785,32 +762,6 @@ def test_tws_processor_logic_with_mock_handle():
         def getCurrentWatermarkInMs(self):
             return self._wm
 
-    class FakeGroupState:
-        def __init__(self, wm):
-            self._t, self._wm = None, wm
-            self.hasTimedOut = False
-            self.timeout = None
-
-        @property
-        def exists(self):
-            return self._t is not None
-
-        @property
-        def get(self):
-            return self._t
-
-        def update(self, t):
-            self._t = tuple(t)
-
-        def remove(self):
-            self._t = None
-
-        def getCurrentWatermarkMs(self):
-            return self._wm
-
-        def setTimeoutTimestamp(self, ms):
-            self.timeout = ms
-
     def chunk(rows):
         return pd.DataFrame(
             {
@@ -838,10 +789,12 @@ def test_tws_processor_logic_with_mock_handle():
     anchor_ms = int(pd.Timestamp(T0 + dt.timedelta(seconds=80)).value // 1_000_000)
     assert handle.timers[0] == anchor_ms + 3_600_000
 
-    gs = FakeGroupState(0)
-    leg_out = list(_accept_turns(("c1",), iter(batch1), gs))
-    gs._wm = 60_000
-    leg_out.extend(_accept_turns(("c1",), iter(batch2), gs))
+    gs = FakeGroupState()
+    leg_out = list(_accept_turns((7,), iter(batch1), gs.begin(0)))
+    leg_out.extend(_accept_turns((7,), iter(batch2), gs.begin(60_000)))
+    # the bucket's timeout is its one conversation's timer, the TWS timer
+    assert gs.timeout == handle.timers[0]
+    assert list(decode_frontier(gs.get[0]).conv_id) == ["c1"]
 
     t = pd.concat(tws_out, ignore_index=True)
     l = pd.concat(leg_out, ignore_index=True)
@@ -854,8 +807,10 @@ def test_tws_processor_logic_with_mock_handle():
     assert len(ended) == 1 and ended[0]["kind"][0] == "session_end"
     assert ended[0]["text"][0] == "5"  # n_turns summary payload
     assert not proc._scalars.exists() and not proc._seen.exists()
-    gs.hasTimedOut = True
-    leg_end = list(_accept_turns(("c1",), iter([]), gs))
+    # Spark calls a timed-out bucket once its timeout is below the watermark
+    wm = gs.timeout + 1
+    leg_end = list(_accept_turns((7,), iter([]), gs.begin(wm, timed_out=True)))
     pd.testing.assert_frame_equal(ended[0], leg_end[0])
+    assert not gs.exists  # the bucket's last conversation evicted
     # a second expiry with no state emits nothing
     assert list(proc.handleExpiredTimer(("c1",), FakeTimerValues(10**12), object())) == []

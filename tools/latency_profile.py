@@ -4,9 +4,12 @@
 Runs the e2e ingest as N micro-batches (maxFilesPerTrigger=1) and prints
 each StreamingQueryProgress's durationMs breakdown plus the stateful
 operator's commit/update times — the feedback loop for driving down the
-north metric's triple-emit p95.
+north metric's triple-emit p95. ``st_rows`` is the state operator's
+numRowsUpdated: the merge's state is keyed by hash bucket, so it counts
+buckets written per trigger, not conversations.
 
-Usage: python tools/latency_profile.py [--sf 0.1] [--files 20] [--cores 32]
+Usage: python tools/latency_profile.py [--sf 0.1] [--files 20] [--cores N]
+(--cores defaults to $SPARK_GRAFT_CPUS, else the host's CPU count)
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", type=float, default=0.1)
     ap.add_argument("--files", type=int, default=20)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--workdir", default=None)
     ap.add_argument(

@@ -32,7 +32,7 @@ def main() -> int:
     ap.add_argument("--suffix", default="", help="filename suffix, e.g. _before/_after")
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--explain-only", action="store_true")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()

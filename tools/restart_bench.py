@@ -16,7 +16,7 @@ checkpoint + suffix reads (≤ 1 + compact_every metadata opens,
 sink.py), RocksDB state reload for the touched partitions, and one
 batch of work — NOT O(stream history) scans.
 
-Usage: python tools/restart_bench.py [--sf 0.1] [--files 80] [--cores 32]
+Usage: python tools/restart_bench.py [--sf 0.1] [--files 80] [--cores N]
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", type=float, default=0.1)
     ap.add_argument("--files", type=int, default=80, help="total; half per phase")
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     ap.add_argument("--state-partitions", type=int, default=8)
     args = ap.parse_args()
 

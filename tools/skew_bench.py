@@ -1,8 +1,8 @@
 """Hot-conversation skew measurement (round-4 worklist item).
 
-The stateful merge is keyed by conv_id, so a 50x-hot conversation
-serializes through ONE state task — AQE skew-join handling does not
-apply inside applyInPandasWithState. This tool quantifies the actual
+The stateful merge is keyed by a hash bucket of conv_id, so a 50x-hot
+conversation serializes through ONE state task — AQE skew-join handling
+does not apply inside applyInPandasWithState. This tool quantifies the actual
 ceiling: the SAME generator with hot_factor=50 (canonical skewed corpus,
 ~1% of conversations at 50x turns) vs hot_factor=1 (control), measuring
 
@@ -11,10 +11,11 @@ ceiling: the SAME generator with hot_factor=50 (canonical skewed corpus,
 - 20-file micro-batch p95 trigger time — does the hot key stretch the
   tail batch?
 - the theoretical floor: max per-conv turn count / per-core turn
-  throughput is the serial lower bound for any conv_id-keyed operator.
+  throughput is the serial lower bound for any operator keyed by (a
+  function of) conv_id.
 
 Results are summarized in BASELINE.md §F. Usage:
-  python tools/skew_bench.py [--sf 0.1] [--cores 32]
+  python tools/skew_bench.py [--sf 0.1] [--cores N]
 """
 
 from __future__ import annotations
@@ -69,63 +70,10 @@ def run_variant(spark, label: str, sf: float, hot_factor: int, workdir: str, cor
     }
 
 
-def ab_precompact(spark, sf: float, hot_factor: int, workdir: str, cores: int, reps: int = 3):
-    """Interleaved flat-vs-packed ingest A/B on the hot corpus (round-5
-    worklist #3): alternating reps in one process, so co-tenant load on
-    this shared host hits both variants alike. Reports min/all walls and
-    per-rep loadavg per variant."""
-    import pyarrow.parquet as pq
-
-    from bench import stream_ingest
-    from semstreams_spark.datagen.transcripts import generate_transcripts
-
-    tbl, _ = generate_transcripts(sf, hot_factor=hot_factor)
-    src = os.path.join(workdir, "src_ab.parquet")
-    pq.write_table(tbl, src, compression="snappy", row_group_size=16_384)
-    n_turns = len(tbl)
-
-    walls = {"flat": [], "packed": []}
-    loads = {"flat": [], "packed": []}
-    for variant, flag in (("flat", "0"), ("packed", "1")):  # warmup each path once
-        os.environ["SPARK_GRAFT_PRECOMPACT"] = flag
-        sub = os.path.join(workdir, f"ab_{variant}")
-        os.makedirs(sub, exist_ok=True)
-        stream_ingest(spark, src, sub, n_files=cores * 2, mfpt=cores * 2)
-    for _ in range(reps):
-        for variant, flag in (("flat", "0"), ("packed", "1")):
-            os.environ["SPARK_GRAFT_PRECOMPACT"] = flag
-            loads[variant].append(round(os.getloadavg()[0], 2))
-            w, _, _ = stream_ingest(
-                spark, src, os.path.join(workdir, f"ab_{variant}"), n_files=cores * 2, mfpt=cores * 2
-            )
-            walls[variant].append(round(w, 3))
-    os.environ.pop("SPARK_GRAFT_PRECOMPACT", None)
-    out = {
-        "hot_factor": hot_factor,
-        "n_turns": n_turns,
-        "reps": reps,
-        "flat": {"wall_min": min(walls["flat"]), "walls": walls["flat"], "loadavg": loads["flat"]},
-        "packed": {
-            "wall_min": min(walls["packed"]),
-            "walls": walls["packed"],
-            "loadavg": loads["packed"],
-        },
-    }
-    out["packed_over_flat"] = round(min(walls["packed"]) / min(walls["flat"]), 3)
-    return out
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", type=float, default=0.1)
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument(
-        "--ab-precompact",
-        action="store_true",
-        help="interleaved flat-vs-packed ingest A/B on the hot corpus only",
-    )
-    ap.add_argument("--hot-factor", type=int, default=50)
-    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     args = ap.parse_args()
 
     from semstreams_spark.session import get_spark
@@ -134,20 +82,6 @@ def main():
     workdir = tempfile.mkdtemp(prefix="semspark_skew_")
     t0 = time.monotonic()
     load0 = round(os.getloadavg()[0], 2)
-    if args.ab_precompact:
-        res = ab_precompact(spark, args.sf, args.hot_factor, workdir, args.cores, reps=args.reps)
-        shutil.rmtree(workdir, ignore_errors=True)
-        res.update(
-            {
-                "metric": "precompact_ab",
-                "sf": args.sf,
-                "cores": args.cores,
-                "loadavg_1m": [load0, round(os.getloadavg()[0], 2)],
-                "wall_total_s": round(time.monotonic() - t0, 1),
-            }
-        )
-        print(json.dumps(res))
-        return
     hot = run_variant(spark, "hot", args.sf, 50, workdir, args.cores)
     ctrl = run_variant(spark, "ctrl", args.sf, 1, workdir, args.cores)
     shutil.rmtree(workdir, ignore_errors=True)
