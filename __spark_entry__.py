@@ -442,7 +442,15 @@ def _pair_count_batches(it, max_matrix_vocab: int = 4096):
     """mapInPandas kernel for `_conv_pair_counts` (module-level so the
     fallback branch is directly unit-testable): per Arrow batch of `ents`
     arrays (unordered entity sets), emit partial (src, dst, c) pair
-    counts with src < dst."""
+    counts with src < dst.
+
+    Precondition: each `ents` row is duplicate-free (`_conv_pair_counts`
+    feeds `collect_set` output). It is not checked per row. A repeated
+    entity makes the branches disagree: the matrix branch's buffered
+    fancy-index `M[np.ix_(idx, idx)] += 1` adds once per distinct cell, so
+    the repeat is dropped, while the pair branch emits every (i < j)
+    position pair, so it counts the repeated entity's pairs twice and
+    emits a self pair (e, e)."""
     import numpy as np
     import pandas as pd
 

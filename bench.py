@@ -9,7 +9,12 @@ line:
    "queries": {...per-query MIN over --reps interleaved passes...},
    "queries_median": {...per-query median...}, "reps": R,
    "loadavg_1m": [start, end], "sf": <sf>,
-   "turns_per_sec": ..., "batch_p95_ms": ..., "cores": N}
+   "turns_per_sec": ..., "batch_p95_ms": ..., "cores": N,
+   "errors": {<section>: "<exception>"}}
+
+A section that raises (ingest, query_suite, latency, big_sf) leaves its
+keys empty or partial and records the exception under "errors"; the
+line is printed either way.
 
 The e2e streaming ingest (read → extract → stateful merge → exactly-once
 sink) is measured twice: one-big-batch for throughput (turns/sec) and
@@ -26,6 +31,7 @@ two parallelism levels in fresh JVMs and reports efficiency.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import gc
 import json
 import os
@@ -92,9 +98,19 @@ def suite_pass(spark, sf_dir, times: dict[str, list[float]]):
 def _min_median(times: dict[str, list[float]]):
     import statistics
 
-    mins = {n: round(min(ts), 3) for n, ts in times.items()}
-    medians = {n: round(statistics.median(ts), 3) for n, ts in times.items()}
+    mins = {n: round(min(ts), 3) for n, ts in times.items() if ts}
+    medians = {n: round(statistics.median(ts), 3) for n, ts in times.items() if ts}
     return mins, medians
+
+
+@contextlib.contextmanager
+def _section(errors: dict[str, str], name: str):
+    """Run one bench section; an exception is recorded under errors[name]
+    (the first one wins) instead of ending the run."""
+    try:
+        yield
+    except Exception as e:  # noqa: BLE001 - any failure is reported, not raised
+        errors.setdefault(name, f"{type(e).__name__}: {e}")
 
 
 # Heaviest transcript-derived queries — runnable at ANY scale factor
@@ -175,9 +191,13 @@ def stream_ingest(
     conf is captured at stream start and pinned in the checkpoint; it is
     restored for subsequent work). Streaming ops practice is to size
     state partitions to per-trigger load — the latency stream's ~12k-row
-    triggers over-partition badly at 32 (each partition pays a fixed
-    python-runner + RocksDB-commit cost per trigger for a handful of
-    keys), while the one-big-batch throughput run wants all cores."""
+    triggers over-partition badly at 32, while the one-big-batch
+    throughput run wants all cores. Each state partition pays a fixed
+    cost per trigger for a handful of keys: a RocksDB commit and two
+    Python tasks (the data pass, then the timeout pass). On CPython < 3.12
+    each Python task re-parsed pyspark.zip's central directory on start,
+    ~130-240 ms on a 4-vCPU host; semstreams_spark._pydaemon now skips
+    that for unchanged archives."""
     from pyspark.sql import functions as F  # noqa: F401
 
     from semstreams_spark.streaming import build_ingest_stream, read_transcript_stream
@@ -218,8 +238,10 @@ def stream_ingest(
 
 
 # triggers excluded from the steady-state latency stats: covers the
-# state-store instance creation + cold python workers observed on the
-# first ~3 triggers of a fresh query (tools/latency_profile.py)
+# state-store instance creation on the first ~3 triggers of a fresh query
+# (tools/latency_profile.py). The per-task pyspark.zip re-read once
+# blamed on "cold python workers" is paid by every trigger, not the first
+# few; semstreams_spark/_pydaemon.py removes it.
 LATENCY_WARM_IN = 4
 
 
@@ -279,9 +301,11 @@ def main():
 
     ingest_args = dict(n_files=args.cores * 2, mfpt=args.cores * 2)
     n_turns = None
+    errors: dict[str, str] = {}
     if not args.latency_only:
         # warmup ingest, discarded (JIT/classloading)
-        _, n_turns, _ = stream_ingest(spark, transcripts_path(sf), workdir, **ingest_args)
+        with _section(errors, "ingest"):
+            _, n_turns, _ = stream_ingest(spark, transcripts_path(sf), workdir, **ingest_args)
 
     batch_p95_ms = None
     batch_p95_steady_ms = None
@@ -293,8 +317,9 @@ def main():
         walls = []
         for _ in range(args.runs):
             loadavg_per_pass.append(round(os.getloadavg()[0], 2))
-            w_, n_turns, _ = stream_ingest(spark, transcripts_path(sf), workdir, **ingest_args)
-            walls.append(w_)
+            with _section(errors, "ingest"):
+                w_, n_turns, _ = stream_ingest(spark, transcripts_path(sf), workdir, **ingest_args)
+                walls.append(w_)
     else:
         # INTERLEAVED protocol (round-5, BASELINE §C): each of the --reps
         # passes is [one e2e ingest wall, then one full query-suite pass],
@@ -308,9 +333,11 @@ def main():
         if not args.latency_only:
             for _ in range(max(args.reps, 1)):
                 loadavg_per_pass.append(round(os.getloadavg()[0], 2))
-                w_, n_turns, _ = stream_ingest(spark, transcripts_path(sf), workdir, **ingest_args)
-                walls.append(w_)
-                suite_pass(spark, args.sf_dir, times)
+                with _section(errors, "ingest"):
+                    w_, n_turns, _ = stream_ingest(spark, transcripts_path(sf), workdir, **ingest_args)
+                    walls.append(w_)
+                with _section(errors, "query_suite"):
+                    suite_pass(spark, args.sf_dir, times)
             mins, medians = _min_median(times)
             queries.update(mins)
             queries_median.update(medians)
@@ -338,42 +365,43 @@ def main():
         # p95 44.6 s shared-session vs 2.0 s / 2.3 s fresh — same code,
         # same protocol, minutes apart). One warmup ingest re-warms the
         # new JVM + python worker pool before the measured stream.
-        spark.stop()
-        spark = get_spark("bench_latency", cores=args.cores, shuffle_partitions=args.cores)
-        _, _, _ = stream_ingest(spark, transcripts_path(sf), workdir, **ingest_args)
-        # two reps, headline = the run with the lower steady p95 — the
-        # min-of-reps estimator the ingest walls already use (co-tenant
-        # load can inflate a trigger, nothing can deflate one below true
-        # cost; one 35 s co-tenant spike among 40 batches otherwise OWNS
-        # the p95). Both runs land in latency_runs with their loadavg.
-        for _ in range(2):
-            lat_load = round(os.getloadavg()[0], 2)
-            _, _, per_batch = stream_ingest(
-                spark,
-                transcripts_path(sf),
-                workdir,
-                n_files=40,
-                mfpt=1,
-                time_ordered=True,
-                state_partitions=8,
-            )
-            steady = per_batch[LATENCY_WARM_IN:]
-            latency_runs.append(
-                {
-                    "p95_ms": p95(per_batch),
-                    "p95_steady_ms": p95(steady),
-                    "med_ms": int(statistics.median(steady)) if steady else None,
-                    "loadavg": lat_load,
-                }
-            )
-        # a run with no batch past the warm-in has no steady p95: it stays
-        # in latency_runs but cannot be the headline
-        steady_runs = [s for s in latency_runs if s["p95_steady_ms"] is not None]
-        if steady_runs:
-            best = min(steady_runs, key=lambda s: s["p95_steady_ms"])
-            batch_p95_ms = best["p95_ms"]
-            batch_p95_steady_ms = best["p95_steady_ms"]
-            batch_med_ms = best["med_ms"]
+        with _section(errors, "latency"):
+            spark.stop()
+            spark = get_spark("bench_latency", cores=args.cores, shuffle_partitions=args.cores)
+            _, _, _ = stream_ingest(spark, transcripts_path(sf), workdir, **ingest_args)
+            # two reps, headline = the run with the lower steady p95 — the
+            # min-of-reps estimator the ingest walls already use (co-tenant
+            # load can inflate a trigger, nothing can deflate one below true
+            # cost; one 35 s co-tenant spike among 40 batches otherwise OWNS
+            # the p95). Both runs land in latency_runs with their loadavg.
+            for _ in range(2):
+                lat_load = round(os.getloadavg()[0], 2)
+                _, _, per_batch = stream_ingest(
+                    spark,
+                    transcripts_path(sf),
+                    workdir,
+                    n_files=40,
+                    mfpt=1,
+                    time_ordered=True,
+                    state_partitions=8,
+                )
+                steady = per_batch[LATENCY_WARM_IN:]
+                latency_runs.append(
+                    {
+                        "p95_ms": p95(per_batch),
+                        "p95_steady_ms": p95(steady),
+                        "med_ms": int(statistics.median(steady)) if steady else None,
+                        "loadavg": lat_load,
+                    }
+                )
+            # a run with no batch past the warm-in has no steady p95: it stays
+            # in latency_runs but cannot be the headline
+            steady_runs = [s for s in latency_runs if s["p95_steady_ms"] is not None]
+            if steady_runs:
+                best = min(steady_runs, key=lambda s: s["p95_steady_ms"])
+                batch_p95_ms = best["p95_ms"]
+                batch_p95_steady_ms = best["p95_steady_ms"]
+                batch_med_ms = best["med_ms"]
 
     # min-of-reps (same estimator as the per-query section): co-tenant
     # load can inflate a wall, nothing can deflate one below true cost;
@@ -396,36 +424,37 @@ def main():
         # protocol — validates the T = F + W/cores model beyond sf0.1,
         # where fixed costs are a large share of short walls
         if args.big_sf and args.big_sf > 0:
-            ensure_transcripts(args.big_sf)
-            # own workdir: stream_ingest keys its staged input on
-            # n_files only, which would silently reuse the sf0.1 split
-            big_workdir = os.path.join(workdir, f"big_sf{args.big_sf:g}")
-            # same interleaved protocol: warmup ingest, then 2 passes of
-            # [ingest wall, heavy-query pass], loadavg stamped per pass
-            _, big_turns, _ = stream_ingest(
-                spark, transcripts_path(args.big_sf), big_workdir, **ingest_args
-            )
-            big_times: dict[str, list[float]] = {n: [] for n in BIG_SF_QUERIES}
-            big_walls = []
-            big_loadavg = []
-            for _ in range(2):
-                big_loadavg.append(round(os.getloadavg()[0], 2))
-                w_, big_turns, _ = stream_ingest(
+            with _section(errors, "big_sf"):
+                ensure_transcripts(args.big_sf)
+                # own workdir: stream_ingest keys its staged input on
+                # n_files only, which would silently reuse the sf0.1 split
+                big_workdir = os.path.join(workdir, f"big_sf{args.big_sf:g}")
+                # same interleaved protocol: warmup ingest, then 2 passes of
+                # [ingest wall, heavy-query pass], loadavg stamped per pass
+                _, big_turns, _ = stream_ingest(
                     spark, transcripts_path(args.big_sf), big_workdir, **ingest_args
                 )
-                big_walls.append(w_)
-                big_sf_pass(spark, args.big_sf, big_times)
-            bmins, bmedians = _min_median(big_times)
-            big = {
-                "sf": args.big_sf,
-                "ingest_wall": round(min(big_walls), 3),
-                "ingest_walls": [round(w, 3) for w in big_walls],
-                "turns_per_sec": round(big_turns / min(big_walls), 1),
-                "n_turns": big_turns,
-                "queries": bmins,
-                "queries_median": bmedians,
-                "loadavg_per_pass": big_loadavg,
-            }
+                big_times: dict[str, list[float]] = {n: [] for n in BIG_SF_QUERIES}
+                big_walls = []
+                big_loadavg = []
+                for _ in range(2):
+                    big_loadavg.append(round(os.getloadavg()[0], 2))
+                    w_, big_turns, _ = stream_ingest(
+                        spark, transcripts_path(args.big_sf), big_workdir, **ingest_args
+                    )
+                    big_walls.append(w_)
+                    big_sf_pass(spark, args.big_sf, big_times)
+                bmins, bmedians = _min_median(big_times)
+                big = {
+                    "sf": args.big_sf,
+                    "ingest_wall": round(min(big_walls), 3),
+                    "ingest_walls": [round(w, 3) for w in big_walls],
+                    "turns_per_sec": round(big_turns / min(big_walls), 1),
+                    "n_turns": big_turns,
+                    "queries": bmins,
+                    "queries_median": bmedians,
+                    "loadavg_per_pass": big_loadavg,
+                }
 
     print(
         json.dumps(
@@ -448,6 +477,7 @@ def main():
                 "loadavg_1m": [load_start, round(os.getloadavg()[0], 2)],
                 "loadavg_per_pass": loadavg_per_pass,
                 "cores": args.cores,
+                "errors": errors,
             }
         )
     )
