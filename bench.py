@@ -345,7 +345,7 @@ def main():
 
         # per-batch latency: 40 single-file micro-batches. The first few
         # triggers of a fresh streaming query pay one-time costs (RocksDB
-        # state-store instance creation, cold TWS python workers) that an
+        # state-store instance creation, Python worker start-up) that an
         # always-on stream amortizes to nothing — on the north metric's
         # 10^9-turn stream they are a 1e-7 fraction, but in a 20-batch
         # sample they ARE the p95. So: batch_p95_ms stays the

@@ -16,18 +16,6 @@ On a real cluster the session comes from spark-submit's conf
 Exactly-once, lineage, and resume semantics are identical to the test
 pipeline — same code path (streaming/pipeline.py).
 
-State-engine note for --py-files deployments: Spark's driver-side
-streaming python runners (the transformWithStateInPandas pre-init
-runner that validates state schema) are spawned by the JVM and do NOT
-inherit --py-files, so a TWS job whose state function lives only in the
-zip dies at start with ModuleNotFoundError. On a protobuf-equipped
-cluster either make the package importable outside --py-files (pip
-install on nodes, or PYTHONPATH including the zip in the JVM's
-environment) or pin SPARK_GRAFT_STATE_ENGINE=legacy — the legacy
-applyInPandasWithState workers are executor-side and honor --py-files.
-(Verified end-to-end under spark-submit --py-files on this runtime,
-which resolves to the legacy engine.)
-
 Scale configuration cheat-sheet (1000-executor, 10^12-turn deployment):
   spark.sql.shuffle.partitions        ≈ 2-3x total cores (state partition
                                         count is FIXED at first checkpoint)

@@ -282,22 +282,6 @@ SELECT vec_id, round(dot / (na * nb), 6) AS cosine
 FROM s ORDER BY dot / (na * nb) DESC, vec_id ASC LIMIT {k}"""
 
 
-def sql_embedding_sim_pairs(dim: int, threshold: float = 0.4) -> str:
-    """Exact all-pairs cosine ≥ threshold — mirrors q_embedding_sim_pairs
-    (sequential left-fold sums, 6dp rounding)."""
-    return f"""WITH n AS (
-  SELECT vec_id, embedding,
-         sqrt(list_sum(list_transform(range(1, {dim + 1}), i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE))) AS nrm
-  FROM embeddings
-)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       round(list_sum(list_transform(range(1, {dim + 1}), i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-             / (a.nrm * b.nrm), 6) AS cosine
-FROM n a JOIN n b ON a.vec_id < b.vec_id
-WHERE list_sum(list_transform(range(1, {dim + 1}), i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-      / (a.nrm * b.nrm) >= {threshold}"""
-
-
 def _fold_sum(items_expr: str) -> str:
     """Sequential left-fold sum — bit-identical to Spark's F.aggregate
     (0.0 + x1 + x2 + ...; IEEE 0.0+x == x so the missing init is exact)."""
@@ -553,29 +537,6 @@ FROM scored GROUP BY doc_id
 ORDER BY score DESC, doc_id ASC LIMIT {k}"""
 
 
-def sql_path_2hop(sf: float, start: str = "ent_000", decay: float = 0.85) -> str:
-    """Depth-2 bounded traversal over the entity co-mention graph."""
-    return f"""WITH {triples_cte(sf)},
-m AS (
-  SELECT DISTINCT context AS conv_id, str_split(object, '.')[-1] AS e
-  FROM triples WHERE predicate = 'conv.turn.mentions'
-),
-edges AS (
-  SELECT DISTINCT a.e AS src, b.e AS dst
-  FROM m a JOIN m b ON a.conv_id = b.conv_id AND a.e < b.e
-),
-und AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-d1 AS (SELECT DISTINCT dst AS entity FROM und WHERE src = '{start}'),
-d2 AS (
-  SELECT DISTINCT u.dst AS entity
-  FROM und u JOIN d1 ON u.src = d1.entity
-  WHERE u.dst <> '{start}' AND u.dst NOT IN (SELECT entity FROM d1)
-)
-SELECT '{start}' AS entity, 0 AS depth, 1.0::DOUBLE AS score
-UNION ALL SELECT entity, 1, 1.0::DOUBLE * {decay}::DOUBLE FROM d1
-UNION ALL SELECT entity, 2, 1.0::DOUBLE * {decay}::DOUBLE * {decay}::DOUBLE FROM d2"""
-
-
 _ENTITY_GRAPH_CTE = """
 m AS (
   SELECT DISTINCT context AS conv_id, str_split(object, '.')[-1] AS e
@@ -650,14 +611,6 @@ def _lpa_chain(max_iter: int, und: str = "und", prefix: str = "l") -> str:
   ) WHERE rn = 1
 )""")
     return ",\n".join(parts)
-
-
-def sql_lpa_entities(sf: float, max_iter: int = 8) -> str:
-    """Deterministic LPA oracle — see _lpa_chain."""
-    return f"""WITH {triples_cte(sf)},{_ENTITY_GRAPH_CTE},
-und AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-{_lpa_chain(max_iter)}
-SELECT entity, label AS community FROM l{max_iter}"""
 
 
 _PARITY_GRAPH_CTE = """
@@ -1226,11 +1179,3 @@ f AS MATERIALIZED (
 tot AS (SELECT COUNT(*) AS c FROM f)
 SELECT id, type, status, version, updated_at, (tot.c > {max_entities}) AS truncated
 FROM f, tot ORDER BY id LIMIT {max_entities}"""
-
-
-def sql_incoming_top(sf: float, k: int = 20) -> str:
-    """Top mention targets by incoming edge count (J5 reverse lookup)."""
-    return f"""WITH {triples_cte(sf)}
-SELECT object AS dst, COUNT(*) AS n_incoming, COUNT(DISTINCT context) AS n_convs
-FROM triples WHERE predicate = 'conv.turn.mentions'
-GROUP BY object ORDER BY n_incoming DESC, dst ASC LIMIT {k}"""

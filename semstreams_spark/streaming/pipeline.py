@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .sink import ExactlyOnceParquetSink
-from .state_merge import conversation_graph_deltas
+from .state_merge import conversation_graph_deltas, pin_state_engine
 
 TRANSCRIPT_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -103,12 +103,8 @@ def build_ingest_stream(
         F.max("ts").alias("max_event_ts"),
         F.approx_count_distinct("conv_id").alias("approx_convs"),
     )
-    # pin the stateful API to the checkpoint (restart-safe across
-    # protobuf availability changes — see state_merge.pin_state_engine)
-    from .state_merge import pin_state_engine
-
-    engine = pin_state_engine(checkpoint_dir)
-    deltas = conversation_graph_deltas(transcripts, watermark=watermark, engine=engine)
+    pin_state_engine(checkpoint_dir)
+    deltas = conversation_graph_deltas(transcripts, watermark=watermark)
     sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"), commit_mode=commit_mode)
 
     if fail_at_batch is not None:

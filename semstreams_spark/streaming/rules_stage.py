@@ -57,7 +57,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.mutations import deletion_events
 from ..rules.engine import Rule, apply_cooldown, evaluate_rules
 from .sink import ExactlyOnceParquetSink
-from .state_merge import conversation_graph_deltas
+from .state_merge import conversation_graph_deltas, pin_state_engine
 
 ENTITY_MENTIONED = "entity.mentioned"
 
@@ -164,6 +164,7 @@ def build_ingest_with_rules(
     fail_rules_at_batch: inject a crash after the delta commit but before
     the rule commit of batch N (the kill/resume test's worst case).
     """
+    pin_state_engine(checkpoint_dir)
     deltas = conversation_graph_deltas(transcripts, watermark=watermark)
     delta_sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"))
     rule_stage = StreamingRuleStage(out_dir, rules)

@@ -47,6 +47,7 @@ final merged state independent of batch boundaries.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 from typing import NamedTuple
 
@@ -347,104 +348,48 @@ def _accept_turns(
     yield from (o for o in outputs if o is not None)
 
 
-def resolve_state_engine(requested: str | None = None) -> str:
-    """Which stateful API backs the merge: "tws"
-    (transformWithStateInPandas — the maintained Spark 4 API, DEFAULT
-    wherever its protobuf runtime exists) or "legacy"
-    (applyInPandasWithState — the fallback, and the only option on
-    runtimes without protobuf, like this test image).
-    SPARK_GRAFT_STATE_ENGINE pins either explicitly."""
-    import os
-
-    from .state_merge_tws import tws_supported
-
-    req = requested or os.environ.get("SPARK_GRAFT_STATE_ENGINE", "auto")
-    if req == "legacy":
-        return "legacy"
-    if req == "tws":
-        if not tws_supported():
-            raise RuntimeError(
-                "SPARK_GRAFT_STATE_ENGINE=tws but transformWithStateInPandas "
-                "needs google.protobuf, which is not importable here"
-            )
-        return "tws"
-    if req != "auto":
-        raise ValueError(f"unknown state engine {req!r} (auto|tws|legacy)")
-    return "tws" if tws_supported() else "legacy"
+# the marker value every checkpoint of state keyed by hash bucket carries;
+# it keeps its historical name so those checkpoints restart
+_LAYOUT = "legacy-bucketed"
 
 
-# the checkpoint marker names the state layout, not just the API: the
-# applyInPandasWithState engine keys its state by hash bucket
-_MARKER = {"legacy": "legacy-bucketed", "tws": "tws"}
+def pin_state_engine(checkpoint_dir: str | None) -> None:
+    """Check the checkpoint's merge-state layout and record it next to
+    the checkpoint (``_state_engine``).
 
-
-def pin_state_engine(checkpoint_dir: str | None, requested: str | None = None) -> str:
-    """Resolve the stateful API and PIN it next to the checkpoint.
-
-    A restart of an existing query must keep the engine and state layout
-    recorded at first start: if protobuf appears later (image upgrade),
-    auto-selection would silently switch applyInPandasWithState →
-    transformWithStateInPandas and Spark rejects checkpoint recovery on a
-    stateful-operator mismatch (r5 ADVICE). So:
-
-    - fresh checkpoint → resolve (env/auto), write ``_state_engine``
-      (``legacy-bucketed`` or ``tws``);
-    - marker present → reuse it; an EXPLICIT conflicting request raises
-      (manual intervention, not silent corruption);
-    - a checkpoint of the per-conversation applyInPandasWithState layout —
-      marker ``legacy``, or no marker but ``offsets/`` (written before
-      markers existed) — raises: its state cannot be read as buckets.
+    - fresh checkpoint → write ``legacy-bucketed``;
+    - marker ``legacy-bucketed`` → proceed;
+    - any other marker (``tws``, ``legacy``: per-conversation state of
+      earlier versions), or no marker but ``offsets/`` (written before
+      markers existed) → raise, leaving the marker as found: that state
+      cannot be read as buckets.
     """
-    import os
-
-    req = requested or os.environ.get("SPARK_GRAFT_STATE_ENGINE", "auto")
     if checkpoint_dir is None:
-        return resolve_state_engine(requested)
+        return
     marker = os.path.join(checkpoint_dir, "_state_engine")
-    pinned = None
     if os.path.exists(marker):
         with open(marker) as fh:
-            pinned = fh.read().strip()
+            found = fh.read().strip()
     elif os.path.isdir(os.path.join(checkpoint_dir, "offsets")):
-        pinned = "legacy"
-    if pinned == "legacy":
+        found = "unmarked"
+    else:
+        os.makedirs(checkpoint_dir, exist_ok=True)
+        tmp = marker + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(_LAYOUT)
+        os.replace(tmp, marker)
+        return
+    if found != _LAYOUT:
         raise RuntimeError(
-            f"checkpoint {checkpoint_dir} holds per-conversation merge state, "
-            "which this version keys by hash bucket — restart from a fresh "
-            "checkpoint"
+            f"checkpoint {checkpoint_dir} holds merge state of layout {found!r}, "
+            "which this version cannot read (it keys state by hash bucket) — "
+            "restart from a fresh checkpoint"
         )
-    if pinned is not None:
-        engine = {v: k for k, v in _MARKER.items()}.get(pinned, pinned)
-        if req in _MARKER and req != engine:
-            raise RuntimeError(
-                f"checkpoint {checkpoint_dir} was started with state engine "
-                f"{pinned!r} but {req!r} was requested — restart from a fresh "
-                "checkpoint to switch engines"
-            )
-        # re-validate (raises if tws pinned but protobuf gone, or unknown)
-        return resolve_state_engine(engine)
-    engine = resolve_state_engine(requested)
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(_MARKER[engine])
-    os.replace(tmp, marker)
-    return engine
 
 
-def accepted_turns(
-    transcripts: DataFrame,
-    watermark: str = "10 minutes",
-    engine: str | None = None,
-) -> DataFrame:
+def accepted_turns(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming transform: transcript stream → accepted-turn stream
-    (deduped, prior-turn-linked, versioned). engine selects the stateful
-    API (resolve_state_engine — TWS by default where supported, both
-    backed by the same merge_turns kernel)."""
-    if resolve_state_engine(engine) == "tws":
-        from .state_merge_tws import accepted_turns_tws
-
-        return accepted_turns_tws(transcripts, watermark=watermark)
+    (deduped, prior-turn-linked, versioned)."""
     return (
         transcripts.withWatermark("ts", watermark)
         .withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(N_BUCKETS)))
@@ -499,11 +444,7 @@ def _turn_triples_array():
     )
 
 
-def conversation_graph_deltas(
-    transcripts: DataFrame,
-    watermark: str = "10 minutes",
-    engine: str | None = None,
-) -> DataFrame:
+def conversation_graph_deltas(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Full streaming transform: transcript stream → graph-delta stream.
 
     Stateful accept (Python, minimal) → triple fan-out (pure Catalyst,
@@ -511,7 +452,7 @@ def conversation_graph_deltas(
     state store; note AQE does not re-plan stateful exchanges — the shuffle-partition
     count fixed at first checkpoint is the scale lever.
     """
-    acc = accepted_turns(transcripts, watermark=watermark, engine=engine)
+    acc = accepted_turns(transcripts, watermark=watermark)
     subj = F.when(
         F.col("kind") == "session_end",
         F.concat(F.lit("test.local.graph.kb.conversation."), F.col("conv_id")),

@@ -503,26 +503,27 @@ def test_pin_state_engine_marker(tmp_path):
     from semstreams_spark.streaming.state_merge import pin_state_engine
 
     ck = str(tmp_path / "ck")
-    eng = pin_state_engine(ck)
-    assert eng == "legacy"  # this image has no protobuf
+    pin_state_engine(ck)
     # the marker names the state layout: state keyed by hash bucket
     assert (tmp_path / "ck" / "_state_engine").read_text() == "legacy-bucketed"
-    assert pin_state_engine(ck) == "legacy"  # restart reuses the pin
-    assert pin_state_engine(ck, "legacy") == "legacy"
-    with pytest.raises(RuntimeError):
-        pin_state_engine(ck, "tws")  # explicit conflicting request is loud
-    # checkpoints of the per-conversation layout fail at start with a
-    # clear message: a "legacy" marker, and a pre-marker checkpoint
-    ck2 = tmp_path / "ck2"
-    ck2.mkdir()
-    (ck2 / "_state_engine").write_text("legacy")
-    ck3 = str(tmp_path / "ck3")
-    os.makedirs(os.path.join(ck3, "offsets"))
-    for old in (str(ck2), ck3):
+    pin_state_engine(ck)  # a restart proceeds and keeps the marker
+    assert (tmp_path / "ck" / "_state_engine").read_text() == "legacy-bucketed"
+    pin_state_engine(None)  # no checkpoint, nothing to check
+    # checkpoints of any other layout fail at start with a clear message
+    # and are left as found: a "tws" or "legacy" marker (per-conversation
+    # state), an unknown marker, and a pre-marker checkpoint (None)
+    for name in ("tws", "legacy", "bogus", None):
+        old = tmp_path / f"ck_{name}"
+        if name:
+            old.mkdir()
+            (old / "_state_engine").write_text(name)
+        else:
+            (old / "offsets").mkdir(parents=True)
         with pytest.raises(RuntimeError, match="restart from a fresh checkpoint"):
-            pin_state_engine(old)
-    assert (ck2 / "_state_engine").read_text() == "legacy"  # left as found
-    assert not os.path.exists(os.path.join(ck3, "_state_engine"))
+            pin_state_engine(str(old))
+        assert os.listdir(old) == ["_state_engine" if name else "offsets"]
+        if name:
+            assert (old / "_state_engine").read_text() == name
 
 
 def test_rule_sql_compiles_subject_pattern(spark):

@@ -119,20 +119,20 @@ def test_pagerank_exact_no_cartesian_blowup(spark):
     assert abs(sum(ranks.values()) - 10**12) < 100  # mass conserved to ulp
 
 
-def test_incoming_top_consolidated_gate_still_works(spark):
-    """q_incoming_top was unregistered in the r4 gate consolidation
-    (J5 stays value-gated via rels_in_entity); the callable remains part
-    of the surface — pin its shape and agreement with the edge table."""
-    import __spark_entry__ as entry
-    from pyspark.sql import functions as F
+def test_source_clustered_operators_have_no_exchange(spark, transcripts_small):
+    """entity_states, graph_nodes and graph_edges compute their LWW
+    winners inside the scan task (unique (conv_id, turn_idx) contract):
+    their plans are Scan → Generate/Project with no shuffle."""
+    from semstreams_spark.operators.merge import (
+        edges_table_source_clustered,
+        entity_states_source_clustered,
+        nodes_table_source_clustered,
+    )
 
-    rows = entry.q_incoming_top(spark, "/root/testdata/sf0.001").collect()
-    assert len(rows) == 20
-    assert rows[0]["n_incoming"] >= rows[-1]["n_incoming"]
-    # counts agree with the mention-triple definition
-    triples = entry.q_triples_extract(spark, "/root/testdata/sf0.001")
-    top_dst = rows[0]["dst"]
-    want = triples.filter(
-        (F.col("predicate") == "conv.turn.mentions") & (F.col("object") == top_dst)
-    ).count()
-    assert rows[0]["n_incoming"] == want
+    for op in (
+        entity_states_source_clustered,
+        nodes_table_source_clustered,
+        edges_table_source_clustered,
+    ):
+        p = _plan(op(transcripts_small))
+        assert "Exchange" not in p, (op.__name__, p)

@@ -271,104 +271,6 @@ def test_observed_source_metrics_per_batch(spark, tmp_path):
         assert m["approx_convs"] >= 1
 
 
-def test_tws_matches_applyinpandaswithstate(spark, tmp_path):
-    """transformWithStateInPandas variant emits the exact same accepted
-    turns (dedup, prior links, versions) as the applyInPandasWithState
-    operator across micro-batches with redelivery.
-
-    The TWS runtime path needs google.protobuf (Spark's state-server
-    protocol), which is absent from this image — skipped here, runs on
-    any cluster with protobuf installed."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithStateInPandas needs protobuf (absent from this runtime)",
-    )
-    from semstreams_spark.streaming.state_merge import accepted_turns
-    from semstreams_spark.streaming.state_merge_tws import accepted_turns_tws
-
-    indir = str(tmp_path / "in")
-    rows1 = _mk_rows("c1", 4, T0) + _mk_rows("c2", 2, T0, "ent_b")
-    rows2 = _mk_rows("c1", 6, T0)[2:]  # turns 2,3 redelivered + fresh 4,5
-    _write_file(indir, "f1.parquet", rows1)
-    _write_file(indir, "f2.parquet", rows2)
-
-    def run(fn, name):
-        out = str(tmp_path / f"out_{name}")
-        ckpt = str(tmp_path / f"ckpt_{name}")
-        stream = read_transcript_stream(spark, indir, max_files_per_trigger=1)
-        q = (
-            fn(stream, watermark="2 days")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # full-schema comparison: both engines share _merge_chunk, so
-        # every column (kind, req_turn_idx, tool included) must agree
-        return sorted(map(tuple, spark.read.parquet(out).collect()))
-
-    aip = run(lambda s, watermark: accepted_turns(s, watermark=watermark, engine="legacy"), "aip")
-    tws = run(accepted_turns_tws, "tws")
-    assert len(tws) == 8  # 4 + 2 + 2 accepted, redelivery dropped
-    assert tws == aip
-
-
-def test_state_engine_resolution(monkeypatch):
-    """TWS is the default engine wherever its protobuf runtime exists;
-    legacy is the fallback and the explicit override. Forcing tws on a
-    runtime without protobuf fails loudly, not silently."""
-    from semstreams_spark.streaming import state_merge, state_merge_tws
-
-    monkeypatch.delenv("SPARK_GRAFT_STATE_ENGINE", raising=False)
-    monkeypatch.setattr(state_merge_tws, "tws_supported", lambda: True)
-    assert state_merge.resolve_state_engine() == "tws"
-    assert state_merge.resolve_state_engine("legacy") == "legacy"
-    monkeypatch.setenv("SPARK_GRAFT_STATE_ENGINE", "legacy")
-    assert state_merge.resolve_state_engine() == "legacy"
-    monkeypatch.delenv("SPARK_GRAFT_STATE_ENGINE")
-
-    monkeypatch.setattr(state_merge_tws, "tws_supported", lambda: False)
-    assert state_merge.resolve_state_engine() == "legacy"
-    with pytest.raises(RuntimeError, match="protobuf"):
-        state_merge.resolve_state_engine("tws")
-    with pytest.raises(ValueError, match="unknown state engine"):
-        state_merge.resolve_state_engine("bogus")
-
-
-def test_tws_not_fooled_by_namespace_protobuf(tmp_path):
-    """Regression: under spark-submit the JVM jars land on the python
-    path and spark-core's Java-side google/protobuf resource directory
-    imports as an EMPTY namespace package — `import google.protobuf`
-    succeeds with no protobuf runtime behind it. tws_supported() must
-    probe a real module (descriptor) so that shape resolves to the
-    legacy engine instead of a TWS job that dies in the pre-init
-    runner. Run in a subprocess so the phantom package never pollutes
-    this process's import state."""
-    import subprocess
-    import sys
-
-    (tmp_path / "google" / "protobuf").mkdir(parents=True)
-    code = (
-        "import google.protobuf\n"  # namespace import must succeed...
-        "from semstreams_spark.streaming.state_merge import resolve_state_engine\n"
-        "from semstreams_spark.streaming.state_merge_tws import tws_supported\n"
-        "assert not tws_supported()\n"  # ...but not count as a runtime
-        "assert resolve_state_engine() == 'legacy'\n"
-        "print('OK')\n"
-    )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, PYTHONPATH=f"{tmp_path}{os.pathsep}{repo}")
-    env.pop("SPARK_GRAFT_STATE_ENGINE", None)
-    out = subprocess.run(
-        [sys.executable, "-c", code], env=env, capture_output=True, text=True
-    )
-    assert out.returncode == 0, out.stderr
-    assert "OK" in out.stdout
-
-
 def test_streaming_rule_stage_kill_resume(spark, tmp_path):
     """R5 end-to-end: rules + cooldown evaluated inside the live delta
     stream's foreachBatch, committed exactly-once; a crash injected after
@@ -428,6 +330,35 @@ def test_streaming_rule_stage_kill_resume(spark, tmp_path):
     assert {e["batch_id"] for e in rule_stage.sink.ledger()} <= {
         e["batch_id"] for e in delta_sink.ledger()
     }
+    # the rules pipeline pins the state layout too, and resumed on it
+    with open(os.path.join(ckpt, "_state_engine")) as fh:
+        assert fh.read() == "legacy-bucketed"
+
+
+@pytest.mark.parametrize("pipeline", ["ingest", "rules"])
+def test_old_layout_checkpoint_fails_at_start(spark, tmp_path, pipeline):
+    """Both pipelines refuse a checkpoint whose merge state is not keyed
+    by hash bucket — a "tws" marker, or no marker but offsets/ — before
+    the query starts, and leave the checkpoint as found."""
+    from semstreams_spark.streaming.rules_stage import build_ingest_with_rules
+
+    indir, outdir = str(tmp_path / "in"), str(tmp_path / "out")
+    _write_file(indir, "f0.parquet", _mk_rows("c0", 3, T0))
+    tws = tmp_path / "ck_tws"
+    tws.mkdir()
+    (tws / "_state_engine").write_text("tws")
+    unmarked = tmp_path / "ck_unmarked"
+    (unmarked / "offsets").mkdir(parents=True)
+    for ckpt in (tws, unmarked):
+        stream = read_transcript_stream(spark, indir)
+        with pytest.raises(RuntimeError, match="restart from a fresh checkpoint"):
+            if pipeline == "ingest":
+                q, _ = build_ingest_stream(stream, outdir, checkpoint_dir=str(ckpt))
+            else:
+                q, _, _ = build_ingest_with_rules(stream, outdir, [], checkpoint_dir=str(ckpt))
+            q.stop()  # reached only when the check is missing
+    assert (tws / "_state_engine").read_text() == "tws"
+    assert sorted(os.listdir(unmarked)) == ["offsets"]
 
 
 def test_delete_rule_events_stream(spark, tmp_path):
@@ -690,127 +621,3 @@ def test_sink_legacy_monolith_checkpoint_migrates(spark, tmp_path):
     sink3 = ExactlyOnceParquetSink(table, compact_every=4)
     assert sorted(sink3._compact_entries()) == list(range(12))
     assert sink3.read(spark).count() == 12
-
-
-def test_tws_processor_logic_with_mock_handle():
-    """Round-5 verdict #3: exercise ConvMergeProcessor's TWS logic layer
-    (state round-trip, timer replace, expired-timer session_end) WITHOUT
-    the protobuf runtime, against a dict-backed StatefulProcessorHandle —
-    output parity with the bucketed legacy _accept_turns on the same
-    chunks, driven through a GroupState stand-in keyed by bucket."""
-    import numpy as np
-    from merge_reference import FakeGroupState
-
-    from semstreams_spark.streaming.state_merge import _accept_turns, decode_frontier
-    from semstreams_spark.streaming.state_merge_tws import ConvMergeProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-        def clear(self):
-            self._v = None
-
-    class FakeListState(FakeValueState):
-        def __init__(self):
-            self._rows = []
-
-        def exists(self):
-            return bool(self._rows)
-
-        def get(self):
-            return iter(list(self._rows))
-
-        def appendList(self, rows):
-            self._rows.extend(tuple(r) for r in rows)
-
-        def clear(self):
-            self._rows = []
-
-    class FakeHandle:
-        def __init__(self):
-            self.states, self.timers = {}, []
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, FakeValueState())
-
-        def getListState(self, name, schema):
-            return self.states.setdefault(name, FakeListState())
-
-        def listTimers(self):
-            return list(self.timers)
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    class FakeTimerValues:
-        def __init__(self, wm):
-            self._wm = wm
-
-        def getCurrentWatermarkInMs(self):
-            return self._wm
-
-    def chunk(rows):
-        return pd.DataFrame(
-            {
-                "conv_id": ["c1"] * len(rows),
-                "turn_idx": np.array([r[0] for r in rows], dtype=np.int32),
-                "role": [r[1] for r in rows],
-                "text": [f"msg {r[0]} @entity:ent_a" for r in rows],
-                "tool": [r[2] for r in rows],
-                "ts": pd.to_datetime([T0 + dt.timedelta(seconds=20 * r[0]) for r in rows]),
-            }
-        )
-
-    # two batches: out-of-order rows, a redelivery (turn 1), a tool turn
-    batch1 = [chunk([(0, "user", None), (2, "assistant", None), (1, "assistant", None)])]
-    batch2 = [chunk([(1, "assistant", None), (3, "tool", "calc"), (4, "user", None)])]
-
-    proc = ConvMergeProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-    tws_out = []
-    for wm, batch in ((0, batch1), (60_000, batch2)):
-        tws_out.extend(proc.handleInputRows(("c1",), iter(batch), FakeTimerValues(wm)))
-    assert len(handle.timers) == 1  # timers REPLACE, never accumulate
-    # batch2: last event time (T0+80s, epoch ms) beats the 60s watermark
-    anchor_ms = int(pd.Timestamp(T0 + dt.timedelta(seconds=80)).value // 1_000_000)
-    assert handle.timers[0] == anchor_ms + 3_600_000
-
-    gs = FakeGroupState()
-    leg_out = list(_accept_turns((7,), iter(batch1), gs.begin(0)))
-    leg_out.extend(_accept_turns((7,), iter(batch2), gs.begin(60_000)))
-    # the bucket's timeout is its one conversation's timer, the TWS timer
-    assert gs.timeout == handle.timers[0]
-    assert list(decode_frontier(gs.get[0]).conv_id) == ["c1"]
-
-    t = pd.concat(tws_out, ignore_index=True)
-    l = pd.concat(leg_out, ignore_index=True)
-    pd.testing.assert_frame_equal(t, l)
-    assert list(t["turn_idx"]) == [0, 1, 2, 3, 4]  # redelivery deduped
-    assert list(t["version"]) == [1, 2, 3, 4, 5]
-
-    # expired timer: session_end emitted once, state cleared
-    ended = list(proc.handleExpiredTimer(("c1",), FakeTimerValues(10**12), object()))
-    assert len(ended) == 1 and ended[0]["kind"][0] == "session_end"
-    assert ended[0]["text"][0] == "5"  # n_turns summary payload
-    assert not proc._scalars.exists() and not proc._seen.exists()
-    # Spark calls a timed-out bucket once its timeout is below the watermark
-    wm = gs.timeout + 1
-    leg_end = list(_accept_turns((7,), iter([]), gs.begin(wm, timed_out=True)))
-    pd.testing.assert_frame_equal(ended[0], leg_end[0])
-    assert not gs.exists  # the bucket's last conversation evicted
-    # a second expiry with no state emits nothing
-    assert list(proc.handleExpiredTimer(("c1",), FakeTimerValues(10**12), object())) == []

@@ -2,15 +2,6 @@
 jobs/ingest_job.py via spark-submit --py-files from OUTSIDE the repo
 (so the package can only come from the zip), and check the committed
 output.
-
-This caught a real bug: under spark-submit the JVM jars join the python
-path and spark-core's Java-side google/protobuf resource directory
-imports as an empty namespace package, which made tws_supported()
-false-positive and start a transformWithStateInPandas job whose
-driver-side pre-init runner cannot import --py-files modules — the job
-died at start. tws_supported() now probes google.protobuf.descriptor
-(see test_tws_not_fooled_by_namespace_protobuf for the unit-level
-pin); this test exercises the full spark-submit path.
 """
 
 from __future__ import annotations
