@@ -22,17 +22,23 @@ from pyspark.sql import functions as F
 from semstreams_spark import oracles
 from semstreams_spark.datagen import ensure_transcripts, sf_from_dir, transcripts_path, aliases_path
 from semstreams_spark.extract import extract_triples
-from semstreams_spark.extract.triples import MENTION_RE
+from semstreams_spark.extract.triples import (
+    IN_EDGE,
+    MENTIONS_EDGE,
+    conversation_id,
+    entity_id,
+    entity_id_of,
+    mention_ids,
+    mention_names,
+    node_type,
+    turn_subject,
+)
 from semstreams_spark.operators import entity_states, nodes_table, edges_table
 from semstreams_spark.operators.merge import (
     edges_table_source_clustered,
     entity_states_source_clustered,
     nodes_table_source_clustered,
 )
-
-# mention object ids are the entity name behind this fixed prefix — the
-# direct-derivation helpers below rebuild them without the triple fan-out
-ENTITY_PREFIX = "test.local.graph.kb.entity."
 from semstreams_spark.operators.joins import tool_invocation_correlation, turn_with_prior
 from semstreams_spark.operators.sessions import sessionize
 from semstreams_spark.operators.windows import entity_cooccurrence, node_degree_tumbling
@@ -97,33 +103,18 @@ def q_edges_resolved(spark, sf_dir):
     the full triple fan-out, without materializing it (oracle-gated)."""
     t = _transcripts(spark, sf_dir)
     al = _aliases(spark, sf_dir).select(
-        F.concat(F.lit("test.local.graph.kb.entity."), F.col("alias")).alias("alias_id"),
-        F.concat(F.lit("test.local.graph.kb.entity."), F.col("entity_name")).alias("canonical_id"),
+        entity_id(F.col("alias")).alias("alias_id"),
+        entity_id(F.col("entity_name")).alias("canonical_id"),
     )
-    r2 = lambda dst, et: F.struct(dst.alias("dst"), et.alias("edge_type"))  # noqa: E731
+    r2 = lambda dst, et: F.struct(dst.alias("dst"), F.lit(et).alias("edge_type"))  # noqa: E731
     empty = F.array().cast("array<struct<dst:string,edge_type:string>>")
-    mention_ids = F.transform(
-        F.regexp_extract_all(F.col("text"), F.lit(MENTION_RE), F.lit(1)),
-        lambda m: F.concat(F.lit(ENTITY_PREFIX), m),
-    )
     refs = F.concat(
-        F.array(
-            r2(
-                F.concat(F.lit("test.local.graph.kb.conversation."), F.col("conv_id")),
-                F.lit("in_turn"),
-            )
-        ),
-        F.coalesce(
-            F.transform(mention_ids, lambda m: r2(m, F.lit("mentions_turn"))), empty
-        ),
+        F.array(r2(conversation_id(), IN_EDGE)),
+        F.coalesce(F.transform(mention_ids(), lambda m: r2(m, MENTIONS_EDGE)), empty),
     )
-    rel = t.select(
-        F.concat(
-            F.lit("test.local.conv."), F.col("conv_id"), F.lit(".turn."), F.col("turn_idx").cast("string")
-        ).alias("src"),
-        F.explode(refs).alias("r"),
-        "ts",
-    ).select("src", F.col("r.dst").alias("dst"), F.col("r.edge_type").alias("edge_type"), "ts")
+    rel = t.select(turn_subject().alias("src"), F.explode(refs).alias("r"), "ts").select(
+        "src", F.col("r.dst").alias("dst"), F.col("r.edge_type").alias("edge_type"), "ts"
+    )
     res = (
         rel.join(F.broadcast(al), rel["dst"] == al["alias_id"], "left")
         .select(
@@ -152,16 +143,16 @@ def q_sessions(spark, sf_dir):
 
 def _mention_rows(spark, sf_dir):
     """One row per mention OCCURRENCE, derived directly from transcripts:
-    (conv_id, entity name, full entity id, turn subject, ts, seq). Row-for-
-    row identical to filtering extract_triples to conv.turn.mentions (the
-    mention object is ENTITY_PREFIX + name and names match [a-z0-9_]+, so
-    the id↔name round-trip is the identity) — without materializing the
+    (conv_id, mention name ``e``, text, ts, seq, turn_idx). Row-for-row
+    identical to filtering extract_triples to its mention triples: the
+    object is ``entity_id(e)`` and the subject ``turn_subject()`` of the
+    same row (both from ``extract.triples``) — without materializing the
     5-7× triple fan-out and its text payloads (guide §2.3: shuffle/derive
     fewer bytes)."""
     t = _transcripts(spark, sf_dir)
     return t.select(
         "conv_id",
-        F.explode(F.regexp_extract_all(F.col("text"), F.lit(MENTION_RE), F.lit(1))).alias("e"),
+        F.explode(mention_names()).alias("e"),
         "text",
         "ts",
         F.col("turn_idx").cast("int").alias("seq"),
@@ -169,15 +160,15 @@ def _mention_rows(spark, sf_dir):
     )
 
 
-def q_degree_tumbling(spark, sf_dir):
-    m = _mention_rows(spark, sf_dir).select(
-        F.concat(F.lit(ENTITY_PREFIX), F.col("e")).alias("src"),
-        F.concat(
-            F.lit("test.local.conv."), F.col("conv_id"), F.lit(".turn."), F.col("turn_idx").cast("string")
-        ).alias("dst"),
-        "ts",
+def _mention_edges(spark, sf_dir):
+    """(src = entity id, dst = turn subject, ts) per mention occurrence."""
+    return _mention_rows(spark, sf_dir).select(
+        entity_id(F.col("e")).alias("src"), turn_subject().alias("dst"), "ts"
     )
-    return node_degree_tumbling(m, "5 minutes")
+
+
+def q_degree_tumbling(spark, sf_dir):
+    return node_degree_tumbling(_mention_edges(spark, sf_dir), "5 minutes")
 
 
 def q_cooccur_5min(spark, sf_dir):
@@ -471,14 +462,7 @@ def q_paths_2hop(spark, sf_dir):
 def q_sliding_degree(spark, sf_dir):
     from semstreams_spark.operators.windows import node_degree_sliding
 
-    m = _mention_rows(spark, sf_dir).select(
-        F.concat(F.lit(ENTITY_PREFIX), F.col("e")).alias("src"),
-        F.concat(
-            F.lit("test.local.conv."), F.col("conv_id"), F.lit(".turn."), F.col("turn_idx").cast("string")
-        ).alias("dst"),
-        "ts",
-    )
-    return node_degree_sliding(m, "10 minutes", "5 minutes")
+    return node_degree_sliding(_mention_edges(spark, sf_dir), "10 minutes", "5 minutes")
 
 
 def q_pagerank_entities(spark, sf_dir):
@@ -821,13 +805,11 @@ def q_entity_delete(spark, sf_dir):
     active, edges survive); version bumps per tombstone."""
     from semstreams_spark.operators.mutations import edges_after_deletes, nodes_with_status
 
-    men = _mention_rows(spark, sf_dir).select(
-        F.concat(F.lit(ENTITY_PREFIX), F.col("e")).alias("id"), "ts", "seq"
-    )
+    men = _mention_rows(spark, sf_dir).select(entity_id(F.col("e")).alias("id"), "ts", "seq")
     nodes = (
         men.groupBy("id")
         .agg(F.count_distinct("ts", "seq").alias("version"), F.max("ts").alias("updated_at"))
-        .withColumn("type", F.split(F.col("id"), r"\.")[4])
+        .withColumn("type", node_type(F.col("id")))
     )
     ents = men.select(F.col("id").alias("entity_id")).distinct()
     num = F.element_at(F.split(F.col("entity_id"), "_"), -1).try_cast("int")
@@ -867,11 +849,7 @@ def q_spatial_bbox(spark, sf_dir):
     from semstreams_spark.operators.textops import geo_bin, synthetic_coords
     from semstreams_spark.plans.api import GraphQueryAPI
 
-    ents = (
-        _mention_rows(spark, sf_dir)
-        .select(F.concat(F.lit(ENTITY_PREFIX), F.col("e")).alias("id"))
-        .distinct()
-    )
+    ents = _mention_rows(spark, sf_dir).select(entity_id(F.col("e")).alias("id")).distinct()
     coords = synthetic_coords(ents, "id")
     api = GraphQueryAPI(nodes=coords, edges=None, triples=None)
     out = api.query_spatial(*SPATIAL_BBOX)
@@ -980,7 +958,7 @@ def q_query_temporal(spark, sf_dir):
     )
 
 
-RELS_ENTITY = "test.local.graph.kb.entity.ent_001"
+RELS_ENTITY = entity_id_of("ent_001")
 
 
 def q_rels_in_entity(spark, sf_dir):

@@ -1,3 +1,3 @@
-from .triples import extract_triples, extract_triples_pandas_udf, TRIPLE_COLS
+from .triples import extract_triples
 
-__all__ = ["extract_triples", "extract_triples_pandas_udf", "TRIPLE_COLS"]
+__all__ = ["extract_triples"]

@@ -1,4 +1,5 @@
-"""Transcript-turn → semantic-triple extraction.
+"""Transcript-turn → semantic-triple extraction: the one module that knows
+the turn → graph contract.
 
 Re-expresses the reference's ``EntityPayload.Triples()`` contract
 (``message/entity_payload.go:109-163``): each incoming record emits an
@@ -25,53 +26,113 @@ confidence=1.0 (``entity_payload.go:119-122``), context=conv_id
 (correlation id, ``message/triple.go:67-71``), and an internal ``seq``
 (= turn_idx) used as the deterministic LWW tie-break.
 
-Two implementations with identical output:
+:func:`extract_triples` is the one implementation: Catalyst built-ins,
+one scan, one explode, whole-stage codegen. Every other operator that
+derives ids, triples or edges from transcript rows (the streaming
+fan-out, the source-clustered entity/node/edge operators, the
+mention-derived queries) is built from the Column builders below, which
+read the transcript columns of the row in scope:
 
-- :func:`extract_triples` — pure Catalyst built-ins, single scan, one
-  explode; whole-stage-codegen'd (the fast path used by bench).
-- :func:`extract_triples_pandas_udf` — vectorized Arrow ``mapInPandas``
-  (the north-star-mandated Arrow UDF path); used by the streaming
-  pipeline and cross-checked against the built-in variant in tests.
+- :func:`turn_subject` — the turn subject;
+- :func:`conversation_id` — the ``conv.turn.in`` object;
+- :func:`entity_id` (Column) / :func:`entity_id_of` (str) — the entity id
+  of a mention name;
+- :func:`mention_names` / :func:`mention_ids` — the ``@entity:`` names in
+  ``text``, in order, repeats kept / their entity ids;
+- :func:`property_triples` — triples 1-5 as
+  ``array<struct<predicate, object, object_type>>``; :func:`no_triples`
+  is the empty array of that type;
+- :func:`mention_triple` / :func:`mention_triples` — triple 6 for one
+  entity id / for every mention of the row;
+- :func:`node_type` — a node id's type, its 5th dot-part, else ``entity``
+  (``messagemanager/processor.go:517-526``).
+
+``IN_EDGE`` and ``MENTIONS_EDGE`` are the edge types of the two
+relationship predicates (``operators.merge.predicate_to_edge_type``).
 """
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MENTION_RE = "@entity:([a-z0-9_]+)"
+MENTIONS = "conv.turn.mentions"
+IN_EDGE = "in_turn"
+MENTIONS_EDGE = "mentions_turn"
+SOURCE = "transcript_extractor"
 
-TRIPLE_COLS = [
-    "subject",
-    "predicate",
-    "object",
-    "object_type",
-    "source",
-    "ts",
-    "confidence",
-    "context",
-    "seq",
-]
-
-TRIPLE_SCHEMA = (
-    "subject string, predicate string, object string, object_type string, "
-    "source string, ts timestamp, confidence double, context string, seq int"
-)
-
-_SOURCE = "transcript_extractor"
+_ENTITY_ID_PREFIX = "test.local.graph.kb.entity."
+_TRIPLES_TYPE = "array<struct<predicate:string,object:string,object_type:string>>"
 
 
-def _turn_subject():
+def turn_subject() -> Column:
     return F.concat(
         F.lit("test.local.conv."),
         F.col("conv_id"),
         F.lit(".turn."),
         F.col("turn_idx").cast("string"),
     )
+
+
+def conversation_id() -> Column:
+    return F.concat(F.lit("test.local.graph.kb.conversation."), F.col("conv_id"))
+
+
+def entity_id(name: Column) -> Column:
+    return F.concat(F.lit(_ENTITY_ID_PREFIX), name)
+
+
+def entity_id_of(name: str) -> str:
+    return _ENTITY_ID_PREFIX + name
+
+
+def mention_names() -> Column:
+    return F.regexp_extract_all(F.col("text"), F.lit(MENTION_RE), F.lit(1))
+
+
+def mention_ids() -> Column:
+    return F.transform(mention_names(), entity_id)
+
+
+def node_type(node_id: Column) -> Column:
+    # try_element_at + coalesce: an id with fewer than 5 dot-parts falls
+    # back to 'entity' like the reference instead of raising
+    # INVALID_ARRAY_INDEX under ANSI mode
+    return F.coalesce(F.try_element_at(F.split(node_id, r"\."), F.lit(5)), F.lit("entity"))
+
+
+def _t3(pred: Column, obj: Column, otype: Column) -> Column:
+    return F.struct(pred.alias("predicate"), obj.alias("object"), otype.alias("object_type"))
+
+
+def no_triples() -> Column:
+    return F.array().cast(_TRIPLES_TYPE)
+
+
+def property_triples() -> Column:
+    lit = F.lit
+    base = F.array(
+        _t3(lit("rdf:type"), lit("conv.turn"), lit("string")),
+        _t3(lit("conv.turn.role"), F.col("role"), lit("string")),
+        _t3(lit("conv.turn.text"), F.col("text"), lit("string")),
+        _t3(lit("conv.turn.in"), conversation_id(), lit("entity_ref")),
+    )
+    tool_arr = F.when(
+        F.col("tool").isNotNull(),
+        F.array(_t3(lit("conv.turn.tool"), F.col("tool"), lit("string"))),
+    ).otherwise(no_triples())
+    return F.concat(base, tool_arr)
+
+
+def mention_triple(entity: Column) -> Column:
+    return _t3(F.lit(MENTIONS), entity, F.lit("entity_ref"))
+
+
+def mention_triples() -> Column:
+    # entity_id inside the one lambda, not a transform over mention_ids():
+    # a nested transform would be a different plan
+    return F.transform(mention_names(), lambda m: mention_triple(entity_id(m)))
 
 
 def extract_triples(transcripts: DataFrame) -> DataFrame:
@@ -81,38 +142,10 @@ def extract_triples(transcripts: DataFrame) -> DataFrame:
     Catalyst keeps the whole stage in codegen and the parquet scan reads
     only the six input columns once.
     """
-    t3 = lambda pred, obj, otype: F.struct(  # noqa: E731
-        pred.alias("predicate"), obj.alias("object"), otype.alias("object_type")
-    )
-    lit = F.lit
-
-    base = F.array(
-        t3(lit("rdf:type"), lit("conv.turn"), lit("string")),
-        t3(lit("conv.turn.role"), F.col("role"), lit("string")),
-        t3(lit("conv.turn.text"), F.col("text"), lit("string")),
-        t3(
-            lit("conv.turn.in"),
-            F.concat(lit("test.local.graph.kb.conversation."), F.col("conv_id")),
-            lit("entity_ref"),
-        ),
-    )
-    tool_arr = F.when(
-        F.col("tool").isNotNull(),
-        F.array(t3(lit("conv.turn.tool"), F.col("tool"), lit("string"))),
-    ).otherwise(F.array().cast("array<struct<predicate:string,object:string,object_type:string>>"))
-    mention_arr = F.transform(
-        F.regexp_extract_all(F.col("text"), F.lit(MENTION_RE), F.lit(1)),
-        lambda m: t3(
-            lit("conv.turn.mentions"),
-            F.concat(lit("test.local.graph.kb.entity."), m),
-            lit("entity_ref"),
-        ),
-    )
-
     return (
         transcripts.select(
-            _turn_subject().alias("subject"),
-            F.explode(F.concat(base, tool_arr, mention_arr)).alias("t"),
+            turn_subject().alias("subject"),
+            F.explode(F.concat(property_triples(), mention_triples())).alias("t"),
             F.col("ts"),
             F.col("conv_id").alias("context"),
             F.col("turn_idx").cast("int").alias("seq"),
@@ -122,100 +155,10 @@ def extract_triples(transcripts: DataFrame) -> DataFrame:
             F.col("t.predicate").alias("predicate"),
             F.col("t.object").alias("object"),
             F.col("t.object_type").alias("object_type"),
-            F.lit(_SOURCE).alias("source"),
+            F.lit(SOURCE).alias("source"),
             "ts",
             F.lit(1.0).alias("confidence"),
             "context",
             "seq",
         )
     )
-
-
-_MENTION_CRE = re.compile(MENTION_RE)
-
-
-def _extract_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized pandas extraction for one Arrow batch."""
-    subj = "test.local.conv." + pdf["conv_id"] + ".turn." + pdf["turn_idx"].astype(str)
-    n = len(pdf)
-
-    frames = []
-
-    def emit(mask, predicate, obj):
-        frames.append(
-            pd.DataFrame(
-                {
-                    "subject": subj[mask],
-                    "predicate": predicate,
-                    "object": obj[mask] if hasattr(obj, "__getitem__") and not isinstance(obj, str) else obj,
-                    "object_type": "string",
-                    "ts": pdf["ts"][mask],
-                    "context": pdf["conv_id"][mask],
-                    "seq": pdf["turn_idx"][mask],
-                }
-            )
-        )
-
-    all_mask = pd.Series(True, index=pdf.index)
-    emit(all_mask, "rdf:type", "conv.turn")
-    emit(all_mask, "conv.turn.role", pdf["role"])
-    emit(all_mask, "conv.turn.text", pdf["text"])
-    tool_mask = pdf["tool"].notna()
-    if tool_mask.any():
-        emit(tool_mask, "conv.turn.tool", pdf["tool"])
-    conv_ref = pd.DataFrame(
-        {
-            "subject": subj,
-            "predicate": "conv.turn.in",
-            "object": "test.local.graph.kb.conversation." + pdf["conv_id"],
-            "object_type": "entity_ref",
-            "ts": pdf["ts"],
-            "context": pdf["conv_id"],
-            "seq": pdf["turn_idx"],
-        }
-    )
-    frames.append(conv_ref)
-
-    # mentions: str.findall then explode (vectorized C path in pandas)
-    mentions = pdf["text"].str.findall(_MENTION_CRE)
-    mcount = mentions.str.len()
-    has_m = mcount > 0
-    if has_m.any():
-        idx = pdf.index[has_m].repeat(mcount[has_m])
-        flat = [name for lst in mentions[has_m] for name in lst]
-        mdf = pd.DataFrame(
-            {
-                "subject": subj.loc[idx].values,
-                "predicate": "conv.turn.mentions",
-                "object": ["test.local.graph.kb.entity." + x for x in flat],
-                "object_type": "entity_ref",
-                "ts": pdf["ts"].loc[idx].values,
-                "context": pdf["conv_id"].loc[idx].values,
-                "seq": pdf["turn_idx"].loc[idx].values,
-            }
-        )
-        frames.append(mdf)
-
-    out = pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
-    if len(out) == 0:
-        return pd.DataFrame(columns=TRIPLE_COLS)
-    out["source"] = _SOURCE
-    out["confidence"] = 1.0
-    out["seq"] = out["seq"].astype("int32")
-    _ = n
-    return out[TRIPLE_COLS]
-
-
-def extract_triples_pandas_udf(transcripts: DataFrame) -> DataFrame:
-    """Arrow-batched mapInPandas extraction (north-star UDF path).
-
-    Output is identical to :func:`extract_triples`; verified by
-    ``tests/test_extract.py``.
-    """
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _extract_pdf(pdf)
-
-    return transcripts.mapInPandas(gen, schema=TRIPLE_SCHEMA)

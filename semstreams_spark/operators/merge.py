@@ -32,6 +32,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..extract.triples import (
+    IN_EDGE,
+    MENTIONS_EDGE,
+    SOURCE,
+    conversation_id,
+    mention_ids,
+    mention_triple,
+    no_triples,
+    node_type,
+    property_triples,
+    turn_subject,
+)
+
 # Deterministic LWW ordering contract: (ts, seq=turn_idx, object),
 # greatest wins — shared by entity_states and the DuckDB oracles.
 
@@ -79,11 +92,13 @@ def entity_states_source_clustered(transcripts: DataFrame) -> DataFrame:
     ``max_by(…, struct(ts, seq, object))`` winner is computable inside the
     scan task, with no shuffle:
 
-    - the singleton predicates (rdf:type/role/text/in/tool) are their own
-      winners;
-    - all ``conv.turn.mentions`` triples of a turn share ``(ts, seq)``, so
-      the winner is the greatest ``object`` string — ``array_max`` over the
-      mention ids (same binary string ordering as the aggregate).
+    - the singleton predicates are their own winners: the row's
+      ``property_triples()``;
+    - all mention triples of a turn share ``(ts, seq)``, so the winner is
+      ``mention_triple`` of the greatest id — ``array_max`` over
+      ``mention_ids()`` (same binary string ordering as the aggregate).
+
+    Ids and triples come from the builders in ``extract.triples``.
 
     Output schema and rows are identical to the aggregated form (parity
     test ``tests/test_merge.py::test_entity_states_source_clustered_parity``,
@@ -94,41 +109,12 @@ def entity_states_source_clustered(transcripts: DataFrame) -> DataFrame:
     SortAggregate → Exchange → Sort → SortAggregate) — the whole sort +
     shuffle of the 5-7× triple fan-out (with text payloads) is gone.
     """
-    from ..extract.triples import MENTION_RE
-
-    t3 = lambda pred, obj, otype: F.struct(  # noqa: E731
-        pred.alias("predicate"), obj.alias("object"), otype.alias("object_type")
-    )
-    lit = F.lit
-    base = F.array(
-        t3(lit("rdf:type"), lit("conv.turn"), lit("string")),
-        t3(lit("conv.turn.role"), F.col("role"), lit("string")),
-        t3(lit("conv.turn.text"), F.col("text"), lit("string")),
-        t3(
-            lit("conv.turn.in"),
-            F.concat(lit("test.local.graph.kb.conversation."), F.col("conv_id")),
-            lit("entity_ref"),
-        ),
-    )
-    empty = F.array().cast("array<struct<predicate:string,object:string,object_type:string>>")
-    tool_arr = F.when(
-        F.col("tool").isNotNull(),
-        F.array(t3(lit("conv.turn.tool"), F.col("tool"), lit("string"))),
-    ).otherwise(empty)
-    mention_ids = F.transform(
-        F.regexp_extract_all(F.col("text"), F.lit(MENTION_RE), F.lit(1)),
-        lambda m: F.concat(lit("test.local.graph.kb.entity."), m),
-    )
-    mention_arr = F.when(
-        F.size(mention_ids) > 0,
-        F.array(t3(lit("conv.turn.mentions"), F.array_max(mention_ids), lit("entity_ref"))),
-    ).otherwise(empty)
+    ids = mention_ids()
+    winner = F.when(F.size(ids) > 0, F.array(mention_triple(F.array_max(ids)))).otherwise(no_triples())
     return (
         transcripts.select(
-            F.concat(
-                lit("test.local.conv."), F.col("conv_id"), lit(".turn."), F.col("turn_idx").cast("string")
-            ).alias("subject"),
-            F.explode(F.concat(base, tool_arr, mention_arr)).alias("t"),
+            turn_subject().alias("subject"),
+            F.explode(F.concat(property_triples(), winner)).alias("t"),
             "ts",
             F.col("conv_id").alias("context"),
         )
@@ -137,7 +123,7 @@ def entity_states_source_clustered(transcripts: DataFrame) -> DataFrame:
             F.col("t.predicate").alias("predicate"),
             F.col("t.object").alias("object"),
             F.col("t.object_type").alias("object_type"),
-            F.lit("transcript_extractor").alias("source"),
+            F.lit(SOURCE).alias("source"),
             "ts",
             F.lit(1.0).alias("confidence"),
             "context",
@@ -158,13 +144,7 @@ def nodes_table(triples: DataFrame) -> DataFrame:
             F.count_distinct("ts", "seq").alias("version"),
             F.max("ts").alias("updated_at"),
         )
-        # try_element_at + coalesce: an id with fewer than 5 dot-parts
-        # falls back to 'entity' like the reference (processor.go:517-526)
-        # instead of raising INVALID_ARRAY_INDEX under ANSI mode
-        .withColumn(
-            "type",
-            F.coalesce(F.try_element_at(F.split(F.col("id"), r"\."), F.lit(5)), F.lit("entity")),
-        )
+        .withColumn("type", node_type(F.col("id")))
         .withColumn("status", F.lit("active"))
         .select("id", "type", "status", "version", "updated_at")
     )
@@ -177,12 +157,9 @@ def nodes_table_source_clustered(transcripts: DataFrame) -> DataFrame:
     so per-node aggregates collapse per input row — ``version`` (distinct
     ``(ts, seq)`` events) is exactly 1 and ``updated_at`` is the row's own
     ``ts``. Parity-tested + gated (``graph_nodes``)."""
-    node_id = F.concat(
-        F.lit("test.local.conv."), F.col("conv_id"), F.lit(".turn."), F.col("turn_idx").cast("string")
-    )
     return transcripts.select(
-        node_id.alias("id"),
-        F.coalesce(F.try_element_at(F.split(node_id, r"\."), F.lit(5)), F.lit("entity")).alias("type"),
+        turn_subject().alias("id"),
+        node_type(turn_subject()).alias("type"),
         F.lit("active").alias("status"),
         F.lit(1).cast("long").alias("version"),
         F.col("ts").alias("updated_at"),
@@ -196,39 +173,23 @@ def edges_table_source_clustered(transcripts: DataFrame) -> DataFrame:
     group lives inside one input row — the in-edge is a singleton and each
     distinct mention id aggregates its occurrence count within the row's
     own mention array. Parity-tested + gated (``graph_edges``)."""
-    from ..extract.triples import MENTION_RE
-
-    mention_ids = F.transform(
-        F.regexp_extract_all(F.col("text"), F.lit(MENTION_RE), F.lit(1)),
-        lambda m: F.concat(F.lit("test.local.graph.kb.entity."), m),
-    )
-    etype = lambda s: F.lit(s)  # noqa: E731
+    ids = mention_ids()
     e3 = lambda dst, et, n: F.struct(  # noqa: E731
-        dst.alias("dst"), et.alias("edge_type"), n.alias("n_obs")
+        dst.alias("dst"), F.lit(et).alias("edge_type"), n.alias("n_obs")
     )
     empty = F.array().cast("array<struct<dst:string,edge_type:string,n_obs:bigint>>")
-    in_edge = e3(
-        F.concat(F.lit("test.local.graph.kb.conversation."), F.col("conv_id")),
-        etype("in_turn"),
-        F.lit(1).cast("long"),
-    )
-    md = F.array_distinct(mention_ids)
+    in_edge = e3(conversation_id(), IN_EDGE, F.lit(1).cast("long"))
+    md = F.array_distinct(ids)
     mention_edges = F.when(
         F.size(md) > 0,
         F.transform(
             md,
-            lambda m: e3(
-                m,
-                etype("mentions_turn"),
-                F.size(F.filter(mention_ids, lambda x: x == m)).cast("long"),
-            ),
+            lambda m: e3(m, MENTIONS_EDGE, F.size(F.filter(ids, lambda x: x == m)).cast("long")),
         ),
     ).otherwise(empty)
     return (
         transcripts.select(
-            F.concat(
-                F.lit("test.local.conv."), F.col("conv_id"), F.lit(".turn."), F.col("turn_idx").cast("string")
-            ).alias("src"),
+            turn_subject().alias("src"),
             F.explode(F.concat(F.array(in_edge), mention_edges)).alias("e"),
             "ts",
         )

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..extract import extract_triples
+from ..extract.triples import MENTIONS, extract_triples
 from ..operators.merge import edges_table, entity_states, nodes_table
 
 
@@ -72,7 +72,7 @@ def register_graph_views(
         from ..operators.windows import node_degree_tumbling
         from ..rules.engine import DEFAULT_RULES, evaluate_rules
 
-        mentions = triples.filter(F.col("predicate") == "conv.turn.mentions").select(
+        mentions = triples.filter(F.col("predicate") == MENTIONS).select(
             F.col("object").alias("src"), F.col("subject").alias("dst"), "ts"
         )
         views.update(

@@ -12,8 +12,9 @@ Mirrors the reference's rule processor semantics:
 - numeric comparisons coerce both sides to double when both parse
   (``evaluator.go:294-323``) — reproduced with try_cast
 - cooldown: suppress re-fires of (rule, entity) within the cooldown
-  interval — batch form via lag(ts) filter; streaming form via keyed
-  state (streaming/state_merge.py)
+  interval, greedy from the last fire — ``apply_cooldown``; the streaming
+  rule stage seeds it with each key's last fire
+  (streaming/rules_stage.py)
 
 The engine evaluates rules against the *flat* entity-state table
 (subject, predicate, object, ts) — one filter per condition on the
@@ -195,9 +196,7 @@ def apply_cooldown(
     A greedy scan is inherently sequential per key, so this is an
     Arrow-batched ``applyInPandas`` over (rule_id, entity_id) groups —
     groups are tiny (alerts per entity), the shuffle is one hash exchange
-    on the key, and the scan is O(group). The window-function variant
-    ``apply_cooldown_lag`` below stays pure-Catalyst but implements the
-    weaker previous-EVENT semantics.
+    on the key, and the scan is O(group).
     """
     import numpy as np
     import pandas as pd
@@ -239,41 +238,6 @@ def apply_cooldown(
         ev.groupBy("rule_id", "entity_id")
         .applyInPandas(scan, ev.schema)
         .drop("_last_fire")
-    )
-
-
-def apply_cooldown_lag(events: DataFrame, rules: list[Rule]) -> DataFrame:
-    """Lag-based cooldown approximation: keeps an event iff it is ≥
-    cooldown after the PREVIOUS EVENT (fired or not) — a muted event
-    pushes the mute window forward, unlike the reference's greedy
-    semantics (events at t=0/1800/3600, cooldown 3600 → fires {0} here
-    vs {0, 3600} greedy). Kept because it is pure-Catalyst (one window
-    function, no Python) and equivalent whenever per-key events are
-    sparser than the cooldown; use ``apply_cooldown`` for parity.
-    """
-    from pyspark.sql import Window
-
-    cd = {r.id: r.cooldown_seconds for r in rules}
-    if not any(cd.values()):
-        return events
-    cd_col = F.coalesce(
-        *[F.when(F.col("rule_id") == rid, F.lit(sec)) for rid, sec in cd.items()],
-        F.lit(0),
-    )
-    w = Window.partitionBy("rule_id", "entity_id").orderBy("ts")
-    # greedy mute: an event fires iff it is ≥ cooldown after the previous
-    # FIRED event. Exact greedy semantics need a running scan; for the
-    # common case (events per key sparse vs cooldown) the lag test is
-    # equivalent and stays in Catalyst.
-    prev_ts = F.lag("ts").over(w)
-    gap_ok = prev_ts.isNull() | (
-        F.timestamp_diff("SECOND", prev_ts, F.col("ts")) >= cd_col
-    )
-    return (
-        events.withColumn("_cd", cd_col)
-        .withColumn("_ok", gap_ok)  # window fn must live in a projection
-        .filter((F.col("_cd") == 0) | F.col("_ok"))
-        .drop("_cd", "_ok")
     )
 
 

@@ -1,7 +1,8 @@
 """End-to-end streaming ingest pipeline.
 
-SURVEY §3.1 restated: readStream(transcripts) → watermark → triple
-extraction (Arrow UDF) → per-conversation stateful merge → exactly-once
+SURVEY §3.1 restated: readStream(transcripts) → watermark →
+per-conversation stateful accept (bucketed ``applyInPandasWithState``) →
+Catalyst triple fan-out (the ``extract.triples`` builders) → exactly-once
 sink; windowed aggregates and session windows run as parallel stages off
 the same source.
 
@@ -19,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..extract.triples import mention_names
 from .sink import ExactlyOnceParquetSink
 from .state_merge import conversation_graph_deltas, pin_state_engine
 
@@ -141,13 +143,7 @@ def windowed_degree_stream(
 ) -> DataFrame:
     """Streaming tumbling-window mention in-degree (A6) off the raw stream —
     pure built-ins end-to-end (no Python in this branch)."""
-    from ..extract.triples import MENTION_RE
-
-    mentions = transcripts.select(
-        "conv_id",
-        "ts",
-        F.explode(F.regexp_extract_all("text", F.lit(MENTION_RE), F.lit(1))).alias("entity"),
-    )
+    mentions = transcripts.select("conv_id", "ts", F.explode(mention_names()).alias("entity"))
     return (
         mentions.withWatermark("ts", watermark)
         .groupBy(F.window("ts", width).alias("w"), "entity")

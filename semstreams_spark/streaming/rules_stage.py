@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..extract.triples import MENTIONS
 from ..operators.mutations import deletion_events
 from ..rules.engine import Rule, apply_cooldown, evaluate_rules
 from .sink import ExactlyOnceParquetSink
@@ -68,7 +69,7 @@ def rule_states_view(deltas: DataFrame) -> DataFrame:
     entity-level view)."""
     t = deltas.filter(F.col("kind") == "triple")
     turn_view = t.select("subject", "predicate", "object", "ts")
-    entity_view = t.filter(F.col("predicate") == "conv.turn.mentions").select(
+    entity_view = t.filter(F.col("predicate") == MENTIONS).select(
         F.col("object").alias("subject"),
         F.lit(ENTITY_MENTIONED).alias("predicate"),
         F.col("subject").alias("object"),

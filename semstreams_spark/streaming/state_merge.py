@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import BinaryType, StructField, StructType
 
-from ..extract.triples import MENTION_RE
+from ..extract.triples import SOURCE, conversation_id, mention_triples, property_triples, turn_subject
 
 ACCEPTED_SCHEMA = (
     "kind string, conv_id string, turn_idx int, role string, text string, "
@@ -404,72 +404,32 @@ def accepted_turns(transcripts: DataFrame, watermark: str = "10 minutes") -> Dat
     )
 
 
-def _turn_triples_array():
-    """Catalyst expression: array<struct<predicate,object,object_type>>
-    for one accepted row — the standard extraction contract for kind='turn',
-    a single summary triple for kind='session_end'."""
-    t3 = lambda pred, obj, otype: F.struct(  # noqa: E731
-        pred.alias("predicate"), obj.alias("object"), otype.alias("object_type")
-    )
-    lit = F.lit
-    empty = F.array().cast("array<struct<predicate:string,object:string,object_type:string>>")
-
-    base = F.array(
-        t3(lit("rdf:type"), lit("conv.turn"), lit("string")),
-        t3(lit("conv.turn.role"), F.col("role"), lit("string")),
-        t3(lit("conv.turn.text"), F.col("text"), lit("string")),
-        t3(
-            lit("conv.turn.in"),
-            F.concat(lit("test.local.graph.kb.conversation."), F.col("conv_id")),
-            lit("entity_ref"),
-        ),
-    )
-    tool_arr = F.when(
-        F.col("tool").isNotNull(),
-        F.array(t3(lit("conv.turn.tool"), F.col("tool"), lit("string"))),
-    ).otherwise(empty)
-    mention_arr = F.transform(
-        F.regexp_extract_all(F.col("text"), F.lit(MENTION_RE), F.lit(1)),
-        lambda m: t3(
-            lit("conv.turn.mentions"),
-            F.concat(lit("test.local.graph.kb.entity."), m),
-            lit("entity_ref"),
-        ),
-    )
-    summary = F.array(
-        t3(lit("conv.session.n_turns"), F.col("text"), lit("string"))
-    )
-    return F.when(F.col("kind") == "session_end", summary).otherwise(
-        F.concat(base, tool_arr, mention_arr)
-    )
-
-
 def conversation_graph_deltas(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Full streaming transform: transcript stream → graph-delta stream.
 
     Stateful accept (Python, minimal) → triple fan-out (pure Catalyst,
-    whole-stage codegen). State is per conv_id hash bucket in the RocksDB
+    whole-stage codegen): an accepted turn emits the ``extract.triples``
+    contract, a ``session_end`` row one ``conv.session.n_turns`` summary
+    triple on its conversation id. State is per conv_id hash bucket in the RocksDB
     state store; note AQE does not re-plan stateful exchanges — the shuffle-partition
     count fixed at first checkpoint is the scale lever.
     """
     acc = accepted_turns(transcripts, watermark=watermark)
-    subj = F.when(
-        F.col("kind") == "session_end",
-        F.concat(F.lit("test.local.graph.kb.conversation."), F.col("conv_id")),
-    ).otherwise(
-        F.concat(
-            F.lit("test.local.conv."),
-            F.col("conv_id"),
-            F.lit(".turn."),
-            F.col("turn_idx").cast("string"),
+    session_end = F.col("kind") == "session_end"
+    summary = F.array(
+        F.struct(
+            F.lit("conv.session.n_turns").alias("predicate"),
+            F.col("text").alias("object"),
+            F.lit("string").alias("object_type"),
         )
     )
+    triples = F.when(session_end, summary).otherwise(F.concat(property_triples(), mention_triples()))
     return acc.select(
-        F.when(F.col("kind") == "session_end", "session_end").otherwise("triple").alias("kind"),
+        F.when(session_end, "session_end").otherwise("triple").alias("kind"),
         "conv_id",
         "turn_idx",
-        subj.alias("subject"),
-        F.explode(_turn_triples_array()).alias("t"),
+        F.when(session_end, conversation_id()).otherwise(turn_subject()).alias("subject"),
+        F.explode(triples).alias("t"),
         "ts",
         "prev_turn_idx",
         "prev_ts",
@@ -501,7 +461,7 @@ def deltas_to_entity_states(deltas: DataFrame) -> DataFrame:
         "predicate",
         "object",
         "object_type",
-        F.lit("transcript_extractor").alias("source"),
+        F.lit(SOURCE).alias("source"),
         "ts",
         F.lit(1.0).alias("confidence"),
         F.col("conv_id").alias("context"),

@@ -1,27 +1,11 @@
-"""Triple extraction: builtin-expression and pandas-UDF paths must agree
-bit-for-bit; output must satisfy the entity-ID/predicate contracts."""
+"""Triple extraction: output must satisfy the entity-ID/predicate
+contracts."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from semstreams_spark.extract import extract_triples, extract_triples_pandas_udf
-
-
-def _key_sorted(df):
-    pdf = df.toPandas()
-    return pdf.sort_values(list(pdf.columns), ignore_index=True)
-
-
-def test_builtin_vs_pandas_udf_identical(transcripts_small):
-    a = _key_sorted(extract_triples(transcripts_small))
-    b = _key_sorted(extract_triples_pandas_udf(transcripts_small))
-    assert len(a) == len(b)
-    assert list(a.columns) == list(b.columns)
-    for c in a.columns:
-        assert (a[c].values == b[c].values).all() or (
-            a[c].isna().equals(b[c].isna()) and (a[c].dropna().values == b[c].dropna().values).all()
-        ), f"column {c} differs"
+from semstreams_spark.extract import extract_triples
 
 
 def test_subjects_are_six_part_ids(transcripts_small):

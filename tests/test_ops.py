@@ -185,25 +185,6 @@ def test_rule_cooldown_greedy_from_last_fire(spark):
     assert len(out) == 4
 
 
-def test_rule_cooldown_lag_variant_differs(spark):
-    """apply_cooldown_lag keeps previous-EVENT semantics: the muted event
-    at +30 pushes the window, so +60 is muted too — documents exactly how
-    the Catalyst-only variant diverges from the greedy reference."""
-    from semstreams_spark.rules.engine import apply_cooldown_lag
-
-    events = spark.createDataFrame(
-        [
-            ("r1", "e1", T0),
-            ("r1", "e1", T0 + dt.timedelta(seconds=30)),
-            ("r1", "e1", T0 + dt.timedelta(seconds=60)),
-        ],
-        "rule_id string, entity_id string, ts timestamp",
-    )
-    rules = [Rule(id="r1", conditions=(Condition("x", "eq", "1"),), cooldown_seconds=60)]
-    out = apply_cooldown_lag(events, rules).collect()
-    assert sorted(r["ts"] for r in out) == [T0]
-
-
 def test_context_flags(spark):
     from semstreams_spark.rules.context_flags import context_flags
 

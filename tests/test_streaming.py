@@ -60,13 +60,25 @@ def _run(spark, indir, outdir, ckpt, **kw):
 def test_stream_matches_batch_extraction(spark, tmp_path):
     indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     _write_file(indir, "f1.parquet", _mk_rows("c1", 6, T0) + _mk_rows("c2", 4, T0, "ent_b"))
-    _write_file(indir, "f2.parquet", _mk_rows("c3", 5, T0 + dt.timedelta(minutes=5)))
+    # the rest of the contract: a tool turn, two distinct mentions plus a
+    # repeat, and a turn with no mention
+    t4 = T0 + dt.timedelta(minutes=7)
+    _write_file(
+        indir,
+        "f2.parquet",
+        _mk_rows("c3", 5, T0 + dt.timedelta(minutes=5))
+        + [
+            ("c4", 0, "tool", "calc: 42 @entity:ent_a", "calc", t4),
+            ("c4", 1, "assistant", "@entity:ent_b vs @entity:ent_c, again @entity:ent_b", None, t4 + dt.timedelta(seconds=20)),
+            ("c4", 2, "user", "thanks, no mention here", None, t4 + dt.timedelta(seconds=40)),
+        ],
+    )
 
     sink = _run(spark, indir, outdir, ckpt, watermark="2 days", mfpt=1)
     out = sink.read(spark).filter(F.col("kind") == "triple")
 
-    batch = extract_triples(spark.read.parquet(indir))
-    key = ["subject", "predicate", "object", "object_type", "ts"]
+    batch = extract_triples(spark.read.parquet(indir)).withColumnRenamed("seq", "turn_idx")
+    key = ["subject", "predicate", "object", "object_type", "ts", "turn_idx"]
     got = sorted(map(tuple, out.select(*key).collect()))
     want = sorted(map(tuple, batch.select(*key).collect()))
     assert got == want
