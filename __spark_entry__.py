@@ -43,6 +43,7 @@ from semstreams_spark.operators.joins import tool_invocation_correlation, turn_w
 from semstreams_spark.operators.sessions import sessionize
 from semstreams_spark.operators.windows import entity_cooccurrence, node_degree_tumbling
 from semstreams_spark.rules import DEFAULT_RULES, evaluate_rules
+from semstreams_spark.session import read_parquet
 
 ORACLE_SF = 0.01  # the driver's correctness gate runs at sf0.01
 
@@ -50,17 +51,17 @@ ORACLE_SF = 0.01  # the driver's correctness gate runs at sf0.01
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf = sf_from_dir(sf_dir)
     ensure_transcripts(sf)
-    return spark.read.parquet(transcripts_path(sf))
+    return read_parquet(spark, transcripts_path(sf))
 
 
 def _aliases(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf = sf_from_dir(sf_dir)
     ensure_transcripts(sf)
-    return spark.read.parquet(aliases_path(sf))
+    return read_parquet(spark, aliases_path(sf))
 
 
 def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -802,38 +803,27 @@ def q_entity_delete(spark, sf_dir):
     """Entity delete / tombstone surface (mutations.go:169,354): mention-
     target entities with suffix %7==0 tombstoned AFTER all data (status
     deleted, edges cleaned), %7==3 tombstoned BEFORE all data (recreated →
-    active, edges survive); version bumps per tombstone."""
-    from semstreams_spark.operators.mutations import edges_after_deletes, nodes_with_status
+    active, edges survive); version bumps per tombstone. The tombstones
+    are one projection of the distinct mention targets."""
+    from semstreams_spark.operators.mutations import entity_status
 
-    men = _mention_rows(spark, sf_dir).select(entity_id(F.col("e")).alias("id"), "ts", "seq")
-    nodes = (
-        men.groupBy("id")
-        .agg(F.count_distinct("ts", "seq").alias("version"), F.max("ts").alias("updated_at"))
-        .withColumn("type", node_type(F.col("id")))
-    )
-    ents = men.select(F.col("id").alias("entity_id")).distinct()
+    t = _transcripts(spark, sf_dir)
     num = F.element_at(F.split(F.col("entity_id"), "_"), -1).try_cast("int")
-    deletes = ents.filter(num % 7 == 0).select(
-        "entity_id", F.lit(DELETE_TS_LATE).cast("timestamp_ntz").alias("ts")
-    ).unionByName(
-        ents.filter(num % 7 == 3).select(
-            "entity_id", F.lit(DELETE_TS_EARLY).cast("timestamp_ntz").alias("ts")
-        )
+    tomb = F.when(num % 7 == 0, F.lit(DELETE_TS_LATE)).when(num % 7 == 3, F.lit(DELETE_TS_EARLY))
+    deletes = (
+        t.select(F.explode(mention_ids()).alias("entity_id"))
+        .distinct()
+        .select("entity_id", tomb.cast("timestamp_ntz").alias("ts"))
+        .filter(F.col("ts").isNotNull())
     )
-    nws = nodes_with_status(nodes, deletes)
-    live = (
-        edges_after_deletes(edges_table_source_clustered(_transcripts(spark, sf_dir)), deletes)
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.count(F.lit(1)).alias("n_live"))
-    )
-    return nws.join(live, "id", "left").select(
+    return entity_status(t, deletes).select(
         "id",
-        "type",
+        node_type(F.col("id")).alias("type"),
         "status",
         "version",
         "updated_at",
         "deleted_at",
-        F.coalesce(F.col("n_live"), F.lit(0)).cast("long").alias("n_live_edges"),
+        "n_live_edges",
     )
 
 

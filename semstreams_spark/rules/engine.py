@@ -193,13 +193,15 @@ def apply_cooldown(
     committed rule-events table itself. Incremental == global greedy when
     successive calls cover event-time-ordered slices per key.
 
-    A greedy scan is inherently sequential per key, so this is an
-    Arrow-batched ``applyInPandas`` over (rule_id, entity_id) groups —
-    groups are tiny (alerts per entity), the shuffle is one hash exchange
-    on the key, and the scan is O(group).
+    A greedy scan is inherently sequential per key, so the events are
+    hashed on the key (one exchange), sorted within each partition by key,
+    then ts, then the remaining columns as deterministic tie-breakers, and
+    one ``mapInPandas`` scan walks each partition. The scan carries the
+    current key, its cooldown and its last fire across the partition's
+    Arrow batches, so a key split over batches scans as one; there is no
+    per-key Python call.
     """
     import numpy as np
-    import pandas as pd
 
     cd = {r.id: r.cooldown_seconds for r in rules}
     if not any(cd.values()):
@@ -212,32 +214,36 @@ def apply_cooldown(
         ev = events.join(F.broadcast(seed), ["rule_id", "entity_id"], "left")
     else:
         ev = events.withColumn("_last_fire", F.lit(None).cast("timestamp_ntz"))
+    keys = ["rule_id", "entity_id"]
+    # nulls sort last in every column, ts included
+    order = [F.asc_nulls_last(c) for c in keys + ["ts"] + [c for c in cols if c not in keys + ["ts"]]]
 
-    def scan(pdf):
-        sec = cd.get(pdf["rule_id"].iloc[0], 0)
-        if sec == 0:
-            return pdf
-        # time order first (the greedy scan is defined over ts); remaining
-        # columns only as deterministic tie-breakers — raw schema order
-        # would walk out of time order if a caller's schema leads with a
-        # non-key column
-        order = ["ts"] + [c for c in cols if c != "ts"]
-        pdf = pdf.sort_values(order, kind="mergesort", ignore_index=True)
-        ts = pdf["ts"].to_numpy()
-        keep = np.zeros(len(pdf), dtype=bool)
-        mute = np.timedelta64(int(sec * 1_000_000), "us")
-        lf = pdf["_last_fire"].iloc[0]
-        last = None if pd.isnull(lf) else np.datetime64(lf, "us")
-        for i in range(len(ts)):
-            if last is None or ts[i] - last >= mute:
-                keep[i] = True
-                last = ts[i]
-        return pdf[keep]
+    def scan(batches):
+        key, mute, last = None, None, None
+        for pdf in batches:
+            rid = pdf["rule_id"].to_numpy()
+            eid = pdf["entity_id"].to_numpy()
+            ts = pdf["ts"].to_numpy()
+            lf = pdf["_last_fire"].to_numpy()
+            keep = np.ones(len(pdf), dtype=bool)
+            for i in range(len(pdf)):
+                if key is None or rid[i] != key[0] or eid[i] != key[1]:
+                    key = (rid[i], eid[i])
+                    sec = cd.get(rid[i], 0)
+                    mute = np.timedelta64(int(sec * 1_000_000), "us") if sec else None
+                    last = None if np.isnat(lf[i]) else lf[i]
+                if mute is None:
+                    continue
+                if last is None or ts[i] - last >= mute:
+                    last = ts[i]
+                else:
+                    keep[i] = False
+            yield pdf[keep][cols]
 
     return (
-        ev.groupBy("rule_id", "entity_id")
-        .applyInPandas(scan, ev.schema)
-        .drop("_last_fire")
+        ev.repartition(*keys)
+        .sortWithinPartitions(*order)
+        .mapInPandas(scan, events.schema)
     )
 
 

@@ -12,16 +12,47 @@ on the worker's path, a fixed 130-240 ms per Python task on a 4-vCPU
 host. Workers must import the package to start at all, so ``get_spark``
 puts the package's parent directory on ``PYTHONPATH`` before the JVM
 starts; the JVM hands that on to its Python workers.
+
+The query registry reads its inputs through ``read_parquet``, which infers
+a regular file's schema once and passes it to later reads of the
+unchanged file.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# (path, st_ino, st_mtime_ns, st_size) -> the schema Spark inferred for it
+_SCHEMAS: dict[tuple[str, int, int, int], StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job on a
+    repeat read: a plain read runs one ``mergeSchemasInParallel`` job
+    (about 130 ms on a 4-vCPU host) before any query starts. A regular
+    file's inferred schema is kept under its stat stamp, so a rewritten or
+    replaced file is inferred again; directories and other paths are read
+    with plain inference."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), st.st_ino, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def _export_package_path() -> None:

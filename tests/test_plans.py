@@ -136,3 +136,55 @@ def test_source_clustered_operators_have_no_exchange(spark, transcripts_small):
     ):
         p = _plan(op(transcripts_small))
         assert "Exchange" not in p, (op.__name__, p)
+
+
+def _final_plan(df) -> str:
+    """The adaptive plan as executed: run the query, keep the final plan."""
+    df.collect()
+    p = _plan(df)
+    assert "isFinalPlan=true" in p
+    return p.split("== Initial Plan ==")[0]
+
+
+def test_entity_delete_scans_transcripts_twice_and_reuses_its_tombstones(spark, tmp_path):
+    """entity_delete: one transcript scan for the mention edges and one for
+    the tombstone build side, no Union, and the tombstones broadcast once
+    for both edge ends (the second join reads a ReusedExchange)."""
+    import __spark_entry__ as entry
+
+    # the query reads only the scale factor off the directory name
+    p = _final_plan(entry.q_entity_delete(spark, str(tmp_path / "sf0.001")))
+    lines = p.splitlines()
+    scans = [ln for ln in lines if "FileScan parquet" in ln]
+    assert len(scans) <= 2 and all("transcripts.parquet" in ln for ln in scans), scans
+    assert "Union" not in p
+    reused = [ln for ln in lines if "ReusedExchange" in ln]
+    assert len(reused) == 1 and "BroadcastExchange" in reused[0], p
+    assert p.count("BroadcastExchange") == 2, p  # the exchange and its reuse
+
+
+def test_alert_cooldown_is_one_exchange_and_one_scan(spark, tmp_path):
+    """alert_cooldown: hashed on the key once, then one mapInPandas scan
+    per partition; no per-group applyInPandas."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    sf_dir = tmp_path / "sf0.001"
+    sf_dir.mkdir()
+    t0 = dt.datetime(2024, 1, 1)
+    pq.write_table(
+        pa.table({
+            "ts": [t0 + dt.timedelta(minutes=20 * i) for i in range(40)],
+            "user_id": [i % 3 for i in range(40)],
+            "value": [181.0 + i for i in range(40)],
+        }),
+        str(sf_dir / "events.parquet"),
+    )
+    p = _final_plan(entry.q_alert_cooldown(spark, str(sf_dir)))
+    assert "FlatMapGroupsInPandas" not in p
+    assert "MapInPandas" in p
+    assert p.count("Exchange hashpartitioning") == 1, p

@@ -1,14 +1,18 @@
 """Per-query profiling harness for the optimization rounds (guide §1).
 
 Times each declared query in isolation with the noop sink (so the sink
-never pollutes the measurement), labels jobs for the UI, and captures
-``explain("formatted")`` for the plan ledger under ``plans/<tag>/``.
+never pollutes the measurement), counts the Spark jobs each run submits
+(perfbench's ``sparkstats.jobs_between``), labels jobs for the UI, and
+captures ``explain("formatted")`` for the plan ledger under
+``plans/<tag>/``.
 
 Usage:
   python tools/profile_queries.py [--tag r06_before] [--reps 2] \
       [--sf-dir /root/testdata/sf0.1] [--explain-only] [query ...]
 
-Prints one JSON line: {"queries": {name: [walls...]}, "sf_dir": ...}.
+Prints ``<query> wall_s=<w> jobs=<n>`` per run on stderr, then one JSON
+line: {"queries": {name: [walls...]}, "jobs": {name: [counts...]},
+"sf_dir": ...}.
 This is a measurement tool only — bench.py remains the frozen metric.
 """
 
@@ -24,6 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.append(os.path.join(REPO, "perfbench"))
 
 
 def main() -> int:
@@ -38,6 +43,7 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as entry
+    import sparkstats
     from semstreams_spark.session import get_spark
 
     spark = get_spark("profile_queries", cores=args.cores, shuffle_partitions=args.cores)
@@ -54,6 +60,7 @@ def main() -> int:
         os.makedirs(plan_dir, exist_ok=True)
 
     walls: dict[str, list[float]] = {n: [] for n in names}
+    jobs: dict[str, list[int]] = {n: [] for n in names}
     for rep in range(1 if args.explain_only else args.reps):
         for n in names:
             if rep == 0 and plan_dir is not None:
@@ -70,15 +77,21 @@ def main() -> int:
             if args.explain_only:
                 continue
             spark.sparkContext.setJobDescription(f"profile:{n}")
+            t0_ms = time.time() * 1000
             t0 = time.monotonic()
             qs[n](spark, args.sf_dir).write.format("noop").mode("overwrite").save()
             walls[n].append(round(time.monotonic() - t0, 3))
+            t1_ms = time.time() * 1000
             spark.sparkContext.setJobDescription(None)
+            sparkstats.drain(spark)
+            jobs[n].append(len(sparkstats.jobs_between(spark, t0_ms, t1_ms)))
+            print(f"{n} wall_s={walls[n][-1]} jobs={jobs[n][-1]}", file=sys.stderr, flush=True)
             spark.catalog.clearCache()
         gc.collect()
 
     print(json.dumps({
         "queries": walls,
+        "jobs": jobs,
         "sf_dir": args.sf_dir,
         "cores": args.cores,
         "loadavg_1m": round(os.getloadavg()[0], 2),
