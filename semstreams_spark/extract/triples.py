@@ -30,8 +30,16 @@ confidence=1.0 (``entity_payload.go:119-122``), context=conv_id
 one scan, one explode, whole-stage codegen. Every other operator that
 derives ids, triples or edges from transcript rows (the streaming
 fan-out, the source-clustered entity/node/edge operators, the
-mention-derived queries) is built from the Column builders below, which
-read the transcript columns of the row in scope:
+mention-derived queries) is built from the builders below, which read
+the transcript columns of the row in scope. A builder without arguments
+is one SQL text (the upper-case constant of the same name, which the
+streaming fan-out splices into its one projection) that the JVM parses
+in one py4j call; the Column API pays a round trip per ``F.*`` node,
+about 800 for ``extract_triples``. The plans are the same but for
+lambda-variable names; ``tests/triples_reference.py`` keeps the Column
+API statement as the parity reference. The builders that take a Column
+(``entity_id``, ``mention_triple``, ``node_type``) stay on the Column API.
+The builders:
 
 - :func:`turn_subject` — the turn subject;
 - :func:`conversation_id` — the ``conv.turn.in`` object;
@@ -65,18 +73,50 @@ SOURCE = "transcript_extractor"
 _ENTITY_ID_PREFIX = "test.local.graph.kb.entity."
 _TRIPLES_TYPE = "array<struct<predicate:string,object:string,object_type:string>>"
 
+# ``case when``, not ``if``: the plans keep the Column API's CaseWhen.
+# ``struct(... as name)`` prints as the Column API's struct, where
+# ``named_struct`` would not.
+TURN_SUBJECT = "concat('test.local.conv.', conv_id, '.turn.', cast(turn_idx as string))"
+CONVERSATION_ID = "concat('test.local.graph.kb.conversation.', conv_id)"
+MENTION_NAMES = f"regexp_extract_all(text, '{MENTION_RE}', 1)"
+NO_TRIPLES = f"cast(array() as {_TRIPLES_TYPE})"
+
+
+def _entity_id(name: str) -> str:
+    return f"concat('{_ENTITY_ID_PREFIX}', {name})"
+
+
+MENTION_IDS = f"transform({MENTION_NAMES}, n -> {_entity_id('n')})"
+
+
+def _t3(pred: str, obj: str, otype: str) -> str:
+    """One triple struct: predicate and object_type are literal values,
+    obj is an SQL expression."""
+    return f"struct('{pred}' as predicate, {obj} as object, '{otype}' as object_type)"
+
+
+PROPERTY_TRIPLES = (
+    "concat(array("
+    + ", ".join(
+        (
+            _t3("rdf:type", "'conv.turn'", "string"),
+            _t3("conv.turn.role", "role", "string"),
+            _t3("conv.turn.text", "text", "string"),
+            _t3("conv.turn.in", CONVERSATION_ID, "entity_ref"),
+        )
+    )
+    + f"), case when tool is not null then array({_t3('conv.turn.tool', 'tool', 'string')}) "
+    + f"else {NO_TRIPLES} end)"
+)
+MENTION_TRIPLES = f"transform({MENTION_NAMES}, m -> {_t3(MENTIONS, _entity_id('m'), 'entity_ref')})"
+
 
 def turn_subject() -> Column:
-    return F.concat(
-        F.lit("test.local.conv."),
-        F.col("conv_id"),
-        F.lit(".turn."),
-        F.col("turn_idx").cast("string"),
-    )
+    return F.expr(TURN_SUBJECT)
 
 
 def conversation_id() -> Column:
-    return F.concat(F.lit("test.local.graph.kb.conversation."), F.col("conv_id"))
+    return F.expr(CONVERSATION_ID)
 
 
 def entity_id(name: Column) -> Column:
@@ -88,11 +128,11 @@ def entity_id_of(name: str) -> str:
 
 
 def mention_names() -> Column:
-    return F.regexp_extract_all(F.col("text"), F.lit(MENTION_RE), F.lit(1))
+    return F.expr(MENTION_NAMES)
 
 
 def mention_ids() -> Column:
-    return F.transform(mention_names(), entity_id)
+    return F.expr(MENTION_IDS)
 
 
 def node_type(node_id: Column) -> Column:
@@ -102,37 +142,22 @@ def node_type(node_id: Column) -> Column:
     return F.coalesce(F.try_element_at(F.split(node_id, r"\."), F.lit(5)), F.lit("entity"))
 
 
-def _t3(pred: Column, obj: Column, otype: Column) -> Column:
-    return F.struct(pred.alias("predicate"), obj.alias("object"), otype.alias("object_type"))
-
-
 def no_triples() -> Column:
-    return F.array().cast(_TRIPLES_TYPE)
+    return F.expr(NO_TRIPLES)
 
 
 def property_triples() -> Column:
-    lit = F.lit
-    base = F.array(
-        _t3(lit("rdf:type"), lit("conv.turn"), lit("string")),
-        _t3(lit("conv.turn.role"), F.col("role"), lit("string")),
-        _t3(lit("conv.turn.text"), F.col("text"), lit("string")),
-        _t3(lit("conv.turn.in"), conversation_id(), lit("entity_ref")),
-    )
-    tool_arr = F.when(
-        F.col("tool").isNotNull(),
-        F.array(_t3(lit("conv.turn.tool"), F.col("tool"), lit("string"))),
-    ).otherwise(no_triples())
-    return F.concat(base, tool_arr)
+    return F.expr(PROPERTY_TRIPLES)
 
 
 def mention_triple(entity: Column) -> Column:
-    return _t3(F.lit(MENTIONS), entity, F.lit("entity_ref"))
+    return F.struct(
+        F.lit(MENTIONS).alias("predicate"), entity.alias("object"), F.lit("entity_ref").alias("object_type")
+    )
 
 
 def mention_triples() -> Column:
-    # entity_id inside the one lambda, not a transform over mention_ids():
-    # a nested transform would be a different plan
-    return F.transform(mention_names(), lambda m: mention_triple(entity_id(m)))
+    return F.expr(MENTION_TRIPLES)
 
 
 def extract_triples(transcripts: DataFrame) -> DataFrame:
@@ -142,23 +167,20 @@ def extract_triples(transcripts: DataFrame) -> DataFrame:
     Catalyst keeps the whole stage in codegen and the parquet scan reads
     only the six input columns once.
     """
-    return (
-        transcripts.select(
-            turn_subject().alias("subject"),
-            F.explode(F.concat(property_triples(), mention_triples())).alias("t"),
-            F.col("ts"),
-            F.col("conv_id").alias("context"),
-            F.col("turn_idx").cast("int").alias("seq"),
-        )
-        .select(
-            "subject",
-            F.col("t.predicate").alias("predicate"),
-            F.col("t.object").alias("object"),
-            F.col("t.object_type").alias("object_type"),
-            F.lit(SOURCE).alias("source"),
-            "ts",
-            F.lit(1.0).alias("confidence"),
-            "context",
-            "seq",
-        )
+    return transcripts.selectExpr(
+        f"{TURN_SUBJECT} as subject",
+        f"explode(concat({PROPERTY_TRIPLES}, {MENTION_TRIPLES})) as t",
+        "ts",
+        "conv_id as context",
+        "cast(turn_idx as int) as seq",
+    ).selectExpr(
+        "subject",
+        "t.predicate as predicate",
+        "t.object as object",
+        "t.object_type as object_type",
+        f"'{SOURCE}' as source",
+        "ts",
+        "1.0D as confidence",
+        "context",
+        "seq",
     )

@@ -105,8 +105,8 @@ def build_ingest_stream(
         F.max("ts").alias("max_event_ts"),
         F.approx_count_distinct("conv_id").alias("approx_convs"),
     )
-    pin_state_engine(checkpoint_dir)
-    deltas = conversation_graph_deltas(transcripts, watermark=watermark)
+    n_buckets = pin_state_engine(checkpoint_dir, transcripts.sparkSession)
+    deltas = conversation_graph_deltas(transcripts, n_buckets, watermark=watermark)
     sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"), commit_mode=commit_mode)
 
     if fail_at_batch is not None:

@@ -91,6 +91,9 @@ class StreamingRuleStage:
         self.max_cooldown = max(
             [r.cooldown_seconds for r in rules if r.enabled], default=0
         )
+        # the rule-event table's schema, kept from the first seed read:
+        # later reads skip Spark's schema-inference job
+        self._seed_schema = None
 
     def seed_batch_dirs(self, min_event_ts) -> list[str]:
         """Committed rule-event batch dirs the cooldown seed must read for
@@ -125,7 +128,9 @@ class StreamingRuleStage:
                 return None
             cutoff = min_event_ts - _dt.timedelta(seconds=self.max_cooldown)
             # parquet ts reads as TIMESTAMP_NTZ; align the literal's type
-            committed = spark.read.parquet(*dirs).filter(
+            if self._seed_schema is None:
+                self._seed_schema = spark.read.parquet(*dirs).schema
+            committed = spark.read.schema(self._seed_schema).parquet(*dirs).filter(
                 F.col("ts") >= F.lit(cutoff).cast("timestamp_ntz")
             )
         return committed.groupBy("rule_id", "entity_id").agg(
@@ -165,8 +170,8 @@ def build_ingest_with_rules(
     fail_rules_at_batch: inject a crash after the delta commit but before
     the rule commit of batch N (the kill/resume test's worst case).
     """
-    pin_state_engine(checkpoint_dir)
-    deltas = conversation_graph_deltas(transcripts, watermark=watermark)
+    n_buckets = pin_state_engine(checkpoint_dir, transcripts.sparkSession)
+    deltas = conversation_graph_deltas(transcripts, n_buckets, watermark=watermark)
     delta_sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"))
     rule_stage = StreamingRuleStage(out_dir, rules)
 

@@ -7,16 +7,30 @@ where state lived in NATS JetStream KV; here it lives in Spark's
 (RocksDB) state store.
 
 Keying. The operator is grouped by ``bucket = pmod(xxhash64(conv_id),
-N_BUCKETS)``, not by ``conv_id``: Spark's per-group machinery (state
-load/store, Arrow slicing, one Python call) costs milliseconds per key
-while the merge itself is microseconds per conversation, so one call
-serves every conversation of a bucket. ``merge_turns`` is one vectorized
+B)``, not by ``conv_id``: Spark's per-group machinery (state load/store,
+Arrow slicing, one Python call) costs milliseconds per key while the
+merge itself is microseconds per conversation, so one call serves every
+conversation of a bucket. ``merge_turns`` is one vectorized
 kernel over all of them: a lexsort on ``(conv, ts, turn_idx)``, then
 per-segment shift and forward-fill for the prior-turn and requesting-turn
 links and per-conversation version offsets. The Python function does the
 MINIMUM stateful work — re-delivery dedup, prior-turn linkage, version
 counters, session tracking — and emits one row per *accepted turn*; the
 5-7x triple fan-out happens DOWNSTREAM in pure Catalyst expressions.
+
+Bucket count. B = ``BUCKETS_PER_PARTITION`` (8) × the state partitions
+(``spark.sql.shuffle.partitions`` when the checkpoint is created), and
+the checkpoint records it (``pin_state_engine``). A group call spends
+about 6 ms in pyspark's per-group state and pandas handling against
+about 2 ms in ``merge_turns`` (local[2], sf0.002), so B follows the
+partitions, each of which runs one task per trigger: a constant 64 makes
+64 calls per data trigger at 2 partitions and leaves 147 of 200
+partitions without a bucket. At 2 partitions, B=16 against 64 on the
+perfbench bulk ingest (seed 2001, per run): 32 group calls against 128,
+the stateful node's Python time 792 ms against 1445 and its state
+update time 1593 ms against 2002, with the same rows out of Python. A
+sweep of a constant B over 32-256 at 2 partitions, two rounds each, had
+not resolved these counts.
 
 State layout. A bucket's state is one Arrow IPC blob (``_FRONTIER``)
 with one row per live conversation, O(conversations) not O(turns):
@@ -56,12 +70,12 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pandas.arrays import IntegerArray
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import BinaryType, StructField, StructType
 
-from ..extract.triples import SOURCE, conversation_id, mention_triples, property_triples, turn_subject
+from ..extract.triples import CONVERSATION_ID, MENTION_TRIPLES, PROPERTY_TRIPLES, SOURCE, TURN_SUBJECT
 
 ACCEPTED_SCHEMA = (
     "kind string, conv_id string, turn_idx int, role string, text string, "
@@ -75,11 +89,10 @@ DELTA_SCHEMA = (
     "prev_turn_idx int, prev_ts timestamp, req_turn_idx int, version long"
 )
 
-# Fixed for the life of a checkpoint (it decides which state row holds a
-# conversation). Of 32/64/128/256, 64 was fastest on the perfbench bulk
-# ingest (local[2]): more buckets pay Spark's per-call cost more often,
-# fewer rewrite larger state blobs each trigger.
-N_BUCKETS = 64
+# Buckets per state partition; a checkpoint records its bucket count at
+# creation (see pin_state_engine), since the count decides which state row
+# holds a conversation.
+BUCKETS_PER_PARTITION = 8
 
 SESSION_TIMEOUT_MS = 3_600_000
 
@@ -348,24 +361,30 @@ def _accept_turns(
     yield from (o for o in outputs if o is not None)
 
 
-# the marker value every checkpoint of state keyed by hash bucket carries;
-# it keeps its historical name so those checkpoints restart
-_LAYOUT = "legacy-bucketed"
+# the marker of checkpoints written while the bucket count was the
+# constant 64; they restart with it
+_LEGACY_MARKER, _LEGACY_BUCKETS = "legacy-bucketed", 64
+_MARKER = "bucketed:"
 
 
-def pin_state_engine(checkpoint_dir: str | None) -> None:
-    """Check the checkpoint's merge-state layout and record it next to
-    the checkpoint (``_state_engine``).
+def pin_state_engine(checkpoint_dir: str | None, spark: SparkSession) -> int:
+    """Check the checkpoint's merge-state layout, record it next to the
+    checkpoint (``_state_engine``) and return its bucket count.
 
-    - fresh checkpoint → write ``legacy-bucketed``;
-    - marker ``legacy-bucketed`` → proceed;
+    - fresh checkpoint (or none) → ``BUCKETS_PER_PARTITION`` × the
+      session's ``spark.sql.shuffle.partitions``, the state partitions
+      Spark fixes for the checkpoint; written as ``bucketed:<count>``;
+    - marker ``bucketed:<count>`` → that count, whatever the session's
+      partition setting is now;
+    - marker ``legacy-bucketed`` → 64;
     - any other marker (``tws``, ``legacy``: per-conversation state of
       earlier versions), or no marker but ``offsets/`` (written before
       markers existed) → raise, leaving the marker as found: that state
       cannot be read as buckets.
     """
+    fresh = BUCKETS_PER_PARTITION * int(spark.conf.get("spark.sql.shuffle.partitions"))
     if checkpoint_dir is None:
-        return
+        return fresh
     marker = os.path.join(checkpoint_dir, "_state_engine")
     if os.path.exists(marker):
         with open(marker) as fh:
@@ -376,23 +395,28 @@ def pin_state_engine(checkpoint_dir: str | None) -> None:
         os.makedirs(checkpoint_dir, exist_ok=True)
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
-            fh.write(_LAYOUT)
+            fh.write(f"{_MARKER}{fresh}")
         os.replace(tmp, marker)
-        return
-    if found != _LAYOUT:
-        raise RuntimeError(
-            f"checkpoint {checkpoint_dir} holds merge state of layout {found!r}, "
-            "which this version cannot read (it keys state by hash bucket) — "
-            "restart from a fresh checkpoint"
-        )
+        return fresh
+    if found == _LEGACY_MARKER:
+        return _LEGACY_BUCKETS
+    count = found.removeprefix(_MARKER)
+    if found.startswith(_MARKER) and count.isdigit() and int(count) > 0:
+        return int(count)
+    raise RuntimeError(
+        f"checkpoint {checkpoint_dir} holds merge state of layout {found!r}, "
+        "which this version cannot read (it keys state by hash bucket) — "
+        "restart from a fresh checkpoint"
+    )
 
 
-def accepted_turns(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def accepted_turns(transcripts: DataFrame, n_buckets: int, watermark: str = "10 minutes") -> DataFrame:
     """Streaming transform: transcript stream → accepted-turn stream
-    (deduped, prior-turn-linked, versioned)."""
+    (deduped, prior-turn-linked, versioned), with merge state in
+    ``n_buckets`` hash buckets (``pin_state_engine``'s count)."""
     return (
         transcripts.withWatermark("ts", watermark)
-        .withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(N_BUCKETS)))
+        .withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)))
         .groupBy("bucket")
         .applyInPandasWithState(
             _accept_turns,
@@ -404,7 +428,9 @@ def accepted_turns(transcripts: DataFrame, watermark: str = "10 minutes") -> Dat
     )
 
 
-def conversation_graph_deltas(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def conversation_graph_deltas(
+    transcripts: DataFrame, n_buckets: int, watermark: str = "10 minutes"
+) -> DataFrame:
     """Full streaming transform: transcript stream → graph-delta stream.
 
     Stateful accept (Python, minimal) → triple fan-out (pure Catalyst,
@@ -412,37 +438,22 @@ def conversation_graph_deltas(transcripts: DataFrame, watermark: str = "10 minut
     contract, a ``session_end`` row one ``conv.session.n_turns`` summary
     triple on its conversation id. State is per conv_id hash bucket in the RocksDB
     state store; note AQE does not re-plan stateful exchanges — the shuffle-partition
-    count fixed at first checkpoint is the scale lever.
+    count fixed at first checkpoint is the scale lever, and sets ``n_buckets``
+    (``pin_state_engine``).
     """
-    acc = accepted_turns(transcripts, watermark=watermark)
-    session_end = F.col("kind") == "session_end"
-    summary = F.array(
-        F.struct(
-            F.lit("conv.session.n_turns").alias("predicate"),
-            F.col("text").alias("object"),
-            F.lit("string").alias("object_type"),
-        )
-    )
-    triples = F.when(session_end, summary).otherwise(F.concat(property_triples(), mention_triples()))
-    return acc.select(
-        F.when(session_end, "session_end").otherwise("triple").alias("kind"),
+    return triple_fanout(accepted_turns(transcripts, n_buckets, watermark=watermark))
+
+
+def triple_fanout(acc: DataFrame) -> DataFrame:
+    """Accepted-turn rows → delta rows, in one projection."""
+    end = "kind = 'session_end'"
+    summary = "array(struct('conv.session.n_turns' as predicate, text as object, 'string' as object_type))"
+    return acc.selectExpr(
+        f"case when {end} then 'session_end' else 'triple' end as kind",
         "conv_id",
         "turn_idx",
-        F.when(session_end, conversation_id()).otherwise(turn_subject()).alias("subject"),
-        F.explode(triples).alias("t"),
-        "ts",
-        "prev_turn_idx",
-        "prev_ts",
-        "req_turn_idx",
-        "version",
-    ).select(
-        "kind",
-        "conv_id",
-        "turn_idx",
-        "subject",
-        F.col("t.predicate").alias("predicate"),
-        F.col("t.object").alias("object"),
-        F.col("t.object_type").alias("object_type"),
+        f"case when {end} then {CONVERSATION_ID} else {TURN_SUBJECT} end as subject",
+        f"inline(case when {end} then {summary} else concat({PROPERTY_TRIPLES}, {MENTION_TRIPLES}) end)",
         "ts",
         "prev_turn_idx",
         "prev_ts",

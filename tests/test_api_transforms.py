@@ -495,24 +495,40 @@ def test_image_features_quarantine_corrupt_deflate(spark):
     assert len(rows) == 1  # quarantined to the deterministic fallback
 
 
-def test_pin_state_engine_marker(tmp_path):
+def test_pin_state_engine_marker(spark, tmp_path):
     import os
 
     import pytest
 
     from semstreams_spark.streaming.state_merge import pin_state_engine
 
-    ck = str(tmp_path / "ck")
-    pin_state_engine(ck)
-    # the marker names the state layout: state keyed by hash bucket
-    assert (tmp_path / "ck" / "_state_engine").read_text() == "legacy-bucketed"
-    pin_state_engine(ck)  # a restart proceeds and keeps the marker
-    assert (tmp_path / "ck" / "_state_engine").read_text() == "legacy-bucketed"
-    pin_state_engine(None)  # no checkpoint, nothing to check
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "2")
+        ck = str(tmp_path / "ck")
+        # a fresh checkpoint gets 8 buckets per state partition and
+        # records the count
+        assert pin_state_engine(ck, spark) == 16
+        assert (tmp_path / "ck" / "_state_engine").read_text() == "bucketed:16"
+        # a restart keeps the recorded count, whatever the session's
+        # partition setting is now
+        spark.conf.set("spark.sql.shuffle.partitions", "5")
+        assert pin_state_engine(ck, spark) == 16
+        assert (tmp_path / "ck" / "_state_engine").read_text() == "bucketed:16"
+        assert pin_state_engine(None, spark) == 40  # no checkpoint: always fresh
+        # checkpoints of the constant-64 era restart with 64 buckets
+        legacy = tmp_path / "ck_legacy_bucketed"
+        legacy.mkdir()
+        (legacy / "_state_engine").write_text("legacy-bucketed")
+        assert pin_state_engine(str(legacy), spark) == 64
+        assert (legacy / "_state_engine").read_text() == "legacy-bucketed"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # checkpoints of any other layout fail at start with a clear message
     # and are left as found: a "tws" or "legacy" marker (per-conversation
-    # state), an unknown marker, and a pre-marker checkpoint (None)
-    for name in ("tws", "legacy", "bogus", None):
+    # state), an unknown or malformed marker, and a pre-marker checkpoint
+    # (None)
+    for name in ("tws", "legacy", "bogus", "bucketed:", "bucketed:0", "bucketed:-4", None):
         old = tmp_path / f"ck_{name}"
         if name:
             old.mkdir()
@@ -520,7 +536,7 @@ def test_pin_state_engine_marker(tmp_path):
         else:
             (old / "offsets").mkdir(parents=True)
         with pytest.raises(RuntimeError, match="restart from a fresh checkpoint"):
-            pin_state_engine(str(old))
+            pin_state_engine(str(old), spark)
         assert os.listdir(old) == ["_state_engine" if name else "offsets"]
         if name:
             assert (old / "_state_engine").read_text() == name

@@ -58,7 +58,7 @@ def _seen_sets(states):
     return out
 
 
-@given(merge_batches(), st.sampled_from((1, 2, 64)), st.booleans())
+@given(merge_batches(), st.sampled_from((1, 2, 16, 64)), st.booleans())
 @settings(max_examples=300, deadline=None)
 def test_bucket_kernel_matches_per_conversation_reference(batches, n_buckets, split):
     want, ref_state = reference_merge(batches)

@@ -342,9 +342,10 @@ def test_streaming_rule_stage_kill_resume(spark, tmp_path):
     assert {e["batch_id"] for e in rule_stage.sink.ledger()} <= {
         e["batch_id"] for e in delta_sink.ledger()
     }
-    # the rules pipeline pins the state layout too, and resumed on it
+    # the rules pipeline pins the state layout too (8 buckets per state
+    # partition at the session's 8), and resumed on it
     with open(os.path.join(ckpt, "_state_engine")) as fh:
-        assert fh.read() == "legacy-bucketed"
+        assert fh.read() == "bucketed:64"
 
 
 @pytest.mark.parametrize("pipeline", ["ingest", "rules"])
@@ -371,6 +372,60 @@ def test_old_layout_checkpoint_fails_at_start(spark, tmp_path, pipeline):
             q.stop()  # reached only when the check is missing
     assert (tws / "_state_engine").read_text() == "tws"
     assert sorted(os.listdir(unmarked)) == ["offsets"]
+
+
+def _parity_input(indir: str, order: str, seed: int = 7):
+    """A skewed corpus (one 50x conversation) in 3 files, in event-time
+    or shuffled order, with 20 redeliveries inside a file and 20 of the
+    first file's rows again in the last file."""
+    import numpy as np
+
+    from semstreams_spark.datagen.transcripts import generate_transcripts
+
+    tbl = generate_transcripts(0.001, seed=seed)[0]
+    rng = np.random.default_rng(seed)
+    idx = np.argsort(tbl["ts"].to_numpy(), kind="stable") if order == "ts" else rng.permutation(tbl.num_rows)
+    parts = np.array_split(idx, 3)
+    parts[1] = np.concatenate([parts[1], rng.choice(parts[1], 20, replace=False)])
+    parts[2] = np.concatenate([parts[2], rng.choice(parts[0], 20, replace=False)])
+    os.makedirs(indir)
+    for i, part in enumerate(parts):
+        path = os.path.join(indir, f"f{i}.parquet")
+        pq.write_table(tbl.take(part), path)
+        _MTIME_COUNTER[0] += 10
+        os.utime(path, (_MTIME_COUNTER[0], _MTIME_COUNTER[0]))
+
+
+@pytest.mark.parametrize(
+    "order,watermark", [("ts", "1 minute"), ("shuffled", "10 minutes"), ("ts", "2 days")]
+)
+def test_bucket_count_does_not_change_sink_rows(spark, tmp_path, order, watermark):
+    """A fresh checkpoint at 2 state partitions (16 buckets) commits the
+    same rows as a ``legacy-bucketed`` checkpoint (64 buckets, 8
+    partitions) that is killed before batch 1's ledger commit and
+    restarted."""
+    indir = str(tmp_path / "in")
+    _parity_input(indir, order)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "2")
+        fresh = _run(spark, indir, str(tmp_path / "out16"), str(tmp_path / "ck16"), watermark=watermark)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert (tmp_path / "ck16" / "_state_engine").read_text() == "bucketed:16"
+
+    legacy_ck = tmp_path / "ck64"
+    legacy_ck.mkdir()
+    (legacy_ck / "_state_engine").write_text("legacy-bucketed")
+    with pytest.raises(Exception):
+        _run(spark, indir, str(tmp_path / "out64"), str(legacy_ck), watermark=watermark, fail_at_batch=1)
+    legacy = _run(spark, indir, str(tmp_path / "out64"), str(legacy_ck), watermark=watermark)
+    assert (legacy_ck / "_state_engine").read_text() == "legacy-bucketed"
+
+    got = sorted(map(tuple, fresh.read(spark).collect()), key=repr)
+    want = sorted(map(tuple, legacy.read(spark).collect()), key=repr)
+    assert got == want
+    assert any(r[0] == "session_end" for r in got)
 
 
 def test_delete_rule_events_stream(spark, tmp_path):
@@ -438,9 +493,17 @@ def test_streaming_rule_seed_read_is_bounded(spark, tmp_path):
     dirs = stage.seed_batch_dirs(min_ev)
     assert len(dirs) == 1 and dirs[0].endswith("batch=11")
 
-    seed = stage.last_fires(spark, min_ev)
+    from test_read_parquet import _jobs
+
+    seed, n_first = _jobs(spark, lambda: stage.last_fires(spark, min_ev))
     rows = seed.collect()
     assert [(r["rule_id"], r["entity_id"]) for r in rows] == [("r_cd", "ent_11")]
+    # the next trigger's seed read reuses the table's schema: no
+    # schema-inference job before its query runs
+    later = min_ev + dt.timedelta(seconds=30)
+    again, n_again = _jobs(spark, lambda: stage.last_fires(spark, later))
+    assert n_first >= 1 and n_again == 0
+    assert again.collect() == rows
 
     # grow the history 2x with batches strictly older than the cutoff:
     # the bounded read stays the same size

@@ -2,17 +2,18 @@
 
 Times each declared query in isolation with the noop sink (so the sink
 never pollutes the measurement), counts the Spark jobs each run submits
-(perfbench's ``sparkstats.jobs_between``), labels jobs for the UI, and
-captures ``explain("formatted")`` for the plan ledger under
+(perfbench's ``sparkstats.jobs_between``) and the py4j round trips that
+building its DataFrame takes (``Py4JRoundTrips``), labels jobs for the
+UI, and captures ``explain("formatted")`` for the plan ledger under
 ``plans/<tag>/``.
 
 Usage:
   python tools/profile_queries.py [--tag r06_before] [--reps 2] \
       [--sf-dir /root/testdata/sf0.1] [--explain-only] [query ...]
 
-Prints ``<query> wall_s=<w> jobs=<n>`` per run on stderr, then one JSON
-line: {"queries": {name: [walls...]}, "jobs": {name: [counts...]},
-"sf_dir": ...}.
+Prints ``<query> wall_s=<w> jobs=<n> py4j=<r>`` per run on stderr, then
+one JSON line: {"queries": {name: [walls...]}, "jobs": {name: [counts...]},
+"py4j": {name: [counts...]}, "sf_dir": ...}.
 This is a measurement tool only — bench.py remains the frozen metric.
 """
 
@@ -23,12 +24,39 @@ import gc
 import json
 import os
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.append(os.path.join(REPO, "perfbench"))
+
+
+class Py4JRoundTrips:
+    """Counts the py4j round trips (calls of the gateway client's
+    ``send_command``) the calling thread makes inside a ``with`` block;
+    ``n`` holds the count. py4j's finalizer thread, which releases JVM
+    objects that Python garbage-collected, is not counted: when it runs
+    depends on the collector, not on the code in the block."""
+
+    def __init__(self, spark):
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.n = 0
+
+    def __enter__(self):
+        send, me = self.client.send_command, threading.get_ident()
+
+        def counted(*args, **kwargs):
+            if threading.get_ident() == me:
+                self.n += 1
+            return send(*args, **kwargs)
+
+        self.client.send_command = counted
+        return self
+
+    def __exit__(self, *exc):
+        del self.client.send_command
 
 
 def main() -> int:
@@ -61,6 +89,7 @@ def main() -> int:
 
     walls: dict[str, list[float]] = {n: [] for n in names}
     jobs: dict[str, list[int]] = {n: [] for n in names}
+    py4j: dict[str, list[int]] = {n: [] for n in names}
     for rep in range(1 if args.explain_only else args.reps):
         for n in names:
             if rep == 0 and plan_dir is not None:
@@ -79,19 +108,24 @@ def main() -> int:
             spark.sparkContext.setJobDescription(f"profile:{n}")
             t0_ms = time.time() * 1000
             t0 = time.monotonic()
-            qs[n](spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+            with Py4JRoundTrips(spark) as trips:
+                df = qs[n](spark, args.sf_dir)
+            df.write.format("noop").mode("overwrite").save()
             walls[n].append(round(time.monotonic() - t0, 3))
+            py4j[n].append(trips.n)
             t1_ms = time.time() * 1000
             spark.sparkContext.setJobDescription(None)
             sparkstats.drain(spark)
             jobs[n].append(len(sparkstats.jobs_between(spark, t0_ms, t1_ms)))
-            print(f"{n} wall_s={walls[n][-1]} jobs={jobs[n][-1]}", file=sys.stderr, flush=True)
+            print(f"{n} wall_s={walls[n][-1]} jobs={jobs[n][-1]} py4j={py4j[n][-1]}",
+                  file=sys.stderr, flush=True)
             spark.catalog.clearCache()
         gc.collect()
 
     print(json.dumps({
         "queries": walls,
         "jobs": jobs,
+        "py4j": py4j,
         "sf_dir": args.sf_dir,
         "cores": args.cores,
         "loadavg_1m": round(os.getloadavg()[0], 2),
