@@ -39,7 +39,7 @@ from semstreams_spark.operators.merge import (
     entity_states_source_clustered,
     nodes_table_source_clustered,
 )
-from semstreams_spark.operators.joins import tool_invocation_correlation, turn_with_prior
+from semstreams_spark.operators.joins import resolve_aliases, tool_invocation_correlation, turn_with_prior
 from semstreams_spark.operators.sessions import sessionize
 from semstreams_spark.operators.windows import entity_cooccurrence, node_degree_tumbling
 from semstreams_spark.rules import DEFAULT_RULES, evaluate_rules
@@ -104,8 +104,8 @@ def q_edges_resolved(spark, sf_dir):
     the full triple fan-out, without materializing it (oracle-gated)."""
     t = _transcripts(spark, sf_dir)
     al = _aliases(spark, sf_dir).select(
-        entity_id(F.col("alias")).alias("alias_id"),
-        entity_id(F.col("entity_name")).alias("canonical_id"),
+        entity_id(F.col("alias")).alias("alias"),
+        entity_id(F.col("entity_name")).alias("canonical"),
     )
     r2 = lambda dst, et: F.struct(dst.alias("dst"), F.lit(et).alias("edge_type"))  # noqa: E731
     empty = F.array().cast("array<struct<dst:string,edge_type:string>>")
@@ -116,14 +116,8 @@ def q_edges_resolved(spark, sf_dir):
     rel = t.select(turn_subject().alias("src"), F.explode(refs).alias("r"), "ts").select(
         "src", F.col("r.dst").alias("dst"), F.col("r.edge_type").alias("edge_type"), "ts"
     )
-    res = (
-        rel.join(F.broadcast(al), rel["dst"] == al["alias_id"], "left")
-        .select(
-            "src",
-            F.coalesce(F.col("canonical_id"), F.col("dst")).alias("dst"),
-            "edge_type",
-            "ts",
-        )
+    res = resolve_aliases(rel, al, col="dst").select(
+        "src", F.col("dst_resolved").alias("dst"), "edge_type", "ts"
     )
     return res.groupBy("src", "dst", "edge_type").agg(
         F.min("ts").alias("created_at"), F.count(F.lit(1)).alias("n_obs")
@@ -223,12 +217,9 @@ def q_parts_no_sales(spark, sf_dir):
 
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup by content hash (md5 of raw text): keeper + copy count."""
-    d = _tbl(spark, sf_dir, "documents")
-    return (
-        d.select(F.md5(F.col("text")).alias("content_hash"), "doc_id")
-        .groupBy("content_hash")
-        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
+    from semstreams_spark.operators.dedup import exact_dedup
+
+    return exact_dedup(_tbl(spark, sf_dir, "documents"))
 
 
 # ------------------------------------------- dedup / similarity / text / search
@@ -566,7 +557,8 @@ NEARDUP_BANDS, NEARDUP_ROWS = 8, 6
 
 def planted_neardup_corpus(e):
     """Numpy form of the plant construction (see
-    _planted_neardup_corpus_catalyst for the full derivation notes):
+    planted_neardup_corpus_catalyst in tests/kernel_reference.py for the
+    full derivation notes):
     replays the EXACT per-element operation sequence of the Catalyst
     fold tree — sequential left-fold accumulations column-by-column,
     identical div/mul/add order, float64 throughout, final cast to
@@ -633,121 +625,6 @@ def planted_neardup_corpus(e):
 
     planted = e.filter(F.col("vec_id") % 10 == 0).mapInPandas(
         gen, "vec_id long, embedding array<float>"
-    )
-    return e.unionByName(planted)
-
-
-def _planted_neardup_corpus_catalyst(e):
-    """Base embeddings ∪ exact-rotation plants: every 10th vector v gets a
-    companion v' = cos_t·v̂ + sin_t·û at vec_id+1000000 — û is the unit
-    Gram-Schmidt residual of roll(v) (the vector's own components shifted
-    by one) against v̂, so cos(v, v') == cos_t EXACTLY (up to one float
-    rounding), with cos_t cycling through PLANT_COS by (vec_id div 10) % 3.
-
-    The perturbation direction must VARY per vector: a fixed direction
-    (e.g. e1) makes every plant's rotation correlated with the same few
-    hyperplanes, collapsing the per-plane collision probability well below
-    the 1 − θ/π model for those planes (measured: 0.826 vs 0.910 at the
-    0.9601 level) — roll(v) is pseudo-random per vector, restoring the
-    independence the banding math assumes. All arithmetic is
-    sequential-fold / per-element, mirrored verbatim in the DuckDB oracle."""
-    import math as _math
-
-    from semstreams_spark.operators.similarity import norm_expr
-
-    lvl = F.expr("vec_id div 10") % 3
-    ct = F.when(lvl == 0, F.lit(PLANT_COS[0])).when(lvl == 1, F.lit(PLANT_COS[1])).otherwise(
-        F.lit(PLANT_COS[2])
-    )
-    st = (
-        F.when(lvl == 0, F.lit(_math.sqrt(1.0 - PLANT_COS[0] ** 2)))
-        .when(lvl == 1, F.lit(_math.sqrt(1.0 - PLANT_COS[1] ** 2)))
-        .otherwise(F.lit(_math.sqrt(1.0 - PLANT_COS[2] ** 2)))
-    )
-    emb = F.col("embedding")
-    # Staged selects, one derived column per stage: inlining everything in
-    # one projection nests folds-over-folds (w inside nw inside every
-    # output element) into a 10^5+-node expression tree that the optimizer
-    # chews on for minutes; with stages, CollapseProject's expensive-
-    # expression guard keeps each alias expanded at most once. (The DuckDB
-    # oracle stages identically via MATERIALIZED CTEs.) NB the id shift
-    # happens in the FINAL select only — aliasing vec_id+1000000 AS vec_id
-    # earlier would capture the shifted id in ct/st via lateral column
-    # alias resolution.
-    g1 = e.filter(F.col("vec_id") % 10 == 0).select(
-        "vec_id",
-        "embedding",
-        norm_expr(emb).alias("nv"),
-        ct.alias("ct"),
-        st.alias("st"),
-    )
-    # u0 = roll(v) by one component (1-based: j -> (j % 64) + 1)
-    rolled = F.transform(
-        emb, lambda x, i: F.element_at(emb, ((i + F.lit(1)) % F.lit(64)) + F.lit(1)).cast("double")
-    )
-    # Gram-Schmidt: w = u0 - (u0·v̂)·v̂, û = w/||w||
-    nv = F.col("nv")
-    g2 = g1.select(
-        "vec_id",
-        "embedding",
-        "nv",
-        "ct",
-        "st",
-        F.aggregate(
-            F.zip_with(rolled, emb, lambda a, b: a * (b.cast("double") / nv)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("s"),
-    )
-    g3 = g2.select(
-        "vec_id",
-        "embedding",
-        "nv",
-        "ct",
-        "st",
-        F.zip_with(rolled, emb, lambda a, b: a - F.col("s") * (b.cast("double") / nv)).alias("w"),
-    )
-    g4 = g3.select(
-        "vec_id",
-        "embedding",
-        "nv",
-        "ct",
-        "st",
-        "w",
-        F.sqrt(F.aggregate(F.col("w"), F.lit(0.0), lambda acc, x: acc + x * x)).alias("nw"),
-    )
-    # Degenerate guard: if roll(v) is parallel to v (e.g. a constant
-    # vector) the residual norm nw is ~0 and w/nw would be NaN — NaN
-    # cosine then DIVERGES across engines (DuckDB sorts NaN greatest, so
-    # `cosine >= t` passes there but fails in Spark). Fall back to the
-    # Gram-Schmidt residual of e1 against v̂ — degenerate only for v ∝ e1,
-    # whose roll is ∝ e2 and never takes this branch. Mirrored verbatim
-    # in oracles.sql_embedding_neardup_lsh.
-    vh1 = F.element_at(emb, 1).cast("double") / nv
-    fb_w = F.transform(
-        F.sequence(F.lit(1), F.lit(64)),
-        lambda j: F.when(j == F.lit(1), F.lit(1.0)).otherwise(F.lit(0.0))
-        - vh1 * (F.element_at(emb, j).cast("double") / nv),
-    )
-    fb_nw = F.sqrt(F.lit(1.0) - vh1 * vh1)
-    g5 = g4.select(
-        "vec_id",
-        "embedding",
-        "nv",
-        "ct",
-        "st",
-        F.when(F.col("nw") >= F.lit(1e-12), F.col("w")).otherwise(fb_w).alias("w"),
-        F.when(F.col("nw") >= F.lit(1e-12), F.col("nw")).otherwise(fb_nw).alias("nw"),
-    )
-    planted = g5.select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.zip_with(
-            emb,
-            F.col("w"),
-            lambda b, a: (
-                F.col("ct") * (b.cast("double") / nv) + F.col("st") * (a / F.col("nw"))
-            ).cast("float"),
-        ).alias("embedding"),
     )
     return e.unionByName(planted)
 

@@ -1,11 +1,9 @@
-"""Community summarization (G5): TF keyword extraction + template summary
-+ representative entities.
+"""Community summarization (G5): TF keyword extraction + template summary.
 
 Reference: ``pkg/graphclustering/summarizer.go:45-410`` (stopworded TF
-keyword ranking ``extractTerms :383``, type-frequency template, PageRank
-representatives). The async LLM enhancement worker (G6,
-``enhancement_worker.go``) is an external HTTP service — stubbed behind
-``llm_enhance`` below.
+keyword ranking ``extractTerms :383``, type-frequency template). The
+async LLM enhancement worker (G6, ``enhancement_worker.go``) is an
+external HTTP service and has no counterpart here.
 
 Spark shape: one explode + two groupBy levels + window top-k; the
 template summary is a format_string over aggregates.
@@ -73,54 +71,4 @@ def community_summaries(
                 F.coalesce("keywords", F.lit("none")),
             ).alias("summary"),
         )
-    )
-
-
-def community_representatives(
-    members: DataFrame,  # (entity, community)
-    edges: DataFrame | None = None,  # (src, dst) for the degree fallback
-    ranks: DataFrame | None = None,  # (entity, rank) precomputed PageRank
-    k: int = 3,
-) -> DataFrame:
-    """Representative entities per community (``pkg/graphclustering/
-    summarizer.go:45-410``): top-k members by PageRank, falling back to
-    degree centrality when no rank table is supplied
-    (``pagerank.go:280-326`` degree fallback). Members in neither table
-    score 0. Returns (community, representatives array<string>) with the
-    deterministic (score desc, entity asc) order inside the array."""
-    if ranks is not None:
-        score = ranks.select("entity", F.col("rank").cast("double").alias("score"))
-    elif edges is not None:
-        from .pagerank import degree_centrality
-
-        score = degree_centrality(edges).select(
-            "entity", F.col("degree").cast("double").alias("score")
-        )
-    else:
-        raise ValueError("need ranks or edges (degree fallback)")
-    j = (
-        members.join(score, "entity", "left")
-        .fillna(0.0, ["score"])
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("community").orderBy(F.desc("score"), F.asc("entity"))
-            ),
-        )
-        .filter(F.col("rk") <= k)
-    )
-    return j.groupBy("community").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("rk", "entity"))), lambda s: s["entity"]
-        ).alias("representatives")
-    )
-
-
-def llm_enhance(summaries: DataFrame) -> DataFrame:
-    """G6 stub: the reference posts summaries to an external LLM service
-    (``summarizer.go:413-438``). No external services in this engine —
-    raise, keeping the interface importable and testable."""
-    raise NotImplementedError(
-        "LLM enhancement requires an external service (reference: semsummarize "
-        "HTTP worker); wire a foreachBatch HTTP sink here in deployment"
     )

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textops import portable_hash, tokens, word_ngrams
+from .textops import portable_hash
 
 # Mersenne prime modulus for the permutation family: 2^31-1 keeps
 # a*h+b < 2^62 (no int64 overflow under ANSI mode)
@@ -32,11 +32,12 @@ _P = 2147483647
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Groups of byte-identical documents: (content_hash, keeper, n_copies)."""
+    """Groups of byte-identical documents: (content_hash, keeper_doc_id,
+    n_copies); the keeper is the group's smallest id."""
     return (
         docs.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keeper"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min(id_col).alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
@@ -44,8 +45,8 @@ def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     """(doc_id, shingle) distinct pairs.
 
     r6: ONE Arrow ``mapInPandas`` pass — tokenize + n-gram + per-doc set
-    in Python per batch. The expression form (kept as
-    :func:`shingle_sets_expr`, parity test
+    in Python per batch. The expression form (``shingle_sets_expr`` in
+    tests/kernel_reference.py, parity test
     test_shingle_sets_kernel_matches_expr) paid two interpreted zip_with
     passes per doc (HOFs bypass codegen) plus a global DISTINCT exchange;
     since (doc_id, shingle) dedup is per-doc by construction, the set is
@@ -76,14 +77,6 @@ def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 import re as _re  # noqa: E402
 
 _TOKEN_SPLIT = _re.compile(r"[^a-z0-9_]+")
-
-
-def shingle_sets_expr(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Pure-Catalyst form of :func:`shingle_sets` (parity anchor)."""
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode(word_ngrams(F.col(text_col), n)).alias("shingle"))
-        .distinct()
-    )
 
 
 def jaccard_pairs(
@@ -242,8 +235,8 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     """64-bit SimHash per document: per-bit +1/-1 weighted votes over
     distinct-token hashes, sign-aggregated into a 60-bit fingerprint.
 
-    r6: ONE Arrow ``mapInPandas`` pass. The expression form (kept as
-    :func:`simhash_expr`, parity-tested) paid a token explode + a
+    r6: ONE Arrow ``mapInPandas`` pass. The expression form
+    (``simhash_expr`` in tests/kernel_reference.py, parity-tested) paid a token explode + a
     (doc, token) count aggregation + SIXTY sum(when) aggregate columns —
     the single most expensive plan in the registry (10.5 s at sf0.1 for
     5k docs). Per batch the kernel tokenizes, counts (collections.Counter
@@ -289,29 +282,6 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
             yield pd.DataFrame({"doc_id": ids, "simhash": np.array(fps, dtype=np.int64)})
 
     return docs.select(id_col, text_col).mapInPandas(gen, f"doc_id {id_t}, simhash long")
-
-
-def simhash_expr(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Pure-Catalyst form of :func:`simhash` (parity anchor).
-
-    Implemented as: token → portable hash → per-bit +1/-1 votes → sign.
-    The bit loop is an unrolled sum over F.when columns (pure codegen).
-    """
-    t = docs.select(F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("tok"))
-    t = t.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("w")).withColumn("h", portable_hash(F.col("tok")))
-    bit_aggs = [
-        F.sum(
-            F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, F.col("w")).otherwise(-F.col("w"))
-        ).alias(f"b{i}")
-        for i in range(60)  # portable hash is 60 bits
-    ]
-    sums = t.groupBy("doc_id").agg(*bit_aggs)
-    fp = None
-    for i in range(60):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, i)
-        fp = term if fp is None else fp.bitwiseOR(term)
-    return sums.select("doc_id", fp.alias("simhash"))
 
 
 def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:

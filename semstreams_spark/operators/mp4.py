@@ -19,7 +19,7 @@ Synthesis (``synth_mp4_bytes``) builds deterministic, spec-shaped files
 the parser round-trips, giving the ``media_mp4_metadata`` gate an
 analytic oracle (duration/track-count/codec are closed-form in the row
 id). Corrupt or truncated input raises ValueError — callers quarantine
-the row (same contract as the PNG/JPEG decoders).
+the row (same contract as ``decode_png_pixels``).
 
 Reference parity anchor: the reference treats media as opaque typed
 payloads with extracted metadata predicates (SURVEY §2.10); box-walk

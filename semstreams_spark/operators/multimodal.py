@@ -4,18 +4,12 @@ with typed metadata.
 Three media families decode for REAL with stdlib + numpy only: WAV
 audio (``decode_wav_features``, via ``wave``), non-interlaced 8-bit
 RGB/RGBA PNG (``decode_png_pixels`` / ``decode_png_features``, via
-``zlib`` inflate + full scanline unfiltering including Paeth), and
-baseline 4:4:4 JPEG (``operators/jpeg.py`` — complete Huffman entropy
-decode, DC prediction, AC run-length, dequantize, IDCT, color convert;
-pytest-verified since lossy output has no analytic SQL oracle), and
-MP4 video container METADATA (``extract_video_metadata`` via the
-stdlib ISO BMFF box walk in ``operators/mp4.py`` — brand, movie
-duration/timescale, track count, handler types, codec fourccs). Only
-per-frame VIDEO decode remains behind the deterministic fake
-(``_fake_decode`` — a software H.264 decoder is out of proportion);
-everything Spark-side is real and tested either way: schema,
-partition-friendly layout, Arrow batch shapes, ``mapInPandas`` UDF
-signatures, and the feature-extraction pipeline over binary columns.
+``zlib`` inflate + full scanline unfiltering including Paeth), and MP4
+video container METADATA (``extract_video_metadata`` via the stdlib
+ISO BMFF box walk in ``operators/mp4.py`` — brand, movie
+duration/timescale, track count, handler types, codec fourccs). Each
+decoder is an Arrow-batched ``mapInPandas`` over the binary column with
+a narrow numeric frame out.
 
 Layout contract for a 100 TB media table:
   (media_id long, kind string ∈ {image,audio,video}, media binary,
@@ -42,91 +36,6 @@ MEDIA_SCHEMA = (
     "meta struct<width:int, height:int, sample_rate:int, n_frames:int, codec:string>, "
     "ts timestamp"
 )
-
-
-def decode_available() -> bool:
-    """True when real codec libraries are importable (not in this image)."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _fake_decode(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Deterministic stand-in for image decode: seed from content hash →
-    pseudo-pixels. Keeps the whole pipeline testable without codecs; the
-    REAL decode drops in by replacing this one function."""
-    seed = int.from_bytes(hashlib.md5(payload).digest()[:4], "big")
-    rng = np.random.default_rng(seed)
-    return rng.integers(0, 256, size=(height, width, 3), dtype=np.uint8)
-
-
-def extract_image_features(media: DataFrame, batch_hint: int = 64) -> DataFrame:
-    """media table → (media_id, mean_r, mean_g, mean_b, brightness,
-    phash string) via Arrow-batched mapInPandas.
-
-    Real Spark plumbing: binary column travels as Arrow binary; each
-    batch decodes vectorized; output is a narrow numeric frame. PNG and
-    baseline JPEG payloads (signature-detected) decode for REAL via the
-    stdlib decoders (decode_png_pixels / jpeg.decode_jpeg_pixels); other
-    formats use the deterministic stub unless codec libs exist
-    (decode_available()).
-    """
-    if decode_available():  # pragma: no cover - not in this image
-        raise NotImplementedError("real decode path: swap _fake_decode for PIL")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib as _z
-
-        from .jpeg import decode_jpeg_pixels
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for mid, payload, meta in zip(pdf["media_id"], pdf["media"], pdf["meta"]):
-                w = int(meta["width"] or 8)
-                h = int(meta["height"] or 8)
-                raw = bytes(payload)
-                # signature-detected real decode; any in-profile-looking
-                # but unsupported payload (progressive JPEG, interlaced/
-                # 16-bit PNG, truncated bytes) must NOT fail the whole
-                # Spark job — per the decoders' documented contract the
-                # ValueError signals "fall back / quarantine the row";
-                # zlib.error covers a signature-valid PNG whose deflate
-                # stream is corrupt (zlib.decompress raises its own class,
-                # not ValueError — r5 ADVICE fix: the decoder contract is
-                # "never fail the whole job")
-                px = None
-                try:
-                    if raw[:8] == _PNG_SIG:
-                        px = decode_png_pixels(raw)[:, :, :3].astype(np.float64)
-                    elif raw[:2] == b"\xff\xd8":
-                        px = decode_jpeg_pixels(raw).astype(np.float64)
-                        if px.shape[2] == 1:
-                            px = np.repeat(px, 3, axis=2)
-                except (ValueError, _z.error):
-                    px = None
-                if px is not None:
-                    h, w = px.shape[0], px.shape[1]
-                else:
-                    px = _fake_decode(raw, w, h).astype(np.float64)
-                means = px.mean(axis=(0, 1))
-                # 64-bit average-hash fingerprint over an 8x8 downsample
-                small = px.mean(axis=2)[:: max(1, h // 8), :: max(1, w // 8)][:8, :8]
-                bits = (small > small.mean()).flatten()
-                phash = "".join("1" if b else "0" for b in bits)
-                rows.append((mid, means[0], means[1], means[2], px.mean(), phash))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "mean_r", "mean_g", "mean_b", "brightness", "phash"]
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        gen,
-        schema="media_id long, mean_r double, mean_g double, mean_b double, brightness double, phash string",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -372,8 +281,8 @@ def extract_video_metadata(media: DataFrame, batch_hint: int = 256) -> DataFrame
     """video rows → container metadata via the stdlib ISO BMFF box walk
     (operators/mp4.py): (media_id, brand, timescale, duration_ms,
     n_tracks, codecs, handlers). Non-BMFF / corrupt payloads are
-    QUARANTINED per row (all-null metadata), never fail the job — the
-    same contract as the image decoders. Arrow-batched mapInPandas: the
+    QUARANTINED per row (all-null metadata), never fail the job.
+    Arrow-batched mapInPandas: the
     right shape for per-blob container parsing; at real 100 TB scale a
     native demuxer drops in behind this one function."""
     from .mp4 import parse_mp4_metadata
@@ -416,20 +325,6 @@ def extract_video_metadata(media: DataFrame, batch_hint: int = 256) -> DataFrame
         media.filter(F.col("kind") == "video")
         .select("media_id", "media")
         .mapInPandas(gen, VIDEO_META_SCHEMA)
-    )
-
-
-def sample_video_frames(media: DataFrame, every_nth: int = 10) -> DataFrame:
-    """Frame sampling plan for video rows: emits (media_id, frame_idx)
-    rows JVM-side (sequence+explode); the per-frame decode hangs off this
-    with the same stub/real split as images."""
-    v = media.filter(F.col("kind") == "video")
-    return v.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("meta.n_frames") - 1, F.lit(0)), F.lit(every_nth))
-        ).alias("frame_idx"),
-        "ts",
     )
 
 

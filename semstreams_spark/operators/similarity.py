@@ -197,27 +197,6 @@ def banded_recall(threshold: float, bands: int, rows_per_band: int) -> float:
     return 1.0 - (1.0 - p**rows_per_band) ** bands
 
 
-def banded_hyperplane_signatures(
-    vec: Column, bands: int, rows_per_band: int, dim: int = 64
-) -> Column:
-    """array<struct<band:int, sig:long>> — band i's signature packs the
-    sign bits of planes [i·r, (i+1)·r). The (band, sig) pair is the LSH
-    bucket key: equal in ANY band → candidate (OR-of-ANDs). Buckets per
-    band = 2^r, so r sizes bucket population (r ≈ log2(N / target bucket
-    size) at scale) and b is derived from the recall target
-    (lsh_band_params)."""
-    entries = []
-    for bidx in range(bands):
-        sig = F.lit(0).cast("long")
-        for j in range(rows_per_band):
-            d = _plane_dot(vec, bidx * rows_per_band + j, dim)
-            sig = sig.bitwiseOR(
-                F.shiftleft(F.when(d >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long"), j)
-            )
-        entries.append(F.struct(F.lit(bidx).alias("band"), sig.alias("sig")))
-    return F.array(*entries)
-
-
 def banded_signatures_numpy(
     embeddings: DataFrame,
     bands: int,
@@ -227,7 +206,8 @@ def banded_signatures_numpy(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_id, band, sig) — the exploded form of
-    ``banded_hyperplane_signatures`` computed by an Arrow numpy kernel.
+    ``banded_hyperplane_signatures`` (tests/kernel_reference.py)
+    computed by an Arrow numpy kernel.
 
     The Catalyst form evaluates bands·rows_per_band interpreted fold
     lambdas of ``dim`` terms per row (HOFs bypass codegen); here the

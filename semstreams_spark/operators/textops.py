@@ -40,31 +40,6 @@ def tokens(col: Column) -> Column:
     )
 
 
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
-def word_ngrams(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as strings (array<string>).
-
-    Built by n−1 zip_with passes over shifted copies of the token array
-    (two array allocations per DOC per pass) instead of a slice+concat
-    per SHINGLE — the per-shingle slice form was 2× slower at sf0.1
-    (interpreted HOF allocating k short-lived arrays per doc). Output is
-    string-identical, so every shingle-based oracle is unaffected. Stays
-    map-only (a window/lead formulation is faster still on a warm local
-    run but shuffles the whole token stream — wrong shape at scale)."""
-    toks = tokens(col)
-    sz = F.size(toks)
-    k = sz - (n - 1)
-    acc = toks
-    for j in range(1, n):
-        # zip pads the shorter (shifted) side with NULL; concat of NULL
-        # yields NULL tail entries, trimmed by the final slice to k
-        acc = F.zip_with(acc, F.slice(toks, j + 1, sz), lambda a, b: F.concat(a, F.lit(" "), b))
-    return F.when(k <= 0, F.array(F.concat_ws(" ", toks))).otherwise(F.slice(acc, 1, k))
-
-
 def fingerprint(col: Column) -> Column:
     """Document fingerprint: md5 of whitespace-normalized lowercase text
     (content-addressed identity; reference SHA-256 content hash)."""

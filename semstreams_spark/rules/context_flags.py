@@ -19,33 +19,6 @@ from ..graph.traversal import bounded_traversal
 from .engine import Rule, evaluate_rules
 
 
-def context_flags(
-    edges: DataFrame,
-    entity_states: DataFrame,  # (subject, predicate, object, ts)
-    start_entity: str,
-    rules: list[Rule],
-    max_depth: int = 2,
-    edge_filter: list[str] | None = None,
-) -> dict[str, bool]:
-    """Evaluate rules over the ≤max_depth neighborhood of start_entity.
-
-    Returns {rule_id: bool} — True iff any neighborhood entity matches.
-    Driver-side dict by design: this is the point-query API shape (the
-    reference replies a flags map over NATS); the set-oriented form is
-    ``evaluate_rules(states.join(neighborhood, ...))`` for batch scoring
-    of many entities at once.
-    """
-    hood = bounded_traversal(
-        edges, start_entity, max_depth=max_depth, edge_filter=edge_filter
-    ).select(F.col("entity").alias("subject"))
-    local_states = entity_states.join(F.broadcast(hood), "subject", "left_semi")
-    fired = {
-        r["rule_id"]
-        for r in evaluate_rules(local_states, rules).select("rule_id").distinct().collect()
-    }
-    return {rule.id: rule.id in fired for rule in rules if rule.enabled}
-
-
 def context_flags_df(
     edges: DataFrame,
     entity_states: DataFrame,
@@ -54,10 +27,11 @@ def context_flags_df(
     max_depth: int = 2,
     edge_filter: list[str] | None = None,
 ) -> DataFrame:
-    """Set-oriented form of ``context_flags``: one (rule_id, flag) row per
-    enabled rule — flag true iff ANY entity in the bounded neighborhood
-    matches. This is the gateable/compose-able shape (the dict form above
-    is the NATS point-reply shape)."""
+    """Evaluate rules over the ≤max_depth neighborhood of start_entity:
+    one (rule_id, flag) row per enabled rule — flag true iff ANY entity
+    in the bounded neighborhood matches. The reference replies the same
+    flags as a map over NATS; ``{r.rule_id: r.flag for r in collect()}``
+    is that point-reply shape."""
     spark = edges.sparkSession
     hood = bounded_traversal(
         edges, start_entity, max_depth=max_depth, edge_filter=edge_filter

@@ -250,7 +250,8 @@ def apply_cooldown(
 def subject_pattern_regex(pattern: str) -> str | None:
     """Anchored regex for a NATS-style subject pattern; None for ``>``
     (match-all). Shared by the Column filter below and the SQL compiler
-    (``rules.sql_compile``) so the two engines cannot drift."""
+    the tests check it against (tests/rules_sql_reference.py), so the two
+    engines cannot drift."""
     if pattern == ">":
         return None
     parts = pattern.split(".")

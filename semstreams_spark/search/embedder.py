@@ -6,8 +6,8 @@ terms into dimensions with TF weighting and L2-normalizing
 the embedding pipeline dedups embedder calls by content hash
 (``docs/architecture/GRAPHRAG_LESSONS_LEARNED.md:514``, G8).
 
-Spark shape: tokens → portable hash % dim → per-bucket counts folded into
-a dense array — one explode + one groupBy, all Catalyst; no model state,
+Spark shape: one Arrow ``mapInPandas`` pass — tokens → portable hash %
+dim → per-bucket counts → L2 norm, per row; no model state,
 bit-reproducible anywhere (DuckDB mirror in oracles.sql_entity_semantic_topk,
 driver-side mirror in embed_text_py for query vectors).
 """
@@ -21,7 +21,6 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.textops import portable_hash, tokens
 
 DEFAULT_DIM = 384  # reference default (bm25_embedder.go:61-62)
 
@@ -36,8 +35,8 @@ def embed_texts(df: DataFrame, id_col: str, text_col: str = "text", dim: int = D
     md5-bucketed and normalized exactly like :func:`embed_text_py` (the
     proven driver-side mirror: same token regex, same md5-hex-prefix hash,
     same index-order norm fold), so values are bit-identical to the
-    expression form, which remains below as :func:`embed_texts_expr` with
-    a parity test. Why: the expression form cost three shuffles (token
+    expression form, ``embed_texts_expr`` in tests/kernel_reference.py,
+    with a parity test. Why: the expression form cost three shuffles (token
     explode → (id, bucket) agg → map agg) plus a dim-wide interpreted
     transform per row (HOFs bypass codegen, guide §4.2); the kernel is a
     single map pass with no exchange — per doc O(tokens + dim), the same
@@ -74,38 +73,6 @@ def embed_texts(df: DataFrame, id_col: str, text_col: str = "text", dim: int = D
     return df.select(id_col, text_col).mapInPandas(
         gen, f"{id_col} {id_t}, embedding array<double>"
     )
-
-
-def embed_texts_expr(df: DataFrame, id_col: str, text_col: str = "text", dim: int = DEFAULT_DIM) -> DataFrame:
-    """The pure-Catalyst expression form of :func:`embed_texts` (kept as
-    the cross-engine reference implementation + parity-test anchor).
-
-    Densify is O(tokens + dim) per doc: tokens aggregate to (bucket →
-    count) map entries (two-level hash agg, map-side combinable), then one
-    transform does a map lookup per dimension — not a filter-scan of the
-    token list per dimension, which is O(dim × tokens) and 6× the work at
-    the reference's 384 dims.
-    """
-    t = df.select(F.col(id_col).alias("_id"), F.explode(tokens(F.col(text_col))).alias("tok"))
-    b = t.select("_id", (portable_hash(F.col("tok")) % dim).cast("int").alias("bucket"))
-    cnt = b.groupBy("_id", "bucket").agg(F.count(F.lit(1)).alias("c"))
-    g = cnt.groupBy("_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("bucket", "c"))).alias("bc")
-    )
-    # try_element_at: plain element_at on a map THROWS on a missing key
-    # under ANSI mode (Spark 4 default)
-    vec = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.coalesce(F.try_element_at(F.col("bc"), i), F.lit(0).cast("long")).cast(
-            "double"
-        ),
-    )
-    out = g.withColumn("_vec", vec)
-    norm = F.sqrt(F.aggregate(F.col("_vec"), F.lit(0.0), lambda acc, x: acc + x * x))
-    emb = F.when(
-        norm > 0, F.transform(F.col("_vec"), lambda x: x / norm)
-    ).otherwise(F.col("_vec"))
-    return out.select(F.col("_id").alias(id_col), emb.alias("embedding"))
 
 
 def embed_entities_deduped(

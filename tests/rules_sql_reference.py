@@ -1,14 +1,12 @@
 """Compile Rule objects to ANSI SQL — an independent second
 implementation of the rule semantics (reference:
-``processor/rule/expression/evaluator.go``) used two ways:
-
-- as the DuckDB differential-fuzz oracle
-  (``tests/test_properties.py``): Hypothesis generates random rule
-  configs and random triple tables; Spark's ``evaluate_rules`` and this
-  compiler's SQL must agree row-for-row, pinning the subtle coercion
-  and required-field semantics beyond the fixed gates;
-- to register rules on the SQL surface (``plans/sql_surface.py``), so
-  CEP rules are SQL-reachable like the query API.
+``processor/rule/expression/evaluator.go``): the DuckDB oracle that
+``evaluate_rules`` is checked against row for row
+(tests/test_rules_fuzz.py, where Hypothesis generates random rule
+configs and random triple tables, and
+tests/test_api_transforms.py::test_rule_sql_compiles_subject_pattern),
+pinning the subtle coercion and required-field semantics beyond the
+fixed gates.
 
 Semantics contract (shared with ``rules/engine.py``, documented there):
 - eq/ne compare numerically when BOTH sides cast to double, else as
@@ -27,7 +25,7 @@ function name differs (``rlike`` vs ``regexp_matches``) — pass
 
 from __future__ import annotations
 
-from .engine import Condition, Rule, subject_pattern_regex
+from semstreams_spark.rules.engine import Condition, Rule, subject_pattern_regex
 
 
 def _q(s: str) -> str:

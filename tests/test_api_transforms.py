@@ -11,12 +11,7 @@ from pyspark.sql import functions as F
 from semstreams_spark.extract import extract_triples
 from semstreams_spark.graph.summarize import community_summaries, top_terms
 from semstreams_spark.operators import edges_table, nodes_table
-from semstreams_spark.operators.multimodal import (
-    extract_image_features,
-    media_metadata_stats,
-    sample_video_frames,
-    synthesize_media,
-)
+from semstreams_spark.operators.multimodal import media_metadata_stats, synthesize_media
 from semstreams_spark.operators.transforms import (
     FilterRule,
     json_filter,
@@ -142,19 +137,6 @@ def test_top_terms_and_summaries(spark):
 
 def test_multimodal_features_and_pruning(spark, tmp_path):
     media = synthesize_media(spark, n=24)
-    feats = extract_image_features(media)
-    rows = feats.collect()
-    assert len(rows) == 8  # every 3rd is an image
-    assert all(0 <= r["brightness"] <= 255 for r in rows)
-    assert all(len(r["phash"]) == 64 for r in rows)
-    # determinism: same content -> same features
-    rows2 = extract_image_features(media).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))
-
-    frames = sample_video_frames(media, every_nth=10)
-    f0 = frames.groupBy("media_id").count().first()
-    assert f0["count"] >= 1
-
     stats = media_metadata_stats(media)
     assert stats.count() == 3
     # column pruning: a metadata-only projection over the parquet table
@@ -318,183 +300,6 @@ def test_mp4_metadata_real_path(spark):
     assert out[99]["brand"] is None and out[99]["duration_ms"] is None
 
 
-def test_image_features_use_real_png_decode(spark):
-    """extract_image_features detects the PNG signature and decodes for
-    real: means/brightness equal the analytic pixel means, not the
-    content-hash fake."""
-    import numpy as np
-
-    from semstreams_spark.operators.multimodal import (
-        extract_image_features,
-        synthesize_png_media,
-    )
-
-    feats = {r["media_id"]: r for r in extract_image_features(synthesize_png_media(spark, n=6)).collect()}
-    i = 2
-    w, h = 8 + (i % 4) * 8, 8 + (i % 3) * 8
-    p = np.arange(h * w * 3, dtype=np.int64)
-    v = ((i * 131 + p * 197) % 256).reshape(h, w, 3)
-    assert abs(feats[i]["brightness"] - v.mean()) < 1e-9
-    assert abs(feats[i]["mean_g"] - v[:, :, 1].mean()) < 1e-9
-
-
-def test_jpeg_codec_real_path(spark):
-    """Real baseline JPEG codec (stdlib+numpy): Huffman entropy coding,
-    DC prediction, AC run-length, DCT. Lossy, so no SQL oracle — pinned
-    by roundtrip error bounds, exact cases, and strict-profile rejects."""
-    import numpy as np
-    import pytest as _pytest
-
-    from semstreams_spark.operators.jpeg import (
-        decode_jpeg_pixels,
-        encode_jpeg,
-        synth_jpeg_bytes,
-    )
-
-    # constant image: DC-only blocks roundtrip EXACTLY (no AC, no color
-    # rounding ambiguity) — proves the entropy path bit-for-bit
-    px = np.full((16, 24, 3), 77, dtype=np.uint8)
-    assert np.array_equal(decode_jpeg_pixels(encode_jpeg(px, 90)), px)
-
-    # q100: quantizer ≈ identity, error bounded by DCT float rounding —
-    # holds even for pure noise (hardest content)
-    rng = np.random.default_rng(0)
-    noisy = rng.integers(0, 256, size=(24, 24, 3), dtype=np.uint8)
-    out = decode_jpeg_pixels(encode_jpeg(noisy, 100))
-    assert np.abs(out.astype(int) - noisy.astype(int)).max() <= 3
-
-    # smooth fixture at q90: tight bound, deterministic bytes
-    b, w, h = synth_jpeg_bytes(3, quality=90)
-    b2, _, _ = synth_jpeg_bytes(3, quality=90)
-    assert b == b2
-    dec = decode_jpeg_pixels(b)
-    assert dec.shape == (h, w, 3)
-
-    # grayscale path
-    g = (np.arange(256).reshape(16, 16) % 256).astype(np.uint8)
-    og = decode_jpeg_pixels(encode_jpeg(g, 95))
-    assert og.shape == (16, 16, 1)
-    assert np.abs(og[:, :, 0].astype(int) - g.astype(int)).max() <= 2
-
-    # strict profile: progressive / subsampled / truncated / non-JPEG
-    # all raise ValueError (quarantine, never garbage)
-    prog = bytearray(b)
-    sof = prog.find(b"\xff\xc0")
-    prog[sof + 1] = 0xC2  # rewrite SOF0 -> SOF2 (progressive)
-    for bad in (b"nope", b[:30], bytes(prog)):
-        with _pytest.raises(ValueError):
-            decode_jpeg_pixels(bad)
-
-
-def test_image_features_use_real_jpeg_decode(spark):
-    """extract_image_features detects the JPEG signature and decodes for
-    real: brightness of a constant-color JPEG equals that color."""
-    import datetime as _dt
-
-    import numpy as np
-
-    from semstreams_spark.operators.jpeg import encode_jpeg
-    from semstreams_spark.operators.multimodal import MEDIA_SCHEMA, extract_image_features
-
-    px = np.full((16, 16, 3), 200, dtype=np.uint8)
-    rows = [
-        (
-            0,
-            "image",
-            bytearray(encode_jpeg(px, 90)),
-            {"width": 16, "height": 16, "sample_rate": None, "n_frames": None, "codec": "jpeg"},
-            _dt.datetime(2025, 1, 1),
-        )
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = extract_image_features(media).collect()
-    assert len(feats) == 1
-    assert abs(feats[0]["brightness"] - 200.0) < 1e-9
-    assert abs(feats[0]["mean_r"] - 200.0) < 1e-9
-
-
-def test_jpeg_subsampling_and_restart_intervals(spark):
-    """The decoder handles the layouts real JPEGs actually use: 4:2:0
-    chroma subsampling (luma near-exact, chroma error bounded) and
-    restart intervals (DRI + RSTn with DC-predictor reset), including
-    non-multiple-of-16 dimensions and out-of-sequence marker detection."""
-    import numpy as np
-    import pytest as _pytest
-
-    from semstreams_spark.operators.jpeg import (
-        _rgb_to_ycbcr,
-        decode_jpeg_pixels,
-        encode_jpeg,
-    )
-
-    rng = np.random.default_rng(1)
-    px = rng.integers(0, 256, size=(24, 24, 3), dtype=np.uint8)
-
-    # restart intervals are transparent to content
-    out = decode_jpeg_pixels(encode_jpeg(px, 100, restart_interval=2))
-    assert np.abs(out.astype(int) - px.astype(int)).max() <= 3
-
-    # 4:2:0: luma carries full resolution; chroma is box-averaged
-    yy, xx = np.mgrid[0:40, 0:56].astype(np.float64)
-    sm = np.clip(
-        np.round(
-            np.stack(
-                [128 + 80 * np.sin(2 * np.pi * xx / 56), 128 + 80 * np.cos(2 * np.pi * yy / 40), xx * 2 + yy],
-                axis=-1,
-            )
-        ),
-        0,
-        255,
-    ).astype(np.uint8)
-    o420 = decode_jpeg_pixels(encode_jpeg(sm, 95, subsample=True))
-    y_err = np.abs(
-        _rgb_to_ycbcr(sm.astype(np.float64))[..., 0] - _rgb_to_ycbcr(o420.astype(np.float64))[..., 0]
-    )
-    assert y_err.max() <= 3  # luma near-exact
-    assert np.abs(o420.astype(int) - sm.astype(int)).max() <= 16  # chroma bounded
-
-    # odd (non-MCU-multiple) dims through the subsampled + restart path
-    odd = sm[:37, :51]
-    o2 = decode_jpeg_pixels(encode_jpeg(odd, 95, subsample=True, restart_interval=3))
-    assert o2.shape == (37, 51, 3)
-
-    # an out-of-sequence restart marker is an error, not silent corruption
-    b1 = bytearray(encode_jpeg(px, 100, restart_interval=2))
-    i = next(j for j in (b1.find(bytes([0xFF, 0xD0 + k])) for k in range(8)) if j > 0)
-    b1[i + 1] = 0xD7 if b1[i + 1] != 0xD7 else 0xD6
-    with _pytest.raises(ValueError):
-        decode_jpeg_pixels(bytes(b1))
-
-
-def test_image_features_quarantine_corrupt_deflate(spark):
-    """A signature-valid PNG whose IDAT deflate stream is corrupt raises
-    zlib.error (not ValueError) from zlib.decompress — the quarantine
-    guard must catch it and fall back instead of failing the Spark job
-    (r5 ADVICE fix)."""
-    import struct
-    import zlib
-
-    from semstreams_spark.operators.multimodal import extract_image_features
-
-    def chunk(tag, payload):
-        return (
-            struct.pack(">I", len(payload))
-            + tag
-            + payload
-            + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
-        )
-
-    sig = b"\x89PNG\r\n\x1a\n"
-    ihdr = struct.pack(">IIBBBBB", 8, 8, 8, 2, 0, 0, 0)
-    bad = sig + chunk(b"IHDR", ihdr) + chunk(b"IDAT", b"\x00NOT-DEFLATE\xff") + chunk(b"IEND", b"")
-    media = spark.createDataFrame(
-        [(0, "image", bad, {"width": "8", "height": "8"})],
-        "media_id long, kind string, media binary, meta map<string,string>",
-    )
-    rows = extract_image_features(media).collect()  # must NOT raise
-    assert len(rows) == 1  # quarantined to the deterministic fallback
-
-
 def test_pin_state_engine_marker(spark, tmp_path):
     import os
 
@@ -550,7 +355,7 @@ def test_rule_sql_compiles_subject_pattern(spark):
     import pandas as pd
 
     from semstreams_spark.rules.engine import Condition, Rule, evaluate_rules
-    from semstreams_spark.rules.sql_compile import rule_sql
+    from rules_sql_reference import rule_sql
 
     rows = [
         ("app.user.1", "kind", "vip", "2025-01-01 00:00:00"),

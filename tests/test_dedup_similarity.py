@@ -15,7 +15,7 @@ from semstreams_spark.operators.dedup import (
     simhash_near_dups,
 )
 from semstreams_spark.operators.similarity import ann_topk_lsh, cosine_topk
-from semstreams_spark.operators.textops import fingerprint, lang_id, token_count
+from semstreams_spark.operators.textops import fingerprint, lang_id, tokens
 from semstreams_spark.search import bm25_search, hybrid_search
 
 DOCS = [
@@ -35,7 +35,7 @@ def docs(spark):
 def test_exact_dedup(docs):
     out = {r["content_hash"]: r for r in exact_dedup(docs).collect()}
     groups = [r for r in out.values() if r["n_copies"] > 1]
-    assert len(groups) == 1 and groups[0]["keeper"] == 0 and groups[0]["n_copies"] == 2
+    assert len(groups) == 1 and groups[0]["keeper_doc_id"] == 0 and groups[0]["n_copies"] == 2
 
 
 def test_jaccard_pairs(docs):
@@ -85,7 +85,7 @@ def test_cosine_topk_exact_and_ann(spark):
 def test_text_ops(docs):
     out = docs.select(
         "doc_id",
-        token_count(F.col("text")).alias("n"),
+        F.size(tokens(F.col("text"))).alias("n"),
         fingerprint(F.col("text")).alias("fp"),
         lang_id(F.col("text")).alias("lang"),
     ).collect()
@@ -270,31 +270,6 @@ def test_jaccard_hot_shingle_guard(spark):
     assert capped[(1, 2)] <= exact[(1, 2)]
 
 
-def test_community_representatives_degree_fallback(spark):
-    from semstreams_spark.graph.summarize import community_representatives
-
-    e = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("a", "d"), ("x", "y")], "src string, dst string"
-    )
-    members = spark.createDataFrame(
-        [("a", "c1"), ("b", "c1"), ("c", "c1"), ("d", "c1"), ("x", "c2"), ("y", "c2")],
-        "entity string, community string",
-    )
-    reps = {r["community"]: r["representatives"] for r in
-            community_representatives(members, edges=e, k=2).collect()}
-    assert reps["c1"][0] == "a"          # degree 3 hub leads
-    assert len(reps["c1"]) == 2
-    assert set(reps["c2"]) == {"x", "y"}  # tie -> deterministic entity asc
-    # explicit rank table wins over degree
-    ranks = spark.createDataFrame(
-        [("a", 0.1), ("b", 0.9), ("c", 0.2), ("d", 0.3), ("x", 0.5), ("y", 0.4)],
-        "entity string, rank double",
-    )
-    reps2 = {r["community"]: r["representatives"] for r in
-             community_representatives(members, ranks=ranks, k=1).collect()}
-    assert reps2["c1"] == ["b"] and reps2["c2"] == ["x"]
-
-
 def test_ivf_topk_finds_near_copy(spark):
     import numpy as np
 
@@ -402,6 +377,7 @@ def test_planted_corpus_numpy_matches_catalyst(spark):
     import struct
 
     import __spark_entry__ as entry
+    from kernel_reference import planted_neardup_corpus_catalyst
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         "vec_id", "embedding"
@@ -409,7 +385,7 @@ def test_planted_corpus_numpy_matches_catalyst(spark):
     a = {r["vec_id"]: r["embedding"] for r in entry.planted_neardup_corpus(e).collect()}
     b = {
         r["vec_id"]: r["embedding"]
-        for r in entry._planted_neardup_corpus_catalyst(e).collect()
+        for r in planted_neardup_corpus_catalyst(e).collect()
     }
     assert set(a) == set(b) and len(a) > len(e.collect())
     for vid in a:
@@ -525,10 +501,9 @@ def test_cosine_numpy_matches_catalyst(spark, emb001):
 
 
 def test_banded_signatures_numpy_parity(spark, emb001):
-    from semstreams_spark.operators.similarity import (
-        banded_hyperplane_signatures,
-        banded_signatures_numpy,
-    )
+    from kernel_reference import banded_hyperplane_signatures
+
+    from semstreams_spark.operators.similarity import banded_signatures_numpy
 
     expr = {
         (r["vec_id"], r["band"]): r["sig"]
@@ -603,7 +578,9 @@ def test_pair_cosines_numpy_parity(spark, emb001):
 
 
 def test_embed_texts_kernel_matches_expr(spark, docs):
-    from semstreams_spark.search.embedder import embed_texts, embed_texts_expr
+    from kernel_reference import embed_texts_expr
+
+    from semstreams_spark.search.embedder import embed_texts
 
     kern = {r["doc_id"]: tuple(r["embedding"]) for r in embed_texts(docs, id_col="doc_id", dim=64).collect()}
     expr = {r["doc_id"]: tuple(r["embedding"]) for r in embed_texts_expr(docs, id_col="doc_id", dim=64).collect()}
@@ -611,7 +588,9 @@ def test_embed_texts_kernel_matches_expr(spark, docs):
 
 
 def test_shingle_sets_kernel_matches_expr(spark, docs):
-    from semstreams_spark.operators.dedup import shingle_sets, shingle_sets_expr
+    from kernel_reference import shingle_sets_expr
+
+    from semstreams_spark.operators.dedup import shingle_sets
 
     real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for df in (docs, real):
@@ -684,7 +663,9 @@ def test_conv_pair_counts_matches_catalyst_pairs(spark):
 
 
 def test_simhash_kernel_matches_expr(spark, docs):
-    from semstreams_spark.operators.dedup import simhash, simhash_expr
+    from kernel_reference import simhash_expr
+
+    from semstreams_spark.operators.dedup import simhash
 
     real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for df in (docs, real):

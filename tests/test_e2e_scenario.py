@@ -5,7 +5,7 @@ whole engine surface in sequence —
   files → streaming ingest (stateful merge) + rule stage (cooldown,
   exactly-once, manifest commit mode) → publish hour-partitioned triple
   log → compact LWW node/edge tables → tombstone stream (delete rule
-  events + status flip) → query API + SQL surface over the result —
+  events + status flip) → query API over the result —
 
 with cross-checks at every boundary against the batch engine.
 """
@@ -152,17 +152,3 @@ def test_full_pipeline_scenario(spark, tmp_path):
     live = edges_after_deletes(edges, deletes)
     assert edges.filter(F.col("src") == victim).count() > 0
     assert live.filter(F.col("src") == victim).count() == 0
-
-    # 5) SQL surface over the same flow (views derived from raw input)
-    from semstreams_spark.plans.sql_surface import register_graph_views
-
-    register_graph_views(spark, spark.read.parquet(indir).dropDuplicates(["conv_id", "turn_idx"]))
-    n_sql = spark.sql(
-        "SELECT count(*) AS n FROM triples WHERE predicate = 'conv.turn.mentions'"
-    ).first()["n"]
-    n_stream = deltas.filter(
-        (F.col("kind") == "triple") & (F.col("predicate") == "conv.turn.mentions")
-    ).count()
-    assert n_sql == n_stream > 0
-    # entity_states via SQL equals the compacted table's row count
-    assert spark.sql("SELECT count(*) AS n FROM entity_states").first()["n"] == states.count()

@@ -186,7 +186,10 @@ def test_rule_cooldown_greedy_from_last_fire(spark):
 
 
 def test_context_flags(spark):
-    from semstreams_spark.rules.context_flags import context_flags
+    from semstreams_spark.rules.context_flags import context_flags_df
+
+    def context_flags(*args, **kw):
+        return {r["rule_id"]: r["flag"] for r in context_flags_df(*args, **kw).collect()}
 
     edges = spark.createDataFrame(
         [("a", "b", "t"), ("b", "c", "t"), ("x", "y", "t")],
@@ -251,34 +254,6 @@ def test_subject_wildcard_matching(spark):
 
     with _pytest.raises(ValueError):
         subject_pattern_filter(F.col("subject"), "a.>.b")
-
-
-def test_entity_model_enums(spark):
-    from semstreams_spark.operators.entity_model import (
-        entity_class_from_id,
-        normalize_class,
-        normalize_role,
-        normalize_status,
-    )
-
-    df = spark.createDataFrame(
-        [
-            ("test.local.graph.kb.conversation.c1", "Agent", "primary", "critical"),
-            ("test.local.conv.c1.turn.3", "Bogus", "driver", "zombie"),
-            ("test.local.graph.kb.entity.e1", "Place", "observed", "inactive"),
-        ],
-        "id string, cls string, role string, status string",
-    )
-    out = df.select(
-        entity_class_from_id(F.col("id")).alias("from_id"),
-        normalize_class(F.col("cls")).alias("cls"),
-        normalize_role(F.col("role")).alias("role"),
-        normalize_status(F.col("status")).alias("status"),
-    ).collect()
-    assert [r["from_id"] for r in out] == ["Process", "Event", "Thing"]
-    assert [r["cls"] for r in out] == ["Agent", "Thing", "Place"]
-    assert [r["role"] for r in out] == ["primary", "related", "observed"]
-    assert [r["status"] for r in out] == ["critical", "unknown", "inactive"]
 
 
 def test_edge_expiry_column_and_filter(spark):

@@ -26,10 +26,14 @@ def test_filter_pushdown_to_parquet(spark):
 
 
 def test_alias_resolution_is_broadcast_join(spark):
+    """resolve_aliases alone and inside the registered edges_resolved
+    query: the alias dim broadcasts."""
+    import __spark_entry__ as entry
+
     df = spark.createDataFrame([("a",), ("b",)], "entity string")
     dim = spark.createDataFrame([("a", "A")], "alias string, canonical string")
-    p = _plan(resolve_aliases(df, dim))
-    assert "BroadcastHashJoin" in p
+    for q in (resolve_aliases(df, dim), entry.q_edges_resolved(spark, "sf0.001")):
+        assert "BroadcastHashJoin" in _plan(q)
 
 
 def test_extraction_stays_in_codegen(spark, transcripts_small):

@@ -3,7 +3,7 @@
 Hypothesis generates random rule configs (ops × and/or × required/
 optional × numeric-vs-string objects) and random flat triple tables;
 Spark's ``evaluate_rules`` (rules/engine.py) and the independent SQL
-compilation (rules/sql_compile.py) run on DuckDB must agree
+compilation (tests/rules_sql_reference.py) run on DuckDB must agree
 row-for-row. This pins the subtle semantics the fixed gates only
 sample: numeric-iff-both-cast coercion (evaluator.go:294-323),
 missing-required-field rule failure even under OR (evaluator.go:89-100),
@@ -28,7 +28,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from semstreams_spark.rules.engine import Condition, Rule, evaluate_rules
-from semstreams_spark.rules.sql_compile import rules_sql
+from rules_sql_reference import rules_sql
 
 FIELDS = ["f1", "f2", "f3", "f4"]
 # object/value pool: numeric spellings that must coerce, near-numerics
