@@ -220,9 +220,7 @@ def stream_ingest(
     t0 = time.monotonic()
     try:
         q, sink = build_ingest_stream(
-            stream, outdir, checkpoint_dir=ckpt, watermark=watermark, once=(mfpt >= n_files),
-            # A/B the two exactly-once publish paths without code changes
-            commit_mode=os.environ.get("SPARK_GRAFT_COMMIT_MODE", "rename"),
+            stream, outdir, checkpoint_dir=ckpt, watermark=watermark, once=(mfpt >= n_files)
         )
         q.awaitTermination()
     finally:

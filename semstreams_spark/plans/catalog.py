@@ -22,8 +22,8 @@ down honestly:
   through the catalog's partition metadata (one ``hour=`` predicate →
   one directory listed), exactly what an Iceberg manifest gives you at
   scale. On a lakehouse-equipped cluster the same call issues
-  ``USING iceberg`` and the sink's manifest commit mode maps onto the
-  table's snapshot commit.
+  ``USING iceberg`` and the sink's ledger commit maps onto the table's
+  snapshot commit.
 * ``sync_table`` is the post-retention hook: after
   ``publish.apply_retention`` drops hour partitions on disk,
   ``MSCK REPAIR TABLE ... SYNC PARTITIONS`` reconciles the catalog both

@@ -49,7 +49,7 @@ def build_delete_stream(
     Within-batch duplicate tombstones collapse (same guard class as the
     turn stream's intra-batch dedup); cross-batch replay is handled by the
     sink's batch ledger."""
-    sink = ExactlyOnceParquetSink(os.path.join(out_dir, "deletes"))
+    sink = ExactlyOnceParquetSink(os.path.join(out_dir, "deletes"), checkpoint_dir)
 
     def commit(batch_df, batch_id):
         sink(batch_df.dropDuplicates(["entity_id", "ts"]), batch_id)

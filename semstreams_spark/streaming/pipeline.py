@@ -79,20 +79,8 @@ def build_ingest_stream(
     watermark: str = "10 minutes",
     available_now: bool = True,
     once: bool = False,
-    fail_at_batch: int | None = None,
-    commit_mode: str = "rename",
 ) -> tuple[StreamingQuery, ExactlyOnceParquetSink]:
-    """Wire the full pipeline and start it.
-
-    fail_at_batch: inject a crash AFTER writing batch N's output (and
-    its manifest, in manifest mode) but BEFORE its ledger commit — the
-    checkpoint-recovery test asserts exactly-once output across the
-    restart.
-
-    commit_mode: "rename" (POSIX atomic dir rename) or "manifest"
-    (object-store-safe manifest-listing commit, no renames) — see
-    sink.ExactlyOnceParquetSink.
-    """
+    """Wire the full pipeline and start it."""
     # observed source metrics (rows + event-time bounds per micro-batch):
     # surfaces in StreamingQueryProgress.observedMetrics alongside the
     # sink ledger's per-partition lineage — together the "lineage +
@@ -107,25 +95,8 @@ def build_ingest_stream(
     )
     n_buckets = pin_state_engine(checkpoint_dir, transcripts.sparkSession)
     deltas = conversation_graph_deltas(transcripts, n_buckets, watermark=watermark)
-    sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"), commit_mode=commit_mode)
-
-    if fail_at_batch is not None:
-        inner = sink
-
-        def crashing(batch_df, batch_id):
-            if batch_id == fail_at_batch and not inner.committed(batch_id):
-                # simulate executor/driver failure mid-commit: data (and
-                # manifest, in manifest mode) written, ledger not —
-                # replay must not double-write
-                inner._simulate_partial_commit(batch_df, batch_id)
-                raise RuntimeError(f"injected failure at batch {batch_id}")
-            inner(batch_df, batch_id)
-
-        fn = crashing
-    else:
-        fn = sink
-
-    writer = deltas.writeStream.foreachBatch(fn).outputMode("append")
+    sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"), checkpoint_dir)
+    writer = deltas.writeStream.foreachBatch(sink).outputMode("append")
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     if once:

@@ -85,9 +85,9 @@ class StreamingRuleStage:
     (build_ingest_with_rules); also usable standalone over any committed
     delta stream."""
 
-    def __init__(self, out_dir: str, rules: list[Rule]):
+    def __init__(self, out_dir: str, rules: list[Rule], checkpoint_dir: str | None = None):
         self.rules = rules
-        self.sink = ExactlyOnceParquetSink(os.path.join(out_dir, "rule_events"))
+        self.sink = ExactlyOnceParquetSink(os.path.join(out_dir, "rule_events"), checkpoint_dir)
         self.max_cooldown = max(
             [r.cooldown_seconds for r in rules if r.enabled], default=0
         )
@@ -139,7 +139,8 @@ class StreamingRuleStage:
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.sink.committed(batch_id):
-            return  # replay after crash-between-write-and-checkpoint
+            # replay: the sink drains the batch and publishes nothing
+            return self.sink(batch_df, batch_id)
         spark = batch_df.sparkSession
         # one scalar agg over the (persisted) batch to anchor the seed
         # cutoff; skipped entirely when no rule has a cooldown
@@ -159,21 +160,16 @@ def build_ingest_with_rules(
     rules: list[Rule],
     checkpoint_dir: str | None = None,
     watermark: str = "10 minutes",
-    fail_rules_at_batch: int | None = None,
 ) -> tuple[StreamingQuery, ExactlyOnceParquetSink, StreamingRuleStage]:
     """Full pipeline with the rule stage fanned out of the SAME
     foreachBatch: deltas commit first, then rules evaluate on the
     persisted batch. Crash between the two commits replays the batch;
-    the delta sink skips (ledger) and only the rule stage runs — no
-    duplicate output on either table.
-
-    fail_rules_at_batch: inject a crash after the delta commit but before
-    the rule commit of batch N (the kill/resume test's worst case).
-    """
+    the delta sink only drains it (ledger) and only the rule stage
+    commits — no duplicate output on either table."""
     n_buckets = pin_state_engine(checkpoint_dir, transcripts.sparkSession)
     deltas = conversation_graph_deltas(transcripts, n_buckets, watermark=watermark)
-    delta_sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"))
-    rule_stage = StreamingRuleStage(out_dir, rules)
+    delta_sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"), checkpoint_dir)
+    rule_stage = StreamingRuleStage(out_dir, rules, checkpoint_dir)
 
     def fanout(batch_df, batch_id):
         # two consumers of one micro-batch: persist so the stateful
@@ -181,8 +177,6 @@ def build_ingest_with_rules(
         batch_df.persist()
         try:
             delta_sink(batch_df, batch_id)
-            if fail_rules_at_batch == batch_id and not rule_stage.sink.committed(batch_id):
-                raise RuntimeError(f"injected failure before rule commit, batch {batch_id}")
             rule_stage(batch_df, batch_id)
         finally:
             batch_df.unpersist()
@@ -208,7 +202,7 @@ def build_delete_rule_events(
     (rule_id, entity_id, ts) events through its own exactly-once sink —
     the same event shape as evaluate_rules output, so readers union the
     two committed tables."""
-    sink = ExactlyOnceParquetSink(os.path.join(out_dir, "delete_rule_events"))
+    sink = ExactlyOnceParquetSink(os.path.join(out_dir, "delete_rule_events"), checkpoint_dir)
 
     def commit(batch_df, batch_id):
         sink(deletion_events(batch_df.dropDuplicates(["entity_id", "ts"]), rule_id), batch_id)

@@ -1,50 +1,45 @@
 """Exactly-once idempotent foreachBatch sink with per-partition lineage.
 
 The reference provides at-most-once NATS delivery with content-hash dedup
-(SURVEY W5); the north-rule requires the stronger guarantee: exactly-once
-output across failures/restarts. Without an Iceberg runtime in this image
-(no jars), the sink emulates transactional MERGE with two commit modes:
+(SURVEY W5); the north-rule requires exactly-once output across failures
+and restarts. Without an Iceberg runtime in this image (no jars), the sink
+emulates a transactional append with one protocol, rename + ledger. Per
+micro-batch it writes ``_staging/batch=<id>``, renames it to
+``batch=<id>`` (no directory for an empty batch), then commits
+``_ledger/<id>.json`` by atomic replace: row count, per-partition lineage
+(input partition → rows, min/max event time from parquet footer stats),
+wall time and the id of the query that wrote it (``<checkpoint>/metadata``).
+Readers see only the batches the ledger holds.
 
-``commit_mode="rename"`` (POSIX fast path)
-1. batch staging: each micro-batch writes to ``_staging/batch=<id>`` then
-   atomically renames into the table directory (POSIX rename).
-2. readers see only renamed (committed) batch dirs.
+Spark replays a failed batch id with identical data, and every crash
+window ends in the same table:
 
-``commit_mode="manifest"`` (object-store-safe — no rename anywhere)
-1. data files are written once under ``_staging/batch=<id>`` and never
-   move (object stores have no atomic rename; a "rename" is copy+delete
-   and can be observed half-done).
-2. the commit point is a single small ``_manifests/<batchId>.json`` PUT
-   naming exactly the data files of the batch — the same shape as an
-   Iceberg snapshot manifest / Delta commit json. Readers resolve data
-   files through manifests only, never by listing data directories, so
-   orphan files from a crashed attempt are invisible.
+- after the staging write or the rename, the ledger lacks the batch: the
+  replay replaces the leftover and writes the batch again;
+- after the ledger write (before the index update, between a segment and
+  its pointer, or after the sink returns but before Spark's commit log),
+  the ledger holds the batch: the replay publishes nothing and drains the
+  batch with a ``noop`` write. That job runs the stateful operator
+  upstream, whose state must commit for the batch id; without it Spark's
+  state-store commit validation fails the restart.
 
-Both modes share the commit **ledger**: ``_ledger/<batchId>.json``
-recording row counts, per-partition lineage (input partition → row count,
-min/max event time from parquet footer stats), and wall duration. A batch
-replayed after a crash-between-write-and-checkpoint is detected by its
-ledger entry and skipped — idempotence keyed on batchId. The ledger is
-written after the manifest/rename, so every committed() batch has fully
-visible data; a crash in the window between them replays the batch, which
-rewrites data + manifest deterministically before the ledger lands.
+``tests/test_streaming.py::test_crash_point_exactly_once`` crashes at each
+point. An output directory belongs to one query: a ledger written by
+another query fails the first batch, since its batch ids would read as
+already committed.
 
-Lineage + metrics satisfy the north-rule's "per-partition lineage +
-metrics" requirement and feed BENCH reporting. The ledger's footer-stat
-min/max event times double as pruning metadata
-(``batch_dirs_since``) — the streaming rule stage bounds its cooldown
-seed reads with them.
-
-Ledger metadata reads are BOUNDED (round-5): every ``compact_every``
-commits the sink writes ``_ledger/_checkpoint.json`` holding the
-compacted entries (batch_id, rows, max event ts) for the whole prefix —
-the Delta ``_last_checkpoint`` shape. Readers load the latest checkpoint
-plus the per-batch suffix ONCE and the live sink keeps the compact index
-in memory, so per-trigger pruning (``batch_dirs_since``) costs O(1) file
-opens in steady state and O(compact_every) after a restart — independent
-of total stream age. Full per-partition lineage stays in the per-batch
-ledger JSONs for audit (``ledger()``), off the hot path. Reference
-anchor: the KV bucket is a point-lookup store
+The ledger's footer-stat max event times double as pruning metadata
+(``batch_dirs_since``): the streaming rule stage bounds its cooldown seed
+reads with them. Those reads are BOUNDED: every ``compact_every`` commits
+the sink writes one immutable segment ``_ledger/_checkpoint.seg.<k>.json``
+with the compact entries (batch_id, rows, max event ts) since the last
+flush, then the pointer ``_ledger/_checkpoint.json`` (the Delta
+``_last_checkpoint`` shape; a segment without its pointer is rewritten
+whole by the next flush). The live sink keeps the compact index in
+memory, so per-trigger pruning costs O(1) file opens in steady state and
+O(compact_every) after a restart. Full per-partition lineage stays in the
+per-batch ledger JSONs for audit (``ledger()``). Reference anchor: the KV
+bucket is a point-lookup store
 (``processor/graph/datamanager/manager.go:693-743``), never a scan.
 """
 
@@ -59,18 +54,15 @@ from pyspark.sql import DataFrame
 
 
 class ExactlyOnceParquetSink:
-    def __init__(self, table_dir: str, commit_mode: str = "rename", compact_every: int = 16):
-        if commit_mode not in ("rename", "manifest"):
-            raise ValueError(f"unknown commit_mode: {commit_mode!r}")
+    def __init__(self, table_dir: str, checkpoint_dir: str | None = None, compact_every: int = 16):
         self.table_dir = table_dir
-        self.commit_mode = commit_mode
+        # the streaming query's checkpoint: its metadata names the query
+        # that owns this output directory (None: not checked)
+        self.checkpoint_dir = checkpoint_dir
         self.compact_every = max(1, compact_every)
         self.ledger_dir = os.path.join(table_dir, "_ledger")
         self.staging_dir = os.path.join(table_dir, "_staging")
-        self.manifest_dir = os.path.join(table_dir, "_manifests")
         os.makedirs(self.ledger_dir, exist_ok=True)
-        if commit_mode == "manifest":
-            os.makedirs(self.manifest_dir, exist_ok=True)
         # compact in-memory ledger index: batch_id -> {batch_id, rows,
         # max_ts}; backed by _checkpoint.json + per-batch suffix. None
         # until first read/commit. ledger_file_reads counts metadata file
@@ -79,21 +71,25 @@ class ExactlyOnceParquetSink:
         self._ckpt_upto = -1
         self._n_since_ckpt = 0
         self._n_segments = 0
-        self._legacy_ckpt = False
+        self._query_id: str | None = None
         self.ledger_file_reads = 0
 
     # -- ledger -------------------------------------------------------------
     def _ledger_path(self, batch_id: int) -> str:
         return os.path.join(self.ledger_dir, f"{batch_id}.json")
 
-    def _manifest_path(self, batch_id: int) -> str:
-        return os.path.join(self.manifest_dir, f"{batch_id}.json")
-
     def _ckpt_path(self) -> str:
         return os.path.join(self.ledger_dir, "_checkpoint.json")
 
     def _ckpt_seg_path(self, i: int) -> str:
         return os.path.join(self.ledger_dir, f"_checkpoint.seg.{i}.json")
+
+    @staticmethod
+    def _write_json(path: str, obj) -> None:
+        tmp = path + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(obj, fh)
+        os.replace(tmp, path)
 
     def committed(self, batch_id: int) -> bool:
         return os.path.exists(self._ledger_path(batch_id))
@@ -156,22 +152,16 @@ class ExactlyOnceParquetSink:
         entries: dict[int, dict] = {}
         upto = -1
         n_segments = 0
-        legacy = False
         if os.path.exists(self._ckpt_path()):
             self.ledger_file_reads += 1
             with open(self._ckpt_path()) as fh:
                 ck = json.load(fh)
-            upto = ck["upto"]
-            if "entries" in ck:  # pre-r6 monolithic checkpoint
-                entries = {e["batch_id"]: e for e in ck["entries"]}
-                legacy = True
-            else:
-                n_segments = ck["n_segments"]
-                for i in range(n_segments):
-                    self.ledger_file_reads += 1
-                    with open(self._ckpt_seg_path(i)) as fh:
-                        for e in json.load(fh):
-                            entries[e["batch_id"]] = e
+            upto, n_segments = ck["upto"], ck["n_segments"]
+            for i in range(n_segments):
+                self.ledger_file_reads += 1
+                with open(self._ckpt_seg_path(i)) as fh:
+                    for e in json.load(fh):
+                        entries[e["batch_id"]] = e
         n_suffix = 0
         for f in os.listdir(self.ledger_dir):
             if not f.endswith(".json") or f.startswith("_"):
@@ -187,115 +177,91 @@ class ExactlyOnceParquetSink:
         self._ckpt_upto = upto
         self._n_since_ckpt = n_suffix
         self._n_segments = n_segments
-        self._legacy_ckpt = legacy
         return entries
 
     def _record_commit(self, entry: dict) -> None:
         """Maintain the compact index after a commit; checkpoint every
-        compact_every commits. r6 (round-5 verdict item #2): the
-        checkpoint is SEGMENTED — each flush writes ONE immutable
-        ``_checkpoint.seg.<k>.json`` holding only the entries committed
-        since the previous flush, plus an O(1) pointer
-        ``{"upto", "n_segments"}`` — so bytes written per commit window
-        are independent of total stream age (the old monolith rewrote
-        every entry ever, ~260k-entry JSON every ~3 minutes after a month
-        at one batch/10 s). A legacy monolithic checkpoint is migrated
-        once into segment 0. All writes are atomic tmp+replace; a crash
-        between segment and pointer just rewrites the same segment."""
+        compact_every commits. The checkpoint is SEGMENTED: each flush
+        writes ONE immutable ``_checkpoint.seg.<k>.json`` holding only the
+        entries committed since the previous flush, then an O(1) pointer
+        ``{"upto", "n_segments"}``, so bytes written per commit window are
+        independent of total stream age. A crash between segment and
+        pointer just rewrites the same segment."""
         entries = self._compact_entries()
         entries[entry["batch_id"]] = self._compact_entry(entry)
         self._n_since_ckpt += 1
         if self._n_since_ckpt >= self.compact_every:
-            if self._legacy_ckpt:
-                # one-time migration: the legacy full list becomes seg 0
-                seg = sorted(
-                    (e for e in entries.values()), key=lambda e: e["batch_id"]
-                )
-            else:
-                seg = sorted(
-                    (e for e in entries.values() if e["batch_id"] > self._ckpt_upto),
-                    key=lambda e: e["batch_id"],
-                )
-            stmp = self._ckpt_seg_path(self._n_segments) + ".tmp"
-            with open(stmp, "w") as fh:
-                json.dump(seg, fh)
-            os.replace(stmp, self._ckpt_seg_path(self._n_segments))
+            seg = sorted(
+                (e for e in entries.values() if e["batch_id"] > self._ckpt_upto),
+                key=lambda e: e["batch_id"],
+            )
+            self._write_json(self._ckpt_seg_path(self._n_segments), seg)
             self._n_segments += 1
-            self._legacy_ckpt = False
             upto = max(entries)
-            tmp = self._ckpt_path() + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"upto": upto, "n_segments": self._n_segments}, fh)
-            os.replace(tmp, self._ckpt_path())
+            self._write_json(self._ckpt_path(), {"upto": upto, "n_segments": self._n_segments})
             self._ckpt_upto = upto
             self._n_since_ckpt = 0
 
+    def _owner_query_id(self) -> str | None:
+        """The id of the query this sink commits for, read once from the
+        checkpoint's ``metadata`` (Spark writes it before batch 0). Fails
+        if the ledger's latest entry names another query: its batch ids
+        would read as already committed and be skipped. An entry that
+        names no query (written without a checkpoint) is not checked."""
+        if self._query_id is None and self.checkpoint_dir is not None:
+            with open(os.path.join(self.checkpoint_dir, "metadata")) as fh:
+                query_id = json.loads(fh.readline())["id"]
+            entries = self._compact_entries()
+            if entries:
+                self.ledger_file_reads += 1
+                with open(self._ledger_path(max(entries))) as fh:
+                    found = json.load(fh).get("query_id")
+                if found not in (None, query_id):
+                    raise RuntimeError(
+                        f"output directory {self.table_dir} holds batches of query "
+                        f"{found}, not of query {query_id} (checkpoint "
+                        f"{self.checkpoint_dir}); restart from the checkpoint of "
+                        "the query that wrote it, or from a fresh checkpoint and "
+                        "a fresh output directory"
+                    )
+            self._query_id = query_id
+        return self._query_id
+
     # -- the foreachBatch callable -------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
+        query_id = self._owner_query_id()
         if self.committed(batch_id):
-            # replay after crash-between-write-and-checkpoint: skip
+            # replay of a committed batch (crash after the ledger write,
+            # before Spark's commit log): publish nothing, but run the
+            # batch so the stateful operator upstream commits its state
+            batch_df.write.format("noop").mode("overwrite").save()
             return
         t0 = time.monotonic()
-        n_rows, partitions = self._write_and_publish(batch_df, batch_id)
-
+        # write (overwrite replaces a crashed attempt's leftover); the
+        # per-partition lineage comes from the parquet footers — one file
+        # per task partition, rows + min/max ts with no second Spark job
+        staged = os.path.join(self.staging_dir, f"batch={batch_id}")
+        batch_df.write.mode("overwrite").parquet(staged)
+        partitions = self._footer_lineage(staged)
+        n_rows = sum(p["rows"] for p in partitions)
+        # publish: rename into the table
+        final = self._batch_dir(batch_id)
+        if os.path.exists(final):
+            shutil.rmtree(final)  # crashed between rename and ledger write
+        if n_rows > 0:
+            os.replace(staged, final)
+        else:
+            shutil.rmtree(staged, ignore_errors=True)
+        # commit
         entry = {
             "batch_id": batch_id,
             "rows": n_rows,
             "partitions": partitions,
-            "commit_mode": self.commit_mode,
+            "query_id": query_id,
             "wall_seconds": round(time.monotonic() - t0, 3),
         }
-        tmp = self._ledger_path(batch_id) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(entry, fh)
-        os.replace(tmp, self._ledger_path(batch_id))
+        self._write_json(self._ledger_path(batch_id), entry)
         self._record_commit(entry)
-
-    def _write_and_publish(self, batch_df: DataFrame, batch_id: int):
-        """Write the batch's data files and make them reader-visible
-        (rename: dir move; manifest: manifest PUT). Returns
-        (n_rows, partition lineage). Everything here is safely
-        re-runnable — the ledger write afterwards is the real commit."""
-        staged = os.path.join(self.staging_dir, f"batch={batch_id}")
-        if os.path.exists(staged):
-            shutil.rmtree(staged)  # leftover from a crashed attempt
-
-        # single pass: write staged parquet, then derive per-partition
-        # lineage from the parquet footers (one output file per task
-        # partition; footer stats give rows + min/max ts with no second
-        # Spark job over the data)
-        batch_df.write.mode("overwrite").parquet(staged)
-        partitions = self._footer_lineage(staged)
-        n_rows = sum(p["rows"] for p in partitions)
-
-        if self.commit_mode == "rename":
-            final = os.path.join(self.table_dir, f"batch={batch_id}")
-            if os.path.exists(final):
-                shutil.rmtree(final)  # crashed between rename and ledger write
-            if n_rows > 0:
-                os.replace(staged, final)
-            else:
-                shutil.rmtree(staged, ignore_errors=True)
-            return n_rows, partitions
-
-        # manifest mode: files never move; one manifest PUT publishes them
-        if n_rows == 0:
-            shutil.rmtree(staged, ignore_errors=True)
-            files: list[str] = []
-        else:
-            files = [os.path.join(staged, p["file"]) for p in partitions]
-        mtmp = self._manifest_path(batch_id) + ".tmp"
-        with open(mtmp, "w") as fh:
-            json.dump({"batch_id": batch_id, "files": files}, fh)
-        os.replace(mtmp, self._manifest_path(batch_id))
-        return n_rows, partitions
-
-    def _simulate_partial_commit(self, batch_df: DataFrame, batch_id: int) -> None:
-        """TEST HOOK: perform everything up to but NOT including the
-        ledger write — the widest crash window (data visible-if-listed,
-        manifest present in manifest mode, batch not committed). The
-        exactly-once tests inject a failure right after this."""
-        self._write_and_publish(batch_df, batch_id)
 
     @staticmethod
     def _footer_lineage(directory: str) -> list[dict]:
@@ -329,26 +295,15 @@ class ExactlyOnceParquetSink:
         return out
 
     # -- reader -------------------------------------------------------------
-    def _batch_data_paths(self, batch_id: int) -> list[str]:
-        """Reader-visible data for one committed batch: the renamed dir
-        (rename mode) or the manifest's file list (manifest mode)."""
-        if self.commit_mode == "manifest":
-            p = self._manifest_path(batch_id)
-            if not os.path.exists(p):
-                return []
-            with open(p) as fh:
-                return json.load(fh)["files"]
-        d = os.path.join(self.table_dir, f"batch={batch_id}")
-        return [d] if os.path.isdir(d) else []
+    def _batch_dir(self, batch_id: int) -> str:
+        return os.path.join(self.table_dir, f"batch={batch_id}")
 
     def read(self, spark) -> DataFrame:
-        """Committed rows only (ledger-gated; manifest-resolved in
-        manifest mode — data directories are never listed). Uses the
-        compact ledger index: no per-batch ledger JSON opens in steady
-        state."""
-        paths: list[str] = []
-        for bid in sorted(self._compact_entries()):
-            paths.extend(self._batch_data_paths(bid))
+        """Committed rows only (ledger-gated: a batch directory the
+        ledger does not hold is never read). Uses the compact ledger
+        index: no per-batch ledger JSON opens in steady state."""
+        paths = [self._batch_dir(bid) for bid in sorted(self._compact_entries())]
+        paths = [d for d in paths if os.path.isdir(d)]
         if not paths:
             raise FileNotFoundError(f"no committed batches in {self.table_dir}")
         return spark.read.parquet(*paths)
@@ -369,6 +324,6 @@ class ExactlyOnceParquetSink:
         for bid, entry in sorted(self._compact_entries().items()):
             raw = entry.get("max_ts")
             mx = _dt.datetime.fromisoformat(raw) if raw else None
-            if mx is None or mx >= cutoff:
-                keep.extend(self._batch_data_paths(bid))
+            if (mx is None or mx >= cutoff) and os.path.isdir(self._batch_dir(bid)):
+                keep.append(self._batch_dir(bid))
         return keep

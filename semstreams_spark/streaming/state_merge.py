@@ -406,7 +406,7 @@ def pin_state_engine(checkpoint_dir: str | None, spark: SparkSession) -> int:
     raise RuntimeError(
         f"checkpoint {checkpoint_dir} holds merge state of layout {found!r}, "
         "which this version cannot read (it keys state by hash bucket) — "
-        "restart from a fresh checkpoint"
+        "restart from a fresh checkpoint and a fresh output directory"
     )
 
 

@@ -3,7 +3,7 @@ reference ``test/e2e/scenarios/semantic_*.go``): one flow exercising the
 whole engine surface in sequence —
 
   files → streaming ingest (stateful merge) + rule stage (cooldown,
-  exactly-once, manifest commit mode) → publish hour-partitioned triple
+  exactly-once) → publish hour-partitioned triple
   log → compact LWW node/edge tables → tombstone stream (delete rule
   events + status flip) → query API over the result —
 

@@ -1,10 +1,13 @@
-"""Streaming core: stateful merge parity vs batch, exactly-once resume
-after injected failure, re-delivery dedup, watermark session timeout."""
+"""Streaming core: stateful merge parity vs batch, exactly-once at every
+crash point of the sink's commit protocol, re-delivery dedup, watermark
+session timeout."""
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
+from functools import partial
 
 import pandas as pd
 import pyarrow as pa
@@ -55,6 +58,231 @@ def _run(spark, indir, outdir, ckpt, **kw):
     q, sink = build_ingest_stream(stream, outdir, checkpoint_dir=ckpt, **kw)
     q.awaitTermination()
     return sink
+
+
+class _Crash(Exception):
+    """A fault a test injects into one step of a commit."""
+
+
+# the sink's commit steps, in protocol order (see _crash_at)
+SINK_POINTS = ("staged", "renamed", "ledgered", "segment", "returned")
+
+
+def _crash_at(mp, point: str, table: str, batch: int) -> list[str]:
+    """Make the first step ``point`` of the sink whose directory is named
+    ``table`` raise at batch ``batch``, by patching one method of the sink
+    or the rule stage, or ``os.replace``, on the monkeypatch context
+    ``mp``. Returns a list that holds ``point`` once the crash happened.
+
+    - staged: after the staging write, before the rename;
+    - renamed: after the rename, before the ledger write;
+    - ledgered: after the ledger write, before ``_record_commit``;
+    - segment: after a ledger segment flush, before its pointer update
+      (the table's first flush, whatever its batch);
+    - returned: after the sink returns, before Spark's commit log;
+    - rule_stage: after the delta commit, before the rule stage runs."""
+    from semstreams_spark.streaming.rules_stage import StreamingRuleStage
+    from semstreams_spark.streaming.sink import ExactlyOnceParquetSink as Sink
+
+    fired: list[str] = []
+
+    def fire(hit: bool) -> None:
+        if hit and not fired:
+            fired.append(point)
+            raise _Crash(f"injected crash {point} in {table} at batch {batch}")
+
+    def ours(sink, batch_id) -> bool:
+        return os.path.basename(sink.table_dir) == table and batch_id == batch
+
+    real_replace = os.replace
+    if point == "staged":
+        real_lineage = Sink._footer_lineage
+
+        def lineage(directory):
+            fire(directory.endswith(os.path.join(table, "_staging", f"batch={batch}")))
+            return real_lineage(directory)
+
+        mp.setattr(Sink, "_footer_lineage", staticmethod(lineage))
+    elif point == "renamed":
+
+        def replace(src, dst):
+            real_replace(src, dst)
+            fire(dst.endswith(os.path.join(table, f"batch={batch}")))
+
+        mp.setattr(os, "replace", replace)
+    elif point == "segment":
+
+        def replace(src, dst):
+            fire(dst.endswith(os.path.join(table, "_ledger", "_checkpoint.json")))
+            real_replace(src, dst)
+
+        mp.setattr(os, "replace", replace)
+    elif point == "ledgered":
+        real_record = Sink._record_commit
+
+        def record(self, entry):
+            fire(ours(self, entry["batch_id"]))
+            real_record(self, entry)
+
+        mp.setattr(Sink, "_record_commit", record)
+    elif point == "returned":
+        real_call = Sink.__call__
+
+        def call(self, batch_df, batch_id):
+            real_call(self, batch_df, batch_id)
+            fire(ours(self, batch_id))
+
+        mp.setattr(Sink, "__call__", call)
+    else:
+        assert point == "rule_stage", point
+        real_stage = StreamingRuleStage.__call__
+
+        def stage(self, batch_df, batch_id):
+            fire(batch_id == batch)
+            real_stage(self, batch_df, batch_id)
+
+        mp.setattr(StreamingRuleStage, "__call__", stage)
+    return fired
+
+
+def _assert_clean_table(sink) -> None:
+    """The table holds a directory for exactly the ledger's non-empty
+    batches, no staged leftover, and a fresh sink's index (pointer,
+    segments, per-batch suffix) lists every ledger entry once."""
+    from semstreams_spark.streaming.sink import ExactlyOnceParquetSink
+
+    ledger = sink.ledger()
+    dirs = sorted(int(d.split("=")[1]) for d in os.listdir(sink.table_dir) if d.startswith("batch="))
+    assert dirs == [e["batch_id"] for e in ledger if e["rows"] > 0]
+    assert not os.path.isdir(sink.staging_dir) or os.listdir(sink.staging_dir) == []
+    fresh = ExactlyOnceParquetSink(sink.table_dir)
+    assert sorted(fresh._compact_entries()) == [e["batch_id"] for e in ledger]
+
+
+def _rule_input(indir: str) -> None:
+    """One conversation of 10 turns at 20 s spacing, all mentioning one
+    entity, turn 5 a calc tool call; 3 event-time-ordered files (a
+    log-ordered source: the incremental-greedy == global-greedy
+    precondition of the rule stage's cooldown)."""
+    rows = [
+        ("c1", i, "tool" if i == 5 else "user", f"msg {i} @entity:ent_x", "calc" if i == 5 else None,
+         T0 + dt.timedelta(seconds=20 * i))
+        for i in range(10)
+    ]
+    _write_file(indir, "f1.parquet", rows[0:4])
+    _write_file(indir, "f2.parquet", rows[4:8])
+    _write_file(indir, "f3.parquet", rows[8:10])
+
+
+def _rules():
+    from semstreams_spark.rules.engine import Condition, Rule
+
+    return [
+        Rule(id="calc_used", conditions=(Condition("conv.turn.tool", "eq", "calc"),)),
+        Rule(
+            id="ent_seen",
+            conditions=(Condition("entity.mentioned", "starts_with", "test.local.conv."),),
+            cooldown_seconds=50,
+        ),
+    ]
+
+
+@pytest.mark.parametrize(
+    "pipeline,table,point",
+    [("ingest", "graph_deltas", p) for p in SINK_POINTS]
+    + [("rules", "graph_deltas", p) for p in SINK_POINTS]
+    + [("rules", "rule_events", p) for p in (*SINK_POINTS, "rule_stage")],
+)
+def test_crash_point_exactly_once(spark, tmp_path, monkeypatch, pipeline, table, point):
+    """Crash once at one step of the commit protocol at batch 1, restart
+    from the checkpoint: the restart is clean, and the committed tables
+    equal the batch answer (extract_triples; evaluate_rules +
+    apply_cooldown over it) with no lost and no duplicate rows. In the
+    rules pipeline, "returned" on rule_events is the crash after both
+    commits and "rule_stage" the one between them. Ledger segments flush
+    every 2 commits, so batch 1 flushes one."""
+    from semstreams_spark.rules.engine import apply_cooldown, evaluate_rules
+    from semstreams_spark.streaming import pipeline as pipeline_mod
+    from semstreams_spark.streaming import rules_stage as rules_mod
+    from semstreams_spark.streaming.sink import ExactlyOnceParquetSink
+
+    for mod in (pipeline_mod, rules_mod):
+        monkeypatch.setattr(mod, "ExactlyOnceParquetSink", partial(ExactlyOnceParquetSink, compact_every=2))
+    indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    _rule_input(indir)
+    rules = _rules()
+
+    def start():
+        stream = read_transcript_stream(spark, indir, max_files_per_trigger=1)
+        if pipeline == "ingest":
+            return (*build_ingest_stream(stream, outdir, checkpoint_dir=ckpt, watermark="2 days"), None)
+        return rules_mod.build_ingest_with_rules(stream, outdir, rules, checkpoint_dir=ckpt, watermark="2 days")
+
+    with monkeypatch.context() as mp:
+        fired = _crash_at(mp, point, table, batch=1)
+        q, _, _ = start()
+        with pytest.raises(Exception, match="injected crash"):
+            q.awaitTermination()
+    assert fired == [point]
+    q, delta_sink, rule_stage = start()
+    q.awaitTermination()  # raises if the restart fails
+    assert q.exception() is None
+
+    batch = extract_triples(spark.read.parquet(indir)).withColumnRenamed("seq", "turn_idx")
+    key = ["subject", "predicate", "object", "object_type", "ts", "turn_idx"]
+    got = delta_sink.read(spark).filter(F.col("kind") == "triple").select(*key)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.select(*key).collect()))
+    _assert_clean_table(delta_sink)
+    if rule_stage is not None:
+        view = rules_mod.rule_states_view(batch.withColumn("kind", F.lit("triple")))
+        want = apply_cooldown(evaluate_rules(view, rules), rules)
+        key = ["rule_id", "entity_id", "ts"]
+        got = rule_stage.sink.read(spark).select(*key)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.select(*key).collect()))
+        _assert_clean_table(rule_stage.sink)
+
+
+def test_restart_after_commit_log_lost(spark, tmp_path):
+    """A crash after the sink's ledger write and before Spark's commit log
+    (the last ``commits/<N>`` of a finished run removed) restarts cleanly:
+    the replayed batch, which the ledger holds, is drained rather than
+    skipped, so its state commits, and the table is unchanged."""
+    indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
+    for i in range(3):
+        _write_file(indir, f"f{i}.parquet", _mk_rows(f"c{i}", 3, T0 + dt.timedelta(minutes=i)))
+    sink = _run(spark, indir, outdir, ckpt, watermark="2 days")
+    before = sorted(map(tuple, sink.read(spark).collect()), key=repr)
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+
+    sink2 = _run(spark, indir, outdir, ckpt, watermark="2 days")
+    assert os.path.exists(os.path.join(commits, str(last)))
+    assert sorted(map(tuple, sink2.read(spark).collect()), key=repr) == before
+    assert [e["batch_id"] for e in sink2.ledger()] == list(range(last + 1))
+
+
+def test_output_dir_of_another_query_is_refused(spark, tmp_path):
+    """A fresh checkpoint over an output directory another query committed
+    to fails at its first batch with an error naming both query ids, and
+    commits nothing there: otherwise the old ledger's batch ids would mark
+    the new query's batches as already committed."""
+    indir, outdir = str(tmp_path / "in"), str(tmp_path / "out")
+    for i in range(2):
+        _write_file(indir, f"f{i}.parquet", _mk_rows(f"c{i}", 3, T0 + dt.timedelta(minutes=i)))
+    _run(spark, indir, outdir, str(tmp_path / "ck1"), watermark="2 days")
+    ledger_dir = os.path.join(outdir, "graph_deltas", "_ledger")
+    ledger_before = sorted(os.listdir(ledger_dir))
+
+    with pytest.raises(Exception) as err:
+        _run(spark, indir, outdir, str(tmp_path / "ck2"), watermark="2 days")
+    for ck in ("ck1", "ck2"):
+        with open(tmp_path / ck / "metadata") as fh:
+            assert json.loads(fh.readline())["id"] in str(err.value)
+    assert "fresh output directory" in str(err.value)
+    assert sorted(os.listdir(ledger_dir)) == ledger_before
 
 
 def test_stream_matches_batch_extraction(spark, tmp_path):
@@ -111,44 +339,6 @@ def test_redelivery_dedup(spark, tmp_path):
     out = sink.read(spark).filter(F.col("kind") == "triple")
     n_type_triples = out.filter(F.col("predicate") == "rdf:type").count()
     assert n_type_triples == 3  # not 5
-
-
-@pytest.mark.parametrize("commit_mode", ["rename", "manifest"])
-def test_exactly_once_resume_after_injected_failure(spark, tmp_path, commit_mode):
-    """Crash after data write (and manifest PUT, in manifest mode) but
-    before ledger commit at batch 2; restart must neither lose nor
-    duplicate rows (north-rule W5/W7). Parameterized over both commit
-    modes: POSIX rename and the object-store-safe manifest listing."""
-    indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    for i in range(4):
-        _write_file(indir, f"f{i}.parquet", _mk_rows(f"c{i}", 3, T0 + dt.timedelta(minutes=i)))
-
-    stream = read_transcript_stream(spark, indir, max_files_per_trigger=1)
-    q, sink = build_ingest_stream(
-        stream, outdir, checkpoint_dir=ckpt, watermark="2 days", fail_at_batch=2,
-        commit_mode=commit_mode,
-    )
-    with pytest.raises(Exception):
-        q.awaitTermination()
-
-    # the crashed batch's rows are invisible to readers in BOTH modes:
-    # its data (and manifest) exist on disk, but the ledger gates reads
-    assert sink.read(spark).filter(F.col("conv_id") == "c2").count() == 0
-    # restart from checkpoint, no injected failure
-    stream2 = read_transcript_stream(spark, indir, max_files_per_trigger=1)
-    q2, sink2 = build_ingest_stream(
-        stream2, outdir, checkpoint_dir=ckpt, watermark="2 days", commit_mode=commit_mode
-    )
-    q2.awaitTermination()
-
-    out = sink2.read(spark).filter(F.col("kind") == "triple")
-    batch = extract_triples(spark.read.parquet(indir))
-    assert out.count() == batch.count()
-    key = ["subject", "predicate", "object"]
-    assert out.select(*key).distinct().count() == out.count() == batch.select(*key).distinct().count()
-    # ledger has per-partition lineage for every committed batch
-    for entry in sink2.ledger():
-        assert "partitions" in entry and entry["rows"] == sum(p["rows"] for p in entry["partitions"])
 
 
 def test_session_end_on_watermark_timeout(spark, tmp_path):
@@ -283,42 +473,26 @@ def test_observed_source_metrics_per_batch(spark, tmp_path):
         assert m["approx_convs"] >= 1
 
 
-def test_streaming_rule_stage_kill_resume(spark, tmp_path):
+def test_streaming_rule_stage_kill_resume(spark, tmp_path, monkeypatch):
     """R5 end-to-end: rules + cooldown evaluated inside the live delta
     stream's foreachBatch, committed exactly-once; a crash injected after
     the delta commit but before the rule commit must, after restart,
     yield rule events IDENTICAL to the batch engine (evaluate_rules +
     global greedy apply_cooldown) over the same committed deltas —
     the streaming analogue of the rule_events/alert_cooldown gates."""
-    from semstreams_spark.rules.engine import Condition, Rule, apply_cooldown, evaluate_rules
+    from semstreams_spark.rules.engine import apply_cooldown, evaluate_rules
     from semstreams_spark.streaming.rules_stage import build_ingest_with_rules, rule_states_view
 
-    rules = [
-        Rule(id="calc_used", conditions=(Condition("conv.turn.tool", "eq", "calc"),)),
-        Rule(
-            id="ent_seen",
-            conditions=(Condition("entity.mentioned", "starts_with", "test.local.conv."),),
-            cooldown_seconds=50,
-        ),
-    ]
+    rules = _rules()
     indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    rows = [
-        ("c1", i, "tool" if i == 5 else "user", f"msg {i} @entity:ent_x", "calc" if i == 5 else None,
-         T0 + dt.timedelta(seconds=20 * i))
-        for i in range(10)
-    ]
-    # event-time-ordered micro-batches (a log-ordered source) — the
-    # incremental-greedy == global-greedy precondition
-    _write_file(indir, "f1.parquet", rows[0:4])
-    _write_file(indir, "f2.parquet", rows[4:8])
-    _write_file(indir, "f3.parquet", rows[8:10])
+    _rule_input(indir)
 
     stream = read_transcript_stream(spark, indir, max_files_per_trigger=1)
-    q, _, _ = build_ingest_with_rules(
-        stream, outdir, rules, checkpoint_dir=ckpt, watermark="2 days", fail_rules_at_batch=1
-    )
-    with pytest.raises(Exception):
-        q.awaitTermination()
+    with monkeypatch.context() as mp:
+        _crash_at(mp, "rule_stage", "rule_events", batch=1)
+        q, _, _ = build_ingest_with_rules(stream, outdir, rules, checkpoint_dir=ckpt, watermark="2 days")
+        with pytest.raises(Exception, match="injected crash"):
+            q.awaitTermination()
 
     stream2 = read_transcript_stream(spark, indir, max_files_per_trigger=1)
     q2, delta_sink, rule_stage = build_ingest_with_rules(
@@ -399,7 +573,7 @@ def _parity_input(indir: str, order: str, seed: int = 7):
 @pytest.mark.parametrize(
     "order,watermark", [("ts", "1 minute"), ("shuffled", "10 minutes"), ("ts", "2 days")]
 )
-def test_bucket_count_does_not_change_sink_rows(spark, tmp_path, order, watermark):
+def test_bucket_count_does_not_change_sink_rows(spark, tmp_path, monkeypatch, order, watermark):
     """A fresh checkpoint at 2 state partitions (16 buckets) commits the
     same rows as a ``legacy-bucketed`` checkpoint (64 buckets, 8
     partitions) that is killed before batch 1's ledger commit and
@@ -417,8 +591,9 @@ def test_bucket_count_does_not_change_sink_rows(spark, tmp_path, order, watermar
     legacy_ck = tmp_path / "ck64"
     legacy_ck.mkdir()
     (legacy_ck / "_state_engine").write_text("legacy-bucketed")
-    with pytest.raises(Exception):
-        _run(spark, indir, str(tmp_path / "out64"), str(legacy_ck), watermark=watermark, fail_at_batch=1)
+    with monkeypatch.context() as mp, pytest.raises(Exception, match="injected crash"):
+        _crash_at(mp, "renamed", "graph_deltas", batch=1)
+        _run(spark, indir, str(tmp_path / "out64"), str(legacy_ck), watermark=watermark)
     legacy = _run(spark, indir, str(tmp_path / "out64"), str(legacy_ck), watermark=watermark)
     assert (legacy_ck / "_state_engine").read_text() == "legacy-bucketed"
 
@@ -656,43 +831,3 @@ def test_streaming_rule_late_event_arrival_order(spark, tmp_path):
     assert rule_states_view(delta_batch([("turn_a", ent, t_fire)])).filter(
         F.col("subject") == ent
     ).count() == 1
-
-
-def test_sink_legacy_monolith_checkpoint_migrates(spark, tmp_path):
-    """A pre-r6 monolithic _checkpoint.json ({"upto", "entries"}) is read
-    correctly and migrated into segment 0 on the next flush."""
-    import json as _json
-
-    from semstreams_spark.streaming.sink import ExactlyOnceParquetSink
-
-    table = str(tmp_path / "t")
-    sink = ExactlyOnceParquetSink(table, compact_every=4)
-    for b in range(8):
-        ts = T0 + dt.timedelta(hours=b)
-        df = spark.createDataFrame(
-            [("r", f"e{b}", ts)], "rule_id string, entity_id string, ts timestamp_ntz"
-        )
-        sink(df, b)
-    ledger_dir = os.path.join(table, "_ledger")
-    # rewrite the checkpoint in the legacy monolithic format
-    entries = sorted(sink._compact_entries().values(), key=lambda e: e["batch_id"])
-    with open(os.path.join(ledger_dir, "_checkpoint.json"), "w") as fh:
-        _json.dump({"upto": 7, "entries": entries}, fh)
-    for f in os.listdir(ledger_dir):
-        if f.startswith("_checkpoint.seg."):
-            os.remove(os.path.join(ledger_dir, f))
-
-    sink2 = ExactlyOnceParquetSink(table, compact_every=4)
-    assert sorted(sink2._compact_entries()) == list(range(8))  # legacy readable
-    for b in range(8, 12):
-        ts = T0 + dt.timedelta(hours=b)
-        df = spark.createDataFrame(
-            [("r", f"e{b}", ts)], "rule_id string, entity_id string, ts timestamp_ntz"
-        )
-        sink2(df, b)
-    with open(os.path.join(ledger_dir, "_checkpoint.json")) as fh:
-        ptr = _json.load(fh)
-    assert set(ptr) == {"upto", "n_segments"} and ptr["n_segments"] == 1
-    sink3 = ExactlyOnceParquetSink(table, compact_every=4)
-    assert sorted(sink3._compact_entries()) == list(range(12))
-    assert sink3.read(spark).count() == 12
