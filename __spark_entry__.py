@@ -24,13 +24,14 @@ from semstreams_spark.datagen import ensure_transcripts, sf_from_dir, transcript
 from semstreams_spark.extract import extract_triples
 from semstreams_spark.extract.triples import (
     IN_EDGE,
+    MENTION_IDS,
+    MENTION_NAMES,
     MENTIONS_EDGE,
+    NODE_TYPE,
     conversation_id,
     entity_id,
     entity_id_of,
     mention_ids,
-    mention_names,
-    node_type,
     turn_subject,
 )
 from semstreams_spark.operators import entity_states, nodes_table, edges_table
@@ -144,13 +145,12 @@ def _mention_rows(spark, sf_dir):
     same row (both from ``extract.triples``) — without materializing the
     5-7× triple fan-out and its text payloads (guide §2.3: shuffle/derive
     fewer bytes)."""
-    t = _transcripts(spark, sf_dir)
-    return t.select(
+    return _transcripts(spark, sf_dir).selectExpr(
         "conv_id",
-        F.explode(mention_names()).alias("e"),
+        f"explode({MENTION_NAMES}) as e",
         "text",
         "ts",
-        F.col("turn_idx").cast("int").alias("seq"),
+        "cast(turn_idx as int) as seq",
         "turn_idx",
     )
 
@@ -320,37 +320,11 @@ def q_hybrid_search(spark, sf_dir):
 # --------------------------------------------------------- graph analytics
 
 
-def _conv_entity_pairs(spark, sf_dir):
-    """Per-conversation co-mention pairs (src < dst), one row per
-    (conv, pair): mentions derived directly from transcripts (no triple
-    fan-out), deduped per conversation by ONE collect_set aggregation
-    (map-side combinable), pairs generated JVM-side from the sorted set —
-    the same self-join→pair-explode reshape entity_cooccurrence measured
-    4.7× faster at sf0.1 (guide §2.4: the join and two of its exchanges
-    are gone; one groupBy exchange remains). Kept as the pure-Catalyst
-    reference form for the pair-count kernel below (parity A/B in
-    OPTIMIZATION_r06.md; weights cross-checked in tests)."""
-    m = _mention_rows(spark, sf_dir).select("conv_id", "e")
-    per_conv = m.groupBy("conv_id").agg(F.sort_array(F.collect_set("e")).alias("ents"))
-    return per_conv.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ents"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ents"), i + 2, F.size(F.col("ents"))),
-                        lambda y: F.struct(x.alias("src"), y.alias("dst")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select(F.col("p.src").alias("src"), F.col("p.dst").alias("dst"))
-
-
 def _conv_pair_counts(spark, sf_dir):
     """(src, dst, c): partial co-mention pair counts per Arrow batch —
-    Σc over batches == the per-conversation pair multiset of
-    ``_conv_entity_pairs`` (guide §2.3/§4.2).
+    Σc over batches == the per-conversation pair multiset (the Catalyst
+    form is ``conv_entity_pairs`` in ``tests/kernel_reference.py``;
+    guide §2.3/§4.2).
 
     Why: the Zipf mention vocabulary makes hot conversations mention most
     of the ~200-entity vocab, so the pair EXPLOSION is ~3.7M rows at
@@ -365,11 +339,11 @@ def _conv_pair_counts(spark, sf_dir):
     exactly as the Catalyst form. Measured: edges derive 2.17 → 1.26 s
     warm at sf0.1; outputs identical (A/B + weight cross-check)."""
     m = _mention_rows(spark, sf_dir).select("conv_id", "e")
-    # no sort_array here (unlike the Catalyst reference form above): the
+    # no sort_array here (unlike the Catalyst reference form): the
     # matrix path sorts via np.unique + searchsorted regardless of input
     # order, and the fallback path np.sorts per row — dropping the
     # per-group JVM array sort saves ~0.09 s per derive (×6 graph queries)
-    per_conv = m.groupBy("conv_id").agg(F.collect_set("e").alias("ents"))
+    per_conv = m.groupBy("conv_id").agg(F.expr("collect_set(e) as ents"))
     return per_conv.select("ents").mapInPandas(
         _pair_count_batches, "src string, dst string, c long"
     )
@@ -685,17 +659,20 @@ def q_entity_delete(spark, sf_dir):
     from semstreams_spark.operators.mutations import entity_status
 
     t = _transcripts(spark, sf_dir)
-    num = F.element_at(F.split(F.col("entity_id"), "_"), -1).try_cast("int")
-    tomb = F.when(num % 7 == 0, F.lit(DELETE_TS_LATE)).when(num % 7 == 3, F.lit(DELETE_TS_EARLY))
-    deletes = (
-        t.select(F.explode(mention_ids()).alias("entity_id"))
-        .distinct()
-        .select("entity_id", tomb.cast("timestamp_ntz").alias("ts"))
-        .filter(F.col("ts").isNotNull())
+    num = "try_cast(element_at(split(entity_id, '_'), -1) as int)"
+    tomb = (
+        f"case when {num} % 7 = 0 then '{DELETE_TS_LATE}' "
+        f"when {num} % 7 = 3 then '{DELETE_TS_EARLY}' end"
     )
-    return entity_status(t, deletes).select(
+    deletes = (
+        t.selectExpr(f"explode({MENTION_IDS}) as entity_id")
+        .distinct()
+        .selectExpr("entity_id", f"cast({tomb} as timestamp_ntz) as ts")
+        .filter("ts is not null")
+    )
+    return entity_status(t, deletes).selectExpr(
         "id",
-        node_type(F.col("id")).alias("type"),
+        f"{NODE_TYPE.format('id')} as type",
         "status",
         "version",
         "updated_at",

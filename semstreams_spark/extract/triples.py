@@ -38,7 +38,8 @@ in one py4j call; the Column API pays a round trip per ``F.*`` node,
 about 800 for ``extract_triples``. The plans are the same but for
 lambda-variable names; ``tests/triples_reference.py`` keeps the Column
 API statement as the parity reference. The builders that take a Column
-(``entity_id``, ``mention_triple``, ``node_type``) stay on the Column API.
+(``entity_id``, ``mention_triple``, ``node_type``) stay on the Column API;
+``NODE_TYPE`` is ``node_type`` as an SQL template over an id expression.
 The builders:
 
 - :func:`turn_subject` — the turn subject;
@@ -80,6 +81,7 @@ TURN_SUBJECT = "concat('test.local.conv.', conv_id, '.turn.', cast(turn_idx as s
 CONVERSATION_ID = "concat('test.local.graph.kb.conversation.', conv_id)"
 MENTION_NAMES = f"regexp_extract_all(text, '{MENTION_RE}', 1)"
 NO_TRIPLES = f"cast(array() as {_TRIPLES_TYPE})"
+NODE_TYPE = "coalesce(try_element_at(split({}, '\\\\.'), 5), 'entity')"
 
 
 def _entity_id(name: str) -> str:

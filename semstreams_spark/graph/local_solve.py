@@ -7,20 +7,25 @@ regime the round-2 perf ledger measured (per-iteration wall ~0.6 s on a
 96k-edge graph whose numpy fixed-point step costs ~1 ms). This module
 is the threshold dispatch for that case, the same adaptive-execution
 shape Spark itself applies to joins (broadcast under
-``autoBroadcastJoinThreshold``, shuffle above):
+``autoBroadcastJoinThreshold``, shuffle above). :func:`solve` is the one
+dispatch both operators share:
 
-* under ``local_max_edges`` the edge list ships to ONE executor task
-  (``applyInPandas`` over a constant group — never the driver) and the
-  whole fixed-point loop runs vectorized in numpy inside that task;
-* over the threshold the existing distributed join+agg loop runs
-  unchanged — that is the 100 TB path.
+* the ``(src, dst)`` input is materialized once by ``localCheckpoint``,
+  and the same job fills an ``Observation`` with its edge count, so the
+  dispatch costs no job of its own;
+* under ``local_max_edges`` the checkpoint is coalesced into ONE executor
+  task (``coalesce(1).mapInPandas``: no exchange, never the driver) and
+  the whole fixed-point loop runs vectorized in numpy inside that task.
+  The result is lazy: the caller's own action runs the solve;
+* over the threshold the distributed join+agg loop runs over the
+  checkpoint — that is the 100 TB path.
 
 Both operators were deliberately designed order-free (BIGINT fixed-point
 PageRank; min-label majority LPA), so the two paths are BIT-IDENTICAL —
 asserted by parity tests on random graphs (``tests/test_local_solve.py``)
 and by the unchanged DuckDB gates, which exercise the local path at
 sf0.01. Threshold override: ``SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES``
-(0 disables the local path entirely).
+(0 disables the local path for any non-empty graph).
 
 Reference semantics anchors: damped iteration
 ``pkg/graphclustering/pagerank.go:50-219``; LPA vote loop
@@ -31,10 +36,11 @@ Reference semantics anchors: damped iteration
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 DEFAULT_LOCAL_MAX_EDGES = 2_000_000
@@ -45,6 +51,32 @@ def local_max_edges(default: int | None = None) -> int:
     if env is not None:
         return int(env)
     return DEFAULT_LOCAL_MAX_EDGES if default is None else default
+
+
+def solve(
+    edges: DataFrame,
+    max_edges: int | None,
+    local: Callable[[np.ndarray, np.ndarray], pd.DataFrame],
+    schema: str,
+    distributed: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Materialize ``edges``' (src, dst) and count them in the same job;
+    under ``local_max_edges(max_edges)`` return the lazy single-task
+    ``local(src, dst)`` over the materialized edges as ``schema``, else
+    ``distributed(materialized edges)``."""
+    obs = Observation()
+    e = edges.select("src", "dst").observe(obs, F.count(F.lit(1)).alias("n"))
+    e = e.localCheckpoint(eager=True)
+    if obs.get["n"] > local_max_edges(max_edges):
+        return distributed(e)
+
+    def run(batches):
+        batches = [b for b in batches if len(b)]
+        if batches:
+            pdf = pd.concat(batches, ignore_index=True)
+            yield local(pdf["src"].to_numpy(), pdf["dst"].to_numpy())
+
+    return e.coalesce(1).mapInPandas(run, schema)
 
 
 def _index_edges(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -93,30 +125,18 @@ def _pagerank_core(
 
 
 def pagerank_local(
-    edges: DataFrame,
+    src: np.ndarray,
+    dst: np.ndarray,
     max_iter: int,
     scale: int,
     damping_num: int,
     damping_den: int,
-) -> DataFrame:
-    """Single-task PageRank: all edges to one executor task, loop in
-    numpy. Output schema/values identical to the distributed loop."""
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        src = pdf["src"].to_numpy()
-        dst = pdf["dst"].to_numpy()
-        ents, src_i, dst_i = _index_edges(src, dst)
-        rank = _pagerank_core(
-            src_i, dst_i, len(ents), max_iter, scale, damping_num, damping_den
-        )
-        return pd.DataFrame({"entity": ents, "rank": rank})
-
-    return (
-        edges.select("src", "dst")
-        .withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(solve, "entity string, rank long")
-    )
+) -> pd.DataFrame:
+    """Single-task PageRank over one edge list: (entity, rank) identical
+    to the distributed loop."""
+    ents, src_i, dst_i = _index_edges(src, dst)
+    rank = _pagerank_core(src_i, dst_i, len(ents), max_iter, scale, damping_num, damping_den)
+    return pd.DataFrame({"entity": ents, "rank": rank})
 
 
 # --------------------------------------------------------------------- LPA
@@ -154,20 +174,9 @@ def _lpa_core(src_i: np.ndarray, dst_i: np.ndarray, n: int, max_iter: int) -> np
     return label
 
 
-def lpa_local(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Single-task LPA: (entity, community) identical to the
-    distributed vote loop."""
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        src = pdf["src"].to_numpy()
-        dst = pdf["dst"].to_numpy()
-        ents, src_i, dst_i = _index_edges(src, dst)
-        label = _lpa_core(src_i, dst_i, len(ents), max_iter)
-        return pd.DataFrame({"entity": ents, "community": ents[label]})
-
-    return (
-        edges.select("src", "dst")
-        .withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(solve, "entity string, community string")
-    )
+def lpa_local(src: np.ndarray, dst: np.ndarray, max_iter: int) -> pd.DataFrame:
+    """Single-task LPA over one edge list: (entity, community) identical
+    to the distributed vote loop."""
+    ents, src_i, dst_i = _index_edges(src, dst)
+    label = _lpa_core(src_i, dst_i, len(ents), max_iter)
+    return pd.DataFrame({"entity": ents, "community": ents[label]})

@@ -17,6 +17,8 @@ deterministic, and equivalent on non-oscillating graphs.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,31 +31,25 @@ def lpa_communities(
     """(entity, community) — community = min entity id of the cluster's
     converged label. Undirected propagation.
 
-    Adaptive execution (same dispatch as pagerank_exact): under
-    ``local_max_edges`` (default 2M, env
+    Adaptive execution (``local_solve.solve``, shared with
+    pagerank_exact): under ``local_max_edges`` (default 2M, env
     ``SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES``) the vote loop runs vectorized
     in ONE executor task — bit-identical (min-label votes are
     order-free; parity-tested) without max_iter join+agg rounds of
     fixed cost. Larger graphs take the distributed loop."""
-    from .local_solve import local_max_edges as _lme, lpa_local
+    from .local_solve import lpa_local, solve
 
-    # pin the (possibly expensively derived) edge input before the
-    # dispatch count — it feeds either path exactly once more. Only
-    # take ownership if the caller hasn't already cached this plan
-    # (lpa_hierarchy has): unpersisting a borrowed cache would evict it
-    # mid-flight for the caller.
-    e = edges.select("src", "dst")
-    # storageLevel plan-matches against the cache manager (is_cached
-    # does not): a projection of a cached plan reports the cached level
-    lvl = e.storageLevel
-    owned = not (lvl.useMemory or lvl.useDisk)
-    if owned:
-        e = e.cache()
-    if e.count() <= _lme(local_max_edges):
-        out = lpa_local(e, max_iter).localCheckpoint(eager=True)
-        if owned:
-            e.unpersist()
-        return out
+    return solve(
+        edges,
+        local_max_edges,
+        partial(lpa_local, max_iter=max_iter),
+        "entity string, community string",
+        partial(_lpa_distributed, max_iter=max_iter),
+    )
+
+
+def _lpa_distributed(e: DataFrame, max_iter: int) -> DataFrame:
+    """lpa_communities' vote loop over materialized (src, dst) edges."""
     bidir = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -68,12 +64,10 @@ def lpa_communities(
         .distinct()
         .withColumn("label", F.col("entity"))
     )
-    n = labels.count()  # materializes und's cache; e no longer needed
-    if owned:
-        e.unpersist()
+    n = labels.count()
     # label votes are min_by-deterministic regardless of partitioning, so
     # the graph-sized shuffle width changes only per-iteration fixed cost
-    with iteration_shuffle_width(edges.sparkSession, n):
+    with iteration_shuffle_width(e.sparkSession, n):
         for it in range(max_iter):
             votes = (
                 und.join(labels, und["dst"] == labels["entity"])

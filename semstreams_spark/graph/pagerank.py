@@ -12,6 +12,8 @@ lineage. Deterministic: no sampling, fixed iteration order.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,48 +51,31 @@ def pagerank_exact(
     Mirrors the reference's damped iteration (``pkg/graphclustering/
     pagerank.go:50-219``) at fixed iteration count.
 
-    Adaptive execution: a graph under ``local_max_edges`` (default 2M,
-    env ``SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES``) runs the whole loop
-    vectorized inside ONE executor task instead of max_iter distributed
-    join+agg rounds — bit-identical by construction (integer arithmetic
-    is order-free; parity-tested), and the per-iteration fixed costs
-    that dominate small graphs vanish. Larger graphs take the
-    distributed loop below — the 100 TB path.
+    Adaptive execution (``local_solve.solve``): a graph under
+    ``local_max_edges`` (default 2M, env
+    ``SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES``) runs the whole loop vectorized
+    inside ONE executor task instead of max_iter distributed join+agg
+    rounds — bit-identical by construction (integer arithmetic is
+    order-free; parity-tested), and the per-iteration fixed costs that
+    dominate small graphs vanish. Larger graphs take the distributed loop
+    below — the 100 TB path.
     """
-    # input derivation runs once; only take cache ownership if the
-    # caller hasn't already cached this plan (unpersisting a borrowed
-    # cache would evict it mid-flight for the caller)
-    edges = edges.select("src", "dst")
-    # storageLevel plan-matches against the cache manager (is_cached
-    # does not): a projection of a cached plan reports the cached level
-    lvl = edges.storageLevel
-    owned = not (lvl.useMemory or lvl.useDisk)
-    if owned:
-        edges = edges.cache()
-    from .local_solve import local_max_edges as _lme, pagerank_local
+    from .local_solve import pagerank_local, solve
 
-    # r6: the dispatch count comes first and the LOCAL path never builds
-    # the distinct node table — the single-task kernel derives its own
-    # node set, so the nodes distinct+cache+count actions (~1 s of fixed
-    # cost on a small graph) only run on the distributed path that needs
-    # n for the (1-d)/n base term (guide §1.2: don't compute things you
-    # throw away).
-    n_edges = edges.count()
-    if n_edges == 0:
-        if owned:
-            edges.unpersist()
-        # empty result with the right column types, no further actions
-        return edges.select(F.col("src").alias("entity")).limit(0).withColumn(
-            "rank", F.lit(0).cast("long")
-        )
-    if n_edges <= _lme(local_max_edges):
-        # eager so the cached input can be released before returning
-        out = pagerank_local(edges, max_iter, scale, damping_num, damping_den).localCheckpoint(
-            eager=True
-        )
-        if owned:
-            edges.unpersist()
-        return out
+    args = dict(max_iter=max_iter, scale=scale, damping_num=damping_num, damping_den=damping_den)
+    return solve(
+        edges,
+        local_max_edges,
+        partial(pagerank_local, **args),
+        "entity string, rank long",
+        partial(_pagerank_distributed, **args),
+    )
+
+
+def _pagerank_distributed(
+    edges: DataFrame, max_iter: int, scale: int, damping_num: int, damping_den: int
+) -> DataFrame:
+    """pagerank_exact's join+agg loop over materialized (src, dst) edges."""
     nodes = (
         edges.select(F.col("src").alias("entity"))
         .unionByName(edges.select(F.col("dst").alias("entity")))
@@ -135,8 +120,6 @@ def pagerank_exact(
     nodes.unpersist()
     links.unpersist()
     dangling_nodes.unpersist()
-    if owned:
-        edges.unpersist()
     return ranks
 
 

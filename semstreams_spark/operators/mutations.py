@@ -6,12 +6,14 @@ cleanup), and the rule processor reacting to DELETED state changes
 (``processor/rule/entity_watcher.go:60-109``).
 
 Model: a **deletes table** ``(entity_id, ts)`` of tombstone events,
-merged with entity state by event-time LWW. Two Column rules state the
-contract, and every operator below applies it only through them:
+merged with entity state by event-time LWW. Two rules state the contract,
+each once as an SQL-text template over SQL expressions of the row in
+scope, and every operator below applies the contract only through them
+(``survives`` is the Column form of ``SURVIVES``):
 
-- ``tombstoned``: a node last updated at or before its last tombstone
+- ``TOMBSTONED``: a node last updated at or before its last tombstone
   is deleted (delete wins ties — deterministic contract, SURVEY §4.2.4);
-- ``survives``: a state row or edge lives only if it was seen strictly
+- ``SURVIVES``: a state row or edge lives only if it was seen strictly
   after its entity's last tombstone, so a later update RECREATES the
   entity (status back to active, version keeps counting — the reference
   bumps Version on every mutation).
@@ -19,7 +21,9 @@ contract, and every operator below applies it only through them:
 All pure Catalyst: the tombstone dimension is tiny relative to state, so
 every join below broadcasts; at 10^12 rows the state side never
 shuffles for these operators. ``entity_status`` joins one broadcast to
-both ends of an edge, so the second join reuses the first's exchange.
+both ends of an edge, so the second join reuses the first's exchange. Its
+expressions are SQL texts the JVM parses in one py4j call each, where
+the Column API pays a round trip per ``F.*`` node; the plans are the same.
 """
 
 from __future__ import annotations
@@ -27,19 +31,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..extract.triples import mention_ids, turn_subject
+from ..extract.triples import MENTION_IDS, TURN_SUBJECT
+
+# status rule: a node last updated at ``updated_at`` is deleted when its
+# last tombstone is at or after it (delete wins ties)
+TOMBSTONED = "({deleted_at} is not null and {deleted_at} >= {updated_at})"
+# edge and state-row rule: a row seen at ``seen_at`` survives when its
+# entity has no tombstone or it is strictly newer than the last one
+SURVIVES = "({deleted_at} is null or {seen_at} > {deleted_at})"
 
 
-def tombstoned(updated_at: Column, deleted_at: Column) -> Column:
-    """Status rule: state last updated at ``updated_at`` is deleted when
-    its last tombstone is at or after it (delete wins ties)."""
-    return deleted_at.isNotNull() & (deleted_at >= updated_at)
+def survives(seen_at: str, deleted_at: str) -> Column:
+    """``SURVIVES`` over the SQL expressions ``seen_at`` and ``deleted_at``."""
+    return F.expr(SURVIVES.format(seen_at=seen_at, deleted_at=deleted_at))
 
 
-def survives(seen_at: Column, deleted_at: Column) -> Column:
-    """Edge and state-row rule: a row seen at ``seen_at`` survives when its
-    entity has no tombstone or it is strictly newer than the last one."""
-    return deleted_at.isNull() | (seen_at > deleted_at)
+_STATUS = (
+    f"case when {TOMBSTONED.format(updated_at='updated_at', deleted_at='deleted_at')} "
+    "then 'deleted' else 'active' end as status"
+)
+_BUMPED = "version + coalesce(n_deletes, 0) as version"
 
 
 def latest_deletes(deletes: DataFrame) -> DataFrame:
@@ -58,7 +69,7 @@ def apply_deletes(states: DataFrame, deletes: DataFrame, subject_col: str = "sub
     out = states.join(
         F.broadcast(d), states[subject_col] == d["entity_id"], "left"
     )
-    return out.filter(survives(F.col("ts"), F.col("deleted_at"))).drop(
+    return out.filter(survives("ts", "deleted_at")).drop(
         "entity_id", "deleted_at"
     )
 
@@ -72,24 +83,9 @@ def nodes_with_status(nodes: DataFrame, deletes: DataFrame) -> DataFrame:
     never tombstoned)."""
     d = latest_deletes(deletes)
     out = nodes.join(F.broadcast(d), nodes["id"] == d["entity_id"], "left")
-    return out.select(
-        "id",
-        "type",
-        _status(F.col("updated_at"), F.col("deleted_at")),
-        _bumped(F.col("version"), F.col("n_deletes")),
-        "updated_at",
-        "deleted_at",
+    return out.selectExpr(
+        "id", "type", _STATUS, _BUMPED, "updated_at", "deleted_at"
     )
-
-
-def _status(updated_at: Column, deleted_at: Column) -> Column:
-    return F.when(tombstoned(updated_at, deleted_at), F.lit("deleted")).otherwise(
-        F.lit("active")
-    ).alias("status")
-
-
-def _bumped(version: Column, n_deletes: Column) -> Column:
-    return (version + F.coalesce(n_deletes, F.lit(0))).alias("version")
 
 
 def edges_after_deletes(edges: DataFrame, deletes: DataFrame) -> DataFrame:
@@ -103,7 +99,7 @@ def edges_after_deletes(edges: DataFrame, deletes: DataFrame) -> DataFrame:
             F.col("entity_id").alias(f"_{side}_id"), F.col("deleted_at").alias(f"_{side}_del")
         )
         out = out.join(F.broadcast(dd), out[side] == dd[f"_{side}_id"], "left").filter(
-            survives(F.col("updated_at"), F.col(f"_{side}_del"))
+            survives("updated_at", f"_{side}_del")
         ).drop(f"_{side}_id", f"_{side}_del")
     return out
 
@@ -121,36 +117,31 @@ def entity_status(transcripts: DataFrame, deletes: DataFrame) -> DataFrame:
     the edges that survive the tombstones of both their ends
     (``edges_after_deletes``). Returns (id, status, version, updated_at,
     deleted_at, n_live_edges)."""
-    mentions = transcripts.select(
-        turn_subject().alias("src"),
-        F.explode(F.array_distinct(mention_ids())).alias("dst"),
+    mentions = transcripts.selectExpr(
+        f"{TURN_SUBJECT} as src",
+        f"explode(array_distinct({MENTION_IDS})) as dst",
         "ts",
-        F.col("turn_idx").cast("int").alias("seq"),
+        "cast(turn_idx as int) as seq",
     )
     # each entity's tombstone times in one column: both edge ends need all
     # of it, so the dst join reuses the src join's broadcast
-    tombs = F.broadcast(deletes.groupBy("entity_id").agg(F.collect_list("ts").alias("tombs")))
-    j = mentions.join(tombs.alias("s"), F.col("src") == F.col("s.entity_id"), "left").join(
-        tombs.alias("d"), F.col("dst") == F.col("d.entity_id"), "left"
+    tombs = F.broadcast(deletes.groupBy("entity_id").agg(F.expr("collect_list(ts) as tombs")))
+    j = mentions.join(tombs.alias("s"), F.expr("src = s.entity_id"), "left").join(
+        tombs.alias("d"), F.expr("dst = d.entity_id"), "left"
     )
-    src_del, dst_del = F.array_max("s.tombs"), F.array_max("d.tombs")
-    live = survives(F.col("ts"), src_del) & survives(F.col("ts"), dst_del)
+    src_del, dst_del = "array_max(s.tombs)", "array_max(d.tombs)"
+    live = " and ".join(SURVIVES.format(seen_at="ts", deleted_at=d) for d in (src_del, dst_del))
     # hashed on dst, one exchange serves both the distinct (dst, ts, seq)
     # step of count_distinct and the per-dst aggregate
-    g = j.repartition("dst").groupBy(F.col("dst").alias("id")).agg(
-        F.count_distinct("ts", "seq").alias("version"),
-        F.max("ts").alias("updated_at"),
-        F.max(dst_del).alias("deleted_at"),
-        F.max(F.array_size("d.tombs")).alias("n_deletes"),
-        F.count(F.when(live, 1)).alias("n_live_edges"),
+    g = j.repartition("dst").groupBy(F.expr("dst as id")).agg(
+        F.expr("count(distinct ts, seq) as version"),
+        F.expr("max(ts) as updated_at"),
+        F.expr(f"max({dst_del}) as deleted_at"),
+        F.expr("max(array_size(d.tombs)) as n_deletes"),
+        F.expr(f"count(case when {live} then 1 end) as n_live_edges"),
     )
-    return g.select(
-        "id",
-        _status(F.col("updated_at"), F.col("deleted_at")),
-        _bumped(F.col("version"), F.col("n_deletes")),
-        "updated_at",
-        "deleted_at",
-        "n_live_edges",
+    return g.selectExpr(
+        "id", _STATUS, _BUMPED, "updated_at", "deleted_at", "n_live_edges"
     )
 
 

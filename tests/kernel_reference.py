@@ -8,6 +8,7 @@ kernels they pin, with ``_expr`` for the dedup and embedder forms.
 - ``embed_texts_expr`` → ``search.embedder.embed_texts``
 - ``banded_hyperplane_signatures`` → ``similarity.banded_signatures_numpy``
 - ``planted_neardup_corpus_catalyst`` → ``__spark_entry__.planted_neardup_corpus``
+- ``conv_entity_pairs`` → ``__spark_entry__._conv_pair_counts``
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from __spark_entry__ import PLANT_COS
+from __spark_entry__ import PLANT_COS, _mention_rows
 from semstreams_spark.operators.similarity import _plane_dot, norm_expr
 from semstreams_spark.operators.textops import portable_hash, tokens
 from semstreams_spark.search.embedder import DEFAULT_DIM
@@ -236,3 +237,29 @@ def planted_neardup_corpus_catalyst(e):
         ).alias("embedding"),
     )
     return e.unionByName(planted)
+
+
+def conv_entity_pairs(spark, sf_dir):
+    """Per-conversation co-mention pairs (src < dst), one row per
+    (conv, pair): mentions derived directly from transcripts (no triple
+    fan-out), deduped per conversation by ONE collect_set aggregation
+    (map-side combinable), pairs generated JVM-side from the sorted set —
+    the same self-join→pair-explode reshape entity_cooccurrence measured
+    4.7× faster at sf0.1. The pure-Catalyst reference form of the
+    pair-count kernel (parity A/B in OPTIMIZATION_r06.md; weights
+    cross-checked in tests)."""
+    m = _mention_rows(spark, sf_dir).select("conv_id", "e")
+    per_conv = m.groupBy("conv_id").agg(F.sort_array(F.collect_set("e")).alias("ents"))
+    return per_conv.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    F.col("ents"),
+                    lambda x, i: F.transform(
+                        F.slice(F.col("ents"), i + 2, F.size(F.col("ents"))),
+                        lambda y: F.struct(x.alias("src"), y.alias("dst")),
+                    ),
+                )
+            )
+        ).alias("p")
+    ).select(F.col("p.src").alias("src"), F.col("p.dst").alias("dst"))

@@ -642,6 +642,7 @@ def test_pair_count_kernel_fallback_matches_matrix_path():
 
 def test_conv_pair_counts_matches_catalyst_pairs(spark):
     import __spark_entry__ as entry
+    from kernel_reference import conv_entity_pairs
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
@@ -654,7 +655,7 @@ def test_conv_pair_counts_matches_catalyst_pairs(spark):
     }
     we = {
         (r["src"], r["dst"]): r["w"]
-        for r in entry._conv_entity_pairs(spark, sf)
+        for r in conv_entity_pairs(spark, sf)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
         .collect()

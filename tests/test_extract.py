@@ -102,6 +102,15 @@ def test_sql_builders_match_column_api_reference(spark):
         want = turns.select("turn_idx", getattr(ref, name)().alias("v"))
         assert got.schema == want.schema, name
         assert _sorted_rows(got) == _sorted_rows(want), name
+    # NODE_TYPE, the SQL text of node_type, on turn subjects and on ids
+    # with fewer than 5 dot-parts
+    ids = turns.select(triples.turn_subject().alias("id")).union(
+        spark.createDataFrame([("a.b",), ("x",)], "id string")
+    )
+    got = ids.selectExpr("id", f"{triples.NODE_TYPE.format('id')} as v")
+    want = ids.select("id", triples.node_type(ids["id"]).alias("v"))
+    assert got.schema == want.schema
+    assert _sorted_rows(got) == _sorted_rows(want)
     got, want = extract_triples(turns), ref.extract_triples(turns)
     assert got.schema == want.schema
     assert _sorted_rows(got) == _sorted_rows(want)

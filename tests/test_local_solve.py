@@ -1,7 +1,8 @@
 """Adaptive single-task graph solve: the local numpy path must be
 BIT-IDENTICAL to the distributed join+agg loop (both operators are
 order-free by design — BIGINT fixed-point PageRank, min-label majority
-LPA — so any divergence is a bug, not a tolerance)."""
+LPA — so any divergence is a bug, not a tolerance), and the edge count
+that picks the path costs no job of its own."""
 
 from __future__ import annotations
 
@@ -59,20 +60,57 @@ def test_lpa_local_matches_distributed(spark, seed):
 
 
 def test_local_solve_runs_in_executor_not_driver(spark):
-    """The local path is an applyInPandas over a constant group — a
-    FlatMapGroupsInPandas in the executed plan, never a driver collect."""
+    """The local path is one task over the materialized edges — a
+    MapInPandas over Coalesce 1 in the executed plan, with no exchange and
+    no grouped applyInPandas, never a driver collect."""
     from semstreams_spark.graph import pagerank_exact
 
     e = spark.createDataFrame([("a", "b"), ("b", "a"), ("b", "c")], "src string, dst string")
     pr = pagerank_exact(e, max_iter=4)
-    # result came from a localCheckpoint of the solve's output; re-derive
-    # the lazy plan to inspect it
-    from semstreams_spark.graph.local_solve import pagerank_local
-
-    plan = pagerank_local(e, 4, 10**12, 85, 100)._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
+    plan = pr._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Coalesce 1" in plan, plan
+    assert plan.index("MapInPandas") < plan.index("Coalesce 1"), plan  # the solve sits above
+    assert "Exchange" not in plan and "FlatMapGroupsInPandas" not in plan, plan
     ranks = {r["entity"]: r["rank"] for r in pr.collect()}
     assert abs(sum(ranks.values()) - 10**12) < 100  # mass conserved to ulp
+
+
+@pytest.mark.parametrize("op", ["pagerank", "lpa"])
+def test_dispatch_follows_the_observed_edge_count(spark, op):
+    """The edge count the materializing job observes picks the path: local
+    at local_max_edges = n, distributed at n - 1, with identical rows."""
+    from semstreams_spark.graph import lpa_communities, pagerank_exact
+
+    rows = _random_graph(21, 25, 70)
+    n = len(rows)
+    e = spark.createDataFrame(rows, "src string, dst string")
+
+    def run(limit):
+        if op == "pagerank":
+            return pagerank_exact(e, max_iter=5, local_max_edges=limit)
+        return lpa_communities(e, max_iter=6, local_max_edges=limit)
+
+    local, dist = run(n), run(n - 1)
+    assert "MapInPandas" in local._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in dist._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, local.collect())) == sorted(map(tuple, dist.collect()))
+
+
+def test_pagerank_entities_runs_four_jobs(spark, tmp_path):
+    """q_pagerank_entities into a noop sink: the jobs that materialize and
+    count the co-mention edges, then the caller's write runs the solve."""
+    from test_read_parquet import _jobs
+
+    import __spark_entry__ as entry
+
+    # the query reads only the scale factor off the directory name
+    sf = str(tmp_path / "sf0.001")
+    entry.q_pagerank_entities(spark, sf).write.format("noop").mode("overwrite").save()
+    _, n_jobs = _jobs(
+        spark,
+        lambda: entry.q_pagerank_entities(spark, sf).write.format("noop").mode("overwrite").save(),
+    )
+    assert n_jobs <= 4, n_jobs
 
 
 def test_lpa_local_two_triangles_bridge(spark):

@@ -2,18 +2,22 @@
 
 Times each declared query in isolation with the noop sink (so the sink
 never pollutes the measurement), counts the Spark jobs each run submits
-(perfbench's ``sparkstats.jobs_between``) and the py4j round trips that
-building its DataFrame takes (``Py4JRoundTrips``), labels jobs for the
-UI, and captures ``explain("formatted")`` for the plan ledger under
+(perfbench's ``sparkstats.jobs_between``), times building its DataFrame
+(``build_ms``: the query function's call, including any JVM analysis and
+any action it runs before returning) and counts the py4j round trips
+that building takes (``Py4JRoundTrips``; round trips undercount JVM
+analysis, which ``build_ms`` includes), labels jobs for the UI, and
+captures ``explain("formatted")`` for the plan ledger under
 ``plans/<tag>/``.
 
 Usage:
   python tools/profile_queries.py [--tag r06_before] [--reps 2] \
       [--sf-dir /root/testdata/sf0.1] [--explain-only] [query ...]
 
-Prints ``<query> wall_s=<w> jobs=<n> py4j=<r>`` per run on stderr, then
-one JSON line: {"queries": {name: [walls...]}, "jobs": {name: [counts...]},
-"py4j": {name: [counts...]}, "sf_dir": ...}.
+Prints ``<query> wall_s=<w> jobs=<n> build_ms=<b> py4j=<r>`` per run on
+stderr, then one JSON line: {"queries": {name: [walls...]}, "jobs": {name:
+[counts...]}, "build_ms": {name: [ms...]}, "py4j": {name: [counts...]},
+"sf_dir": ...}.
 This is a measurement tool only — bench.py remains the frozen metric.
 """
 
@@ -89,6 +93,7 @@ def main() -> int:
 
     walls: dict[str, list[float]] = {n: [] for n in names}
     jobs: dict[str, list[int]] = {n: [] for n in names}
+    build_ms: dict[str, list[float]] = {n: [] for n in names}
     py4j: dict[str, list[int]] = {n: [] for n in names}
     for rep in range(1 if args.explain_only else args.reps):
         for n in names:
@@ -110,6 +115,7 @@ def main() -> int:
             t0 = time.monotonic()
             with Py4JRoundTrips(spark) as trips:
                 df = qs[n](spark, args.sf_dir)
+            build_ms[n].append(round((time.monotonic() - t0) * 1000, 1))
             df.write.format("noop").mode("overwrite").save()
             walls[n].append(round(time.monotonic() - t0, 3))
             py4j[n].append(trips.n)
@@ -117,7 +123,8 @@ def main() -> int:
             spark.sparkContext.setJobDescription(None)
             sparkstats.drain(spark)
             jobs[n].append(len(sparkstats.jobs_between(spark, t0_ms, t1_ms)))
-            print(f"{n} wall_s={walls[n][-1]} jobs={jobs[n][-1]} py4j={py4j[n][-1]}",
+            print(f"{n} wall_s={walls[n][-1]} jobs={jobs[n][-1]} "
+                  f"build_ms={build_ms[n][-1]} py4j={py4j[n][-1]}",
                   file=sys.stderr, flush=True)
             spark.catalog.clearCache()
         gc.collect()
@@ -125,6 +132,7 @@ def main() -> int:
     print(json.dumps({
         "queries": walls,
         "jobs": jobs,
+        "build_ms": build_ms,
         "py4j": py4j,
         "sf_dir": args.sf_dir,
         "cores": args.cores,
