@@ -420,7 +420,7 @@ def q_paths_2hop(spark, sf_dir):
     with decayed scores under a MaxPaths budget + truncated flag."""
     from semstreams_spark.graph import traversal_paths
 
-    edges = _entity_edges(spark, sf_dir).withColumn("edge_type", F.lit("comention"))
+    edges = _entity_edges(spark, sf_dir)
     p = traversal_paths(edges, "ent_000", max_depth=2, decay=0.85, max_paths=500)
     return p.select(F.array_join("path", "->").alias("path"), "depth", "score", "truncated")
 
@@ -433,7 +433,7 @@ def q_sliding_degree(spark, sf_dir):
 
 def q_pagerank_entities(spark, sf_dir):
     """G3 PageRank, fixed-point BIGINT form — bit-exact on any engine or
-    cluster size (float form graph.pagerank is the throughput variant)."""
+    cluster size."""
     from semstreams_spark.graph import pagerank_exact
 
     pr = pagerank_exact(_entity_edges(spark, sf_dir), max_iter=10)
@@ -638,10 +638,8 @@ def q_graphrag_global(spark, sf_dir):
     edges = _entity_edges(spark, sf_dir).filter(
         F.col("src").startswith("ent_") & F.col("dst").startswith("ent_")
     )
-    members = lpa_communities(edges, max_iter=6).cache()
-    # texts feed two branches of the final plan (summaries + rerank);
-    # cache so mention-context derivation runs once
-    texts = _mention_context_texts(spark, sf_dir).cache()
+    members = lpa_communities(edges, max_iter=6)
+    texts = _mention_context_texts(spark, sf_dir)
     summaries = community_summaries(members, texts, k_terms=5)
     return global_search(members, summaries, texts, GRAPHRAG_QUERY, top_communities=3)
 
@@ -712,10 +710,7 @@ def q_entity_semantic_topk(spark, sf_dir):
     from semstreams_spark.operators.similarity import cosine_topk
     from semstreams_spark.search.embedder import embed_entities_deduped, embed_text_py
 
-    # texts feed the hash branch AND the join-back inside
-    # embed_entities_deduped — cache so the mention-context derivation
-    # runs once
-    emb = embed_entities_deduped(_mention_context_texts(spark, sf_dir).cache(), dim=384)
+    emb = embed_entities_deduped(_mention_context_texts(spark, sf_dir), dim=384)
     top = cosine_topk(emb, embed_text_py(ENTITY_QUERY), k=10, id_col="entity", vec_col="embedding")
     return top.select(F.col("vec_id").alias("entity"), F.round("cosine", 6).alias("cosine"))
 
@@ -768,7 +763,7 @@ def q_graphrag_local(spark, sf_dir):
     edges = _entity_edges(spark, sf_dir).filter(
         F.col("src").startswith("ent_") & F.col("dst").startswith("ent_")
     )
-    members = lpa_communities(edges, max_iter=6).cache()
+    members = lpa_communities(edges, max_iter=6)
     texts = _mention_context_texts(spark, sf_dir)
     return local_search(members, texts, "ent_001", GRAPHRAG_QUERY)
 
@@ -858,7 +853,7 @@ def q_context_flags(spark, sf_dir):
     from semstreams_spark.rules.context_flags import context_flags_df
     from semstreams_spark.rules.engine import Condition, Rule
 
-    edges = _entity_edges(spark, sf_dir).withColumn("edge_type", F.lit("comention"))
+    edges = _entity_edges(spark, sf_dir)
     men = _mention_rows(spark, sf_dir).select(F.col("e").alias("entity"), "ts")
     states = men.groupBy("entity").agg(
         F.count(F.lit(1)).alias("n"), F.max("ts").alias("ts")

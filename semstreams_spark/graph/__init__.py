@@ -1,13 +1,11 @@
 from .traversal import bounded_traversal, traversal_paths
-from .pagerank import pagerank, pagerank_exact, degree_centrality
+from .pagerank import pagerank_exact
 from .lpa import lpa_communities, lpa_hierarchy
 
 __all__ = [
     "bounded_traversal",
     "traversal_paths",
-    "pagerank",
     "pagerank_exact",
-    "degree_centrality",
     "lpa_communities",
     "lpa_hierarchy",
 ]

@@ -10,9 +10,12 @@ shape Spark itself applies to joins (broadcast under
 ``autoBroadcastJoinThreshold``, shuffle above). :func:`solve` is the one
 dispatch both operators share:
 
-* the ``(src, dst)`` input is materialized once by ``localCheckpoint``,
-  and the same job fills an ``Observation`` with its edge count, so the
-  dispatch costs no job of its own;
+* the ``(src, dst)`` input is materialized once by :func:`materialize`
+  (``localCheckpoint``, with an ``Observation`` that counts the rows in
+  the same job), so the dispatch costs no job of its own. That step is
+  shared by every graph loop that stores a frame and needs its size: the
+  traversal's edges and hop frontiers, the hierarchy's edges and
+  community graphs, and the node sets of the distributed loops;
 * under ``local_max_edges`` the checkpoint is coalesced into ONE executor
   task (``coalesce(1).mapInPandas``: no exchange, never the driver) and
   the whole fixed-point loop runs vectorized in numpy inside that task.
@@ -53,21 +56,28 @@ def local_max_edges(default: int | None = None) -> int:
     return DEFAULT_LOCAL_MAX_EDGES if default is None else default
 
 
+def materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` stored by ``localCheckpoint`` and its row count, both from
+    ONE job: an ``Observation`` counts the rows as the checkpoint writes
+    them, so reading the size costs no second scan."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return out, obs.get["n"]
+
+
 def solve(
-    edges: DataFrame,
+    e: DataFrame,
+    n_edges: int,
     max_edges: int | None,
     local: Callable[[np.ndarray, np.ndarray], pd.DataFrame],
     schema: str,
     distributed: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """Materialize ``edges``' (src, dst) and count them in the same job;
-    under ``local_max_edges(max_edges)`` return the lazy single-task
-    ``local(src, dst)`` over the materialized edges as ``schema``, else
-    ``distributed(materialized edges)``."""
-    obs = Observation()
-    e = edges.select("src", "dst").observe(obs, F.count(F.lit(1)).alias("n"))
-    e = e.localCheckpoint(eager=True)
-    if obs.get["n"] > local_max_edges(max_edges):
+    """Dispatch on (src, dst) edges ``e`` that :func:`materialize` stored
+    and counted (``n_edges``): under ``local_max_edges(max_edges)`` return
+    the lazy single-task ``local(src, dst)`` over ``e`` as ``schema``,
+    else ``distributed(e)``."""
+    if n_edges > local_max_edges(max_edges):
         return distributed(e)
 
     def run(batches):

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ._width import iteration_shuffle_width
+from .local_solve import lpa_local, materialize, solve
 
 
 def lpa_communities(
@@ -37,10 +38,17 @@ def lpa_communities(
     in ONE executor task — bit-identical (min-label votes are
     order-free; parity-tested) without max_iter join+agg rounds of
     fixed cost. Larger graphs take the distributed loop."""
-    from .local_solve import lpa_local, solve
+    return _lpa(*materialize(edges.select("src", "dst")), max_iter, local_max_edges)
 
+
+def _lpa(
+    e: DataFrame, n_edges: int, max_iter: int, local_max_edges: int | None = None
+) -> DataFrame:
+    """lpa_communities over (src, dst) edges ``e`` already materialized,
+    with ``n_edges`` rows."""
     return solve(
-        edges,
+        e,
+        n_edges,
         local_max_edges,
         partial(lpa_local, max_iter=max_iter),
         "entity string, community string",
@@ -59,12 +67,11 @@ def _lpa_distributed(e: DataFrame, max_iter: int) -> DataFrame:
         .distinct()
         .cache()
     )
-    labels = (
+    labels, n = materialize(
         und.select(F.col("src").alias("entity"))
         .distinct()
         .withColumn("label", F.col("entity"))
     )
-    n = labels.count()
     # label votes are min_by-deterministic regardless of partitioning, so
     # the graph-sized shuffle width changes only per-iteration fixed cost
     with iteration_shuffle_width(e.sparkSession, n):
@@ -112,28 +119,30 @@ def lpa_hierarchy(edges: DataFrame, levels: int = 3, max_iter: int = 8) -> DataF
     Scale shape: the community graph shrinks geometrically per level, so
     upper levels cost a fraction of level 0; each level is the same
     join+agg LPA loop.
+
+    The edge input is stored once (``local_solve.materialize``): level 0
+    dispatches on that checkpoint and every level's community graph is
+    built from it. Each community graph is materialized and counted in
+    one job, and an empty one ends the hierarchy.
     """
     if levels < 1:
         raise ValueError("levels must be >= 1")
-    # cache the (possibly expensively derived) edge input once: it feeds
-    # level-0 LPA and every level's community-graph build, each a separate
-    # action chain
-    e = edges.select("src", "dst").cache()
-    members = lpa_communities(e, max_iter).localCheckpoint(eager=True)
+    e, n_edges = materialize(edges.select("src", "dst"))
+    members = _lpa(e, n_edges, max_iter).localCheckpoint(eager=True)
     out = members.withColumn("level", F.lit(0))
     for lvl in range(1, levels):
         ms = members.select(F.col("entity").alias("src"), F.col("community").alias("c_src"))
         md = members.select(F.col("entity").alias("dst"), F.col("community").alias("c_dst"))
-        ce = (
+        ce, n_ce = materialize(
             e.join(ms, "src")
             .join(md, "dst")
             .filter(F.col("c_src") != F.col("c_dst"))
             .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
             .distinct()
         )
-        if ce.isEmpty():
+        if n_ce == 0:
             break
-        sup = lpa_communities(ce, max_iter).toDF("community", "up")
+        sup = _lpa(ce, n_ce, max_iter).toDF("community", "up")
         members = (
             members.join(sup, "community", "left")
             .select(
@@ -143,5 +152,4 @@ def lpa_hierarchy(edges: DataFrame, levels: int = 3, max_iter: int = 8) -> DataF
             .localCheckpoint(eager=True)
         )
         out = out.unionByName(members.withColumn("level", F.lit(lvl)))
-    e.unpersist()
     return out.select("entity", "level", "community")

@@ -1,13 +1,14 @@
-"""PageRank + degree centrality (G3/G4).
+"""PageRank (G3).
 
 Reference: damped iteration with tolerance convergence
 (``pkg/graphclustering/pagerank.go:50-219``, defaults damping 0.85,
-tolerance 1e-6, max 100 iters at ``pagerank.go:25-33``); degree fallback
-(``pagerank.go:280-326``).
+tolerance 1e-6, max 100 iters at ``pagerank.go:25-33``).
 
-Spark form: classic iterative join+agg over (src, dst) edges with
-dangling-mass redistribution; localCheckpoint per iteration cuts
-lineage. Deterministic: no sampling, fixed iteration order.
+Spark form: fixed-point BIGINT iteration over (src, dst) edges with
+dangling-mass redistribution, run in one task under the local-solve
+threshold and as an iterative join+agg above it; localCheckpoint per
+iteration cuts lineage. Deterministic: no sampling, fixed iteration
+order.
 """
 
 from __future__ import annotations
@@ -18,17 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ._width import iteration_shuffle_width
-
-
-def degree_centrality(edges: DataFrame) -> DataFrame:
-    """(entity, out_degree, in_degree, degree)."""
-    out_d = edges.groupBy(F.col("src").alias("entity")).agg(F.count(F.lit(1)).alias("out_degree"))
-    in_d = edges.groupBy(F.col("dst").alias("entity")).agg(F.count(F.lit(1)).alias("in_degree"))
-    return (
-        out_d.join(in_d, "entity", "full_outer")
-        .fillna(0, ["out_degree", "in_degree"])
-        .withColumn("degree", F.col("out_degree") + F.col("in_degree"))
-    )
+from .local_solve import materialize, pagerank_local, solve
 
 
 def pagerank_exact(
@@ -60,11 +51,9 @@ def pagerank_exact(
     dominate small graphs vanish. Larger graphs take the distributed loop
     below — the 100 TB path.
     """
-    from .local_solve import pagerank_local, solve
-
     args = dict(max_iter=max_iter, scale=scale, damping_num=damping_num, damping_den=damping_den)
     return solve(
-        edges,
+        *materialize(edges.select("src", "dst")),
         local_max_edges,
         partial(pagerank_local, **args),
         "entity string, rank long",
@@ -76,13 +65,11 @@ def _pagerank_distributed(
     edges: DataFrame, max_iter: int, scale: int, damping_num: int, damping_den: int
 ) -> DataFrame:
     """pagerank_exact's join+agg loop over materialized (src, dst) edges."""
-    nodes = (
+    nodes, n = materialize(
         edges.select(F.col("src").alias("entity"))
         .unionByName(edges.select(F.col("dst").alias("entity")))
         .distinct()
-        .cache()
     )
-    n = nodes.count()
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     links = edges.join(out_deg, "src").select("src", "dst", "deg").cache()
     dangling_nodes = nodes.join(out_deg, nodes["entity"] == out_deg["src"], "left_anti").cache()
@@ -117,83 +104,6 @@ def _pagerank_distributed(
                 )
                 .localCheckpoint(eager=True)
             )
-    nodes.unpersist()
     links.unpersist()
     dangling_nodes.unpersist()
-    return ranks
-
-
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    max_iter: int = 20,
-    tol: float = 1e-6,
-) -> DataFrame:
-    """(entity, rank), Σrank = 1. Converges when Σ|Δ| < tol."""
-    edges = edges.select("src", "dst").cache()
-    nodes = (
-        edges.select(F.col("src").alias("entity"))
-        .unionByName(edges.select(F.col("dst").alias("entity")))
-        .distinct()
-        .cache()
-    )
-    n = nodes.count()
-    if n == 0:
-        edges.unpersist()
-        nodes.unpersist()
-        return nodes.withColumn("rank", F.lit(0.0))
-
-    # size the iteration's shuffle width to the graph: a 1000-executor
-    # cluster on a 10^9-node graph wants wide shuffles, a few-hundred-node
-    # projected graph wants 1 — per-stage fixed costs dominate otherwise
-    p = max(1, min(int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions")), n // 5000))
-    nodes = nodes.repartition(p, "entity").cache()
-
-    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    links = edges.join(out_deg, "src").select("src", "dst", "deg").repartition(p, "src").cache()
-
-    # dangling node set is static — compute once
-    dangling_nodes = nodes.join(out_deg, nodes["entity"] == out_deg["src"], "left_anti").cache()
-
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    prev = None
-    for it in range(max_iter):
-        contribs = (
-            links.join(ranks, links["src"] == ranks["entity"])
-            .select(F.col("dst").alias("entity"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("entity")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        # dangling mass folded in lazily (scalar via crossJoin — no
-        # driver round-trip per iteration)
-        dm = dangling_nodes.join(ranks, "entity").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dmass")
-        )
-        new_ranks = (
-            nodes.join(contribs, "entity", "left")
-            .crossJoin(F.broadcast(dm))
-            .select(
-                "entity",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * (F.col("dmass") / n + F.coalesce(F.col("inflow"), F.lit(0.0)))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        prev, ranks = ranks, new_ranks
-        # convergence test costs a driver action — sample it
-        if tol > 0 and (it % 5 == 4 or it == max_iter - 1):
-            delta = (
-                ranks.alias("n")
-                .join(prev.alias("o"), "entity")
-                .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))))
-                .collect()[0][0]
-            )
-            if delta is not None and delta < tol:
-                break
-    nodes.unpersist()
-    links.unpersist()
-    dangling_nodes.unpersist()
-    edges.unpersist()
     return ranks

@@ -1,10 +1,16 @@
 """Bounded path traversal (PathRAG-style, G1).
 
-Reference: DFS with MaxDepth/MaxNodes/EdgeFilter/DecayFactor and cycle
-avoidance (``graph/query/client.go:456-726``). Spark re-expression:
-level-synchronous frontier BFS — each hop is one join against the edge
-table; relevance decays per hop; a node keeps its best (max) score over
-all paths; cycle avoidance falls out of keeping min-depth-first-win.
+Reference: DFS with MaxDepth/DecayFactor and cycle avoidance
+(``graph/query/client.go:456-726``). Spark re-expression:
+level-synchronous frontier BFS over the undirected edge set — each hop
+is one join against the edge table; relevance decays per hop; a node
+keeps its best (max) score over all paths; cycle avoidance falls out of
+keeping min-depth-first-win.
+
+The edge set and each hop's frontier are stored by
+``local_solve.materialize``, which counts them in the job that stores
+them: the count sizes the loop's shuffle width and ends the loop at an
+empty frontier without a job of its own.
 
 At scale the edge table is hash-partitioned by src so each hop is a
 shuffle-free (co-partitioned) join after the first; locally Catalyst
@@ -14,12 +20,11 @@ broadcast-joins the frontier (tiny) against edges — exactly what a
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ._width import iteration_shuffle_width
+from .local_solve import materialize
 
 
 def bounded_traversal(
@@ -27,34 +32,24 @@ def bounded_traversal(
     start: str,
     max_depth: int = 3,
     decay: float = 0.85,
-    edge_filter: list[str] | None = None,
-    max_nodes: int | None = None,
-    bidirectional: bool = True,
 ) -> DataFrame:
     """BFS from `start` to max_depth. Returns (entity, depth, score):
     depth = first-reach hop count, score = decay^depth (relevance,
     ``client.go`` DecayFactor semantics), deterministic.
 
-    edges: (src, dst, edge_type). bidirectional follows both directions
-    (the reference enriches incoming + outgoing, J5).
+    edges: (src, dst), followed in both directions (the reference
+    enriches incoming + outgoing, J5).
     """
     spark: SparkSession = edges.sparkSession
-    e = _undirected(edges, edge_filter, bidirectional).cache()
-    n_edges = e.count()  # fills the cache the first hop needs anyway
+    e, n_edges = materialize(_undirected(edges))
 
     visited = spark.createDataFrame(
         [(start, 0, 1.0)], "entity string, depth int, score double"
     )
     frontier = visited
-    # visited size tracked incrementally (previous + accepted frontier);
-    # counting the materialized frontier after localCheckpoint is free-ish,
-    # while visited.count() would re-scan the growing union every hop
-    n_visited = 1
     with iteration_shuffle_width(spark, n_edges):
         for d in range(1, max_depth + 1):
-            if max_nodes is not None and max_nodes - n_visited <= 0:
-                break
-            nxt = (
+            nxt, n_new = materialize(
                 frontier.join(e, frontier["entity"] == e["src"])
                 .select(
                     F.col("dst").alias("entity"),
@@ -64,39 +59,16 @@ def bounded_traversal(
                 .distinct()
                 .join(visited.select("entity"), "entity", "left_anti")
             )
-            if max_nodes is not None:
-                nxt = nxt.orderBy(F.desc("score"), F.asc("entity")).limit(
-                    max_nodes - n_visited
-                )
-            nxt = nxt.localCheckpoint(eager=True)  # cut lineage per hop
-            if d == max_depth:
-                # r6: the final hop's count only fed the loop-continuation
-                # test — union it (possibly empty) and stop, one action less
-                visited = visited.unionByName(nxt)
-                break
-            n_new = nxt.count()  # counts the checkpointed blocks, no recompute
             if n_new == 0:
                 break
-            n_visited += n_new
             visited = visited.unionByName(nxt)
             frontier = nxt
-    # every level is already checkpointed, so the assembled result's
-    # lineage no longer references e — safe to unpersist immediately
-    e.unpersist()
     return visited
 
 
-def _undirected(edges: DataFrame, edge_filter: list[str] | None, bidirectional: bool) -> DataFrame:
-    e = edges.select("src", "dst", "edge_type")
-    if edge_filter:
-        e = e.filter(F.col("edge_type").isin(edge_filter))
-    if bidirectional:
-        e = e.select("src", "dst").unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    else:
-        e = e.select("src", "dst")
-    return e.distinct()
+def _undirected(edges: DataFrame) -> DataFrame:
+    e = edges.select("src", "dst")
+    return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
 
 def traversal_paths(
@@ -104,60 +76,34 @@ def traversal_paths(
     start: str,
     max_depth: int = 3,
     decay: float = 0.85,
-    edge_filter: list[str] | None = None,
     max_paths: int | None = None,
-    max_time_s: float | None = None,
-    bidirectional: bool = True,
-    per_hop_cap: int | None = None,
 ) -> DataFrame:
     """PathRAG path enumeration (``graph/query/client.go:456-726``,
     PathResult at ``:520``): all simple paths from `start` up to
-    max_depth, each as an explicit node sequence with a decayed score,
-    under MaxPaths / MaxTime budgets with a `truncated` flag.
+    max_depth over the undirected (src, dst) edges, each as an explicit
+    node sequence with a decayed score, under a MaxPaths budget with a
+    `truncated` flag.
 
     Returns (path array<string>, depth int, score double,
-    truncated boolean) — truncated is true on every row when either
-    budget cut enumeration short (reference sets PathResult.Truncated).
-
-    Budgets:
-    - max_paths: after enumeration, keep the top max_paths by
-      (score desc, path asc) — deterministic, mirrors the reference's
-      MaxPaths cap applied to collected paths.
-    - max_time_s: wall-clock budget checked between hops (the reference
-      checks MaxTime inside its DFS loop); expansion stops early.
-    - per_hop_cap: optional scale guard — keeps only the top cap paths
-      per hop (score desc, path asc) before expanding further; bounds
-      frontier memory on high-degree graphs at the cost of completeness
-      (sets truncated when it trims).
+    truncated boolean) — truncated is true on every row when max_paths
+    cut the paths short (reference sets PathResult.Truncated). Over
+    max_paths paths, the top max_paths by (score desc, path asc) are
+    kept — deterministic, mirrors the reference's MaxPaths cap applied
+    to collected paths.
 
     Each hop is one join frontier⋈edges with an array_contains cycle
     filter — level-synchronous BFS, no driver-side row loops.
     """
     spark: SparkSession = edges.sparkSession
-    # cache the (possibly expensively derived) edge set ONCE — every hop,
-    # count, and the final sort are separate actions that would otherwise
-    # re-run the whole upstream plan (e.g. triple extraction) per action
-    e = _undirected(edges, edge_filter, bidirectional).cache()
-    n_edges = e.count()
+    e, n_edges = materialize(_undirected(edges))
 
-    t0 = time.monotonic()
     frontier = spark.createDataFrame([([start], 0, 1.0)], "path array<string>, depth int, score double")
-    levels = [frontier]
-    truncated = False
-    n_frontier = 1  # tracked incrementally — no re-count of a frontier
-    n_total = 1  # running path count across levels (replaces out.count())
+    out = frontier
+    n_total = 1  # the hops' counts sum to the path count
     with iteration_shuffle_width(spark, n_edges):
         for d in range(1, max_depth + 1):
-            if max_time_s is not None and time.monotonic() - t0 >= max_time_s:
-                truncated = True
-                break
-            if per_hop_cap is not None and n_frontier > per_hop_cap:
-                capped = frontier.orderBy(F.desc("score"), F.asc("path")).limit(per_hop_cap)
-                frontier = capped.localCheckpoint(eager=True)
-                n_frontier = per_hop_cap
-                truncated = True
             last = F.element_at(F.col("path"), -1)
-            nxt = (
+            nxt, n_frontier = materialize(
                 frontier.join(e, last == e["src"])
                 .filter(~F.array_contains(F.col("path"), F.col("dst")))
                 .select(
@@ -166,21 +112,13 @@ def traversal_paths(
                     (F.col("score") * F.lit(decay)).alias("score"),
                 )
             )
-            nxt = nxt.localCheckpoint(eager=True)  # cut lineage per hop
-            n_frontier = nxt.count()  # counts checkpointed blocks, no recompute
             if n_frontier == 0:
                 break
             n_total += n_frontier
-            levels.append(nxt)
+            out = out.unionByName(nxt)
             frontier = nxt
 
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    # r6: the level counts already sum to the total path count — the
-    # extra out.count() action over the unioned levels is redundant
-    if max_paths is not None and n_total > max_paths:
-        truncated = True
+    truncated = max_paths is not None and n_total > max_paths
+    if truncated:
         out = out.orderBy(F.desc("score"), F.asc("path")).limit(max_paths)
-    e.unpersist()  # levels are checkpointed; lineage no longer needs e
     return out.withColumn("truncated", F.lit(truncated))

@@ -5,7 +5,8 @@ Reference: ``processor/context/processor.go:409-533`` — walk a bounded
 path from the subject entity, evaluate edge/property/status rules over
 the nodes on the path, publish a flags map with a context-ready event.
 
-Spark shape: graph.traversal bounded BFS supplies the neighborhood;
+Spark shape: graph.traversal bounded BFS over the undirected (src, dst)
+edges supplies the neighborhood;
 rules.engine evaluates over the neighborhood's entity states; the flag
 for a rule is "any entity in the neighborhood matches".
 """
@@ -25,17 +26,17 @@ def context_flags_df(
     start_entity: str,
     rules: list[Rule],
     max_depth: int = 2,
-    edge_filter: list[str] | None = None,
 ) -> DataFrame:
-    """Evaluate rules over the ≤max_depth neighborhood of start_entity:
+    """Evaluate rules over the ≤max_depth neighborhood of start_entity,
+    following (src, dst) edges in both directions:
     one (rule_id, flag) row per enabled rule — flag true iff ANY entity
     in the bounded neighborhood matches. The reference replies the same
     flags as a map over NATS; ``{r.rule_id: r.flag for r in collect()}``
     is that point-reply shape."""
     spark = edges.sparkSession
-    hood = bounded_traversal(
-        edges, start_entity, max_depth=max_depth, edge_filter=edge_filter
-    ).select(F.col("entity").alias("subject"))
+    hood = bounded_traversal(edges, start_entity, max_depth=max_depth).select(
+        F.col("entity").alias("subject")
+    )
     local_states = entity_states.join(F.broadcast(hood), "subject", "left_semi")
     fired = (
         evaluate_rules(local_states, rules)

@@ -113,6 +113,55 @@ def test_pagerank_entities_runs_four_jobs(spark, tmp_path):
     assert n_jobs <= 4, n_jobs
 
 
+@pytest.mark.parametrize("query,max_jobs", [("paths_2hop", 9), ("context_flags", 20)])
+def test_traversal_query_job_count(spark, tmp_path, query, max_jobs):
+    """The traversal queries into a noop sink, warm: each stored frame
+    (the undirected edges, every hop's frontier) is counted by the job
+    that stores it. When each stored frame was cached or checkpointed and
+    then counted in a job of its own, they ran 15 and 24 jobs."""
+    from test_read_parquet import _jobs
+
+    import __spark_entry__ as entry
+
+    sf = str(tmp_path / "sf0.001")
+    q = getattr(entry, f"q_{query}")
+    q(spark, sf).write.format("noop").mode("overwrite").save()
+    _, n_jobs = _jobs(spark, lambda: q(spark, sf).write.format("noop").mode("overwrite").save())
+    assert n_jobs <= max_jobs, n_jobs
+
+
+def test_lpa_hierarchy_stores_level0_edges_once(spark, monkeypatch):
+    """When level 0's LPA starts, the hierarchy has stored its edge input
+    once: the checkpoint level 0 runs on, with no cache of the same edges
+    beside it. The distributed path is forced so that level 0 starts on
+    the driver, where the storage can be read."""
+    from semstreams_spark.graph import lpa
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        return {i.id(): i.memSize() for i in sc.getRDDStorageInfo()}
+
+    before = stored()
+    seen = []
+    level0 = lpa._lpa_distributed
+
+    def spy(e, max_iter):
+        if not seen:
+            seen.append({k: v for k, v in stored().items() if k not in before})
+        return level0(e, max_iter)
+
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES", "0")
+    monkeypatch.setattr(lpa, "_lpa_distributed", spy)
+    e = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x")],
+        "src string, dst string",
+    )
+    rows = lpa.lpa_hierarchy(e, levels=2, max_iter=8).collect()
+    assert {r["level"] for r in rows} == {0, 1}
+    assert len(seen[0]) == 1, seen
+
+
 def test_lpa_local_two_triangles_bridge(spark):
     """Known topology through the LOCAL path: two triangles joined by a
     bridge still resolve to min-id communities (mirrors the distributed

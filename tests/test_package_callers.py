@@ -63,13 +63,6 @@ ALLOWED = {
     "semstreams_spark.operators.merge.live_edges": _NO_CALLER_YET,
     "semstreams_spark.operators.multimodal.media_metadata_stats": _NO_CALLER_YET,
     "semstreams_spark.operators.transforms.json_to_entity": _NO_CALLER_YET,
-    "semstreams_spark.graph.pagerank.pagerank": (
-        f"{_REEXPORT_ONLY}; float variant of pagerank_exact, which the registry runs; "
-        "test_degree_and_pagerank is its only caller"
-    ),
-    "semstreams_spark.graph.pagerank.degree_centrality": (
-        f"{_REEXPORT_ONLY}; test_degree_and_pagerank is its only caller"
-    ),
     "semstreams_spark.search.bm25.bm25_index": (
         f"{_REEXPORT_ONLY}; bm25_search builds its own postings, and no test calls it"
     ),
