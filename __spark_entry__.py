@@ -34,7 +34,7 @@ from semstreams_spark.extract.triples import (
     mention_ids,
     turn_subject,
 )
-from semstreams_spark.operators import entity_states, nodes_table, edges_table
+from semstreams_spark.operators import edges_table
 from semstreams_spark.operators.merge import (
     edges_table_source_clustered,
     entity_states_source_clustered,
@@ -89,7 +89,8 @@ def q_entity_states(spark, sf_dir):
 
 
 def q_graph_nodes(spark, sf_dir):
-    """r6: source-clustered form of nodes_table(extract_triples(t))."""
+    """r6: source-clustered form of the node table of extract_triples(t)
+    (parity twin: tests/merge_reference.nodes_table)."""
     return nodes_table_source_clustered(_transcripts(spark, sf_dir))
 
 

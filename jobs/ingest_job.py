@@ -5,7 +5,7 @@ Run via spark-submit (north-rule deployment shape):
 
   zip -r semstreams_spark.zip semstreams_spark
   spark-submit --py-files semstreams_spark.zip jobs/ingest_job.py \\
-      --input  <dir-or-iceberg-table-of-transcripts> \\
+      --input  <directory of transcript parquet files> \\
       --output <graph table root> \\
       --checkpoint <checkpoint dir> \\
       --watermark "10 minutes" \\

@@ -14,7 +14,8 @@ Batch (and foreachBatch) forms of the reference's stateful entity merge:
 - **Node table** — one row per entity (``graph/types.go:88-104``):
   id, type (5th dot-part of the 6-part id,
   ``messagemanager/processor.go:517-526``), status, version (count of
-  merged updates, reference increments per update), updated_at.
+  merged updates, reference increments per update), updated_at. The
+  per-subject aggregate form is ``tests/merge_reference.nodes_table``.
 
 - **Edge upsert** — relationship triples (object is a valid 6-part
   entity id, ``message/triple.go:118-147``) become edges keyed
@@ -131,27 +132,8 @@ def entity_states_source_clustered(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def nodes_table(triples: DataFrame) -> DataFrame:
-    """Node per distinct subject: id, type, status, version, updated_at.
-
-    version = number of distinct update events (ts, seq) that touched the
-    subject, mirroring the reference's per-update Version increment
-    (``datamanager/manager.go:693-743`` CAS version bump).
-    """
-    return (
-        triples.groupBy(F.col("subject").alias("id"))
-        .agg(
-            F.count_distinct("ts", "seq").alias("version"),
-            F.max("ts").alias("updated_at"),
-        )
-        .withColumn("type", node_type(F.col("id")))
-        .withColumn("status", F.lit("active"))
-        .select("id", "type", "status", "version", "updated_at")
-    )
-
-
 def nodes_table_source_clustered(transcripts: DataFrame) -> DataFrame:
-    """``nodes_table(extract_triples(transcripts))`` without the exchange,
+    """The node table of ``extract_triples(transcripts)`` without the exchange,
     under the same unique-``(conv_id, turn_idx)`` contract as
     :func:`entity_states_source_clustered`: each node id embeds the row key,
     so per-node aggregates collapse per input row — ``version`` (distinct
@@ -205,20 +187,15 @@ def edges_table_source_clustered(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def edges_table(triples: DataFrame, ttl_seconds: int | None = None) -> DataFrame:
+def edges_table(triples: DataFrame) -> DataFrame:
     """Edge upsert from relationship triples.
 
     Key (src, dst, edge_type); newest observation wins for weight/properties
     (``types/graph/types.go:125-134``), created_at keeps the earliest
     observation, n_obs counts observations (drives co-occurrence weights).
-
-    ttl_seconds adds an ``expires_at`` column (= updated_at + ttl),
-    mirroring the reference edge ExpiresAt (``types/graph/types.go:
-    108-116``); pair with ``live_edges`` for the filter-on-read
-    (``types.go:150-159`` IsExpired).
     """
     rel = triples.filter(F.col("object_type") == "entity_ref")
-    out = (
+    return (
         rel.select(
             F.col("subject").alias("src"),
             F.col("object").alias("dst"),
@@ -234,17 +211,3 @@ def edges_table(triples: DataFrame, ttl_seconds: int | None = None) -> DataFrame
             F.count(F.lit(1)).alias("n_obs"),
         )
     )
-    if ttl_seconds is not None:
-        out = out.withColumn(
-            "expires_at", F.col("updated_at") + F.expr(f"INTERVAL {int(ttl_seconds)} SECOND")
-        )
-    return out
-
-
-def live_edges(edges: DataFrame, as_of) -> DataFrame:
-    """Filter-on-read for edge expiry (``types/graph/types.go:150-159``):
-    keep edges with no ``expires_at`` or one strictly after ``as_of``.
-    A pure range predicate — pushed into the scan."""
-    if "expires_at" not in edges.columns:
-        return edges
-    return edges.filter(F.col("expires_at").isNull() | (F.col("expires_at") > F.lit(as_of)))

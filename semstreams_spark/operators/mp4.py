@@ -1,9 +1,8 @@
 """MP4 (ISO BMFF) container METADATA parsing — stdlib ``struct`` only.
 
-Round-5 worklist item: video *metadata* becomes real the way
-``media_metadata_stats`` treats images — an ftyp/moov box walk yielding
-(brand, duration, timescale, track count, per-track handler + codec
-fourcc) — while full video DECODE stays out of scope (a software H.264
+Round-5 worklist item: video *metadata* becomes real — an ftyp/moov box
+walk yielding (brand, duration, timescale, track count, per-track handler
++ codec fourcc) — while full video DECODE stays out of scope (a software H.264
 decoder is out of proportion for this engine; the per-blob Arrow
 ``mapInPandas`` shape in ``multimodal.extract_video_metadata`` is where
 a native codec lib would drop in at real deployment).

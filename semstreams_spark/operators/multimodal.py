@@ -414,17 +414,6 @@ def decode_wav_features(media: DataFrame, batch_hint: int = 64) -> DataFrame:
     )
 
 
-def media_metadata_stats(media: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — must NOT read the binary column (column
-    pruning; verify via .explain ReadSchema)."""
-    return media.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("meta.width").alias("avg_width"),
-        F.avg("meta.sample_rate").alias("avg_sample_rate"),
-        F.sum(F.length("media")).alias("total_bytes"),
-    )
-
-
 def synthesize_media(spark, n: int = 64, seed: int = 7) -> DataFrame:
     """Deterministic synthetic media table for tests (binary payloads
     derived from the row id; no external data). Audio rows carry REAL

@@ -2,8 +2,7 @@
 
 Reference: entity delete and edge removal in the graph processor
 (``processor/graph/mutations.go:169`` DeleteEntity, ``:354`` edge
-cleanup), and the rule processor reacting to DELETED state changes
-(``processor/rule/entity_watcher.go:60-109``).
+cleanup).
 
 Model: a **deletes table** ``(entity_id, ts)`` of tombstone events,
 merged with entity state by event-time LWW. Two rules state the contract,
@@ -13,14 +12,14 @@ scope, and every operator below applies the contract only through them
 
 - ``TOMBSTONED``: a node last updated at or before its last tombstone
   is deleted (delete wins ties — deterministic contract, SURVEY §4.2.4);
-- ``SURVIVES``: a state row or edge lives only if it was seen strictly
-  after its entity's last tombstone, so a later update RECREATES the
+- ``SURVIVES``: an edge lives only if it was seen strictly after the
+  last tombstone of each of its ends, so a later update RECREATES the
   entity (status back to active, version keeps counting — the reference
   bumps Version on every mutation).
 
 All pure Catalyst: the tombstone dimension is tiny relative to state, so
-every join below broadcasts; at 10^12 rows the state side never
-shuffles for these operators. ``entity_status`` joins one broadcast to
+every join below broadcasts; at 10^12 rows the node and edge sides never
+shuffle for these joins. ``entity_status`` joins one broadcast to
 both ends of an edge, so the second join reuses the first's exchange. Its
 expressions are SQL texts the JVM parses in one py4j call each, where
 the Column API pays a round trip per ``F.*`` node; the plans are the same.
@@ -36,8 +35,8 @@ from ..extract.triples import MENTION_IDS, TURN_SUBJECT
 # status rule: a node last updated at ``updated_at`` is deleted when its
 # last tombstone is at or after it (delete wins ties)
 TOMBSTONED = "({deleted_at} is not null and {deleted_at} >= {updated_at})"
-# edge and state-row rule: a row seen at ``seen_at`` survives when its
-# entity has no tombstone or it is strictly newer than the last one
+# edge rule: an edge seen at ``seen_at`` survives an end that has no
+# tombstone or whose last one is strictly older
 SURVIVES = "({deleted_at} is null or {seen_at} > {deleted_at})"
 
 
@@ -57,20 +56,6 @@ def latest_deletes(deletes: DataFrame) -> DataFrame:
     """(entity_id, deleted_at, n_deletes): last tombstone per entity."""
     return deletes.groupBy("entity_id").agg(
         F.max("ts").alias("deleted_at"), F.count(F.lit(1)).alias("n_deletes")
-    )
-
-
-def apply_deletes(states: DataFrame, deletes: DataFrame, subject_col: str = "subject") -> DataFrame:
-    """Flat state table minus tombstoned rows: a property row survives iff
-    it is strictly newer than its subject's last tombstone (recreate
-    semantics — ``mutations.go:169`` removes state, later upserts
-    re-add it)."""
-    d = latest_deletes(deletes).select("entity_id", "deleted_at")
-    out = states.join(
-        F.broadcast(d), states[subject_col] == d["entity_id"], "left"
-    )
-    return out.filter(survives("ts", "deleted_at")).drop(
-        "entity_id", "deleted_at"
     )
 
 
@@ -142,13 +127,4 @@ def entity_status(transcripts: DataFrame, deletes: DataFrame) -> DataFrame:
     )
     return g.selectExpr(
         "id", _STATUS, _BUMPED, "updated_at", "deleted_at", "n_live_edges"
-    )
-
-
-def deletion_events(deletes: DataFrame, rule_id: str = "entity_deleted") -> DataFrame:
-    """DELETED-trigger rule path (``entity_watcher.go:60-109``): one rule
-    event per tombstone, same (rule_id, entity_id, ts) shape as
-    rules.evaluate_rules output so it unions into the event stream."""
-    return deletes.select(
-        F.lit(rule_id).alias("rule_id"), F.col("entity_id"), F.col("ts")
     )

@@ -1,5 +1,5 @@
-"""Config-driven row transforms: the JSONFilter / JSONMap / JSONToEntity
-component family (SURVEY §2.2).
+"""Config-driven row transforms: the JSONFilter / JSONMap component
+family (SURVEY §2.2).
 
 Reference semantics reproduced:
 - JSONFilter (``processor/json_filter/json_filter.go:339-398``): rule
@@ -8,8 +8,6 @@ Reference semantics reproduced:
 - JSONMap (``processor/json_map/json_map.go:356-424``): field
   rename/copy + scalar transforms copy/uppercase/lowercase/trim,
   add_fields (static literals), remove_fields
-- JSONToEntity (``processor/json_to_entity/json_to_entity.go:351-386``):
-  pick id/type fields, remaining fields become properties
 
 All compile to Catalyst Column expressions — a JSON config IS a plan
 fragment, no interpretation at runtime. Dotted paths address struct
@@ -101,30 +99,3 @@ def json_map(
     for field in remove_fields or []:
         out = out.drop(field)
     return out
-
-
-def json_to_entity(
-    df: DataFrame,
-    entity_id_field: str,
-    entity_type_field: str | None = None,
-    default_type: str = "entity",
-    source: str = "json_to_entity",
-) -> DataFrame:
-    """GenericJSON → entity rows: id/type picked, the rest become a
-    properties map (``json_to_entity.go:351-386``)."""
-    etype = (
-        F.col(entity_type_field).cast("string")
-        if entity_type_field
-        else F.lit(default_type)
-    )
-    keep = [c for c in df.columns if c not in (entity_id_field, entity_type_field)]
-    props = F.map_from_arrays(
-        F.array(*[F.lit(c) for c in keep]),
-        F.array(*[F.col(c).cast("string") for c in keep]),
-    )
-    return df.select(
-        F.col(entity_id_field).cast("string").alias("entity_id"),
-        etype.alias("entity_type"),
-        props.alias("properties"),
-        F.lit(source).alias("source"),
-    )

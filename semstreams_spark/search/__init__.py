@@ -1,3 +1,3 @@
-from .bm25 import bm25_index, bm25_search, hybrid_search
+from .bm25 import bm25_search, hybrid_search
 
-__all__ = ["bm25_index", "bm25_search", "hybrid_search"]
+__all__ = ["bm25_search", "hybrid_search"]

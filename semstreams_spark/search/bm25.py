@@ -1,4 +1,4 @@
-"""BM25 indexing and search, Spark-first.
+"""BM25 search, Spark-first.
 
 Reference: hashed BM25 embedder (``pkg/embedding/bm25_embedder.go:46-293``,
 k1=1.5 b=0.75), brute-force cosine semantic search
@@ -25,23 +25,6 @@ from ..operators.textops import tokens
 
 K1 = 1.5
 B = 0.75
-
-
-def bm25_index(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
-    """Build (postings, stats): postings = (term, doc_id, tf, dl);
-    stats = one row (n_docs, avgdl)."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
-    )
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    tf = toks.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
-    postings = tf.join(dl, "doc_id")
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
-    return postings, stats
 
 
 def bm25_search(

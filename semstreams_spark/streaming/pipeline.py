@@ -50,12 +50,12 @@ def read_transcript_stream_from_table(
 ) -> DataFrame:
     """Catalog-table micro-batch source: the north-star's "read
     micro-batches from an Iceberg table" shape. The table is resolved by
-    NAME through the session catalog (bind it with
-    ``plans.catalog.bind_published_tables`` — on a lakehouse-equipped
-    cluster the same call streams an Iceberg table's snapshot feed; on
-    this runtime it is the file-source table incarnation). Validation
-    is identical to the path source, so downstream parity holds by
-    construction (test-asserted)."""
+    NAME through the session catalog (create it with ``CREATE TABLE ...
+    USING parquet LOCATION`` — on a lakehouse-equipped cluster the same
+    call streams an Iceberg table's snapshot feed; on this runtime it is
+    the file-source table incarnation). Validation is identical to the
+    path source, so downstream parity holds by construction
+    (test-asserted)."""
     raw = (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
         .table(table)

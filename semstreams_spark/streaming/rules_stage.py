@@ -1,12 +1,11 @@
-"""Streaming rule stage (R5 end-to-end): rules + cooldown + deletion
-events evaluated inside the micro-batch loop over the live
-``conversation_graph_deltas`` output, committed exactly-once.
+"""Streaming rule stage (R5 end-to-end): rules + cooldown evaluated
+inside the micro-batch loop over the live ``conversation_graph_deltas``
+output, committed exactly-once.
 
 Reference path: the rule processor watches entity state changes
 (``processor/rule/entity_watcher.go:60-109``) and evaluates every rule
 per change message (``rule/message_handler.go:47-111``), with per-
-(rule, entity) cooldown (``rule_factory.go:24``) and DELETED-change rule
-events (``entity_watcher.go:60-109``).
+(rule, entity) cooldown (``rule_factory.go:24``).
 
 Spark shape:
 - the ingest ``foreachBatch`` fans out each committed delta micro-batch
@@ -55,7 +54,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..extract.triples import MENTIONS
-from ..operators.mutations import deletion_events
 from ..rules.engine import Rule, apply_cooldown, evaluate_rules
 from .sink import ExactlyOnceParquetSink
 from .state_merge import conversation_graph_deltas, pin_state_engine
@@ -189,29 +187,3 @@ def build_ingest_with_rules(
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     return writer.start(), delta_sink, rule_stage
-
-
-def build_delete_rule_events(
-    deletes: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str | None = None,
-    rule_id: str = "entity_deleted",
-) -> tuple[StreamingQuery, ExactlyOnceParquetSink]:
-    """DELETED-change rule events off the live tombstone stream
-    (``entity_watcher.go:60-109``): each micro-batch of tombstones emits
-    (rule_id, entity_id, ts) events through its own exactly-once sink —
-    the same event shape as evaluate_rules output, so readers union the
-    two committed tables."""
-    sink = ExactlyOnceParquetSink(os.path.join(out_dir, "delete_rule_events"), checkpoint_dir)
-
-    def commit(batch_df, batch_id):
-        sink(deletion_events(batch_df.dropDuplicates(["entity_id", "ts"]), rule_id), batch_id)
-
-    writer = (
-        deletes.writeStream.foreachBatch(commit)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), sink

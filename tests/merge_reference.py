@@ -12,6 +12,9 @@ the timer is strictly below the watermark of a batch without rows for it.
 event-time-timeout ``applyInPandasWithState`` does: one data call per
 bucket with rows, then one timed-out call per other bucket whose timeout
 is strictly below the watermark.
+
+``nodes_table`` is the node table as one aggregate per subject over the
+triples: the parity twin of ``operators.merge.nodes_table_source_clustered``.
 """
 
 from __future__ import annotations
@@ -20,6 +23,10 @@ import zlib
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from semstreams_spark.extract.triples import node_type
 
 HOUR_MS = 3_600_000
 
@@ -161,3 +168,22 @@ def run_bucketed(batches, n_buckets: int, split_chunks: bool = False):
             del states[b]
         outs.append(out)
     return outs, states
+
+
+def nodes_table(triples: DataFrame) -> DataFrame:
+    """Node per distinct subject: id, type, status, version, updated_at.
+
+    version = number of distinct update events (ts, seq) that touched the
+    subject, mirroring the reference's per-update Version increment
+    (``datamanager/manager.go:693-743`` CAS version bump).
+    """
+    return (
+        triples.groupBy(F.col("subject").alias("id"))
+        .agg(
+            F.count_distinct("ts", "seq").alias("version"),
+            F.max("ts").alias("updated_at"),
+        )
+        .withColumn("type", node_type(F.col("id")))
+        .withColumn("status", F.lit("active"))
+        .select("id", "type", "status", "version", "updated_at")
+    )

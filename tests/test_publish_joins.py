@@ -1,4 +1,4 @@
-"""Published-table partition pruning + stream-stream interval join."""
+"""Stream-stream interval join + spatial partition pruning."""
 
 from __future__ import annotations
 
@@ -6,95 +6,8 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from semstreams_spark.extract import extract_triples
 from semstreams_spark.streaming.joins import tool_request_interval_join
-from semstreams_spark.streaming.publish import (
-    compact_entity_tables,
-    publish_triples,
-    read_triples_hour_range,
-)
 from tests.test_streaming import T0, _mk_rows, _write_file
-
-
-def test_publish_partition_pruning(spark, transcripts_small, tmp_path):
-    out = str(tmp_path / "triples_pub")
-    deltas = extract_triples(transcripts_small).withColumn("kind", F.lit("triple"))
-    publish_triples(deltas, out, mode="overwrite")
-
-    sub = read_triples_hour_range(spark, out, "2025-01-01-00", "2025-01-01-01")
-    plan = sub._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "hour" in plan.split("PartitionFilters")[1][:200]
-    n_all = spark.read.parquet(out).count()
-    assert 0 < sub.count() < n_all
-
-    # compaction derives the same entity states as direct batch compute
-    root = str(tmp_path / "compact")
-    compact_entity_tables(spark, out, root)
-    from semstreams_spark.operators import entity_states
-
-    direct = entity_states(extract_triples(transcripts_small))
-    compacted = spark.read.parquet(root + "/entity_states")
-    assert compacted.count() == direct.count()
-
-
-def test_retention_pass(spark, tmp_path):
-    """Round-5 worklist #7 (W6 on disk): the retention job drops hour
-    partitions past the horizon idempotently, records each run in a
-    ledger like a batch commit, leaves readers unaffected mid-prune
-    (trash staging is underscore-invisible), and sweeps trash abandoned
-    by a crashed run."""
-    import json
-    import os
-    import shutil
-
-    from semstreams_spark.streaming.publish import (
-        RETENTION_DEFAULTS,
-        apply_retention,
-    )
-
-    out = str(tmp_path / "pub")
-    rows = []
-    for h in range(6):  # one row per hour 00..05
-        rows.append(
-            ("c1", h, "user", f"msg {h} @entity:ent_a", None, T0 + dt.timedelta(hours=h))
-        )
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
-    deltas = extract_triples(df).withColumn("kind", F.lit("triple"))
-    publish_triples(deltas, out, mode="overwrite")
-    hours = lambda: sorted(  # noqa: E731
-        d.split("=")[1] for d in os.listdir(out) if d.startswith("hour=")
-    )
-    assert len(hours()) == 6
-    n_per_hour = spark.read.parquet(out).groupBy("hour").count().collect()[0]["count"]
-
-    # retention 24h per the reference's incoming/entity TTL analogue
-    assert RETENTION_DEFAULTS["incoming"] == dt.timedelta(hours=24)
-    now = T0 + dt.timedelta(hours=3)  # cutoff = hour 03 minus 1h → keeps 02+
-    entry = apply_retention(out, dt.timedelta(hours=1), now)
-    assert entry["dropped"] == ["2025-01-01-00", "2025-01-01-01"]
-    assert hours() == ["2025-01-01-02", "2025-01-01-03", "2025-01-01-04", "2025-01-01-05"]
-    # readers see exactly the surviving partitions
-    assert spark.read.parquet(out).select("hour").distinct().count() == 4
-    assert spark.read.parquet(out).count() == 4 * n_per_hour
-
-    # idempotent: same horizon again drops nothing, still ledger-recorded
-    entry2 = apply_retention(out, dt.timedelta(hours=1), now)
-    assert entry2["dropped"] == []
-    led = os.path.join(out, "_retention")
-    assert sorted(f for f in os.listdir(led) if f.endswith(".json")) == ["0.json", "1.json"]
-    with open(os.path.join(led, "0.json")) as fh:
-        assert json.load(fh)["dropped"] == entry["dropped"]
-
-    # mid-prune state: a partition staged in _trash (crash between move
-    # and sweep) is invisible to readers and swept by the next run
-    shutil.move(os.path.join(out, "hour=2025-01-01-02"), os.path.join(out, "_trash", "hour=2025-01-01-02"))
-    assert spark.read.parquet(out).select("hour").distinct().count() == 3
-    entry3 = apply_retention(out, dt.timedelta(hours=1), now)
-    assert entry3["swept"] == ["hour=2025-01-01-02"]
-    assert not os.listdir(os.path.join(out, "_trash")) if os.path.isdir(os.path.join(out, "_trash")) else True
-    assert hours() == ["2025-01-01-03", "2025-01-01-04", "2025-01-01-05"]
 
 
 def test_interval_join_streaming(spark, tmp_path):

@@ -395,38 +395,25 @@ def test_intra_batch_duplicate_dedup(spark, tmp_path):
 
 
 def test_streaming_deletes_create_delete_recreate(spark, tmp_path):
-    """Tombstones as their own exactly-once micro-batched stream: a delete
-    arriving after the entity's turns marks it deleted; a later recreate
+    """Tombstones over the streamed sink's committed mention triples: a
+    delete after the entity's turns marks it deleted; a later recreate
     (newer turn mentioning it) flips it back to active."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from semstreams_spark.operators.mutations import nodes_with_status
-    from semstreams_spark.streaming.mutations import build_delete_stream, read_delete_stream
 
     indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    ddir, dckpt = str(tmp_path / "dels"), str(tmp_path / "dckpt")
     # turns at T0..T0+40s mentioning ent_a; later turn at +2h re-mentions it
     _write_file(indir, "f1.parquet", _mk_rows("c1", 3, T0))
     _write_file(indir, "f2.parquet", _mk_rows("c2", 2, T0 + dt.timedelta(hours=2)))
     sink = _run(spark, indir, outdir, ckpt, watermark="2 days", mfpt=10)
 
-    # two tombstones for ent_a in two micro-batch files: one between the
-    # two mention bursts (recreated), plus one for a never-seen entity
-    os.makedirs(ddir, exist_ok=True)
+    # a tombstone for ent_a between the two mention bursts (recreated),
+    # plus one for a never-seen entity
     ent = "test.local.graph.kb.entity.ent_a"
     t_del = T0 + dt.timedelta(hours=1)
-    pq.write_table(
-        pa.table({"entity_id": [ent], "ts": [t_del]}), os.path.join(ddir, "d1.parquet")
+    deletes = spark.createDataFrame(
+        [(ent, t_del), ("test.local.graph.kb.entity.ghost", t_del)],
+        "entity_id string, ts timestamp",
     )
-    pq.write_table(
-        pa.table({"entity_id": ["test.local.graph.kb.entity.ghost"],
-                  "ts": [t_del], }), os.path.join(ddir, "d2.parquet")
-    )
-    q, dsink = build_delete_stream(read_delete_stream(spark, ddir, 1), str(tmp_path), dckpt)
-    q.awaitTermination()
-    deletes = dsink.read(spark)
-    assert deletes.count() == 2
 
     triples = sink.read(spark).filter(F.col("kind") == "triple")
     men = triples.filter(F.col("predicate") == "conv.turn.mentions").select(
@@ -601,39 +588,6 @@ def test_bucket_count_does_not_change_sink_rows(spark, tmp_path, monkeypatch, or
     want = sorted(map(tuple, legacy.read(spark).collect()), key=repr)
     assert got == want
     assert any(r[0] == "session_end" for r in got)
-
-
-def test_delete_rule_events_stream(spark, tmp_path):
-    """DELETED-change rule events off the live tombstone stream: committed
-    events equal deletion_events over all tombstones."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from semstreams_spark.operators.mutations import deletion_events
-    from semstreams_spark.streaming.mutations import read_delete_stream
-    from semstreams_spark.streaming.rules_stage import build_delete_rule_events
-
-    ddir = str(tmp_path / "dels")
-    os.makedirs(ddir, exist_ok=True)
-    t1, t2 = T0, T0 + dt.timedelta(minutes=5)
-    for i, (ent, t) in enumerate([("e1", t1), ("e2", t2)]):
-        p = os.path.join(ddir, f"d{i}.parquet")
-        pq.write_table(
-            pa.table({"entity_id": [f"test.local.graph.kb.entity.{ent}"], "ts": [t]}), p
-        )
-        _MTIME_COUNTER[0] += 10
-        os.utime(p, (_MTIME_COUNTER[0], _MTIME_COUNTER[0]))
-
-    q, sink = build_delete_rule_events(
-        read_delete_stream(spark, ddir, 1), str(tmp_path), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-    got = sorted(map(tuple, sink.read(spark).collect()))
-    want = sorted(
-        map(tuple, deletion_events(spark.read.parquet(ddir)).collect())
-    )
-    assert got == want and len(got) == 2
-    assert all(r[0] == "entity_deleted" for r in got)
 
 
 def test_streaming_rule_seed_read_is_bounded(spark, tmp_path):
