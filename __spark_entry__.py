@@ -38,6 +38,7 @@ from semstreams_spark.operators import edges_table
 from semstreams_spark.operators.merge import (
     edges_table_source_clustered,
     entity_states_source_clustered,
+    graph_snapshot,
     nodes_table_source_clustered,
 )
 from semstreams_spark.operators.joins import resolve_aliases, tool_invocation_correlation, turn_with_prior
@@ -687,15 +688,18 @@ def q_spatial_bbox(spark, sf_dir):
     """QuerySpatial surface (indexmanager/manager.go:1223-1281): bbox scan
     over mention-target entities with deterministic hash-derived
     coordinates, plus the precision-7 geo_bin key (indexes.go:1015-1044).
-    Partition-pruned reads over geo-binned tables are covered by
-    test_spatial_partition_pruning."""
+    The coordinates are derived inside the query, so the bbox filters
+    them after the scan."""
     from semstreams_spark.operators.textops import geo_bin, synthetic_coords
-    from semstreams_spark.plans.api import GraphQueryAPI
 
+    min_lat, max_lat, min_lon, max_lon = SPATIAL_BBOX
     ents = _mention_rows(spark, sf_dir).select(entity_id(F.col("e")).alias("id")).distinct()
-    coords = synthetic_coords(ents, "id")
-    api = GraphQueryAPI(nodes=coords, edges=None, triples=None)
-    out = api.query_spatial(*SPATIAL_BBOX)
+    out = synthetic_coords(ents, "id").filter(
+        (F.col("lat") >= min_lat)
+        & (F.col("lat") <= max_lat)
+        & (F.col("lon") >= min_lon)
+        & (F.col("lon") <= max_lon)
+    )
     return out.select("id", "lat", "lon", geo_bin(F.col("lat"), F.col("lon"), 7).alias("geo7"))
 
 
@@ -788,13 +792,11 @@ QT_START, QT_END = "2025-01-01 01:00:00", "2025-01-01 03:00:00"
 
 
 def q_query_temporal(spark, sf_dir):
-    """Q temporal range scan (TEMPORAL_INDEX, manager.go:1284-1353)."""
-    from semstreams_spark.plans.api import GraphQueryAPI
-
-    triples = extract_triples(_transcripts(spark, sf_dir))
-    api = GraphQueryAPI(nodes=None, edges=None, triples=triples)
-    return api.query_temporal(
-        F.lit(QT_START).cast("timestamp_ntz"), F.lit(QT_END).cast("timestamp_ntz")
+    """Q temporal range scan (TEMPORAL_INDEX, manager.go:1284-1353): the
+    triples with ts in [QT_START, QT_END)."""
+    ts = F.col("ts")
+    return extract_triples(_transcripts(spark, sf_dir)).filter(
+        (ts >= F.lit(QT_START).cast("timestamp_ntz")) & (ts < F.lit(QT_END).cast("timestamp_ntz"))
     )
 
 
@@ -804,11 +806,8 @@ RELS_ENTITY = entity_id_of("ent_001")
 def q_rels_in_entity(spark, sf_dir):
     """Q reverse-edge lookup for one entity (INCOMING_INDEX,
     indexes.go:405-508)."""
-    from semstreams_spark.plans.api import GraphQueryAPI
-
     edges = edges_table_source_clustered(_transcripts(spark, sf_dir))
-    api = GraphQueryAPI(nodes=None, edges=edges, triples=None)
-    return api.relationships_in(RELS_ENTITY)
+    return edges.filter(F.col("dst") == RELS_ENTITY)
 
 
 def q_rule_and_events(spark, sf_dir):
@@ -834,15 +833,12 @@ SNAP_START, SNAP_END = "2025-01-01 00:00:00", "2025-01-01 02:30:00"
 def q_graph_snapshot(spark, sf_dir):
     """Q GraphSnapshot (querymanager/query.go:276-346): bounded time-range
     + type filter + MaxEntities truncation with flag."""
-    from semstreams_spark.plans.api import GraphQueryAPI
-
-    nodes = nodes_table_source_clustered(_transcripts(spark, sf_dir))
-    api = GraphQueryAPI(nodes=nodes, edges=None, triples=None)
-    snap, truncated = api.snapshot(
-        start=F.lit(SNAP_START).cast("timestamp_ntz"),
-        end=F.lit(SNAP_END).cast("timestamp_ntz"),
-        entity_types=["turn"],
-        max_entities=1000,
+    snap, truncated = graph_snapshot(
+        nodes_table_source_clustered(_transcripts(spark, sf_dir)),
+        F.lit(SNAP_START).cast("timestamp_ntz"),
+        F.lit(SNAP_END).cast("timestamp_ntz"),
+        ["turn"],
+        1000,
     )
     return snap.withColumn("truncated", F.lit(truncated))
 

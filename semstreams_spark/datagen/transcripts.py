@@ -164,14 +164,14 @@ def generate_transcripts(sf: float, seed: int = SEED, hot_factor: int = 50):
     return tbl, atbl
 
 
-def ensure_transcripts(sf: float, seed: int = SEED) -> str:
+def ensure_transcripts(sf: float) -> str:
     """Generate-if-missing; atomic rename so concurrent callers are safe."""
     path = transcripts_path(sf)
     apath = aliases_path(sf)
     if os.path.exists(path) and os.path.exists(apath):
         return path
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    tbl, atbl = generate_transcripts(sf, seed)
+    tbl, atbl = generate_transcripts(sf)
     tmp = path + f".tmp.{os.getpid()}"
     # small row groups so Spark can split the single local file across
     # cores (parquet splits at row-group granularity; 200k-row groups

@@ -51,7 +51,7 @@ The builders:
 - :func:`property_triples` — triples 1-5 as
   ``array<struct<predicate, object, object_type>>``; :func:`no_triples`
   is the empty array of that type;
-- :func:`mention_triple` / :func:`mention_triples` — triple 6 for one
+- :func:`mention_triple` / ``MENTION_TRIPLES`` — triple 6 for one
   entity id / for every mention of the row;
 - :func:`node_type` — a node id's type, its 5th dot-part, else ``entity``
   (``messagemanager/processor.go:517-526``).
@@ -156,10 +156,6 @@ def mention_triple(entity: Column) -> Column:
     return F.struct(
         F.lit(MENTIONS).alias("predicate"), entity.alias("object"), F.lit("entity_ref").alias("object_type")
     )
-
-
-def mention_triples() -> Column:
-    return F.expr(MENTION_TRIPLES)
 
 
 def extract_triples(transcripts: DataFrame) -> DataFrame:

@@ -17,13 +17,13 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 
-def graph_width(spark: SparkSession, n_rows: int, rows_per_partition: int = 5000) -> int:
+def graph_width(spark: SparkSession, n_rows: int) -> int:
     """Reducer count for an iteration shuffling ~n_rows rows per step
     (nodes for vertex-program loops, edges for frontier joins — whichever
     the loop actually exchanges): ≈ n_rows/5000, at least 1, at most the
     session's configured shuffle width."""
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(cur, n_rows // rows_per_partition))
+    return max(1, min(cur, n_rows // 5000))
 
 
 @contextmanager

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 SUMMARY_WEIGHT = 2.0  # graphrag_search.go:23-28
 KEYWORD_WEIGHT = 1.5
+MAX_ENTITIES = 10_000  # reference entity cap
 
 
 def _terms(query: str) -> list[str]:
@@ -62,13 +63,12 @@ def global_search(
     node_texts: DataFrame,  # (entity, text)
     query: str,
     top_communities: int = 5,
-    max_entities: int = 10_000,
 ) -> DataFrame:
     """Score summaries → top-N communities → members → dedup → rerank.
 
     Returns (entity, community, community_score, entity_score) ordered by
     (entity_score desc, community_score desc, entity asc), capped at
-    max_entities (reference entity cap 10k)."""
+    MAX_ENTITIES."""
     terms = _terms(query)
     comm_scored = (
         summaries.withColumn(
@@ -89,5 +89,5 @@ def global_search(
     return (
         reranked.select("entity", "community", "community_score", "entity_score")
         .orderBy(F.desc("entity_score"), F.desc("community_score"), F.asc("entity"))
-        .limit(max_entities)
+        .limit(MAX_ENTITIES)
     )

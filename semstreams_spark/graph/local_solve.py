@@ -99,16 +99,13 @@ def _index_edges(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarr
 
 # ---------------------------------------------------------------- PageRank
 
+# fixed-point PageRank: rank ≈ true_rank × SCALE, damping
+# DAMPING_NUM / DAMPING_DEN = 0.85 (the reference default)
+SCALE = 10**12
+DAMPING_NUM, DAMPING_DEN = 85, 100
 
-def _pagerank_core(
-    src_i: np.ndarray,
-    dst_i: np.ndarray,
-    n: int,
-    max_iter: int,
-    scale: int,
-    damping_num: int,
-    damping_den: int,
-) -> np.ndarray:
+
+def _pagerank_core(src_i: np.ndarray, dst_i: np.ndarray, n: int, max_iter: int) -> np.ndarray:
     """Bit-identical replay of pagerank_exact's BIGINT recurrence:
     contribution = rank div deg (edge MULTIset — duplicates contribute
     per occurrence, matching the DataFrame loop), dangling mass folded
@@ -122,30 +119,23 @@ def _pagerank_core(
     starts = np.flatnonzero(np.diff(dst_sorted, prepend=-1) != 0)
     dst_uniq = dst_sorted[starts]
 
-    base = ((damping_den - damping_num) * scale) // (damping_den * n)
-    rank = np.full(n, scale // n, dtype=np.int64)
+    base = ((DAMPING_DEN - DAMPING_NUM) * SCALE) // (DAMPING_DEN * n)
+    rank = np.full(n, SCALE // n, dtype=np.int64)
     for _ in range(max_iter):
         inflow = np.zeros(n, dtype=np.int64)
         if len(src_i):
             c = rank[src_i] // deg[src_i]
             inflow[dst_uniq] = np.add.reduceat(c[order], starts)
         dmass = int(rank[dangling].sum())
-        rank = base + (damping_num * (dmass // n + inflow)) // damping_den
+        rank = base + (DAMPING_NUM * (dmass // n + inflow)) // DAMPING_DEN
     return rank
 
 
-def pagerank_local(
-    src: np.ndarray,
-    dst: np.ndarray,
-    max_iter: int,
-    scale: int,
-    damping_num: int,
-    damping_den: int,
-) -> pd.DataFrame:
+def pagerank_local(src: np.ndarray, dst: np.ndarray, max_iter: int) -> pd.DataFrame:
     """Single-task PageRank over one edge list: (entity, rank) identical
     to the distributed loop."""
     ents, src_i, dst_i = _index_edges(src, dst)
-    rank = _pagerank_core(src_i, dst_i, len(ents), max_iter, scale, damping_num, damping_den)
+    rank = _pagerank_core(src_i, dst_i, len(ents), max_iter)
     return pd.DataFrame({"entity": ents, "rank": rank})
 
 

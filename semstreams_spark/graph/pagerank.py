@@ -19,26 +19,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ._width import iteration_shuffle_width
-from .local_solve import materialize, pagerank_local, solve
+from .local_solve import DAMPING_DEN, DAMPING_NUM, SCALE, materialize, pagerank_local, solve
 
 
 def pagerank_exact(
-    edges: DataFrame,
-    max_iter: int = 10,
-    scale: int = 10**12,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    local_max_edges: int | None = None,
+    edges: DataFrame, max_iter: int = 10, local_max_edges: int | None = None
 ) -> DataFrame:
     """Fixed-point integer PageRank: (entity, rank) with rank ≈ true_rank ×
-    scale, all arithmetic in BIGINT.
+    SCALE (10^12), damping 0.85, all arithmetic in BIGINT.
 
     Why: float PageRank sums are order-dependent (shuffle order varies per
     run/cluster), so the result is only reproducible to ~1e-15 — good
     enough for ranking, not for a bit-exact correctness gate. Integer sums
     are associative-exact, so this variant is bit-identical on any engine,
     partitioning, or cluster size (truncation error < max_iter ulp of
-    1/scale per node — ranking-order-equivalent to the float form).
+    1/SCALE per node — ranking-order-equivalent to the float form).
     Mirrors the reference's damped iteration (``pkg/graphclustering/
     pagerank.go:50-219``) at fixed iteration count.
 
@@ -51,19 +46,16 @@ def pagerank_exact(
     dominate small graphs vanish. Larger graphs take the distributed loop
     below — the 100 TB path.
     """
-    args = dict(max_iter=max_iter, scale=scale, damping_num=damping_num, damping_den=damping_den)
     return solve(
         *materialize(edges.select("src", "dst")),
         local_max_edges,
-        partial(pagerank_local, **args),
+        partial(pagerank_local, max_iter=max_iter),
         "entity string, rank long",
-        partial(_pagerank_distributed, **args),
+        partial(_pagerank_distributed, max_iter=max_iter),
     )
 
 
-def _pagerank_distributed(
-    edges: DataFrame, max_iter: int, scale: int, damping_num: int, damping_den: int
-) -> DataFrame:
+def _pagerank_distributed(edges: DataFrame, max_iter: int) -> DataFrame:
     """pagerank_exact's join+agg loop over materialized (src, dst) edges."""
     nodes, n = materialize(
         edges.select(F.col("src").alias("entity"))
@@ -75,8 +67,8 @@ def _pagerank_distributed(
     dangling_nodes = nodes.join(out_deg, nodes["entity"] == out_deg["src"], "left_anti").cache()
 
     # (1-d)/n term is a pure constant under integer division
-    base = ((damping_den - damping_num) * scale) // (damping_den * n)
-    ranks = nodes.withColumn("rank", F.lit(scale // n).cast("long"))
+    base = ((DAMPING_DEN - DAMPING_NUM) * SCALE) // (DAMPING_DEN * n)
+    ranks = nodes.withColumn("rank", F.lit(SCALE // n).cast("long"))
     # integer sums are order-free, so narrowing the shuffle width cannot
     # change the result — only the per-iteration fixed cost
     with iteration_shuffle_width(edges.sparkSession, n):
@@ -98,7 +90,7 @@ def _pagerank_distributed(
                     (
                         F.lit(base).cast("long")
                         + F.expr(
-                            f"({damping_num} * ((dmass div {n}) + coalesce(inflow, 0L))) div {damping_den}"
+                            f"({DAMPING_NUM} * ((dmass div {n}) + coalesce(inflow, 0L))) div {DAMPING_DEN}"
                         )
                     ).alias("rank"),
                 )

@@ -29,20 +29,22 @@ from .textops import portable_hash
 # Mersenne prime modulus for the permutation family: 2^31-1 keeps
 # a*h+b < 2^62 (no int64 overflow under ANSI mode)
 _P = 2147483647
+# MinHash permutations and LSH bands (rows per band = _K // _BANDS)
+_K, _BANDS = 32, 8
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical documents: (content_hash, keeper_doc_id,
     n_copies); the keeper is the group's smallest id."""
     return (
-        docs.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
+        docs.select(F.md5(F.col("text")).alias("content_hash"), F.col("doc_id"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
-def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, shingle) distinct pairs.
+def shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, shingle) distinct pairs of a (doc_id, text) frame.
 
     r6: ONE Arrow ``mapInPandas`` pass — tokenize + n-gram + per-doc set
     in Python per batch. The expression form (``shingle_sets_expr`` in
@@ -54,14 +56,14 @@ def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     regex/lowercase), same ``< n``-token fallback shingle, same rows."""
     import pandas as pd
 
-    id_t = dict(docs.dtypes)[id_col]
+    id_t = dict(docs.dtypes)["doc_id"]
 
     def gen(it):
         for pdf in it:
             if not len(pdf):
                 continue
             ids, outs = [], []
-            for _id, text in zip(pdf[id_col], pdf[text_col]):
+            for _id, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = [t for t in _TOKEN_SPLIT.split((text or "").lower()) if t]
                 if len(toks) < n:
                     sh = {" ".join(toks)}
@@ -71,7 +73,7 @@ def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
                 outs.extend(sh)
             yield pd.DataFrame({"doc_id": ids, "shingle": outs})
 
-    return docs.select(id_col, text_col).mapInPandas(gen, f"doc_id {id_t}, shingle string")
+    return docs.select("doc_id", "text").mapInPandas(gen, f"doc_id {id_t}, shingle string")
 
 
 import re as _re  # noqa: E402
@@ -82,12 +84,9 @@ _TOKEN_SPLIT = _re.compile(r"[^a-z0-9_]+")
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.6,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_shingle_df: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs ≥ threshold (a < b).
+    """Exact 3-gram Jaccard similarity pairs ≥ threshold (a < b).
 
     Self-join on shingle: cost ∝ Σ df(shingle)² — fine when shingles are
     discriminative. ``max_shingle_df`` is the hot-shingle guard for scale:
@@ -101,7 +100,7 @@ def jaccard_pairs(
     """
     # the shingle set feeds the size agg AND both self-join sides (and
     # the df cap when set): compute it once per action
-    s = shingle_sets(docs, id_col, text_col, n).localCheckpoint(eager=False)
+    s = shingle_sets(docs).localCheckpoint(eager=False)
     sizes = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     if max_shingle_df is not None:
         df_ok = (
@@ -132,31 +131,22 @@ def jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    k: int = 32,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, sig array<long>[k]) MinHash signatures.
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
+    """(doc_id, sig array<long>[_K]) MinHash signatures of a (doc_id,
+    shingle) set.
 
     h_i(x) = (a_i * H(x) + b_i) mod p with fixed odd a_i, b_i — one base
-    hash per shingle, k affine transforms folded in a single aggregate
-    (no k-fold explode). ``shingles`` lets a caller that already built
-    the (doc_id, shingle) set share it instead of re-deriving it."""
-    s = (shingles if shingles is not None else shingle_sets(docs, id_col, text_col, n)).withColumn(
-        "h", portable_hash(F.col("shingle")) % F.lit(_P)
-    )
+    hash per shingle, _K affine transforms folded in a single aggregate
+    (no k-fold explode)."""
+    s = shingles.withColumn("h", portable_hash(F.col("shingle")) % F.lit(_P))
     aggs = [
         F.min(
             (F.lit((2 * i + 1) % _P) * F.col("h") + F.lit((i * 0x9E3779B9) % _P)) % F.lit(_P)
         ).alias(f"m{i}")
-        for i in range(k)
+        for i in range(_K)
     ]
     sig = s.groupBy("doc_id").agg(*aggs)
-    return sig.select("doc_id", F.array(*[f"m{i}" for i in range(k)]).alias("sig"))
+    return sig.select("doc_id", F.array(*[f"m{i}" for i in range(_K)]).alias("sig"))
 
 
 def minhash_lsh_candidates(
@@ -195,18 +185,13 @@ def minhash_lsh_candidates(
     )
 
 
-def minhash_dedup(
-    docs: DataFrame,
-    threshold: float = 0.6,
-    k: int = 32,
-    bands: int = 8,
-    n: int = 3,
-) -> DataFrame:
-    """MinHash-LSH candidates verified with exact Jaccard ≥ threshold."""
+def minhash_dedup(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
+    """MinHash-LSH candidates (3-gram shingles, _K hashes in _BANDS bands)
+    verified with exact Jaccard ≥ threshold."""
     # one shingle set shared by the signature pass AND the exact verify
     # (sizes + both intersect sides) — five consumers, one computation
-    s = shingle_sets(docs, n=n).localCheckpoint(eager=False)
-    cand = minhash_lsh_candidates(minhash_signatures(docs, k=k, n=n, shingles=s), bands, k // bands)
+    s = shingle_sets(docs).localCheckpoint(eager=False)
+    cand = minhash_lsh_candidates(minhash_signatures(s), _BANDS, _K // _BANDS)
     sizes = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     sa = s.select(F.col("doc_id").alias("doc_a"), F.col("shingle"))
     sb = s.select(F.col("doc_id").alias("doc_b"), F.col("shingle"))
@@ -231,9 +216,10 @@ def minhash_dedup(
     )
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document: per-bit +1/-1 weighted votes over
-    distinct-token hashes, sign-aggregated into a 60-bit fingerprint.
+def simhash(docs: DataFrame) -> DataFrame:
+    """64-bit SimHash per (doc_id, text) document: per-bit +1/-1 weighted
+    votes over distinct-token hashes, sign-aggregated into a 60-bit
+    fingerprint.
 
     r6: ONE Arrow ``mapInPandas`` pass. The expression form
     (``simhash_expr`` in tests/kernel_reference.py, parity-tested) paid a token explode + a
@@ -249,7 +235,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     import numpy as np
     import pandas as pd
 
-    id_t = dict(docs.dtypes)[id_col]
+    id_t = dict(docs.dtypes)["doc_id"]
 
     def gen(it):
         from collections import Counter
@@ -258,7 +244,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
             if not len(pdf):
                 continue
             ids, fps = [], []
-            for _id, text in zip(pdf[id_col], pdf[text_col]):
+            for _id, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = [t for t in _TOKEN_SPLIT.split((text or "").lower()) if t]
                 if not toks:
                     # the explode drops token-less docs in the expression
@@ -281,7 +267,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
                 fps.append(fp)
             yield pd.DataFrame({"doc_id": ids, "simhash": np.array(fps, dtype=np.int64)})
 
-    return docs.select(id_col, text_col).mapInPandas(gen, f"doc_id {id_t}, simhash long")
+    return docs.select("doc_id", "text").mapInPandas(gen, f"doc_id {id_t}, simhash long")
 
 
 def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -339,17 +325,16 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 def embedding_near_dups(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bands: int | None = None,
     rows_per_band: int = 10,
     target_recall: float = 0.95,
     dim: int = 64,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs via BANDED random-hyperplane LSH
-    (OR-of-ANDs) + exact cosine verify — the same banding shape as
-    minhash_lsh_candidates, applied to the hyperplane family.
+    """Embedding-cosine near-dup pairs of a (vec_id, embedding) frame via
+    BANDED random-hyperplane LSH (OR-of-ANDs) + exact cosine verify — the
+    same banding shape as minhash_lsh_candidates, applied to the
+    hyperplane family.
 
     Why banded: one monolithic n-plane signature recalls a pair at cosine
     c with probability (1 − acos(c)/π)^n — ≈18% at c=0.95 for n=16 — and
@@ -376,7 +361,7 @@ def embedding_near_dups(
 
     if bands is None:
         bands = lsh_band_params(threshold, target_recall, rows_per_band)
-    e = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
+    e = embeddings.select("vec_id", F.col("embedding").alias("v"))
     # r6: signatures + exact verify through the Arrow numpy kernels — the
     # Catalyst HOF folds are interpreted (outside codegen) and were the
     # two hot spots here (guide §4.2); bucket keys and cosines are

@@ -148,6 +148,25 @@ def nodes_table_source_clustered(transcripts: DataFrame) -> DataFrame:
     )
 
 
+def graph_snapshot(
+    nodes: DataFrame, start: Column, end: Column, entity_types: list[str], max_entities: int
+) -> tuple[DataFrame, bool]:
+    """Bounded graph snapshot (GraphSnapshot, ``querymanager/query.go:276-346``):
+    the nodes of ``entity_types`` updated in [start, end), deduplicated by
+    id, the first ``max_entities`` by id, and whether more matched
+    (``query.go:320-327``)."""
+    out = (
+        nodes.filter(F.col("type").isin(entity_types))
+        .filter(F.col("updated_at") >= start)
+        .filter(F.col("updated_at") < end)
+        .dropDuplicates(["id"])
+    )
+    # limit(max+1) probe: the scan early-stops after max+1 rows instead of
+    # a full count over the node set
+    truncated = out.limit(max_entities + 1).count() > max_entities
+    return out.orderBy("id").limit(max_entities), truncated
+
+
 def edges_table_source_clustered(transcripts: DataFrame) -> DataFrame:
     """``edges_table(extract_triples(transcripts))`` without the exchange,
     under the unique-``(conv_id, turn_idx)`` contract: the edge key

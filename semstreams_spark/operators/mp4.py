@@ -54,10 +54,6 @@ def mp4_n_tracks(i: int) -> int:
     return 1 + (i % 2)
 
 
-def mp4_codecs(i: int) -> str:
-    return "avc1" if i % 2 == 0 else "avc1,mp4a"
-
-
 def synth_mp4_bytes(i: int) -> bytes:
     """Deterministic minimal-but-valid ISO BMFF file: ftyp + moov with
     mvhd (timescale 1000, duration = mp4_duration_ms(i)) and

@@ -277,7 +277,7 @@ VIDEO_META_SCHEMA = (
 )
 
 
-def extract_video_metadata(media: DataFrame, batch_hint: int = 256) -> DataFrame:
+def extract_video_metadata(media: DataFrame) -> DataFrame:
     """video rows → container metadata via the stdlib ISO BMFF box walk
     (operators/mp4.py): (media_id, brand, timescale, duration_ms,
     n_tracks, codecs, handlers). Non-BMFF / corrupt payloads are
@@ -353,7 +353,7 @@ def synth_wav_bytes(i: int) -> tuple[bytes, int, int]:
     return buf.getvalue(), rate, n_frames
 
 
-def decode_wav_features(media: DataFrame, batch_hint: int = 64) -> DataFrame:
+def decode_wav_features(media: DataFrame) -> DataFrame:
     """REAL audio decode over binary WAV payloads (stdlib ``wave`` — no
     external codec needed): audio rows → (media_id, sample_rate,
     n_channels, sampwidth, n_frames, duration_ms, sum_samples) via
@@ -414,12 +414,11 @@ def decode_wav_features(media: DataFrame, batch_hint: int = 64) -> DataFrame:
     )
 
 
-def synthesize_media(spark, n: int = 64, seed: int = 7) -> DataFrame:
+def synthesize_media(spark, n: int = 64) -> DataFrame:
     """Deterministic synthetic media table for tests (binary payloads
     derived from the row id; no external data). Audio rows carry REAL
     decodable WAV bytes (synth_wav_bytes contract); image/video payloads
     stay opaque hash bytes (their codecs aren't in this runtime)."""
-    rng = np.random.default_rng(seed)
     rows = []
     kinds = ["image", "audio", "video"]
     base_ts = dt.datetime(2025, 1, 1)
@@ -438,5 +437,4 @@ def synthesize_media(spark, n: int = 64, seed: int = 7) -> DataFrame:
             "codec": {"image": "png", "audio": "wav", "video": "h264"}[kind],
         }
         rows.append((i, kind, bytearray(payload), meta, base_ts + dt.timedelta(seconds=i)))
-    _ = rng
     return spark.createDataFrame(rows, MEDIA_SCHEMA)

@@ -7,8 +7,7 @@ cleanup).
 Model: a **deletes table** ``(entity_id, ts)`` of tombstone events,
 merged with entity state by event-time LWW. Two rules state the contract,
 each once as an SQL-text template over SQL expressions of the row in
-scope, and every operator below applies the contract only through them
-(``survives`` is the Column form of ``SURVIVES``):
+scope, and ``entity_status`` applies the contract only through them:
 
 - ``TOMBSTONED``: a node last updated at or before its last tombstone
   is deleted (delete wins ties — deterministic contract, SURVEY §4.2.4);
@@ -18,16 +17,16 @@ scope, and every operator below applies the contract only through them
   bumps Version on every mutation).
 
 All pure Catalyst: the tombstone dimension is tiny relative to state, so
-every join below broadcasts; at 10^12 rows the node and edge sides never
-shuffle for these joins. ``entity_status`` joins one broadcast to
-both ends of an edge, so the second join reuses the first's exchange. Its
+the joins broadcast; at 10^12 rows the node and edge sides never shuffle
+for them. ``entity_status`` joins one broadcast to both ends of an edge,
+so the second join reuses the first's exchange. Its
 expressions are SQL texts the JVM parses in one py4j call each, where
 the Column API pays a round trip per ``F.*`` node; the plans are the same.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..extract.triples import MENTION_IDS, TURN_SUBJECT
@@ -39,12 +38,6 @@ TOMBSTONED = "({deleted_at} is not null and {deleted_at} >= {updated_at})"
 # tombstone or whose last one is strictly older
 SURVIVES = "({deleted_at} is null or {seen_at} > {deleted_at})"
 
-
-def survives(seen_at: str, deleted_at: str) -> Column:
-    """``SURVIVES`` over the SQL expressions ``seen_at`` and ``deleted_at``."""
-    return F.expr(SURVIVES.format(seen_at=seen_at, deleted_at=deleted_at))
-
-
 _STATUS = (
     f"case when {TOMBSTONED.format(updated_at='updated_at', deleted_at='deleted_at')} "
     "then 'deleted' else 'active' end as status"
@@ -52,55 +45,22 @@ _STATUS = (
 _BUMPED = "version + coalesce(n_deletes, 0) as version"
 
 
-def latest_deletes(deletes: DataFrame) -> DataFrame:
-    """(entity_id, deleted_at, n_deletes): last tombstone per entity."""
-    return deletes.groupBy("entity_id").agg(
-        F.max("ts").alias("deleted_at"), F.count(F.lit(1)).alias("n_deletes")
-    )
-
-
-def nodes_with_status(nodes: DataFrame, deletes: DataFrame) -> DataFrame:
-    """Node table with tombstone status: ``deleted`` when the last
-    tombstone is >= the node's last update (delete wins ties), ``active``
-    otherwise (including recreated entities); version bumps by the number
-    of tombstones (reference CAS version bump per mutation,
-    ``datamanager/manager.go:693-743``). Adds ``deleted_at`` (null when
-    never tombstoned)."""
-    d = latest_deletes(deletes)
-    out = nodes.join(F.broadcast(d), nodes["id"] == d["entity_id"], "left")
-    return out.selectExpr(
-        "id", "type", _STATUS, _BUMPED, "updated_at", "deleted_at"
-    )
-
-
-def edges_after_deletes(edges: DataFrame, deletes: DataFrame) -> DataFrame:
-    """Edge cleanup (``mutations.go:354``): drop edges whose src OR dst
-    entity is tombstoned at-or-after the edge's last observation; an edge
-    observed after the tombstone (recreated entity) survives."""
-    d = latest_deletes(deletes).select("entity_id", "deleted_at")
-    out = edges
-    for side in ("src", "dst"):
-        dd = d.select(
-            F.col("entity_id").alias(f"_{side}_id"), F.col("deleted_at").alias(f"_{side}_del")
-        )
-        out = out.join(F.broadcast(dd), out[side] == dd[f"_{side}_id"], "left").filter(
-            survives("updated_at", f"_{side}_del")
-        ).drop(f"_{side}_id", f"_{side}_del")
-    return out
-
-
 def entity_status(transcripts: DataFrame, deletes: DataFrame) -> DataFrame:
-    """``nodes_with_status`` of every mentioned entity plus its live
-    mention in-edge count, from one transcript scan and one
-    ``groupBy(id)`` over the mention edges.
+    """Tombstone status of every mentioned entity plus its live mention
+    in-edge count, from one transcript scan and one ``groupBy(id)`` over
+    the mention edges: ``deleted`` when the last tombstone is >= the
+    node's last update (delete wins ties), ``active`` otherwise (including
+    recreated entities); version bumps by the number of tombstones
+    (reference CAS version bump per mutation,
+    ``datamanager/manager.go:693-743``).
 
     A mention edge runs from a turn subject to each distinct entity id the
     turn mentions, seen at the turn's ts (the ``mentions_turn`` rows of
     ``edges_table_source_clustered``). A node's version counts its
     distinct (ts, turn_idx) observations plus its tombstones,
     ``updated_at`` is its latest observation, and ``n_live_edges`` counts
-    the edges that survive the tombstones of both their ends
-    (``edges_after_deletes``). Returns (id, status, version, updated_at,
+    the edges that survive the tombstones of both their ends (edge
+    cleanup, ``mutations.go:354``). Returns (id, status, version, updated_at,
     deleted_at, n_live_edges)."""
     mentions = transcripts.selectExpr(
         f"{TURN_SUBJECT} as src",

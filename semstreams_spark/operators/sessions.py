@@ -7,7 +7,7 @@ session windows keyed by conv_id. Two equivalent forms:
 - batch: gap-based sessions via lag(ts) + cumulative sum (the classic
   Spark idiom; also the DuckDB oracle form)
 - streaming: ``F.session_window(ts, gap)`` under a watermark
-  (streaming/pipeline.py)
+  (``session_window_streaming`` below)
 """
 
 from __future__ import annotations

@@ -166,16 +166,15 @@ def hyperplane_signature(vec: Column, n_planes: int = 16, dim: int = 64) -> Colu
     return sig
 
 
-def lsh_band_params(
-    threshold: float, target_recall: float = 0.95, rows_per_band: int = 10, max_bands: int = 64
-) -> int:
+def lsh_band_params(threshold: float, target_recall: float = 0.95, rows_per_band: int = 10) -> int:
     """Minimal band count b such that OR-of-ANDs banded hyperplane LSH
     recalls a pair at cosine == threshold with probability ≥ target_recall.
 
     Per-plane collision for a pair at angle θ is p = 1 − θ/π (random
     hyperplane LSH); a band of r planes collides with p^r; b independent
     bands recall 1 − (1 − p^r)^b. Solved by the smallest b meeting the
-    target — derive (b, r) from the threshold instead of hand-picking."""
+    target, at most 64 — derive (b, r) from the threshold instead of
+    hand-picking."""
     p = 1.0 - math.acos(threshold) / math.pi
     pr = p**rows_per_band
     if pr <= 0.0:
@@ -183,18 +182,9 @@ def lsh_band_params(
     b = 1
     while 1.0 - (1.0 - pr) ** b < target_recall:
         b += 1
-        if b > max_bands:
-            raise ValueError(
-                f"no b ≤ {max_bands} reaches recall {target_recall} at r={rows_per_band}"
-            )
+        if b > 64:
+            raise ValueError(f"no b ≤ 64 reaches recall {target_recall} at r={rows_per_band}")
     return b
-
-
-def banded_recall(threshold: float, bands: int, rows_per_band: int) -> float:
-    """Analytic recall of banded hyperplane LSH for a pair at exactly
-    `threshold` cosine: 1 − (1 − p^r)^b with p = 1 − acos(threshold)/π."""
-    p = 1.0 - math.acos(threshold) / math.pi
-    return 1.0 - (1.0 - p**rows_per_band) ** bands
 
 
 def banded_signatures_numpy(
@@ -254,13 +244,10 @@ def banded_signatures_numpy(
 
 
 def assign_ivf_cells(
-    embeddings: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, centroids: list[tuple[int, list[float]]]
 ) -> DataFrame:
-    """(id, v, cell): assign each vector to its max-cosine centroid
-    (min-cell-index tie-break). Centroids are broadcast as ONE literal
+    """(vec_id, v, cell): assign each (vec_id, embedding) vector to its
+    max-cosine centroid (min-cell-index tie-break). Centroids are broadcast as ONE literal
     array<struct<cell,vec>> folded by a single transform + array_max —
     a map-only pass, no shuffle, and (crucially) a plan whose lambda
     count is constant in n_cells. The previous form — greatest() over
@@ -289,7 +276,7 @@ def assign_ivf_cells(
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             m, d = V.shape
             dot = np.zeros((m, len(C)))
             nv = np.zeros(m)
@@ -300,15 +287,15 @@ def assign_ivf_cells(
             best = sims.argmax(axis=1)  # first max ⇒ min cell index
             yield pd.DataFrame(
                 {
-                    "vec_id": pdf[id_col],
-                    "v": pdf[vec_col],
+                    "vec_id": pdf["vec_id"],
+                    "v": pdf["embedding"],
                     "cell": np.asarray(cells, dtype=np.int32)[best],
                 }
             )
 
     in_t = dict(embeddings.dtypes)
-    return embeddings.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        gen, f"vec_id {in_t[id_col]}, v {in_t[vec_col]}, cell int"
+    return embeddings.select(F.col("vec_id"), F.col("embedding")).mapInPandas(
+        gen, f"vec_id {in_t['vec_id']}, v {in_t['embedding']}, cell int"
     )
 
 
@@ -369,19 +356,18 @@ def train_ivf_centroids(
     return [[float(v) for v in row] for row in cents]
 
 
-def ivf_sample(
-    embeddings: DataFrame, sample_n: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> list[list[float]]:
-    """Deterministic hash-ordered training sample: order by
-    (md5(id::string), id) and take sample_n — a seedless pseudo-random
-    sample any engine reproduces (DuckDB mirror in oracles.sql_ivf_topk)."""
+def ivf_sample(embeddings: DataFrame, sample_n: int) -> list[list[float]]:
+    """Deterministic hash-ordered training sample of (vec_id, embedding)
+    vectors: order by (md5(vec_id::string), vec_id) and take sample_n — a
+    seedless pseudo-random sample any engine reproduces (DuckDB mirror in
+    oracles.sql_ivf_topk)."""
     rows = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        embeddings.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(sample_n)
         .collect()
     )
-    return [[float(x) for x in r[vec_col]] for r in rows]
+    return [[float(x) for x in r["embedding"]] for r in rows]
 
 
 def ann_topk_ivf(
@@ -390,20 +376,16 @@ def ann_topk_ivf(
     k: int = 10,
     n_cells: int | None = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_n: int = 1024,
-    n_iters: int = 5,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: k-means coarse quantizer cells +
-    probe-and-rerank — the data-adaptive alternative to the hyperplane
-    LSH variant.
+    """IVF (inverted-file) ANN over (vec_id, embedding) vectors: k-means
+    coarse quantizer cells + probe-and-rerank — the data-adaptive
+    alternative to the hyperplane LSH variant.
 
     Centroids come from deterministic spherical k-means over a
-    hash-ordered sample (train_ivf_centroids — fixed iterations, fixed
-    order, reproducible on any engine). n_cells=None sizes the codebook
-    at ≈√N (one count action). Every vector joins its max-cosine cell in
-    ONE broadcast map pass; a query probes its n_probe nearest cells and
+    hash-ordered sample of 1024 vectors (train_ivf_centroids — fixed
+    iterations, fixed order, reproducible on any engine). n_cells=None
+    sizes the codebook at ≈√N (one count action). Every vector joins its
+    max-cosine cell in ONE broadcast map pass; a query probes its n_probe nearest cells and
     reranks exactly inside them, scanning ~n_probe/n_cells of the corpus.
     At 100 TB the assignment is map-only and the probe filter prunes
     cell-partitioned files.
@@ -413,9 +395,9 @@ def ann_topk_ivf(
     rerank (exact DuckDB oracle: oracles.sql_ivf_topk)."""
     if n_cells is None:
         n_cells = max(1, int(math.isqrt(embeddings.count())))
-    sample = ivf_sample(embeddings, sample_n, id_col, vec_col)
-    centroids = list(enumerate(train_ivf_centroids(sample, n_cells, n_iters)))
-    assigned = assign_ivf_cells(embeddings, centroids, id_col, vec_col)
+    sample = ivf_sample(embeddings, 1024)
+    centroids = list(enumerate(train_ivf_centroids(sample, n_cells)))
+    assigned = assign_ivf_cells(embeddings, centroids)
 
     q = [float(x) for x in query_vec]
     probe = sorted(range(len(centroids)), key=lambda i: (-_cos_py(q, centroids[i][1]), i))[
@@ -437,20 +419,19 @@ def ann_topk_lsh(
     query_vec: list[float],
     k: int = 10,
     n_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """ANN top-k: restrict exact rerank to vectors whose hyperplane bucket
-    is within Hamming distance 1 of the query's bucket (n_planes+1
-    buckets probed), then brute-force cosine inside.
+    """ANN top-k over (vec_id, embedding) vectors: restrict exact rerank
+    to vectors whose hyperplane bucket is within Hamming distance 1 of the
+    query's bucket (n_planes+1 buckets probed), then brute-force cosine
+    inside.
 
     Recall < 1 by construction; the candidate count drops ~2^n_planes-fold.
     """
     dim = min(64, len(query_vec))
     sigs = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("v"),
-        hyperplane_signature(F.col(vec_col), n_planes, dim).alias("bucket"),
+        "vec_id",
+        F.col("embedding").alias("v"),
+        hyperplane_signature(F.col("embedding"), n_planes, dim).alias("bucket"),
     )
     # query bucket computed driver-side with the same deterministic planes
     qsig = 0

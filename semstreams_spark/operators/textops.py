@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-TOKEN_RE = "[a-z0-9_]+"
-
 # tiny per-language stopword sets for the n-gram/stopword lang-id heuristic
 LANG_STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is", "it", "that", "for"],
@@ -25,12 +23,11 @@ LANG_STOPWORDS = {
 }
 
 
-def portable_hash(col: Column, buckets: int | None = None) -> Column:
+def portable_hash(col: Column) -> Column:
     """Deterministic 60-bit hash identical in Spark and DuckDB:
     conv(substr(md5(x),1,15),16,10). Slower than xxhash64 — use xxhash64
     in scale paths that don't need a cross-engine oracle."""
-    h = F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-    return h % buckets if buckets else h
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def tokens(col: Column) -> Column:
@@ -47,36 +44,15 @@ def fingerprint(col: Column) -> Column:
     return F.md5(norm)
 
 
-def lang_id(col: Column) -> Column:
-    """Stopword-voting language ID: the language whose stopwords appear
-    most (≥2 hits required), else 'und'. Deterministic tie-break by
-    language code order."""
-    toks = tokens(col)
-    # occurrence count per language. Notes: the HOF lambda must be
-    # single-parameter (PySpark infers lambda arity from the signature, so
-    # default-arg closures break); Column.isin can't take a lambda var;
-    # array_except would dedup. filter + array_contains is the shape that
-    # stays entirely in codegen.
-    def _count_hits(words: list[str]):
-        sw = F.array(*[F.lit(w) for w in words])
-        return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-
-    scores = [(lang, _count_hits(words)) for lang, words in sorted(LANG_STOPWORDS.items())]
-    best_score = F.greatest(*[s for _, s in scores])
-    pick = None
-    for lang, s in reversed(scores):
-        cond = s == best_score
-        pick = F.when(cond, F.lit(lang)) if pick is None else F.when(cond, F.lit(lang)).otherwise(pick)
-    return F.when(best_score >= 2, pick).otherwise(F.lit("und"))
-
-
-def lang_id_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, detected_lang): the stopword-voting language ID of
-    :func:`lang_id` as an Arrow ``mapInPandas`` pass — the expression form
-    runs one interpreted filter/array_contains HOF per language per row
-    (HOFs bypass codegen); the kernel counts stopword hits per batch in
-    Python sets. Same tokens, same ≥2-hit threshold, same smallest-code
-    tie-break (parity test test_lang_id_table_matches_expr)."""
+def lang_id_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, detected_lang) of each ``text``: stopword-voting language ID —
+    the language whose stopwords appear most (≥2 hits required), else
+    'und', ties to the smallest language code — as an Arrow
+    ``mapInPandas`` pass. The expression form (``lang_id`` in
+    tests/kernel_reference.py) runs one interpreted filter/array_contains
+    HOF per language per row (HOFs bypass codegen); the kernel counts
+    stopword hits per batch in Python sets; same rows (parity test
+    test_lang_id_table_matches_expr)."""
     import re as _re
 
     import pandas as pd
@@ -91,7 +67,7 @@ def lang_id_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
             if not len(pdf):
                 continue
             out = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 toks = [t for t in split.split((text or "").lower()) if t]
                 best_lang, best = "und", 0
                 for lang, sw in sets:
@@ -104,24 +80,24 @@ def lang_id_table(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
                 out.append(best_lang if best >= 2 else "und")
             yield pd.DataFrame({id_col: pdf[id_col], "detected_lang": out})
 
-    return docs.select(id_col, text_col).mapInPandas(
+    return docs.select(id_col, "text").mapInPandas(
         gen, f"{id_col} {id_t}, detected_lang string"
     )
 
 
-def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc quality features: token count, char count, mean token
-    length, punctuation ratio, stopword ratio, uniq-token ratio."""
-    t = tokens(F.col(text_col))
+def quality_features(docs: DataFrame) -> DataFrame:
+    """Per-doc quality features of ``text``: token count, char count, mean
+    token length, punctuation ratio, stopword ratio, uniq-token ratio."""
+    t = tokens(F.col("text"))
     n_tok = F.size(t)
-    n_chars = F.length(text_col)
+    n_chars = F.length("text")
     en_stop = F.array(*[F.lit(w) for w in LANG_STOPWORDS["en"]])
     return docs.select(
         "*",
         n_tok.alias("n_tokens"),
         (n_chars.cast("double") / n_tok).alias("avg_token_len"),
         (
-            F.length(F.regexp_replace(F.col(text_col), "[a-zA-Z0-9 ]", "")).cast("double")
+            F.length(F.regexp_replace(F.col("text"), "[a-zA-Z0-9 ]", "")).cast("double")
             / n_chars
         ).alias("punct_ratio"),
         (F.size(F.array_intersect(t, en_stop)).cast("double") / n_tok).alias("stopword_hit_ratio"),
@@ -142,28 +118,6 @@ def synthetic_coords(df: DataFrame, id_col: str = "id") -> DataFrame:
     lat = (portable_hash(F.concat(F.col(id_col), F.lit(":lat"))) % 1_800_000) / F.lit(10000.0) - F.lit(90.0)
     lon = (portable_hash(F.concat(F.col(id_col), F.lit(":lon"))) % 3_600_000) / F.lit(10000.0) - F.lit(180.0)
     return df.withColumn("lat", lat).withColumn("lon", lon)
-
-
-def geo_bins_for_bbox(
-    min_lat: float, max_lat: float, min_lon: float, max_lon: float, precision: int = 4
-) -> list[str]:
-    """All geo_bin partition keys covering a bbox — the pruning companion
-    to geo_bin: ``df.filter(col('geo4').isin(geo_bins_for_bbox(...)))``
-    turns a spatial query into partition pruning on a geo-partitioned
-    table (reference spatial index scan, indexmanager/manager.go:1223-1281).
-    Use coarse precisions for large boxes (bin count grows with m²)."""
-    import math as _math
-
-    m = GEO_MULTIPLIERS[precision]
-    la0 = _math.floor((min_lat + 90.0) * m)
-    la1 = _math.floor((max_lat + 90.0) * m)
-    lo0 = _math.floor((min_lon + 180.0) * m)
-    lo1 = _math.floor((max_lon + 180.0) * m)
-    return [
-        f"geo_{precision}_{la}_{lo}"
-        for la in range(la0, la1 + 1)
-        for lo in range(lo0, lo1 + 1)
-    ]
 
 
 def geo_bin(lat: Column, lon: Column, precision: int = 7) -> Column:

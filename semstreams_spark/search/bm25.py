@@ -27,16 +27,11 @@ K1 = 1.5
 B = 0.75
 
 
-def bm25_search(
-    docs: DataFrame,
-    query: str,
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Top-k BM25 scores for a query string. Deterministic: per-term
-    scores are computed exactly; the per-doc sum is over ≤|query| terms
-    (rounded to 6dp for cross-engine hash stability).
+def bm25_search(docs: DataFrame, query: str, k: int = 10) -> DataFrame:
+    """Top-k BM25 scores of (doc_id, text) documents for a query string.
+    Deterministic: per-term scores are computed exactly; the per-doc sum
+    is over ≤|query| terms (rounded to 6dp for cross-engine hash
+    stability).
 
     r6 plan reshape (guide §2.3 — shuffle fewer bytes): the full
     (term, doc) postings aggregation over the whole vocabulary is only
@@ -47,10 +42,7 @@ def bm25_search(
     reshape derives it twice and every join side after it is tiny.
     Scores are value-identical (same tf/dl/df/N inputs; oracle-gated)."""
     qterms = sorted({t for t in query.lower().split() if t})
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
-    )
+    toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")).localCheckpoint(eager=False)
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -87,22 +79,10 @@ def bm25_search(
     )
 
 
-def hybrid_search(
-    docs: DataFrame,
-    query: str,
-    k: int = 10,
-    lang: str | None = None,
-    source: str | None = None,
-    min_chars: int | None = None,
-) -> DataFrame:
-    """Hybrid search: conjunctive structured filters first (temporal/
-    spatial/type in the reference; lang/source/length here), BM25 scoring
-    of the survivors only (G10)."""
+def hybrid_search(docs: DataFrame, query: str, k: int = 10, lang: str | None = None) -> DataFrame:
+    """Hybrid search: a structured filter first (temporal/spatial/type in
+    the reference; lang here), BM25 scoring of the survivors only (G10)."""
     d = docs
     if lang is not None:
         d = d.filter(F.col("lang") == lang)
-    if source is not None:
-        d = d.filter(F.col("source") == source)
-    if min_chars is not None:
-        d = d.filter(F.col("n_chars") >= min_chars)
     return bm25_search(d, query, k)

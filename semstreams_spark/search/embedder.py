@@ -25,8 +25,9 @@ from pyspark.sql import functions as F
 DEFAULT_DIM = 384  # reference default (bm25_embedder.go:61-62)
 
 
-def embed_texts(df: DataFrame, id_col: str, text_col: str = "text", dim: int = DEFAULT_DIM) -> DataFrame:
-    """(id, embedding array<double>[dim]): hashed-TF embedding, L2-normalized.
+def embed_texts(df: DataFrame, id_col: str, dim: int = DEFAULT_DIM) -> DataFrame:
+    """(id, embedding array<double>[dim]) of each ``text``: hashed-TF
+    embedding, L2-normalized.
 
     vec[i] = |{tokens t : H(t) mod dim == i}| (with multiplicity), then
     vec / ||vec||. Empty-token texts embed to the zero vector (norm guard).
@@ -52,7 +53,7 @@ def embed_texts(df: DataFrame, id_col: str, text_col: str = "text", dim: int = D
             if not len(pdf):
                 continue
             ids, out = [], []
-            for _id, text in zip(pdf[id_col], pdf[text_col]):
+            for _id, text in zip(pdf[id_col], pdf["text"]):
                 toks = [t for t in re.split(r"[^a-z0-9_]+", (text or "").lower()) if t]
                 if not toks:
                     # the expression form's explode drops token-less docs
@@ -70,26 +71,22 @@ def embed_texts(df: DataFrame, id_col: str, text_col: str = "text", dim: int = D
                 out.append(vec / n if n > 0 else vec)
             yield pd.DataFrame({id_col: ids, "embedding": out})
 
-    return df.select(id_col, text_col).mapInPandas(
+    return df.select(id_col, "text").mapInPandas(
         gen, f"{id_col} {id_t}, embedding array<double>"
     )
 
 
-def embed_entities_deduped(
-    node_texts: DataFrame,
-    id_col: str = "entity",
-    text_col: str = "text",
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
-    """(entity, embedding): embeds each DISTINCT content hash once and
+def embed_entities_deduped(node_texts: DataFrame, dim: int = DEFAULT_DIM) -> DataFrame:
+    """(entity, embedding) of (entity, text) rows: embeds each DISTINCT
+    content hash once and
     joins back — the reference's content-addressed embedder-call dedup
     (G8). With duplicated texts (alias entities, re-crawls) this cuts
     embedder work to the unique-content count; the join back is on the
     tiny hash dim."""
-    h = node_texts.select(id_col, F.md5(F.col(text_col)).alias("chash"), text_col)
-    uniq = h.select("chash", text_col).dropDuplicates(["chash"])
-    emb = embed_texts(uniq, id_col="chash", text_col=text_col, dim=dim)
-    return h.join(emb, "chash").select(id_col, "embedding")
+    h = node_texts.select("entity", F.md5(F.col("text")).alias("chash"), "text")
+    uniq = h.select("chash", "text").dropDuplicates(["chash"])
+    emb = embed_texts(uniq, id_col="chash", dim=dim)
+    return h.join(emb, "chash").select("entity", "embedding")
 
 
 def embed_text_py(text: str, dim: int = DEFAULT_DIM) -> list[float]:

@@ -3,8 +3,10 @@
 SURVEY §3.1 restated: readStream(transcripts) → watermark →
 per-conversation stateful accept (bucketed ``applyInPandasWithState``) →
 Catalyst triple fan-out (the ``extract.triples`` builders) → exactly-once
-sink; windowed aggregates and session windows run as parallel stages off
-the same source.
+sink. ``windowed_degree_stream`` (here) and
+``operators.sessions.session_window_streaming`` are the streaming window
+and session-window forms over the same source; only tests start them, no
+job runs them beside the ingest.
 
 Local tests drive it with file-source micro-batches
 (``maxFilesPerTrigger``) + ``trigger(availableNow=True)``; on a real

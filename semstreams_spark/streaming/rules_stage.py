@@ -104,33 +104,25 @@ class StreamingRuleStage:
         cutoff = min_event_ts - _dt.timedelta(seconds=self.max_cooldown)
         return self.sink.batch_dirs_since(cutoff)
 
-    def last_fires(self, spark: SparkSession, min_event_ts=None) -> DataFrame | None:
+    def last_fires(self, spark: SparkSession, min_event_ts) -> DataFrame | None:
         """Last fired ts per (rule_id, entity_id) over the committed
-        prefix — the cooldown seed. With `min_event_ts` (the incoming
-        batch's earliest event time), the read is bounded to the cooldown
+        prefix — the cooldown seed for an incoming batch whose earliest
+        event time is `min_event_ts`. The read is bounded to the cooldown
         horizon via ledger footer-stat pruning; rows older than the
         cutoff are filtered out too, so the seed aggregation itself is
         O(recent events), not O(history)."""
-        if self.max_cooldown == 0:
-            return None  # no rule has a cooldown: seed is never consulted
-        if min_event_ts is None:
-            try:
-                committed = self.sink.read(spark)
-            except FileNotFoundError:
-                return None
-        else:
-            import datetime as _dt
+        import datetime as _dt
 
-            dirs = self.seed_batch_dirs(min_event_ts)
-            if not dirs:
-                return None
-            cutoff = min_event_ts - _dt.timedelta(seconds=self.max_cooldown)
-            # parquet ts reads as TIMESTAMP_NTZ; align the literal's type
-            if self._seed_schema is None:
-                self._seed_schema = spark.read.parquet(*dirs).schema
-            committed = spark.read.schema(self._seed_schema).parquet(*dirs).filter(
-                F.col("ts") >= F.lit(cutoff).cast("timestamp_ntz")
-            )
+        dirs = self.seed_batch_dirs(min_event_ts)
+        if not dirs:
+            return None
+        cutoff = min_event_ts - _dt.timedelta(seconds=self.max_cooldown)
+        # parquet ts reads as TIMESTAMP_NTZ; align the literal's type
+        if self._seed_schema is None:
+            self._seed_schema = spark.read.parquet(*dirs).schema
+        committed = spark.read.schema(self._seed_schema).parquet(*dirs).filter(
+            F.col("ts") >= F.lit(cutoff).cast("timestamp_ntz")
+        )
         return committed.groupBy("rule_id", "entity_id").agg(
             F.max("ts").alias("last_fire")
         )

@@ -7,6 +7,7 @@ kernels they pin, with ``_expr`` for the dedup and embedder forms.
 - ``simhash_expr`` → ``dedup.simhash``
 - ``embed_texts_expr`` → ``search.embedder.embed_texts``
 - ``banded_hyperplane_signatures`` → ``similarity.banded_signatures_numpy``
+- ``lang_id`` → ``textops.lang_id_table``
 - ``planted_neardup_corpus_catalyst`` → ``__spark_entry__.planted_neardup_corpus``
 - ``conv_entity_pairs`` → ``__spark_entry__._conv_pair_counts``
 """
@@ -20,7 +21,7 @@ from pyspark.sql import functions as F
 
 from __spark_entry__ import PLANT_COS, _mention_rows
 from semstreams_spark.operators.similarity import _plane_dot, norm_expr
-from semstreams_spark.operators.textops import portable_hash, tokens
+from semstreams_spark.operators.textops import LANG_STOPWORDS, portable_hash, tokens
 from semstreams_spark.search.embedder import DEFAULT_DIM
 
 
@@ -45,21 +46,21 @@ def word_ngrams(col: Column, n: int = 3) -> Column:
     return F.when(k <= 0, F.array(F.concat_ws(" ", toks))).otherwise(F.slice(acc, 1, k))
 
 
-def shingle_sets_expr(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
+def shingle_sets_expr(docs: DataFrame, n: int = 3) -> DataFrame:
     """Pure-Catalyst form of ``dedup.shingle_sets``."""
     return (
-        docs.select(F.col(id_col).alias("doc_id"), F.explode(word_ngrams(F.col(text_col), n)).alias("shingle"))
+        docs.select("doc_id", F.explode(word_ngrams(F.col("text"), n)).alias("shingle"))
         .distinct()
     )
 
 
-def simhash_expr(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash_expr(docs: DataFrame) -> DataFrame:
     """Pure-Catalyst form of ``dedup.simhash``.
 
     Implemented as: token → portable hash → per-bit +1/-1 votes → sign.
     The bit loop is an unrolled sum over F.when columns (pure codegen).
     """
-    t = docs.select(F.col(id_col).alias("doc_id"), F.explode(tokens(F.col(text_col))).alias("tok"))
+    t = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     t = t.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("w")).withColumn("h", portable_hash(F.col("tok")))
     bit_aggs = [
         F.sum(
@@ -76,7 +77,7 @@ def simhash_expr(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     return sums.select("doc_id", fp.alias("simhash"))
 
 
-def embed_texts_expr(df: DataFrame, id_col: str, text_col: str = "text", dim: int = DEFAULT_DIM) -> DataFrame:
+def embed_texts_expr(df: DataFrame, id_col: str, dim: int = DEFAULT_DIM) -> DataFrame:
     """The pure-Catalyst expression form of ``embedder.embed_texts``.
 
     Densify is O(tokens + dim) per doc: tokens aggregate to (bucket →
@@ -85,7 +86,7 @@ def embed_texts_expr(df: DataFrame, id_col: str, text_col: str = "text", dim: in
     token list per dimension, which is O(dim × tokens) and 6× the work at
     the reference's 384 dims.
     """
-    t = df.select(F.col(id_col).alias("_id"), F.explode(tokens(F.col(text_col))).alias("tok"))
+    t = df.select(F.col(id_col).alias("_id"), F.explode(tokens(F.col("text"))).alias("tok"))
     b = t.select("_id", (portable_hash(F.col("tok")) % dim).cast("int").alias("bucket"))
     cnt = b.groupBy("_id", "bucket").agg(F.count(F.lit(1)).alias("c"))
     g = cnt.groupBy("_id").agg(
@@ -263,3 +264,26 @@ def conv_entity_pairs(spark, sf_dir):
             )
         ).alias("p")
     ).select(F.col("p.src").alias("src"), F.col("p.dst").alias("dst"))
+
+
+def lang_id(col: Column) -> Column:
+    """Stopword-voting language ID as one Catalyst expression: the
+    language whose stopwords appear most (≥2 hits required), else 'und'.
+    Deterministic tie-break by language code order."""
+    toks = tokens(col)
+    # occurrence count per language. Notes: the HOF lambda must be
+    # single-parameter (PySpark infers lambda arity from the signature, so
+    # default-arg closures break); Column.isin can't take a lambda var;
+    # array_except would dedup. filter + array_contains is the shape that
+    # stays entirely in codegen.
+    def _count_hits(words: list[str]):
+        sw = F.array(*[F.lit(w) for w in words])
+        return F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
+
+    scores = [(lang, _count_hits(words)) for lang, words in sorted(LANG_STOPWORDS.items())]
+    best_score = F.greatest(*[s for _, s in scores])
+    pick = None
+    for lang, s in reversed(scores):
+        cond = s == best_score
+        pick = F.when(cond, F.lit(lang)) if pick is None else F.when(cond, F.lit(lang)).otherwise(pick)
+    return F.when(best_score >= 2, pick).otherwise(F.lit("und"))

@@ -1,4 +1,5 @@
-"""Transform family (P1-P4), query API surface (§2.11), summarizer (G5),
+"""Transform family (P1-P4), graph snapshot and temporal range (§2.11),
+summarizer (G5),
 multimodal plumbing."""
 
 from __future__ import annotations
@@ -8,13 +9,11 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from merge_reference import nodes_table
 from semstreams_spark.extract import extract_triples
 from semstreams_spark.graph.summarize import community_summaries, top_terms
-from semstreams_spark.operators import edges_table
+from semstreams_spark.operators.merge import graph_snapshot, nodes_table_source_clustered
 from semstreams_spark.operators.multimodal import synthesize_media
 from semstreams_spark.operators.transforms import FilterRule, json_filter, json_map
-from semstreams_spark.plans import GraphQueryAPI
 
 T0 = dt.datetime(2025, 1, 1)
 
@@ -57,54 +56,22 @@ def test_json_map(events_df):
     assert "props" not in out.columns
 
 
-@pytest.fixture(scope="module")
-def api(spark, transcripts_small):
-    t = extract_triples(transcripts_small)
-    return GraphQueryAPI(nodes=nodes_table(t).cache(), edges=edges_table(t).cache(), triples=t.cache())
-
-
-def test_point_lookups(api):
-    some_id = api.nodes.select("id").orderBy("id").first()["id"]
-    assert api.get_entity(some_id).count() == 1
-    assert api.exists_entity(some_id)
-    assert not api.exists_entity("no.such.entity.x.y.z")
-    ids = [r["id"] for r in api.nodes.select("id").orderBy("id").limit(3).collect()]
-    assert api.get_entities_batch(ids).count() == 3
-
-
-def test_scans_and_predicate(api):
-    assert api.count_entities() == api.nodes.count()
-    assert api.list_entities(limit=5).count() == 5
-    turns = api.query_entities(entity_type="turn")
-    assert turns.count() == api.nodes.count()  # all subjects are turns
-    subj = api.query_by_predicate("conv.turn.tool")
-    assert subj.count() > 0
-
-
-def test_relationships(api):
-    e = api.edges.first()
-    out = api.relationships_out(e["src"])
-    assert out.count() >= 1
-    inc = api.relationships_in(e["dst"])
-    assert inc.count() >= 1
-    assert api.verify_relationship(e["src"], e["dst"], e["edge_type"])
-    assert not api.verify_relationship(e["src"], e["dst"], "no_such_type")
-    both = api.relationships_both(e["src"])
-    assert both.count() >= out.count()
-
-
-def test_snapshot_truncation(api):
-    snap, truncated = api.snapshot(max_entities=10)
+def test_snapshot_truncation(transcripts_small):
+    nodes = nodes_table_source_clustered(transcripts_small)
+    # every node is a turn and every ts falls in these bounds
+    start = F.lit("2000-01-01 00:00:00").cast("timestamp_ntz")
+    end = F.lit("2100-01-01 00:00:00").cast("timestamp_ntz")
+    snap, truncated = graph_snapshot(nodes, start, end, ["turn"], 10)
     assert snap.count() == 10 and truncated
-    snap2, truncated2 = api.snapshot(entity_types=["nope"], max_entities=10)
+    snap2, truncated2 = graph_snapshot(nodes, start, end, ["nope"], 10)
     assert snap2.count() == 0 and not truncated2
 
 
-def test_temporal_range(api):
-    lo = api.triples.agg(F.min("ts")).collect()[0][0]
-    hi = lo + dt.timedelta(hours=1)
-    sub = api.query_temporal(lo, hi)
-    assert 0 < sub.count() < api.triples.count()
+def test_temporal_range(spark, transcripts_small):
+    import __spark_entry__ as entry
+
+    sub = entry.q_query_temporal(spark, "sf0.001")
+    assert 0 < sub.count() < extract_triples(transcripts_small).count()
 
 
 def test_top_terms_and_summaries(spark):
@@ -245,8 +212,8 @@ def test_mp4_metadata_real_path(spark):
     boxes (v0 and v1 headers), corrupt payloads raise ValueError at the
     parser and are QUARANTINED (all-null row, job survives) on the
     Spark path."""
+    from closed_form_reference import mp4_codecs
     from semstreams_spark.operators.mp4 import (
-        mp4_codecs,
         mp4_duration_ms,
         mp4_n_tracks,
         parse_mp4_metadata,

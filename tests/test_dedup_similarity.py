@@ -15,7 +15,8 @@ from semstreams_spark.operators.dedup import (
     simhash_near_dups,
 )
 from semstreams_spark.operators.similarity import ann_topk_lsh, cosine_topk
-from semstreams_spark.operators.textops import fingerprint, lang_id, tokens
+from kernel_reference import lang_id
+from semstreams_spark.operators.textops import fingerprint, tokens
 from semstreams_spark.search import bm25_search, hybrid_search
 
 DOCS = [
@@ -295,7 +296,8 @@ def test_embed_text_py_mirrors_spark(spark):
 def test_lsh_band_params_analytic_recall():
     """(b, r) derivation: minimal b meeting the recall target, and the
     analytic OR-of-ANDs recall model it solves against."""
-    from semstreams_spark.operators.similarity import banded_recall, lsh_band_params
+    from closed_form_reference import banded_recall
+    from semstreams_spark.operators.similarity import lsh_band_params
 
     # the gate's parameters: threshold 0.95, r=6 -> b=8 at target 0.995
     assert lsh_band_params(0.95, target_recall=0.995, rows_per_band=6) == 8
@@ -643,7 +645,7 @@ def test_simhash_kernel_matches_expr(spark, docs):
 
 def test_lang_id_table_matches_expr(spark):
     from pyspark.sql import functions as F
-    from semstreams_spark.operators.textops import lang_id, lang_id_table
+    from semstreams_spark.operators.textops import lang_id_table
 
     real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     kern = {r["doc_id"]: r["detected_lang"] for r in lang_id_table(real, id_col="doc_id").collect()}

@@ -87,18 +87,24 @@ def _sorted_rows(df):
 
 
 def test_sql_builders_match_column_api_reference(spark):
-    """Every SQL-text builder and extract_triples give the rows and the
-    schema of the Column-API reference (tests/triples_reference.py)."""
+    """Every SQL-text builder, the ``MENTION_TRIPLES`` text and
+    extract_triples give the rows and the schema of the Column-API
+    reference (tests/triples_reference.py)."""
     import triples_reference as ref
 
     from semstreams_spark.extract import triples
 
     turns = _planted_turns(spark)
-    for name in (
-        "turn_subject", "conversation_id", "mention_names", "mention_ids",
-        "property_triples", "mention_triples", "no_triples",
-    ):
-        got = turns.select("turn_idx", getattr(triples, name)().alias("v"))
+    builders = {
+        name: getattr(triples, name)
+        for name in (
+            "turn_subject", "conversation_id", "mention_names", "mention_ids",
+            "property_triples", "no_triples",
+        )
+    }
+    builders["mention_triples"] = lambda: F.expr(triples.MENTION_TRIPLES)
+    for name, build in builders.items():
+        got = turns.select("turn_idx", build().alias("v"))
         want = turns.select("turn_idx", getattr(ref, name)().alias("v"))
         assert got.schema == want.schema, name
         assert _sorted_rows(got) == _sorted_rows(want), name

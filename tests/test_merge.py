@@ -113,7 +113,7 @@ def _deletes(spark, rows):
 def test_create_delete_recreate_sequence(spark):
     """mutations.go:169 semantics: delete kills older state (delete wins
     ties), a newer update recreates the entity, version counts mutations."""
-    from semstreams_spark.operators.mutations import nodes_with_status
+    from mutations_reference import nodes_with_status
 
     ent = "a.b.c.d.e.1"
     gone = "a.b.c.d.e.2"
@@ -141,7 +141,7 @@ def test_create_delete_recreate_sequence(spark):
 
 
 def test_delete_wins_ties_and_edge_cleanup(spark):
-    from semstreams_spark.operators.mutations import edges_after_deletes, nodes_with_status
+    from mutations_reference import edges_after_deletes, nodes_with_status
 
     ent = "a.b.c.d.e.1"
     t = _triples(spark, [base(ent, "p.name", "v1", 10, 0)])

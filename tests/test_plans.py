@@ -86,20 +86,6 @@ def test_tombstone_joins_are_broadcast(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_spatial_bbox_predicates_pushed(spark, tmp_path):
-    """query_spatial over a parquet node table: lat/lon range predicates
-    reach the scan."""
-    from semstreams_spark.operators.textops import synthetic_coords
-    from semstreams_spark.plans.api import GraphQueryAPI
-
-    ents = spark.createDataFrame([(f"e{i}",) for i in range(50)], "id string")
-    out = str(tmp_path / "nodes")
-    synthetic_coords(ents, "id").write.parquet(out)
-    api = GraphQueryAPI(nodes=spark.read.parquet(out), edges=None, triples=None)
-    p = _plan(api.query_spatial(0, 50, 0, 50))
-    assert "PushedFilters" in p and "lat" in p.split("PushedFilters")[1][:300]
-
-
 def test_embedder_stays_jvm_side(spark):
     """The hashed embedder is pure Catalyst — no Python eval in the plan."""
     from semstreams_spark.search.embedder import embed_texts

@@ -3,7 +3,7 @@
 These run without a SparkSession: they pin the DRIVER-SIDE contracts the
 engine-side operators and the DuckDB oracles both build on — the hash-
 derived LSH family, the k-means trainer shared verbatim by Spark and the
-oracle, the WAV synthesis contract, and geo-bin bbox coverage.
+oracle and the WAV synthesis contract.
 """
 
 from __future__ import annotations
@@ -15,14 +15,9 @@ import wave
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from closed_form_reference import banded_recall
 from semstreams_spark.operators.multimodal import synth_wav_bytes
-from semstreams_spark.operators.similarity import (
-    _cos_py,
-    banded_recall,
-    lsh_band_params,
-    train_ivf_centroids,
-)
-from semstreams_spark.operators.textops import GEO_MULTIPLIERS, geo_bins_for_bbox
+from semstreams_spark.operators.similarity import _cos_py, lsh_band_params, train_ivf_centroids
 
 # ---------------------------------------------------------------- LSH banding
 
@@ -120,32 +115,3 @@ def test_synth_wav_roundtrips_through_stdlib_wave(i):
     samples = struct.unpack(f"<{n_frames}h", frames)
     for j in (0, n_frames // 2, n_frames - 1):
         assert samples[j] == ((i * 131 + j * 197) % 65536) - 32768
-
-
-# ---------------------------------------------------------------- geo bins
-
-
-def _bin_of(lat: float, lon: float, precision: int) -> str:
-    m = GEO_MULTIPLIERS[precision]
-    return f"geo_{precision}_{math.floor((lat + 90.0) * m)}_{math.floor((lon + 180.0) * m)}"
-
-
-boxes = st.tuples(
-    st.floats(min_value=-89.0, max_value=88.0),
-    st.floats(min_value=0.01, max_value=1.5),
-    st.floats(min_value=-179.0, max_value=178.0),
-    st.floats(min_value=0.01, max_value=1.5),
-)
-
-
-@given(boxes, st.floats(min_value=0.0, max_value=1.0), st.floats(min_value=0.0, max_value=1.0))
-@settings(max_examples=60, deadline=None)
-def test_geo_bins_cover_every_point_in_bbox(box, fa, fo):
-    la0, dla, lo0, dlo = box
-    la1, lo1 = la0 + dla, lo0 + dlo
-    bins = set(geo_bins_for_bbox(la0, la1, lo0, lo1, precision=4))
-    # an arbitrary point inside the box must land in an enumerated bin —
-    # the pruning filter may over-select but must never drop a match
-    lat = la0 + fa * (la1 - la0)
-    lon = lo0 + fo * (lo1 - lo0)
-    assert _bin_of(lat, lon, 4) in bins

@@ -398,7 +398,7 @@ def test_streaming_deletes_create_delete_recreate(spark, tmp_path):
     """Tombstones over the streamed sink's committed mention triples: a
     delete after the entity's turns marks it deleted; a later recreate
     (newer turn mentioning it) flips it back to active."""
-    from semstreams_spark.operators.mutations import nodes_with_status
+    from mutations_reference import nodes_with_status
 
     indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     # turns at T0..T0+40s mentioning ent_a; later turn at +2h re-mentions it

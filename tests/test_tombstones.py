@@ -15,12 +15,9 @@ from semstreams_spark.extract.triples import (
     node_type,
     turn_subject,
 )
+from mutations_reference import edges_after_deletes, nodes_with_status
 from semstreams_spark.operators.merge import edges_table_source_clustered
-from semstreams_spark.operators.mutations import (
-    edges_after_deletes,
-    entity_status,
-    nodes_with_status,
-)
+from semstreams_spark.operators.mutations import entity_status
 
 T0 = dt.datetime(2025, 1, 1)
 COLS = ["id", "status", "version", "updated_at", "deleted_at", "n_live_edges"]

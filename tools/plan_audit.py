@@ -28,7 +28,7 @@ AUDIT = [
     ("minhash_pairs", "banded bucket equi-joins only"),
     ("bm25_topk", "postings + broadcast terms; the one BNLJ is the 1-row (n_docs, avgdl) scalar cross-join — benign"),
     ("embedding_neardup_lsh", "bucket equi-join, NOT all-pairs"),
-    ("spatial_bbox", "coords are derived in-query (synthetic_coords) so bbox predicates can't reach the scan; scale path is geo_bin partition pruning (pytest-verified)"),
+    ("spatial_bbox", "coords are derived in-query (synthetic_coords) so bbox predicates can't reach the scan: a Filter over the projected coords"),
     ("entity_semantic_topk", "r6 embed_texts Arrow kernel (declared mapInPandas, not row-eval); broadcast query vector"),
     ("rule_events", "one scan, fired-rules array explode"),
     ("ivf_topk", "r6 numpy assignment/rerank kernels (declared mapInPandas); probe filter, no all-pairs"),
