@@ -136,7 +136,7 @@ def q_tool_corr(spark, sf_dir):
 
 
 def q_sessions(spark, sf_dir):
-    return sessionize(_transcripts(spark, sf_dir), gap_minutes=30)
+    return sessionize(_transcripts(spark, sf_dir))
 
 
 def _mention_rows(spark, sf_dir):
@@ -165,12 +165,12 @@ def _mention_edges(spark, sf_dir):
 
 
 def q_degree_tumbling(spark, sf_dir):
-    return node_degree_tumbling(_mention_edges(spark, sf_dir), "5 minutes")
+    return node_degree_tumbling(_mention_edges(spark, sf_dir))
 
 
 def q_cooccur_5min(spark, sf_dir):
     m = _mention_rows(spark, sf_dir).select("conv_id", F.col("e").alias("entity"), "ts")
-    return entity_cooccurrence(m, "5 minutes")
+    return entity_cooccurrence(m)
 
 
 def q_rule_events(spark, sf_dir):
@@ -242,7 +242,7 @@ BM25_QUERY = "spark data stream query window"
 def q_text_lang_id(spark, sf_dir):
     from semstreams_spark.operators.textops import lang_id_table
 
-    return lang_id_table(_tbl(spark, sf_dir, "documents"), id_col="doc_id")
+    return lang_id_table(_tbl(spark, sf_dir, "documents"))
 
 
 def q_doc_fingerprint(spark, sf_dir):
@@ -285,14 +285,14 @@ def q_simhash_pairs(spark, sf_dir):
 def q_cosine_topk(spark, sf_dir):
     from semstreams_spark.operators.similarity import cosine_topk
 
-    top = cosine_topk(_tbl(spark, sf_dir, "embeddings"), _query_vec(sf_dir), k=10, exclude_self=0)
+    top = cosine_topk(_tbl(spark, sf_dir, "embeddings"), _query_vec(sf_dir), exclude_self=0)
     return top.select("vec_id", F.round("cosine", 6).alias("cosine"))
 
 
 def q_ann_topk(spark, sf_dir):
     from semstreams_spark.operators.similarity import ann_topk_lsh
 
-    top = ann_topk_lsh(_tbl(spark, sf_dir, "embeddings"), _query_vec(sf_dir), k=10)
+    top = ann_topk_lsh(_tbl(spark, sf_dir, "embeddings"), _query_vec(sf_dir))
     return top.select("vec_id", F.round("cosine", 6).alias("cosine"))
 
 
@@ -303,20 +303,20 @@ def q_ivf_topk(spark, sf_dir):
     tests/test_dedup_similarity.py::test_ivf_recall_vs_bruteforce."""
     from semstreams_spark.operators.similarity import ann_topk_ivf
 
-    top = ann_topk_ivf(_tbl(spark, sf_dir, "embeddings"), _query_vec(sf_dir), k=10, n_cells=None)
+    top = ann_topk_ivf(_tbl(spark, sf_dir, "embeddings"), _query_vec(sf_dir), n_cells=None)
     return top.select("vec_id", F.round("cosine", 6).alias("cosine"))
 
 
 def q_bm25_topk(spark, sf_dir):
     from semstreams_spark.search import bm25_search
 
-    return bm25_search(_tbl(spark, sf_dir, "documents"), BM25_QUERY, k=10)
+    return bm25_search(_tbl(spark, sf_dir, "documents"), BM25_QUERY)
 
 
 def q_hybrid_search(spark, sf_dir):
     from semstreams_spark.search import hybrid_search
 
-    return hybrid_search(_tbl(spark, sf_dir, "documents"), BM25_QUERY, k=10, lang="en")
+    return hybrid_search(_tbl(spark, sf_dir, "documents"), BM25_QUERY, lang="en")
 
 
 # --------------------------------------------------------- graph analytics
@@ -351,7 +351,11 @@ def _conv_pair_counts(spark, sf_dir):
     )
 
 
-def _pair_count_batches(it, max_matrix_vocab: int = 4096):
+# largest batch vocabulary the pair kernel counts in a V×V matrix
+MAX_MATRIX_VOCAB = 4096
+
+
+def _pair_count_batches(it):
     """mapInPandas kernel for `_conv_pair_counts` (module-level so the
     fallback branch is directly unit-testable): per Arrow batch of `ents`
     arrays (unordered entity sets), emit partial (src, dst, c) pair
@@ -373,7 +377,7 @@ def _pair_count_batches(it, max_matrix_vocab: int = 4096):
             continue
         vocab = np.unique(np.concatenate(list(arrs)))
         V = len(vocab)
-        if V <= max_matrix_vocab:
+        if V <= MAX_MATRIX_VOCAB:
             M = np.zeros((V, V), dtype=np.int64)
             for ents in arrs:
                 if len(ents) < 2:
@@ -423,14 +427,14 @@ def q_paths_2hop(spark, sf_dir):
     from semstreams_spark.graph import traversal_paths
 
     edges = _entity_edges(spark, sf_dir)
-    p = traversal_paths(edges, "ent_000", max_depth=2, decay=0.85, max_paths=500)
+    p = traversal_paths(edges, "ent_000", max_depth=2, max_paths=500)
     return p.select(F.array_join("path", "->").alias("path"), "depth", "score", "truncated")
 
 
 def q_sliding_degree(spark, sf_dir):
     from semstreams_spark.operators.windows import node_degree_sliding
 
-    return node_degree_sliding(_mention_edges(spark, sf_dir), "10 minutes", "5 minutes")
+    return node_degree_sliding(_mention_edges(spark, sf_dir))
 
 
 def q_pagerank_entities(spark, sf_dir):
@@ -438,7 +442,7 @@ def q_pagerank_entities(spark, sf_dir):
     cluster size."""
     from semstreams_spark.graph import pagerank_exact
 
-    pr = pagerank_exact(_entity_edges(spark, sf_dir), max_iter=10)
+    pr = pagerank_exact(_entity_edges(spark, sf_dir))
     return pr.orderBy(F.desc("rank"), F.asc("entity")).limit(20)
 
 
@@ -465,7 +469,7 @@ def q_lpa_hierarchy(spark, sf_dir):
     (entity, level, community) over the structured parity graph."""
     from semstreams_spark.graph import lpa_hierarchy
 
-    return lpa_hierarchy(_parity_edges(spark, sf_dir), levels=3, max_iter=8)
+    return lpa_hierarchy(_parity_edges(spark, sf_dir))
 
 
 def q_json_filter_events(spark, sf_dir):
@@ -482,7 +486,7 @@ def q_top_terms(spark, sf_dir):
     """T5 TF term ranking with stopword filter, deterministic top-20."""
     from semstreams_spark.graph.summarize import top_terms
 
-    return top_terms(_tbl(spark, sf_dir, "documents"), "text", k=20)
+    return top_terms(_tbl(spark, sf_dir, "documents"), k=20)
 
 
 def q_alert_cooldown(spark, sf_dir):
@@ -623,9 +627,7 @@ def q_embedding_neardup_lsh(spark, sf_dir):
     # much further since the numpy corpus also removes the old fold
     # tree's one-time optimizer/codegen cost)
     corpus = planted_neardup_corpus(e).localCheckpoint(eager=True)
-    pairs = embedding_near_dups(
-        corpus, threshold=0.95, bands=NEARDUP_BANDS, rows_per_band=NEARDUP_ROWS
-    )
+    pairs = embedding_near_dups(corpus, bands=NEARDUP_BANDS, rows_per_band=NEARDUP_ROWS)
     return pairs.select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
 
 
@@ -642,7 +644,7 @@ def q_graphrag_global(spark, sf_dir):
     )
     members = lpa_communities(edges, max_iter=6)
     texts = _mention_context_texts(spark, sf_dir)
-    summaries = community_summaries(members, texts, k_terms=5)
+    summaries = community_summaries(members, texts)
     return global_search(members, summaries, texts, GRAPHRAG_QUERY, top_communities=3)
 
 
@@ -694,13 +696,13 @@ def q_spatial_bbox(spark, sf_dir):
 
     min_lat, max_lat, min_lon, max_lon = SPATIAL_BBOX
     ents = _mention_rows(spark, sf_dir).select(entity_id(F.col("e")).alias("id")).distinct()
-    out = synthetic_coords(ents, "id").filter(
+    out = synthetic_coords(ents).filter(
         (F.col("lat") >= min_lat)
         & (F.col("lat") <= max_lat)
         & (F.col("lon") >= min_lon)
         & (F.col("lon") <= max_lon)
     )
-    return out.select("id", "lat", "lon", geo_bin(F.col("lat"), F.col("lon"), 7).alias("geo7"))
+    return out.select("id", "lat", "lon", geo_bin(F.col("lat"), F.col("lon")).alias("geo7"))
 
 
 ENTITY_QUERY = "invoke calc stream window graph"
@@ -716,7 +718,7 @@ def q_entity_semantic_topk(spark, sf_dir):
     from semstreams_spark.search.embedder import embed_entities_deduped, embed_text_py
 
     emb = embed_entities_deduped(_mention_context_texts(spark, sf_dir), dim=384)
-    top = cosine_topk(emb, embed_text_py(ENTITY_QUERY), k=10, id_col="entity", vec_col="embedding")
+    top = cosine_topk(emb, embed_text_py(ENTITY_QUERY), id_col="entity")
     return top.select(F.col("vec_id").alias("entity"), F.round("cosine", 6).alias("cosine"))
 
 
@@ -729,7 +731,7 @@ def q_media_wav_decode(spark, sf_dir):
     (synth_wav_bytes)."""
     from semstreams_spark.operators.multimodal import decode_wav_features, synthesize_media
 
-    return decode_wav_features(synthesize_media(spark, n=64))
+    return decode_wav_features(synthesize_media(spark))
 
 
 def q_media_png_decode(spark, sf_dir):
@@ -742,7 +744,7 @@ def q_media_png_decode(spark, sf_dir):
     scanline filters cycling 0-4 so unfiltering is actually proven)."""
     from semstreams_spark.operators.multimodal import decode_png_features, synthesize_png_media
 
-    return decode_png_features(synthesize_png_media(spark, n=64))
+    return decode_png_features(synthesize_png_media(spark))
 
 
 def q_media_mp4_metadata(spark, sf_dir):
@@ -756,7 +758,7 @@ def q_media_mp4_metadata(spark, sf_dir):
     (synth_mp4_bytes: duration_ms = 1000 + 250·i, tracks = 1 + i%2)."""
     from semstreams_spark.operators.multimodal import extract_video_metadata, synthesize_mp4_media
 
-    return extract_video_metadata(synthesize_mp4_media(spark, n=48))
+    return extract_video_metadata(synthesize_mp4_media(spark))
 
 
 def q_graphrag_local(spark, sf_dir):
@@ -873,7 +875,7 @@ def q_context_flags(spark, sf_dir):
         Rule(id="mega_hub", conditions=(Condition("entity.mentions", "gt", "1000000000"),)),
         Rule(id="ghost_nearby", conditions=(Condition("entity.name", "starts_with", "ghost_"),)),
     ]
-    return context_flags_df(edges, states, "ent_005", rules, max_depth=2)
+    return context_flags_df(edges, states, "ent_005", rules)
 
 
 def q_salted_conv_stats(spark, sf_dir):
@@ -881,10 +883,10 @@ def q_salted_conv_stats(spark, sf_dir):
     (partial per (conv, salt), final per conv) over the transcript stream —
     the oracle computes the plain per-conv aggregate, proving the salted
     plan is result-identical while its first shuffle splits hot
-    conversations across n_salts tasks."""
+    conversations across joins.N_SALTS tasks."""
     from semstreams_spark.operators.joins import salt_conv_key
 
-    t = salt_conv_key(_transcripts(spark, sf_dir), n_salts=8)
+    t = salt_conv_key(_transcripts(spark, sf_dir))
     partial = t.groupBy("conv_id", "conv_salt").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.length("text")).alias("chars"),

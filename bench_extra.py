@@ -121,10 +121,7 @@ def main():
         nd = [
             timed(
                 lambda: _noop(
-                    embedding_near_dups(
-                        emb, threshold=0.95, rows_per_band=r, target_recall=0.95,
-                        dim=64, max_bucket_size=256,
-                    )
+                    embedding_near_dups(emb, rows_per_band=r, max_bucket_size=256)
                 )
             )
             for _ in range(args.reps)

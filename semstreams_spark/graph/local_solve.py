@@ -16,7 +16,7 @@ dispatch both operators share:
   shared by every graph loop that stores a frame and needs its size: the
   traversal's edges and hop frontiers, the hierarchy's edges and
   community graphs, and the node sets of the distributed loops;
-* under ``local_max_edges`` the checkpoint is coalesced into ONE executor
+* under :func:`local_max_edges` the checkpoint is coalesced into ONE executor
   task (``coalesce(1).mapInPandas``: no exchange, never the driver) and
   the whole fixed-point loop runs vectorized in numpy inside that task.
   The result is lazy: the caller's own action runs the solve;
@@ -49,11 +49,10 @@ from pyspark.sql import functions as F
 DEFAULT_LOCAL_MAX_EDGES = 2_000_000
 
 
-def local_max_edges(default: int | None = None) -> int:
-    env = os.environ.get("SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES")
-    if env is not None:
-        return int(env)
-    return DEFAULT_LOCAL_MAX_EDGES if default is None else default
+def local_max_edges() -> int:
+    """The largest edge count solved in one task:
+    ``SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES``, else 2M."""
+    return int(os.environ.get("SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES", DEFAULT_LOCAL_MAX_EDGES))
 
 
 def materialize(df: DataFrame) -> tuple[DataFrame, int]:
@@ -68,16 +67,15 @@ def materialize(df: DataFrame) -> tuple[DataFrame, int]:
 def solve(
     e: DataFrame,
     n_edges: int,
-    max_edges: int | None,
     local: Callable[[np.ndarray, np.ndarray], pd.DataFrame],
     schema: str,
     distributed: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
     """Dispatch on (src, dst) edges ``e`` that :func:`materialize` stored
-    and counted (``n_edges``): under ``local_max_edges(max_edges)`` return
+    and counted (``n_edges``): under :func:`local_max_edges` return
     the lazy single-task ``local(src, dst)`` over ``e`` as ``schema``,
     else ``distributed(e)``."""
-    if n_edges > local_max_edges(max_edges):
+    if n_edges > local_max_edges():
         return distributed(e)
 
     def run(batches):
@@ -100,12 +98,14 @@ def _index_edges(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarr
 # ---------------------------------------------------------------- PageRank
 
 # fixed-point PageRank: rank ≈ true_rank × SCALE, damping
-# DAMPING_NUM / DAMPING_DEN = 0.85 (the reference default)
+# DAMPING_NUM / DAMPING_DEN = 0.85 (the reference default), MAX_ITER
+# iterations (the registry's count)
 SCALE = 10**12
 DAMPING_NUM, DAMPING_DEN = 85, 100
+MAX_ITER = 10
 
 
-def _pagerank_core(src_i: np.ndarray, dst_i: np.ndarray, n: int, max_iter: int) -> np.ndarray:
+def _pagerank_core(src_i: np.ndarray, dst_i: np.ndarray, n: int) -> np.ndarray:
     """Bit-identical replay of pagerank_exact's BIGINT recurrence:
     contribution = rank div deg (edge MULTIset — duplicates contribute
     per occurrence, matching the DataFrame loop), dangling mass folded
@@ -121,7 +121,7 @@ def _pagerank_core(src_i: np.ndarray, dst_i: np.ndarray, n: int, max_iter: int) 
 
     base = ((DAMPING_DEN - DAMPING_NUM) * SCALE) // (DAMPING_DEN * n)
     rank = np.full(n, SCALE // n, dtype=np.int64)
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         inflow = np.zeros(n, dtype=np.int64)
         if len(src_i):
             c = rank[src_i] // deg[src_i]
@@ -131,11 +131,11 @@ def _pagerank_core(src_i: np.ndarray, dst_i: np.ndarray, n: int, max_iter: int) 
     return rank
 
 
-def pagerank_local(src: np.ndarray, dst: np.ndarray, max_iter: int) -> pd.DataFrame:
+def pagerank_local(src: np.ndarray, dst: np.ndarray) -> pd.DataFrame:
     """Single-task PageRank over one edge list: (entity, rank) identical
     to the distributed loop."""
     ents, src_i, dst_i = _index_edges(src, dst)
-    rank = _pagerank_core(src_i, dst_i, len(ents), max_iter)
+    rank = _pagerank_core(src_i, dst_i, len(ents))
     return pd.DataFrame({"entity": ents, "rank": rank})
 
 

@@ -26,30 +26,30 @@ from ._width import iteration_shuffle_width
 from .local_solve import lpa_local, materialize, solve
 
 
-def lpa_communities(
-    edges: DataFrame, max_iter: int = 10, local_max_edges: int | None = None
-) -> DataFrame:
+# the reference's hierarchy (3 levels) at the registry's per-level iteration count
+LEVELS = 3
+HIERARCHY_MAX_ITER = 8
+
+
+def lpa_communities(edges: DataFrame, max_iter: int = 10) -> DataFrame:
     """(entity, community) — community = min entity id of the cluster's
     converged label. Undirected propagation.
 
     Adaptive execution (``local_solve.solve``, shared with
-    pagerank_exact): under ``local_max_edges`` (default 2M, env
+    pagerank_exact): under ``local_solve.local_max_edges()`` (2M, env
     ``SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES``) the vote loop runs vectorized
     in ONE executor task — bit-identical (min-label votes are
     order-free; parity-tested) without max_iter join+agg rounds of
     fixed cost. Larger graphs take the distributed loop."""
-    return _lpa(*materialize(edges.select("src", "dst")), max_iter, local_max_edges)
+    return _lpa(*materialize(edges.select("src", "dst")), max_iter)
 
 
-def _lpa(
-    e: DataFrame, n_edges: int, max_iter: int, local_max_edges: int | None = None
-) -> DataFrame:
+def _lpa(e: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
     """lpa_communities over (src, dst) edges ``e`` already materialized,
     with ``n_edges`` rows."""
     return solve(
         e,
         n_edges,
-        local_max_edges,
         partial(lpa_local, max_iter=max_iter),
         "entity string, community string",
         partial(_lpa_distributed, max_iter=max_iter),
@@ -105,8 +105,9 @@ def _lpa_distributed(e: DataFrame, max_iter: int) -> DataFrame:
     return labels.select("entity", F.col("label").alias("community"))
 
 
-def lpa_hierarchy(edges: DataFrame, levels: int = 3, max_iter: int = 8) -> DataFrame:
-    """Hierarchical LPA (reference default 3 levels, max 10:
+def lpa_hierarchy(edges: DataFrame) -> DataFrame:
+    """Hierarchical LPA over ``LEVELS`` levels of ``HIERARCHY_MAX_ITER``
+    iterations each (reference default 3 levels, max 10:
     ``pkg/graphclustering/lpa.go:20-23,39,73-79``): level 0 = LPA over the
     raw graph; level k+1 = LPA over the COMMUNITY graph of level k (one
     super-node per community, an edge wherever any cross-community edge
@@ -125,12 +126,10 @@ def lpa_hierarchy(edges: DataFrame, levels: int = 3, max_iter: int = 8) -> DataF
     built from it. Each community graph is materialized and counted in
     one job, and an empty one ends the hierarchy.
     """
-    if levels < 1:
-        raise ValueError("levels must be >= 1")
     e, n_edges = materialize(edges.select("src", "dst"))
-    members = _lpa(e, n_edges, max_iter).localCheckpoint(eager=True)
+    members = _lpa(e, n_edges, HIERARCHY_MAX_ITER).localCheckpoint(eager=True)
     out = members.withColumn("level", F.lit(0))
-    for lvl in range(1, levels):
+    for lvl in range(1, LEVELS):
         ms = members.select(F.col("entity").alias("src"), F.col("community").alias("c_src"))
         md = members.select(F.col("entity").alias("dst"), F.col("community").alias("c_dst"))
         ce, n_ce = materialize(
@@ -142,7 +141,7 @@ def lpa_hierarchy(edges: DataFrame, levels: int = 3, max_iter: int = 8) -> DataF
         )
         if n_ce == 0:
             break
-        sup = _lpa(ce, n_ce, max_iter).toDF("community", "up")
+        sup = _lpa(ce, n_ce, HIERARCHY_MAX_ITER).toDF("community", "up")
         members = (
             members.join(sup, "community", "left")
             .select(

@@ -13,34 +13,31 @@ order.
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ._width import iteration_shuffle_width
-from .local_solve import DAMPING_DEN, DAMPING_NUM, SCALE, materialize, pagerank_local, solve
+from .local_solve import DAMPING_DEN, DAMPING_NUM, MAX_ITER, SCALE, materialize, pagerank_local, solve
 
 
-def pagerank_exact(
-    edges: DataFrame, max_iter: int = 10, local_max_edges: int | None = None
-) -> DataFrame:
+def pagerank_exact(edges: DataFrame) -> DataFrame:
     """Fixed-point integer PageRank: (entity, rank) with rank ≈ true_rank ×
-    SCALE (10^12), damping 0.85, all arithmetic in BIGINT.
+    SCALE (10^12), damping 0.85, ``MAX_ITER`` iterations, all arithmetic
+    in BIGINT.
 
     Why: float PageRank sums are order-dependent (shuffle order varies per
     run/cluster), so the result is only reproducible to ~1e-15 — good
     enough for ranking, not for a bit-exact correctness gate. Integer sums
     are associative-exact, so this variant is bit-identical on any engine,
-    partitioning, or cluster size (truncation error < max_iter ulp of
+    partitioning, or cluster size (truncation error < MAX_ITER ulp of
     1/SCALE per node — ranking-order-equivalent to the float form).
     Mirrors the reference's damped iteration (``pkg/graphclustering/
     pagerank.go:50-219``) at fixed iteration count.
 
     Adaptive execution (``local_solve.solve``): a graph under
-    ``local_max_edges`` (default 2M, env
+    ``local_solve.local_max_edges()`` (2M, env
     ``SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES``) runs the whole loop vectorized
-    inside ONE executor task instead of max_iter distributed join+agg
+    inside ONE executor task instead of MAX_ITER distributed join+agg
     rounds — bit-identical by construction (integer arithmetic is
     order-free; parity-tested), and the per-iteration fixed costs that
     dominate small graphs vanish. Larger graphs take the distributed loop
@@ -48,14 +45,13 @@ def pagerank_exact(
     """
     return solve(
         *materialize(edges.select("src", "dst")),
-        local_max_edges,
-        partial(pagerank_local, max_iter=max_iter),
+        pagerank_local,
         "entity string, rank long",
-        partial(_pagerank_distributed, max_iter=max_iter),
+        _pagerank_distributed,
     )
 
 
-def _pagerank_distributed(edges: DataFrame, max_iter: int) -> DataFrame:
+def _pagerank_distributed(edges: DataFrame) -> DataFrame:
     """pagerank_exact's join+agg loop over materialized (src, dst) edges."""
     nodes, n = materialize(
         edges.select(F.col("src").alias("entity"))
@@ -72,7 +68,7 @@ def _pagerank_distributed(edges: DataFrame, max_iter: int) -> DataFrame:
     # integer sums are order-free, so narrowing the shuffle width cannot
     # change the result — only the per-iteration fixed cost
     with iteration_shuffle_width(edges.sparkSession, n):
-        for _ in range(max_iter):
+        for _ in range(MAX_ITER):
             contribs = (
                 links.join(ranks, links["src"] == ranks["entity"])
                 .select(F.col("dst").alias("entity"), F.expr("rank div deg").alias("c"))

@@ -19,14 +19,17 @@ from ..operators.textops import tokens
 STOPWORDS = (
     "the a an and or of to in is it that for on with as at by this be are was".split()
 )
+# keywords kept per community summary
+K_TERMS = 5
 
 
-def top_terms(docs: DataFrame, text_col: str = "text", group_col: str | None = None, k: int = 10) -> DataFrame:
-    """TF term ranking (T5): stopworded token counts, top-k overall or per
-    group; deterministic tie-break (count desc, term asc)."""
+def top_terms(docs: DataFrame, group_col: str | None = None, k: int = 10) -> DataFrame:
+    """TF term ranking (T5) of the ``text`` column: stopworded token
+    counts, top-k overall or per group; deterministic tie-break (count
+    desc, term asc)."""
     t = docs.select(
         *([group_col] if group_col else []),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     ).filter(~F.col("term").isin(STOPWORDS))
     keys = [group_col, "term"] if group_col else ["term"]
     counts = t.groupBy(*keys).agg(F.count(F.lit(1)).alias("tf"))
@@ -39,15 +42,15 @@ def top_terms(docs: DataFrame, text_col: str = "text", group_col: str | None = N
 def community_summaries(
     members: DataFrame,  # (entity, community)
     node_texts: DataFrame,  # (entity, text) — e.g. latest text property
-    k_terms: int = 5,
 ) -> DataFrame:
-    """Per-community statistical summary: size, top terms, template text.
+    """Per-community statistical summary: size, top ``K_TERMS`` terms,
+    template text.
 
     Mirrors the reference's "statistical summary < 1ms" path
     (``GRAPHRAG_LESSONS_LEARNED.md:241``): no external calls.
     """
     joined = members.join(node_texts, "entity", "left")
-    terms = top_terms(joined.filter(F.col("text").isNotNull()), "text", "community", k_terms)
+    terms = top_terms(joined.filter(F.col("text").isNotNull()), "community", K_TERMS)
     term_lists = terms.groupBy("community").agg(
         F.array_join(
             F.transform(

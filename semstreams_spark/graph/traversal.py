@@ -26,15 +26,13 @@ from pyspark.sql import functions as F
 from ._width import iteration_shuffle_width
 from .local_solve import materialize
 
+# relevance kept per hop (the reference's DecayFactor)
+DECAY = 0.85
 
-def bounded_traversal(
-    edges: DataFrame,
-    start: str,
-    max_depth: int = 3,
-    decay: float = 0.85,
-) -> DataFrame:
+
+def bounded_traversal(edges: DataFrame, start: str, max_depth: int = 3) -> DataFrame:
     """BFS from `start` to max_depth. Returns (entity, depth, score):
-    depth = first-reach hop count, score = decay^depth (relevance,
+    depth = first-reach hop count, score = DECAY^depth (relevance,
     ``client.go`` DecayFactor semantics), deterministic.
 
     edges: (src, dst), followed in both directions (the reference
@@ -54,7 +52,7 @@ def bounded_traversal(
                 .select(
                     F.col("dst").alias("entity"),
                     F.lit(d).alias("depth"),
-                    (F.col("score") * F.lit(decay)).alias("score"),
+                    (F.col("score") * F.lit(DECAY)).alias("score"),
                 )
                 .distinct()
                 .join(visited.select("entity"), "entity", "left_anti")
@@ -75,13 +73,12 @@ def traversal_paths(
     edges: DataFrame,
     start: str,
     max_depth: int = 3,
-    decay: float = 0.85,
     max_paths: int | None = None,
 ) -> DataFrame:
     """PathRAG path enumeration (``graph/query/client.go:456-726``,
     PathResult at ``:520``): all simple paths from `start` up to
     max_depth over the undirected (src, dst) edges, each as an explicit
-    node sequence with a decayed score, under a MaxPaths budget with a
+    node sequence with a DECAY^depth score, under a MaxPaths budget with a
     `truncated` flag.
 
     Returns (path array<string>, depth int, score double,
@@ -109,7 +106,7 @@ def traversal_paths(
                 .select(
                     F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
                     F.lit(d).alias("depth"),
-                    (F.col("score") * F.lit(decay)).alias("score"),
+                    (F.col("score") * F.lit(DECAY)).alias("score"),
                 )
             )
             if n_frontier == 0:

@@ -31,6 +31,11 @@ from .textops import portable_hash
 _P = 2147483647
 # MinHash permutations and LSH bands (rows per band = _K // _BANDS)
 _K, _BANDS = 32, 8
+# words per shingle
+_N = 3
+# embedding near-dups: cosine threshold, recall target of the derived
+# band count, and the leading components each hyperplane reads
+NEARDUP_THRESHOLD, NEARDUP_RECALL, NEARDUP_DIM = 0.95, 0.95, 64
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -43,8 +48,9 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle) distinct pairs of a (doc_id, text) frame.
+def shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) distinct pairs of a (doc_id, text) frame, each
+    shingle ``_N`` words.
 
     r6: ONE Arrow ``mapInPandas`` pass — tokenize + n-gram + per-doc set
     in Python per batch. The expression form (``shingle_sets_expr`` in
@@ -53,7 +59,7 @@ def shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
     passes per doc (HOFs bypass codegen) plus a global DISTINCT exchange;
     since (doc_id, shingle) dedup is per-doc by construction, the set is
     computable inside the scan task with NO shuffle. Same tokens (same
-    regex/lowercase), same ``< n``-token fallback shingle, same rows."""
+    regex/lowercase), same ``< _N``-token fallback shingle, same rows."""
     import pandas as pd
 
     id_t = dict(docs.dtypes)["doc_id"]
@@ -65,10 +71,10 @@ def shingle_sets(docs: DataFrame, n: int = 3) -> DataFrame:
             ids, outs = [], []
             for _id, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = [t for t in _TOKEN_SPLIT.split((text or "").lower()) if t]
-                if len(toks) < n:
+                if len(toks) < _N:
                     sh = {" ".join(toks)}
                 else:
-                    sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+                    sh = {" ".join(toks[i : i + _N]) for i in range(len(toks) - _N + 1)}
                 ids.extend([_id] * len(sh))
                 outs.extend(sh)
             yield pd.DataFrame({"doc_id": ids, "shingle": outs})
@@ -81,35 +87,16 @@ import re as _re  # noqa: E402
 _TOKEN_SPLIT = _re.compile(r"[^a-z0-9_]+")
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.6,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
+def jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
     """Exact 3-gram Jaccard similarity pairs ≥ threshold (a < b).
 
     Self-join on shingle: cost ∝ Σ df(shingle)² — fine when shingles are
-    discriminative. ``max_shingle_df`` is the hot-shingle guard for scale:
-    shingles appearing in more than that many docs are EXCLUDED from the
-    candidate join (a df-10^6 boilerplate shingle alone is 10^12 join
-    rows). Set sizes still count all shingles, so with a cap the computed
-    jaccard is a lower bound (hot shingles contribute denominator but not
-    numerator) — near-dup pairs always share rare shingles, so recall at
-    sensible thresholds is unaffected; leave None for the exact oracle
-    form.
+    discriminative.
     """
-    # the shingle set feeds the size agg AND both self-join sides (and
-    # the df cap when set): compute it once per action
+    # the shingle set feeds the size agg AND both self-join sides:
+    # compute it once per action
     s = shingle_sets(docs).localCheckpoint(eager=False)
     sizes = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
-    if max_shingle_df is not None:
-        df_ok = (
-            s.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_shingle_df)
-            .select("shingle")
-        )
-        s = s.join(df_ok, "shingle", "left_semi")
     a, b = s.alias("a"), s.alias("b")
     common = (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -324,14 +311,12 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 
 def embedding_near_dups(
     embeddings: DataFrame,
-    threshold: float = 0.95,
     bands: int | None = None,
     rows_per_band: int = 10,
-    target_recall: float = 0.95,
-    dim: int = 64,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs of a (vec_id, embedding) frame via
+    """Embedding-cosine near-dup pairs (cosine ≥ ``NEARDUP_THRESHOLD``) of
+    a (vec_id, embedding) frame via
     BANDED random-hyperplane LSH (OR-of-ANDs) + exact cosine verify — the
     same banding shape as minhash_lsh_candidates, applied to the
     hyperplane family.
@@ -343,7 +328,7 @@ def embedding_near_dups(
     decouples the two: r (rows_per_band) sizes buckets (2^r per band;
     pick r ≈ log2(N / target bucket size) at scale), and b is DERIVED
     from the recall target via lsh_band_params — recall 1 − (1 − p^r)^b
-    ≥ target_recall for pairs at-threshold, ~0.97 at the (8, 10) default
+    ≥ ``NEARDUP_RECALL`` for pairs at-threshold, ~0.97 at the (8, 10) default
     for threshold 0.95. Candidates are deduped before the exact verify,
     so multi-band collisions cost one cosine each.
 
@@ -360,7 +345,7 @@ def embedding_near_dups(
     from .similarity import banded_signatures_numpy, lsh_band_params
 
     if bands is None:
-        bands = lsh_band_params(threshold, target_recall, rows_per_band)
+        bands = lsh_band_params(NEARDUP_THRESHOLD, NEARDUP_RECALL, rows_per_band)
     e = embeddings.select("vec_id", F.col("embedding").alias("v"))
     # r6: signatures + exact verify through the Arrow numpy kernels — the
     # Catalyst HOF folds are interpreted (outside codegen) and were the
@@ -368,7 +353,7 @@ def embedding_near_dups(
     # bit-identical to the expression forms (parity tests in
     # tests/test_dedup_similarity.py), so candidates, survivors and the
     # DuckDB gate are unchanged.
-    sig = banded_signatures_numpy(e, bands, rows_per_band, dim, id_col="vec_id", vec_col="v")
+    sig = banded_signatures_numpy(e, bands, rows_per_band, NEARDUP_DIM, vec_col="v")
     if max_bucket_size is not None:
         ok = (
             sig.groupBy("band", "sig")
@@ -395,7 +380,7 @@ def embedding_near_dups(
     va = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("v_a"))
     vb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("v_b"))
     joined = cand.join(va, "vec_a").join(vb, "vec_b")
-    return _pair_cosines_numpy(joined).filter(F.col("cosine") >= threshold)
+    return _pair_cosines_numpy(joined).filter(F.col("cosine") >= NEARDUP_THRESHOLD)
 
 
 def _pair_cosines_numpy(joined: DataFrame) -> DataFrame:

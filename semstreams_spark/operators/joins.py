@@ -84,10 +84,14 @@ def tool_invocation_correlation(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def salt_conv_key(df: DataFrame, n_salts: int = 8) -> DataFrame:
-    """Hot-conversation skew mitigation (J7): salted composite key for
-    shuffle-heavy per-conv aggregations that don't need total per-conv
-    state. Use with a two-phase agg (partial per salted key, final per
+# salts per conversation key
+N_SALTS = 8
+
+
+def salt_conv_key(df: DataFrame) -> DataFrame:
+    """Hot-conversation skew mitigation (J7): salted composite key, one of
+    ``N_SALTS`` per conversation, for shuffle-heavy per-conv aggregations
+    that don't need total per-conv state. Use with a two-phase agg (partial per salted key, final per
     conv_id). AQE skew-join handles the join side; this handles groupBy.
     """
     return df.withColumn(
@@ -95,6 +99,6 @@ def salt_conv_key(df: DataFrame, n_salts: int = 8) -> DataFrame:
         F.concat(
             F.col("conv_id"),
             F.lit("#"),
-            F.pmod(F.hash("turn_idx"), F.lit(n_salts)).cast("string"),
+            F.pmod(F.hash("turn_idx"), F.lit(N_SALTS)).cast("string"),
         ),
     )

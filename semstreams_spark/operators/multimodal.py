@@ -66,10 +66,10 @@ def _paeth(a: int, b: int, c: int) -> int:
     return b if pb <= pc else c
 
 
-def encode_png(pixels: np.ndarray, filter_per_row: bool = True) -> bytes:
+def encode_png(pixels: np.ndarray) -> bytes:
     """Minimal PNG encoder for synthetic fixtures: (H, W, 3|4) uint8 →
-    non-interlaced 8-bit PNG. With filter_per_row, scanline y uses filter
-    type y % 5 — every PNG filter (None/Sub/Up/Average/Paeth) appears, so
+    non-interlaced 8-bit PNG. Scanline y uses filter type y % 5 — every
+    PNG filter (None/Sub/Up/Average/Paeth) appears, so
     round-tripping through decode_png_pixels exercises the full
     unfiltering path, not just the trivial one."""
     import struct
@@ -82,7 +82,7 @@ def encode_png(pixels: np.ndarray, filter_per_row: bool = True) -> bytes:
     prev = np.zeros(w * ch, dtype=np.int32)
     for y in range(h):
         line = pixels[y].reshape(-1).astype(np.int32)
-        ft = (y % 5) if filter_per_row else 0
+        ft = y % 5
         raw.append(ft)
         if ft == 0:
             out = line
@@ -234,31 +234,36 @@ def decode_png_features(media: DataFrame) -> DataFrame:
     )
 
 
-def synthesize_png_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic image-only media table whose payloads are REAL PNGs
-    (synth_png_bytes contract) — the media_png_decode gate's input."""
+# rows of the synthetic media tables (the mp4 one is video-only)
+N_MEDIA, N_MP4_MEDIA = 64, 48
+
+
+def synthesize_png_media(spark) -> DataFrame:
+    """Deterministic image-only media table of ``N_MEDIA`` rows whose
+    payloads are REAL PNGs (synth_png_bytes contract) — the
+    media_png_decode gate's input."""
     import datetime as _dt
 
     rows = []
     base_ts = _dt.datetime(2025, 1, 1)
-    for i in range(n):
+    for i in range(N_MEDIA):
         payload, w, h = synth_png_bytes(i)
         meta = {"width": w, "height": h, "sample_rate": None, "n_frames": None, "codec": "png"}
         rows.append((i, "image", bytearray(payload), meta, base_ts + _dt.timedelta(seconds=i)))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def synthesize_mp4_media(spark, n: int = 48) -> DataFrame:
-    """Deterministic video-only media table whose payloads are REAL
-    ISO BMFF (MP4) containers (mp4.synth_mp4_bytes contract) — the
-    media_mp4_metadata gate's input."""
+def synthesize_mp4_media(spark) -> DataFrame:
+    """Deterministic video-only media table of ``N_MP4_MEDIA`` rows whose
+    payloads are REAL ISO BMFF (MP4) containers (mp4.synth_mp4_bytes
+    contract) — the media_mp4_metadata gate's input."""
     import datetime as _dt
 
     from .mp4 import mp4_duration_ms, synth_mp4_bytes
 
     rows = []
     base_ts = _dt.datetime(2025, 1, 1)
-    for i in range(n):
+    for i in range(N_MP4_MEDIA):
         payload = synth_mp4_bytes(i)
         meta = {
             "width": None,
@@ -414,15 +419,15 @@ def decode_wav_features(media: DataFrame) -> DataFrame:
     )
 
 
-def synthesize_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic synthetic media table for tests (binary payloads
+def synthesize_media(spark) -> DataFrame:
+    """Deterministic synthetic media table of ``N_MEDIA`` rows (binary payloads
     derived from the row id; no external data). Audio rows carry REAL
     decodable WAV bytes (synth_wav_bytes contract); image/video payloads
     stay opaque hash bytes (their codecs aren't in this runtime)."""
     rows = []
     kinds = ["image", "audio", "video"]
     base_ts = dt.datetime(2025, 1, 1)
-    for i in range(n):
+    for i in range(N_MEDIA):
         kind = kinds[i % 3]
         if kind == "audio":
             payload, rate, n_frames = synth_wav_bytes(i)

@@ -15,15 +15,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# the registry's session gap
+GAP_MINUTES = 30
 
-def sessionize(transcripts: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Gap-based sessions per conversation, ordered by event time.
+
+def sessionize(transcripts: DataFrame) -> DataFrame:
+    """Gap-based sessions per conversation, ordered by event time: a gap
+    of more than ``GAP_MINUTES`` starts a new session.
 
     Ordering contract: (ts, turn_idx) — stable under out-of-order input.
     Output: (conv_id, session_id, session_start, session_end, n_turns).
     """
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = GAP_MINUTES * 60 * 1_000_000
     prev_ts = F.lag("ts").over(w)
     # microsecond-exact gap test (works for TIMESTAMP and TIMESTAMP_NTZ;
     # second-granularity diffs would disagree with the oracle at sub-second

@@ -20,6 +20,11 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# rows each top-k search returns
+TOP_K = 10
+# IVF cells probed per query, and hyperplanes of the LSH bucket
+N_PROBE, N_PLANES = 4, 12
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -97,20 +102,18 @@ def cosine_scores_numpy(
 def cosine_topk(
     embeddings: DataFrame,
     query_vec: list[float],
-    k: int = 10,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_self: int | None = None,
 ) -> DataFrame:
-    """Brute-force cosine top-k against a query vector; deterministic
-    tie-break by id. The per-row cosine runs through the Arrow numpy
-    kernel (``cosine_scores_numpy`` — bit-identical to the Catalyst fold
-    form, which remains available as ``cosine_sim_expr`` for composition
-    inside larger expressions)."""
-    out = cosine_scores_numpy(embeddings, query_vec, id_col, vec_col)
+    """Brute-force cosine top-``TOP_K`` of (id, embedding) vectors against
+    a query vector; deterministic tie-break by id. The per-row cosine runs
+    through the Arrow numpy kernel (``cosine_scores_numpy`` — bit-identical
+    to the Catalyst fold form, which remains available as
+    ``cosine_sim_expr`` for composition inside larger expressions)."""
+    out = cosine_scores_numpy(embeddings, query_vec, id_col)
     if exclude_self is not None:
         out = out.filter(F.col("vec_id") != exclude_self)
-    return out.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
+    return out.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(TOP_K)
 
 
 def _hyperplane(dim: int, plane_idx: int) -> list[float]:
@@ -192,11 +195,10 @@ def banded_signatures_numpy(
     bands: int,
     rows_per_band: int,
     dim: int = 64,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vec_id, band, sig) — the exploded form of
-    ``banded_hyperplane_signatures`` (tests/kernel_reference.py)
+    """(vec_id, band, sig) of (vec_id, ``vec_col``) vectors — the exploded
+    form of ``banded_hyperplane_signatures`` (tests/kernel_reference.py)
     computed by an Arrow numpy kernel.
 
     The Catalyst form evaluates bands·rows_per_band interpreted fold
@@ -228,7 +230,7 @@ def banded_signatures_numpy(
                     for k in range(dim):
                         acc = acc + V[:, k] * h[k]
                     sigs[:, bidx] |= (acc >= 0).astype(np.int64) << j
-            vid = np.repeat(pdf[id_col].to_numpy(), bands)
+            vid = np.repeat(pdf["vec_id"].to_numpy(), bands)
             yield pd.DataFrame(
                 {
                     "vec_id": vid,
@@ -237,9 +239,8 @@ def banded_signatures_numpy(
                 }
             )
 
-    out_t = dict(embeddings.select(F.col(id_col).alias("vec_id")).dtypes)["vec_id"]
-    return embeddings.select(F.col(id_col).alias(id_col), vec_col).mapInPandas(
-        gen, f"vec_id {out_t}, band int, sig long"
+    return embeddings.select("vec_id", vec_col).mapInPandas(
+        gen, f"vec_id {dict(embeddings.dtypes)['vec_id']}, band int, sig long"
     )
 
 
@@ -371,11 +372,7 @@ def ivf_sample(embeddings: DataFrame, sample_n: int) -> list[list[float]]:
 
 
 def ann_topk_ivf(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_cells: int | None = 16,
-    n_probe: int = 4,
+    embeddings: DataFrame, query_vec: list[float], n_cells: int | None = 16
 ) -> DataFrame:
     """IVF (inverted-file) ANN over (vec_id, embedding) vectors: k-means
     coarse quantizer cells + probe-and-rerank — the data-adaptive
@@ -385,8 +382,9 @@ def ann_topk_ivf(
     hash-ordered sample of 1024 vectors (train_ivf_centroids — fixed
     iterations, fixed order, reproducible on any engine). n_cells=None
     sizes the codebook at ≈√N (one count action). Every vector joins its
-    max-cosine cell in ONE broadcast map pass; a query probes its n_probe nearest cells and
-    reranks exactly inside them, scanning ~n_probe/n_cells of the corpus.
+    max-cosine cell in ONE broadcast map pass; a query probes its
+    ``N_PROBE`` nearest cells and reranks exactly inside them for the top
+    ``TOP_K``, scanning ~N_PROBE/n_cells of the corpus.
     At 100 TB the assignment is map-only and the probe filter prunes
     cell-partitioned files.
 
@@ -401,7 +399,7 @@ def ann_topk_ivf(
 
     q = [float(x) for x in query_vec]
     probe = sorted(range(len(centroids)), key=lambda i: (-_cos_py(q, centroids[i][1]), i))[
-        :n_probe
+        :N_PROBE
     ]
     # exact rerank inside the probed cells via the numpy cosine kernel
     # (bit-identical to the cosine_sim_expr fold form)
@@ -410,41 +408,36 @@ def ann_topk_ivf(
             assigned.filter(F.col("cell").isin(probe)), q, id_col="vec_id", vec_col="v"
         )
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+        .limit(TOP_K)
     )
 
 
-def ann_topk_lsh(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 12,
-) -> DataFrame:
-    """ANN top-k over (vec_id, embedding) vectors: restrict exact rerank
-    to vectors whose hyperplane bucket is within Hamming distance 1 of the
-    query's bucket (n_planes+1 buckets probed), then brute-force cosine
-    inside.
+def ann_topk_lsh(embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
+    """ANN top-``TOP_K`` over (vec_id, embedding) vectors: restrict exact
+    rerank to vectors whose ``N_PLANES``-hyperplane bucket is within
+    Hamming distance 1 of the query's bucket (N_PLANES+1 buckets probed),
+    then brute-force cosine inside.
 
-    Recall < 1 by construction; the candidate count drops ~2^n_planes-fold.
+    Recall < 1 by construction; the candidate count drops ~2^N_PLANES-fold.
     """
     dim = min(64, len(query_vec))
     sigs = embeddings.select(
         "vec_id",
         F.col("embedding").alias("v"),
-        hyperplane_signature(F.col("embedding"), n_planes, dim).alias("bucket"),
+        hyperplane_signature(F.col("embedding"), N_PLANES, dim).alias("bucket"),
     )
     # query bucket computed driver-side with the same deterministic planes
     qsig = 0
-    for i in range(n_planes):
+    for i in range(N_PLANES):
         h = _hyperplane(dim, i)
         d = sum(float(query_vec[j]) * h[j] for j in range(dim))
         if d >= 0:
             qsig |= 1 << i
-    probes = [qsig] + [qsig ^ (1 << i) for i in range(n_planes)]
+    probes = [qsig] + [qsig ^ (1 << i) for i in range(N_PLANES)]
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         sigs.filter(F.col("bucket").isin(probes))
         .select("vec_id", cosine_sim_expr(F.col("v"), q).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+        .limit(TOP_K)
     )

@@ -44,8 +44,8 @@ def fingerprint(col: Column) -> Column:
     return F.md5(norm)
 
 
-def lang_id_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, detected_lang) of each ``text``: stopword-voting language ID —
+def lang_id_table(docs: DataFrame) -> DataFrame:
+    """(doc_id, detected_lang) of each ``text``: stopword-voting language ID —
     the language whose stopwords appear most (≥2 hits required), else
     'und', ties to the smallest language code — as an Arrow
     ``mapInPandas`` pass. The expression form (``lang_id`` in
@@ -57,7 +57,7 @@ def lang_id_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     import pandas as pd
 
-    id_t = dict(docs.dtypes)[id_col]
+    id_t = dict(docs.dtypes)["doc_id"]
     split = _re.compile(r"[^a-z0-9_]+")
     langs = sorted(LANG_STOPWORDS.items())
     sets = [(lang, frozenset(words)) for lang, words in langs]
@@ -78,10 +78,10 @@ def lang_id_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     if s > best:  # first max in sorted order == min code
                         best, best_lang = s, lang
                 out.append(best_lang if best >= 2 else "und")
-            yield pd.DataFrame({id_col: pdf[id_col], "detected_lang": out})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "detected_lang": out})
 
-    return docs.select(id_col, "text").mapInPandas(
-        gen, f"{id_col} {id_t}, detected_lang string"
+    return docs.select("doc_id", "text").mapInPandas(
+        gen, f"doc_id {id_t}, detected_lang string"
     )
 
 
@@ -105,30 +105,29 @@ def quality_features(docs: DataFrame) -> DataFrame:
     )
 
 
-GEO_MULTIPLIERS = {4: 10, 5: 50, 6: 100, 7: 300, 8: 1000}
+# geohash precision 7 (≈ 30 m) and its multiplier in the reference's table
+GEO_PRECISION, GEO_MULTIPLIER = 7, 300
 
 
-def synthetic_coords(df: DataFrame, id_col: str = "id") -> DataFrame:
-    """Deterministic hash-derived (lat, lon) per id — the engine's node
+def synthetic_coords(df: DataFrame) -> DataFrame:
+    """Deterministic hash-derived (lat, lon) per ``id`` — the engine's node
     model carries no coordinates (the transcript input has none), so the
     spatial surface is exercised on reproducible synthetic coordinates:
     lat = (H(id||':lat') mod 1800000)/10000 - 90 ∈ [-90, 90), lon
     similarly over [-180, 180). Integer-derived doubles — exact and
     identical in any engine (DuckDB mirror in oracles.sql_spatial_bbox)."""
-    lat = (portable_hash(F.concat(F.col(id_col), F.lit(":lat"))) % 1_800_000) / F.lit(10000.0) - F.lit(90.0)
-    lon = (portable_hash(F.concat(F.col(id_col), F.lit(":lon"))) % 3_600_000) / F.lit(10000.0) - F.lit(180.0)
+    lat = (portable_hash(F.concat(F.col("id"), F.lit(":lat"))) % 1_800_000) / F.lit(10000.0) - F.lit(90.0)
+    lon = (portable_hash(F.concat(F.col("id"), F.lit(":lon"))) % 3_600_000) / F.lit(10000.0) - F.lit(180.0)
     return df.withColumn("lat", lat).withColumn("lon", lon)
 
 
-def geo_bin(lat: Column, lon: Column, precision: int = 7) -> Column:
+def geo_bin(lat: Column, lon: Column) -> Column:
     """Bin-based geohash key (reference `indexmanager/indexes.go:1015-1044`):
-    'geo_{p}_{latInt}_{lonInt}' with the precision→multiplier table
-    (precision 7 ≈ 30 m). A generated partition column of this form gives
-    free spatial partition pruning."""
-    m = GEO_MULTIPLIERS[precision]
+    'geo_7_{latInt}_{lonInt}' at ``GEO_PRECISION`` 7 (≈ 30 m). A generated
+    partition column of this form gives free spatial partition pruning."""
     return F.concat(
-        F.lit(f"geo_{precision}_"),
-        F.floor((lat + 90.0) * m).cast("long").cast("string"),
+        F.lit(f"geo_{GEO_PRECISION}_"),
+        F.floor((lat + 90.0) * GEO_MULTIPLIER).cast("long").cast("string"),
         F.lit("_"),
-        F.floor((lon + 180.0) * m).cast("long").cast("string"),
+        F.floor((lon + 180.0) * GEO_MULTIPLIER).cast("long").cast("string"),
     )

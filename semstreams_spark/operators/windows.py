@@ -16,15 +16,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the registry's windows: 5-minute tumbling, 10-minute sliding every 5
+WIDTH = "5 minutes"
+SLIDING_WIDTH, SLIDE = "10 minutes", "5 minutes"
 
-def node_degree_tumbling(mention_edges: DataFrame, width: str = "5 minutes") -> DataFrame:
-    """Per tumbling window: out-degree stats per source node.
+
+def node_degree_tumbling(mention_edges: DataFrame) -> DataFrame:
+    """Per ``WIDTH`` tumbling window: out-degree stats per source node.
 
     Input: edge observations (src, dst, ts) — e.g. raw mention triples.
     Output: (window_start, src, out_degree, distinct_dst).
     """
     return (
-        mention_edges.groupBy(F.window("ts", width).alias("w"), "src")
+        mention_edges.groupBy(F.window("ts", WIDTH).alias("w"), "src")
         .agg(
             F.count(F.lit(1)).alias("out_degree"),
             F.count_distinct("dst").alias("distinct_dst"),
@@ -33,12 +37,11 @@ def node_degree_tumbling(mention_edges: DataFrame, width: str = "5 minutes") -> 
     )
 
 
-def node_degree_sliding(
-    mention_edges: DataFrame, width: str = "10 minutes", slide: str = "5 minutes"
-) -> DataFrame:
-    """Sliding-window out-degree (each event lands in width/slide windows)."""
+def node_degree_sliding(mention_edges: DataFrame) -> DataFrame:
+    """Sliding-window out-degree (each event lands in
+    ``SLIDING_WIDTH``/``SLIDE`` windows)."""
     return (
-        mention_edges.groupBy(F.window("ts", width, slide).alias("w"), "src")
+        mention_edges.groupBy(F.window("ts", SLIDING_WIDTH, SLIDE).alias("w"), "src")
         .agg(F.count(F.lit(1)).alias("out_degree"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -49,11 +52,9 @@ def node_degree_sliding(
     )
 
 
-def entity_cooccurrence(
-    mentions: DataFrame, width: str = "5 minutes"
-) -> DataFrame:
+def entity_cooccurrence(mentions: DataFrame) -> DataFrame:
     """Rolling co-occurrence edge weights: pairs of entities mentioned in the
-    same conversation within the same tumbling window.
+    same conversation within the same ``WIDTH`` tumbling window.
 
     Input: (conv_id, entity, ts). Pairs are oriented e1 < e2.
     Scale note: the per-(window, conv) distinct-entity set is tiny (bounded
@@ -63,7 +64,7 @@ def entity_cooccurrence(
     groupBy (see streaming.pipeline).
     """
     per_group = (
-        mentions.select(F.window("ts", width).alias("w"), "conv_id", "entity")
+        mentions.select(F.window("ts", WIDTH).alias("w"), "conv_id", "entity")
         .select(F.col("w.start").alias("window_start"), "conv_id", "entity")
         .groupBy("window_start", "conv_id")
         .agg(F.sort_array(F.collect_set("entity")).alias("ents"))

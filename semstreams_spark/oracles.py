@@ -205,7 +205,7 @@ _TOKS = "list_filter(str_split_regex(lower(text), '[^a-z0-9_]+'), x -> len(x) > 
 
 
 def sql_text_lang_id() -> str:
-    """Stopword-voting lang id — mirrors textops.lang_id exactly
+    """Stopword-voting lang id — mirrors textops.lang_id_table exactly
     (occurrence counts, ≥2 threshold, alphabetical tie-break)."""
     from .operators.textops import LANG_STOPWORDS
 
@@ -1050,8 +1050,8 @@ def sql_spatial_bbox(
     max_lon: float,
 ) -> str:
     """QuerySpatial oracle — mirrors textops.synthetic_coords (hash-derived
-    exact coordinates) + api.query_spatial bbox predicates + geo_bin
-    precision-7 key."""
+    exact coordinates) + the bbox predicates of
+    __spark_entry__.q_spatial_bbox + textops.geo_bin's precision-7 key."""
     h = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
     h_lat = h.format(x="id || ':lat'")
     h_lon = h.format(x="id || ':lon'")
@@ -1068,7 +1068,7 @@ WHERE lat >= {min_lat} AND lat <= {max_lat} AND lon >= {min_lon} AND lon <= {max
 
 
 def sql_query_temporal(sf: float, start: str, end: str) -> str:
-    """Temporal range scan oracle — mirrors api.query_temporal."""
+    """Temporal range scan oracle — mirrors __spark_entry__.q_query_temporal."""
     return f"""WITH {triples_cte(sf)}
 SELECT * FROM triples
 WHERE ts >= TIMESTAMP '{start}' AND ts < TIMESTAMP '{end}'"""
@@ -1163,7 +1163,7 @@ SELECT 'ghost_nearby',
 
 
 def sql_graph_snapshot(sf: float, start: str, end: str, max_entities: int) -> str:
-    """GraphSnapshot oracle — mirrors api.snapshot: type + updated_at
+    """GraphSnapshot oracle — mirrors merge.graph_snapshot: type + updated_at
     bounds, id-ordered MaxEntities truncation, truncated flag."""
     return f"""WITH {triples_cte(sf)},
 nodes AS (

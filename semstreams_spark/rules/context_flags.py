@@ -19,22 +19,24 @@ from pyspark.sql import functions as F
 from ..graph.traversal import bounded_traversal
 from .engine import Rule, evaluate_rules
 
+# hops of the neighborhood a flag looks at
+MAX_DEPTH = 2
+
 
 def context_flags_df(
     edges: DataFrame,
     entity_states: DataFrame,
     start_entity: str,
     rules: list[Rule],
-    max_depth: int = 2,
 ) -> DataFrame:
-    """Evaluate rules over the ≤max_depth neighborhood of start_entity,
+    """Evaluate rules over the ≤MAX_DEPTH neighborhood of start_entity,
     following (src, dst) edges in both directions:
     one (rule_id, flag) row per enabled rule — flag true iff ANY entity
     in the bounded neighborhood matches. The reference replies the same
     flags as a map over NATS; ``{r.rule_id: r.flag for r in collect()}``
     is that point-reply shape."""
     spark = edges.sparkSession
-    hood = bounded_traversal(edges, start_entity, max_depth=max_depth).select(
+    hood = bounded_traversal(edges, start_entity, max_depth=MAX_DEPTH).select(
         F.col("entity").alias("subject")
     )
     local_states = entity_states.join(F.broadcast(hood), "subject", "left_semi")

@@ -25,10 +25,12 @@ from ..operators.textops import tokens
 
 K1 = 1.5
 B = 0.75
+# documents each search returns
+TOP_K = 10
 
 
-def bm25_search(docs: DataFrame, query: str, k: int = 10) -> DataFrame:
-    """Top-k BM25 scores of (doc_id, text) documents for a query string.
+def bm25_search(docs: DataFrame, query: str) -> DataFrame:
+    """Top-``TOP_K`` BM25 scores of (doc_id, text) documents for a query string.
     Deterministic: per-term scores are computed exactly; the per-doc sum
     is over ≤|query| terms (rounded to 6dp for cross-engine hash
     stability).
@@ -75,14 +77,14 @@ def bm25_search(docs: DataFrame, query: str, k: int = 10) -> DataFrame:
         scored.groupBy("doc_id")
         .agg(F.round(F.sum("score_t"), 6).alias("score"), F.count(F.lit(1)).alias("n_terms_hit"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .limit(TOP_K)
     )
 
 
-def hybrid_search(docs: DataFrame, query: str, k: int = 10, lang: str | None = None) -> DataFrame:
+def hybrid_search(docs: DataFrame, query: str, lang: str | None = None) -> DataFrame:
     """Hybrid search: a structured filter first (temporal/spatial/type in
     the reference; lang here), BM25 scoring of the survivors only (G10)."""
     d = docs
     if lang is not None:
         d = d.filter(F.col("lang") == lang)
-    return bm25_search(d, query, k)
+    return bm25_search(d, query)

@@ -30,14 +30,14 @@ already committed.
 
 The ledger's footer-stat max event times double as pruning metadata
 (``batch_dirs_since``): the streaming rule stage bounds its cooldown seed
-reads with them. Those reads are BOUNDED: every ``compact_every`` commits
+reads with them. Those reads are BOUNDED: every ``COMPACT_EVERY`` (16) commits
 the sink writes one immutable segment ``_ledger/_checkpoint.seg.<k>.json``
 with the compact entries (batch_id, rows, max event ts) since the last
 flush, then the pointer ``_ledger/_checkpoint.json`` (the Delta
 ``_last_checkpoint`` shape; a segment without its pointer is rewritten
 whole by the next flush). The live sink keeps the compact index in
 memory, so per-trigger pruning costs O(1) file opens in steady state and
-O(compact_every) after a restart. Full per-partition lineage stays in the
+O(COMPACT_EVERY) after a restart. Full per-partition lineage stays in the
 per-batch ledger JSONs for audit (``ledger()``). Reference anchor: the KV
 bucket is a point-lookup store
 (``processor/graph/datamanager/manager.go:693-743``), never a scan.
@@ -54,12 +54,14 @@ from pyspark.sql import DataFrame
 
 
 class ExactlyOnceParquetSink:
-    def __init__(self, table_dir: str, checkpoint_dir: str | None = None, compact_every: int = 16):
+    # commits per compact ledger segment
+    COMPACT_EVERY = 16
+
+    def __init__(self, table_dir: str, checkpoint_dir: str | None = None):
         self.table_dir = table_dir
         # the streaming query's checkpoint: its metadata names the query
         # that owns this output directory (None: not checked)
         self.checkpoint_dir = checkpoint_dir
-        self.compact_every = max(1, compact_every)
         self.ledger_dir = os.path.join(table_dir, "_ledger")
         self.staging_dir = os.path.join(table_dir, "_staging")
         os.makedirs(self.ledger_dir, exist_ok=True)
@@ -144,8 +146,8 @@ class ExactlyOnceParquetSink:
     def _compact_entries(self) -> dict[int, dict]:
         """The compact ledger index, loaded once per sink object: the
         O(1) checkpoint pointer + its immutable suffix segments (restart
-        cost: one file per compact_every committed batches) + the
-        per-batch suffix (< compact_every files in steady state), then
+        cost: one file per COMPACT_EVERY committed batches) + the
+        per-batch suffix (< COMPACT_EVERY files in steady state), then
         maintained in memory by the committer."""
         if self._centries is not None:
             return self._centries
@@ -181,7 +183,7 @@ class ExactlyOnceParquetSink:
 
     def _record_commit(self, entry: dict) -> None:
         """Maintain the compact index after a commit; checkpoint every
-        compact_every commits. The checkpoint is SEGMENTED: each flush
+        COMPACT_EVERY commits. The checkpoint is SEGMENTED: each flush
         writes ONE immutable ``_checkpoint.seg.<k>.json`` holding only the
         entries committed since the previous flush, then an O(1) pointer
         ``{"upto", "n_segments"}``, so bytes written per commit window are
@@ -190,7 +192,7 @@ class ExactlyOnceParquetSink:
         entries = self._compact_entries()
         entries[entry["batch_id"]] = self._compact_entry(entry)
         self._n_since_ckpt += 1
-        if self._n_since_ckpt >= self.compact_every:
+        if self._n_since_ckpt >= self.COMPACT_EVERY:
             seg = sorted(
                 (e for e in entries.values() if e["batch_id"] > self._ckpt_upto),
                 key=lambda e: e["batch_id"],

@@ -82,16 +82,16 @@ def test_top_terms_and_summaries(spark):
     members = spark.createDataFrame(
         [("e1", "c1"), ("e2", "c1"), ("e3", "c2")], "entity string, community string"
     )
-    terms = top_terms(docs, "text", k=2).collect()
+    terms = top_terms(docs, k=2).collect()
     assert terms[0]["term"] == "alpha" and terms[0]["tf"] == 3  # ties break term-asc
-    summ = {r["community"]: r for r in community_summaries(members, docs, k_terms=2).collect()}
+    summ = {r["community"]: r for r in community_summaries(members, docs).collect()}
     assert summ["c1"]["n_members"] == 2
     assert "alpha" in summ["c1"]["keywords"]
     assert summ["c2"]["summary"].startswith("Community c2: 1 members")
 
 
 def test_multimodal_features_and_pruning(spark, tmp_path):
-    media = synthesize_media(spark, n=24)
+    media = synthesize_media(spark)
     # column pruning: a metadata-only projection over the parquet table
     # must not read the binary column (check the scan's ReadSchema)
     pq_dir = str(tmp_path / "media_pq")
@@ -141,14 +141,15 @@ def test_wav_decode_real_path(spark):
     WAV payloads back; header fields and the int16 sample sum match the
     generator contract exactly."""
     from semstreams_spark.operators.multimodal import (
+        N_MEDIA,
         decode_wav_features,
         synth_wav_bytes,
         synthesize_media,
     )
 
-    media = synthesize_media(spark, n=24)
+    media = synthesize_media(spark)
     out = {r["media_id"]: r for r in decode_wav_features(media).collect()}
-    assert len(out) == 8  # audio rows: i % 3 == 1
+    assert sorted(out) == list(range(1, N_MEDIA, 3))  # audio rows: i % 3 == 1
     for i, r in out.items():
         wav, rate, n_frames = synth_wav_bytes(i)
         assert (r["sample_rate"], r["n_channels"], r["sampwidth"], r["n_frames"]) == (
@@ -169,6 +170,7 @@ def test_png_decode_real_path(spark):
     import numpy as np
 
     from semstreams_spark.operators.multimodal import (
+        N_MEDIA,
         decode_png_features,
         decode_png_pixels,
         encode_png,
@@ -176,12 +178,11 @@ def test_png_decode_real_path(spark):
         synthesize_png_media,
     )
 
-    # codec roundtrip, RGB + RGBA, filtered + unfiltered
+    # codec roundtrip, RGB + RGBA: 11 scanlines use every filter type
     rng = np.random.default_rng(3)
     for ch in (3, 4):
         px = rng.integers(0, 256, size=(11, 7, ch), dtype=np.uint8)
-        for fpr in (True, False):
-            assert np.array_equal(decode_png_pixels(encode_png(px, filter_per_row=fpr)), px)
+        assert np.array_equal(decode_png_pixels(encode_png(px)), px)
 
     # corrupt inputs raise ValueError (quarantine, never garbage)
     good, _, _ = synth_png_bytes(1)
@@ -192,9 +193,9 @@ def test_png_decode_real_path(spark):
             decode_png_pixels(bad)
 
     # Spark path matches the analytic generator contract
-    media = synthesize_png_media(spark, n=12)
+    media = synthesize_png_media(spark)
     out = {r["media_id"]: r for r in decode_png_features(media).collect()}
-    assert len(out) == 12
+    assert len(out) == N_MEDIA
     for i in (0, 5, 11):
         w, h = 8 + (i % 4) * 8, 8 + (i % 3) * 8
         p = np.arange(h * w * 3, dtype=np.int64)
@@ -220,6 +221,7 @@ def test_mp4_metadata_real_path(spark):
         synth_mp4_bytes,
     )
     from semstreams_spark.operators.multimodal import (
+        N_MP4_MEDIA,
         extract_video_metadata,
         synthesize_mp4_media,
     )
@@ -239,14 +241,14 @@ def test_mp4_metadata_real_path(spark):
             parse_mp4_metadata(bad)
 
     # Spark path: good rows parse, an injected corrupt row quarantines
-    media = synthesize_mp4_media(spark, n=6)
+    media = synthesize_mp4_media(spark)
     corrupt = spark.createDataFrame(
         [(99, "video", bytearray(b"ftypgarbage"), None, dt.datetime(2025, 1, 1))],
         media.schema,
     )
     out = {r["media_id"]: r for r in extract_video_metadata(media.union(corrupt)).collect()}
-    assert len(out) == 7
-    for i in range(6):
+    assert len(out) == N_MP4_MEDIA + 1
+    for i in range(N_MP4_MEDIA):
         assert out[i]["duration_ms"] == mp4_duration_ms(i)
         assert out[i]["codecs"] == mp4_codecs(i)
         assert out[i]["handlers"] == ("vide" if i % 2 == 0 else "vide,soun")

@@ -8,13 +8,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from semstreams_spark.graph import bounded_traversal, lpa_communities
+from semstreams_spark.graph.traversal import DECAY
 from semstreams_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
     minhash_dedup,
     simhash_near_dups,
 )
-from semstreams_spark.operators.similarity import ann_topk_lsh, cosine_topk
+from semstreams_spark.operators.similarity import N_PROBE, ann_topk_lsh, cosine_topk
 from kernel_reference import lang_id
 from semstreams_spark.operators.textops import fingerprint, tokens
 from semstreams_spark.search import bm25_search, hybrid_search
@@ -76,10 +77,10 @@ def test_cosine_topk_exact_and_ann(spark):
     rows.append((99, (near / np.linalg.norm(near)).tolist()))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    top = cosine_topk(emb, q, k=3).collect()
-    assert top[0]["vec_id"] == 99 and top[0]["cosine"] > 0.99
+    top = cosine_topk(emb, q).collect()
+    assert len(top) == 10 and top[0]["vec_id"] == 99 and top[0]["cosine"] > 0.99
 
-    ann = ann_topk_lsh(emb, q, k=3, n_planes=8).collect()
+    ann = ann_topk_lsh(emb, q).collect()
     assert ann[0]["vec_id"] == 99  # the near-copy shares the query bucket
 
 
@@ -97,10 +98,10 @@ def test_text_ops(docs):
 
 
 def test_bm25_ranks_matching_doc_first(docs):
-    top = bm25_search(docs, "spark streaming engines", k=3).collect()
+    top = bm25_search(docs, "spark streaming engines").collect()
     assert top[0]["doc_id"] in (2, 4)
     assert top[0]["score"] > 0
-    hybrid = hybrid_search(docs, "spark engines", k=3)
+    hybrid = hybrid_search(docs, "spark engines")
     assert hybrid.count() >= 1
 
 
@@ -117,21 +118,21 @@ def edges(spark):
 
 
 def test_bounded_traversal_depth_and_decay(edges):
-    out = {r["entity"]: r for r in bounded_traversal(edges, "a", max_depth=2, decay=0.5).collect()}
+    out = {r["entity"]: r for r in bounded_traversal(edges, "a", max_depth=2).collect()}
     assert out["a"]["depth"] == 0 and out["a"]["score"] == 1.0
-    assert out["b"]["depth"] == 1 and out["b"]["score"] == 0.5
-    assert out["e"]["depth"] == 2 and out["e"]["score"] == 0.25
+    assert out["b"]["depth"] == 1 and out["b"]["score"] == DECAY
+    assert out["e"]["depth"] == 2 and out["e"]["score"] == DECAY * DECAY
     assert "f" not in out  # depth 3
 
 
 def test_traversal_paths_sequences_and_cycles(edges):
     from semstreams_spark.graph import traversal_paths
 
-    out = traversal_paths(edges, "a", max_depth=2, decay=0.5).collect()
+    out = traversal_paths(edges, "a", max_depth=2).collect()
     paths = {tuple(r["path"]): r for r in out}
     assert paths[("a",)]["depth"] == 0 and paths[("a",)]["score"] == 1.0
-    assert paths[("a", "b")]["score"] == 0.5
-    assert paths[("a", "b", "c")]["depth"] == 2 and paths[("a", "b", "c")]["score"] == 0.25
+    assert paths[("a", "b")]["score"] == DECAY
+    assert paths[("a", "b", "c")]["depth"] == 2 and paths[("a", "b", "c")]["score"] == DECAY * DECAY
     # cycle avoidance: no path revisits a node
     assert all(len(set(p)) == len(p) for p in paths)
     assert ("a", "b", "a") not in paths
@@ -141,7 +142,7 @@ def test_traversal_paths_sequences_and_cycles(edges):
 def test_traversal_paths_max_paths_truncation(edges):
     from semstreams_spark.graph import traversal_paths
 
-    out = traversal_paths(edges, "a", max_depth=2, decay=0.5, max_paths=3).collect()
+    out = traversal_paths(edges, "a", max_depth=2, max_paths=3).collect()
     assert len(out) == 3
     assert all(r["truncated"] for r in out)
     # deterministic selection: score desc then path asc — the depth-0 and
@@ -171,7 +172,7 @@ def test_lpa_hierarchy_merges_levels(spark):
         [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x")],
         "src string, dst string",
     )
-    rows = lpa_hierarchy(e, levels=2, max_iter=8).collect()
+    rows = lpa_hierarchy(e).collect()
     l0 = {r["entity"]: r["community"] for r in rows if r["level"] == 0}
     l1 = {r["entity"]: r["community"] for r in rows if r["level"] == 1}
     assert set(l0) == set(l1) == {"a", "b", "c", "x", "y", "z"}
@@ -189,7 +190,7 @@ def test_lpa_hierarchy_isolated_community_keeps_id(spark):
         [("a", "b"), ("x", "y"), ("x", "z"), ("y", "z"), ("z", "x")],
         "src string, dst string",
     )
-    rows = lpa_hierarchy(e, levels=3, max_iter=8).collect()
+    rows = lpa_hierarchy(e).collect()
     by_level = {}
     for r in rows:
         by_level.setdefault(r["level"], {})[r["entity"]] = r["community"]
@@ -207,7 +208,7 @@ def test_graphrag_local_search_at_levels(spark):
         [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x")],
         "src string, dst string",
     )
-    hier = lpa_hierarchy(e, levels=2, max_iter=8).cache()
+    hier = lpa_hierarchy(e).cache()
     texts = hier.select("entity").distinct().select(
         "entity", F.concat(F.lit("doc about "), "entity").alias("text")
     )
@@ -217,24 +218,6 @@ def test_graphrag_local_search_at_levels(spark):
     hits1 = {r["entity"] for r in local_search(m1, texts, "x", "doc").collect()}
     assert hits0 == {"x", "y", "z"}
     assert hits1 == {"a", "b", "c", "x", "y", "z"}
-
-
-def test_jaccard_hot_shingle_guard(spark):
-    """max_shingle_df drops boilerplate shingles from the candidate join;
-    near-dup pairs sharing rare shingles are still found."""
-    rows = [
-        (1, "common boiler plate alpha beta gamma delta"),
-        (2, "common boiler plate alpha beta gamma epsilon"),
-        (3, "common boiler plate zeta eta theta iota"),
-        (4, "common boiler plate kappa lam mu nu"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in jaccard_pairs(docs, threshold=0.3).collect()}
-    capped = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in
-              jaccard_pairs(docs, threshold=0.3, max_shingle_df=2).collect()}
-    assert (1, 2) in exact and (1, 2) in capped
-    # capped jaccard is a lower bound of the exact value
-    assert capped[(1, 2)] <= exact[(1, 2)]
 
 
 def test_ivf_topk_finds_near_copy(spark):
@@ -253,12 +236,13 @@ def test_ivf_topk_finds_near_copy(spark):
     rows.append((99, (near / np.linalg.norm(near)).tolist()))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    top = ann_topk_ivf(emb, q, k=3, n_cells=8, n_probe=8).collect()
-    # probing ALL cells == exact: the near-copy must lead
+    # N_PROBE cells: probing ALL cells == exact, the near-copy must lead
+    top = ann_topk_ivf(emb, q, n_cells=N_PROBE).collect()
     assert top[0]["vec_id"] == 99 and top[0]["cosine"] > 0.99
-    sub = ann_topk_ivf(emb, q, k=3, n_cells=8, n_probe=2).collect()
-    # probing 2/8 cells scans a subset; results are a subset of the corpus
-    assert len(sub) == 3
+    assert [r["vec_id"] for r in top] == [r["vec_id"] for r in cosine_topk(emb, q).collect()]
+    sub = ann_topk_ivf(emb, q, n_cells=4 * N_PROBE).collect()
+    # probing a quarter of the cells scans a subset of the corpus
+    assert 0 < len(sub) <= len(top)
 
 
 def test_embedder_content_hash_dedup(spark):
@@ -322,7 +306,7 @@ def test_banded_neardup_recovers_all_plants(spark):
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
     corpus = entry.planted_neardup_corpus(e)
     pairs = embedding_near_dups(
-        corpus, threshold=0.95, bands=entry.NEARDUP_BANDS, rows_per_band=entry.NEARDUP_ROWS
+        corpus, bands=entry.NEARDUP_BANDS, rows_per_band=entry.NEARDUP_ROWS
     )
     got = {(r["vec_a"], r["vec_b"]): r["cosine"] for r in pairs.collect()}
     plant_ids = [r["vec_id"] for r in e.filter(F.col("vec_id") % 10 == 0).collect()]
@@ -370,7 +354,7 @@ def test_banded_neardup_no_false_positives_below_threshold(spark):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    out = embedding_near_dups(e, threshold=0.95, bands=4, rows_per_band=4)
+    out = embedding_near_dups(e, bands=4, rows_per_band=4)
     assert out.count() == 0
 
 
@@ -382,11 +366,9 @@ def test_hot_bucket_cap_drops_oversized_buckets(spark):
 
     rows = [(i, [1.0] + [0.1] * 63) for i in range(20)]
     e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    capped = embedding_near_dups(
-        e, threshold=0.95, bands=2, rows_per_band=4, max_bucket_size=10
-    )
+    capped = embedding_near_dups(e, bands=2, rows_per_band=4, max_bucket_size=10)
     assert capped.count() == 0  # every bucket holds all 20 > cap
-    uncapped = embedding_near_dups(e, threshold=0.95, bands=2, rows_per_band=4)
+    uncapped = embedding_near_dups(e, bands=2, rows_per_band=4)
     assert uncapped.count() == 20 * 19 // 2
 
 
@@ -417,8 +399,8 @@ def test_ivf_recall_vs_bruteforce(spark):
 
     e, rows = _clustered_corpus(spark)
     q = list(rows[5][1])  # a member of cluster 0
-    bf = {r["vec_id"] for r in cosine_topk(e, q, k=10).collect()}
-    ivf = {r["vec_id"] for r in ann_topk_ivf(e, q, k=10, n_cells=None, n_probe=4).collect()}
+    bf = {r["vec_id"] for r in cosine_topk(e, q).collect()}
+    ivf = {r["vec_id"] for r in ann_topk_ivf(e, q, n_cells=None).collect()}
     recall = len(bf & ivf) / 10.0
     assert recall >= 0.9, f"IVF recall@10 = {recall}"
 
@@ -562,16 +544,17 @@ def test_shingle_sets_kernel_matches_expr(spark, docs):
 
     real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for df in (docs, real):
-        kern = set(map(tuple, shingle_sets(df, n=3).collect()))
+        kern = set(map(tuple, shingle_sets(df).collect()))
         expr = set(map(tuple, shingle_sets_expr(df, n=3).collect()))
         assert kern == expr
 
 
-def test_pair_count_kernel_fallback_matches_matrix_path():
+def test_pair_count_kernel_fallback_matches_matrix_path(monkeypatch):
     """The V>cap fallback branch of the pair kernel (plain per-row pair
     emission, r6 np.sort on UNSORTED collect_set input) must produce the
     same aggregated pair counts as the V×V matrix branch and as brute
-    force — exercised directly since no sf corpus exceeds the 4096 cap."""
+    force — exercised directly, with the 4096 cap patched to 1, since no
+    sf corpus exceeds it."""
     import itertools
     from collections import Counter
 
@@ -598,7 +581,8 @@ def test_pair_count_kernel_fallback_matches_matrix_path():
         return c
 
     matrix = agg(entry._pair_count_batches(iter([pdf])))
-    fallback = agg(entry._pair_count_batches(iter([pdf]), max_matrix_vocab=1))
+    monkeypatch.setattr(entry, "MAX_MATRIX_VOCAB", 1)
+    fallback = agg(entry._pair_count_batches(iter([pdf])))
     brute = Counter(
         pair
         for ents in convs
@@ -648,7 +632,7 @@ def test_lang_id_table_matches_expr(spark):
     from semstreams_spark.operators.textops import lang_id_table
 
     real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    kern = {r["doc_id"]: r["detected_lang"] for r in lang_id_table(real, id_col="doc_id").collect()}
+    kern = {r["doc_id"]: r["detected_lang"] for r in lang_id_table(real).collect()}
     expr = {
         r["doc_id"]: r["detected_lang"]
         for r in real.select("doc_id", lang_id(F.col("text")).alias("detected_lang")).collect()

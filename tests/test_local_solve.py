@@ -2,7 +2,8 @@
 BIT-IDENTICAL to the distributed join+agg loop (both operators are
 order-free by design — BIGINT fixed-point PageRank, min-label majority
 LPA — so any divergence is a bug, not a tolerance), and the edge count
-that picks the path costs no job of its own."""
+that picks the path costs no job of its own. The distributed path is
+forced by setting ``SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES``."""
 
 from __future__ import annotations
 
@@ -33,29 +34,28 @@ def _random_graph(seed: int, n_nodes: int, n_edges: int) -> list[tuple[str, str]
     return edges
 
 
+def _local_and_distributed(monkeypatch, run):
+    """``run()``'s rows on the local path, then with the threshold at 0."""
+    local = set(map(tuple, run().collect()))
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES", "0")
+    return local, set(map(tuple, run().collect()))
+
+
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_pagerank_local_matches_distributed(spark, seed):
+def test_pagerank_local_matches_distributed(spark, monkeypatch, seed):
     from semstreams_spark.graph import pagerank_exact
 
     e = spark.createDataFrame(_random_graph(seed, 40, 160), "src string, dst string")
-    local = {(r["entity"], r["rank"]) for r in pagerank_exact(e, max_iter=6).collect()}
-    dist = {
-        (r["entity"], r["rank"])
-        for r in pagerank_exact(e, max_iter=6, local_max_edges=0).collect()
-    }
+    local, dist = _local_and_distributed(monkeypatch, lambda: pagerank_exact(e))
     assert local == dist and len(local) > 0
 
 
 @pytest.mark.parametrize("seed", [11, 12, 13])
-def test_lpa_local_matches_distributed(spark, seed):
+def test_lpa_local_matches_distributed(spark, monkeypatch, seed):
     from semstreams_spark.graph import lpa_communities
 
     e = spark.createDataFrame(_random_graph(seed, 30, 90), "src string, dst string")
-    local = {(r["entity"], r["community"]) for r in lpa_communities(e, max_iter=8).collect()}
-    dist = {
-        (r["entity"], r["community"])
-        for r in lpa_communities(e, max_iter=8, local_max_edges=0).collect()
-    }
+    local, dist = _local_and_distributed(monkeypatch, lambda: lpa_communities(e, max_iter=8))
     assert local == dist and len(local) > 0
 
 
@@ -66,7 +66,7 @@ def test_local_solve_runs_in_executor_not_driver(spark):
     from semstreams_spark.graph import pagerank_exact
 
     e = spark.createDataFrame([("a", "b"), ("b", "a"), ("b", "c")], "src string, dst string")
-    pr = pagerank_exact(e, max_iter=4)
+    pr = pagerank_exact(e)
     plan = pr._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan and "Coalesce 1" in plan, plan
     assert plan.index("MapInPandas") < plan.index("Coalesce 1"), plan  # the solve sits above
@@ -76,9 +76,9 @@ def test_local_solve_runs_in_executor_not_driver(spark):
 
 
 @pytest.mark.parametrize("op", ["pagerank", "lpa"])
-def test_dispatch_follows_the_observed_edge_count(spark, op):
+def test_dispatch_follows_the_observed_edge_count(spark, monkeypatch, op):
     """The edge count the materializing job observes picks the path: local
-    at local_max_edges = n, distributed at n - 1, with identical rows."""
+    at a threshold of n edges, distributed at n - 1, with identical rows."""
     from semstreams_spark.graph import lpa_communities, pagerank_exact
 
     rows = _random_graph(21, 25, 70)
@@ -86,9 +86,10 @@ def test_dispatch_follows_the_observed_edge_count(spark, op):
     e = spark.createDataFrame(rows, "src string, dst string")
 
     def run(limit):
+        monkeypatch.setenv("SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES", str(limit))
         if op == "pagerank":
-            return pagerank_exact(e, max_iter=5, local_max_edges=limit)
-        return lpa_communities(e, max_iter=6, local_max_edges=limit)
+            return pagerank_exact(e)
+        return lpa_communities(e, max_iter=6)
 
     local, dist = run(n), run(n - 1)
     assert "MapInPandas" in local._jdf.queryExecution().executedPlan().toString()
@@ -157,7 +158,7 @@ def test_lpa_hierarchy_stores_level0_edges_once(spark, monkeypatch):
         [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x")],
         "src string, dst string",
     )
-    rows = lpa.lpa_hierarchy(e, levels=2, max_iter=8).collect()
+    rows = lpa.lpa_hierarchy(e).collect()
     assert {r["level"] for r in rows} == {0, 1}
     assert len(seen[0]) == 1, seen
 
@@ -181,7 +182,5 @@ def test_dispatch_threshold_env_override(spark, monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES", "7")
     assert local_max_edges() == 7
-    assert local_max_edges(123) == 7  # env wins over the caller default
     monkeypatch.delenv("SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES")
     assert local_max_edges() == 2_000_000
-    assert local_max_edges(0) == 0

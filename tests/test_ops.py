@@ -29,7 +29,7 @@ def test_sessionize_splits_on_gap(spark):
         ("c1", 2, "user", "c", None, T0 + dt.timedelta(minutes=90)),  # > 30min gap
         ("c2", 0, "user", "d", None, T0),
     ]
-    s = sessionize(_tr(spark, rows), gap_minutes=30).collect()
+    s = sessionize(_tr(spark, rows)).collect()
     c1 = sorted([r for r in s if r["conv_id"] == "c1"], key=lambda r: r["session_id"])
     assert len(c1) == 2
     assert c1[0]["n_turns"] == 2 and c1[1]["n_turns"] == 1
@@ -43,7 +43,7 @@ def test_sessionize_out_of_order_input(spark):
         ("c1", 0, "user", "a", None, T0),
         ("c1", 1, "assistant", "b", None, T0 + dt.timedelta(minutes=1)),
     ]
-    s = sessionize(_tr(spark, rows), gap_minutes=30).collect()
+    s = sessionize(_tr(spark, rows)).collect()
     assert sorted(r["n_turns"] for r in s) == [1, 2]
 
 
@@ -86,7 +86,7 @@ def test_degree_tumbling_window_alignment(spark):
         ],
         "src string, dst string, ts timestamp",
     )
-    out = node_degree_tumbling(edges, "5 minutes").collect()
+    out = node_degree_tumbling(edges).collect()
     assert sorted(r["out_degree"] for r in out) == [1, 2]
     assert all(r["window_start"].second == 0 and r["window_start"].minute % 5 == 0 for r in out)
 
@@ -101,7 +101,7 @@ def test_cooccurrence_pairs(spark):
         ],
         "conv_id string, entity string, ts timestamp",
     )
-    out = entity_cooccurrence(m, "5 minutes").collect()
+    out = entity_cooccurrence(m).collect()
     assert len(out) == 1
     assert out[0]["e1"] == "a" and out[0]["e2"] == "b" and out[0]["cooccur_count"] == 1
 
@@ -188,11 +188,8 @@ def test_rule_cooldown_greedy_from_last_fire(spark):
 def test_context_flags(spark):
     from semstreams_spark.rules.context_flags import context_flags_df
 
-    def context_flags(*args, **kw):
-        return {r["rule_id"]: r["flag"] for r in context_flags_df(*args, **kw).collect()}
-
     edges = spark.createDataFrame(
-        [("a", "b", "t"), ("b", "c", "t"), ("x", "y", "t")],
+        [("a", "b", "t"), ("b", "c", "t"), ("c", "d", "t"), ("x", "y", "t")],
         "src string, dst string, edge_type string",
     )
     states = _states(
@@ -200,19 +197,18 @@ def test_context_flags(spark):
         [
             ("b", "m.status", "critical", T0),
             ("c", "m.cpu", "95", T0),
+            ("d", "m.load", "high", T0),  # 3 hops from 'a': past the depth bound
             ("y", "m.status", "critical", T0),  # disconnected from 'a'
         ],
     )
     rules = [
         Rule(id="crit_nearby", conditions=(Condition("m.status", "eq", "critical"),)),
         Rule(id="hot_cpu", conditions=(Condition("m.cpu", "gt", "90"),)),
+        Rule(id="far_load", conditions=(Condition("m.load", "eq", "high"),)),
         Rule(id="never", conditions=(Condition("m.cpu", "gt", "99"),)),
     ]
-    flags = context_flags(edges, states, "a", rules, max_depth=2)
-    assert flags == {"crit_nearby": True, "hot_cpu": True, "never": False}
-    # depth bound: from 'a' with depth 1, only 'b' is reachable
-    flags1 = context_flags(edges, states, "a", rules, max_depth=1)
-    assert flags1 == {"crit_nearby": True, "hot_cpu": False, "never": False}
+    flags = {r["rule_id"]: r["flag"] for r in context_flags_df(edges, states, "a", rules).collect()}
+    assert flags == {"crit_nearby": True, "hot_cpu": True, "far_load": False, "never": False}
 
 
 def test_salted_two_phase_agg(spark):
@@ -223,7 +219,7 @@ def test_salted_two_phase_agg(spark):
     rows += [("cold", 0, "user", "x", None, T0)]
     df = _tr(spark, rows)
     direct = {r["conv_id"]: r["n"] for r in df.groupBy("conv_id").agg(F.count("*").alias("n")).collect()}
-    salted = salt_conv_key(df, n_salts=8)
+    salted = salt_conv_key(df)
     partial = salted.groupBy("conv_salt").agg(F.count("*").alias("n"))
     final = (
         partial.withColumn("conv_id", F.split("conv_salt", "#")[0])

@@ -4,10 +4,14 @@ says why it stays.
 - Every top-level function and class has a caller in non-test code.
 - Every method of a top-level class (dunders aside) is used in non-test
   code outside its own body, a sibling's ``self.x`` included.
-- Every defaulted parameter of a top-level function outside ``oracles.py``
-  is set by some call of that name, by keyword or by position, in
-  non-test code or in ``tests/``. A call that passes ``*args`` or
-  ``**kwargs`` sets every parameter.
+- Every defaulted parameter is set by some call in non-test code, by
+  keyword or by position: of a top-level package function outside
+  ``oracles.py`` or of a top-level function of ``__spark_entry__.py``, by
+  a call of that name; of the ``__init__`` of a top-level package class,
+  by a call of the class name. A call in ``tests/`` sets nothing, and
+  neither does an argument that is a literal equal to the parameter's
+  literal default: an option with one value in use is a constant. A call
+  that passes ``*args`` or ``**kwargs`` sets every parameter.
 
 A name counts as used when it appears as an identifier (a ``Name`` or an
 ``Attribute``). Imports do not count: an import, a package ``__init__.py``
@@ -28,32 +32,41 @@ PACKAGE = "semstreams_spark"
 CALLER_DIRS = (PACKAGE, "jobs", "tools", "perfbench")
 # SQL texts of the correctness gate: their parameters are the oracle's
 ORACLES = os.path.join(PACKAGE, "oracles.py")
+ENTRY = "__spark_entry__.py"
 
 _NORTH_STAR = "north-star streaming surface (BASELINE) that only tests start"
 
 # qualified name of a definition (module.name), a method
 # (module.Class.method) or a parameter (module.function.parameter) -> why
 ALLOWED = {
-    "semstreams_spark.streaming.joins.tool_request_interval_join": _NORTH_STAR,
-    "semstreams_spark.operators.sessions.session_window_streaming": _NORTH_STAR,
-    "semstreams_spark.streaming.pipeline.windowed_degree_stream": _NORTH_STAR,
-    "semstreams_spark.streaming.pipeline.read_transcript_stream_from_table": _NORTH_STAR,
+    f"semstreams_spark.{q}": _NORTH_STAR
+    for q in (
+        "streaming.joins.tool_request_interval_join",
+        "streaming.joins.tool_request_interval_join.watermark",
+        "streaming.joins.tool_request_interval_join.max_lag_seconds",
+        "operators.sessions.session_window_streaming",
+        "operators.sessions.session_window_streaming.gap",
+        "operators.sessions.session_window_streaming.watermark",
+        "streaming.pipeline.windowed_degree_stream",
+        "streaming.pipeline.windowed_degree_stream.width",
+        "streaming.pipeline.windowed_degree_stream.watermark",
+        "streaming.pipeline.read_transcript_stream_from_table",
+        "streaming.pipeline.read_transcript_stream_from_table.max_files_per_trigger",
+    )
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
-def _py_files(top, skip_tests):
+def _py_files(top):
     for d, dirs, files in os.walk(os.path.join(ROOT, top)):
-        dirs[:] = sorted(
-            x for x in dirs if not (skip_tests and x == "tests") and not x.startswith((".", "_"))
-        )
+        dirs[:] = sorted(x for x in dirs if x != "tests" and not x.startswith((".", "_")))
         yield from (os.path.join(d, f) for f in sorted(files) if f.endswith(".py"))
 
 
 def _caller_files():
     for top in CALLER_DIRS:
-        yield from _py_files(top, skip_tests=True)
+        yield from _py_files(top)
     yield from (os.path.join(ROOT, f) for f in sorted(os.listdir(ROOT)) if f.endswith(".py"))
 
 
@@ -76,12 +89,38 @@ def _callee(call: ast.Call) -> str | None:
     return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
 
 
+_NOT_LITERAL = object()
+
+
+def _literal(node):
+    """The value of a literal expression, else ``_NOT_LITERAL``."""
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return _NOT_LITERAL
+
+
+def _defaulted(fn, callee, skip_self=False):
+    """(callee, name, position or None, literal default or ``_NOT_LITERAL``)
+    of each defaulted parameter of ``fn``, positions counted as the caller
+    passes them."""
+    a = fn.args
+    positional = (a.posonlyargs + a.args)[1 if skip_self else 0 :]
+    first = len(positional) - len(a.defaults)
+    for i, p in enumerate(positional):
+        if i >= first:
+            yield callee, p.arg, i, _literal(a.defaults[i - first])
+    for p, d in zip(a.kwonlyargs, a.kw_defaults):
+        if d is not None:
+            yield callee, p.arg, None, _literal(d)
+
+
 def scan():
     """(package definitions {qualified name: (file, name)}, methods
     {qualified name: (file, name, first line, last line)}, defaulted
-    parameters {qualified name: (function, name, position or None)},
-    identifier uses {name: {(file, enclosing top-level definition or None,
-    line)}}, calls {name: [ast.Call]} in non-test code and ``tests/``)."""
+    parameters {qualified name: (callee, name, position or None, literal
+    default)}, identifier uses {name: {(file, enclosing top-level definition
+    or None, line)}}, calls {name: [ast.Call]} in non-test code)."""
     defs, methods, params = {}, {}, {}
     uses: dict[str, set[tuple[str, str | None, int]]] = defaultdict(set)
     calls: dict[str, list[ast.Call]] = defaultdict(list)
@@ -99,31 +138,33 @@ def scan():
                 for m in top.body:
                     if isinstance(m, _DEFS) and not (m.name.startswith("__") and m.name.endswith("__")):
                         methods[f"{module}.{top.name}.{m.name}"] = (rel, m.name, m.lineno, m.end_lineno)
-            if in_package and isinstance(top, _DEFS) and rel != ORACLES:
-                a = top.args
-                positional = a.posonlyargs + a.args
-                defaulted = [(p, i) for i, p in enumerate(positional) if i >= len(positional) - len(a.defaults)]
-                defaulted += [(p, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-                for p, i in defaulted:
-                    params[f"{module}.{top.name}.{p.arg}"] = (top.name, p.arg, i)
+                    if isinstance(m, _DEFS) and m.name == "__init__":
+                        for p in _defaulted(m, top.name, skip_self=True):
+                            params[f"{module}.{top.name}.__init__.{p[1]}"] = p
+            if isinstance(top, _DEFS) and ((in_package and rel != ORACLES) or rel == ENTRY):
+                for p in _defaulted(top, top.name):
+                    params[f"{module}.{top.name}.{p[1]}"] = p
             for name, line in _identifiers(top):
                 uses[name].add((rel, owner, line))
         for n in ast.walk(tree):
             if isinstance(n, ast.Call):
                 calls[_callee(n)].append(n)
-    for path in _py_files("tests", skip_tests=False):
-        for n in ast.walk(_parse(path)[1]):
-            if isinstance(n, ast.Call):
-                calls[_callee(n)].append(n)
     return defs, methods, params, uses, calls
 
 
-def _sets(call: ast.Call, name: str, position: int | None) -> bool:
+def _is_default(node: ast.expr, default) -> bool:
+    """``node`` is a literal equal to the literal ``default``, type included."""
+    v = _literal(node)
+    return default is not _NOT_LITERAL and type(v) is type(default) and v == default
+
+
+def _sets(call: ast.Call, name: str, position: int | None, default) -> bool:
     if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
         return True
-    return any(k.arg == name for k in call.keywords) or (
-        position is not None and len(call.args) > position
-    )
+    args = [k.value for k in call.keywords if k.arg == name]
+    if position is not None and len(call.args) > position:
+        args.append(call.args[position])
+    return not all(_is_default(v, default) for v in args)
 
 
 def _in_use(defs, methods, params, uses, calls) -> set[str]:
@@ -134,7 +175,9 @@ def _in_use(defs, methods, params, uses, calls) -> set[str]:
         for q, (rel, name, first, last) in methods.items()
         if any(not (r == rel and first <= line <= last) for r, _, line in uses[name])
     }
-    out |= {q for q, (fn, name, pos) in params.items() if any(_sets(c, name, pos) for c in calls[fn])}
+    out |= {
+        q for q, (fn, name, pos, default) in params.items() if any(_sets(c, name, pos, default) for c in calls[fn])
+    }
     return out
 
 
@@ -160,8 +203,8 @@ def test_every_defaulted_parameter_is_set():
     defs, methods, params, uses, calls = scan()
     unset = sorted(set(params) - _in_use(defs, methods, params, uses, calls) - set(ALLOWED))
     assert not unset, (
-        "defaulted parameter that no call sets (make its default the only "
-        f"value, or add it to ALLOWED with a reason): {unset}"
+        "defaulted parameter that no non-test call sets to another value "
+        f"(make its default a constant, or add it to ALLOWED with a reason): {unset}"
     )
 
 

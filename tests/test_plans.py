@@ -61,7 +61,7 @@ def test_geo_bin(spark):
     from semstreams_spark.operators.textops import geo_bin
 
     df = spark.createDataFrame([(51.5074, -0.1278), (0.0, 0.0)], "lat double, lon double")
-    out = [r["g"] for r in df.select(geo_bin(F.col("lat"), F.col("lon"), 7).alias("g")).collect()]
+    out = [r["g"] for r in df.select(geo_bin(F.col("lat"), F.col("lon")).alias("g")).collect()]
     assert out[0] == "geo_7_42452_53961"  # floor((51.5074+90)*300), floor((-0.1278+180)*300)
     assert out[1] == "geo_7_27000_54000"
 
@@ -95,15 +95,16 @@ def test_embedder_stays_jvm_side(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
-def test_pagerank_exact_no_cartesian_blowup(spark):
+def test_pagerank_exact_no_cartesian_blowup(spark, monkeypatch):
     """pagerank_exact: the dmass crossJoin is a 1-row broadcast, and the
     per-iteration link join is a hash join — no nested-loop over ranks."""
     from semstreams_spark.graph import pagerank_exact
 
     e = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string")
-    # local_max_edges=0 pins the DISTRIBUTED loop's plan (the adaptive
+    # a threshold of 0 pins the DISTRIBUTED loop's plan (the adaptive
     # dispatch would otherwise take the single-task path on 3 edges)
-    pr = pagerank_exact(e, max_iter=2, local_max_edges=0)
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES", "0")
+    pr = pagerank_exact(e)
     p = _plan(pr)
     assert "CartesianProduct" not in p
     ranks = {r["entity"]: r["rank"] for r in pr.collect()}

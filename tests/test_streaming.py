@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
-from functools import partial
 
 import pandas as pd
 import pyarrow as pa
@@ -202,12 +201,10 @@ def test_crash_point_exactly_once(spark, tmp_path, monkeypatch, pipeline, table,
     commits and "rule_stage" the one between them. Ledger segments flush
     every 2 commits, so batch 1 flushes one."""
     from semstreams_spark.rules.engine import apply_cooldown, evaluate_rules
-    from semstreams_spark.streaming import pipeline as pipeline_mod
     from semstreams_spark.streaming import rules_stage as rules_mod
     from semstreams_spark.streaming.sink import ExactlyOnceParquetSink
 
-    for mod in (pipeline_mod, rules_mod):
-        monkeypatch.setattr(mod, "ExactlyOnceParquetSink", partial(ExactlyOnceParquetSink, compact_every=2))
+    monkeypatch.setattr(ExactlyOnceParquetSink, "COMPACT_EVERY", 2)
     indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     _rule_input(indir)
     rules = _rules()
@@ -646,15 +643,16 @@ def test_streaming_rule_seed_read_is_bounded(spark, tmp_path):
     assert len(stage.seed_batch_dirs(min_ev)) == 1
 
 
-def test_sink_ledger_metadata_reads_are_bounded(spark, tmp_path):
+def test_sink_ledger_metadata_reads_are_bounded(spark, tmp_path, monkeypatch):
     """Round-5 worklist #1: per-trigger ledger METADATA reads must not
     grow with stream age. The compact checkpoint (written every
-    compact_every commits) + per-batch suffix bound file opens to
-    O(compact_every) after a restart and ZERO in steady state — the
+    COMPACT_EVERY commits, 4 here) + per-batch suffix bound file opens to
+    O(COMPACT_EVERY) after a restart and ZERO in steady state — the
     ledger analogue of test_streaming_rule_seed_read_is_bounded."""
     from semstreams_spark.streaming.sink import ExactlyOnceParquetSink
 
-    sink = ExactlyOnceParquetSink(str(tmp_path / "t"), compact_every=4)
+    monkeypatch.setattr(ExactlyOnceParquetSink, "COMPACT_EVERY", 4)
+    sink = ExactlyOnceParquetSink(str(tmp_path / "t"))
     for b in range(30):
         ts = T0 + dt.timedelta(hours=b)
         df = spark.createDataFrame(
@@ -672,9 +670,9 @@ def test_sink_ledger_metadata_reads_are_bounded(spark, tmp_path):
     assert sink.ledger_file_reads == r0
 
     # restart: a fresh sink loads the O(1) pointer + one immutable
-    # segment per compact_every committed batches + the <compact_every
+    # segment per COMPACT_EVERY committed batches + the <COMPACT_EVERY
     # per-batch suffix — never the per-batch ledgers of the whole history
-    sink2 = ExactlyOnceParquetSink(str(tmp_path / "t"), compact_every=4)
+    sink2 = ExactlyOnceParquetSink(str(tmp_path / "t"))
     assert sink2.batch_dirs_since(cutoff) == dirs
     assert sink2.ledger_file_reads <= 1 + (30 // 4) + 4
     assert sorted(sink2._compact_entries()) == list(range(30))
@@ -683,7 +681,7 @@ def test_sink_ledger_metadata_reads_are_bounded(spark, tmp_path):
 
     # r6 (round-5 verdict #2): checkpoint bytes WRITTEN per commit window
     # are independent of stream age — each flush writes one immutable
-    # segment of ≤ compact_every entries plus a constant-size pointer,
+    # segment of ≤ COMPACT_EVERY entries plus a constant-size pointer,
     # never a monolith of every entry ever
     import json as _json
 

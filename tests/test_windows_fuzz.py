@@ -28,23 +28,26 @@ from semstreams_spark.operators.windows import (
     node_degree_tumbling,
 )
 
-T0 = dt.datetime(2025, 1, 1)  # 2025-01-01 00:00:00 is a 300s multiple
+T0 = dt.datetime(2025, 1, 1)  # 2025-01-01 00:00:00 is a 600s multiple
+# the operators' constants: windows.WIDTH, windows.SLIDING_WIDTH,
+# windows.SLIDE and sessions.GAP_MINUTES
 WIDTH_S = 300
-SLIDE_S = 150
-GAP_MIN = 5
+SLIDING_WIDTH_S = 600
+SLIDE_S = 300
+GAP_MIN = 30
 
 # offsets engineered to land on boundaries: exact multiples of the
 # window width / slide, ±1 µs around them, duplicates, and the exact
-# session gap (300 s = 5 min — strictly-greater must NOT split)
+# session gap (1800 s = 30 min — strictly-greater must NOT split)
 _BOUNDARY_US = []
-for mult in (0, 1, 2, 3):
+for mult in (0, 1, 2, 3, 4, 6):
     base = mult * WIDTH_S * 1_000_000
     _BOUNDARY_US += [base, base + 1, max(0, base - 1)]
-_BOUNDARY_US += [SLIDE_S * 1_000_000, GAP_MIN * 60 * 1_000_000, GAP_MIN * 60 * 1_000_000 + 1]
+_BOUNDARY_US += [GAP_MIN * 60 * 1_000_000, GAP_MIN * 60 * 1_000_000 + 1]
 
 offset_us = st.one_of(
     st.sampled_from(_BOUNDARY_US),
-    st.integers(min_value=0, max_value=4 * WIDTH_S * 1_000_000),
+    st.integers(min_value=0, max_value=2 * GAP_MIN * 60 * 1_000_000),
 )
 
 events = st.lists(
@@ -88,7 +91,7 @@ def _duck(pdf, sql):
 def test_tumbling_degree_differential(spark, rows):
     pdf = _pdf(rows)
     edges = spark.createDataFrame(pdf).selectExpr("entity as src", "conv_id as dst", "ts")
-    got = set(map(tuple, node_degree_tumbling(edges, f"{WIDTH_S} seconds").collect()))
+    got = set(map(tuple, node_degree_tumbling(edges).collect()))
     win = _WIN.format(c="ts", w=WIDTH_S)
     want = _duck(
         pdf,
@@ -104,13 +107,8 @@ def test_tumbling_degree_differential(spark, rows):
 def test_sliding_degree_differential(spark, rows):
     pdf = _pdf(rows)
     edges = spark.createDataFrame(pdf).selectExpr("entity as src", "conv_id as dst", "ts")
-    got = set(
-        map(
-            tuple,
-            node_degree_sliding(edges, f"{WIDTH_S} seconds", f"{SLIDE_S} seconds").collect(),
-        )
-    )
-    n_win = WIDTH_S // SLIDE_S
+    got = set(map(tuple, node_degree_sliding(edges).collect()))
+    n_win = SLIDING_WIDTH_S // SLIDE_S
     want = _duck(
         pdf,
         f"""WITH w AS (
@@ -118,7 +116,7 @@ def test_sliding_degree_differential(spark, rows):
                      make_timestamp((CAST(floor(epoch(ts) / {SLIDE_S}) AS BIGINT) - k.k)
                                     * {SLIDE_S} * 1000000) AS window_start
               FROM ev, (SELECT unnest(range(0, {n_win})) AS k) k)
-            SELECT window_start, window_start + INTERVAL {WIDTH_S} SECOND AS window_end,
+            SELECT window_start, window_start + INTERVAL {SLIDING_WIDTH_S} SECOND AS window_end,
                    entity AS src, COUNT(*) AS out_degree
             FROM w GROUP BY 1, 2, 3""",
     )
@@ -130,9 +128,7 @@ def test_sliding_degree_differential(spark, rows):
 def test_cooccurrence_differential(spark, rows):
     pdf = _pdf(rows)
     mentions = spark.createDataFrame(pdf)
-    got = set(
-        map(tuple, entity_cooccurrence(mentions, f"{WIDTH_S} seconds").collect())
-    )
+    got = set(map(tuple, entity_cooccurrence(mentions).collect()))
     win = _WIN.format(c="ts", w=WIDTH_S)
     want = _duck(
         pdf,
@@ -152,12 +148,7 @@ def test_sessionize_differential(spark, rows):
     # turn_idx = arrival order; the ordering contract is (ts, turn_idx)
     pdf = _pdf(rows)
     pdf["turn_idx"] = range(len(pdf))
-    got = set(
-        map(
-            tuple,
-            sessionize(spark.createDataFrame(pdf), gap_minutes=GAP_MIN).collect(),
-        )
-    )
+    got = set(map(tuple, sessionize(spark.createDataFrame(pdf)).collect()))
     gap_s = GAP_MIN * 60
     want = _duck(
         pdf,
@@ -195,12 +186,12 @@ def test_window_boundary_semantics_exact(spark):
     edges = spark.createDataFrame(pdf).selectExpr("entity as src", "conv_id as dst", "ts")
     wins = {
         r["src"]: r["window_start"]
-        for r in node_degree_tumbling(edges, f"{WIDTH_S} seconds").collect()
+        for r in node_degree_tumbling(edges).collect()
     }
     assert wins["ent_0"] == T0 + dt.timedelta(seconds=WIDTH_S)
     assert wins["ent_1"] == T0
     pdf["turn_idx"] = range(len(pdf))
-    sess = sessionize(spark.createDataFrame(pdf), gap_minutes=GAP_MIN)
+    sess = sessionize(spark.createDataFrame(pdf))
     counts = {r["conv_id"]: r["n_turns"] for r in sess.collect() if r["conv_id"] in ("c1", "c2")}
     n_sessions = sess.filter("conv_id = 'c1'").count(), sess.filter("conv_id = 'c2'").count()
     assert n_sessions == (1, 2) and counts["c1"] == 2

@@ -12,7 +12,7 @@ how much does a restart COST once real history exists? Protocol:
    resumed run vs the pre-restart steady state.
 
 Bounded-restart claim under test: the resumed first trigger pays ledger
-checkpoint + suffix reads (≤ 1 + compact_every metadata opens,
+checkpoint + suffix reads (≤ 1 + ``COMPACT_EVERY`` = 16 metadata opens,
 sink.py), RocksDB state reload for the touched partitions, and one
 batch of work — NOT O(stream history) scans.
 

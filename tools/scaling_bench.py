@@ -4,9 +4,10 @@ The sandbox has no real cluster (driver instruction): run the identical
 e2e ingest job on identical input at local[N] and local[4N] (fresh JVM
 each via subprocess), report throughput at both and efficiency
 = (T_N / T_4N) / 4. Results are appended to BENCH output and summarized
-in BASELINE.md §B.
+in BASELINE.md §B. N defaults to a quarter of the host's cores
+($SPARK_GRAFT_CPUS, else the CPU count), so the 4N level fits the host.
 
-Usage: python tools/scaling_bench.py [--sf-dir DIR] [--n 8]
+Usage: python tools/scaling_bench.py [--sf-dir DIR] [--n N]
 """
 
 from __future__ import annotations
@@ -45,14 +46,15 @@ def run_level(cores: int, sf_dir: str, runs: int) -> dict:
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    host_cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     ap.add_argument(
         "--n",
         type=int,
-        default=2,
-        help="small level N cores (big level = 4N). Default 2 vs 8: this "
-        "sandbox is a shared gVisor host with background load; both "
-        "levels must fit in genuinely-free cores for the ratio to "
-        "measure the JOB rather than host contention.",
+        default=max(1, host_cores // 4),
+        help="small level N cores (big level = 4N). Default: a quarter of "
+        "the host's cores ($SPARK_GRAFT_CPUS, else the CPU count), so both "
+        "levels fit the host and the ratio measures the JOB rather than "
+        "core contention.",
     )
     ap.add_argument("--rounds", type=int, default=2, help="interleaved N/4N measurement rounds")
     args = ap.parse_args()
@@ -60,8 +62,6 @@ def main():
     # interleave levels (N,4N,N,4N,...) so host-load drift biases both
     # levels equally; each subprocess = fresh JVM, 1 discarded warmup +
     # 1 timed run
-    import statistics
-
     walls: dict[int, list[float]] = {args.n: [], args.n * 4: []}
     n_turns: dict[int, int] = {}
     sf = None
@@ -78,7 +78,6 @@ def main():
     t_n = min(walls[args.n])
     t_4n = min(walls[args.n * 4])
     eff = (t_n / t_4n) / 4.0
-    _ = statistics
     print(
         json.dumps(
             {
