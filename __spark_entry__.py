@@ -119,7 +119,7 @@ def q_edges_resolved(spark, sf_dir):
     rel = t.select(turn_subject().alias("src"), F.explode(refs).alias("r"), "ts").select(
         "src", F.col("r.dst").alias("dst"), F.col("r.edge_type").alias("edge_type"), "ts"
     )
-    res = resolve_aliases(rel, al, col="dst").select(
+    res = resolve_aliases(rel, al).select(
         "src", F.col("dst_resolved").alias("dst"), "edge_type", "ts"
     )
     return res.groupBy("src", "dst", "edge_type").agg(
@@ -267,19 +267,19 @@ def q_doc_quality(spark, sf_dir):
 def q_jaccard_pairs(spark, sf_dir):
     from semstreams_spark.operators.dedup import jaccard_pairs
 
-    return jaccard_pairs(_tbl(spark, sf_dir, "documents"), threshold=0.5)
+    return jaccard_pairs(_tbl(spark, sf_dir, "documents"))
 
 
 def q_minhash_pairs(spark, sf_dir):
     from semstreams_spark.operators.dedup import minhash_dedup
 
-    return minhash_dedup(_tbl(spark, sf_dir, "documents"), threshold=0.5)
+    return minhash_dedup(_tbl(spark, sf_dir, "documents"))
 
 
 def q_simhash_pairs(spark, sf_dir):
     from semstreams_spark.operators.dedup import simhash_near_dups
 
-    return simhash_near_dups(_tbl(spark, sf_dir, "documents"), max_hamming=14)
+    return simhash_near_dups(_tbl(spark, sf_dir, "documents"))
 
 
 def q_cosine_topk(spark, sf_dir):
@@ -303,7 +303,7 @@ def q_ivf_topk(spark, sf_dir):
     tests/test_dedup_similarity.py::test_ivf_recall_vs_bruteforce."""
     from semstreams_spark.operators.similarity import ann_topk_ivf
 
-    top = ann_topk_ivf(_tbl(spark, sf_dir, "embeddings"), _query_vec(sf_dir), n_cells=None)
+    top = ann_topk_ivf(_tbl(spark, sf_dir, "embeddings"), _query_vec(sf_dir))
     return top.select("vec_id", F.round("cosine", 6).alias("cosine"))
 
 
@@ -316,7 +316,7 @@ def q_bm25_topk(spark, sf_dir):
 def q_hybrid_search(spark, sf_dir):
     from semstreams_spark.search import hybrid_search
 
-    return hybrid_search(_tbl(spark, sf_dir, "documents"), BM25_QUERY, lang="en")
+    return hybrid_search(_tbl(spark, sf_dir, "documents"), BM25_QUERY)
 
 
 # --------------------------------------------------------- graph analytics
@@ -427,7 +427,7 @@ def q_paths_2hop(spark, sf_dir):
     from semstreams_spark.graph import traversal_paths
 
     edges = _entity_edges(spark, sf_dir)
-    p = traversal_paths(edges, "ent_000", max_depth=2, max_paths=500)
+    p = traversal_paths(edges, "ent_000")
     return p.select(F.array_join("path", "->").alias("path"), "depth", "score", "truncated")
 
 
@@ -530,7 +530,7 @@ def _mention_context_texts(spark, sf_dir):
 # banded LSH must recover pairs near the 0.95 threshold, not only trivial
 # ≈0.999 dups (the round-2 single-band gate's weakness).
 PLANT_COS = (0.9501, 0.9601, 0.9801)
-# 8 = lsh_band_params(0.95, target_recall=0.995, rows_per_band=6); r=6
+# 8 = lsh_band_params(0.95, rows_per_band=6) at a recall target of 0.995; r=6
 # keeps the gate corpus well-bucketed (64 buckets/band over ~550 vectors)
 NEARDUP_BANDS, NEARDUP_ROWS = 8, 6
 
@@ -540,7 +540,7 @@ def planted_neardup_corpus(e):
     planted_neardup_corpus_catalyst in tests/kernel_reference.py for the
     full derivation notes):
     replays the EXACT per-element operation sequence of the Catalyst
-    fold tree — sequential left-fold accumulations column-by-column,
+    fold tree — the package's column-order fold (``_fold_dot_np``),
     identical div/mul/add order, float64 throughout, final cast to
     float32 — so the output is BIT-IDENTICAL to the Catalyst form
     (asserted by tests/test_dedup_similarity.py::
@@ -553,6 +553,8 @@ def planted_neardup_corpus(e):
 
     import numpy as _np
     import pandas as _pd
+
+    from semstreams_spark.operators.similarity import _fold_dot_np
 
     cos_by_lvl = _np.array(PLANT_COS, dtype=_np.float64)
     sin_by_lvl = _np.array(
@@ -569,23 +571,12 @@ def planted_neardup_corpus(e):
             lvl = (vid // 10) % 3
             ct = cos_by_lvl[lvl]
             st = sin_by_lvl[lvl]
-            # nv = sqrt(fold acc + x*x) — column-order accumulation
-            acc = _np.zeros(m)
-            for k in range(dim):
-                acc = acc + V[:, k] * V[:, k]
-            nv = _np.sqrt(acc)
+            nv = _np.sqrt(_fold_dot_np(V, V))
             vh = V / nv[:, None]  # b/nv, one divide per element
             rolled = _np.roll(V, -1, axis=1)  # roll(v): u0_i = v[(i+1) % 64]
-            # s = fold of rolled_k * (v_k/nv)
-            acc = _np.zeros(m)
-            for k in range(dim):
-                acc = acc + rolled[:, k] * vh[:, k]
-            s = acc
+            s = _fold_dot_np(rolled, vh)
             w = rolled - s[:, None] * vh  # a - s*(b/nv)
-            acc = _np.zeros(m)
-            for k in range(dim):
-                acc = acc + w[:, k] * w[:, k]
-            nw = _np.sqrt(acc)
+            nw = _np.sqrt(_fold_dot_np(w, w))
             # degenerate guard: Gram-Schmidt residual of e1 against v̂
             vh1 = V[:, 0] / nv
             e1 = _np.zeros((m, dim))
@@ -642,10 +633,10 @@ def q_graphrag_global(spark, sf_dir):
     edges = _entity_edges(spark, sf_dir).filter(
         F.col("src").startswith("ent_") & F.col("dst").startswith("ent_")
     )
-    members = lpa_communities(edges, max_iter=6)
+    members = lpa_communities(edges)
     texts = _mention_context_texts(spark, sf_dir)
     summaries = community_summaries(members, texts)
-    return global_search(members, summaries, texts, GRAPHRAG_QUERY, top_communities=3)
+    return global_search(members, summaries, texts, GRAPHRAG_QUERY)
 
 
 DELETE_TS_LATE = "2025-03-01 00:00:00"   # after every event at any sf → stays deleted
@@ -717,7 +708,7 @@ def q_entity_semantic_topk(spark, sf_dir):
     from semstreams_spark.operators.similarity import cosine_topk
     from semstreams_spark.search.embedder import embed_entities_deduped, embed_text_py
 
-    emb = embed_entities_deduped(_mention_context_texts(spark, sf_dir), dim=384)
+    emb = embed_entities_deduped(_mention_context_texts(spark, sf_dir))
     top = cosine_topk(emb, embed_text_py(ENTITY_QUERY), id_col="entity")
     return top.select(F.col("vec_id").alias("entity"), F.round("cosine", 6).alias("cosine"))
 
@@ -770,7 +761,7 @@ def q_graphrag_local(spark, sf_dir):
     edges = _entity_edges(spark, sf_dir).filter(
         F.col("src").startswith("ent_") & F.col("dst").startswith("ent_")
     )
-    members = lpa_communities(edges, max_iter=6)
+    members = lpa_communities(edges)
     texts = _mention_context_texts(spark, sf_dir)
     return local_search(members, texts, "ent_001", GRAPHRAG_QUERY)
 

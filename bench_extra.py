@@ -109,7 +109,7 @@ def main():
             .localCheckpoint(eager=True)
         )
         n_docs = docs.count()
-        mh = [timed(lambda: _noop(minhash_dedup(docs, threshold=0.5))) for _ in range(args.reps)]
+        mh = [timed(lambda: _noop(minhash_dedup(docs))) for _ in range(args.reps)]
         emb = (
             embed_texts(docs, id_col="doc_id", dim=64)
             .select(F.col("doc_id").alias("vec_id"), F.col("embedding"))

@@ -19,13 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.textops import query_terms
+
 SUMMARY_WEIGHT = 2.0  # graphrag_search.go:23-28
 KEYWORD_WEIGHT = 1.5
 MAX_ENTITIES = 10_000  # reference entity cap
-
-
-def _terms(query: str) -> list[str]:
-    return sorted({t for t in query.lower().split() if t})
+TOP_COMMUNITIES = 3  # communities global search loads (reference default 5)
 
 
 def _match_count(col, terms: list[str]):
@@ -44,7 +43,7 @@ def local_search(
 ) -> DataFrame:
     """Members of `entity`'s community whose text matches the query,
     scored by matched-term count (desc, entity asc)."""
-    terms = _terms(query)
+    terms = query_terms(query)
     community = members.filter(F.col("entity") == entity).select("community")
     cohort = members.join(F.broadcast(community), "community", "left_semi")
     scored = (
@@ -62,14 +61,14 @@ def global_search(
     summaries: DataFrame,  # (community, summary, keywords)
     node_texts: DataFrame,  # (entity, text)
     query: str,
-    top_communities: int = 5,
 ) -> DataFrame:
-    """Score summaries → top-N communities → members → dedup → rerank.
+    """Score summaries → top-``TOP_COMMUNITIES`` communities → members →
+    dedup → rerank.
 
     Returns (entity, community, community_score, entity_score) ordered by
     (entity_score desc, community_score desc, entity asc), capped at
     MAX_ENTITIES."""
-    terms = _terms(query)
+    terms = query_terms(query)
     comm_scored = (
         summaries.withColumn(
             "community_score",
@@ -78,7 +77,7 @@ def global_search(
         )
         .filter(F.col("community_score") > 0)
         .orderBy(F.desc("community_score"), F.asc("community"))
-        .limit(top_communities)
+        .limit(TOP_COMMUNITIES)
     )
     cohort = members.join(
         F.broadcast(comm_scored.select("community", "community_score")), "community"

@@ -29,9 +29,11 @@ from .local_solve import lpa_local, materialize, solve
 # the reference's hierarchy (3 levels) at the registry's per-level iteration count
 LEVELS = 3
 HIERARCHY_MAX_ITER = 8
+# vote rounds of lpa_communities
+MAX_ITER = 6
 
 
-def lpa_communities(edges: DataFrame, max_iter: int = 10) -> DataFrame:
+def lpa_communities(edges: DataFrame) -> DataFrame:
     """(entity, community) — community = min entity id of the cluster's
     converged label. Undirected propagation.
 
@@ -39,9 +41,9 @@ def lpa_communities(edges: DataFrame, max_iter: int = 10) -> DataFrame:
     pagerank_exact): under ``local_solve.local_max_edges()`` (2M, env
     ``SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES``) the vote loop runs vectorized
     in ONE executor task — bit-identical (min-label votes are
-    order-free; parity-tested) without max_iter join+agg rounds of
+    order-free; parity-tested) without ``MAX_ITER`` join+agg rounds of
     fixed cost. Larger graphs take the distributed loop."""
-    return _lpa(*materialize(edges.select("src", "dst")), max_iter)
+    return _lpa(*materialize(edges.select("src", "dst")), MAX_ITER)
 
 
 def _lpa(e: DataFrame, n_edges: int, max_iter: int) -> DataFrame:

@@ -28,10 +28,12 @@ from .local_solve import materialize
 
 # relevance kept per hop (the reference's DecayFactor)
 DECAY = 0.85
+# hops both traversals take, and the paths traversal_paths keeps (MaxPaths)
+MAX_DEPTH, MAX_PATHS = 2, 500
 
 
-def bounded_traversal(edges: DataFrame, start: str, max_depth: int = 3) -> DataFrame:
-    """BFS from `start` to max_depth. Returns (entity, depth, score):
+def bounded_traversal(edges: DataFrame, start: str) -> DataFrame:
+    """BFS from `start` to ``MAX_DEPTH`` hops. Returns (entity, depth, score):
     depth = first-reach hop count, score = DECAY^depth (relevance,
     ``client.go`` DecayFactor semantics), deterministic.
 
@@ -46,7 +48,7 @@ def bounded_traversal(edges: DataFrame, start: str, max_depth: int = 3) -> DataF
     )
     frontier = visited
     with iteration_shuffle_width(spark, n_edges):
-        for d in range(1, max_depth + 1):
+        for d in range(1, MAX_DEPTH + 1):
             nxt, n_new = materialize(
                 frontier.join(e, frontier["entity"] == e["src"])
                 .select(
@@ -69,22 +71,17 @@ def _undirected(edges: DataFrame) -> DataFrame:
     return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
 
-def traversal_paths(
-    edges: DataFrame,
-    start: str,
-    max_depth: int = 3,
-    max_paths: int | None = None,
-) -> DataFrame:
+def traversal_paths(edges: DataFrame, start: str) -> DataFrame:
     """PathRAG path enumeration (``graph/query/client.go:456-726``,
     PathResult at ``:520``): all simple paths from `start` up to
-    max_depth over the undirected (src, dst) edges, each as an explicit
-    node sequence with a DECAY^depth score, under a MaxPaths budget with a
-    `truncated` flag.
+    ``MAX_DEPTH`` hops over the undirected (src, dst) edges, each as an
+    explicit node sequence with a DECAY^depth score, under a
+    ``MAX_PATHS`` budget with a `truncated` flag.
 
     Returns (path array<string>, depth int, score double,
-    truncated boolean) — truncated is true on every row when max_paths
+    truncated boolean) — truncated is true on every row when MAX_PATHS
     cut the paths short (reference sets PathResult.Truncated). Over
-    max_paths paths, the top max_paths by (score desc, path asc) are
+    MAX_PATHS paths, the top MAX_PATHS by (score desc, path asc) are
     kept — deterministic, mirrors the reference's MaxPaths cap applied
     to collected paths.
 
@@ -98,7 +95,7 @@ def traversal_paths(
     out = frontier
     n_total = 1  # the hops' counts sum to the path count
     with iteration_shuffle_width(spark, n_edges):
-        for d in range(1, max_depth + 1):
+        for d in range(1, MAX_DEPTH + 1):
             last = F.element_at(F.col("path"), -1)
             nxt, n_frontier = materialize(
                 frontier.join(e, last == e["src"])
@@ -115,7 +112,7 @@ def traversal_paths(
             out = out.unionByName(nxt)
             frontier = nxt
 
-    truncated = max_paths is not None and n_total > max_paths
+    truncated = n_total > MAX_PATHS
     if truncated:
-        out = out.orderBy(F.desc("score"), F.asc("path")).limit(max_paths)
+        out = out.orderBy(F.desc("score"), F.asc("path")).limit(MAX_PATHS)
     return out.withColumn("truncated", F.lit(truncated))

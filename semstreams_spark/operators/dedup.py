@@ -1,7 +1,10 @@
 """Deduplication operators for training-data pipelines.
 
-Four families, from exact to fuzzy, each expressed as DataFrame
-compositions (no Python in the hot path):
+Five families, from exact to fuzzy, each a DataFrame composition whose
+per-document work (shingling, fingerprints, signatures, cosines) runs in
+Arrow ``mapInPandas`` kernels on the package's shared tokenizer, token
+hash and fold (``textops.word_tokens``/``token_hash``,
+``similarity._fold_dot_np``):
 
 - exact: content-hash groupBy (reference content hash,
   ``message/base_message.go:151-171``)
@@ -12,8 +15,10 @@ compositions (no Python in the hot path):
   all-pairs) → verified with exact Jaccard. THE scale path for 100 TB:
   shuffle is (doc → k minhashes → b band rows), join fan-out bounded by
   bucket sizes.
-- SimHash: 64-bit sign-aggregated term hash; near-dups = fingerprints
-  equal in ≥3 of 4 16-bit chunks (Hamming ≤ small) via chunk bucket join.
+- SimHash: 60-bit sign-aggregated term hash; near-dups = fingerprints
+  within Hamming distance ``MAX_HAMMING``, found by splitting each into
+  ``MAX_HAMMING + 1`` chunks and joining on equal chunks (pigeonhole).
+- embedding near-dups: banded random-hyperplane LSH + exact cosine.
 
 All hashes are the engine-portable md5-based hash where an oracle is
 wanted; xxhash64 variants are noted for production speed.
@@ -24,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textops import portable_hash
+from .textops import portable_hash, token_hash, word_tokens
 
 # Mersenne prime modulus for the permutation family: 2^31-1 keeps
 # a*h+b < 2^62 (no int64 overflow under ANSI mode)
@@ -33,9 +38,12 @@ _P = 2147483647
 _K, _BANDS = 32, 8
 # words per shingle
 _N = 3
-# embedding near-dups: cosine threshold, recall target of the derived
-# band count, and the leading components each hyperplane reads
-NEARDUP_THRESHOLD, NEARDUP_RECALL, NEARDUP_DIM = 0.95, 0.95, 64
+# Jaccard similarity a shingle-set pair needs
+JACCARD_MIN = 0.5
+# simhash Hamming budget of a near-dup pair
+MAX_HAMMING = 14
+# cosine an embedding near-dup pair needs
+NEARDUP_THRESHOLD = 0.95
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -70,7 +78,7 @@ def shingle_sets(docs: DataFrame) -> DataFrame:
                 continue
             ids, outs = [], []
             for _id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = [t for t in _TOKEN_SPLIT.split((text or "").lower()) if t]
+                toks = word_tokens(text)
                 if len(toks) < _N:
                     sh = {" ".join(toks)}
                 else:
@@ -82,13 +90,8 @@ def shingle_sets(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(gen, f"doc_id {id_t}, shingle string")
 
 
-import re as _re  # noqa: E402
-
-_TOKEN_SPLIT = _re.compile(r"[^a-z0-9_]+")
-
-
-def jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
-    """Exact 3-gram Jaccard similarity pairs ≥ threshold (a < b).
+def jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Exact 3-gram Jaccard similarity pairs ≥ ``JACCARD_MIN`` (a < b).
 
     Self-join on shingle: cost ∝ Σ df(shingle)² — fine when shingles are
     discriminative.
@@ -113,7 +116,7 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
             F.col("n_common").cast("double")
             / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_MIN)
         .select("doc_a", "doc_b", "n_common", "size_a", "size_b", "jaccard")
     )
 
@@ -136,20 +139,20 @@ def minhash_signatures(shingles: DataFrame) -> DataFrame:
     return sig.select("doc_id", F.array(*[f"m{i}" for i in range(_K)]).alias("sig"))
 
 
-def minhash_lsh_candidates(
-    signatures: DataFrame, bands: int = 8, rows_per_band: int = 4
-) -> DataFrame:
-    """Banded LSH: docs sharing any band signature become candidate pairs.
+def minhash_lsh_candidates(signatures: DataFrame) -> DataFrame:
+    """Banded LSH: docs sharing any band signature become candidate pairs,
+    the ``_K`` minhashes cut into ``_BANDS`` bands of ``_K // _BANDS``.
 
     Shuffle key = (band_idx, band values): bounded fan-out, no all-pairs.
     The band key is the raw minhash slice (array equality) rather than a
     re-hash — engine-portable, so the whole LSH pipeline has an exact
     DuckDB oracle."""
+    rows_per_band = _K // _BANDS
     banded = signatures.select(
         "doc_id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(_BANDS - 1)),
                 lambda b: F.struct(
                     b.alias("band"),
                     F.slice("sig", b * rows_per_band + 1, rows_per_band).alias("bh"),
@@ -172,13 +175,13 @@ def minhash_lsh_candidates(
     )
 
 
-def minhash_dedup(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
+def minhash_dedup(docs: DataFrame) -> DataFrame:
     """MinHash-LSH candidates (3-gram shingles, _K hashes in _BANDS bands)
-    verified with exact Jaccard ≥ threshold."""
+    verified with exact Jaccard ≥ ``JACCARD_MIN``."""
     # one shingle set shared by the signature pass AND the exact verify
     # (sizes + both intersect sides) — five consumers, one computation
     s = shingle_sets(docs).localCheckpoint(eager=False)
-    cand = minhash_lsh_candidates(minhash_signatures(s), _BANDS, _K // _BANDS)
+    cand = minhash_lsh_candidates(minhash_signatures(s))
     sizes = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     sa = s.select(F.col("doc_id").alias("doc_a"), F.col("shingle"))
     sb = s.select(F.col("doc_id").alias("doc_b"), F.col("shingle"))
@@ -198,13 +201,13 @@ def minhash_dedup(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
             F.col("n_common").cast("double")
             / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_MIN)
         .select("doc_a", "doc_b", "jaccard")
     )
 
 
 def simhash(docs: DataFrame) -> DataFrame:
-    """64-bit SimHash per (doc_id, text) document: per-bit +1/-1 weighted
+    """SimHash per (doc_id, text) document: per-bit +1/-1 weighted
     votes over distinct-token hashes, sign-aggregated into a 60-bit
     fingerprint.
 
@@ -217,8 +220,6 @@ def simhash(docs: DataFrame) -> DataFrame:
     md5-hex-prefix portable hash, and computes the vote signs with an
     integer bit-matrix — integer sums are order-free, so the fingerprint
     is bit-identical (test_simhash_kernel_matches_expr)."""
-    import hashlib
-
     import numpy as np
     import pandas as pd
 
@@ -232,20 +233,13 @@ def simhash(docs: DataFrame) -> DataFrame:
                 continue
             ids, fps = [], []
             for _id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = [t for t in _TOKEN_SPLIT.split((text or "").lower()) if t]
+                toks = word_tokens(text)
                 if not toks:
                     # the explode drops token-less docs in the expression
                     # form — replicate presence semantics
                     continue
                 cnt = Counter(toks)
-                h = np.fromiter(
-                    (
-                        int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
-                        for t in cnt.keys()
-                    ),
-                    dtype=np.int64,
-                    count=len(cnt),
-                )
+                h = np.fromiter(map(token_hash, cnt.keys()), dtype=np.int64, count=len(cnt))
                 w = np.fromiter(cnt.values(), dtype=np.int64, count=len(cnt))
                 bits = (h[:, None] >> np.arange(60)) & 1  # (k, 60)
                 votes = ((2 * bits - 1) * w[:, None]).sum(axis=0)
@@ -257,18 +251,17 @@ def simhash(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(gen, f"doc_id {id_t}, simhash long")
 
 
-def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs with simhash Hamming distance ≤ max_hamming.
+def simhash_near_dups(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs with simhash Hamming distance ≤ ``MAX_HAMMING``.
 
     Pigeonhole recall guarantee: the 60-bit fingerprint splits into
-    (max_hamming+1) chunks, so any pair within the Hamming budget shares
+    (MAX_HAMMING+1) chunks, so any pair within the Hamming budget shares
     at least one untouched chunk — candidates = pairs sharing ANY chunk
     value (bucket join, never all-pairs), then exact popcount verify via
-    bit_count ≤ max_hamming. Default 3 is the classic web-dedup setting;
-    raise it for short/noisy docs (chunks shrink accordingly)."""
-    n_chunks = max_hamming + 1
-    if n_chunks > 20:
-        raise ValueError("max_hamming too large for 60-bit fingerprints (max 19)")
+    bit_count ≤ MAX_HAMMING. 14 is wide for web dedup (3 is the classic
+    setting) because the corpus's documents are short: one changed token
+    costs ~11 of the 60 bits."""
+    n_chunks = MAX_HAMMING + 1
     chunk_bits = 60 // n_chunks
     sh = simhash(docs)
     chunks = sh.select(
@@ -304,7 +297,7 @@ def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
             F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
     )
     return cand
 
@@ -328,8 +321,8 @@ def embedding_near_dups(
     decouples the two: r (rows_per_band) sizes buckets (2^r per band;
     pick r ≈ log2(N / target bucket size) at scale), and b is DERIVED
     from the recall target via lsh_band_params — recall 1 − (1 − p^r)^b
-    ≥ ``NEARDUP_RECALL`` for pairs at-threshold, ~0.97 at the (8, 10) default
-    for threshold 0.95. Candidates are deduped before the exact verify,
+    ≥ ``similarity.TARGET_RECALL`` for pairs at-threshold, ~0.97 at the
+    (8, 10) default for threshold 0.95. Candidates are deduped before the exact verify,
     so multi-band collisions cost one cosine each.
 
     ``max_bucket_size`` is the hot-bucket guard for adversarial corpora
@@ -345,7 +338,7 @@ def embedding_near_dups(
     from .similarity import banded_signatures_numpy, lsh_band_params
 
     if bands is None:
-        bands = lsh_band_params(NEARDUP_THRESHOLD, NEARDUP_RECALL, rows_per_band)
+        bands = lsh_band_params(NEARDUP_THRESHOLD, rows_per_band)
     e = embeddings.select("vec_id", F.col("embedding").alias("v"))
     # r6: signatures + exact verify through the Arrow numpy kernels — the
     # Catalyst HOF folds are interpreted (outside codegen) and were the
@@ -353,7 +346,7 @@ def embedding_near_dups(
     # bit-identical to the expression forms (parity tests in
     # tests/test_dedup_similarity.py), so candidates, survivors and the
     # DuckDB gate are unchanged.
-    sig = banded_signatures_numpy(e, bands, rows_per_band, NEARDUP_DIM, vec_col="v")
+    sig = banded_signatures_numpy(e, bands, rows_per_band)
     if max_bucket_size is not None:
         ok = (
             sig.groupBy("band", "sig")
@@ -385,33 +378,19 @@ def embedding_near_dups(
 
 def _pair_cosines_numpy(joined: DataFrame) -> DataFrame:
     """(vec_a, vec_b, cosine) from a frame carrying (vec_a, vec_b, v_a,
-    v_b) — Arrow numpy kernel, bit-identical to
-    ``cosine_sim_expr(v_a, v_b)`` (column-order float64 folds; parity
-    test test_pair_cosines_numpy_parity)."""
-    import numpy as np
+    v_b) — Arrow numpy kernel, bit-identical to the Catalyst
+    ``cosine_sim_expr(v_a, v_b)`` (parity test
+    test_pair_cosines_numpy_parity)."""
     import pandas as pd
+
+    from .similarity import _stack_f64, cosine_np
 
     def gen(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            A = np.stack(pdf["v_a"].to_numpy()).astype(np.float64)
-            B = np.stack(pdf["v_b"].to_numpy()).astype(np.float64)
-            m, d = A.shape
-            dot = np.zeros(m)
-            na = np.zeros(m)
-            nb = np.zeros(m)
-            for k in range(d):
-                dot = dot + A[:, k] * B[:, k]
-                na = na + A[:, k] * A[:, k]
-                nb = nb + B[:, k] * B[:, k]
-            yield pd.DataFrame(
-                {
-                    "vec_a": pdf["vec_a"],
-                    "vec_b": pdf["vec_b"],
-                    "cosine": dot / (np.sqrt(na) * np.sqrt(nb)),
-                }
-            )
+            cos = cosine_np(_stack_f64(pdf["v_a"]), _stack_f64(pdf["v_b"]))
+            yield pd.DataFrame({"vec_a": pdf["vec_a"], "vec_b": pdf["vec_b"], "cosine": cos})
 
     t = dict(joined.dtypes)
     return joined.select("vec_a", "vec_b", "v_a", "v_b").mapInPandas(

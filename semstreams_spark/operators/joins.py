@@ -19,15 +19,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def resolve_aliases(df: DataFrame, aliases: DataFrame, col: str = "entity") -> DataFrame:
-    """Map df[col] through the alias dim (alias -> canonical); unresolved pass through.
+def resolve_aliases(df: DataFrame, aliases: DataFrame) -> DataFrame:
+    """Map df's ``dst`` through the alias dim (alias -> canonical) into
+    ``dst_resolved``; unresolved pass through.
 
     aliases: (alias string, canonical string). Broadcast — the dim is tiny.
     """
     dim = aliases.select(F.col("alias"), F.col("canonical"))
     return (
-        df.join(F.broadcast(dim), df[col] == dim["alias"], "left")
-        .withColumn(col + "_resolved", F.coalesce(F.col("canonical"), df[col]))
+        df.join(F.broadcast(dim), df["dst"] == dim["alias"], "left")
+        .withColumn("dst_resolved", F.coalesce(F.col("canonical"), df["dst"]))
         .drop("alias", "canonical")
     )
 

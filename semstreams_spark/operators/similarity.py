@@ -4,58 +4,70 @@ Reference: brute-force cosine semantic search
 (``indexmanager/semantic.go:240-377``), vector math
 (``pkg/embedding/vector.go:16-100``).
 
-Two paths:
-- brute-force top-k: F.aggregate/zip_with dot products — pure Catalyst,
-  correct baseline; O(N·d) per query, fine when the query set is small
-  or the corpus is pre-filtered (hybrid search).
-- LSH (random hyperplane) bucketed ANN: deterministic hash-derived
-  hyperplanes (no stored model), bucket equi-join, exact rerank inside
-  buckets — the 100 TB path; probes = Hamming-adjacent buckets.
+Every kernel here is an Arrow ``mapInPandas`` pass built on one
+column-order float64 fold (``_fold_dot_np``), with the cosine
+(``cosine_np``) and the hyperplane sign bits (``sign_bits``) on top of
+it, so Spark, numpy and the DuckDB oracles agree bit for bit. The
+Catalyst fold forms they replace are test references
+(tests/kernel_reference.py).
+
+- brute-force top-k: one cosine per vector; O(N·d) per query, fine when
+  the query set is small or the corpus is pre-filtered (hybrid search).
+- LSH (random hyperplane) ANN: deterministic hash-derived hyperplanes (no
+  stored model), a probe filter on the sign-bit bucket, exact rerank
+  inside the probed buckets; probes = Hamming-adjacent buckets.
+- IVF ANN: k-means cells, probe the nearest cells, exact rerank.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # rows each top-k search returns
 TOP_K = 10
 # IVF cells probed per query, and hyperplanes of the LSH bucket
 N_PROBE, N_PLANES = 4, 12
-
-
-def dot_expr(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-
-
-def cosine_sim_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+# leading vector components each hyperplane reads
+SIG_DIM = 64
+# recall that lsh_band_params sizes the band count for
+TARGET_RECALL = 0.95
 
 
 def _fold_dot_np(V, W):
-    """Column-order sequential-fold dot products of two (m, d) float64
-    matrices — bit-identical to Catalyst's ``aggregate(zip_with(a, b, *),
-    0.0, acc + x)`` because every element's accumulator passes through the
-    same float64 additions in the same order (the proven replay technique
-    of ``planted_neardup_corpus``)."""
+    """Column-order sequential-fold dot products over the last axis of two
+    float64 arrays that broadcast against each other, so ``(m, d)·(m, d)``
+    gives ``(m,)`` and ``(m, 1, d)·(1, c, d)`` gives ``(m, c)`` —
+    bit-identical to Catalyst's ``aggregate(zip_with(a, b, *), 0.0, acc +
+    x)`` and to the DuckDB oracles' ``list_reduce``, because every
+    element's accumulator passes through the same float64 additions in the
+    same order. The one fold of the package's kernels."""
+    acc = 0.0
+    for k in range(V.shape[-1]):
+        acc = acc + V[..., k] * W[..., k]
+    return acc
+
+
+def cosine_np(A, B):
+    """Cosines over the last axis of two broadcasting float64 arrays:
+    ``dot / (|A| · |B|)``, each term a column-order fold."""
     import numpy as np
 
-    acc = np.zeros(V.shape[0])
-    for k in range(V.shape[1]):
-        acc = acc + V[:, k] * W[:, k]
-    return acc
+    return _fold_dot_np(A, B) / (np.sqrt(_fold_dot_np(A, A)) * np.sqrt(_fold_dot_np(B, B)))
+
+
+def sign_bits(V, planes):
+    """Hyperplane sign-bit signatures: bit j is ``v·plane_j >= 0``
+    (column-order fold) over the last two axes of the plane stack ``(...,
+    p, d)``. Vectors ``(m, d)`` against ``(p, d)`` give one signature per
+    vector; ``(m, 1, d)`` against ``(bands, r, d)`` one per vector and
+    band."""
+    import numpy as np
+
+    dots = _fold_dot_np(V[..., None, :], planes)
+    return ((dots >= 0).astype(np.int64) << np.arange(planes.shape[-2])).sum(axis=-1)
 
 
 def _stack_f64(col):
@@ -73,9 +85,9 @@ def cosine_scores_numpy(
     """(vec_id, cosine) against one query vector — Arrow-batched numpy
     kernel (guide §4.2: HOF fold expressions are interpreted, not
     codegen'd; one numpy pass per batch replaces ~3·d interpreted lambda
-    evaluations per row). Values are BIT-IDENTICAL to
-    ``cosine_sim_expr`` (column-order folds, float64 throughout) —
-    asserted by tests/test_dedup_similarity.py::test_cosine_numpy_matches_catalyst."""
+    evaluations per row). Values are BIT-IDENTICAL to the Catalyst
+    ``cosine_sim_expr`` (tests/kernel_reference.py) — asserted by
+    tests/test_dedup_similarity.py::test_cosine_numpy_matches_catalyst."""
     import numpy as np
     import pandas as pd
 
@@ -83,15 +95,11 @@ def cosine_scores_numpy(
 
     def gen(it):
         Q = np.asarray(q, dtype=np.float64)
-        nq = math.sqrt(float(_fold_dot_np(Q[None, :], Q[None, :])[0]))
         for pdf in it:
             if not len(pdf):
                 continue
-            V = _stack_f64(pdf[vec_col])
-            d = min(V.shape[1], len(Q))
-            dot = _fold_dot_np(V[:, :d], np.broadcast_to(Q[:d], (len(pdf), d)))
-            nv = np.sqrt(_fold_dot_np(V, V))
-            yield pd.DataFrame({"vec_id": pdf[id_col], "cosine": dot / (nv * nq)})
+            cos = cosine_np(_stack_f64(pdf[vec_col]), Q)
+            yield pd.DataFrame({"vec_id": pdf[id_col], "cosine": cos})
 
     out_t = dict(embeddings.select(F.col(id_col).alias("vec_id")).dtypes)["vec_id"]
     return embeddings.select(F.col(id_col).alias(id_col), vec_col).mapInPandas(
@@ -107,9 +115,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force cosine top-``TOP_K`` of (id, embedding) vectors against
     a query vector; deterministic tie-break by id. The per-row cosine runs
-    through the Arrow numpy kernel (``cosine_scores_numpy`` — bit-identical
-    to the Catalyst fold form, which remains available as
-    ``cosine_sim_expr`` for composition inside larger expressions)."""
+    through the Arrow numpy kernel ``cosine_scores_numpy``."""
     out = cosine_scores_numpy(embeddings, query_vec, id_col)
     if exclude_self is not None:
         out = out.filter(F.col("vec_id") != exclude_self)
@@ -140,38 +146,17 @@ def _hyperplane(dim: int, plane_idx: int) -> list[float]:
     return [v / n for v in vals]
 
 
-def _plane_dot(vec: Column, plane_idx: int, dim: int) -> Column:
-    """Sequential-fold dot product of the vector's leading `dim`
-    components with deterministic hyperplane `plane_idx` (fp-identical to
-    the DuckDB mirror in oracles._bucket_sql)."""
-    h = _hyperplane(dim, plane_idx)
-    return F.aggregate(
-        F.zip_with(
-            F.slice(vec, 1, dim),
-            F.array(*[F.lit(v) for v in h]),
-            lambda x, y: x.cast("double") * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _planes(n_planes: int, dim: int):
+    """The first ``n_planes`` hyperplanes of ``dim`` components, (n, dim)."""
+    import numpy as np
+
+    return np.asarray([_hyperplane(dim, i) for i in range(n_planes)], dtype=np.float64)
 
 
-def hyperplane_signature(vec: Column, n_planes: int = 16, dim: int = 64) -> Column:
-    """Bit signature of sign(v·h_i) over n deterministic hyperplanes.
-
-    dim = number of leading vector components used (truncation keeps the
-    literal plan small; cosine-preserving enough for bucketing, exact
-    rerank fixes the rest)."""
-    sig = F.lit(0).cast("long")
-    for i in range(n_planes):
-        d = _plane_dot(vec, i, dim)
-        sig = sig.bitwiseOR(F.shiftleft(F.when(d >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long"), i))
-    return sig
-
-
-def lsh_band_params(threshold: float, target_recall: float = 0.95, rows_per_band: int = 10) -> int:
+def lsh_band_params(threshold: float, rows_per_band: int = 10) -> int:
     """Minimal band count b such that OR-of-ANDs banded hyperplane LSH
-    recalls a pair at cosine == threshold with probability ≥ target_recall.
+    recalls a pair at cosine == threshold with probability ≥
+    ``TARGET_RECALL``.
 
     Per-plane collision for a pair at angle θ is p = 1 − θ/π (random
     hyperplane LSH); a band of r planes collides with p^r; b independent
@@ -183,63 +168,44 @@ def lsh_band_params(threshold: float, target_recall: float = 0.95, rows_per_band
     if pr <= 0.0:
         raise ValueError("rows_per_band too large for this threshold")
     b = 1
-    while 1.0 - (1.0 - pr) ** b < target_recall:
+    while 1.0 - (1.0 - pr) ** b < TARGET_RECALL:
         b += 1
         if b > 64:
-            raise ValueError(f"no b ≤ 64 reaches recall {target_recall} at r={rows_per_band}")
+            raise ValueError(f"no b ≤ 64 reaches recall {TARGET_RECALL} at r={rows_per_band}")
     return b
 
 
-def banded_signatures_numpy(
-    embeddings: DataFrame,
-    bands: int,
-    rows_per_band: int,
-    dim: int = 64,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, band, sig) of (vec_id, ``vec_col``) vectors — the exploded
-    form of ``banded_hyperplane_signatures`` (tests/kernel_reference.py)
-    computed by an Arrow numpy kernel.
+def banded_signatures_numpy(embeddings: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """(vec_id, band, sig) of (vec_id, v) vectors — the exploded form of
+    ``banded_hyperplane_signatures`` (tests/kernel_reference.py) computed
+    by an Arrow numpy kernel. Band i's signature packs the sign bits of
+    planes [i·r, (i+1)·r) over the leading ``SIG_DIM`` components.
 
     The Catalyst form evaluates bands·rows_per_band interpreted fold
-    lambdas of ``dim`` terms per row (HOFs bypass codegen); here the
+    lambdas of ``SIG_DIM`` terms per row (HOFs bypass codegen); here the
     deterministic plane family is materialized driver-side once and each
-    batch runs bands·r·dim column-order float64 accumulations — the same
-    per-element operation sequence, so the sign bits (and hence every
-    bucket key) are IDENTICAL (parity test
+    batch runs the same per-element fold, so the sign bits (and hence
+    every bucket key) are IDENTICAL (parity test
     tests/test_dedup_similarity.py::test_banded_signatures_numpy_parity)."""
     import numpy as np
     import pandas as pd
 
-    n_planes = bands * rows_per_band
-    planes = [
-        np.asarray(_hyperplane(dim, i), dtype=np.float64) for i in range(n_planes)
-    ]
+    planes = _planes(bands * rows_per_band, SIG_DIM).reshape(bands, rows_per_band, SIG_DIM)
 
     def gen(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)[:, :dim]
-            m = len(pdf)
-            sigs = np.zeros((m, bands), dtype=np.int64)
-            for bidx in range(bands):
-                for j in range(rows_per_band):
-                    h = planes[bidx * rows_per_band + j]
-                    acc = np.zeros(m)
-                    for k in range(dim):
-                        acc = acc + V[:, k] * h[k]
-                    sigs[:, bidx] |= (acc >= 0).astype(np.int64) << j
-            vid = np.repeat(pdf["vec_id"].to_numpy(), bands)
+            sigs = sign_bits(_stack_f64(pdf["v"])[:, None, :SIG_DIM], planes)  # (m, bands)
             yield pd.DataFrame(
                 {
-                    "vec_id": vid,
-                    "band": np.tile(np.arange(bands, dtype=np.int32), m),
+                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), bands),
+                    "band": np.tile(np.arange(bands, dtype=np.int32), len(pdf)),
                     "sig": sigs.reshape(-1),
                 }
             )
 
-    return embeddings.select("vec_id", vec_col).mapInPandas(
+    return embeddings.select("vec_id", "v").mapInPandas(
         gen, f"vec_id {dict(embeddings.dtypes)['vec_id']}, band int, sig long"
     )
 
@@ -248,70 +214,33 @@ def assign_ivf_cells(
     embeddings: DataFrame, centroids: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """(vec_id, v, cell): assign each (vec_id, embedding) vector to its
-    max-cosine centroid (min-cell-index tie-break). Centroids are broadcast as ONE literal
-    array<struct<cell,vec>> folded by a single transform + array_max —
-    a map-only pass, no shuffle, and (crucially) a plan whose lambda
-    count is constant in n_cells. The previous form — greatest() over
-    one fold-expression per centroid — made Catalyst ANALYSIS time grow
-    ~quadratically with the codebook (n_cells = √N): 14 s of planning at
-    44 cells vs 0.03 s for this form, identical output."""
+    max-cosine centroid (min-cell-index tie-break) in one map-only Arrow
+    pass whose plan is constant-size in the codebook.
+
+    Per-element float64 operation order replays the Catalyst fold exactly
+    (column-order accumulation; argmax-first == min-cell-index tie-break
+    == the array_max(struct(s, -cell)) ordering), so assignments are
+    IDENTICAL — parity test test_assign_ivf_cells_numpy_parity. The
+    earlier expression forms paid Catalyst analysis time ~quadratic in
+    the codebook (n_cells = √N): 14 s of planning at 44 cells."""
     import numpy as np
     import pandas as pd
 
-    # r6: Arrow numpy kernel instead of an n_cells-wide interpreted
-    # transform+fold expression per row (guide §4.2). Per-element float64
-    # operation order replays the Catalyst fold exactly (column-order
-    # accumulation; argmax-first == min-cell-index tie-break == the
-    # array_max(struct(s, -cell)) ordering), so assignments are
-    # IDENTICAL — parity test test_assign_ivf_cells_numpy_parity. The
-    # previous expression form (kept in git history) also paid analysis
-    # time ~quadratic in the codebook; the kernel's plan is constant-size.
-    cells = [int(ci) for ci, _ in centroids]
+    cells = np.asarray([int(ci) for ci, _ in centroids], dtype=np.int32)
     C = np.asarray([cvec for _, cvec in centroids], dtype=np.float64)  # (c, d)
-    nc = np.zeros(len(C))
-    for k in range(C.shape[1]):
-        nc = nc + C[:, k] * C[:, k]
-    nc = np.sqrt(nc)
 
     def gen(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            m, d = V.shape
-            dot = np.zeros((m, len(C)))
-            nv = np.zeros(m)
-            for k in range(d):
-                dot = dot + V[:, k, None] * C[None, :, k]
-                nv = nv + V[:, k] * V[:, k]
-            sims = dot / (np.sqrt(nv)[:, None] * nc[None, :])
+            sims = cosine_np(_stack_f64(pdf["embedding"])[:, None, :], C)  # (m, c)
             best = sims.argmax(axis=1)  # first max ⇒ min cell index
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "v": pdf["embedding"],
-                    "cell": np.asarray(cells, dtype=np.int32)[best],
-                }
-            )
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "v": pdf["embedding"], "cell": cells[best]})
 
     in_t = dict(embeddings.dtypes)
     return embeddings.select(F.col("vec_id"), F.col("embedding")).mapInPandas(
         gen, f"vec_id {in_t['vec_id']}, v {in_t['embedding']}, cell int"
     )
-
-
-def _cos_py(a: list[float], b: list[float]) -> float:
-    """Driver-side cosine with the engine fold order (0.0 + x1 + x2 ...)."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + x * y
-    na = 0.0
-    for x in a:
-        na = na + x * x
-    nb = 0.0
-    for y in b:
-        nb = nb + y * y
-    return acc / (math.sqrt(na) * math.sqrt(nb))
 
 
 def train_ivf_centroids(
@@ -371,38 +300,34 @@ def ivf_sample(embeddings: DataFrame, sample_n: int) -> list[list[float]]:
     return [[float(x) for x in r["embedding"]] for r in rows]
 
 
-def ann_topk_ivf(
-    embeddings: DataFrame, query_vec: list[float], n_cells: int | None = 16
-) -> DataFrame:
+def ann_topk_ivf(embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
     """IVF (inverted-file) ANN over (vec_id, embedding) vectors: k-means
     coarse quantizer cells + probe-and-rerank — the data-adaptive
     alternative to the hyperplane LSH variant.
 
     Centroids come from deterministic spherical k-means over a
     hash-ordered sample of 1024 vectors (train_ivf_centroids — fixed
-    iterations, fixed order, reproducible on any engine). n_cells=None
-    sizes the codebook at ≈√N (one count action). Every vector joins its
-    max-cosine cell in ONE broadcast map pass; a query probes its
-    ``N_PROBE`` nearest cells and reranks exactly inside them for the top
-    ``TOP_K``, scanning ~N_PROBE/n_cells of the corpus.
+    iterations, fixed order, reproducible on any engine); the codebook
+    has ≈√N cells (one count action). Every vector joins its max-cosine
+    cell in ONE broadcast map pass; a query probes its ``N_PROBE``
+    nearest cells and reranks exactly inside them for the top ``TOP_K``,
+    scanning ~N_PROBE/n_cells of the corpus.
     At 100 TB the assignment is map-only and the probe filter prunes
     cell-partitioned files.
 
     Deterministic end-to-end: sample, training, assignment tie-breaks
     (min cell index), probe order, and the final (cosine desc, id asc)
     rerank (exact DuckDB oracle: oracles.sql_ivf_topk)."""
-    if n_cells is None:
-        n_cells = max(1, int(math.isqrt(embeddings.count())))
-    sample = ivf_sample(embeddings, 1024)
-    centroids = list(enumerate(train_ivf_centroids(sample, n_cells)))
-    assigned = assign_ivf_cells(embeddings, centroids)
+    import numpy as np
+
+    n_cells = max(1, int(math.isqrt(embeddings.count())))
+    centroids = train_ivf_centroids(ivf_sample(embeddings, 1024), n_cells)
+    assigned = assign_ivf_cells(embeddings, list(enumerate(centroids)))
 
     q = [float(x) for x in query_vec]
-    probe = sorted(range(len(centroids)), key=lambda i: (-_cos_py(q, centroids[i][1]), i))[
-        :N_PROBE
-    ]
+    cos = cosine_np(np.asarray(q, dtype=np.float64), np.asarray(centroids, dtype=np.float64))
+    probe = sorted(range(len(centroids)), key=lambda i: (-cos[i], i))[:N_PROBE]
     # exact rerank inside the probed cells via the numpy cosine kernel
-    # (bit-identical to the cosine_sim_expr fold form)
     return (
         cosine_scores_numpy(
             assigned.filter(F.col("cell").isin(probe)), q, id_col="vec_id", vec_col="v"
@@ -418,26 +343,35 @@ def ann_topk_lsh(embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
     Hamming distance 1 of the query's bucket (N_PLANES+1 buckets probed),
     then brute-force cosine inside.
 
+    One Arrow pass computes each vector's bucket, applies the probe
+    filter and computes the cosine of the survivors; the query's bucket
+    comes from the same ``sign_bits``. Rows are identical to the Catalyst
+    composition (``ann_topk_lsh_expr`` in tests/kernel_reference.py).
     Recall < 1 by construction; the candidate count drops ~2^N_PLANES-fold.
     """
-    dim = min(64, len(query_vec))
-    sigs = embeddings.select(
-        "vec_id",
-        F.col("embedding").alias("v"),
-        hyperplane_signature(F.col("embedding"), N_PLANES, dim).alias("bucket"),
-    )
-    # query bucket computed driver-side with the same deterministic planes
-    qsig = 0
-    for i in range(N_PLANES):
-        h = _hyperplane(dim, i)
-        d = sum(float(query_vec[j]) * h[j] for j in range(dim))
-        if d >= 0:
-            qsig |= 1 << i
-    probes = [qsig] + [qsig ^ (1 << i) for i in range(N_PLANES)]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    import numpy as np
+    import pandas as pd
+
+    dim = min(SIG_DIM, len(query_vec))
+    planes = _planes(N_PLANES, dim)
+    q = np.asarray(query_vec, dtype=np.float64)
+    qsig = int(sign_bits(q[:dim], planes))
+    probes = np.asarray([qsig] + [qsig ^ (1 << i) for i in range(N_PLANES)], dtype=np.int64)
+
+    def gen(it):
+        for pdf in it:
+            if not len(pdf):
+                continue
+            V = _stack_f64(pdf["embedding"])
+            hit = np.isin(sign_bits(V[:, :dim], planes), probes)
+            if hit.any():
+                yield pd.DataFrame(
+                    {"vec_id": pdf["vec_id"].to_numpy()[hit], "cosine": cosine_np(V[hit], q)}
+                )
+
     return (
-        sigs.filter(F.col("bucket").isin(probes))
-        .select("vec_id", cosine_sim_expr(F.col("v"), q).alias("cosine"))
+        embeddings.select("vec_id", "embedding")
+        .mapInPandas(gen, f"vec_id {dict(embeddings.dtypes)['vec_id']}, cosine double")
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(TOP_K)
     )

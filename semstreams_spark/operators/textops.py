@@ -1,8 +1,11 @@
 """Text-analysis operators for training-data pipelines.
 
-All pure Catalyst expressions (JVM-side, codegen). The term hash is
-engine-portable (md5-hex-prefix → bigint) so every operator here has an
-exact DuckDB oracle — unlike xxhash64/murmur3 which differ per engine.
+Each text contract has one Column form (Catalyst, JVM-side) and one
+Python form for the Arrow kernels, side by side: ``tokens`` /
+``word_tokens`` (lowercased word tokens), ``portable_hash`` /
+``token_hash`` (the md5-hex-prefix → bigint term hash). The hash is
+engine-portable, so every operator built on it has an exact DuckDB
+oracle — unlike xxhash64/murmur3 which differ per engine.
 
 Reference parallels: TF term ranking ``pkg/graphclustering/summarizer.go
 :86-157``; hashed term→dim ``pkg/embedding/bm25_embedder.go:285-291``;
@@ -10,6 +13,9 @@ content hash ``message/base_message.go:151-171``.
 """
 
 from __future__ import annotations
+
+import hashlib
+import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -23,6 +29,11 @@ LANG_STOPWORDS = {
 }
 
 
+# what separates word tokens in lowercased text
+WORD_SPLIT = "[^a-z0-9_]+"
+_WORD_SPLIT = re.compile(WORD_SPLIT)
+
+
 def portable_hash(col: Column) -> Column:
     """Deterministic 60-bit hash identical in Spark and DuckDB:
     conv(substr(md5(x),1,15),16,10). Slower than xxhash64 — use xxhash64
@@ -30,11 +41,25 @@ def portable_hash(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def token_hash(t: str) -> int:
+    """``portable_hash`` of one string, in Python."""
+    return int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
+
+
 def tokens(col: Column) -> Column:
     """Lowercased word tokens (array<string>)."""
-    return F.filter(
-        F.split(F.lower(col), "[^a-z0-9_]+"), lambda t: F.length(t) > 0
-    )
+    return F.filter(F.split(F.lower(col), WORD_SPLIT), lambda t: F.length(t) > 0)
+
+
+def word_tokens(text: str | None) -> list[str]:
+    """``tokens`` of one string, in Python; no tokens for None."""
+    return [t for t in _WORD_SPLIT.split((text or "").lower()) if t]
+
+
+def query_terms(query: str) -> list[str]:
+    """The distinct whitespace-separated lowercased terms of a search
+    query, sorted."""
+    return sorted({t for t in query.lower().split() if t})
 
 
 def fingerprint(col: Column) -> Column:
@@ -53,12 +78,9 @@ def lang_id_table(docs: DataFrame) -> DataFrame:
     HOF per language per row (HOFs bypass codegen); the kernel counts
     stopword hits per batch in Python sets; same rows (parity test
     test_lang_id_table_matches_expr)."""
-    import re as _re
-
     import pandas as pd
 
     id_t = dict(docs.dtypes)["doc_id"]
-    split = _re.compile(r"[^a-z0-9_]+")
     langs = sorted(LANG_STOPWORDS.items())
     sets = [(lang, frozenset(words)) for lang, words in langs]
 
@@ -68,7 +90,7 @@ def lang_id_table(docs: DataFrame) -> DataFrame:
                 continue
             out = []
             for text in pdf["text"]:
-                toks = [t for t in split.split((text or "").lower()) if t]
+                toks = word_tokens(text)
                 best_lang, best = "und", 0
                 for lang, sw in sets:
                     s = 0

@@ -15,6 +15,8 @@ Determinism rules baked into every query pair:
 
 from __future__ import annotations
 
+import math
+
 from .datagen.transcripts import aliases_path, transcripts_path
 
 MENTION_SQL_RE = "@entity:([a-z0-9_]+)"
@@ -289,8 +291,8 @@ def _fold_sum(items_expr: str) -> str:
 
 
 def _bucket_sql(col: str, n_planes: int, dim: int = 64, start: int = 0) -> str:
-    """Hyperplane sign-bit bucket — mirrors similarity.hyperplane_signature
-    with sequential folds so the sign bits are fp-identical across engines.
+    """Hyperplane sign-bit bucket — mirrors similarity.sign_bits with
+    sequential folds so the sign bits are fp-identical across engines.
     `start` offsets the plane family (band i of the banded form uses
     planes [i*r, (i+1)*r) with bit positions 0..r-1)."""
     from .operators.similarity import _hyperplane
@@ -306,8 +308,8 @@ def _bucket_sql(col: str, n_planes: int, dim: int = 64, start: int = 0) -> str:
 
 def sql_ann_topk(query_vec: list[float], k: int = 10, n_planes: int = 12) -> str:
     """Hyperplane-LSH ANN oracle — mirrors similarity.ann_topk_lsh exactly:
-    deterministic sin-hash hyperplanes, sign-bit bucket, Hamming-1 probe
-    set, exact cosine rerank inside probed buckets."""
+    deterministic md5-seeded Gaussian hyperplanes, sign-bit bucket,
+    Hamming-1 probe set, exact cosine rerank inside probed buckets."""
     from .operators.similarity import _hyperplane
 
     dim = min(64, len(query_vec))
@@ -337,6 +339,20 @@ SELECT vec_id, round(cosine, 6) AS cosine
 FROM cand ORDER BY cosine DESC, vec_id ASC LIMIT {k}"""
 
 
+def _cos_py(a: list[float], b: list[float]) -> float:
+    """Driver-side cosine with the engine fold order (0.0 + x1 + x2 ...)."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    na = 0.0
+    for x in a:
+        na = na + x * x
+    nb = 0.0
+    for y in b:
+        nb = nb + y * y
+    return acc / (math.sqrt(na) * math.sqrt(nb))
+
+
 def sql_ivf_topk(
     sf_dir: str,
     query_vec: list[float],
@@ -357,7 +373,6 @@ def sql_ivf_topk(
 
     import duckdb as _duckdb
 
-    from .operators.similarity import _cos_py as _cos
     from .operators.similarity import train_ivf_centroids
 
     p = _os.path.join(sf_dir, "embeddings.parquet")
@@ -374,7 +389,7 @@ def sql_ivf_topk(
 
     q = [float(x) for x in query_vec]
     # len(centroids) may be < n_cells on tiny corpora — match ann_topk_ivf
-    probe = sorted(range(len(centroids)), key=lambda i: (-_cos(q, centroids[i]), i))[:n_probe]
+    probe = sorted(range(len(centroids)), key=lambda i: (-_cos_py(q, centroids[i]), i))[:n_probe]
 
     structs = []
     for ci, cvec in enumerate(centroids):
@@ -430,7 +445,7 @@ def sql_embedding_neardup_lsh(
     if bands is None:
         from .operators.similarity import lsh_band_params
 
-        bands = lsh_band_params(threshold, 0.95, rows_per_band)
+        bands = lsh_band_params(threshold, rows_per_band)
     ct = (
         "CASE (vec_id // 10) % 3 "
         + " ".join(f"WHEN {i} THEN {repr(float(c))}" for i, c in enumerate(plant_cos[:2]))

@@ -19,9 +19,6 @@ from pyspark.sql import functions as F
 from ..graph.traversal import bounded_traversal
 from .engine import Rule, evaluate_rules
 
-# hops of the neighborhood a flag looks at
-MAX_DEPTH = 2
-
 
 def context_flags_df(
     edges: DataFrame,
@@ -29,14 +26,14 @@ def context_flags_df(
     start_entity: str,
     rules: list[Rule],
 ) -> DataFrame:
-    """Evaluate rules over the ≤MAX_DEPTH neighborhood of start_entity,
-    following (src, dst) edges in both directions:
+    """Evaluate rules over the ≤``traversal.MAX_DEPTH`` neighborhood of
+    start_entity, following (src, dst) edges in both directions:
     one (rule_id, flag) row per enabled rule — flag true iff ANY entity
     in the bounded neighborhood matches. The reference replies the same
     flags as a map over NATS; ``{r.rule_id: r.flag for r in collect()}``
     is that point-reply shape."""
     spark = edges.sparkSession
-    hood = bounded_traversal(edges, start_entity, max_depth=MAX_DEPTH).select(
+    hood = bounded_traversal(edges, start_entity).select(
         F.col("entity").alias("subject")
     )
     local_states = entity_states.join(F.broadcast(hood), "subject", "left_semi")

@@ -21,12 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.textops import tokens
+from ..operators.textops import query_terms, tokens
 
 K1 = 1.5
 B = 0.75
 # documents each search returns
 TOP_K = 10
+# the language hybrid_search keeps
+HYBRID_LANG = "en"
 
 
 def bm25_search(docs: DataFrame, query: str) -> DataFrame:
@@ -43,7 +45,7 @@ def bm25_search(docs: DataFrame, query: str) -> DataFrame:
     derived the token explode five times (dl, tf, df, stats, join) — the
     reshape derives it twice and every join side after it is tiny.
     Scores are value-identical (same tf/dl/df/N inputs; oracle-gated)."""
-    qterms = sorted({t for t in query.lower().split() if t})
+    qterms = query_terms(query)
     toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")).localCheckpoint(eager=False)
     stats = dl.agg(
@@ -81,10 +83,8 @@ def bm25_search(docs: DataFrame, query: str) -> DataFrame:
     )
 
 
-def hybrid_search(docs: DataFrame, query: str, lang: str | None = None) -> DataFrame:
+def hybrid_search(docs: DataFrame, query: str) -> DataFrame:
     """Hybrid search: a structured filter first (temporal/spatial/type in
-    the reference; lang here), BM25 scoring of the survivors only (G10)."""
-    d = docs
-    if lang is not None:
-        d = d.filter(F.col("lang") == lang)
-    return bm25_search(d, query)
+    the reference; ``lang == HYBRID_LANG`` here), BM25 scoring of the
+    survivors only (G10)."""
+    return bm25_search(docs.filter(F.col("lang") == HYBRID_LANG), query)

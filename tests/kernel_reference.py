@@ -3,6 +3,11 @@ references the kernels are checked against bit for bit
 (tests/test_dedup_similarity.py). Same names and signatures as the
 kernels they pin, with ``_expr`` for the dedup and embedder forms.
 
+- ``dot_expr``, ``norm_expr``, ``cosine_sim_expr`` → ``similarity._fold_dot_np``
+  and ``similarity.cosine_np`` (through ``cosine_scores_numpy``,
+  ``assign_ivf_cells`` and ``dedup._pair_cosines_numpy``)
+- ``hyperplane_signature`` (with ``_plane_dot``) → ``similarity.sign_bits``
+- ``ann_topk_lsh_expr`` → ``similarity.ann_topk_lsh``
 - ``shingle_sets_expr`` (with ``word_ngrams``) → ``dedup.shingle_sets``
 - ``simhash_expr`` → ``dedup.simhash``
 - ``embed_texts_expr`` → ``search.embedder.embed_texts``
@@ -20,9 +25,78 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from __spark_entry__ import PLANT_COS, _mention_rows
-from semstreams_spark.operators.similarity import _plane_dot, norm_expr
+from semstreams_spark.operators.similarity import N_PLANES, SIG_DIM, TOP_K, _hyperplane
 from semstreams_spark.operators.textops import LANG_STOPWORDS, portable_hash, tokens
 from semstreams_spark.search.embedder import DEFAULT_DIM
+
+
+def dot_expr(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def norm_expr(a: Column) -> Column:
+    return F.sqrt(
+        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
+    )
+
+
+def cosine_sim_expr(a: Column, b: Column) -> Column:
+    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+
+
+def _plane_dot(vec: Column, plane_idx: int, dim: int) -> Column:
+    """Sequential-fold dot product of the vector's leading `dim`
+    components with deterministic hyperplane `plane_idx` (fp-identical to
+    the DuckDB mirror in oracles._bucket_sql)."""
+    h = _hyperplane(dim, plane_idx)
+    return F.aggregate(
+        F.zip_with(
+            F.slice(vec, 1, dim),
+            F.array(*[F.lit(v) for v in h]),
+            lambda x, y: x.cast("double") * y,
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def hyperplane_signature(vec: Column, n_planes: int, dim: int) -> Column:
+    """Bit signature of sign(v·h_i) over n deterministic hyperplanes, on
+    the vector's leading ``dim`` components."""
+    sig = F.lit(0).cast("long")
+    for i in range(n_planes):
+        d = _plane_dot(vec, i, dim)
+        sig = sig.bitwiseOR(F.shiftleft(F.when(d >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long"), i))
+    return sig
+
+
+def ann_topk_lsh_expr(embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
+    """The Catalyst composition of ``similarity.ann_topk_lsh``: bucket
+    column, Hamming-1 probe filter, fold cosine; the query's bucket is
+    summed in Python on the driver."""
+    dim = min(SIG_DIM, len(query_vec))
+    sigs = embeddings.select(
+        "vec_id",
+        F.col("embedding").alias("v"),
+        hyperplane_signature(F.col("embedding"), N_PLANES, dim).alias("bucket"),
+    )
+    qsig = 0
+    for i in range(N_PLANES):
+        h = _hyperplane(dim, i)
+        if sum(float(query_vec[j]) * h[j] for j in range(dim)) >= 0:
+            qsig |= 1 << i
+    probes = [qsig] + [qsig ^ (1 << i) for i in range(N_PLANES)]
+    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    return (
+        sigs.filter(F.col("bucket").isin(probes))
+        .select("vec_id", cosine_sim_expr(F.col("v"), q).alias("cosine"))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(TOP_K)
+    )
 
 
 def word_ngrams(col: Column, n: int = 3) -> Column:

@@ -103,7 +103,8 @@ def test_multimodal_features_and_pruning(spark, tmp_path):
     assert "kind" in read_schema
 
 
-def test_graphrag_local_and_global(spark):
+def test_graphrag_local_and_global(spark, monkeypatch):
+    from semstreams_spark.graph import graphrag
     from semstreams_spark.graph.graphrag import global_search, local_search
 
     members = spark.createDataFrame(
@@ -130,7 +131,8 @@ def test_graphrag_local_and_global(spark):
     loc = local_search(members, texts, "e2", "spark engine").collect()
     assert [r["entity"] for r in loc] == ["e1"]  # e2's community, text-matched
 
-    glob = global_search(members, summaries, texts, "spark streaming", top_communities=1).collect()
+    monkeypatch.setattr(graphrag, "TOP_COMMUNITIES", 1)
+    glob = global_search(members, summaries, texts, "spark streaming").collect()
     # c1 scores 2*2 + 1.5*2 = 7 vs c2 2*1+1.5*1=3.5 -> only c1's members
     assert {r["community"] for r in glob} == {"c1"}
     assert glob[0]["entity"] == "e1" and glob[0]["entity_score"] == 2

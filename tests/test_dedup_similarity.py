@@ -15,9 +15,16 @@ from semstreams_spark.operators.dedup import (
     minhash_dedup,
     simhash_near_dups,
 )
-from semstreams_spark.operators.similarity import N_PROBE, ann_topk_lsh, cosine_topk
-from kernel_reference import lang_id
-from semstreams_spark.operators.textops import fingerprint, tokens
+from semstreams_spark.operators import similarity
+from semstreams_spark.operators.similarity import ann_topk_lsh, cosine_topk
+from kernel_reference import ann_topk_lsh_expr, cosine_sim_expr, lang_id
+from semstreams_spark.operators.textops import (
+    fingerprint,
+    portable_hash,
+    token_hash,
+    tokens,
+    word_tokens,
+)
 from semstreams_spark.search import bm25_search, hybrid_search
 
 DOCS = [
@@ -41,22 +48,22 @@ def test_exact_dedup(docs):
 
 
 def test_jaccard_pairs(docs):
-    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in jaccard_pairs(docs, threshold=0.5).collect()}
+    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in jaccard_pairs(docs).collect()}
     assert pairs[(0, 3)] == 1.0
     assert (0, 1) in pairs and 0.5 <= pairs[(0, 1)] < 1.0
     assert (0, 2) not in pairs
 
 
 def test_minhash_agrees_with_exact_jaccard(docs):
-    mh = {(r["doc_a"], r["doc_b"]) for r in minhash_dedup(docs, threshold=0.5).collect()}
-    exact = {(r["doc_a"], r["doc_b"]) for r in jaccard_pairs(docs, threshold=0.5).collect()}
+    mh = {(r["doc_a"], r["doc_b"]) for r in minhash_dedup(docs).collect()}
+    exact = {(r["doc_a"], r["doc_b"]) for r in jaccard_pairs(docs).collect()}
     # LSH candidates are a superset-filter then exact-verified: equal sets
     assert mh == exact
 
 
 def test_simhash_near_dups(docs):
     # short docs: one-token diff costs ~11 of 60 bits, so widen the budget
-    out = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in simhash_near_dups(docs, max_hamming=14).collect()}
+    out = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in simhash_near_dups(docs).collect()}
     assert out[(0, 3)] == 0  # identical text -> identical simhash
     assert (0, 1) in out and out[(0, 1)] <= 14  # near-dup within budget
     assert (0, 2) not in out and (0, 4) not in out
@@ -84,6 +91,27 @@ def test_cosine_topk_exact_and_ann(spark):
     assert ann[0]["vec_id"] == 99  # the near-copy shares the query bucket
 
 
+def test_word_tokens_and_token_hash_match_column_forms(spark, docs):
+    """The Python tokenizer and token hash of the Arrow kernels equal the
+    Column forms, on the docs plus None, punctuation-only and upper-case
+    text."""
+    extra = spark.createDataFrame(
+        [(5, None), (6, "?!, ... --"), (7, "The QUICK Brown_Fox: 42 JUMPS")], "doc_id long, text string"
+    )
+    rows = (
+        docs.unionByName(extra)
+        .select("text", tokens(F.col("text")).alias("toks"))
+        .select("text", "toks", F.transform("toks", portable_hash).alias("hashes"))
+        .collect()
+    )
+    assert len(rows) == len(DOCS) + 3
+    for r in rows:
+        assert word_tokens(r["text"]) == (r["toks"] or [])
+        assert [token_hash(t) for t in word_tokens(r["text"])] == (r["hashes"] or [])
+    assert word_tokens("The QUICK Brown_Fox: 42 JUMPS") == ["the", "quick", "brown_fox", "42", "jumps"]
+    assert word_tokens("?!, ... --") == [] and word_tokens(None) == []
+
+
 def test_text_ops(docs):
     out = docs.select(
         "doc_id",
@@ -101,8 +129,9 @@ def test_bm25_ranks_matching_doc_first(docs):
     top = bm25_search(docs, "spark streaming engines").collect()
     assert top[0]["doc_id"] in (2, 4)
     assert top[0]["score"] > 0
-    hybrid = hybrid_search(docs, "spark engines")
-    assert hybrid.count() >= 1
+    # hybrid search scores only the HYBRID_LANG documents
+    tagged = docs.withColumn("lang", F.when(F.col("doc_id") == 4, "de").otherwise("en"))
+    assert {r["doc_id"] for r in hybrid_search(tagged, "spark engines").collect()} == {2}
 
 
 EDGES = [
@@ -118,7 +147,7 @@ def edges(spark):
 
 
 def test_bounded_traversal_depth_and_decay(edges):
-    out = {r["entity"]: r for r in bounded_traversal(edges, "a", max_depth=2).collect()}
+    out = {r["entity"]: r for r in bounded_traversal(edges, "a").collect()}
     assert out["a"]["depth"] == 0 and out["a"]["score"] == 1.0
     assert out["b"]["depth"] == 1 and out["b"]["score"] == DECAY
     assert out["e"]["depth"] == 2 and out["e"]["score"] == DECAY * DECAY
@@ -128,7 +157,7 @@ def test_bounded_traversal_depth_and_decay(edges):
 def test_traversal_paths_sequences_and_cycles(edges):
     from semstreams_spark.graph import traversal_paths
 
-    out = traversal_paths(edges, "a", max_depth=2).collect()
+    out = traversal_paths(edges, "a").collect()
     paths = {tuple(r["path"]): r for r in out}
     assert paths[("a",)]["depth"] == 0 and paths[("a",)]["score"] == 1.0
     assert paths[("a", "b")]["score"] == DECAY
@@ -139,10 +168,11 @@ def test_traversal_paths_sequences_and_cycles(edges):
     assert all(not r["truncated"] for r in out)
 
 
-def test_traversal_paths_max_paths_truncation(edges):
-    from semstreams_spark.graph import traversal_paths
+def test_traversal_paths_max_paths_truncation(edges, monkeypatch):
+    from semstreams_spark.graph import traversal, traversal_paths
 
-    out = traversal_paths(edges, "a", max_depth=2, max_paths=3).collect()
+    monkeypatch.setattr(traversal, "MAX_PATHS", 3)
+    out = traversal_paths(edges, "a").collect()
     assert len(out) == 3
     assert all(r["truncated"] for r in out)
     # deterministic selection: score desc then path asc — the depth-0 and
@@ -220,7 +250,7 @@ def test_graphrag_local_search_at_levels(spark):
     assert hits1 == {"a", "b", "c", "x", "y", "z"}
 
 
-def test_ivf_topk_finds_near_copy(spark):
+def test_ivf_topk_finds_near_copy(spark, monkeypatch):
     import numpy as np
 
     from semstreams_spark.operators.similarity import ann_topk_ivf
@@ -236,13 +266,14 @@ def test_ivf_topk_finds_near_copy(spark):
     rows.append((99, (near / np.linalg.norm(near)).tolist()))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    # N_PROBE cells: probing ALL cells == exact, the near-copy must lead
-    top = ann_topk_ivf(emb, q, n_cells=N_PROBE).collect()
+    # √61 → 7 cells: probing N_PROBE of them scans a subset of the corpus
+    sub = ann_topk_ivf(emb, q).collect()
+    assert 0 < len(sub) <= 10
+    # probing ALL cells == exact, the near-copy must lead
+    monkeypatch.setattr(similarity, "N_PROBE", 7)
+    top = ann_topk_ivf(emb, q).collect()
     assert top[0]["vec_id"] == 99 and top[0]["cosine"] > 0.99
     assert [r["vec_id"] for r in top] == [r["vec_id"] for r in cosine_topk(emb, q).collect()]
-    sub = ann_topk_ivf(emb, q, n_cells=4 * N_PROBE).collect()
-    # probing a quarter of the cells scans a subset of the corpus
-    assert 0 < len(sub) <= len(top)
 
 
 def test_embedder_content_hash_dedup(spark):
@@ -277,14 +308,15 @@ def test_embed_text_py_mirrors_spark(spark):
 # ------------------------------------------------ banded embedding LSH (r3)
 
 
-def test_lsh_band_params_analytic_recall():
+def test_lsh_band_params_analytic_recall(monkeypatch):
     """(b, r) derivation: minimal b meeting the recall target, and the
     analytic OR-of-ANDs recall model it solves against."""
     from closed_form_reference import banded_recall
     from semstreams_spark.operators.similarity import lsh_band_params
 
     # the gate's parameters: threshold 0.95, r=6 -> b=8 at target 0.995
-    assert lsh_band_params(0.95, target_recall=0.995, rows_per_band=6) == 8
+    monkeypatch.setattr(similarity, "TARGET_RECALL", 0.995)
+    assert lsh_band_params(0.95, rows_per_band=6) == 8
     assert banded_recall(0.95, bands=8, rows_per_band=6) >= 0.995
     # one fewer band must fall short (minimality)
     assert banded_recall(0.95, bands=7, rows_per_band=6) < 0.995
@@ -400,7 +432,7 @@ def test_ivf_recall_vs_bruteforce(spark):
     e, rows = _clustered_corpus(spark)
     q = list(rows[5][1])  # a member of cluster 0
     bf = {r["vec_id"] for r in cosine_topk(e, q).collect()}
-    ivf = {r["vec_id"] for r in ann_topk_ivf(e, q, n_cells=None).collect()}
+    ivf = {r["vec_id"] for r in ann_topk_ivf(e, q).collect()}
     recall = len(bf & ivf) / 10.0
     assert recall >= 0.9, f"IVF recall@10 = {recall}"
 
@@ -436,7 +468,7 @@ def emb001(spark):
 
 
 def test_cosine_numpy_matches_catalyst(spark, emb001):
-    from semstreams_spark.operators.similarity import cosine_scores_numpy, cosine_sim_expr
+    from semstreams_spark.operators.similarity import cosine_scores_numpy
 
     q = [float(i % 7) - 3.0 for i in range(64)]
     qlit = F.array(*[F.lit(x) for x in q])
@@ -468,15 +500,26 @@ def test_banded_signatures_numpy_parity(spark, emb001):
     }
     kern = {
         (r["vec_id"], r["band"]): r["sig"]
-        for r in banded_signatures_numpy(emb001, 8, 6, 64).collect()
+        for r in banded_signatures_numpy(emb001.withColumnRenamed("embedding", "v"), 8, 6).collect()
     }
     assert expr == kern
+
+
+def test_ann_topk_lsh_matches_catalyst(spark, emb001):
+    """The one-pass Arrow ANN returns exactly the rows, in order, of the
+    Catalyst bucket + probe + fold-cosine composition, for three corpus
+    vectors as queries (each probes its own bucket, so none is empty)."""
+    vecs = emb001.orderBy("vec_id").collect()
+    for row in (vecs[0], vecs[len(vecs) // 2], vecs[-1]):
+        q = [float(x) for x in row["embedding"]]
+        kern = [tuple(r) for r in ann_topk_lsh(emb001, q).collect()]
+        expr = [tuple(r) for r in ann_topk_lsh_expr(emb001, q).collect()]
+        assert kern == expr and kern[0][0] == row["vec_id"]
 
 
 def test_assign_ivf_cells_numpy_parity(spark, emb001):
     from semstreams_spark.operators.similarity import (
         assign_ivf_cells,
-        cosine_sim_expr,
         ivf_sample,
         train_ivf_centroids,
     )
@@ -510,7 +553,6 @@ def test_assign_ivf_cells_numpy_parity(spark, emb001):
 
 def test_pair_cosines_numpy_parity(spark, emb001):
     from semstreams_spark.operators.dedup import _pair_cosines_numpy
-    from semstreams_spark.operators.similarity import cosine_sim_expr
 
     a = emb001.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("v_a"))
     b = emb001.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("v_b"))

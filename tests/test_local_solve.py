@@ -52,10 +52,11 @@ def test_pagerank_local_matches_distributed(spark, monkeypatch, seed):
 
 @pytest.mark.parametrize("seed", [11, 12, 13])
 def test_lpa_local_matches_distributed(spark, monkeypatch, seed):
-    from semstreams_spark.graph import lpa_communities
+    from semstreams_spark.graph import lpa, lpa_communities
 
+    monkeypatch.setattr(lpa, "MAX_ITER", 8)
     e = spark.createDataFrame(_random_graph(seed, 30, 90), "src string, dst string")
-    local, dist = _local_and_distributed(monkeypatch, lambda: lpa_communities(e, max_iter=8))
+    local, dist = _local_and_distributed(monkeypatch, lambda: lpa_communities(e))
     assert local == dist and len(local) > 0
 
 
@@ -89,7 +90,7 @@ def test_dispatch_follows_the_observed_edge_count(spark, monkeypatch, op):
         monkeypatch.setenv("SPARK_GRAFT_LOCAL_GRAPH_MAX_EDGES", str(limit))
         if op == "pagerank":
             return pagerank_exact(e)
-        return lpa_communities(e, max_iter=6)
+        return lpa_communities(e)
 
     local, dist = run(n), run(n - 1)
     assert "MapInPandas" in local._jdf.queryExecution().executedPlan().toString()
@@ -163,17 +164,18 @@ def test_lpa_hierarchy_stores_level0_edges_once(spark, monkeypatch):
     assert len(seen[0]) == 1, seen
 
 
-def test_lpa_local_two_triangles_bridge(spark):
+def test_lpa_local_two_triangles_bridge(spark, monkeypatch):
     """Known topology through the LOCAL path: two triangles joined by a
     bridge still resolve to min-id communities (mirrors the distributed
     test in test_dedup_similarity)."""
-    from semstreams_spark.graph import lpa_communities
+    from semstreams_spark.graph import lpa, lpa_communities
 
+    monkeypatch.setattr(lpa, "MAX_ITER", 8)
     e = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a"), ("x", "y"), ("y", "z"), ("z", "x")],
         "src string, dst string",
     )
-    out = {r["entity"]: r["community"] for r in lpa_communities(e, max_iter=8).collect()}
+    out = {r["entity"]: r["community"] for r in lpa_communities(e).collect()}
     assert out == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "z": "x"}
 
 

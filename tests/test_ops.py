@@ -71,9 +71,9 @@ def test_tool_correlation_attributes_requesting_turn(spark):
 
 
 def test_resolve_aliases_passthrough(spark):
-    df = spark.createDataFrame([("x",), ("aka1",)], "entity string")
+    df = spark.createDataFrame([("x",), ("aka1",)], "dst string")
     dim = spark.createDataFrame([("aka1", "canonical1")], "alias string, canonical string")
-    out = {r["entity"]: r["entity_resolved"] for r in resolve_aliases(df, dim).collect()}
+    out = {r["dst"]: r["dst_resolved"] for r in resolve_aliases(df, dim).collect()}
     assert out == {"x": "x", "aka1": "canonical1"}
 
 

@@ -4,14 +4,17 @@ says why it stays.
 - Every top-level function and class has a caller in non-test code.
 - Every method of a top-level class (dunders aside) is used in non-test
   code outside its own body, a sibling's ``self.x`` included.
-- Every defaulted parameter is set by some call in non-test code, by
-  keyword or by position: of a top-level package function outside
-  ``oracles.py`` or of a top-level function of ``__spark_entry__.py``, by
-  a call of that name; of the ``__init__`` of a top-level package class,
-  by a call of the class name. A call in ``tests/`` sets nothing, and
-  neither does an argument that is a literal equal to the parameter's
-  literal default: an option with one value in use is a constant. A call
-  that passes ``*args`` or ``**kwargs`` sets every parameter.
+- Every defaulted parameter takes at least two values across the calls
+  in non-test code, by keyword or by position: of a top-level package
+  function outside ``oracles.py`` or of a top-level function of
+  ``__spark_entry__.py``, the calls of that name; of the ``__init__`` of a
+  top-level package class, the calls of the class name. An option with
+  one value in use is a constant. A call in ``tests/`` counts for
+  nothing. An omitted argument is the default. An argument is a known
+  value when it is a scalar literal, or a name bound once at module level
+  to one in the calling file or imported from the one file that binds
+  it. Any other argument, a dict or list literal included, and a call
+  that passes ``*args`` or ``**kwargs`` count as setting the parameter.
 
 A name counts as used when it appears as an identifier (a ``Name`` or an
 ``Attribute``). Imports do not count: an import, a package ``__init__.py``
@@ -100,32 +103,64 @@ def _literal(node):
         return _NOT_LITERAL
 
 
+_SCALARS = (int, float, str, bytes, bool, type(None))
+_IMPORTED = object()
+
+
+def _module_constants(tree) -> dict[str, object]:
+    """Each name bound exactly once at module level (``X = v`` or ``A, B =
+    v, w``) -> its literal value or ``_NOT_LITERAL``; each other name the
+    file imports -> ``_IMPORTED``."""
+    bound: dict[str, list[ast.expr]] = defaultdict(list)
+    for top in tree.body:
+        if isinstance(top, ast.Assign):
+            targets, value = top.targets, top.value
+        elif isinstance(top, ast.AnnAssign) and top.value is not None:
+            targets, value = [top.target], top.value
+        else:
+            continue
+        for t in targets:
+            if isinstance(t, ast.Tuple) and isinstance(value, ast.Tuple) and len(t.elts) == len(value.elts):
+                pairs = zip(t.elts, value.elts)
+            else:
+                pairs = [(t, value)]
+            for n, v in pairs:
+                if isinstance(n, ast.Name):
+                    bound[n.id].append(v)
+    out = {a.asname or a.name: _IMPORTED for n in ast.walk(tree) if isinstance(n, ast.ImportFrom) for a in n.names}
+    out.update({k: _literal(v[0]) if len(v) == 1 else _NOT_LITERAL for k, v in bound.items()})
+    return out
+
+
 def _defaulted(fn, callee, skip_self=False):
-    """(callee, name, position or None, literal default or ``_NOT_LITERAL``)
-    of each defaulted parameter of ``fn``, positions counted as the caller
-    passes them."""
+    """(callee, name, position or None, default expression) of each
+    defaulted parameter of ``fn``, positions counted as the caller passes
+    them."""
     a = fn.args
     positional = (a.posonlyargs + a.args)[1 if skip_self else 0 :]
     first = len(positional) - len(a.defaults)
     for i, p in enumerate(positional):
         if i >= first:
-            yield callee, p.arg, i, _literal(a.defaults[i - first])
+            yield callee, p.arg, i, a.defaults[i - first]
     for p, d in zip(a.kwonlyargs, a.kw_defaults):
         if d is not None:
-            yield callee, p.arg, None, _literal(d)
+            yield callee, p.arg, None, d
 
 
 def scan():
     """(package definitions {qualified name: (file, name)}, methods
     {qualified name: (file, name, first line, last line)}, defaulted
-    parameters {qualified name: (callee, name, position or None, literal
-    default)}, identifier uses {name: {(file, enclosing top-level definition
-    or None, line)}}, calls {name: [ast.Call]} in non-test code)."""
-    defs, methods, params = {}, {}, {}
+    parameters {qualified name: (callee, name, position or None, default
+    as a call would pass it)}, identifier uses {name: {(file, enclosing
+    top-level definition or None, line)}}, calls {name: [(file,
+    ast.Call)]} in non-test code, module constants {file: {name:
+    value}})."""
+    defs, methods, params, consts = {}, {}, {}, {}
     uses: dict[str, set[tuple[str, str | None, int]]] = defaultdict(set)
-    calls: dict[str, list[ast.Call]] = defaultdict(list)
+    calls: dict[str, list[tuple[str, ast.Call]]] = defaultdict(list)
     for path in _caller_files():
         rel, tree = _parse(path)
+        consts[rel] = _module_constants(tree)
         module = rel[: -len(".py")].replace(os.sep, ".").removesuffix(".__init__")
         in_package = module.split(".")[0] == PACKAGE
         for top in tree.body:
@@ -140,34 +175,45 @@ def scan():
                         methods[f"{module}.{top.name}.{m.name}"] = (rel, m.name, m.lineno, m.end_lineno)
                     if isinstance(m, _DEFS) and m.name == "__init__":
                         for p in _defaulted(m, top.name, skip_self=True):
-                            params[f"{module}.{top.name}.__init__.{p[1]}"] = p
+                            params[f"{module}.{top.name}.__init__.{p[1]}"] = (*p[:3], (rel, p[3]))
             if isinstance(top, _DEFS) and ((in_package and rel != ORACLES) or rel == ENTRY):
                 for p in _defaulted(top, top.name):
-                    params[f"{module}.{top.name}.{p[1]}"] = p
+                    params[f"{module}.{top.name}.{p[1]}"] = (*p[:3], (rel, p[3]))
             for name, line in _identifiers(top):
                 uses[name].add((rel, owner, line))
         for n in ast.walk(tree):
             if isinstance(n, ast.Call):
-                calls[_callee(n)].append(n)
-    return defs, methods, params, uses, calls
+                calls[_callee(n)].append((rel, n))
+    return defs, methods, params, uses, calls, consts
 
 
-def _is_default(node: ast.expr, default) -> bool:
-    """``node`` is a literal equal to the literal ``default``, type included."""
+def _value(rel: str, node: ast.expr, consts):
+    """(type, value) of an argument that is a known scalar (a scalar
+    literal, or a name the file binds once to one at module level or
+    imports from the one file that does), else ``None``."""
     v = _literal(node)
-    return default is not _NOT_LITERAL and type(v) is type(default) and v == default
+    if v is _NOT_LITERAL and isinstance(node, ast.Name):
+        v = consts[rel].get(node.id, _NOT_LITERAL)
+        if v is _IMPORTED:
+            bound = [c[node.id] for c in consts.values() if c.get(node.id, _IMPORTED) is not _IMPORTED]
+            v = bound[0] if len(bound) == 1 else _NOT_LITERAL
+    return (type(v), v) if isinstance(v, _SCALARS) else None
 
 
-def _sets(call: ast.Call, name: str, position: int | None, default) -> bool:
-    if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
-        return True
-    args = [k.value for k in call.keywords if k.arg == name]
-    if position is not None and len(call.args) > position:
-        args.append(call.args[position])
-    return not all(_is_default(v, default) for v in args)
+def _takes_values(calls, name: str, position: int | None, default, consts) -> bool:
+    """The calls pass ``name`` at least two different values."""
+    values = set()
+    for rel, call in calls:
+        if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
+            return True
+        args = [k.value for k in call.keywords if k.arg == name]
+        if position is not None and len(call.args) > position:
+            args.append(call.args[position])
+        values |= {_value(rel, a, consts) for a in args} if args else {_value(*default, consts) or "default"}
+    return None in values or len(values) > 1
 
 
-def _in_use(defs, methods, params, uses, calls) -> set[str]:
+def _in_use(defs, methods, params, uses, calls, consts) -> set[str]:
     """The qualified names of definitions, methods and parameters that are used or set."""
     out = {q for q, (rel, name) in defs.items() if any((r, o) != (rel, name) for r, o, _ in uses[name])}
     out |= {
@@ -176,14 +222,14 @@ def _in_use(defs, methods, params, uses, calls) -> set[str]:
         if any(not (r == rel and first <= line <= last) for r, _, line in uses[name])
     }
     out |= {
-        q for q, (fn, name, pos, default) in params.items() if any(_sets(c, name, pos, default) for c in calls[fn])
+        q for q, (fn, name, pos, default) in params.items() if _takes_values(calls[fn], name, pos, default, consts)
     }
     return out
 
 
 def test_every_package_definition_has_a_caller():
-    defs, methods, params, uses, calls = scan()
-    unused = sorted(set(defs) - _in_use(defs, methods, params, uses, calls) - set(ALLOWED))
+    defs, *_ = scanned = scan()
+    unused = sorted(set(defs) - _in_use(*scanned) - set(ALLOWED))
     assert not unused, (
         "no non-test caller (delete it, move a test reference into tests/, "
         f"or add it to ALLOWED with a reason): {unused}"
@@ -191,8 +237,8 @@ def test_every_package_definition_has_a_caller():
 
 
 def test_every_method_is_used():
-    defs, methods, params, uses, calls = scan()
-    unused = sorted(set(methods) - _in_use(defs, methods, params, uses, calls) - set(ALLOWED))
+    _, methods, *_ = scanned = scan()
+    unused = sorted(set(methods) - _in_use(*scanned) - set(ALLOWED))
     assert not unused, (
         "method not used outside its own body in non-test code (delete it, "
         f"or add it to ALLOWED with a reason): {unused}"
@@ -200,8 +246,8 @@ def test_every_method_is_used():
 
 
 def test_every_defaulted_parameter_is_set():
-    defs, methods, params, uses, calls = scan()
-    unset = sorted(set(params) - _in_use(defs, methods, params, uses, calls) - set(ALLOWED))
+    _, _, params, *_ = scanned = scan()
+    unset = sorted(set(params) - _in_use(*scanned) - set(ALLOWED))
     assert not unset, (
         "defaulted parameter that no non-test call sets to another value "
         f"(make its default a constant, or add it to ALLOWED with a reason): {unset}"
@@ -209,8 +255,8 @@ def test_every_defaulted_parameter_is_set():
 
 
 def test_allow_list_has_no_stale_entry():
-    defs, methods, params, uses, calls = scan()
-    used = _in_use(defs, methods, params, uses, calls)
+    defs, methods, params, *_ = scanned = scan()
+    used = _in_use(*scanned)
     known = set(defs) | set(methods) | set(params)
     stale = sorted(q for q in ALLOWED if q not in known or q in used)
     assert not stale, f"ALLOWED entries that are now used or set, or no longer exist: {stale}"

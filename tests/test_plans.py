@@ -30,7 +30,7 @@ def test_alias_resolution_is_broadcast_join(spark):
     query: the alias dim broadcasts."""
     import __spark_entry__ as entry
 
-    df = spark.createDataFrame([("a",), ("b",)], "entity string")
+    df = spark.createDataFrame([("a",), ("b",)], "dst string")
     dim = spark.createDataFrame([("a", "A")], "alias string, canonical string")
     for q in (resolve_aliases(df, dim), entry.q_edges_resolved(spark, "sf0.001")):
         assert "BroadcastHashJoin" in _plan(q)

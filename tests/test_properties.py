@@ -17,7 +17,8 @@ from hypothesis import strategies as st
 
 from closed_form_reference import banded_recall
 from semstreams_spark.operators.multimodal import synth_wav_bytes
-from semstreams_spark.operators.similarity import _cos_py, lsh_band_params, train_ivf_centroids
+from semstreams_spark.operators.similarity import lsh_band_params, train_ivf_centroids
+from semstreams_spark.oracles import _cos_py
 
 # ---------------------------------------------------------------- LSH banding
 
@@ -27,7 +28,7 @@ thresholds = st.floats(min_value=0.80, max_value=0.99)
 @given(thresholds)
 @settings(max_examples=50, deadline=None)
 def test_band_params_meet_recall_and_are_minimal(theta):
-    b = lsh_band_params(theta, target_recall=0.95, rows_per_band=10)
+    b = lsh_band_params(theta, rows_per_band=10)
     assert banded_recall(theta, b, 10) >= 0.95
     if b > 1:
         assert banded_recall(theta, b - 1, 10) < 0.95
