@@ -16,7 +16,7 @@ from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from semstreams_spark import oracles
@@ -25,13 +25,14 @@ from semstreams_spark.extract import extract_triples
 from semstreams_spark.extract.triples import (
     IN_EDGE,
     MENTION_IDS,
-    MENTION_NAMES,
     MENTIONS_EDGE,
     NODE_TYPE,
     conversation_id,
     entity_id,
     entity_id_of,
+    mention_edges,
     mention_ids,
+    mention_rows,
     turn_subject,
 )
 from semstreams_spark.operators import edges_table
@@ -41,7 +42,12 @@ from semstreams_spark.operators.merge import (
     graph_snapshot,
     nodes_table_source_clustered,
 )
-from semstreams_spark.operators.joins import resolve_aliases, tool_invocation_correlation, turn_with_prior
+from semstreams_spark.operators.joins import (
+    resolve_aliases,
+    tool_invocation_correlation,
+    tool_request_interval_join,
+    turn_with_prior,
+)
 from semstreams_spark.operators.sessions import sessionize
 from semstreams_spark.operators.windows import entity_cooccurrence, node_degree_tumbling
 from semstreams_spark.rules import DEFAULT_RULES, evaluate_rules
@@ -136,40 +142,25 @@ def q_tool_corr(spark, sf_dir):
 
 
 def q_sessions(spark, sf_dir):
-    return sessionize(_transcripts(spark, sf_dir))
-
-
-def _mention_rows(spark, sf_dir):
-    """One row per mention OCCURRENCE, derived directly from transcripts:
-    (conv_id, mention name ``e``, text, ts, seq, turn_idx). Row-for-row
-    identical to filtering extract_triples to its mention triples: the
-    object is ``entity_id(e)`` and the subject ``turn_subject()`` of the
-    same row (both from ``extract.triples``) — without materializing the
-    5-7× triple fan-out and its text payloads (guide §2.3: shuffle/derive
-    fewer bytes)."""
-    return _transcripts(spark, sf_dir).selectExpr(
+    """``sessionize`` plus the oracle's ``session_id``, the session's
+    ordinal in its conversation from 0. The ordinal ranks all of a
+    conversation's sessions, so it is batch-only and stays here."""
+    w = Window.partitionBy("conv_id").orderBy("session_start")
+    return sessionize(_transcripts(spark, sf_dir)).select(
         "conv_id",
-        f"explode({MENTION_NAMES}) as e",
-        "text",
-        "ts",
-        "cast(turn_idx as int) as seq",
-        "turn_idx",
-    )
-
-
-def _mention_edges(spark, sf_dir):
-    """(src = entity id, dst = turn subject, ts) per mention occurrence."""
-    return _mention_rows(spark, sf_dir).select(
-        entity_id(F.col("e")).alias("src"), turn_subject().alias("dst"), "ts"
+        (F.row_number().over(w) - 1).cast("bigint").alias("session_id"),
+        "session_start",
+        "session_end",
+        "n_turns",
     )
 
 
 def q_degree_tumbling(spark, sf_dir):
-    return node_degree_tumbling(_mention_edges(spark, sf_dir))
+    return node_degree_tumbling(mention_edges(_transcripts(spark, sf_dir)))
 
 
 def q_cooccur_5min(spark, sf_dir):
-    m = _mention_rows(spark, sf_dir).select("conv_id", F.col("e").alias("entity"), "ts")
+    m = mention_rows(_transcripts(spark, sf_dir)).select("conv_id", F.col("e").alias("entity"), "ts")
     return entity_cooccurrence(m)
 
 
@@ -340,7 +331,7 @@ def _conv_pair_counts(spark, sf_dir):
     vocabularies, where downstream aggregation does the collapsing
     exactly as the Catalyst form. Measured: edges derive 2.17 → 1.26 s
     warm at sf0.1; outputs identical (A/B + weight cross-check)."""
-    m = _mention_rows(spark, sf_dir).select("conv_id", "e")
+    m = mention_rows(_transcripts(spark, sf_dir)).select("conv_id", "e")
     # no sort_array here (unlike the Catalyst reference form): the
     # matrix path sorts via np.unique + searchsorted regardless of input
     # order, and the fallback path np.sorts per row — dropping the
@@ -434,7 +425,7 @@ def q_paths_2hop(spark, sf_dir):
 def q_sliding_degree(spark, sf_dir):
     from semstreams_spark.operators.windows import node_degree_sliding
 
-    return node_degree_sliding(_mention_edges(spark, sf_dir))
+    return node_degree_sliding(mention_edges(_transcripts(spark, sf_dir)))
 
 
 def q_pagerank_entities(spark, sf_dir):
@@ -520,7 +511,7 @@ def _mention_context_texts(spark, sf_dir):
     max_by partial-aggregates map-side to ~one row per entity per scan
     partition, so the remaining exchange carries O(entities × partitions)
     rows instead of the joined mention stream (guide §2.3/§2.4)."""
-    men = _mention_rows(spark, sf_dir).select(F.col("e").alias("entity"), "text", "ts", "seq")
+    men = mention_rows(_transcripts(spark, sf_dir)).select(F.col("e").alias("entity"), "text", "ts", "seq")
     return men.groupBy("entity").agg(
         F.max_by("text", F.struct("ts", "seq", "text")).alias("text")
     )
@@ -686,7 +677,7 @@ def q_spatial_bbox(spark, sf_dir):
     from semstreams_spark.operators.textops import geo_bin, synthetic_coords
 
     min_lat, max_lat, min_lon, max_lon = SPATIAL_BBOX
-    ents = _mention_rows(spark, sf_dir).select(entity_id(F.col("e")).alias("id")).distinct()
+    ents = mention_rows(_transcripts(spark, sf_dir)).select(entity_id(F.col("e")).alias("id")).distinct()
     out = synthetic_coords(ents).filter(
         (F.col("lat") >= min_lat)
         & (F.col("lat") <= max_lat)
@@ -844,7 +835,7 @@ def q_context_flags(spark, sf_dir):
     from semstreams_spark.rules.engine import Condition, Rule
 
     edges = _entity_edges(spark, sf_dir)
-    men = _mention_rows(spark, sf_dir).select(F.col("e").alias("entity"), "ts")
+    men = mention_rows(_transcripts(spark, sf_dir)).select(F.col("e").alias("entity"), "ts")
     states = men.groupBy("entity").agg(
         F.count(F.lit(1)).alias("n"), F.max("ts").alias("ts")
     ).select(
@@ -891,28 +882,7 @@ def q_salted_conv_stats(spark, sf_dir):
 
 
 def q_tool_interval_join(spark, sf_dir):
-    """J4 interval-join shape (batch analogue of the watermarked
-    stream-stream join, streaming/joins.py): each tool turn joined to
-    every non-tool turn of the same conversation within the preceding
-    60 s — equi-join on conv_id plus a range predicate (no cartesian)."""
-    t = _transcripts(spark, sf_dir)
-    tools = t.filter(F.col("role") == "tool").select(
-        "conv_id", "turn_idx", "tool", "ts"
-    )
-    reqs = t.filter(F.col("role") != "tool").select(
-        F.col("conv_id").alias("r_conv"),
-        F.col("turn_idx").alias("req_turn_idx"),
-        F.col("ts").alias("req_ts"),
-    )
-    return (
-        tools.join(
-            reqs,
-            (tools["conv_id"] == reqs["r_conv"])
-            & (reqs["req_ts"] <= tools["ts"])
-            & (reqs["req_ts"] > tools["ts"] - F.expr("INTERVAL 60 SECOND")),
-        )
-        .select("conv_id", "turn_idx", "tool", "ts", "req_turn_idx", "req_ts")
-    )
+    return tool_request_interval_join(_transcripts(spark, sf_dir))
 
 
 def q_metrics_rollup(spark, sf_dir):

@@ -46,7 +46,7 @@ The builders:
 - :func:`conversation_id` — the ``conv.turn.in`` object;
 - :func:`entity_id` (Column) / :func:`entity_id_of` (str) — the entity id
   of a mention name;
-- :func:`mention_names` / :func:`mention_ids` — the ``@entity:`` names in
+- ``MENTION_NAMES`` / :func:`mention_ids` — the ``@entity:`` names in
   ``text``, in order, repeats kept / their entity ids;
 - :func:`property_triples` — triples 1-5 as
   ``array<struct<predicate, object, object_type>>``; :func:`no_triples`
@@ -55,6 +55,12 @@ The builders:
   entity id / for every mention of the row;
 - :func:`node_type` — a node id's type, its 5th dot-part, else ``entity``
   (``messagemanager/processor.go:517-526``).
+
+The mention derives, which the mention-keyed queries and the streaming
+window share:
+
+- :func:`mention_rows` — one row per mention occurrence;
+- :func:`mention_edges` — one (entity, turn) edge per mention occurrence.
 
 ``IN_EDGE`` and ``MENTIONS_EDGE`` are the edge types of the two
 relationship predicates (``operators.merge.predicate_to_edge_type``).
@@ -129,10 +135,6 @@ def entity_id_of(name: str) -> str:
     return _ENTITY_ID_PREFIX + name
 
 
-def mention_names() -> Column:
-    return F.expr(MENTION_NAMES)
-
-
 def mention_ids() -> Column:
     return F.expr(MENTION_IDS)
 
@@ -181,4 +183,28 @@ def extract_triples(transcripts: DataFrame) -> DataFrame:
         "1.0D as confidence",
         "context",
         "seq",
+    )
+
+
+def mention_rows(transcripts: DataFrame) -> DataFrame:
+    """One row per mention OCCURRENCE, derived directly from transcripts:
+    (conv_id, mention name ``e``, text, ts, seq, turn_idx). Row-for-row
+    identical to filtering extract_triples to its mention triples: the
+    object is ``entity_id(e)`` and the subject ``turn_subject()`` of the
+    same row — without materializing the 5-7× triple fan-out and its text
+    payloads (guide §2.3: shuffle/derive fewer bytes)."""
+    return transcripts.selectExpr(
+        "conv_id",
+        f"explode({MENTION_NAMES}) as e",
+        "text",
+        "ts",
+        "cast(turn_idx as int) as seq",
+        "turn_idx",
+    )
+
+
+def mention_edges(transcripts: DataFrame) -> DataFrame:
+    """(src = entity id, dst = turn subject, ts) per mention occurrence."""
+    return mention_rows(transcripts).select(
+        entity_id(F.col("e")).alias("src"), turn_subject().alias("dst"), "ts"
     )

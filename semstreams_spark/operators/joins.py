@@ -7,10 +7,16 @@ Reference patterns generalized (SURVEY §2.4):
   unchanged (``messagemanager/processor.go:192-196``).
 - J3 turn→prior-turn = lag() over (conv_id, turn_idx) in batch; keyed
   state in streaming (streaming/state_merge.py).
-- J4 turn→tool correlation: each tool turn is attributed to the most
-  recent preceding non-tool turn in the same conversation (the turn whose
-  request triggered the tool), via last(ignorenulls) — no shuffle beyond
-  the single per-conversation sort.
+- J4 turn→tool correlation, two forms:
+  - each tool turn is attributed to the most recent preceding non-tool
+    turn in the same conversation (the turn whose request triggered the
+    tool), via last(ignorenulls) — no shuffle beyond the single
+    per-conversation sort;
+  - an interval join: each tool turn joined to every non-tool turn of the
+    same conversation within the preceding 60 s. It is the same operator
+    on a batch frame and on a watermarked stream (the caller puts the
+    watermark on the stream), where the range condition lets Spark evict
+    join state older than the watermark.
 """
 
 from __future__ import annotations
@@ -82,6 +88,32 @@ def tool_invocation_correlation(transcripts: DataFrame) -> DataFrame:
         )
         .filter(F.col("role") == "tool")
         .drop("role")
+    )
+
+
+def tool_request_interval_join(transcripts: DataFrame) -> DataFrame:
+    """Each tool turn joined to every non-tool turn of the same
+    conversation within the preceding 60 s — equi-join on conv_id plus a
+    range predicate (no cartesian).
+
+    Output: (conv_id, turn_idx, tool, ts, req_turn_idx, req_ts).
+    """
+    tools = transcripts.filter(F.col("role") == "tool").select(
+        "conv_id", "turn_idx", "tool", "ts"
+    )
+    reqs = transcripts.filter(F.col("role") != "tool").select(
+        F.col("conv_id").alias("r_conv"),
+        F.col("turn_idx").alias("req_turn_idx"),
+        F.col("ts").alias("req_ts"),
+    )
+    return (
+        tools.join(
+            reqs,
+            (tools["conv_id"] == reqs["r_conv"])
+            & (reqs["req_ts"] <= tools["ts"])
+            & (reqs["req_ts"] > tools["ts"] - F.expr("INTERVAL 60 SECOND")),
+        )
+        .select("conv_id", "turn_idx", "tool", "ts", "req_turn_idx", "req_ts")
     )
 
 

@@ -63,11 +63,12 @@ def sign_bits(V, planes):
     (column-order fold) over the last two axes of the plane stack ``(...,
     p, d)``. Vectors ``(m, d)`` against ``(p, d)`` give one signature per
     vector; ``(m, 1, d)`` against ``(bands, r, d)`` one per vector and
-    band."""
+    band. A NaN dot sets its bit, as Spark's ordering (NaN above every
+    number) and the oracle's ``dot >= 0`` do."""
     import numpy as np
 
     dots = _fold_dot_np(V[..., None, :], planes)
-    return ((dots >= 0).astype(np.int64) << np.arange(planes.shape[-2])).sum(axis=-1)
+    return ((~(dots < 0)).astype(np.int64) << np.arange(planes.shape[-2])).sum(axis=-1)
 
 
 def _stack_f64(col):

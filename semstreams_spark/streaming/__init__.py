@@ -1,11 +1,7 @@
 from .state_merge import conversation_graph_deltas, DELTA_SCHEMA
 from .sink import ExactlyOnceParquetSink
-from .pipeline import (
-    build_ingest_stream,
-    read_transcript_stream,
-    read_transcript_stream_from_table,
-)
-from .rules_stage import StreamingRuleStage, build_ingest_with_rules
+from .pipeline import build_ingest_stream, read_transcript_stream
+from .rules_stage import StreamingRuleStage
 
 __all__ = [
     "conversation_graph_deltas",
@@ -13,7 +9,5 @@ __all__ = [
     "ExactlyOnceParquetSink",
     "build_ingest_stream",
     "read_transcript_stream",
-    "read_transcript_stream_from_table",
     "StreamingRuleStage",
-    "build_ingest_with_rules",
 ]

@@ -3,10 +3,11 @@
 SURVEY §3.1 restated: readStream(transcripts) → watermark →
 per-conversation stateful accept (bucketed ``applyInPandasWithState``) →
 Catalyst triple fan-out (the ``extract.triples`` builders) → exactly-once
-sink. ``windowed_degree_stream`` (here) and
-``operators.sessions.session_window_streaming`` are the streaming window
-and session-window forms over the same source; only tests start them, no
-job runs them beside the ingest.
+sink, and with rules the streaming rule stage fanned out of the same
+micro-batch (``rules_stage``). The window, session and interval-join
+operators have no streaming form of their own: the registry's operators
+(``operators.windows``, ``operators.sessions``, ``operators.joins``) run
+unchanged on ``read_transcript_stream(...).withWatermark("ts", ...)``.
 
 Local tests drive it with file-source micro-batches
 (``maxFilesPerTrigger``) + ``trigger(availableNow=True)``; on a real
@@ -22,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..extract.triples import mention_names
+from ..rules.engine import Rule
+from .rules_stage import StreamingRuleStage
 from .sink import ExactlyOnceParquetSink
 from .state_merge import conversation_graph_deltas, pin_state_engine
 
@@ -47,24 +49,6 @@ def read_transcript_stream(
     return _validate(raw)
 
 
-def read_transcript_stream_from_table(
-    spark: SparkSession, table: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """Catalog-table micro-batch source: the north-star's "read
-    micro-batches from an Iceberg table" shape. The table is resolved by
-    NAME through the session catalog (create it with ``CREATE TABLE ...
-    USING parquet LOCATION`` — on a lakehouse-equipped cluster the same
-    call streams an Iceberg table's snapshot feed; on this runtime it is
-    the file-source table incarnation). Validation is identical to the
-    path source, so downstream parity holds by construction
-    (test-asserted)."""
-    raw = (
-        spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
-        .table(table)
-    )
-    return _validate(raw)
-
-
 def _validate(raw: DataFrame) -> DataFrame:
     # message validation (reference Validate(), message/message.go:20-44):
     # rows missing identity or event time are dropped, not propagated —
@@ -81,8 +65,19 @@ def build_ingest_stream(
     watermark: str = "10 minutes",
     available_now: bool = True,
     once: bool = False,
+    rules: list[Rule] | None = None,
 ) -> tuple[StreamingQuery, ExactlyOnceParquetSink]:
-    """Wire the full pipeline and start it."""
+    """Wire the full pipeline and start it; returns the query and the
+    ``graph_deltas`` sink.
+
+    With ``rules``, the streaming rule stage runs in the SAME
+    foreachBatch: the batch persists, the deltas commit first, then the
+    rules evaluate on the persisted batch and commit to
+    ``<out_dir>/rule_events`` (read it through an
+    ``ExactlyOnceParquetSink`` on that directory). A crash between the
+    two commits replays the batch; the delta sink only drains it (ledger)
+    and only the rule stage commits — no duplicate output on either
+    table."""
     # observed source metrics (rows + event-time bounds per micro-batch):
     # surfaces in StreamingQueryProgress.observedMetrics alongside the
     # sink ledger's per-partition lineage — together the "lineage +
@@ -98,7 +93,22 @@ def build_ingest_stream(
     n_buckets = pin_state_engine(checkpoint_dir, transcripts.sparkSession)
     deltas = conversation_graph_deltas(transcripts, n_buckets, watermark=watermark)
     sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"), checkpoint_dir)
-    writer = deltas.writeStream.foreachBatch(sink).outputMode("append")
+    if rules is None:
+        batch_fn = sink
+    else:
+        rule_stage = StreamingRuleStage(out_dir, rules, checkpoint_dir)
+
+        def batch_fn(batch_df, batch_id):
+            # two consumers of one micro-batch: persist so the stateful
+            # upstream runs once (A5 fan-out)
+            batch_df.persist()
+            try:
+                sink(batch_df, batch_id)
+                rule_stage(batch_df, batch_id)
+            finally:
+                batch_df.unpersist()
+
+    writer = deltas.writeStream.foreachBatch(batch_fn).outputMode("append")
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     if once:
@@ -109,17 +119,3 @@ def build_ingest_stream(
     elif available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start(), sink
-
-
-def windowed_degree_stream(
-    transcripts: DataFrame, watermark: str = "10 minutes", width: str = "5 minutes"
-) -> DataFrame:
-    """Streaming tumbling-window mention in-degree (A6) off the raw stream —
-    pure built-ins end-to-end (no Python in this branch)."""
-    mentions = transcripts.select("conv_id", "ts", F.explode(mention_names()).alias("entity"))
-    return (
-        mentions.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("w"), "entity")
-        .agg(F.count(F.lit(1)).alias("in_degree"), F.approx_count_distinct("conv_id").alias("approx_convs"))
-        .select(F.col("w.start").alias("window_start"), "entity", "in_degree", "approx_convs")
-    )

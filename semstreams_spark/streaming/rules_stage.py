@@ -8,10 +8,11 @@ per change message (``rule/message_handler.go:47-111``), with per-
 (rule, entity) cooldown (``rule_factory.go:24``).
 
 Spark shape:
-- the ingest ``foreachBatch`` fans out each committed delta micro-batch
-  to a second stage: ``evaluate_rules`` over the batch's state-change
-  rows → ``apply_cooldown`` → a second ``ExactlyOnceParquetSink``
-  (rule_events table).
+- the ingest ``foreachBatch`` (``build_ingest_stream`` with ``rules``)
+  fans out each committed delta micro-batch to a second stage:
+  ``evaluate_rules`` over the batch's state-change rows →
+  ``apply_cooldown`` → a second ``ExactlyOnceParquetSink`` (rule_events
+  table).
 - the cooldown's only cross-batch state — last fire per
   (rule_id, entity_id) — is DERIVED from the committed rule-events table
   itself rather than held in a separate store, so a crash can never
@@ -51,12 +52,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..extract.triples import MENTIONS
 from ..rules.engine import Rule, apply_cooldown, evaluate_rules
 from .sink import ExactlyOnceParquetSink
-from .state_merge import conversation_graph_deltas, pin_state_engine
 
 ENTITY_MENTIONED = "entity.mentioned"
 
@@ -79,9 +78,9 @@ def rule_states_view(deltas: DataFrame) -> DataFrame:
 class StreamingRuleStage:
     """foreachBatch stage: delta micro-batch → rule events, exactly-once.
 
-    Composes with the delta sink in one fan-out callable
-    (build_ingest_with_rules); also usable standalone over any committed
-    delta stream."""
+    ``pipeline.build_ingest_stream(..., rules=...)`` calls it after the
+    delta sink in one foreachBatch; it also runs standalone over any
+    committed delta stream."""
 
     def __init__(self, out_dir: str, rules: list[Rule], checkpoint_dir: str | None = None):
         self.rules = rules
@@ -142,40 +141,3 @@ class StreamingRuleStage:
         seed = self.last_fires(spark, min_ts) if min_ts is not None else None
         fired = apply_cooldown(events, self.rules, last_fire=seed)
         self.sink(fired, batch_id)
-
-
-def build_ingest_with_rules(
-    transcripts: DataFrame,
-    out_dir: str,
-    rules: list[Rule],
-    checkpoint_dir: str | None = None,
-    watermark: str = "10 minutes",
-) -> tuple[StreamingQuery, ExactlyOnceParquetSink, StreamingRuleStage]:
-    """Full pipeline with the rule stage fanned out of the SAME
-    foreachBatch: deltas commit first, then rules evaluate on the
-    persisted batch. Crash between the two commits replays the batch;
-    the delta sink only drains it (ledger) and only the rule stage
-    commits — no duplicate output on either table."""
-    n_buckets = pin_state_engine(checkpoint_dir, transcripts.sparkSession)
-    deltas = conversation_graph_deltas(transcripts, n_buckets, watermark=watermark)
-    delta_sink = ExactlyOnceParquetSink(os.path.join(out_dir, "graph_deltas"), checkpoint_dir)
-    rule_stage = StreamingRuleStage(out_dir, rules, checkpoint_dir)
-
-    def fanout(batch_df, batch_id):
-        # two consumers of one micro-batch: persist so the stateful
-        # upstream runs once (A5 fan-out)
-        batch_df.persist()
-        try:
-            delta_sink(batch_df, batch_id)
-            rule_stage(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        deltas.writeStream.foreachBatch(fanout)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start(), delta_sink, rule_stage

@@ -24,7 +24,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from __spark_entry__ import PLANT_COS, _mention_rows
+from __spark_entry__ import PLANT_COS, _transcripts
+from semstreams_spark.extract.triples import mention_rows
 from semstreams_spark.operators.similarity import N_PLANES, SIG_DIM, TOP_K, _hyperplane
 from semstreams_spark.operators.textops import LANG_STOPWORDS, portable_hash, tokens
 from semstreams_spark.search.embedder import DEFAULT_DIM
@@ -323,7 +324,7 @@ def conv_entity_pairs(spark, sf_dir):
     4.7× faster at sf0.1. The pure-Catalyst reference form of the
     pair-count kernel (parity A/B in OPTIMIZATION_r06.md; weights
     cross-checked in tests)."""
-    m = _mention_rows(spark, sf_dir).select("conv_id", "e")
+    m = mention_rows(_transcripts(spark, sf_dir)).select("conv_id", "e")
     per_conv = m.groupBy("conv_id").agg(F.sort_array(F.collect_set("e")).alias("ents"))
     return per_conv.select(
         F.explode(

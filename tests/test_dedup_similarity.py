@@ -483,10 +483,20 @@ def test_cosine_numpy_matches_catalyst(spark, emb001):
 
 
 def test_banded_signatures_numpy_parity(spark, emb001):
+    """The numpy kernel's buckets equal the Catalyst reference's, a vector
+    with one NaN component included: its dots are NaN, and Spark's
+    ``dot >= 0`` sets the bit for NaN."""
     from kernel_reference import banded_hyperplane_signatures
 
     from semstreams_spark.operators.similarity import banded_signatures_numpy
 
+    nan_vec = emb001.orderBy("vec_id").limit(1).select(
+        (F.col("vec_id") + 10**6).cast(emb001.schema["vec_id"].dataType).alias("vec_id"),
+        F.transform("embedding", lambda x, i: F.when(i == 3, F.lit(float("nan"))).otherwise(x))
+        .cast(emb001.schema["embedding"].dataType)
+        .alias("embedding"),
+    )
+    emb001 = emb001.unionByName(nan_vec)
     expr = {
         (r["vec_id"], r["band"]): r["sig"]
         for r in emb001.select(
@@ -503,6 +513,8 @@ def test_banded_signatures_numpy_parity(spark, emb001):
         for r in banded_signatures_numpy(emb001.withColumnRenamed("embedding", "v"), 8, 6).collect()
     }
     assert expr == kern
+    nan_id = nan_vec.first()["vec_id"]
+    assert all(kern[(nan_id, b)] == 2**6 - 1 for b in range(8))
 
 
 def test_ann_topk_lsh_matches_catalyst(spark, emb001):

@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 
 from semstreams_spark.extract import extract_triples
 from semstreams_spark.rules.engine import Condition, Rule, apply_cooldown, evaluate_rules
-from semstreams_spark.streaming import read_transcript_stream
-from semstreams_spark.streaming.rules_stage import build_ingest_with_rules, rule_states_view
+from semstreams_spark.streaming import ExactlyOnceParquetSink, build_ingest_stream, read_transcript_stream
+from semstreams_spark.streaming.rules_stage import rule_states_view
 
 T0 = dt.datetime(2025, 1, 1)
 _MT = [1_750_000_000]
@@ -69,9 +69,7 @@ def test_full_pipeline_scenario(spark, tmp_path):
 
     # streaming ingest + rule stage, exactly-once
     stream = read_transcript_stream(spark, indir, max_files_per_trigger=1)
-    q, delta_sink, rule_stage = build_ingest_with_rules(
-        stream, outdir, rules, checkpoint_dir=ckpt, watermark="2 days"
-    )
+    q, delta_sink = build_ingest_stream(stream, outdir, checkpoint_dir=ckpt, watermark="2 days", rules=rules)
     q.awaitTermination()
     deltas = delta_sink.read(spark)
 
@@ -82,7 +80,8 @@ def test_full_pipeline_scenario(spark, tmp_path):
         map(tuple, batch.select(*key).collect())
     )
     # boundary check: committed rule events == batch rules + greedy cooldown
-    got_rules = sorted(map(tuple, rule_stage.sink.read(spark).select("rule_id", "entity_id", "ts").collect()))
+    rule_sink = ExactlyOnceParquetSink(os.path.join(outdir, "rule_events"))
+    got_rules = sorted(map(tuple, rule_sink.read(spark).select("rule_id", "entity_id", "ts").collect()))
     want_rules = sorted(
         map(
             tuple,

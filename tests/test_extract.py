@@ -87,9 +87,9 @@ def _sorted_rows(df):
 
 
 def test_sql_builders_match_column_api_reference(spark):
-    """Every SQL-text builder, the ``MENTION_TRIPLES`` text and
-    extract_triples give the rows and the schema of the Column-API
-    reference (tests/triples_reference.py)."""
+    """Every SQL-text builder, the ``MENTION_NAMES`` and
+    ``MENTION_TRIPLES`` texts and extract_triples give the rows and the
+    schema of the Column-API reference (tests/triples_reference.py)."""
     import triples_reference as ref
 
     from semstreams_spark.extract import triples
@@ -98,10 +98,11 @@ def test_sql_builders_match_column_api_reference(spark):
     builders = {
         name: getattr(triples, name)
         for name in (
-            "turn_subject", "conversation_id", "mention_names", "mention_ids",
+            "turn_subject", "conversation_id", "mention_ids",
             "property_triples", "no_triples",
         )
     }
+    builders["mention_names"] = lambda: F.expr(triples.MENTION_NAMES)
     builders["mention_triples"] = lambda: F.expr(triples.MENTION_TRIPLES)
     for name, build in builders.items():
         got = turns.select("turn_idx", build().alias("v"))

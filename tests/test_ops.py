@@ -30,7 +30,7 @@ def test_sessionize_splits_on_gap(spark):
         ("c2", 0, "user", "d", None, T0),
     ]
     s = sessionize(_tr(spark, rows)).collect()
-    c1 = sorted([r for r in s if r["conv_id"] == "c1"], key=lambda r: r["session_id"])
+    c1 = sorted([r for r in s if r["conv_id"] == "c1"], key=lambda r: r["session_start"])
     assert len(c1) == 2
     assert c1[0]["n_turns"] == 2 and c1[1]["n_turns"] == 1
     assert len([r for r in s if r["conv_id"] == "c2"]) == 1

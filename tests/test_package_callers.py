@@ -19,8 +19,11 @@ says why it stays.
 A name counts as used when it appears as an identifier (a ``Name`` or an
 ``Attribute``). Imports do not count: an import, a package ``__init__.py``
 re-export included, keeps a name importable, not in use. Neither do
-mentions in strings and docstrings. An ``ALLOWED`` entry that is now used
-or set, or no longer exists, fails as well, so the list can only shrink."""
+mentions in strings and docstrings. Uses are matched by name, so two
+top-level package definitions may not share one: a second definition
+would count the first one's callers as its own. An ``ALLOWED`` entry that
+is now used or set, or no longer exists, fails as well, so the list can
+only shrink."""
 
 from __future__ import annotations
 
@@ -37,26 +40,9 @@ CALLER_DIRS = (PACKAGE, "jobs", "tools", "perfbench")
 ORACLES = os.path.join(PACKAGE, "oracles.py")
 ENTRY = "__spark_entry__.py"
 
-_NORTH_STAR = "north-star streaming surface (BASELINE) that only tests start"
-
 # qualified name of a definition (module.name), a method
 # (module.Class.method) or a parameter (module.function.parameter) -> why
-ALLOWED = {
-    f"semstreams_spark.{q}": _NORTH_STAR
-    for q in (
-        "streaming.joins.tool_request_interval_join",
-        "streaming.joins.tool_request_interval_join.watermark",
-        "streaming.joins.tool_request_interval_join.max_lag_seconds",
-        "operators.sessions.session_window_streaming",
-        "operators.sessions.session_window_streaming.gap",
-        "operators.sessions.session_window_streaming.watermark",
-        "streaming.pipeline.windowed_degree_stream",
-        "streaming.pipeline.windowed_degree_stream.width",
-        "streaming.pipeline.windowed_degree_stream.watermark",
-        "streaming.pipeline.read_transcript_stream_from_table",
-        "streaming.pipeline.read_transcript_stream_from_table.max_files_per_trigger",
-    )
-}
+ALLOWED: dict[str, str] = {}
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
@@ -229,6 +215,11 @@ def _in_use(defs, methods, params, uses, calls, consts) -> set[str]:
 
 def test_every_package_definition_has_a_caller():
     defs, *_ = scanned = scan()
+    by_name = defaultdict(list)
+    for q, (_, name) in defs.items():
+        by_name[name].append(q)
+    shared = sorted(qs for qs in by_name.values() if len(qs) > 1)
+    assert not shared, f"package definitions that share a name (keep one): {shared}"
     unused = sorted(set(defs) - _in_use(*scanned) - set(ALLOWED))
     assert not unused, (
         "no non-test caller (delete it, move a test reference into tests/, "

@@ -201,7 +201,7 @@ def test_crash_point_exactly_once(spark, tmp_path, monkeypatch, pipeline, table,
     commits and "rule_stage" the one between them. Ledger segments flush
     every 2 commits, so batch 1 flushes one."""
     from semstreams_spark.rules.engine import apply_cooldown, evaluate_rules
-    from semstreams_spark.streaming import rules_stage as rules_mod
+    from semstreams_spark.streaming.rules_stage import rule_states_view
     from semstreams_spark.streaming.sink import ExactlyOnceParquetSink
 
     monkeypatch.setattr(ExactlyOnceParquetSink, "COMPACT_EVERY", 2)
@@ -211,17 +211,21 @@ def test_crash_point_exactly_once(spark, tmp_path, monkeypatch, pipeline, table,
 
     def start():
         stream = read_transcript_stream(spark, indir, max_files_per_trigger=1)
-        if pipeline == "ingest":
-            return (*build_ingest_stream(stream, outdir, checkpoint_dir=ckpt, watermark="2 days"), None)
-        return rules_mod.build_ingest_with_rules(stream, outdir, rules, checkpoint_dir=ckpt, watermark="2 days")
+        return build_ingest_stream(
+            stream,
+            outdir,
+            checkpoint_dir=ckpt,
+            watermark="2 days",
+            rules=rules if pipeline == "rules" else None,
+        )
 
     with monkeypatch.context() as mp:
         fired = _crash_at(mp, point, table, batch=1)
-        q, _, _ = start()
+        q, _ = start()
         with pytest.raises(Exception, match="injected crash"):
             q.awaitTermination()
     assert fired == [point]
-    q, delta_sink, rule_stage = start()
+    q, delta_sink = start()
     q.awaitTermination()  # raises if the restart fails
     assert q.exception() is None
 
@@ -230,13 +234,14 @@ def test_crash_point_exactly_once(spark, tmp_path, monkeypatch, pipeline, table,
     got = delta_sink.read(spark).filter(F.col("kind") == "triple").select(*key)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.select(*key).collect()))
     _assert_clean_table(delta_sink)
-    if rule_stage is not None:
-        view = rules_mod.rule_states_view(batch.withColumn("kind", F.lit("triple")))
+    if pipeline == "rules":
+        view = rule_states_view(batch.withColumn("kind", F.lit("triple")))
         want = apply_cooldown(evaluate_rules(view, rules), rules)
         key = ["rule_id", "entity_id", "ts"]
-        got = rule_stage.sink.read(spark).select(*key)
+        rule_sink = ExactlyOnceParquetSink(os.path.join(outdir, "rule_events"))
+        got = rule_sink.read(spark).select(*key)
         assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.select(*key).collect()))
-        _assert_clean_table(rule_stage.sink)
+        _assert_clean_table(rule_sink)
 
 
 def test_restart_after_commit_log_lost(spark, tmp_path):
@@ -465,7 +470,8 @@ def test_streaming_rule_stage_kill_resume(spark, tmp_path, monkeypatch):
     global greedy apply_cooldown) over the same committed deltas —
     the streaming analogue of the rule_events/alert_cooldown gates."""
     from semstreams_spark.rules.engine import apply_cooldown, evaluate_rules
-    from semstreams_spark.streaming.rules_stage import build_ingest_with_rules, rule_states_view
+    from semstreams_spark.streaming.rules_stage import rule_states_view
+    from semstreams_spark.streaming.sink import ExactlyOnceParquetSink
 
     rules = _rules()
     indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
@@ -474,18 +480,17 @@ def test_streaming_rule_stage_kill_resume(spark, tmp_path, monkeypatch):
     stream = read_transcript_stream(spark, indir, max_files_per_trigger=1)
     with monkeypatch.context() as mp:
         _crash_at(mp, "rule_stage", "rule_events", batch=1)
-        q, _, _ = build_ingest_with_rules(stream, outdir, rules, checkpoint_dir=ckpt, watermark="2 days")
+        q, _ = build_ingest_stream(stream, outdir, checkpoint_dir=ckpt, watermark="2 days", rules=rules)
         with pytest.raises(Exception, match="injected crash"):
             q.awaitTermination()
 
     stream2 = read_transcript_stream(spark, indir, max_files_per_trigger=1)
-    q2, delta_sink, rule_stage = build_ingest_with_rules(
-        stream2, outdir, rules, checkpoint_dir=ckpt, watermark="2 days"
-    )
+    q2, delta_sink = build_ingest_stream(stream2, outdir, checkpoint_dir=ckpt, watermark="2 days", rules=rules)
     q2.awaitTermination()
 
+    rule_sink = ExactlyOnceParquetSink(os.path.join(outdir, "rule_events"))
     got = sorted(
-        map(tuple, rule_stage.sink.read(spark).select("rule_id", "entity_id", "ts").collect())
+        map(tuple, rule_sink.read(spark).select("rule_id", "entity_id", "ts").collect())
     )
     deltas = delta_sink.read(spark)
     want_df = apply_cooldown(evaluate_rules(rule_states_view(deltas), rules), rules)
@@ -497,7 +502,7 @@ def test_streaming_rule_stage_kill_resume(spark, tmp_path, monkeypatch):
     assert [ts.second + 60 * ts.minute for (_, _, ts) in ent] == [0, 60, 120, 180]
     assert [t for t in got if t[0] == "calc_used"]  # the no-cooldown rule fired
     # every committed batch has a ledger row on BOTH tables
-    assert {e["batch_id"] for e in rule_stage.sink.ledger()} <= {
+    assert {e["batch_id"] for e in rule_sink.ledger()} <= {
         e["batch_id"] for e in delta_sink.ledger()
     }
     # the rules pipeline pins the state layout too (8 buckets per state
@@ -511,8 +516,6 @@ def test_old_layout_checkpoint_fails_at_start(spark, tmp_path, pipeline):
     """Both pipelines refuse a checkpoint whose merge state is not keyed
     by hash bucket — a "tws" marker, or no marker but offsets/ — before
     the query starts, and leave the checkpoint as found."""
-    from semstreams_spark.streaming.rules_stage import build_ingest_with_rules
-
     indir, outdir = str(tmp_path / "in"), str(tmp_path / "out")
     _write_file(indir, "f0.parquet", _mk_rows("c0", 3, T0))
     tws = tmp_path / "ck_tws"
@@ -523,10 +526,8 @@ def test_old_layout_checkpoint_fails_at_start(spark, tmp_path, pipeline):
     for ckpt in (tws, unmarked):
         stream = read_transcript_stream(spark, indir)
         with pytest.raises(RuntimeError, match="restart from a fresh checkpoint"):
-            if pipeline == "ingest":
-                q, _ = build_ingest_stream(stream, outdir, checkpoint_dir=str(ckpt))
-            else:
-                q, _, _ = build_ingest_with_rules(stream, outdir, [], checkpoint_dir=str(ckpt))
+            rules = [] if pipeline == "rules" else None
+            q, _ = build_ingest_stream(stream, outdir, checkpoint_dir=str(ckpt), rules=rules)
             q.stop()  # reached only when the check is missing
     assert (tws / "_state_engine").read_text() == "tws"
     assert sorted(os.listdir(unmarked)) == ["offsets"]

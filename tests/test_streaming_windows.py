@@ -1,66 +1,75 @@
-"""Streaming windowed aggregates, session windows, and write-coalescing
-parity (reference: 20 rapid updates → <10 writes,
-processor_performance_test.go:164 — here: one coalesced sink commit per
-micro-batch regardless of per-entity update count)."""
+"""The registry's window, session and interval-join operators run
+unchanged on a watermarked stream, and write coalescing (reference: 20
+rapid updates → <10 writes, processor_performance_test.go:164 — here:
+one coalesced sink commit per micro-batch regardless of per-entity
+update count)."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
-from pyspark.sql import functions as F
+import pytest
 
-from semstreams_spark.operators.sessions import session_window_streaming
+from semstreams_spark.extract.triples import mention_edges
+from semstreams_spark.operators.joins import tool_request_interval_join
+from semstreams_spark.operators.sessions import sessionize
+from semstreams_spark.operators.windows import node_degree_sliding
 from semstreams_spark.streaming import build_ingest_stream, read_transcript_stream
-from semstreams_spark.streaming.pipeline import windowed_degree_stream
+from semstreams_spark.streaming.pipeline import TRANSCRIPT_DDL
 from tests.test_streaming import _mk_rows, _write_file
 
 T0 = dt.datetime(2025, 1, 1)
 
+OPERATORS = {
+    "interval_join": tool_request_interval_join,
+    "sessions": sessionize,
+    "sliding_degree": lambda t: node_degree_sliding(mention_edges(t)),
+}
 
-def _stream(spark, indir, mfpt=10):
-    return read_transcript_stream(spark, indir, max_files_per_trigger=mfpt)
+
+def _turns():
+    """Two conversations: tool turns 20 s, 50 s, exactly 60 s and 90 s
+    after a request; a 61-minute gap; mentions across several windows."""
+    m, s = dt.timedelta(minutes=1), dt.timedelta(seconds=1)
+    return [
+        ("c1", 0, "user", "ask @entity:ent_x", None, T0),
+        ("c1", 1, "assistant", "will call @entity:ent_y", None, T0 + 30 * s),
+        ("c1", 2, "tool", "result", "calc", T0 + 50 * s),
+        ("c1", 3, "user", "later @entity:ent_x", None, T0 + 61 * m),
+        ("c1", 4, "tool", "late result", "search", T0 + 61 * m + 90 * s),
+        ("c2", 0, "user", "@entity:ent_x and @entity:ent_x", None, T0 + 4 * m),
+        ("c2", 1, "tool", "r", "calc", T0 + 5 * m),
+        ("c2", 2, "assistant", "@entity:ent_y", None, T0 + 7 * m),
+    ]
 
 
-def _run_to_memory(df, name):
+@pytest.mark.parametrize("op", sorted(OPERATORS))
+def test_stream_equals_batch(spark, tmp_path, op):
+    """The registry operator on a watermarked file stream gives exactly
+    its rows on a batch read of the first file: a closing file hours later
+    (no tool turn) moves the watermark past every window, session and join
+    range of the first, and leaves its own windows and sessions open."""
+    indir = str(tmp_path / "in")
+    _write_file(indir, "f1.parquet", _turns())
+    _write_file(indir, "f2.parquet", _mk_rows("c9", 2, T0 + dt.timedelta(hours=5)))
+    stream = read_transcript_stream(spark, indir).withWatermark("ts", "1 minute")
     q = (
-        df.writeStream.outputMode("append")
+        OPERATORS[op](stream)
+        .writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
+        .queryName(f"stream_{op}")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return q
-
-
-def test_windowed_degree_stream(spark, tmp_path):
-    indir = str(tmp_path / "in")
-    rows = _mk_rows("c1", 6, T0, mention="ent_x") + _mk_rows("c2", 4, T0, mention="ent_y")
-    _write_file(indir, "f1.parquet", rows)
-    # close the window: a much later row pushes the watermark past it
-    _write_file(indir, "f2.parquet", _mk_rows("c3", 2, T0 + dt.timedelta(hours=2)))
-
-    agg = windowed_degree_stream(_stream(spark, indir, mfpt=1), watermark="1 minute", width="5 minutes")
-    _run_to_memory(agg, "deg_out")
-    out = {(r["entity"], r["window_start"]): r for r in spark.sql("select * from deg_out").collect()}
-    ent_x = [v for (e, _), v in out.items() if e == "ent_x"]
-    assert ent_x and sum(r["in_degree"] for r in ent_x) == 6
-    assert all(r["window_start"].minute % 5 == 0 for r in out.values())
-
-
-def test_session_window_streaming(spark, tmp_path):
-    indir = str(tmp_path / "in")
-    rows = _mk_rows("c1", 3, T0) + _mk_rows("c1", 2, T0 + dt.timedelta(hours=1))
-    # turn_idx overlap would dedup rows — shift the second session's idx
-    rows = rows[:3] + [("c1", i + 10, r, t, tool, ts) for (_, i, r, t, tool, ts) in rows[3:]]
-    _write_file(indir, "f1.parquet", rows)
-    _write_file(indir, "f2.parquet", _mk_rows("c9", 2, T0 + dt.timedelta(hours=5)))
-
-    sw = session_window_streaming(_stream(spark, indir, mfpt=1), gap="30 minutes", watermark="1 minute")
-    _run_to_memory(sw, "sess_out")
-    sessions = spark.sql("select * from sess_out where conv_id = 'c1'").collect()
-    assert len(sessions) == 2
-    assert sorted(r["n_turns"] for r in sessions) == [2, 3]
+    got = spark.sql(f"select * from stream_{op}")
+    batch = spark.read.schema(TRANSCRIPT_DDL).parquet(os.path.join(indir, "f1.parquet"))
+    want = OPERATORS[op](batch)
+    # the stream's event-time column carries watermark metadata
+    assert got.schema.simpleString() == want.schema.simpleString()
+    want_rows = sorted(map(tuple, want.collect()))
+    assert want_rows and sorted(map(tuple, got.collect())) == want_rows
 
 
 def test_write_coalescing_one_commit_per_batch(spark, tmp_path):

@@ -9,9 +9,9 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from semstreams_spark.extract.triples import (
+    MENTION_NAMES,
     entity_id,
     entity_id_of,
-    mention_names,
     node_type,
     turn_subject,
 )
@@ -29,7 +29,7 @@ def t(minutes):
 
 def composed_oracle(transcripts, deletes):
     men = transcripts.select(
-        F.explode(mention_names()).alias("e"), "ts", F.col("turn_idx").cast("int").alias("seq")
+        F.explode(F.expr(MENTION_NAMES)).alias("e"), "ts", F.col("turn_idx").cast("int").alias("seq")
     ).select(entity_id(F.col("e")).alias("id"), "ts", "seq")
     nodes = (
         men.groupBy("id")

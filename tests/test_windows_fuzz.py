@@ -162,7 +162,7 @@ def test_sessionize_differential(spark, rows):
                      CAST(SUM(new_session) OVER (PARTITION BY conv_id ORDER BY ts, turn_idx
                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
               FROM o)
-            SELECT conv_id, session_id, MIN(ts) AS session_start,
+            SELECT conv_id, MIN(ts) AS session_start,
                    MAX(ts) AS session_end, COUNT(*) AS n_turns
             FROM s GROUP BY conv_id, session_id""",
     )

@@ -73,6 +73,7 @@ def main():
     args = ap.parse_args()
 
     from semstreams_spark.datagen import ensure_transcripts, transcripts_path
+    from semstreams_spark.rules.engine import DEFAULT_RULES
     from semstreams_spark.session import get_spark
     from semstreams_spark.streaming import build_ingest_stream, read_transcript_stream
 
@@ -117,15 +118,13 @@ def main():
 
     stream = read_transcript_stream(spark, indir, max_files_per_trigger=1)
     t0 = time.monotonic()
-    if args.rules:
-        from semstreams_spark.rules.engine import DEFAULT_RULES
-        from semstreams_spark.streaming.rules_stage import build_ingest_with_rules
-
-        q, _, _ = build_ingest_with_rules(
-            stream, outdir, DEFAULT_RULES, checkpoint_dir=ckpt, watermark=args.watermark
-        )
-    else:
-        q, _ = build_ingest_stream(stream, outdir, checkpoint_dir=ckpt, watermark=args.watermark)
+    q, _ = build_ingest_stream(
+        stream,
+        outdir,
+        checkpoint_dir=ckpt,
+        watermark=args.watermark,
+        rules=DEFAULT_RULES if args.rules else None,
+    )
     q.awaitTermination()
     wall = time.monotonic() - t0
 
