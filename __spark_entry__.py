@@ -30,12 +30,13 @@ from semstreams_spark.extract.triples import (
     conversation_id,
     entity_id,
     entity_id_of,
+    mention_context_texts,
     mention_edges,
     mention_ids,
     mention_rows,
     turn_subject,
 )
-from semstreams_spark.operators import edges_table
+from semstreams_spark.graph.comention import entity_edges, parity_edges
 from semstreams_spark.operators.merge import (
     edges_table_source_clustered,
     entity_states_source_clustered,
@@ -73,10 +74,10 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: full ingest pipeline at sf0.001 — transcripts → triples →
-    LWW entity states → edge upsert."""
+    """Flagship: the entity graph's edge table at sf0.001, from transcripts
+    (the triples' relationship edges, keyed (src, dst, edge_type))."""
     t = _transcripts(spark, "/root/testdata/sf0.001")
-    return edges_table(extract_triples(t))
+    return edges_table_source_clustered(t)
 
 
 # ---------------------------------------------------------------- graph core
@@ -87,30 +88,25 @@ def q_triples_extract(spark, sf_dir):
 
 
 def q_entity_states(spark, sf_dir):
-    """r6: source-clustered form — same rows as
-    entity_states(extract_triples(t)) (parity-tested + oracle-gated), with
-    the aggregation sort+exchange of the full triple fan-out removed
-    (guide §2.4/§8: (conv_id, turn_idx) is unique, so no LWW group spans
-    input rows)."""
+    """The LWW entity-state table, one row per (subject, predicate)."""
     return entity_states_source_clustered(_transcripts(spark, sf_dir))
 
 
 def q_graph_nodes(spark, sf_dir):
-    """r6: source-clustered form of the node table of extract_triples(t)
-    (parity twin: tests/merge_reference.nodes_table)."""
+    """The node table, one row per turn subject."""
     return nodes_table_source_clustered(_transcripts(spark, sf_dir))
 
 
 def q_graph_edges(spark, sf_dir):
-    """r6: source-clustered form of edges_table(extract_triples(t))."""
+    """The edge table, keyed (src, dst, edge_type)."""
     return edges_table_source_clustered(_transcripts(spark, sf_dir))
 
 
 def q_edges_resolved(spark, sf_dir):
-    """Mention edges with dst resolved through the broadcast alias dim (J1).
-    r6: the entity_ref rows derive directly from transcripts (one in-edge
-    per turn + one row per mention occurrence) — identical to filtering
-    the full triple fan-out, without materializing it (oracle-gated)."""
+    """Turn edges (in- and mention edges) with dst resolved through the
+    broadcast alias dim (J1), grouped on the resolved key. One row per
+    observation, not ``edges_table_source_clustered``: its per-row mention
+    count made this query about 25% slower (warm, sf0.1)."""
     t = _transcripts(spark, sf_dir)
     al = _aliases(spark, sf_dir).select(
         entity_id(F.col("alias")).alias("alias"),
@@ -313,112 +309,12 @@ def q_hybrid_search(spark, sf_dir):
 # --------------------------------------------------------- graph analytics
 
 
-def _conv_pair_counts(spark, sf_dir):
-    """(src, dst, c): partial co-mention pair counts per Arrow batch —
-    Σc over batches == the per-conversation pair multiset (the Catalyst
-    form is ``conv_entity_pairs`` in ``tests/kernel_reference.py``;
-    guide §2.3/§4.2).
-
-    Why: the Zipf mention vocabulary makes hot conversations mention most
-    of the ~200-entity vocab, so the pair EXPLOSION is ~3.7M rows at
-    sf0.1 that immediately collapse to 31k distinct edges. The kernel
-    pre-aggregates inside each batch with a V×V count matrix over the
-    batch-local sorted vocab (np.unique order == Spark's binary string
-    order), emitting ≤ V²/2 partial rows per batch instead of Σk² structs
-    through an interpreted HOF + hash-agg probe. Batches whose local
-    vocab exceeds 4096 fall back to plain per-conversation pair emission
-    (no V² matrix) — the kernel stays memory-safe on unbounded entity
-    vocabularies, where downstream aggregation does the collapsing
-    exactly as the Catalyst form. Measured: edges derive 2.17 → 1.26 s
-    warm at sf0.1; outputs identical (A/B + weight cross-check)."""
-    m = mention_rows(_transcripts(spark, sf_dir)).select("conv_id", "e")
-    # no sort_array here (unlike the Catalyst reference form): the
-    # matrix path sorts via np.unique + searchsorted regardless of input
-    # order, and the fallback path np.sorts per row — dropping the
-    # per-group JVM array sort saves ~0.09 s per derive (×6 graph queries)
-    per_conv = m.groupBy("conv_id").agg(F.expr("collect_set(e) as ents"))
-    return per_conv.select("ents").mapInPandas(
-        _pair_count_batches, "src string, dst string, c long"
-    )
-
-
-# largest batch vocabulary the pair kernel counts in a V×V matrix
-MAX_MATRIX_VOCAB = 4096
-
-
-def _pair_count_batches(it):
-    """mapInPandas kernel for `_conv_pair_counts` (module-level so the
-    fallback branch is directly unit-testable): per Arrow batch of `ents`
-    arrays (unordered entity sets), emit partial (src, dst, c) pair
-    counts with src < dst.
-
-    Precondition: each `ents` row is duplicate-free (`_conv_pair_counts`
-    feeds `collect_set` output). It is not checked per row. A repeated
-    entity makes the branches disagree: the matrix branch's buffered
-    fancy-index `M[np.ix_(idx, idx)] += 1` adds once per distinct cell, so
-    the repeat is dropped, while the pair branch emits every (i < j)
-    position pair, so it counts the repeated entity's pairs twice and
-    emits a self pair (e, e)."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in it:
-        arrs = pdf["ents"]
-        if not len(arrs):
-            continue
-        vocab = np.unique(np.concatenate(list(arrs)))
-        V = len(vocab)
-        if V <= MAX_MATRIX_VOCAB:
-            M = np.zeros((V, V), dtype=np.int64)
-            for ents in arrs:
-                if len(ents) < 2:
-                    continue
-                idx = np.searchsorted(vocab, ents)
-                M[np.ix_(idx, idx)] += 1
-            iu, ju = np.triu_indices(V, 1)
-            c = M[iu, ju]
-            nz = c > 0
-            yield pd.DataFrame(
-                {"src": vocab[iu[nz]], "dst": vocab[ju[nz]], "c": c[nz]}
-            )
-        else:
-            srcs, dsts, cache = [], [], {}
-            for ents in arrs:
-                k = len(ents)
-                if k < 2:
-                    continue
-                ents = np.sort(ents)  # (i<j) pair emission needs lex order
-                ij = cache.get(k)
-                if ij is None:
-                    ij = cache.setdefault(k, np.triu_indices(k, 1))
-                srcs.append(ents[ij[0]])
-                dsts.append(ents[ij[1]])
-            if srcs:
-                yield pd.DataFrame(
-                    {
-                        "src": np.concatenate(srcs),
-                        "dst": np.concatenate(dsts),
-                        "c": np.ones(sum(len(s) for s in srcs), dtype=np.int64),
-                    }
-                )
-
-
-def _entity_edges(spark, sf_dir):
-    """Entity co-mention graph: distinct (e1 < e2) pairs per conversation.
-    r6: batch-preaggregated pair-count kernel + distinct replaces the
-    m⋈m self-join — identical rows (a sorted distinct set's (i<j) pairs
-    ARE the a.e<b.e join output), oracle-gated via every graph-family
-    query."""
-    return _conv_pair_counts(spark, sf_dir).select("src", "dst").distinct()
-
-
 def q_paths_2hop(spark, sf_dir):
     """G1 path enumeration (PathResult parity): explicit node sequences
     with decayed scores under a MaxPaths budget + truncated flag."""
     from semstreams_spark.graph import traversal_paths
 
-    edges = _entity_edges(spark, sf_dir)
-    p = traversal_paths(edges, "ent_000")
+    p = traversal_paths(entity_edges(_transcripts(spark, sf_dir)), "ent_000")
     return p.select(F.array_join("path", "->").alias("path"), "depth", "score", "truncated")
 
 
@@ -433,25 +329,8 @@ def q_pagerank_entities(spark, sf_dir):
     cluster size."""
     from semstreams_spark.graph import pagerank_exact
 
-    pr = pagerank_exact(_entity_edges(spark, sf_dir))
+    pr = pagerank_exact(entity_edges(_transcripts(spark, sf_dir)))
     return pr.orderBy(F.desc("rank"), F.asc("entity")).limit(20)
-
-
-def _parity_edges(spark, sf_dir):
-    """Structured co-mention graph for the hierarchy gate: the raw Zipf
-    co-mention graph has no community structure (LPA collapses it to one
-    label), so split entities into two dense cohorts by numeric-suffix
-    parity (co-occurrence weight >= 3 intra-cohort) bridged only by the
-    strongest cross-cohort ties (weight >= 300) — level 0 finds the two
-    cohorts, level 1 merges them through the bridges."""
-    pairs = _conv_pair_counts(spark, sf_dir).groupBy("src", "dst").agg(
-        F.sum("c").alias("w")
-    )
-    par = lambda c: F.element_at(F.split(F.col(c), "_"), -1).try_cast("int") % 2  # noqa: E731
-    same = par("src") == par("dst")
-    return pairs.filter((same & (F.col("w") >= 3)) | (~same & (F.col("w") >= 300))).select(
-        "src", "dst"
-    )
 
 
 def q_lpa_hierarchy(spark, sf_dir):
@@ -460,7 +339,7 @@ def q_lpa_hierarchy(spark, sf_dir):
     (entity, level, community) over the structured parity graph."""
     from semstreams_spark.graph import lpa_hierarchy
 
-    return lpa_hierarchy(_parity_edges(spark, sf_dir))
+    return lpa_hierarchy(parity_edges(_transcripts(spark, sf_dir)))
 
 
 def q_json_filter_events(spark, sf_dir):
@@ -499,27 +378,9 @@ def q_alert_cooldown(spark, sf_dir):
 GRAPHRAG_QUERY = "ent_000 ent_001"
 
 
-def _mention_context_texts(spark, sf_dir):
-    """(entity, text): each entity's LATEST mention-context turn text, LWW
-    on (ts, seq, text) — the real node text the reference scores against
-    (not a name surrogate); one max_by hash-agg, scale-safe.
-
-    r6: derived directly from transcripts — the mention triple and the
-    text triple of one turn come from the SAME transcript row, so the old
-    men⋈txt join on subject (two shuffles of extraction output) is the
-    identity: (entity, turn.text, ts, seq) per mention occurrence. The
-    max_by partial-aggregates map-side to ~one row per entity per scan
-    partition, so the remaining exchange carries O(entities × partitions)
-    rows instead of the joined mention stream (guide §2.3/§2.4)."""
-    men = mention_rows(_transcripts(spark, sf_dir)).select(F.col("e").alias("entity"), "text", "ts", "seq")
-    return men.groupBy("entity").agg(
-        F.max_by("text", F.struct("ts", "seq", "text")).alias("text")
-    )
-
-
 # Planted near-dup cosine levels: just-above-threshold, mid, high — the
 # banded LSH must recover pairs near the 0.95 threshold, not only trivial
-# ≈0.999 dups (the round-2 single-band gate's weakness).
+# ≈0.999 dups.
 PLANT_COS = (0.9501, 0.9601, 0.9801)
 # 8 = lsh_band_params(0.95, rows_per_band=6) at a recall target of 0.995; r=6
 # keeps the gate corpus well-bucketed (64 buckets/band over ~550 vectors)
@@ -596,9 +457,8 @@ def q_embedding_neardup_lsh(spark, sf_dir):
     (b=8 bands × r=6 planes, b derived from threshold 0.95 at recall
     target 0.995 via lsh_band_params) + exact-cosine verify, gated over a
     corpus with exact-rotation plants at cos ∈ {0.9501, 0.9601, 0.9801} —
-    at/near-threshold pairs, where the round-2 single-band signature had
-    ≈18-34% recall. Full-recovery assertion: tests/test_dedup_similarity
-    .py::test_banded_neardup_recovers_all_plants."""
+    at/near-threshold pairs. Full-recovery assertion: tests/
+    test_dedup_similarity.py::test_banded_neardup_recovers_all_plants."""
     from semstreams_spark.operators.dedup import embedding_near_dups
 
     e = _tbl(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -621,11 +481,10 @@ def q_graphrag_global(spark, sf_dir):
     from semstreams_spark.graph.graphrag import global_search
     from semstreams_spark.graph.summarize import community_summaries
 
-    edges = _entity_edges(spark, sf_dir).filter(
-        F.col("src").startswith("ent_") & F.col("dst").startswith("ent_")
-    )
+    t = _transcripts(spark, sf_dir)
+    edges = entity_edges(t).filter(F.col("src").startswith("ent_") & F.col("dst").startswith("ent_"))
     members = lpa_communities(edges)
-    texts = _mention_context_texts(spark, sf_dir)
+    texts = mention_context_texts(t)
     summaries = community_summaries(members, texts)
     return global_search(members, summaries, texts, GRAPHRAG_QUERY)
 
@@ -699,29 +558,28 @@ def q_entity_semantic_topk(spark, sf_dir):
     from semstreams_spark.operators.similarity import cosine_topk
     from semstreams_spark.search.embedder import embed_entities_deduped, embed_text_py
 
-    emb = embed_entities_deduped(_mention_context_texts(spark, sf_dir))
+    emb = embed_entities_deduped(mention_context_texts(_transcripts(spark, sf_dir)))
     top = cosine_topk(emb, embed_text_py(ENTITY_QUERY), id_col="entity")
     return top.select(F.col("vec_id").alias("entity"), F.round("cosine", 6).alias("cosine"))
 
 
 def q_media_wav_decode(spark, sf_dir):
-    """REAL media decode path (round-2 gap #3): stdlib-wave decode of the
-    synthetic audio WAV payloads via Arrow-batched mapInPandas —
-    sample_rate/channels/width/frames read from the actual RIFF header,
-    duration + int16 sample sum from the decoded frames; the oracle
-    recomputes every field analytically from the generator contract
-    (synth_wav_bytes)."""
+    """Media decode path: stdlib-wave decode of the synthetic audio WAV
+    payloads via Arrow-batched mapInPandas — sample_rate/channels/width/
+    frames read from the actual RIFF header, duration + int16 sample sum
+    from the decoded frames; the oracle recomputes every field
+    analytically from the generator contract (synth_wav_bytes)."""
     from semstreams_spark.operators.multimodal import decode_wav_features, synthesize_media
 
     return decode_wav_features(synthesize_media(spark))
 
 
 def q_media_png_decode(spark, sf_dir):
-    """REAL image decode path (round-3 gap #2): stdlib-zlib PNG decode
-    (signature + chunk walk + inflate + full scanline unfiltering, all
-    five filter types) of synthetic RGB PNGs via Arrow-batched
-    mapInPandas; the oracle recomputes width/height and exact per-channel
-    pixel sums analytically from the generator contract
+    """Image decode path: stdlib-zlib PNG decode (signature + chunk walk +
+    inflate + full scanline unfiltering, all five filter types) of
+    synthetic RGB PNGs via Arrow-batched mapInPandas; the oracle
+    recomputes width/height and exact per-channel pixel sums
+    analytically from the generator contract
     (synth_png_bytes: pixel byte p of image i = (i·131 + p·197) mod 256,
     scanline filters cycling 0-4 so unfiltering is actually proven)."""
     from semstreams_spark.operators.multimodal import decode_png_features, synthesize_png_media
@@ -730,14 +588,14 @@ def q_media_png_decode(spark, sf_dir):
 
 
 def q_media_mp4_metadata(spark, sf_dir):
-    """REAL video-container metadata path (round-5 worklist #5): stdlib
-    struct walk of ISO BMFF ftyp/moov/mvhd/trak/mdia/stbl boxes
-    (operators/mp4.py) over synthetic spec-shaped MP4 payloads via
-    Arrow-batched mapInPandas — brand, movie timescale/duration, track
-    count, handler types, and codec fourccs read from the actual boxes
-    (both 32-bit v0 and 64-bit v1 headers exercised); the oracle
-    recomputes every field analytically from the generator contract
-    (synth_mp4_bytes: duration_ms = 1000 + 250·i, tracks = 1 + i%2)."""
+    """Video-container metadata path: stdlib struct walk of ISO BMFF
+    ftyp/moov/mvhd/trak/mdia/stbl boxes (operators/mp4.py) over synthetic
+    spec-shaped MP4 payloads via Arrow-batched mapInPandas — brand, movie
+    timescale/duration, track count, handler types, and codec fourccs
+    read from the actual boxes (both 32-bit v0 and 64-bit v1 headers
+    exercised); the oracle recomputes every field analytically from the
+    generator contract (synth_mp4_bytes: duration_ms = 1000 + 250·i,
+    tracks = 1 + i%2)."""
     from semstreams_spark.operators.multimodal import extract_video_metadata, synthesize_mp4_media
 
     return extract_video_metadata(synthesize_mp4_media(spark))
@@ -749,11 +607,10 @@ def q_graphrag_local(spark, sf_dir):
     from semstreams_spark.graph import lpa_communities
     from semstreams_spark.graph.graphrag import local_search
 
-    edges = _entity_edges(spark, sf_dir).filter(
-        F.col("src").startswith("ent_") & F.col("dst").startswith("ent_")
-    )
+    t = _transcripts(spark, sf_dir)
+    edges = entity_edges(t).filter(F.col("src").startswith("ent_") & F.col("dst").startswith("ent_"))
     members = lpa_communities(edges)
-    texts = _mention_context_texts(spark, sf_dir)
+    texts = mention_context_texts(t)
     return local_search(members, texts, "ent_001", GRAPHRAG_QUERY)
 
 
@@ -834,8 +691,9 @@ def q_context_flags(spark, sf_dir):
     from semstreams_spark.rules.context_flags import context_flags_df
     from semstreams_spark.rules.engine import Condition, Rule
 
-    edges = _entity_edges(spark, sf_dir)
-    men = mention_rows(_transcripts(spark, sf_dir)).select(F.col("e").alias("entity"), "ts")
+    t = _transcripts(spark, sf_dir)
+    edges = entity_edges(t)
+    men = mention_rows(t).select(F.col("e").alias("entity"), "ts")
     states = men.groupBy("entity").agg(
         F.count(F.lit(1)).alias("n"), F.max("ts").alias("ts")
     ).select(

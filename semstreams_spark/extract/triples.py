@@ -60,10 +60,11 @@ The mention derives, which the mention-keyed queries and the streaming
 window share:
 
 - :func:`mention_rows` — one row per mention occurrence;
-- :func:`mention_edges` — one (entity, turn) edge per mention occurrence.
+- :func:`mention_edges` — one (entity, turn) edge per mention occurrence;
+- :func:`mention_context_texts` — each entity's latest mention text.
 
 ``IN_EDGE`` and ``MENTIONS_EDGE`` are the edge types of the two
-relationship predicates (``operators.merge.predicate_to_edge_type``).
+relationship predicates (``tests/merge_reference.predicate_to_edge_type``).
 """
 
 from __future__ import annotations
@@ -207,4 +208,21 @@ def mention_edges(transcripts: DataFrame) -> DataFrame:
     """(src = entity id, dst = turn subject, ts) per mention occurrence."""
     return mention_rows(transcripts).select(
         entity_id(F.col("e")).alias("src"), turn_subject().alias("dst"), "ts"
+    )
+
+
+def mention_context_texts(transcripts: DataFrame) -> DataFrame:
+    """(entity, text): each entity's LATEST mention-context turn text, LWW
+    on (ts, seq, text) — the real node text the graph search scores
+    against (not a name surrogate); one max_by hash-agg, scale-safe.
+
+    The mention triple and the text triple of one turn come from the SAME
+    transcript row, so the men⋈txt join on subject is the identity:
+    (entity, turn.text, ts, seq) per mention occurrence. The max_by
+    partial-aggregates map-side to ~one row per entity per scan
+    partition, so the exchange carries O(entities × partitions) rows
+    instead of the mention stream (guide §2.3/§2.4)."""
+    men = mention_rows(transcripts).select(F.col("e").alias("entity"), "text", "ts", "seq")
+    return men.groupBy("entity").agg(
+        F.max_by("text", F.struct("ts", "seq", "text")).alias("text")
     )

@@ -50,15 +50,6 @@ from ..extract.triples import (
 # greatest wins — shared by entity_states and the DuckDB oracles.
 
 
-def predicate_to_edge_type(pred: Column) -> Column:
-    """'a.b.c' -> 'c_b' (last two parts swapped, '_'-joined); 1-part ids pass through."""
-    parts = F.split(pred, r"\.")
-    return F.when(
-        F.size(parts) >= 2,
-        F.concat_ws("_", F.element_at(parts, -1), F.element_at(parts, -2)),
-    ).otherwise(pred)
-
-
 def entity_states(triples: DataFrame) -> DataFrame:
     """Latest (object, object_type, ts) per (subject, predicate) — the flat
     entity-state table (one row per live property/relationship).
@@ -168,7 +159,8 @@ def graph_snapshot(
 
 
 def edges_table_source_clustered(transcripts: DataFrame) -> DataFrame:
-    """``edges_table(extract_triples(transcripts))`` without the exchange,
+    """The edge table of ``extract_triples(transcripts)`` without the exchange
+    (its per-key aggregate twin is ``tests/merge_reference.edges_table``),
     under the unique-``(conv_id, turn_idx)`` contract: the edge key
     ``(src, dst, edge_type)`` has ``src`` = the turn subject, so every edge
     group lives inside one input row — the in-edge is a singleton and each
@@ -202,31 +194,5 @@ def edges_table_source_clustered(transcripts: DataFrame) -> DataFrame:
             F.col("ts").alias("created_at"),
             F.col("ts").alias("updated_at"),
             F.col("e.n_obs").alias("n_obs"),
-        )
-    )
-
-
-def edges_table(triples: DataFrame) -> DataFrame:
-    """Edge upsert from relationship triples.
-
-    Key (src, dst, edge_type); newest observation wins for weight/properties
-    (``types/graph/types.go:125-134``), created_at keeps the earliest
-    observation, n_obs counts observations (drives co-occurrence weights).
-    """
-    rel = triples.filter(F.col("object_type") == "entity_ref")
-    return (
-        rel.select(
-            F.col("subject").alias("src"),
-            F.col("object").alias("dst"),
-            predicate_to_edge_type(F.col("predicate")).alias("edge_type"),
-            "confidence",
-            "ts",
-        )
-        .groupBy("src", "dst", "edge_type")
-        .agg(
-            F.max_by("confidence", F.struct("ts")).alias("weight"),
-            F.min("ts").alias("created_at"),
-            F.max("ts").alias("updated_at"),
-            F.count(F.lit(1)).alias("n_obs"),
         )
     )

@@ -57,11 +57,10 @@ def entity_cooccurrence(mentions: DataFrame) -> DataFrame:
     same conversation within the same ``WIDTH`` tumbling window.
 
     Input: (conv_id, entity, ts). Pairs are oriented e1 < e2.
-    Scale note: the per-(window, conv) distinct-entity set is tiny (bounded
-    by mention vocab per conversation window), so the self-join explodes at
-    most k^2 per group — the shuffle key (window, conv_id) is also the join
-    key, so AQE handles hot conversations; at 100TB add conv salting on the
-    groupBy (see streaming.pipeline).
+    Scale note: the per-(window, conv) distinct-entity set is small, so a
+    group's pair expansion emits at most k(k-1)/2 rows. A hot conversation
+    still lands in one task; ``operators.joins.salt_conv_key`` is the
+    salting that would split it, and this operator does not apply it.
     """
     per_group = (
         mentions.select(F.window("ts", WIDTH).alias("w"), "conv_id", "entity")

@@ -686,7 +686,7 @@ def sql_lpa_hierarchy(sf: float, levels: int = 2, max_iter: int = 8) -> str:
 
 
 # latest-mention-context text per entity (LWW on (ts, seq, text)) —
-# mirrors __spark_entry__._mention_context_texts
+# mirrors extract.triples.mention_context_texts
 _NODE_TEXTS_CTE = """
 men AS (
   SELECT str_split(object, '.')[-1] AS entity, subject, ts, seq
@@ -1090,7 +1090,7 @@ WHERE ts >= TIMESTAMP '{start}' AND ts < TIMESTAMP '{end}'"""
 
 
 def sql_rels_in(sf: float, entity_id: str) -> str:
-    """Reverse-edge lookup oracle — edges_table filtered on dst."""
+    """Reverse-edge lookup oracle — the edge table filtered on dst."""
     return f"""WITH {triples_cte(sf)},
 rel AS (
   SELECT subject AS src, object AS dst, {_EDGE_TYPE_SQL} AS edge_type, confidence, ts

@@ -28,7 +28,7 @@ def context_flags_df(
 ) -> DataFrame:
     """Evaluate rules over the ≤``traversal.MAX_DEPTH`` neighborhood of
     start_entity, following (src, dst) edges in both directions:
-    one (rule_id, flag) row per enabled rule — flag true iff ANY entity
+    one (rule_id, flag) row per rule — flag true iff ANY entity
     in the bounded neighborhood matches. The reference replies the same
     flags as a map over NATS; ``{r.rule_id: r.flag for r in collect()}``
     is that point-reply shape."""
@@ -43,9 +43,7 @@ def context_flags_df(
         .distinct()
         .withColumn("flag", F.lit(True))
     )
-    all_rules = spark.createDataFrame(
-        [(r.id,) for r in rules if r.enabled], "rule_id string"
-    )
+    all_rules = spark.createDataFrame([(r.id,) for r in rules], "rule_id string")
     return all_rules.join(fired, "rule_id", "left").select(
         "rule_id", F.coalesce(F.col("flag"), F.lit(False)).alias("flag")
     )

@@ -3,7 +3,8 @@ Column expressions over the entity-state stream.
 
 Mirrors the reference's rule processor semantics:
 - rule definition shape (``processor/rule/rule_factory.go:16-33``):
-  {id, name, enabled, conditions[], logic: and|or, cooldown}
+  {id, name, enabled, conditions[], logic: and|or, cooldown}; a disabled
+  rule is one the caller leaves out of the list
 - operators ``eq ne lt lte gt gte contains starts_with ends_with regex``
   (``rule_factory.go:208-213``)
 - AND/OR combine with **default OR** (``expression/evaluator.go:53-60``)
@@ -25,7 +26,7 @@ single Catalyst filter (no Python).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -46,12 +47,10 @@ class Rule:
     id: str
     conditions: tuple[Condition, ...]
     logic: str = "or"  # reference default is OR (evaluator.go:53-60)
-    enabled: bool = True
     cooldown_seconds: int = 0
     # R3: NATS-style subject subscription pattern — the rule only sees
     # entities whose id matches (message_handler.go:114-133); None = all
     subject_pattern: str | None = None
-    extra: dict = field(default_factory=dict)
 
 
 def _cond_expr(c: Condition, obj: Column) -> Column:
@@ -98,8 +97,8 @@ def evaluate_rules(entity_states: DataFrame, rules: list[Rule]) -> DataFrame:
     stream of rules unions at the end — Spark executes them as one scan of
     the cached/exchanged input in practice).
     """
-    simple = [r for r in rules if r.enabled and len(r.conditions) == 1]
-    complex_ = [r for r in rules if r.enabled and len(r.conditions) > 1]
+    simple = [r for r in rules if len(r.conditions) == 1]
+    complex_ = [r for r in rules if len(r.conditions) > 1]
 
     outs: list[DataFrame] = []
     if simple:
@@ -170,7 +169,7 @@ def evaluate_rules(entity_states: DataFrame, rules: list[Rule]) -> DataFrame:
                 matched = matched.join(present, "entity_id", "semi")
         outs.append(matched.select(F.lit(r.id).alias("rule_id"), "entity_id", "ts"))
     if not outs:
-        raise ValueError("no enabled rules")
+        raise ValueError("no rules to evaluate")
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)

@@ -81,7 +81,7 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     cores: local parallelism (defaults to $SPARK_GRAFT_CPUS or '*').
-    shuffle_partitions: defaults to cores (local mode rule of thumb).
+    shuffle_partitions: defaults to max(cores, 8).
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")

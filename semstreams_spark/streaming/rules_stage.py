@@ -16,8 +16,9 @@ Spark shape:
 - the cooldown's only cross-batch state — last fire per
   (rule_id, entity_id) — is DERIVED from the committed rule-events table
   itself rather than held in a separate store, so a crash can never
-  desync state from output: replayed batches are skipped by the ledger,
-  and the last-fire seed is rebuilt from exactly the committed prefix.
+  desync state from output: a replayed batch that the ledger holds is
+  drained with a ``noop`` write and publishes nothing, and the last-fire
+  seed is rebuilt from exactly the committed prefix.
 - the seed read is BOUNDED: a last fire older than max(cooldown) before
   the batch's min event time can never mute anything in the batch (every
   batch event is ≥ min event time, so its gap to such a fire already
@@ -85,9 +86,7 @@ class StreamingRuleStage:
     def __init__(self, out_dir: str, rules: list[Rule], checkpoint_dir: str | None = None):
         self.rules = rules
         self.sink = ExactlyOnceParquetSink(os.path.join(out_dir, "rule_events"), checkpoint_dir)
-        self.max_cooldown = max(
-            [r.cooldown_seconds for r in rules if r.enabled], default=0
-        )
+        self.max_cooldown = max((r.cooldown_seconds for r in rules), default=0)
         # the rule-event table's schema, kept from the first seed read:
         # later reads skip Spark's schema-inference job
         self._seed_schema = None

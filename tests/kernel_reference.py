@@ -14,7 +14,7 @@ kernels they pin, with ``_expr`` for the dedup and embedder forms.
 - ``banded_hyperplane_signatures`` → ``similarity.banded_signatures_numpy``
 - ``lang_id`` → ``textops.lang_id_table``
 - ``planted_neardup_corpus_catalyst`` → ``__spark_entry__.planted_neardup_corpus``
-- ``conv_entity_pairs`` → ``__spark_entry__._conv_pair_counts``
+- ``conv_entity_pairs`` → ``graph.comention.conv_pair_counts``
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from __spark_entry__ import PLANT_COS, _transcripts
+from __spark_entry__ import PLANT_COS
 from semstreams_spark.extract.triples import mention_rows
 from semstreams_spark.operators.similarity import N_PLANES, SIG_DIM, TOP_K, _hyperplane
 from semstreams_spark.operators.textops import LANG_STOPWORDS, portable_hash, tokens
@@ -315,7 +315,7 @@ def planted_neardup_corpus_catalyst(e):
     return e.unionByName(planted)
 
 
-def conv_entity_pairs(spark, sf_dir):
+def conv_entity_pairs(transcripts: DataFrame) -> DataFrame:
     """Per-conversation co-mention pairs (src < dst), one row per
     (conv, pair): mentions derived directly from transcripts (no triple
     fan-out), deduped per conversation by ONE collect_set aggregation
@@ -324,7 +324,7 @@ def conv_entity_pairs(spark, sf_dir):
     4.7× faster at sf0.1. The pure-Catalyst reference form of the
     pair-count kernel (parity A/B in OPTIMIZATION_r06.md; weights
     cross-checked in tests)."""
-    m = mention_rows(_transcripts(spark, sf_dir)).select("conv_id", "e")
+    m = mention_rows(transcripts).select("conv_id", "e")
     per_conv = m.groupBy("conv_id").agg(F.sort_array(F.collect_set("e")).alias("ents"))
     return per_conv.select(
         F.explode(

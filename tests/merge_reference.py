@@ -15,6 +15,9 @@ is strictly below the watermark.
 
 ``nodes_table`` is the node table as one aggregate per subject over the
 triples: the parity twin of ``operators.merge.nodes_table_source_clustered``.
+``edges_table`` (with ``predicate_to_edge_type``) is the edge table as one
+aggregate per (src, dst, edge_type) over the relationship triples: the
+parity twin of ``operators.merge.edges_table_source_clustered``.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ import zlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from semstreams_spark.extract.triples import node_type
@@ -186,4 +189,39 @@ def nodes_table(triples: DataFrame) -> DataFrame:
         .withColumn("type", node_type(F.col("id")))
         .withColumn("status", F.lit("active"))
         .select("id", "type", "status", "version", "updated_at")
+    )
+
+
+def predicate_to_edge_type(pred: Column) -> Column:
+    """'a.b.c' -> 'c_b' (last two parts swapped, '_'-joined); 1-part ids pass through."""
+    parts = F.split(pred, r"\.")
+    return F.when(
+        F.size(parts) >= 2,
+        F.concat_ws("_", F.element_at(parts, -1), F.element_at(parts, -2)),
+    ).otherwise(pred)
+
+
+def edges_table(triples: DataFrame) -> DataFrame:
+    """Edge upsert from relationship triples.
+
+    Key (src, dst, edge_type); newest observation wins for weight/properties
+    (``types/graph/types.go:125-134``), created_at keeps the earliest
+    observation, n_obs counts observations (drives co-occurrence weights).
+    """
+    rel = triples.filter(F.col("object_type") == "entity_ref")
+    return (
+        rel.select(
+            F.col("subject").alias("src"),
+            F.col("object").alias("dst"),
+            predicate_to_edge_type(F.col("predicate")).alias("edge_type"),
+            "confidence",
+            "ts",
+        )
+        .groupBy("src", "dst", "edge_type")
+        .agg(
+            F.max_by("confidence", F.struct("ts")).alias("weight"),
+            F.min("ts").alias("created_at"),
+            F.max("ts").alias("updated_at"),
+            F.count(F.lit(1)).alias("n_obs"),
+        )
     )

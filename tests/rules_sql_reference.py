@@ -118,8 +118,8 @@ def rule_sql(r: Rule, table: str = "states", dialect: str = "duckdb") -> str:
 
 
 def rules_sql(rules: list[Rule], table: str = "states", dialect: str = "duckdb") -> str:
-    """UNION ALL over enabled rules — the full evaluate_rules equivalent."""
-    parts = [rule_sql(r, table, dialect) for r in rules if r.enabled]
+    """UNION ALL over the rules — the full evaluate_rules equivalent."""
+    parts = [rule_sql(r, table, dialect) for r in rules]
     if not parts:
-        raise ValueError("no enabled rules")
+        raise ValueError("no rules to evaluate")
     return " UNION ALL ".join(parts)

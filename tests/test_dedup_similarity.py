@@ -605,7 +605,7 @@ def test_shingle_sets_kernel_matches_expr(spark, docs):
 
 def test_pair_count_kernel_fallback_matches_matrix_path(monkeypatch):
     """The V>cap fallback branch of the pair kernel (plain per-row pair
-    emission, r6 np.sort on UNSORTED collect_set input) must produce the
+    emission, np.sort on UNSORTED collect_set input) must produce the
     same aggregated pair counts as the V×V matrix branch and as brute
     force — exercised directly, with the 4096 cap patched to 1, since no
     sf corpus exceeds it."""
@@ -615,7 +615,7 @@ def test_pair_count_kernel_fallback_matches_matrix_path(monkeypatch):
     import numpy as np
     import pandas as pd
 
-    import __spark_entry__ as entry
+    from semstreams_spark.graph import comention
 
     rng = np.random.default_rng(7)
     vocab = np.array([f"ent_{i:05d}" for i in range(300)])
@@ -634,9 +634,9 @@ def test_pair_count_kernel_fallback_matches_matrix_path(monkeypatch):
                 c[(s, d)] += int(n)
         return c
 
-    matrix = agg(entry._pair_count_batches(iter([pdf])))
-    monkeypatch.setattr(entry, "MAX_MATRIX_VOCAB", 1)
-    fallback = agg(entry._pair_count_batches(iter([pdf])))
+    matrix = agg(comention._pair_count_batches(iter([pdf])))
+    monkeypatch.setattr(comention, "MAX_MATRIX_VOCAB", 1)
+    fallback = agg(comention._pair_count_batches(iter([pdf])))
     brute = Counter(
         pair
         for ents in convs
@@ -646,22 +646,21 @@ def test_pair_count_kernel_fallback_matches_matrix_path(monkeypatch):
     assert fallback == brute
 
 
-def test_conv_pair_counts_matches_catalyst_pairs(spark):
-    import __spark_entry__ as entry
+def test_conv_pair_counts_matches_catalyst_pairs(transcripts_small):
     from kernel_reference import conv_entity_pairs
-    from pyspark.sql import functions as F
 
-    sf = "/root/testdata/sf0.001"
+    from semstreams_spark.graph.comention import conv_pair_counts
+
     wk = {
         (r["src"], r["dst"]): r["w"]
-        for r in entry._conv_pair_counts(spark, sf)
+        for r in conv_pair_counts(transcripts_small)
         .groupBy("src", "dst")
         .agg(F.sum("c").alias("w"))
         .collect()
     }
     we = {
         (r["src"], r["dst"]): r["w"]
-        for r in conv_entity_pairs(spark, sf)
+        for r in conv_entity_pairs(transcripts_small)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
         .collect()

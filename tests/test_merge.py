@@ -9,8 +9,8 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from merge_reference import nodes_table
-from semstreams_spark.operators import edges_table, entity_states
+from merge_reference import edges_table, nodes_table
+from semstreams_spark.operators import entity_states
 
 TS = dt.datetime(2025, 1, 1)
 

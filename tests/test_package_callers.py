@@ -15,6 +15,10 @@ says why it stays.
   to one in the calling file or imported from the one file that binds
   it. Any other argument, a dict or list literal included, and a call
   that passes ``*args`` or ``**kwargs`` count as setting the parameter.
+- ``__spark_entry__.py`` is a registry: its top-level functions are
+  ``entry``, ``queries``, ``oracle_sql``, the input readers, one gate
+  fixture and the ``q_*`` wrappers, and ``queries()`` registers every
+  ``q_*``.
 
 A name counts as used when it appears as an identifier (a ``Name`` or an
 ``Attribute``). Imports do not count: an import, a package ``__init__.py``
@@ -251,3 +255,29 @@ def test_allow_list_has_no_stale_entry():
     known = set(defs) | set(methods) | set(params)
     stale = sorted(q for q in ALLOWED if q not in known or q in used)
     assert not stale, f"ALLOWED entries that are now used or set, or no longer exist: {stale}"
+
+
+# the registry's own top-level functions besides its q_* wrappers: its
+# three public functions, the input readers and the gate fixture that the
+# embedding_neardup_lsh oracle's SQL text names
+ENTRY_FUNCTIONS = {
+    "entry", "queries", "oracle_sql",
+    "_transcripts", "_aliases", "_tbl", "_query_vec",
+    "planted_neardup_corpus",
+}
+
+
+def test_entry_is_a_registry():
+    """``__spark_entry__.py`` computes nothing of its own: its top-level
+    functions are ``ENTRY_FUNCTIONS`` and the ``q_*`` wrappers
+    ``queries()`` registers, and every ``q_*`` is registered. A derive
+    belongs in the package."""
+    _, tree = _parse(os.path.join(ROOT, ENTRY))
+    tops = {n.name for n in tree.body if isinstance(n, (*_DEFS, ast.ClassDef))}
+    (queries,) = [n for n in tree.body if isinstance(n, _DEFS) and n.name == "queries"]
+    (registry,) = [n.value for n in ast.walk(queries) if isinstance(n, ast.Return)]
+    registered = {v.id for v in registry.values if isinstance(v, ast.Name)}
+    extra = sorted(tops - ENTRY_FUNCTIONS - {q for q in tops if q.startswith("q_")})
+    assert not extra, f"the registry defines more than wrappers (move it into the package): {extra}"
+    unregistered = sorted(q for q in tops if q.startswith("q_") and q not in registered)
+    assert not unregistered, f"q_* wrappers that queries() does not register: {unregistered}"

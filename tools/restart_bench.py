@@ -11,10 +11,12 @@ how much does a restart COST once real history exists? Protocol:
 3. report restart-to-first-commit wall and the per-trigger stats of the
    resumed run vs the pre-restart steady state.
 
-Bounded-restart claim under test: the resumed first trigger pays ledger
-checkpoint + suffix reads (≤ 1 + ``COMPACT_EVERY`` = 16 metadata opens,
-sink.py), RocksDB state reload for the touched partitions, and one
-batch of work — NOT O(stream history) scans.
+Bounded-restart claim under test: the resumed first trigger pays the
+sink's ledger load (sink.py ``_compact_entries``: it opens the checkpoint
+pointer, one segment file per ``COMPACT_EVERY`` committed batches and
+fewer than ``COMPACT_EVERY`` per-batch suffix files, and lists the whole
+``_ledger`` directory), RocksDB state reload for the touched
+partitions, and one batch of work.
 
 Usage: python tools/restart_bench.py [--sf 0.1] [--files 80] [--cores N]
 """
