@@ -839,28 +839,9 @@ def oracle_sql() -> dict[str, str]:
         "degree_tumbling": oracles.sql_degree_tumbling(sf),
         "cooccur_5min": oracles.sql_cooccur(sf),
         "rule_events": oracles.sql_rule_events(sf),
-        "q1_pricing": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sum_base_price,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)) * CAST(1.0 - l_discount AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)) * CAST(1.0 - l_discount AS DECIMAL(18,6)) * CAST(1.0 + l_tax AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_qty,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_price,
-                   COUNT(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "parts_no_sales": """
-            SELECT p_partkey, p_name, p_brand FROM part
-            WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
-        """,
-        "dedup_exact": """
-            SELECT md5(text) AS content_hash, MIN(doc_id) AS keeper_doc_id,
-                   COUNT(*) AS n_copies
-            FROM documents GROUP BY 1
-        """,
+        "q1_pricing": oracles.sql_q1_pricing(),
+        "parts_no_sales": oracles.sql_parts_no_sales(),
+        "dedup_exact": oracles.sql_dedup_exact(),
         "text_lang_id": oracles.sql_text_lang_id(),
         "doc_fingerprint": oracles.sql_doc_fingerprint(),
         "doc_quality": oracles.sql_doc_quality(),
@@ -889,16 +870,8 @@ def oracle_sql() -> dict[str, str]:
         ),
         "graphrag_local": oracles.sql_graphrag_local(sf, "ent_001", GRAPHRAG_QUERY, max_iter=6),
         "sliding_degree": oracles.sql_sliding_degree(sf),
-        "json_filter_events": """
-            SELECT event_id, event_type, value FROM events
-            WHERE TRY_CAST(json_extract_string(props, '$.k') AS DOUBLE) >= 80
-              AND value > 50
-        """,
-        "json_map_events": """
-            SELECT event_id, ts, user_id, upper(event_type) AS etype,
-                   value, 'p1' AS pipeline
-            FROM events
-        """,
+        "json_filter_events": oracles.sql_json_filter_events(),
+        "json_map_events": oracles.sql_json_map_events(),
         "query_temporal": oracles.sql_query_temporal(sf, QT_START, QT_END),
         "rels_in_entity": oracles.sql_rels_in(sf, RELS_ENTITY),
         "graph_snapshot": oracles.sql_graph_snapshot(sf, SNAP_START, SNAP_END, 1000),
@@ -910,85 +883,11 @@ def oracle_sql() -> dict[str, str]:
         "entity_delete": oracles.sql_entity_delete(sf, DELETE_TS_LATE, DELETE_TS_EARLY),
         "spatial_bbox": oracles.sql_spatial_bbox(sf, *SPATIAL_BBOX),
         "entity_semantic_topk": oracles.sql_entity_semantic_topk(sf, ENTITY_QUERY, k=10, dim=384),
-        # real stdlib-wave decode of the synthetic WAV payloads (44-byte
-        # PCM header + 2 bytes/frame, synth_wav_bytes): every output
-        # field is exact integer math over the generator contract
-        "media_wav_decode": """
-            SELECT i AS media_id,
-                   CAST(8000 * (1 + (i % 9) // 3) AS INT) AS sample_rate,
-                   1 AS n_channels,
-                   2 AS sampwidth,
-                   CAST(400 + (i % 5) * 80 AS INT) AS n_frames,
-                   (400 + (i % 5) * 80) * 1000 // (8000 * (1 + (i % 9) // 3)) AS duration_ms,
-                   CAST(list_sum(list_transform(range(0, 400 + (i % 5) * 80),
-                        j -> ((i * 131 + j * 197) % 65536) - 32768)) AS BIGINT) AS sum_samples
-            FROM range(0, 64) t(i) WHERE i % 3 = 1
-        """,
-        # real stdlib PNG decode: width/height and exact per-channel pixel
-        # sums recomputed analytically from the synth_png_bytes contract
-        "media_png_decode": """
-            WITH g AS (
-              SELECT i, CAST(8 + (i % 4) * 8 AS INT) AS w,
-                        CAST(8 + (i % 3) * 8 AS INT) AS h
-              FROM range(0, 64) t(i)
-            ),
-            px AS (SELECT i, w, h, unnest(range(0, w * h * 3)) AS p FROM g)
-            SELECT i AS media_id, w AS width, h AS height,
-                   CAST(SUM(CASE WHEN p % 3 = 0 THEN (i * 131 + p * 197) % 256 END) AS BIGINT) AS sum_r,
-                   CAST(SUM(CASE WHEN p % 3 = 1 THEN (i * 131 + p * 197) % 256 END) AS BIGINT) AS sum_g,
-                   CAST(SUM(CASE WHEN p % 3 = 2 THEN (i * 131 + p * 197) % 256 END) AS BIGINT) AS sum_b,
-                   CAST(SUM((i * 131 + p * 197) % 256) AS BIGINT) AS sum_all
-            FROM px GROUP BY 1, 2, 3
-        """,
-        "media_mp4_metadata": """
-            SELECT i AS media_id,
-                   'isom' AS brand,
-                   CAST(1000 AS INT) AS timescale,
-                   CAST(1000 + 250 * i AS BIGINT) AS duration_ms,
-                   CAST(1 + (i % 2) AS INT) AS n_tracks,
-                   CASE WHEN i % 2 = 0 THEN 'avc1' ELSE 'avc1,mp4a' END AS codecs,
-                   CASE WHEN i % 2 = 0 THEN 'vide' ELSE 'vide,soun' END AS handlers
-            FROM range(0, 48) t(i)
-        """,
-        "metrics_rollup": """
-            SELECT event_type,
-                   COUNT(*) AS cnt,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_v,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_v,
-                   MIN(value) AS min_v,
-                   MAX(value) AS max_v,
-                   round(quantile_cont(value, 0.5), 6) AS p50,
-                   round(quantile_cont(value, 0.95), 6) AS p95,
-                   round(quantile_cont(value, 0.99), 6) AS p99
-            FROM events GROUP BY event_type
-        """,
-        # Greedy-from-last-fire scan, expressed as a per-key recursive
-        # walk over event rank — independent of the Spark implementation
-        # (no lag/window trick shared between the two sides).
-        "alert_cooldown": """
-            WITH RECURSIVE alerts AS (
-              SELECT 'high_value' AS rule_id, CAST(user_id AS VARCHAR) AS entity_id, ts
-              FROM events WHERE value > 180
-            ),
-            ev AS (
-              SELECT rule_id, entity_id, ts,
-                     row_number() OVER (PARTITION BY rule_id, entity_id ORDER BY ts) AS rn
-              FROM alerts
-            ),
-            scan AS (
-              SELECT rule_id, entity_id, rn, ts, ts AS last_fire, TRUE AS fired
-              FROM ev WHERE rn = 1
-              UNION ALL
-              SELECT e.rule_id, e.entity_id, e.rn, e.ts,
-                     CASE WHEN epoch(e.ts) - epoch(s.last_fire) >= 3600
-                          THEN e.ts ELSE s.last_fire END,
-                     epoch(e.ts) - epoch(s.last_fire) >= 3600
-              FROM scan s JOIN ev e
-                ON e.rule_id = s.rule_id AND e.entity_id = s.entity_id
-               AND e.rn = s.rn + 1
-            )
-            SELECT rule_id, entity_id, ts FROM scan WHERE fired
-        """,
+        "media_wav_decode": oracles.sql_media_wav_decode(),
+        "media_png_decode": oracles.sql_media_png_decode(),
+        "media_mp4_metadata": oracles.sql_media_mp4_metadata(),
+        "metrics_rollup": oracles.sql_metrics_rollup(),
+        "alert_cooldown": oracles.sql_alert_cooldown(),
         # minhash_pairs / simhash_pairs / ann_topk / pagerank_entities:
         # hash-family and iterative ops — rows-only check
     }

@@ -13,9 +13,10 @@ dispatch both operators share:
 * the ``(src, dst)`` input is materialized once by :func:`materialize`
   (``localCheckpoint``, with an ``Observation`` that counts the rows in
   the same job), so the dispatch costs no job of its own. That step is
-  shared by every graph loop that stores a frame and needs its size: the
-  traversal's edges and hop frontiers, the hierarchy's edges and
-  community graphs, and the node sets of the distributed loops;
+  shared by every graph loop that stores a frame and reads its size: the
+  traversal's hop frontiers (an empty one ends the loop), the
+  hierarchy's edges and community graphs, and the distributed
+  PageRank's node set (its rank arithmetic divides by the node count);
 * under :func:`local_max_edges` the checkpoint is coalesced into ONE executor
   task (``coalesce(1).mapInPandas``: no exchange, never the driver) and
   the whole fixed-point loop runs vectorized in numpy inside that task.

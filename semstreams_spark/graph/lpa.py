@@ -22,7 +22,6 @@ from functools import partial
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._width import iteration_shuffle_width
 from .local_solve import lpa_local, materialize, solve
 
 
@@ -69,40 +68,38 @@ def _lpa_distributed(e: DataFrame, max_iter: int) -> DataFrame:
         .distinct()
         .cache()
     )
-    labels, n = materialize(
+    labels = (
         und.select(F.col("src").alias("entity"))
         .distinct()
         .withColumn("label", F.col("entity"))
+        .localCheckpoint(eager=True)
     )
-    # label votes are min_by-deterministic regardless of partitioning, so
-    # the graph-sized shuffle width changes only per-iteration fixed cost
-    with iteration_shuffle_width(e.sparkSession, n):
-        for it in range(max_iter):
-            votes = (
-                und.join(labels, und["dst"] == labels["entity"])
-                .groupBy(F.col("src"), F.col("label"))
-                .agg(F.count(F.lit(1)).alias("n"))
+    for it in range(max_iter):
+        votes = (
+            und.join(labels, und["dst"] == labels["entity"])
+            .groupBy(F.col("src"), F.col("label"))
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        # majority label; ties -> lexicographically smallest label:
+        # minimize (-n, label)
+        best = votes.groupBy("src").agg(
+            F.expr("min_by(label, struct(-n, label))").alias("new_label")
+        )
+        new_labels = best.select(F.col("src").alias("entity"), F.col("new_label").alias("label"))
+        new_labels = new_labels.localCheckpoint(eager=True)
+        prev, labels = labels, new_labels
+        # convergence test costs a driver action — sample every 3rd
+        # iteration; extra iterations after convergence are idempotent,
+        # so sampling never changes the result
+        if it % 3 == 2 or it == max_iter - 1:
+            changed = (
+                labels.alias("n")
+                .join(prev.alias("o"), "entity")
+                .filter(F.col("n.label") != F.col("o.label"))
+                .count()
             )
-            # majority label; ties -> lexicographically smallest label:
-            # minimize (-n, label)
-            best = votes.groupBy("src").agg(
-                F.expr("min_by(label, struct(-n, label))").alias("new_label")
-            )
-            new_labels = best.select(F.col("src").alias("entity"), F.col("new_label").alias("label"))
-            new_labels = new_labels.localCheckpoint(eager=True)
-            prev, labels = labels, new_labels
-            # convergence test costs a driver action — sample every 3rd
-            # iteration (matches the pagerank pattern); extra iterations after
-            # convergence are idempotent, so sampling never changes the result
-            if it % 3 == 2 or it == max_iter - 1:
-                changed = (
-                    labels.alias("n")
-                    .join(prev.alias("o"), "entity")
-                    .filter(F.col("n.label") != F.col("o.label"))
-                    .count()
-                )
-                if changed == 0:
-                    break
+            if changed == 0:
+                break
     und.unpersist()
     return labels.select("entity", F.col("label").alias("community"))
 

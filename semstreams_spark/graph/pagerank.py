@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._width import iteration_shuffle_width
 from .local_solve import DAMPING_DEN, DAMPING_NUM, MAX_ITER, SCALE, materialize, pagerank_local, solve
 
 
@@ -65,33 +64,30 @@ def _pagerank_distributed(edges: DataFrame) -> DataFrame:
     # (1-d)/n term is a pure constant under integer division
     base = ((DAMPING_DEN - DAMPING_NUM) * SCALE) // (DAMPING_DEN * n)
     ranks = nodes.withColumn("rank", F.lit(SCALE // n).cast("long"))
-    # integer sums are order-free, so narrowing the shuffle width cannot
-    # change the result — only the per-iteration fixed cost
-    with iteration_shuffle_width(edges.sparkSession, n):
-        for _ in range(MAX_ITER):
-            contribs = (
-                links.join(ranks, links["src"] == ranks["entity"])
-                .select(F.col("dst").alias("entity"), F.expr("rank div deg").alias("c"))
-                .groupBy("entity")
-                .agg(F.sum("c").alias("inflow"))
+    for _ in range(MAX_ITER):
+        contribs = (
+            links.join(ranks, links["src"] == ranks["entity"])
+            .select(F.col("dst").alias("entity"), F.expr("rank div deg").alias("c"))
+            .groupBy("entity")
+            .agg(F.sum("c").alias("inflow"))
+        )
+        dm = dangling_nodes.join(ranks, "entity").agg(
+            F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dmass")
+        )
+        ranks = (
+            nodes.join(contribs, "entity", "left")
+            .crossJoin(F.broadcast(dm))
+            .select(
+                "entity",
+                (
+                    F.lit(base).cast("long")
+                    + F.expr(
+                        f"({DAMPING_NUM} * ((dmass div {n}) + coalesce(inflow, 0L))) div {DAMPING_DEN}"
+                    )
+                ).alias("rank"),
             )
-            dm = dangling_nodes.join(ranks, "entity").agg(
-                F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dmass")
-            )
-            ranks = (
-                nodes.join(contribs, "entity", "left")
-                .crossJoin(F.broadcast(dm))
-                .select(
-                    "entity",
-                    (
-                        F.lit(base).cast("long")
-                        + F.expr(
-                            f"({DAMPING_NUM} * ((dmass div {n}) + coalesce(inflow, 0L))) div {DAMPING_DEN}"
-                        )
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
+            .localCheckpoint(eager=True)
+        )
     links.unpersist()
     dangling_nodes.unpersist()
     return ranks

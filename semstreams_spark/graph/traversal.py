@@ -7,10 +7,11 @@ is one join against the edge table; relevance decays per hop; a node
 keeps its best (max) score over all paths; cycle avoidance falls out of
 keeping min-depth-first-win.
 
-The edge set and each hop's frontier are stored by
-``local_solve.materialize``, which counts them in the job that stores
-them: the count sizes the loop's shuffle width and ends the loop at an
-empty frontier without a job of its own.
+The edge set is stored once by ``localCheckpoint``. Each hop's frontier
+is stored by ``local_solve.materialize``, which counts it in the job that
+stores it, so an empty frontier ends the loop without a job of its own.
+Every hop plans at the session's shuffle width; AQE coalesces the small
+reduce sides.
 
 At scale the edge table is hash-partitioned by src so each hop is a
 shuffle-free (co-partitioned) join after the first; locally Catalyst
@@ -23,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._width import iteration_shuffle_width
 from .local_solve import materialize
 
 # relevance kept per hop (the reference's DecayFactor)
@@ -41,28 +41,27 @@ def bounded_traversal(edges: DataFrame, start: str) -> DataFrame:
     enriches incoming + outgoing, J5).
     """
     spark: SparkSession = edges.sparkSession
-    e, n_edges = materialize(_undirected(edges))
+    e = _undirected(edges).localCheckpoint(eager=True)
 
     visited = spark.createDataFrame(
         [(start, 0, 1.0)], "entity string, depth int, score double"
     )
     frontier = visited
-    with iteration_shuffle_width(spark, n_edges):
-        for d in range(1, MAX_DEPTH + 1):
-            nxt, n_new = materialize(
-                frontier.join(e, frontier["entity"] == e["src"])
-                .select(
-                    F.col("dst").alias("entity"),
-                    F.lit(d).alias("depth"),
-                    (F.col("score") * F.lit(DECAY)).alias("score"),
-                )
-                .distinct()
-                .join(visited.select("entity"), "entity", "left_anti")
+    for d in range(1, MAX_DEPTH + 1):
+        nxt, n_new = materialize(
+            frontier.join(e, frontier["entity"] == e["src"])
+            .select(
+                F.col("dst").alias("entity"),
+                F.lit(d).alias("depth"),
+                (F.col("score") * F.lit(DECAY)).alias("score"),
             )
-            if n_new == 0:
-                break
-            visited = visited.unionByName(nxt)
-            frontier = nxt
+            .distinct()
+            .join(visited.select("entity"), "entity", "left_anti")
+        )
+        if n_new == 0:
+            break
+        visited = visited.unionByName(nxt)
+        frontier = nxt
     return visited
 
 
@@ -89,28 +88,27 @@ def traversal_paths(edges: DataFrame, start: str) -> DataFrame:
     filter — level-synchronous BFS, no driver-side row loops.
     """
     spark: SparkSession = edges.sparkSession
-    e, n_edges = materialize(_undirected(edges))
+    e = _undirected(edges).localCheckpoint(eager=True)
 
     frontier = spark.createDataFrame([([start], 0, 1.0)], "path array<string>, depth int, score double")
     out = frontier
     n_total = 1  # the hops' counts sum to the path count
-    with iteration_shuffle_width(spark, n_edges):
-        for d in range(1, MAX_DEPTH + 1):
-            last = F.element_at(F.col("path"), -1)
-            nxt, n_frontier = materialize(
-                frontier.join(e, last == e["src"])
-                .filter(~F.array_contains(F.col("path"), F.col("dst")))
-                .select(
-                    F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
-                    F.lit(d).alias("depth"),
-                    (F.col("score") * F.lit(DECAY)).alias("score"),
-                )
+    for d in range(1, MAX_DEPTH + 1):
+        last = F.element_at(F.col("path"), -1)
+        nxt, n_frontier = materialize(
+            frontier.join(e, last == e["src"])
+            .filter(~F.array_contains(F.col("path"), F.col("dst")))
+            .select(
+                F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
+                F.lit(d).alias("depth"),
+                (F.col("score") * F.lit(DECAY)).alias("score"),
             )
-            if n_frontier == 0:
-                break
-            n_total += n_frontier
-            out = out.unionByName(nxt)
-            frontier = nxt
+        )
+        if n_frontier == 0:
+            break
+        n_total += n_frontier
+        out = out.unionByName(nxt)
+        frontier = nxt
 
     truncated = n_total > MAX_PATHS
     if truncated:

@@ -99,13 +99,19 @@ def jaccard_pairs(docs: DataFrame) -> DataFrame:
     # the shingle set feeds the size agg AND both self-join sides:
     # compute it once per action
     s = shingle_sets(docs).localCheckpoint(eager=False)
-    sizes = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     a, b = s.alias("a"), s.alias("b")
     common = (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
+    return _jaccard_verify(common, s).select("doc_a", "doc_b", "n_common", "size_a", "size_b", "jaccard")
+
+
+def _jaccard_verify(common: DataFrame, s: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_common) pairs with their ``s`` shingle-set sizes
+    (size_a, size_b) and exact Jaccard, kept at ≥ ``JACCARD_MIN``."""
+    sizes = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("set_size").alias("size_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("set_size").alias("size_b"))
     return (
@@ -117,7 +123,6 @@ def jaccard_pairs(docs: DataFrame) -> DataFrame:
             / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
         )
         .filter(F.col("jaccard") >= JACCARD_MIN)
-        .select("doc_a", "doc_b", "n_common", "size_a", "size_b", "jaccard")
     )
 
 
@@ -182,7 +187,6 @@ def minhash_dedup(docs: DataFrame) -> DataFrame:
     # (sizes + both intersect sides) — five consumers, one computation
     s = shingle_sets(docs).localCheckpoint(eager=False)
     cand = minhash_lsh_candidates(minhash_signatures(s))
-    sizes = s.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     sa = s.select(F.col("doc_id").alias("doc_a"), F.col("shingle"))
     sb = s.select(F.col("doc_id").alias("doc_b"), F.col("shingle"))
     common = (
@@ -191,19 +195,7 @@ def minhash_dedup(docs: DataFrame) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("set_size").alias("size_a"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("set_size").alias("size_b"))
-    return (
-        common.join(za, "doc_a")
-        .join(zb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= JACCARD_MIN)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _jaccard_verify(common, s).select("doc_a", "doc_b", "jaccard")
 
 
 def simhash(docs: DataFrame) -> DataFrame:

@@ -1,10 +1,13 @@
 """DuckDB oracle SQL for the driver's correctness gate.
 
 Each query in ``__spark_entry__.queries()`` has an equivalent ANSI-SQL
-string here, runnable by DuckDB over the same parquet inputs. The
-transcript table is this repo's deterministic synthetic input (the
-driver's pre-registered views don't include transcripts), addressed via
-``read_parquet('<abs path>')``.
+string here, one ``sql_*`` function per query (``sql_bm25_topk`` serves
+two), runnable by DuckDB over the same parquet inputs. The TPC-H,
+documents and events queries read the driver's pre-registered views by
+name; the media queries recompute the synthetic payloads from their
+generator contract. The transcript table is this repo's deterministic
+synthetic input (the driver's pre-registered views don't include
+transcripts), addressed via ``read_parquet('<abs path>')``.
 
 Determinism rules baked into every query pair:
 - double aggregates go through exact DECIMAL sums, then CAST to DOUBLE
@@ -1194,3 +1197,154 @@ f AS MATERIALIZED (
 tot AS (SELECT COUNT(*) AS c FROM f)
 SELECT id, type, status, version, updated_at, (tot.c > {max_entities}) AS truncated
 FROM f, tot ORDER BY id LIMIT {max_entities}"""
+
+
+def sql_q1_pricing() -> str:
+    """TPC-H Q1 pricing summary over the driver's ``lineitem`` view, with
+    exact DECIMAL sums."""
+    return """
+            SELECT l_returnflag, l_linestatus,
+                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
+                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sum_base_price,
+                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)) * CAST(1.0 - l_discount AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
+                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)) * CAST(1.0 - l_discount AS DECIMAL(18,6)) * CAST(1.0 + l_tax AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
+                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_qty,
+                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_price,
+                   COUNT(*) AS count_order
+            FROM lineitem
+            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+            GROUP BY l_returnflag, l_linestatus
+        """
+
+
+def sql_parts_no_sales() -> str:
+    """Parts with no ``lineitem`` row: the NOT EXISTS anti-join."""
+    return """
+            SELECT p_partkey, p_name, p_brand FROM part
+            WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
+        """
+
+
+def sql_dedup_exact() -> str:
+    """Exact duplicate documents: one keeper (min doc_id) per text md5."""
+    return """
+            SELECT md5(text) AS content_hash, MIN(doc_id) AS keeper_doc_id,
+                   COUNT(*) AS n_copies
+            FROM documents GROUP BY 1
+        """
+
+
+def sql_json_filter_events() -> str:
+    """Events whose JSON ``props.k`` is ≥ 80 and whose value is > 50."""
+    return """
+            SELECT event_id, event_type, value FROM events
+            WHERE TRY_CAST(json_extract_string(props, '$.k') AS DOUBLE) >= 80
+              AND value > 50
+        """
+
+
+def sql_json_map_events() -> str:
+    """Events projected with an upper-cased type and a constant pipeline tag."""
+    return """
+            SELECT event_id, ts, user_id, upper(event_type) AS etype,
+                   value, 'p1' AS pipeline
+            FROM events
+        """
+
+
+def sql_media_wav_decode() -> str:
+    """Stdlib-wave decode of the synthetic WAV payloads (44-byte PCM
+    header + 2 bytes/frame, ``synth_wav_bytes``): every output field is
+    exact integer math over the generator contract."""
+    return """
+            SELECT i AS media_id,
+                   CAST(8000 * (1 + (i % 9) // 3) AS INT) AS sample_rate,
+                   1 AS n_channels,
+                   2 AS sampwidth,
+                   CAST(400 + (i % 5) * 80 AS INT) AS n_frames,
+                   (400 + (i % 5) * 80) * 1000 // (8000 * (1 + (i % 9) // 3)) AS duration_ms,
+                   CAST(list_sum(list_transform(range(0, 400 + (i % 5) * 80),
+                        j -> ((i * 131 + j * 197) % 65536) - 32768)) AS BIGINT) AS sum_samples
+            FROM range(0, 64) t(i) WHERE i % 3 = 1
+        """
+
+
+def sql_media_png_decode() -> str:
+    """Stdlib PNG decode: width/height and exact per-channel pixel sums
+    recomputed analytically from the ``synth_png_bytes`` contract."""
+    return """
+            WITH g AS (
+              SELECT i, CAST(8 + (i % 4) * 8 AS INT) AS w,
+                        CAST(8 + (i % 3) * 8 AS INT) AS h
+              FROM range(0, 64) t(i)
+            ),
+            px AS (SELECT i, w, h, unnest(range(0, w * h * 3)) AS p FROM g)
+            SELECT i AS media_id, w AS width, h AS height,
+                   CAST(SUM(CASE WHEN p % 3 = 0 THEN (i * 131 + p * 197) % 256 END) AS BIGINT) AS sum_r,
+                   CAST(SUM(CASE WHEN p % 3 = 1 THEN (i * 131 + p * 197) % 256 END) AS BIGINT) AS sum_g,
+                   CAST(SUM(CASE WHEN p % 3 = 2 THEN (i * 131 + p * 197) % 256 END) AS BIGINT) AS sum_b,
+                   CAST(SUM((i * 131 + p * 197) % 256) AS BIGINT) AS sum_all
+            FROM px GROUP BY 1, 2, 3
+        """
+
+
+def sql_media_mp4_metadata() -> str:
+    """MP4 box metadata recomputed from the ``synth_mp4_bytes`` generator
+    contract: duration_ms = 1000 + 250·i, tracks = 1 + i % 2."""
+    return """
+            SELECT i AS media_id,
+                   'isom' AS brand,
+                   CAST(1000 AS INT) AS timescale,
+                   CAST(1000 + 250 * i AS BIGINT) AS duration_ms,
+                   CAST(1 + (i % 2) AS INT) AS n_tracks,
+                   CASE WHEN i % 2 = 0 THEN 'avc1' ELSE 'avc1,mp4a' END AS codecs,
+                   CASE WHEN i % 2 = 0 THEN 'vide' ELSE 'vide,soun' END AS handlers
+            FROM range(0, 48) t(i)
+        """
+
+
+def sql_metrics_rollup() -> str:
+    """Per-event-type count, exact DECIMAL sum and mean, min/max and
+    interpolated p50/p95/p99."""
+    return """
+            SELECT event_type,
+                   COUNT(*) AS cnt,
+                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_v,
+                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_v,
+                   MIN(value) AS min_v,
+                   MAX(value) AS max_v,
+                   round(quantile_cont(value, 0.5), 6) AS p50,
+                   round(quantile_cont(value, 0.95), 6) AS p95,
+                   round(quantile_cont(value, 0.99), 6) AS p99
+            FROM events GROUP BY event_type
+        """
+
+
+def sql_alert_cooldown() -> str:
+    """Greedy-from-last-fire cooldown scan, expressed as a per-key
+    recursive walk over event rank — independent of the Spark
+    implementation (no lag/window trick shared between the two sides)."""
+    return """
+            WITH RECURSIVE alerts AS (
+              SELECT 'high_value' AS rule_id, CAST(user_id AS VARCHAR) AS entity_id, ts
+              FROM events WHERE value > 180
+            ),
+            ev AS (
+              SELECT rule_id, entity_id, ts,
+                     row_number() OVER (PARTITION BY rule_id, entity_id ORDER BY ts) AS rn
+              FROM alerts
+            ),
+            scan AS (
+              SELECT rule_id, entity_id, rn, ts, ts AS last_fire, TRUE AS fired
+              FROM ev WHERE rn = 1
+              UNION ALL
+              SELECT e.rule_id, e.entity_id, e.rn, e.ts,
+                     CASE WHEN epoch(e.ts) - epoch(s.last_fire) >= 3600
+                          THEN e.ts ELSE s.last_fire END,
+                     epoch(e.ts) - epoch(s.last_fire) >= 3600
+              FROM scan s JOIN ev e
+                ON e.rule_id = s.rule_id AND e.entity_id = s.entity_id
+               AND e.rn = s.rn + 1
+            )
+            SELECT rule_id, entity_id, ts FROM scan WHERE fired
+        """

@@ -82,6 +82,11 @@ def get_spark(
 
     cores: local parallelism (defaults to $SPARK_GRAFT_CPUS or '*').
     shuffle_partitions: defaults to max(cores, 8).
+
+    The three ``spark.sql.adaptive.*`` settings are Spark 4's defaults,
+    set to state a dependency: the iterative graph loops plan every step
+    at this shuffle width and rely on AQE's partition coalescing to
+    shrink their small reduce sides.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -108,7 +113,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.shuffle.spill.compress", "true")
         # openCost only lowers the SPLIT-SIZE FLOOR: locally it lets a
         # 12 MB CPU-heavy transcript file fan out across all cores
         # (split = max(openCost, bytes/cores)); at cluster scale

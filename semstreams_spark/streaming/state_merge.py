@@ -361,9 +361,6 @@ def _accept_turns(
     yield from (o for o in outputs if o is not None)
 
 
-# the marker of checkpoints written while the bucket count was the
-# constant 64; they restart with it
-_LEGACY_MARKER, _LEGACY_BUCKETS = "legacy-bucketed", 64
 _MARKER = "bucketed:"
 
 
@@ -376,9 +373,9 @@ def pin_state_engine(checkpoint_dir: str | None, spark: SparkSession) -> int:
       Spark fixes for the checkpoint; written as ``bucketed:<count>``;
     - marker ``bucketed:<count>`` → that count, whatever the session's
       partition setting is now;
-    - marker ``legacy-bucketed`` → 64;
     - any other marker (``tws``, ``legacy``: per-conversation state of
-      earlier versions), or no marker but ``offsets/`` (written before
+      earlier versions; ``legacy-bucketed``: a constant 64 buckets, before
+      the count was recorded), or no marker but ``offsets/`` (written before
       markers existed) → raise, leaving the marker as found: that state
       cannot be read as buckets.
     """
@@ -398,8 +395,6 @@ def pin_state_engine(checkpoint_dir: str | None, spark: SparkSession) -> int:
             fh.write(f"{_MARKER}{fresh}")
         os.replace(tmp, marker)
         return fresh
-    if found == _LEGACY_MARKER:
-        return _LEGACY_BUCKETS
     count = found.removeprefix(_MARKER)
     if found.startswith(_MARKER) and count.isdigit() and int(count) > 0:
         return int(count)

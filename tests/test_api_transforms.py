@@ -278,19 +278,14 @@ def test_pin_state_engine_marker(spark, tmp_path):
         assert pin_state_engine(ck, spark) == 16
         assert (tmp_path / "ck" / "_state_engine").read_text() == "bucketed:16"
         assert pin_state_engine(None, spark) == 40  # no checkpoint: always fresh
-        # checkpoints of the constant-64 era restart with 64 buckets
-        legacy = tmp_path / "ck_legacy_bucketed"
-        legacy.mkdir()
-        (legacy / "_state_engine").write_text("legacy-bucketed")
-        assert pin_state_engine(str(legacy), spark) == 64
-        assert (legacy / "_state_engine").read_text() == "legacy-bucketed"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     # checkpoints of any other layout fail at start with a clear message
     # and are left as found: a "tws" or "legacy" marker (per-conversation
-    # state), an unknown or malformed marker, and a pre-marker checkpoint
-    # (None)
-    for name in ("tws", "legacy", "bogus", "bucketed:", "bucketed:0", "bucketed:-4", None):
+    # state), a "legacy-bucketed" marker (a constant 64 buckets, before the
+    # count was recorded), an unknown or malformed marker, and a pre-marker
+    # checkpoint (None)
+    for name in ("tws", "legacy", "legacy-bucketed", "bogus", "bucketed:", "bucketed:0", "bucketed:-4", None):
         old = tmp_path / f"ck_{name}"
         if name:
             old.mkdir()

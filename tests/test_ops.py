@@ -283,17 +283,3 @@ def test_rule_subject_pattern_scoping(spark):
         ("conv_hot_and", "conv.a.turn.2"),
     }
 
-
-def test_iteration_shuffle_width_restores_conf_on_error(spark):
-    from semstreams_spark.graph._width import graph_width, iteration_shuffle_width
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    assert graph_width(spark, 2_200) == 1  # 2.2k-node graph -> narrowest
-    assert graph_width(spark, 10**9) == int(prev)  # clamped by session
-    try:
-        with iteration_shuffle_width(spark, 100):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev

@@ -19,6 +19,9 @@ says why it stays.
   ``entry``, ``queries``, ``oracle_sql``, the input readers, one gate
   fixture and the ``q_*`` wrappers, and ``queries()`` registers every
   ``q_*``.
+- No code in the package, the jobs or the registry calls
+  ``<x>.conf.set`` or ``<x>.conf.unset``: a query does not change
+  session state.
 
 A name counts as used when it appears as an identifier (a ``Name`` or an
 ``Attribute``). Imports do not count: an import, a package ``__init__.py``
@@ -281,3 +284,23 @@ def test_entry_is_a_registry():
     assert not extra, f"the registry defines more than wrappers (move it into the package): {extra}"
     unregistered = sorted(q for q in tops if q.startswith("q_") and q not in registered)
     assert not unregistered, f"q_* wrappers that queries() does not register: {unregistered}"
+
+
+def test_no_session_conf_mutation():
+    """A query must not change session state: no code in the package, the
+    jobs or the registry calls ``<x>.conf.set`` or ``<x>.conf.unset``. A
+    session is configured where it is built (``session.get_spark``); a
+    shared session's settings belong to its owner."""
+    found = []
+    for path in [*_py_files(PACKAGE), *_py_files("jobs"), os.path.join(ROOT, ENTRY)]:
+        rel, tree = _parse(path)
+        for n in ast.walk(tree):
+            f = n.func if isinstance(n, ast.Call) else None
+            if (
+                isinstance(f, ast.Attribute)
+                and f.attr in ("set", "unset")
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "conf"
+            ):
+                found.append(f"{rel}:{n.lineno}")
+    assert not found, f"session conf changed outside the session builder: {found}"

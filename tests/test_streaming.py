@@ -560,9 +560,9 @@ def _parity_input(indir: str, order: str, seed: int = 7):
 )
 def test_bucket_count_does_not_change_sink_rows(spark, tmp_path, monkeypatch, order, watermark):
     """A fresh checkpoint at 2 state partitions (16 buckets) commits the
-    same rows as a ``legacy-bucketed`` checkpoint (64 buckets, 8
-    partitions) that is killed before batch 1's ledger commit and
-    restarted."""
+    same rows as a checkpoint marked ``bucketed:64`` (64 buckets at the
+    session's 8 partitions) that is killed before batch 1's ledger commit
+    and restarted."""
     indir = str(tmp_path / "in")
     _parity_input(indir, order)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -573,17 +573,17 @@ def test_bucket_count_does_not_change_sink_rows(spark, tmp_path, monkeypatch, or
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert (tmp_path / "ck16" / "_state_engine").read_text() == "bucketed:16"
 
-    legacy_ck = tmp_path / "ck64"
-    legacy_ck.mkdir()
-    (legacy_ck / "_state_engine").write_text("legacy-bucketed")
+    ck64 = tmp_path / "ck64"
+    ck64.mkdir()
+    (ck64 / "_state_engine").write_text("bucketed:64")
     with monkeypatch.context() as mp, pytest.raises(Exception, match="injected crash"):
         _crash_at(mp, "renamed", "graph_deltas", batch=1)
-        _run(spark, indir, str(tmp_path / "out64"), str(legacy_ck), watermark=watermark)
-    legacy = _run(spark, indir, str(tmp_path / "out64"), str(legacy_ck), watermark=watermark)
-    assert (legacy_ck / "_state_engine").read_text() == "legacy-bucketed"
+        _run(spark, indir, str(tmp_path / "out64"), str(ck64), watermark=watermark)
+    wide = _run(spark, indir, str(tmp_path / "out64"), str(ck64), watermark=watermark)
+    assert (ck64 / "_state_engine").read_text() == "bucketed:64"
 
     got = sorted(map(tuple, fresh.read(spark).collect()), key=repr)
-    want = sorted(map(tuple, legacy.read(spark).collect()), key=repr)
+    want = sorted(map(tuple, wide.read(spark).collect()), key=repr)
     assert got == want
     assert any(r[0] == "session_end" for r in got)
 
