@@ -23,18 +23,17 @@ from semstreams_spark import oracles
 from semstreams_spark.datagen import ensure_transcripts, sf_from_dir, transcripts_path, aliases_path
 from semstreams_spark.extract import extract_triples
 from semstreams_spark.extract.triples import (
+    CONVERSATION_ID,
+    ENTITY_ID,
     IN_EDGE,
     MENTION_IDS,
     MENTIONS_EDGE,
     NODE_TYPE,
-    conversation_id,
-    entity_id,
+    TURN_SUBJECT,
     entity_id_of,
     mention_context_texts,
     mention_edges,
-    mention_ids,
     mention_rows,
-    turn_subject,
 )
 from semstreams_spark.graph.comention import entity_edges, parity_edges
 from semstreams_spark.operators.merge import (
@@ -108,18 +107,16 @@ def q_edges_resolved(spark, sf_dir):
     observation, not ``edges_table_source_clustered``: its per-row mention
     count made this query about 25% slower (warm, sf0.1)."""
     t = _transcripts(spark, sf_dir)
-    al = _aliases(spark, sf_dir).select(
-        entity_id(F.col("alias")).alias("alias"),
-        entity_id(F.col("entity_name")).alias("canonical"),
+    al = _aliases(spark, sf_dir).selectExpr(
+        f"{ENTITY_ID.format('alias')} as alias", f"{ENTITY_ID.format('entity_name')} as canonical"
     )
-    r2 = lambda dst, et: F.struct(dst.alias("dst"), F.lit(et).alias("edge_type"))  # noqa: E731
-    empty = F.array().cast("array<struct<dst:string,edge_type:string>>")
-    refs = F.concat(
-        F.array(r2(conversation_id(), IN_EDGE)),
-        F.coalesce(F.transform(mention_ids(), lambda m: r2(m, MENTIONS_EDGE)), empty),
+    r2 = lambda dst, et: f"struct({dst} as dst, '{et}' as edge_type)"  # noqa: E731
+    refs = (
+        f"concat(array({r2(CONVERSATION_ID, IN_EDGE)}), coalesce(transform({MENTION_IDS}, "
+        f"m -> {r2('m', MENTIONS_EDGE)}), cast(array() as array<struct<dst:string,edge_type:string>>)))"
     )
-    rel = t.select(turn_subject().alias("src"), F.explode(refs).alias("r"), "ts").select(
-        "src", F.col("r.dst").alias("dst"), F.col("r.edge_type").alias("edge_type"), "ts"
+    rel = t.selectExpr(f"{TURN_SUBJECT} as src", f"explode({refs}) as r", "ts").selectExpr(
+        "src", "r.dst as dst", "r.edge_type as edge_type", "ts"
     )
     res = resolve_aliases(rel, al).select(
         "src", F.col("dst_resolved").alias("dst"), "edge_type", "ts"
@@ -536,7 +533,7 @@ def q_spatial_bbox(spark, sf_dir):
     from semstreams_spark.operators.textops import geo_bin, synthetic_coords
 
     min_lat, max_lat, min_lon, max_lon = SPATIAL_BBOX
-    ents = mention_rows(_transcripts(spark, sf_dir)).select(entity_id(F.col("e")).alias("id")).distinct()
+    ents = mention_rows(_transcripts(spark, sf_dir)).selectExpr(f"{ENTITY_ID.format('e')} as id").distinct()
     out = synthetic_coords(ents).filter(
         (F.col("lat") >= min_lat)
         & (F.col("lat") <= max_lat)

@@ -26,35 +26,33 @@ confidence=1.0 (``entity_payload.go:119-122``), context=conv_id
 (correlation id, ``message/triple.go:67-71``), and an internal ``seq``
 (= turn_idx) used as the deterministic LWW tie-break.
 
-:func:`extract_triples` is the one implementation: Catalyst built-ins,
-one scan, one explode, whole-stage codegen. Every other operator that
-derives ids, triples or edges from transcript rows (the streaming
-fan-out, the source-clustered entity/node/edge operators, the
-mention-derived queries) is built from the builders below, which read
-the transcript columns of the row in scope. A builder without arguments
-is one SQL text (the upper-case constant of the same name, which the
-streaming fan-out splices into its one projection) that the JVM parses
-in one py4j call; the Column API pays a round trip per ``F.*`` node,
-about 800 for ``extract_triples``. The plans are the same but for
-lambda-variable names; ``tests/triples_reference.py`` keeps the Column
-API statement as the parity reference. The builders that take a Column
-(``entity_id``, ``mention_triple``, ``node_type``) stay on the Column API;
-``NODE_TYPE`` is ``node_type`` as an SQL template over an id expression.
-The builders:
+The contract is stated once, as SQL texts over the transcript columns of
+the row in scope: the upper-case constants below. :func:`extract_triples`
+is the one implementation (Catalyst built-ins, one scan, one explode,
+whole-stage codegen), and every other operator that derives ids, triples
+or edges from transcript rows (the streaming fan-out, the source-clustered
+entity/node/edge operators, the mention-derived queries) splices the same
+texts into its own ``selectExpr``. A text is one py4j call for the JVM to
+parse, where the Column API pays a round trip per ``F.*`` node.
+``tests/triples_reference.py`` keeps the Column-API statement as the
+parity reference; the plans are the same but for lambda-variable names.
 
-- :func:`turn_subject` — the turn subject;
-- :func:`conversation_id` — the ``conv.turn.in`` object;
-- :func:`entity_id` (Column) / :func:`entity_id_of` (str) — the entity id
-  of a mention name;
-- ``MENTION_NAMES`` / :func:`mention_ids` — the ``@entity:`` names in
+- ``TURN_SUBJECT`` — the turn subject;
+- ``CONVERSATION_ID`` — the ``conv.turn.in`` object;
+- ``ENTITY_ID`` — the entity id of a mention name, a template over a name
+  expression; :func:`entity_id_of` is the same id of a Python string;
+- ``MENTION_NAMES`` / ``MENTION_IDS`` — the ``@entity:`` names in
   ``text``, in order, repeats kept / their entity ids;
-- :func:`property_triples` — triples 1-5 as
-  ``array<struct<predicate, object, object_type>>``; :func:`no_triples`
-  is the empty array of that type;
-- :func:`mention_triple` / ``MENTION_TRIPLES`` — triple 6 for one
-  entity id / for every mention of the row;
-- :func:`node_type` — a node id's type, its 5th dot-part, else ``entity``
-  (``messagemanager/processor.go:517-526``).
+- ``PROPERTY_TRIPLES`` — triples 1-5 as
+  ``array<struct<predicate, object, object_type>>``; ``NO_TRIPLES`` is the
+  empty array of that type;
+- ``MENTION_TRIPLE`` / ``MENTION_TRIPLES`` — triple 6, a template over one
+  entity id expression / for every mention of the row;
+- ``NODE_TYPE`` — a node id's type, its 5th dot-part, else ``entity``
+  (``messagemanager/processor.go:517-526``), a template over an id
+  expression.
+
+A template is filled with ``str.format``, e.g. ``ENTITY_ID.format("e")``.
 
 The mention derives, which the mention-keyed queries and the streaming
 window share:
@@ -69,7 +67,7 @@ relationship predicates (``tests/merge_reference.predicate_to_edge_type``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MENTION_RE = "@entity:([a-z0-9_]+)"
@@ -88,14 +86,12 @@ TURN_SUBJECT = "concat('test.local.conv.', conv_id, '.turn.', cast(turn_idx as s
 CONVERSATION_ID = "concat('test.local.graph.kb.conversation.', conv_id)"
 MENTION_NAMES = f"regexp_extract_all(text, '{MENTION_RE}', 1)"
 NO_TRIPLES = f"cast(array() as {_TRIPLES_TYPE})"
+# try_element_at + coalesce: an id with fewer than 5 dot-parts falls back
+# to 'entity' like the reference instead of raising INVALID_ARRAY_INDEX
+# under ANSI mode
 NODE_TYPE = "coalesce(try_element_at(split({}, '\\\\.'), 5), 'entity')"
-
-
-def _entity_id(name: str) -> str:
-    return f"concat('{_ENTITY_ID_PREFIX}', {name})"
-
-
-MENTION_IDS = f"transform({MENTION_NAMES}, n -> {_entity_id('n')})"
+ENTITY_ID = f"concat('{_ENTITY_ID_PREFIX}', {{}})"
+MENTION_IDS = f"transform({MENTION_NAMES}, n -> {ENTITY_ID.format('n')})"
 
 
 def _t3(pred: str, obj: str, otype: str) -> str:
@@ -117,48 +113,12 @@ PROPERTY_TRIPLES = (
     + f"), case when tool is not null then array({_t3('conv.turn.tool', 'tool', 'string')}) "
     + f"else {NO_TRIPLES} end)"
 )
-MENTION_TRIPLES = f"transform({MENTION_NAMES}, m -> {_t3(MENTIONS, _entity_id('m'), 'entity_ref')})"
-
-
-def turn_subject() -> Column:
-    return F.expr(TURN_SUBJECT)
-
-
-def conversation_id() -> Column:
-    return F.expr(CONVERSATION_ID)
-
-
-def entity_id(name: Column) -> Column:
-    return F.concat(F.lit(_ENTITY_ID_PREFIX), name)
+MENTION_TRIPLE = _t3(MENTIONS, "{}", "entity_ref")
+MENTION_TRIPLES = f"transform({MENTION_NAMES}, m -> {MENTION_TRIPLE.format(ENTITY_ID.format('m'))})"
 
 
 def entity_id_of(name: str) -> str:
     return _ENTITY_ID_PREFIX + name
-
-
-def mention_ids() -> Column:
-    return F.expr(MENTION_IDS)
-
-
-def node_type(node_id: Column) -> Column:
-    # try_element_at + coalesce: an id with fewer than 5 dot-parts falls
-    # back to 'entity' like the reference instead of raising
-    # INVALID_ARRAY_INDEX under ANSI mode
-    return F.coalesce(F.try_element_at(F.split(node_id, r"\."), F.lit(5)), F.lit("entity"))
-
-
-def no_triples() -> Column:
-    return F.expr(NO_TRIPLES)
-
-
-def property_triples() -> Column:
-    return F.expr(PROPERTY_TRIPLES)
-
-
-def mention_triple(entity: Column) -> Column:
-    return F.struct(
-        F.lit(MENTIONS).alias("predicate"), entity.alias("object"), F.lit("entity_ref").alias("object_type")
-    )
 
 
 def extract_triples(transcripts: DataFrame) -> DataFrame:
@@ -191,7 +151,7 @@ def mention_rows(transcripts: DataFrame) -> DataFrame:
     """One row per mention OCCURRENCE, derived directly from transcripts:
     (conv_id, mention name ``e``, text, ts, seq, turn_idx). Row-for-row
     identical to filtering extract_triples to its mention triples: the
-    object is ``entity_id(e)`` and the subject ``turn_subject()`` of the
+    object is ``ENTITY_ID`` of ``e`` and the subject ``TURN_SUBJECT`` of the
     same row — without materializing the 5-7× triple fan-out and its text
     payloads (guide §2.3: shuffle/derive fewer bytes)."""
     return transcripts.selectExpr(
@@ -206,9 +166,7 @@ def mention_rows(transcripts: DataFrame) -> DataFrame:
 
 def mention_edges(transcripts: DataFrame) -> DataFrame:
     """(src = entity id, dst = turn subject, ts) per mention occurrence."""
-    return mention_rows(transcripts).select(
-        entity_id(F.col("e")).alias("src"), turn_subject().alias("dst"), "ts"
-    )
+    return mention_rows(transcripts).selectExpr(f"{ENTITY_ID.format('e')} as src", f"{TURN_SUBJECT} as dst", "ts")
 
 
 def mention_context_texts(transcripts: DataFrame) -> DataFrame:

@@ -34,16 +34,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..extract.triples import (
+    CONVERSATION_ID,
     IN_EDGE,
+    MENTION_IDS,
+    MENTION_TRIPLE,
     MENTIONS_EDGE,
+    NO_TRIPLES,
+    NODE_TYPE,
+    PROPERTY_TRIPLES,
     SOURCE,
-    conversation_id,
-    mention_ids,
-    mention_triple,
-    no_triples,
-    node_type,
-    property_triples,
-    turn_subject,
+    TURN_SUBJECT,
 )
 
 # Deterministic LWW ordering contract: (ts, seq=turn_idx, object),
@@ -85,12 +85,12 @@ def entity_states_source_clustered(transcripts: DataFrame) -> DataFrame:
     scan task, with no shuffle:
 
     - the singleton predicates are their own winners: the row's
-      ``property_triples()``;
+      ``PROPERTY_TRIPLES``;
     - all mention triples of a turn share ``(ts, seq)``, so the winner is
-      ``mention_triple`` of the greatest id — ``array_max`` over
-      ``mention_ids()`` (same binary string ordering as the aggregate).
+      the ``MENTION_TRIPLE`` of the greatest id — ``array_max`` over
+      ``MENTION_IDS`` (same binary string ordering as the aggregate).
 
-    Ids and triples come from the builders in ``extract.triples``.
+    Ids and triples are the SQL texts of ``extract.triples``.
 
     Output schema and rows are identical to the aggregated form (parity
     test ``tests/test_merge.py::test_entity_states_source_clustered_parity``,
@@ -101,25 +101,24 @@ def entity_states_source_clustered(transcripts: DataFrame) -> DataFrame:
     SortAggregate → Exchange → Sort → SortAggregate) — the whole sort +
     shuffle of the 5-7× triple fan-out (with text payloads) is gone.
     """
-    ids = mention_ids()
-    winner = F.when(F.size(ids) > 0, F.array(mention_triple(F.array_max(ids)))).otherwise(no_triples())
-    return (
-        transcripts.select(
-            turn_subject().alias("subject"),
-            F.explode(F.concat(property_triples(), winner)).alias("t"),
-            "ts",
-            F.col("conv_id").alias("context"),
-        )
-        .select(
-            "subject",
-            F.col("t.predicate").alias("predicate"),
-            F.col("t.object").alias("object"),
-            F.col("t.object_type").alias("object_type"),
-            F.lit(SOURCE).alias("source"),
-            "ts",
-            F.lit(1.0).alias("confidence"),
-            "context",
-        )
+    winner = (
+        f"case when size({MENTION_IDS}) > 0 "
+        f"then array({MENTION_TRIPLE.format(f'array_max({MENTION_IDS})')}) else {NO_TRIPLES} end"
+    )
+    return transcripts.selectExpr(
+        f"{TURN_SUBJECT} as subject",
+        f"explode(concat({PROPERTY_TRIPLES}, {winner})) as t",
+        "ts",
+        "conv_id as context",
+    ).selectExpr(
+        "subject",
+        "t.predicate as predicate",
+        "t.object as object",
+        "t.object_type as object_type",
+        f"'{SOURCE}' as source",
+        "ts",
+        "1.0D as confidence",
+        "context",
     )
 
 
@@ -130,12 +129,12 @@ def nodes_table_source_clustered(transcripts: DataFrame) -> DataFrame:
     so per-node aggregates collapse per input row — ``version`` (distinct
     ``(ts, seq)`` events) is exactly 1 and ``updated_at`` is the row's own
     ``ts``. Parity-tested + gated (``graph_nodes``)."""
-    return transcripts.select(
-        turn_subject().alias("id"),
-        node_type(turn_subject()).alias("type"),
-        F.lit("active").alias("status"),
-        F.lit(1).cast("long").alias("version"),
-        F.col("ts").alias("updated_at"),
+    return transcripts.selectExpr(
+        f"{TURN_SUBJECT} as id",
+        f"{NODE_TYPE.format(TURN_SUBJECT)} as type",
+        "'active' as status",
+        "cast(1 as bigint) as version",
+        "ts as updated_at",
     )
 
 
@@ -166,33 +165,24 @@ def edges_table_source_clustered(transcripts: DataFrame) -> DataFrame:
     group lives inside one input row — the in-edge is a singleton and each
     distinct mention id aggregates its occurrence count within the row's
     own mention array. Parity-tested + gated (``graph_edges``)."""
-    ids = mention_ids()
-    e3 = lambda dst, et, n: F.struct(  # noqa: E731
-        dst.alias("dst"), F.lit(et).alias("edge_type"), n.alias("n_obs")
+    e3 = lambda dst, et, n: f"struct({dst} as dst, '{et}' as edge_type, {n} as n_obs)"  # noqa: E731
+    md = f"array_distinct({MENTION_IDS})"
+    n_obs = f"cast(size(filter({MENTION_IDS}, x -> x = m)) as bigint)"
+    mention_edges = (
+        f"case when size({md}) > 0 then transform({md}, m -> {e3('m', MENTIONS_EDGE, n_obs)}) "
+        "else cast(array() as array<struct<dst:string,edge_type:string,n_obs:bigint>>) end"
     )
-    empty = F.array().cast("array<struct<dst:string,edge_type:string,n_obs:bigint>>")
-    in_edge = e3(conversation_id(), IN_EDGE, F.lit(1).cast("long"))
-    md = F.array_distinct(ids)
-    mention_edges = F.when(
-        F.size(md) > 0,
-        F.transform(
-            md,
-            lambda m: e3(m, MENTIONS_EDGE, F.size(F.filter(ids, lambda x: x == m)).cast("long")),
-        ),
-    ).otherwise(empty)
-    return (
-        transcripts.select(
-            turn_subject().alias("src"),
-            F.explode(F.concat(F.array(in_edge), mention_edges)).alias("e"),
-            "ts",
-        )
-        .select(
-            "src",
-            F.col("e.dst").alias("dst"),
-            F.col("e.edge_type").alias("edge_type"),
-            F.lit(1.0).alias("weight"),
-            F.col("ts").alias("created_at"),
-            F.col("ts").alias("updated_at"),
-            F.col("e.n_obs").alias("n_obs"),
-        )
+    in_edge = e3(CONVERSATION_ID, IN_EDGE, "cast(1 as bigint)")
+    return transcripts.selectExpr(
+        f"{TURN_SUBJECT} as src",
+        f"explode(concat(array({in_edge}), {mention_edges})) as e",
+        "ts",
+    ).selectExpr(
+        "src",
+        "e.dst as dst",
+        "e.edge_type as edge_type",
+        "1.0D as weight",
+        "ts as created_at",
+        "ts as updated_at",
+        "e.n_obs as n_obs",
     )

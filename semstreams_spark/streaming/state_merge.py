@@ -83,12 +83,6 @@ ACCEPTED_SCHEMA = (
     "req_turn_idx int, version long"
 )
 
-DELTA_SCHEMA = (
-    "kind string, conv_id string, turn_idx int, subject string, "
-    "predicate string, object string, object_type string, ts timestamp, "
-    "prev_turn_idx int, prev_ts timestamp, req_turn_idx int, version long"
-)
-
 # Buckets per state partition; a checkpoint records its bucket count at
 # creation (see pin_state_engine), since the count decides which state row
 # holds a conversation.

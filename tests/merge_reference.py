@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from semstreams_spark.extract.triples import node_type
+from triples_reference import node_type
 
 HOUR_MS = 3_600_000
 

@@ -87,37 +87,34 @@ def _sorted_rows(df):
 
 
 def test_sql_builders_match_column_api_reference(spark):
-    """Every SQL-text builder, the ``MENTION_NAMES`` and
-    ``MENTION_TRIPLES`` texts and extract_triples give the rows and the
-    schema of the Column-API reference (tests/triples_reference.py)."""
+    """Every SQL text of ``extract.triples``, its ``ENTITY_ID``,
+    ``MENTION_TRIPLE`` and ``NODE_TYPE`` templates and extract_triples
+    give the rows and the schema of the Column-API reference
+    (tests/triples_reference.py)."""
     import triples_reference as ref
 
     from semstreams_spark.extract import triples
 
     turns = _planted_turns(spark)
-    builders = {
-        name: getattr(triples, name)
+    # node ids: the turn subjects and ids with fewer than 5 dot-parts
+    ids = turns.selectExpr("turn_idx", f"{triples.TURN_SUBJECT} as id").union(
+        spark.createDataFrame([(-1, "a.b"), (-2, "x")], "turn_idx int, id string")
+    )
+    cases = {
+        name: (turns, getattr(triples, name.upper()), getattr(ref, name)())
         for name in (
-            "turn_subject", "conversation_id", "mention_ids",
-            "property_triples", "no_triples",
+            "turn_subject", "conversation_id", "mention_names", "mention_ids",
+            "property_triples", "no_triples", "mention_triples",
         )
     }
-    builders["mention_names"] = lambda: F.expr(triples.MENTION_NAMES)
-    builders["mention_triples"] = lambda: F.expr(triples.MENTION_TRIPLES)
-    for name, build in builders.items():
-        got = turns.select("turn_idx", build().alias("v"))
-        want = turns.select("turn_idx", getattr(ref, name)().alias("v"))
+    cases["entity_id"] = (turns, triples.ENTITY_ID.format("text"), ref.entity_id(F.col("text")))
+    cases["mention_triple"] = (turns, triples.MENTION_TRIPLE.format("text"), ref.mention_triple(F.col("text")))
+    cases["node_type"] = (ids, triples.NODE_TYPE.format("id"), ref.node_type(F.col("id")))
+    for name, (df, text, column) in cases.items():
+        got = df.selectExpr("turn_idx", f"{text} as v")
+        want = df.select("turn_idx", column.alias("v"))
         assert got.schema == want.schema, name
         assert _sorted_rows(got) == _sorted_rows(want), name
-    # NODE_TYPE, the SQL text of node_type, on turn subjects and on ids
-    # with fewer than 5 dot-parts
-    ids = turns.select(triples.turn_subject().alias("id")).union(
-        spark.createDataFrame([("a.b",), ("x",)], "id string")
-    )
-    got = ids.selectExpr("id", f"{triples.NODE_TYPE.format('id')} as v")
-    want = ids.select("id", triples.node_type(ids["id"]).alias("v"))
-    assert got.schema == want.schema
-    assert _sorted_rows(got) == _sorted_rows(want)
     got, want = extract_triples(turns), ref.extract_triples(turns)
     assert got.schema == want.schema
     assert _sorted_rows(got) == _sorted_rows(want)
@@ -150,3 +147,36 @@ def test_streaming_fanout_matches_column_api_reference(spark):
     rows = _sorted_rows(got)
     assert rows == _sorted_rows(want)
     assert sum(r[0] == "session_end" for r in rows) == 2
+
+
+def test_turn_graph_contract_is_stated_once_in_sql():
+    """``extract/triples.py`` states the turn → graph contract once, as SQL
+    texts: it does not import ``Column`` and each function it defines is
+    annotated to return a ``str`` or a ``DataFrame``. The ``test.local.``
+    id prefixes appear in no other package module but the DuckDB oracles,
+    nor in the registry."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    contract = os.path.join("semstreams_spark", "extract", "triples.py")
+    with open(os.path.join(root, contract), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    imported = {a.asname or a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom) for a in n.names}
+    assert "Column" not in imported
+    returns = {
+        n.name: n.returns and ast.unparse(n.returns)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    assert not {k: v for k, v in returns.items() if v not in ("str", "DataFrame")}, returns
+    allowed = {contract, os.path.join("semstreams_spark", "oracles.py")}
+    paths = [os.path.join(d, f) for d, _, fs in os.walk(os.path.join(root, "semstreams_spark")) for f in fs]
+    found = []
+    for path in [*paths, os.path.join(root, "__spark_entry__.py")]:
+        rel = os.path.relpath(path, root)
+        if path.endswith(".py") and rel not in allowed:
+            with open(path, encoding="utf-8") as f:
+                if "test.local." in f.read():
+                    found.append(rel)
+    assert not found, f"turn → graph ids built outside extract/triples.py: {found}"

@@ -4,6 +4,8 @@ says why it stays.
 - Every top-level function and class has a caller in non-test code.
 - Every method of a top-level class (dunders aside) is used in non-test
   code outside its own body, a sibling's ``self.x`` included.
+- Every name a package module binds once at top level (``X = v``, dunders
+  aside) is used in non-test code outside the statement that binds it.
 - Every defaulted parameter takes at least two values across the calls
   in non-test code, by keyword or by position: of a top-level package
   function outside ``oracles.py`` or of a top-level function of
@@ -140,6 +142,19 @@ def _defaulted(fn, callee, skip_self=False):
             yield callee, p.arg, None, d
 
 
+def _bound_once(tree):
+    """(name, statement) of each name bound exactly once by a top-level
+    assignment, dunders aside."""
+    bound = defaultdict(list)
+    for top in tree.body:
+        if isinstance(top, (ast.Assign, ast.AnnAssign)):
+            targets = top.targets if isinstance(top, ast.Assign) else [top.target]
+            for n in (n for t in targets for n in ast.walk(t)):
+                if isinstance(n, ast.Name) and not (n.id.startswith("__") and n.id.endswith("__")):
+                    bound[n.id].append(top)
+    return [(name, tops[0]) for name, tops in bound.items() if len(tops) == 1]
+
+
 def scan():
     """(package definitions {qualified name: (file, name)}, methods
     {qualified name: (file, name, first line, last line)}, defaulted
@@ -147,8 +162,9 @@ def scan():
     as a call would pass it)}, identifier uses {name: {(file, enclosing
     top-level definition or None, line)}}, calls {name: [(file,
     ast.Call)]} in non-test code, module constants {file: {name:
-    value}})."""
-    defs, methods, params, consts = {}, {}, {}, {}
+    value}}, package module names bound once {qualified name: (file,
+    name, first line, last line)} with the lines of their binding)."""
+    defs, methods, params, consts, bound = {}, {}, {}, {}, {}
     uses: dict[str, set[tuple[str, str | None, int]]] = defaultdict(set)
     calls: dict[str, list[tuple[str, ast.Call]]] = defaultdict(list)
     for path in _caller_files():
@@ -156,6 +172,9 @@ def scan():
         consts[rel] = _module_constants(tree)
         module = rel[: -len(".py")].replace(os.sep, ".").removesuffix(".__init__")
         in_package = module.split(".")[0] == PACKAGE
+        if in_package:
+            for name, top in _bound_once(tree):
+                bound[f"{module}.{name}"] = (rel, name, top.lineno, top.end_lineno)
         for top in tree.body:
             owner = None
             if isinstance(top, (*_DEFS, ast.ClassDef)):
@@ -177,7 +196,7 @@ def scan():
         for n in ast.walk(tree):
             if isinstance(n, ast.Call):
                 calls[_callee(n)].append((rel, n))
-    return defs, methods, params, uses, calls, consts
+    return defs, methods, params, uses, calls, consts, bound
 
 
 def _value(rel: str, node: ast.expr, consts):
@@ -206,12 +225,13 @@ def _takes_values(calls, name: str, position: int | None, default, consts) -> bo
     return None in values or len(values) > 1
 
 
-def _in_use(defs, methods, params, uses, calls, consts) -> set[str]:
-    """The qualified names of definitions, methods and parameters that are used or set."""
+def _in_use(defs, methods, params, uses, calls, consts, bound) -> set[str]:
+    """The qualified names of definitions, methods, parameters and bound
+    names that are used or set."""
     out = {q for q, (rel, name) in defs.items() if any((r, o) != (rel, name) for r, o, _ in uses[name])}
     out |= {
         q
-        for q, (rel, name, first, last) in methods.items()
+        for q, (rel, name, first, last) in {**methods, **bound}.items()
         if any(not (r == rel and first <= line <= last) for r, _, line in uses[name])
     }
     out |= {
@@ -243,6 +263,15 @@ def test_every_method_is_used():
     )
 
 
+def test_every_module_name_is_used():
+    *_, bound = scanned = scan()
+    unused = sorted(set(bound) - _in_use(*scanned) - set(ALLOWED))
+    assert not unused, (
+        "module-level name not used outside its own binding in non-test code "
+        f"(delete it, or add it to ALLOWED with a reason): {unused}"
+    )
+
+
 def test_every_defaulted_parameter_is_set():
     _, _, params, *_ = scanned = scan()
     unset = sorted(set(params) - _in_use(*scanned) - set(ALLOWED))
@@ -253,9 +282,9 @@ def test_every_defaulted_parameter_is_set():
 
 
 def test_allow_list_has_no_stale_entry():
-    defs, methods, params, *_ = scanned = scan()
+    defs, methods, params, *_, bound = scanned = scan()
     used = _in_use(*scanned)
-    known = set(defs) | set(methods) | set(params)
+    known = set(defs) | set(methods) | set(params) | set(bound)
     stale = sorted(q for q in ALLOWED if q not in known or q in used)
     assert not stale, f"ALLOWED entries that are now used or set, or no longer exist: {stale}"
 

@@ -8,14 +8,9 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from semstreams_spark.extract.triples import (
-    MENTION_NAMES,
-    entity_id,
-    entity_id_of,
-    node_type,
-    turn_subject,
-)
+from semstreams_spark.extract.triples import MENTION_NAMES, entity_id_of
 from mutations_reference import edges_after_deletes, nodes_with_status
+from triples_reference import entity_id, node_type, turn_subject
 from semstreams_spark.operators.merge import edges_table_source_clustered
 from semstreams_spark.operators.mutations import entity_status
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from semstreams_spark.extract.triples import MENTION_RE, SOURCE, entity_id, mention_triple
+from semstreams_spark.extract.triples import MENTION_RE, MENTIONS, SOURCE
 
 _TRIPLES_TYPE = "array<struct<predicate:string,object:string,object_type:string>>"
 
@@ -24,6 +24,10 @@ def turn_subject() -> Column:
 
 def conversation_id() -> Column:
     return F.concat(F.lit("test.local.graph.kb.conversation."), F.col("conv_id"))
+
+
+def entity_id(name: Column) -> Column:
+    return F.concat(F.lit("test.local.graph.kb.entity."), name)
 
 
 def mention_names() -> Column:
@@ -55,6 +59,16 @@ def property_triples() -> Column:
         F.array(_t3(lit("conv.turn.tool"), F.col("tool"), lit("string"))),
     ).otherwise(no_triples())
     return F.concat(base, tool_arr)
+
+
+def mention_triple(entity: Column) -> Column:
+    return F.struct(
+        F.lit(MENTIONS).alias("predicate"), entity.alias("object"), F.lit("entity_ref").alias("object_type")
+    )
+
+
+def node_type(node_id: Column) -> Column:
+    return F.coalesce(F.try_element_at(F.split(node_id, r"\."), F.lit(5)), F.lit("entity"))
 
 
 def mention_triples() -> Column:

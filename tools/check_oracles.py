@@ -66,7 +66,7 @@ def main() -> int:
     from semstreams_spark.session import get_spark
 
     only = set(sys.argv[1:])
-    spark = get_spark("check_oracles")
+    spark = get_spark("check_oracles", extra_conf={"spark.ui.showConsoleProgress": "false"})
 
     con = duckdb.connect()
     for t in TABLES:
