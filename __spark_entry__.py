@@ -36,6 +36,7 @@ from semstreams_spark.extract.triples import (
     mention_rows,
 )
 from semstreams_spark.graph.comention import entity_edges, parity_edges
+from semstreams_spark.operators.dedup import NEARDUP_BANDS, NEARDUP_ROWS, embedding_near_dups
 from semstreams_spark.operators.merge import (
     edges_table_source_clustered,
     entity_states_source_clustered,
@@ -379,9 +380,6 @@ GRAPHRAG_QUERY = "ent_000 ent_001"
 # banded LSH must recover pairs near the 0.95 threshold, not only trivial
 # ≈0.999 dups.
 PLANT_COS = (0.9501, 0.9601, 0.9801)
-# 8 = lsh_band_params(0.95, rows_per_band=6) at a recall target of 0.995; r=6
-# keeps the gate corpus well-bucketed (64 buckets/band over ~550 vectors)
-NEARDUP_BANDS, NEARDUP_ROWS = 8, 6
 
 
 def planted_neardup_corpus(e):
@@ -456,8 +454,6 @@ def q_embedding_neardup_lsh(spark, sf_dir):
     corpus with exact-rotation plants at cos ∈ {0.9501, 0.9601, 0.9801} —
     at/near-threshold pairs. Full-recovery assertion: tests/
     test_dedup_similarity.py::test_banded_neardup_recovers_all_plants."""
-    from semstreams_spark.operators.dedup import embedding_near_dups
-
     e = _tbl(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # pin the plants once: the corpus feeds THREE consumers inside
     # embedding_near_dups (signatures + both verify sides) — without the
@@ -466,7 +462,7 @@ def q_embedding_neardup_lsh(spark, sf_dir):
     # much further since the numpy corpus also removes the old fold
     # tree's one-time optimizer/codegen cost)
     corpus = planted_neardup_corpus(e).localCheckpoint(eager=True)
-    pairs = embedding_near_dups(corpus, bands=NEARDUP_BANDS, rows_per_band=NEARDUP_ROWS)
+    pairs = embedding_near_dups(corpus)
     return pairs.select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
 
 

@@ -68,10 +68,9 @@ def generate_transcripts(sf: float, seed: int = SEED, hot_factor: int = 50):
     """Return (table, aliases_table) as pyarrow Tables. Pure numpy, vectorized.
 
     hot_factor: multiplier on the ~1% hot conversations' sizes (default
-    50 — the canonical skewed dataset; pass 1 for a skew-free control
-    corpus, used by tools/skew_bench.py to isolate hot-key cost in the
-    conv_id-keyed stateful stages). The default path is bit-identical to
-    the pre-parameter generator: the same rng draws happen either way."""
+    50 — the canonical skewed dataset; pass 1 for a skew-free corpus, as
+    perfbench's workloads do). The default path is bit-identical to the
+    pre-parameter generator: the same rng draws happen either way."""
     rng = np.random.default_rng(seed + int(round(sf * 100000)))
     target_turns = max(1000, int(TURNS_PER_SF * sf))
     # avg base size ~12; 1% hot convs at ~50x

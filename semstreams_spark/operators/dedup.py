@@ -44,6 +44,11 @@ JACCARD_MIN = 0.5
 MAX_HAMMING = 14
 # cosine an embedding near-dup pair needs
 NEARDUP_THRESHOLD = 0.95
+# embedding near-dup LSH: bands of hyperplane sign bits. 8 is the fewest
+# bands that recall a pair at the threshold with probability ≥ 0.995 at
+# 6 planes per band (lsh_band_params at that target); 6 planes keep the
+# gate corpus well bucketed (64 buckets per band over ~550 vectors)
+NEARDUP_BANDS, NEARDUP_ROWS = 8, 6
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -294,12 +299,7 @@ def simhash_near_dups(docs: DataFrame) -> DataFrame:
     return cand
 
 
-def embedding_near_dups(
-    embeddings: DataFrame,
-    bands: int | None = None,
-    rows_per_band: int = 10,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def embedding_near_dups(embeddings: DataFrame) -> DataFrame:
     """Embedding-cosine near-dup pairs (cosine ≥ ``NEARDUP_THRESHOLD``) of
     a (vec_id, embedding) frame via
     BANDED random-hyperplane LSH (OR-of-ANDs) + exact cosine verify — the
@@ -310,27 +310,18 @@ def embedding_near_dups(
     c with probability (1 − acos(c)/π)^n — ≈18% at c=0.95 for n=16 — and
     its bucket count is fixed at 2^n regardless of corpus size, so bucket
     population (and the verify join's fan-out) grows ∝ N/2^n. Banding
-    decouples the two: r (rows_per_band) sizes buckets (2^r per band;
-    pick r ≈ log2(N / target bucket size) at scale), and b is DERIVED
-    from the recall target via lsh_band_params — recall 1 − (1 − p^r)^b
-    ≥ ``similarity.TARGET_RECALL`` for pairs at-threshold, ~0.97 at the
-    (8, 10) default for threshold 0.95. Candidates are deduped before the exact verify,
-    so multi-band collisions cost one cosine each.
-
-    ``max_bucket_size`` is the hot-bucket guard for adversarial corpora
-    (e.g. a giant cluster of identical spam vectors): buckets larger than
-    the cap are excluded from candidate generation — true dup CLUSTERS
-    that big are still recovered transitively through their other bands
-    or an exact-dedup pre-pass; leave None for the exact oracle form.
+    decouples the two: r (``NEARDUP_ROWS``) sizes buckets (2^r per band),
+    and b (``NEARDUP_BANDS``) follows from the recall target — recall
+    1 − (1 − p^r)^b, ≈0.9975 at (8, 6) for pairs at the threshold.
+    Candidates are deduped before the exact verify, so multi-band
+    collisions cost one cosine each.
 
     Hyperplanes are deterministic (hash-derived), so results are
     reproducible without a stored model (exact DuckDB oracle:
     oracles.sql_embedding_neardup_lsh). Reference semantics anchor:
     EMBEDDING_INDEX near-dup intent (indexmanager/config.go:185-217)."""
-    from .similarity import banded_signatures_numpy, lsh_band_params
+    from .similarity import banded_signatures_numpy
 
-    if bands is None:
-        bands = lsh_band_params(NEARDUP_THRESHOLD, rows_per_band)
     e = embeddings.select("vec_id", F.col("embedding").alias("v"))
     # r6: signatures + exact verify through the Arrow numpy kernels — the
     # Catalyst HOF folds are interpreted (outside codegen) and were the
@@ -338,15 +329,7 @@ def embedding_near_dups(
     # bit-identical to the expression forms (parity tests in
     # tests/test_dedup_similarity.py), so candidates, survivors and the
     # DuckDB gate are unchanged.
-    sig = banded_signatures_numpy(e, bands, rows_per_band)
-    if max_bucket_size is not None:
-        ok = (
-            sig.groupBy("band", "sig")
-            .agg(F.count(F.lit(1)).alias("bn"))
-            .filter(F.col("bn") <= max_bucket_size)
-            .select("band", "sig")
-        )
-        sig = sig.join(ok, ["band", "sig"], "left_semi")
+    sig = banded_signatures_numpy(e, NEARDUP_BANDS, NEARDUP_ROWS)
     # the signature subtree feeds BOTH sides of the self-join: a lazy
     # local checkpoint computes it once per action instead of twice
     # (exchange reuse alone doesn't dedupe it under AQE re-planning)

@@ -25,9 +25,9 @@ from ..operators.textops import token_hash, word_tokens
 DEFAULT_DIM = 384  # reference default (bm25_embedder.go:61-62)
 
 
-def embed_texts(df: DataFrame, id_col: str, dim: int = DEFAULT_DIM) -> DataFrame:
-    """(id, embedding array<double>[dim]) of each ``text``: hashed-TF
-    embedding, L2-normalized.
+def embed_texts(df: DataFrame, id_col: str) -> DataFrame:
+    """(id, embedding array<double>[``DEFAULT_DIM``]) of each ``text``:
+    hashed-TF embedding, L2-normalized.
 
     vec[i] = |{tokens t : H(t) mod dim == i}| (with multiplicity), then
     vec / ||vec||. Texts without tokens have no row.
@@ -50,7 +50,7 @@ def embed_texts(df: DataFrame, id_col: str, dim: int = DEFAULT_DIM) -> DataFrame
         for pdf in it:
             if not len(pdf):
                 continue
-            V, has_tokens = _hashed_tf(pdf["text"], dim)
+            V, has_tokens = _hashed_tf(pdf["text"], DEFAULT_DIM)
             # the expression form's explode drops token-less texts
             # entirely — replicate (parity over presence, not just values)
             yield pd.DataFrame(

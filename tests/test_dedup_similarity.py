@@ -337,9 +337,7 @@ def test_banded_neardup_recovers_all_plants(spark):
     sf_dir = "/root/testdata/sf0.001"
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
     corpus = entry.planted_neardup_corpus(e)
-    pairs = embedding_near_dups(
-        corpus, bands=entry.NEARDUP_BANDS, rows_per_band=entry.NEARDUP_ROWS
-    )
+    pairs = embedding_near_dups(corpus)
     got = {(r["vec_a"], r["vec_b"]): r["cosine"] for r in pairs.collect()}
     plant_ids = [r["vec_id"] for r in e.filter(F.col("vec_id") % 10 == 0).collect()]
     assert len(plant_ids) > 0
@@ -380,28 +378,36 @@ def test_planted_corpus_numpy_matches_catalyst(spark):
 
 def test_banded_neardup_no_false_positives_below_threshold(spark):
     """The verify step: base-corpus pairs (max natural cosine ≈0.49) never
-    appear, whatever the buckets say."""
-    from semstreams_spark.operators.dedup import embedding_near_dups
+    appear, whatever the buckets say. The buckets do pair base vectors,
+    so the verify has candidates to drop."""
+    from semstreams_spark.operators.dedup import NEARDUP_BANDS, NEARDUP_ROWS, embedding_near_dups
+    from semstreams_spark.operators.similarity import banded_signatures_numpy
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    out = embedding_near_dups(e, bands=4, rows_per_band=4)
-    assert out.count() == 0
+    sig = banded_signatures_numpy(
+        e.select("vec_id", F.col("embedding").alias("v")), NEARDUP_BANDS, NEARDUP_ROWS
+    )
+    l, r = sig.alias("l"), sig.alias("r")
+    candidates = l.join(
+        r,
+        (F.col("l.band") == F.col("r.band"))
+        & (F.col("l.sig") == F.col("r.sig"))
+        & (F.col("l.vec_id") < F.col("r.vec_id")),
+    ).select("l.vec_id", "r.vec_id")
+    assert candidates.distinct().count() > 0
+    assert embedding_near_dups(e).count() == 0
 
 
-def test_hot_bucket_cap_drops_oversized_buckets(spark):
-    """max_bucket_size guard: a corpus of identical vectors saturates one
-    bucket per band; with the cap those buckets are excluded, so no
-    candidate pairs emerge from them."""
+def test_identical_vectors_pair_through_their_shared_buckets(spark):
+    """A corpus of identical vectors saturates one bucket per band, and
+    every pair of it survives the verify."""
     from semstreams_spark.operators.dedup import embedding_near_dups
 
     rows = [(i, [1.0] + [0.1] * 63) for i in range(20)]
     e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    capped = embedding_near_dups(e, bands=2, rows_per_band=4, max_bucket_size=10)
-    assert capped.count() == 0  # every bucket holds all 20 > cap
-    uncapped = embedding_near_dups(e, bands=2, rows_per_band=4)
-    assert uncapped.count() == 20 * 19 // 2
+    assert embedding_near_dups(e).count() == 20 * 19 // 2
 
 
 def _clustered_corpus(spark, n_clusters=12, per_cluster=40, noise=0.25):
@@ -586,8 +592,8 @@ def test_embed_texts_kernel_matches_expr(spark, docs):
 
     from semstreams_spark.search.embedder import embed_texts
 
-    kern = {r["doc_id"]: tuple(r["embedding"]) for r in embed_texts(docs, id_col="doc_id", dim=64).collect()}
-    expr = {r["doc_id"]: tuple(r["embedding"]) for r in embed_texts_expr(docs, id_col="doc_id", dim=64).collect()}
+    kern = {r["doc_id"]: tuple(r["embedding"]) for r in embed_texts(docs, id_col="doc_id").collect()}
+    expr = {r["doc_id"]: tuple(r["embedding"]) for r in embed_texts_expr(docs, id_col="doc_id").collect()}
     assert kern == expr
 
 

@@ -3,11 +3,20 @@ the .explain() contracts that make the operators survive a 100x scale-up."""
 
 from __future__ import annotations
 
+import json
+import os
+import re
+import sys
+
+import pytest
 from pyspark.sql import functions as F
 
 from semstreams_spark.datagen import ensure_transcripts, transcripts_path
 from semstreams_spark.extract import extract_triples
 from semstreams_spark.operators.joins import resolve_aliases
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+import plan_fingerprint  # noqa: E402
 
 
 def _plan(df) -> str:
@@ -180,3 +189,81 @@ def test_alert_cooldown_is_one_exchange_and_one_scan(spark, tmp_path):
     assert "FlatMapGroupsInPandas" not in p
     assert "MapInPandas" in p
     assert p.count("Exchange hashpartitioning") == 1, p
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """Every registry query built once: name -> its normalized (optimized
+    logical, initial physical) plans."""
+    return plan_fingerprint.build_plans(spark)
+
+
+def test_plan_fingerprints_match(registry_plans):
+    """``plans/fingerprints.json`` holds the plans and oracle texts the
+    tree builds. A change that moves a plan on purpose regenerates it with
+    ``python tools/plan_fingerprint.py``; ``python
+    tools/plan_fingerprint.py <query>`` in two checkouts shows what moved."""
+    with open(plan_fingerprint.FINGERPRINTS) as f:
+        committed = json.load(f)
+    now = plan_fingerprint.fingerprints(registry_plans)
+    moved = {
+        name: sorted(k for k in {**a, **b} if a.get(k) != b.get(k))
+        for name in committed.keys() | now.keys()
+        if (a := committed.get(name, {})) != (b := now.get(name, {}))
+    }
+    assert not moved, f"queries whose fingerprints moved (query: parts): {dict(sorted(moved.items()))}"
+
+
+def test_plan_fingerprint_refuses_truncated_plans(spark):
+    """A plan string cut at ``spark.sql.debug.maxToStringFields`` (25)
+    would hide a change past the cut."""
+    wide = spark.range(1).select(*[F.lit(i).alias(f"c{i}") for i in range(30)])
+    with pytest.raises(ValueError, match="more fields"):
+        plan_fingerprint.plans(wide)
+
+
+def test_bucketed_dedup_joins_have_no_cartesian_or_bnlj(registry_plans):
+    """MinHash and embedding near-dups pair documents through bucket
+    equi-joins, never all-pairs."""
+    for name in ("minhash_pairs", "embedding_neardup_lsh"):
+        _, p = registry_plans[name]
+        assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p, (name, p)
+
+
+def _children(plan: str, op: str) -> list[list[str]]:
+    """The child subtrees, as lines, of the one node of ``plan`` whose
+    operator starts with ``op``."""
+    lines = plan.splitlines()
+    (i,) = [k for k, ln in enumerate(lines) if ln.lstrip(" :+-").startswith(op)]
+    depth = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+    kids: list[list[str]] = []
+    for ln in lines[i + 1 :]:
+        d = len(ln) - len(ln.lstrip(" :+-"))
+        if d <= depth:
+            break
+        if d == depth + 3:
+            kids.append([])
+        kids[-1].append(ln.strip(" :+-"))
+    return kids
+
+
+def test_bm25_nested_loop_join_is_the_one_row_stats(registry_plans):
+    """bm25_topk's one nested-loop join crosses the postings with the
+    broadcast one-row (n_docs, avgdl) corpus aggregate."""
+    _, p = registry_plans["bm25_topk"]
+    assert p.count("BroadcastNestedLoopJoin") == 1, p
+    left, right = _children(p, "BroadcastNestedLoopJoin")
+    build = right if "BroadcastNestedLoopJoin BuildRight" in p else left
+    assert build[0].startswith("BroadcastExchange"), build
+    assert re.fullmatch(r"HashAggregate\(keys=\[\], .*, output=\[n_docs#\d+L, avgdl#\d+\]\)", build[1]), build
+
+
+@pytest.mark.parametrize(
+    "name,n", [("ivf_topk", 2), ("entity_semantic_topk", 2), ("media_wav_decode", 1)]
+)
+def test_python_kernels_are_declared_map_in_pandas(registry_plans, name, n):
+    """The numpy kernels run as declared ``mapInPandas`` batches, never as
+    row-at-a-time or Arrow Python UDF evaluation."""
+    _, p = registry_plans[name]
+    assert p.count("MapInPandas") == n, p
+    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p

@@ -6,13 +6,12 @@ never pollutes the measurement), counts the Spark jobs each run submits
 (``build_ms``: the query function's call, including any JVM analysis and
 any action it runs before returning) and counts the py4j round trips
 that building takes (``Py4JRoundTrips``; round trips undercount JVM
-analysis, which ``build_ms`` includes), labels jobs for the UI, and
-captures ``explain("formatted")`` for the plan ledger under
-``plans/<tag>/``.
+analysis, which ``build_ms`` includes), and labels jobs for the UI.
+Whether a query's plan changed is ``tools/plan_fingerprint.py``'s
+question.
 
 Usage:
-  python tools/profile_queries.py [--tag r06_before] [--reps 2] \
-      [--sf-dir /root/testdata/sf0.1] [--explain-only] [query ...]
+  python tools/profile_queries.py [--reps 2] [--sf-dir /root/testdata/sf0.1] [query ...]
 
 Prints ``<query> wall_s=<w> jobs=<n> build_ms=<b> py4j=<r>`` per run on
 stderr, then one JSON line: {"queries": {name: [walls...]}, "jobs": {name:
@@ -65,12 +64,9 @@ class Py4JRoundTrips:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--tag", default=None, help="plans/<tag>/<query><suffix>.txt explain capture")
-    ap.add_argument("--suffix", default="", help="filename suffix, e.g. _before/_after")
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
-    ap.add_argument("--explain-only", action="store_true")
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
@@ -86,30 +82,12 @@ def main() -> int:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         return 2
 
-    plan_dir = None
-    if args.tag:
-        plan_dir = os.path.join(REPO, "plans", *args.tag.split("/"))
-        os.makedirs(plan_dir, exist_ok=True)
-
     walls: dict[str, list[float]] = {n: [] for n in names}
     jobs: dict[str, list[int]] = {n: [] for n in names}
     build_ms: dict[str, list[float]] = {n: [] for n in names}
     py4j: dict[str, list[int]] = {n: [] for n in names}
-    for rep in range(1 if args.explain_only else args.reps):
+    for _ in range(args.reps):
         for n in names:
-            if rep == 0 and plan_dir is not None:
-                # plan capture OUTSIDE the timed window (construction of
-                # iterative queries runs actions; the timed rep below
-                # re-constructs so its wall matches bench.py's protocol)
-                df = qs[n](spark, args.sf_dir)
-                p = os.path.join(plan_dir, f"{n}{args.suffix}.txt")
-                with open(p, "w") as fh:
-                    fh.write(df._jdf.queryExecution().explainString(
-                        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-                    ))
-                spark.catalog.clearCache()
-            if args.explain_only:
-                continue
             spark.sparkContext.setJobDescription(f"profile:{n}")
             t0_ms = time.time() * 1000
             t0 = time.monotonic()
